@@ -114,8 +114,9 @@ object Curation {
     // Σm·lrL ≤ S·2³¹ ≈ 2.1e18 < 2⁶³. The exact integer is
     // reconstructed per DOC in decimal — bit-identical slr, decimal
     // path kept above the cap.
-    val longSafe =
-      docB.agg(sum(col("m"))).head().getLong(0) <= longSumTokenCap
+    // an empty corpus sums to NULL: nothing to overflow, take the long path
+    val tokens = docB.agg(sum(col("m"))).head()
+    val longSafe = tokens.isNullAt(0) || tokens.getLong(0) <= longSumTokenCap
     val scored = if (longSafe) {
       val d24 = DecimalType(24, 0)
       val b31 = lit(new java.math.BigDecimal(2147483648L))

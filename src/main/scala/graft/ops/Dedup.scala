@@ -1149,8 +1149,7 @@ object Dedup {
     // identical on both paths (the q_bloom_join contract).
     val nDup = dup.count() // dup is materialized; this is a cheap scan
     val estBloomBytes = (nDup * 12L) / 10L  // 1.2 bytes/key at fpp 0.01
-    val maxBloomBytes = sys.env.get("GRAFT_BLOOM_MAX_BYTES")
-      .map(_.toLong).getOrElse(32L << 20) // env override = A/B harness hook
+    val maxBloomBytes = 32L << 20
     val dupPos = (if (estBloomBytes <= maxBloomBytes && nDup > 0) {
         val bloom = BloomJoin.buildFilter(dup, "h", expectedItems = nDup, fpp = 0.01)
         win.filter(graft.functions.bloomMightContain(col("h"), bloom))

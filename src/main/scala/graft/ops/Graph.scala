@@ -116,6 +116,15 @@ object Graph {
   private[graft] def checkpointScaled(df: DataFrame): DataFrame =
     df.localCheckpoint(true)
 
+  /** The measured broadcast gate every loop here shares: hint `df` (an
+    * O(|V|)-row vector or a peel frontier) broadcast when its counted
+    * row count `rows` is within `cap`, else leave it to a shuffle join —
+    * identical semantics either way, only the join strategy changes.
+    */
+  private def bcastIf(df: DataFrame, rows: Long,
+                      cap: Long = BroadcastNodeCap): DataFrame =
+    if (rows <= cap) broadcast(df) else df
+
   /** Co-occurrence edge list: directed edges `(src, dst)` between items
     * sharing a basket, both directions, deduplicated. Self-join on the
     * basket key — bounded fanout per basket (a TPC-H order holds ≤ 7
@@ -194,24 +203,37 @@ object Graph {
     * measured node count is under [[BroadcastNodeCap]] — the count is
     * free (it materializes the node checkpoint anyway) — so a
     * billion-node graph falls back to shuffle joins automatically
-    * without changing results; `broadcastRanks = false` forces the
+    * without changing results; `broadcastNodeCap = 0` forces the
     * shuffle path regardless.
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int,
                damping: Double = 0.85,
-               broadcastRanks: Boolean = true,
                broadcastNodeCap: Long = BroadcastNodeCap,
                splitSumNodeCap: Long = SplitSumNodeCap): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
+    val n = nodes.select(col("id")).distinct().localCheckpoint(true)
+    pageRankLoop(n, edges, lit(1.0), lit(1.0 - damping), iters, damping,
+      broadcastNodeCap, splitSumNodeCap)
+  }
+
+  /** The damped iteration shared by [[pageRank]] and [[pageRankSeeded]]:
+    *
+    *   r₀ = init;  r'(v) = teleport + d · Σ_{u→v} q(r(u) / odeg(u))
+    *
+    * over the checkpointed node frame `n` (column `id`, plus whatever
+    * `init`/`teleport` read). The two forms differ only in those two
+    * columns, so both run the identical per-iteration plan.
+    */
+  private def pageRankLoop(n: DataFrame, edges: DataFrame, init: Column,
+                           teleport: Column, iters: Int, damping: Double,
+                           broadcastNodeCap: Long,
+                           splitSumNodeCap: Long): DataFrame = {
     val e = checkpointScaled(edges.select(col("src"), col("dst")))
     val deg = e.groupBy("src").agg(count(lit(1)).as("odeg")).localCheckpoint(true)
-    val n = nodes.select(col("id")).distinct().localCheckpoint(true)
     val nV = n.count()
     val split = nV <= splitSumNodeCap
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (broadcastRanks && nV <= broadcastNodeCap) broadcast(df) else df
 
-    var ranks = n.withColumn("r", lit(1.0))
+    var ranks = n.select(col("id"), init.as("r"))
     for (_ <- 1 to iters) {
       // e14 FLOOR-witness quantization (r17): CAST(double AS DECIMAL)
       // rounds HALF_UP on the double's decimal expansion in Spark but
@@ -234,19 +256,21 @@ object Graph {
       // value per src is the same either way). Under [[SplitSumNodeCap]]
       // the per-edge aggregation sums three primitive longs instead of
       // a DECIMAL(38,0) (allocation-free — see witnessSplit3).
-      val perSrc = maybeBcast(
+      val perSrc = bcastIf(
         ranks.join(deg, ranks("id") === deg("src"))
-          .select(col("src") +: contribCols(col("r") / col("odeg"), split): _*))
+          .select(col("src") +: contribCols(col("r") / col("odeg"), split): _*),
+        nV, broadcastNodeCap)
       // r19 (opt): sums is ≤ |V| rows — hint the broadcast under the
       // same measured gate instead of leaving AQE to discover it at
       // runtime (one fewer materialized query stage per iteration)
-      val sums = maybeBcast(contribSums(e.join(perSrc, Seq("src")), "dst", split))
+      val sums = bcastIf(contribSums(e.join(perSrc, Seq("src")), "dst", split),
+        nV, broadcastNodeCap)
       // LAZY checkpoint: the next iteration's broadcast collect (or the
       // caller's first action on the last iteration) materializes the
       // frame — one job per iteration instead of two
       ranks = n.join(sums, Seq("id"), "left")
         .select(col("id"),
-          (lit(1.0 - damping) +
+          (teleport +
             lit(damping) * (coalesce(col("s"), lit(0).cast(DecimalType(38, 0)))
               .cast(DoubleType) / lit(1e14))).as("r"))
         .localCheckpoint(false)
@@ -280,7 +304,6 @@ object Graph {
     * score 0).
     */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int,
-           broadcastRanks: Boolean = true,
            broadcastNodeCap: Long = BroadcastNodeCap,
            splitSumNodeCap: Long = SplitSumNodeCap): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
@@ -289,48 +312,45 @@ object Graph {
     val nV = n.count()
     val split = nV <= splitSumNodeCap
 
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastRanks && nV <= broadcastNodeCap) broadcast(df) else df
-
+    // One half-iteration: column `in` of `scores` flows along the edges
+    // from their `from` end, sums per `to` end and max-normalizes into
+    // column `out` (auth: src → dst; hub: dst → src).
+    //
+    // e14 FLOOR witness — see pageRank (r17); decimalWitness keeps the
+    // floor saturation-free (r18), though h/a ≤ 1 bounds these anyway.
+    // r18 (opt): witness computed once per NODE on the |V|-row score
+    // frame; the |E|-row join only probes the result (same addends,
+    // same exact sums — see pageRank). The sums are ≤ |V| rows, so they
+    // broadcast under the same measured gate.
+    //
     // r18 (opt): the max normalizer stays IN the plan as a broadcast
     // 1-row aggregate instead of a driver `.head` probe — same two IEEE
     // ops (max, divide; the >0 guard rides a when()), but each
     // half-iteration is ONE job whose materializer is the next
     // broadcast collect, instead of a head job + checkpoint job +
-    // collect job. The scores subtree is referenced twice (max + the
+    // collect job. The raw subtree is referenced twice (max + the
     // division) and its aggregation exchange is reused.
-    def normalized(scores: DataFrame, c: String): DataFrame = {
-      val mx = scores.agg(max(col(c)).as("__mx"))
-      scores.crossJoin(broadcast(mx))
+    def half(scores: DataFrame, in: String, from: String, to: String,
+             out: String): DataFrame = {
+      val side = bcastIf(scores.select(col("id") +: contribCols(col(in), split): _*),
+        nV, broadcastNodeCap)
+      val sums = bcastIf(contribSums(e.join(side, e(from) === side("id")), to, split),
+        nV, broadcastNodeCap)
+      val raw = n.join(sums, Seq("id"), "left")
         .select(col("id"),
-          (col(c) / when(col("__mx") > 0.0, col("__mx")).otherwise(lit(1.0))).as(c))
+          coalesce(col("s").cast(DoubleType) / lit(1e14), lit(0.0)).as(out))
+      val mx = raw.agg(max(col(out)).as("__mx"))
+      raw.crossJoin(broadcast(mx))
+        .select(col("id"),
+          (col(out) / when(col("__mx") > 0.0, col("__mx")).otherwise(lit(1.0))).as(out))
+        .localCheckpoint(false)
     }
 
     var hub = n.withColumn("h", lit(1.0))
     var auth = n.withColumn("a", lit(0.0))
     for (_ <- 1 to iters) {
-      // e14 FLOOR witness — see pageRank (r17); decimalWitness keeps the
-      // floor saturation-free (r18), though h/a ≤ 1 bounds these anyway.
-      // r18 (opt): witness computed once per NODE on the |V|-row score
-      // frame; the |E|-row join only probes the result (same addends,
-      // same exact sums — see pageRank).
-      val hSide = bc(hub.select(col("id") +: contribCols(col("h"), split): _*))
-      // aSums/hSums ≤ |V| rows — broadcast under the measured gate
-      val aSums = bc(contribSums(
-        e.join(hSide, e("src") === hSide("id")), "dst", split))
-      auth = normalized(
-        n.join(aSums, Seq("id"), "left")
-          .select(col("id"),
-            coalesce(col("s").cast(DoubleType) / lit(1e14), lit(0.0)).as("a")),
-        "a").localCheckpoint(false)
-      val aSide = bc(auth.select(col("id") +: contribCols(col("a"), split): _*))
-      val hSums = bc(contribSums(
-        e.join(aSide, e("dst") === aSide("id")), "src", split))
-      hub = normalized(
-        n.join(hSums, Seq("id"), "left")
-          .select(col("id"),
-            coalesce(col("s").cast(DoubleType) / lit(1e14), lit(0.0)).as("h")),
-        "h").localCheckpoint(false)
+      auth = half(hub, "h", "src", "dst", "a")
+      hub = half(auth, "a", "dst", "src", "h")
     }
     hub.join(auth, Seq("id"))
   }
@@ -382,42 +402,16 @@ h$i AS MATERIALIZED (SELECT id, h / (CASE WHEN (SELECT MAX(h) FROM hr$i) > 0
     */
   def pageRankSeeded(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
                      iters: Int, damping: Double = 0.85,
-                     broadcastRanks: Boolean = true,
                      broadcastNodeCap: Long = BroadcastNodeCap,
                      splitSumNodeCap: Long = SplitSumNodeCap): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
-    val e = checkpointScaled(edges.select(col("src"), col("dst")))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("odeg")).localCheckpoint(true)
     val n = nodes.select(col("id")).distinct()
       .join(seeds.select(col("id")).distinct().withColumn("__s", lit(1.0)),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("__s"), lit(0.0)).as("seed"))
       .localCheckpoint(true)
-    val nV = n.count()
-    val split = nV <= splitSumNodeCap
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (broadcastRanks && nV <= broadcastNodeCap) broadcast(df) else df
-
-    var ranks = n.select(col("id"), col("seed").as("r"))
-    for (_ <- 1 to iters) {
-      // e14 FLOOR witness — see pageRank (r17). r18 (opt): witness
-      // computed once per SOURCE on the |V|-row rank×degree join, probed
-      // by the |E| side — identical addends, identical exact sums; one
-      // job per iteration via the lazy checkpoint; long-split sums
-      // under [[SplitSumNodeCap]] (see pageRank).
-      val perSrc = maybeBcast(
-        ranks.join(deg, ranks("id") === deg("src"))
-          .select(col("src") +: contribCols(col("r") / col("odeg"), split): _*))
-      // sums ≤ |V| rows — broadcast under the measured gate (see pageRank)
-      val sums = maybeBcast(contribSums(e.join(perSrc, Seq("src")), "dst", split))
-      ranks = n.join(sums, Seq("id"), "left")
-        .select(col("id"),
-          (lit(1.0 - damping) * col("seed") +
-            lit(damping) * (coalesce(col("s"), lit(0).cast(DecimalType(38, 0)))
-              .cast(DoubleType) / lit(1e14))).as("r"))
-        .localCheckpoint(false)
-    }
-    ranks
+    pageRankLoop(n, edges, col("seed"), lit(1.0 - damping) * col("seed"),
+      iters, damping, broadcastNodeCap, splitSumNodeCap)
   }
 
   /** [[pageRankSeeded]] unrolled as engine-portable SQL. `seedsSql`
@@ -503,7 +497,6 @@ r$i AS MATERIALIZED (SELECT n.id,
     * Returns (id, lbl).
     */
   def labelPropagation(nodes: DataFrame, edges: DataFrame, iters: Int,
-                       broadcastLabels: Boolean = true,
                        broadcastNodeCap: Long = BroadcastNodeCap): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     val e = checkpointScaled(edges.select(col("src"), col("dst")).distinct())
@@ -522,7 +515,7 @@ r$i AS MATERIALIZED (SELECT n.id,
     // partial aggregation reduced almost nothing anyway.
     val eParts = math.max(1, e.rdd.getNumPartitions)
     for (_ <- 1 to iters) {
-      val lSide = if (broadcastLabels && nV <= broadcastNodeCap) broadcast(lbl) else lbl
+      val lSide = bcastIf(lbl, nV, broadcastNodeCap)
       val counts = e.join(lSide, e("src") === lSide("id"))
         .select(col("dst"), col("lbl"))
         .repartition(eParts, col("dst"))
@@ -538,9 +531,7 @@ r$i AS MATERIALIZED (SELECT n.id,
       // first action) materializes — one job per iteration, not two.
       // upd is ≤ |V| rows → same broadcast gate as the label vector
       // (stats-less checkpointed frames otherwise SMJ, r18)
-      val updSide =
-        if (broadcastLabels && nV <= broadcastNodeCap) broadcast(upd) else upd
-      lbl = lbl.join(updSide, Seq("id"), "left")
+      lbl = lbl.join(bcastIf(upd, nV, broadcastNodeCap), Seq("id"), "left")
         .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
         .localCheckpoint(false)
     }
@@ -603,12 +594,10 @@ l$i AS MATERIALIZED (SELECT l.id, COALESCE(u.lbl, l.lbl) AS lbl
     var nDist = dist.count()
     var frontier = dist.select(col("id"))
     var nFrontier = nDist
-    def gate(df: DataFrame, nRows: Long): DataFrame =
-      if (nRows <= BroadcastNodeCap) broadcast(df) else df
     for (h <- 1 to maxHops) {
-      val next = e.join(gate(frontier, nFrontier), e("src") === frontier("id"))
+      val next = e.join(bcastIf(frontier, nFrontier), e("src") === frontier("id"))
         .select(col("dst").as("id")).distinct()
-        .join(gate(dist.select(col("id")), nDist), Seq("id"), "left_anti")
+        .join(bcastIf(dist.select(col("id")), nDist), Seq("id"), "left_anti")
         .withColumn("d", lit(h.toLong))
         .localCheckpoint(true)
       nFrontier = next.count()
@@ -740,11 +729,9 @@ f$h AS (SELECT id FROM x$h)""")
       // MEASURED count (already paid by the convergence probe) — the
       // checkpointed frame carries no size stats, so without the hint
       // both semi-joins shuffled the full edge list every round.
-      def gate(df: DataFrame): DataFrame =
-        if (nActive <= BroadcastNodeCap) broadcast(df) else df
       deg = adj
-        .join(gate(active.select(col("node").as("src"))), Seq("src"), "left_semi")
-        .join(gate(active.select(col("node").as("dst"))), Seq("dst"), "left_semi")
+        .join(bcastIf(active.select(col("node").as("src")), nActive), Seq("src"), "left_semi")
+        .join(bcastIf(active.select(col("node").as("dst")), nActive), Seq("dst"), "left_semi")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
         .localCheckpoint(false)
       val next = deg.filter(col("core_deg") >= k).select("node")
@@ -797,18 +784,7 @@ f$h AS (SELECT id FROM x$h)""")
     * `und`: undirected edges (u, v). Returns (u, v, support) canonical
     * (u < v) for the surviving truss edges.
     */
-  def kTruss(und: DataFrame, k: Int, maxRounds: Int = 50): DataFrame =
-    kTruss(und, k, maxRounds, decremental = true)
-
-  /** A/B-able variant: `decremental = false` rebuilds the round-start
-    * adjacency and degree frames from `cur` every round (the r11
-    * shape — a per-round O(|E|) degree shuffle) instead of maintaining
-    * them. Exists so `tools/TrussProfile` can measure the maintenance
-    * win (jobs / shuffle bytes per peel round) against the same
-    * fixpoint; production callers take the public overload.
-    */
-  private[graft] def kTruss(und: DataFrame, k: Int, maxRounds: Int,
-                            decremental: Boolean): DataFrame = {
+  def kTruss(und: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 3, s"kTruss needs k >= 3, got $k")
     val e0 = und
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
@@ -862,23 +838,6 @@ f$h AS (SELECT id FROM x$h)""")
       val nDropped = dropped.count()
       if (nDropped == 0L) converged = true
       else {
-        // the frontier is usually tiny after round 1, but round 1 can
-        // drop a large fraction of |E| — gate the maintenance joins'
-        // broadcast on the measured count (already paid for by the
-        // convergence probe) so an unbounded frontier falls back to a
-        // shuffle join instead of blowing the broadcast cap / driver
-        // heap at scale
-        def maybeBcast(df: DataFrame): DataFrame =
-          if (nDropped <= BroadcastNodeCap) broadcast(df) else df
-        // round-start frames: maintained (decremental) or rebuilt from
-        // cur as the r11 shape did (A/B measurement path only)
-        val (adjRound, degRound) =
-          if (decremental) (adjSym, degs)
-          else {
-            val a = cur.select(col("u").as("src"), col("v").as("dst"))
-              .unionAll(cur.select(col("v").as("src"), col("u").as("dst")))
-            (a, a.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
-          }
         // probe common neighbors from each dropped edge's lower-degree
         // endpoint — hub-safe wedge fanout. (r18: broadcast-hinting the
         // frontier-sized sides of the probe joins + an extra measured
@@ -887,15 +846,15 @@ f$h AS (SELECT id FROM x$h)""")
         // small sort-merge joins they replaced: q_ktruss 9.7 → 14.1 s
         // under the bench protocol.)
         val dOri = dropped
-          .join(degRound.select(col("node").as("u"), col("deg").as("du")), "u")
-          .join(degRound.select(col("node").as("v"), col("deg").as("dv")), "v")
+          .join(degs.select(col("node").as("u"), col("deg").as("du")), "u")
+          .join(degs.select(col("node").as("v"), col("deg").as("dv")), "v")
           .select(col("u"), col("v"),
             when(col("du") <= col("dv"), col("u")).otherwise(col("v")).as("lo"),
             when(col("du") <= col("dv"), col("v")).otherwise(col("u")).as("hi"))
         val cand = dOri
-          .join(adjRound.select(col("src").as("lo"), col("dst").as("w")), "lo")
+          .join(adjSym.select(col("src").as("lo"), col("dst").as("w")), "lo")
           .filter(col("w") =!= col("hi"))
-          .join(adjRound.select(col("src").as("hi"), col("dst").as("w")),
+          .join(adjSym.select(col("src").as("hi"), col("dst").as("w")),
             Seq("hi", "w"), "left_semi")
           .select(col("u"), col("v"), col("w"))
         // one emission per dead triangle: keep only the candidate whose
@@ -924,22 +883,23 @@ f$h AS (SELECT id FROM x$h)""")
             (col("support") - coalesce(col("dec"), lit(0L))).as("support"))
           .localCheckpoint(false)
         // maintain the round-start frames for the NEXT round: remove
-        // this round's dropped edges (frontier broadcast when measured
-        // small — see maybeBcast) and decrement endpoint degrees — the
+        // this round's dropped edges and decrement endpoint degrees — the
         // only shuffle left per round is the dec aggregation over the
-        // frontier's wedges
-        if (decremental) {
-          val dropSym = dropped.select(col("u").as("src"), col("v").as("dst"))
-            .unionAll(dropped.select(col("v").as("src"), col("u").as("dst")))
-          adjSym = adjSym
-            .join(maybeBcast(dropSym), Seq("src", "dst"), "left_anti")
-            .localCheckpoint(false)
-          val dropCnt = dropSym.groupBy(col("src").as("node")).agg(count(lit(1)).as("dc"))
-          degs = degs.join(maybeBcast(dropCnt), Seq("node"), "left")
-            .select(col("node"), (col("deg") - coalesce(col("dc"), lit(0L))).as("deg"))
-            .filter(col("deg") > 0L)
-            .localCheckpoint(false)
-        }
+        // frontier's wedges. The frontier is usually tiny after round 1,
+        // but round 1 can drop a large fraction of |E|, so the broadcast
+        // is gated on the measured count (already paid for by the
+        // convergence probe): an unbounded frontier falls back to a
+        // shuffle join instead of blowing the broadcast cap at scale.
+        val dropSym = dropped.select(col("u").as("src"), col("v").as("dst"))
+          .unionAll(dropped.select(col("v").as("src"), col("u").as("dst")))
+        adjSym = adjSym
+          .join(bcastIf(dropSym, nDropped), Seq("src", "dst"), "left_anti")
+          .localCheckpoint(false)
+        val dropCnt = dropSym.groupBy(col("src").as("node")).agg(count(lit(1)).as("dc"))
+        degs = degs.join(bcastIf(dropCnt, nDropped), Seq("node"), "left")
+          .select(col("node"), (col("deg") - coalesce(col("dc"), lit(0L))).as("deg"))
+          .filter(col("deg") > 0L)
+          .localCheckpoint(false)
       }
     }
     require(converged, s"kTruss did not converge in $maxRounds rounds")
@@ -996,14 +956,13 @@ f$h AS (SELECT id FROM x$h)""")
     // without the hint the checkpointed frame has no stats and the
     // round shuffled the full |2E| adjacency twice)
     val nV = c.count()
-    val bcast = nV <= BroadcastNodeCap
     def total(df: DataFrame): Long = df.agg(sum(col("c"))).head().getLong(0)
     var prev = total(c)
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
       rounds += 1
-      val next = hIndexRound(adj, c, bcast).localCheckpoint(false)
+      val next = hIndexRound(adj, c, nV).localCheckpoint(false)
       val s = total(next)
       converged = s == prev // monotone non-increasing: equal sum = fixpoint
       prev = s
@@ -1014,18 +973,18 @@ f$h AS (SELECT id FROM x$h)""")
   }
 
   /** One H-index round for [[coreness]]: `adj` (src, dst) symmetric
-    * adjacency, `c` (node, c) current values → (node, c) next values.
+    * adjacency, `c` (node, c) current values over `nV` counted nodes →
+    * (node, c) next values.
     * Exposed so `GraphSpec` can assert the plan shape (the window runs
     * over the aggregated HISTOGRAM, never the raw adjacency — the
     * hub-safety property).
     */
   private[graft] def hIndexRound(adj: DataFrame, c: DataFrame,
-                                 bcastScores: Boolean = true): DataFrame = {
+                                 nV: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def gate(df: DataFrame): DataFrame = if (bcastScores) broadcast(df) else df
     val hist = adj
-      .join(gate(c.select(col("node").as("dst"), col("c").as("cv"))), "dst")
-      .join(gate(c.select(col("node").as("src"), col("c").as("cap"))), "src")
+      .join(bcastIf(c.select(col("node").as("dst"), col("c").as("cv")), nV), "dst")
+      .join(bcastIf(c.select(col("node").as("src"), col("c").as("cap")), nV), "src")
       .groupBy(col("src"), least(col("cv"), col("cap")).as("val"))
       .agg(count(lit(1)).as("cnt"))
     // suffix counts over the (small) per-node histogram, descending

@@ -296,6 +296,15 @@ class CurationSpec extends AnyFunSuite {
     assert(run(Long.MaxValue) === run(0L))
   }
 
+  test("dsirWeights on an empty corpus returns an empty frame") {
+    // the token-count gate reads a NULL sum on an empty corpus; it must
+    // take the long path instead of throwing
+    val empty = Seq.empty[(Long, String, String)].toDF("doc_id", "lang", "text")
+    val got = Curation.dsirWeights(empty, targetLang = "en", buckets = 64)
+    assert(got.columns.toSeq === Seq("doc_id", "n_tokens", "mean_lr_e6", "weight_e6"))
+    assert(got.collect().isEmpty)
+  }
+
   test("farthestPointSample rejects k beyond the corpus or bounds") {
     intercept[IllegalArgumentException] {
       Curation.farthestPointSample(fpsDf(Seq(1L -> Array(1f))), k = 0)

@@ -138,19 +138,6 @@ class GraphSpec extends AnyFunSuite {
       assert(r.getDecimal(0) === r.getDecimal(1), s"mismatch: $r")
   }
 
-  test("pageRank broadcast and shuffle rank joins agree bit-for-bit") {
-    val nodes = (1L to 30L).toSeq
-    val edges = nodes.flatMap(u => Seq((u, u % 30 + 1), (u, (u + 7) % 30 + 1)))
-      .filter { case (a, b) => a != b }
-    val n = df(nodeSchema, nodes.map(Row(_)))
-    val e = df(edgeSchema, edges.map { case (a, b) => Row(a, b) })
-    val a = Graph.pageRank(n, e, iters = 6, broadcastRanks = true)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val b = Graph.pageRank(n, e, iters = 6, broadcastRanks = false)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(a === b)
-  }
-
   test("pagerank family above BroadcastNodeCap plans NO broadcast hint, same results") {
     // The 100 TB contract: the rank vector and degree table are |V| rows;
     // above the measured-count cap neither may be HINTED broadcast (a
@@ -690,20 +677,24 @@ class GraphSpec extends AnyFunSuite {
     rounds
   }
 
-  test("kTruss: decremental peel ≡ synchronous peel on a deep-peeling lattice (≥3 rounds)") {
-    // triangular lattice of side m: every edge borders ≤ 2 triangles, so
-    // at k=4 (threshold 2) only interior edges survive a round and the
-    // lattice peels one boundary layer per round — a genuinely deep
-    // cascade, unlike a clique (1 round) or a strip (2)
-    val m = 8
+  /** Triangular lattice of side m: every edge borders ≤ 2 triangles, so
+    * at k=4 (threshold 2) only interior edges survive a round and the
+    * lattice peels one boundary layer per round — a genuinely deep
+    * cascade, unlike a clique (1 round) or a strip (2).
+    */
+  private def triLattice(m: Int): Seq[(Long, Long)] = {
     def id(i: Long, j: Long) = i * (m + 1) + j
-    val edges = (for {
+    (for {
       i <- 0L to m; j <- 0L to m - i
       e <- Seq(
         if (i + 1 + j <= m) Some((id(i, j), id(i + 1, j))) else None,
         if (i + j + 1 <= m) Some((id(i, j), id(i, j + 1))) else None,
         if (i + 1 + j <= m) Some((id(i + 1, j), id(i, j + 1))) else None).flatten
     } yield e).distinct
+  }
+
+  test("kTruss: decremental peel ≡ synchronous peel on a deep-peeling lattice (≥3 rounds)") {
+    val edges = triLattice(8)
     val dropRounds = scalarKTrussRounds(edges, k = 4)
     assert(dropRounds >= 3, s"lattice too shallow: $dropRounds drop rounds")
     // value equivalence at the fixpoint
@@ -730,7 +721,7 @@ class GraphSpec extends AnyFunSuite {
     val adj = und.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
     val c = adj.groupBy(col("src").as("node")).agg(count(lit(1)).as("c"))
-    val round = graft.ops.Graph.hIndexRound(adj, c)
+    val round = graft.ops.Graph.hIndexRound(adj, c, nV = 3L)
     val win = round.queryExecution.optimizedPlan.collectFirst { case w: LWindow => w }
     assert(win.nonEmpty, "H-index round lost its window")
     assert(win.get.child.collectFirst { case a: Aggregate => a }.nonEmpty,
@@ -755,5 +746,49 @@ class GraphSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException] { kCoreMap(path, k = 2, maxRounds = 2) }
     assert(e.getMessage.contains("converge"))
     assert(kCoreMap(path, k = 2) === Map.empty) // a path has no 2-core
+  }
+
+  test("graph fixpoints run a pinned number of Spark jobs and driver actions") {
+    // Driver actions are the fixpoints' dominant cost at small scale, so
+    // each operator's counts on a fixed graph (build + collect) are
+    // pinned: a refactor must not add one, and a change that removes one
+    // lowers the pin. A driver action is one SQL execution (a count, a
+    // collect, an eager checkpoint); its jobs include AQE's query stages.
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(j.properties.getProperty("spark.sql.execution.id")))
+    }
+    def countsOf(run: => Any): (Int, Int) = {
+      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      jobs.clear()
+      try {
+        run
+        org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+        (jobs.asScala.toSeq.distinct.size, jobs.size)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val nodes = (1L to 40L).toSeq
+    val edges = nodes.flatMap(u => Seq((u, u % 40 + 1), (u, (u + 11) % 40 + 1)))
+      .filter { case (a, b) => a != b }
+    val n = df(nodeSchema, nodes.map(Row(_)))
+    val e = df(edgeSchema, edges.map { case (a, b) => Row(a, b) })
+    val seeds = df(nodeSchema, Seq(Row(1L), Row(2L)))
+    val lattice = df(undSchema, triLattice(8).map { case (a, b) => Row(a, b) })
+
+    // (driver actions, jobs)
+    assert(countsOf(Graph.pageRank(n, e, iters = 4).collect()) === ((9, 24)))
+    assert(countsOf(Graph.pageRankSeeded(n, e, seeds, iters = 4).collect()) === ((9, 26)))
+    assert(countsOf(Graph.hits(n, e, iters = 3).collect()) === ((10, 40)))
+    // kTruss's job total is not deterministic: how many query-stage jobs
+    // AQE submits for a peel round depends on which of the round's
+    // concurrent stages finishes first (101-106 jobs over ~80 repeated
+    // runs of the same code, every job succeeding), so only its driver
+    // actions are exact and the total gets headroom above that range.
+    val (trussActions, trussJobs) = countsOf(Graph.kTruss(lattice, k = 4).collect())
+    assert(trussActions === 31)
+    assert(trussJobs <= 110, s"kTruss ran $trussJobs jobs")
   }
 }
