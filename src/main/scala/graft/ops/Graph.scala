@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -124,6 +124,19 @@ object Graph {
   private def bcastIf(df: DataFrame, rows: Long,
                       cap: Long = BroadcastNodeCap): DataFrame =
     if (rows <= cap) broadcast(df) else df
+
+  /** The one convergence probe every peel/expansion loop here shares:
+    * eagerly localCheckpoint `df` and count its rows satisfying `probe`,
+    * both from ONE SQL execution — the count rides on the checkpoint's
+    * own materialization through `Dataset.observe` instead of a second
+    * `count()` action over the checkpointed frame. A round that settles
+    * its frame this way costs one driver action.
+    */
+  private def settle(df: DataFrame, probe: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val cp = df.observe(obs, count(when(probe, 1)).as("n")).localCheckpoint(true)
+    (cp, obs.get("n").asInstanceOf[Long])
+  }
 
   /** Co-occurrence edge list: directed edges `(src, dst)` between items
     * sharing a basket, both directions, deduplicated. Self-join on the
@@ -265,9 +278,11 @@ object Graph {
       // runtime (one fewer materialized query stage per iteration)
       val sums = bcastIf(contribSums(e.join(perSrc, Seq("src")), "dst", split),
         nV, broadcastNodeCap)
-      // LAZY checkpoint: the next iteration's broadcast collect (or the
-      // caller's first action on the last iteration) materializes the
-      // frame — one job per iteration instead of two
+      // LAZY checkpoint, but not free: under AQE localCheckpoint(false)
+      // runs every query stage below the final one at call time, in its
+      // own SQL execution (4 jobs per iteration here); only the final
+      // stage waits for the next iteration's broadcast collect (or the
+      // caller's first action on the last iteration)
       ranks = n.join(sums, Seq("id"), "left")
         .select(col("id"),
           (teleport +
@@ -326,10 +341,11 @@ object Graph {
     // r18 (opt): the max normalizer stays IN the plan as a broadcast
     // 1-row aggregate instead of a driver `.head` probe — same two IEEE
     // ops (max, divide; the >0 guard rides a when()), but each
-    // half-iteration is ONE job whose materializer is the next
-    // broadcast collect, instead of a head job + checkpoint job +
-    // collect job. The raw subtree is referenced twice (max + the
-    // division) and its aggregation exchange is reused.
+    // half-iteration's final stage is materialized by the next
+    // broadcast collect instead of a head job + checkpoint job +
+    // collect job (under AQE the lazy checkpoint still runs the stages
+    // below it at call time). The raw subtree is referenced twice (max +
+    // the division) and its aggregation exchange is reused.
     def half(scores: DataFrame, in: String, from: String, to: String,
              out: String): DataFrame = {
       val side = bcastIf(scores.select(col("id") +: contribCols(col(in), split): _*),
@@ -527,8 +543,9 @@ r$i AS MATERIALIZED (SELECT n.id,
         .select(col("dst"), struct(col("c"), (lit(0L) - col("lbl")).as("nl")).as("m"))
         .groupBy(col("dst")).agg(max(col("m")).as("m"))
         .select(col("dst").as("id"), (lit(0L) - col("m.nl")).as("new_lbl"))
-      // LAZY: the next iteration's broadcast collect (or the caller's
-      // first action) materializes — one job per iteration, not two.
+      // LAZY checkpoint: the final stage waits for the next iteration's
+      // broadcast collect (or the caller's first action), but under AQE
+      // the stages below it run at call time, in their own SQL execution.
       // upd is ≤ |V| rows → same broadcast gate as the label vector
       // (stats-less checkpointed frames otherwise SMJ, r18)
       lbl = lbl.join(bcastIf(upd, nV, broadcastNodeCap), Seq("id"), "left")
@@ -582,29 +599,30 @@ l$i AS MATERIALIZED (SELECT l.id, COALESCE(u.lbl, l.lbl) AS lbl
     require(maxHops >= 1 && maxHops <= 20,
       s"maxHops must be in [1, 20], got $maxHops")
     val e = checkpointScaled(edges.select(col("src"), col("dst")).distinct())
-    var dist = seeds.select(col("id")).distinct()
-      .withColumn("d", lit(0L)).localCheckpoint(true)
     // r18 (opt): the frontier and visited-set joins are broadcast-gated
     // on MEASURED counts (the [[BroadcastNodeCap]] discipline) — the
     // checkpointed frames carry no size statistics, so without the hint
     // the planner shuffled the full EDGE LIST by src on every hop to
     // sort-merge-join a few-thousand-row frontier. Counts ride on the
-    // frames the hop materializes anyway; above the cap the joins fall
-    // back to shuffles with identical semantics.
-    var nDist = dist.count()
+    // frames the hop materializes anyway ([[settle]]: one action per
+    // hop); above the cap the joins fall back to shuffles with identical
+    // semantics.
+    var (dist, nDist) = settle(
+      seeds.select(col("id")).distinct().withColumn("d", lit(0L)), lit(true))
     var frontier = dist.select(col("id"))
     var nFrontier = nDist
     for (h <- 1 to maxHops) {
-      val next = e.join(bcastIf(frontier, nFrontier), e("src") === frontier("id"))
-        .select(col("dst").as("id")).distinct()
-        .join(bcastIf(dist.select(col("id")), nDist), Seq("id"), "left_anti")
-        .withColumn("d", lit(h.toLong))
-        .localCheckpoint(true)
-      nFrontier = next.count()
+      val (next, nNext) = settle(
+        e.join(bcastIf(frontier, nFrontier), e("src") === frontier("id"))
+          .select(col("dst").as("id")).distinct()
+          .join(bcastIf(dist.select(col("id")), nDist), Seq("id"), "left_anti")
+          .withColumn("d", lit(h.toLong)),
+        lit(true))
+      nFrontier = nNext
       nDist += nFrontier
-      // lazy: the next hop's frontier-expansion checkpoint (or the
-      // caller's first action, on the last hop) materializes the union —
-      // halves the per-hop job count
+      // lazy: the union of two checkpointed frames has no shuffle stage,
+      // so nothing runs until the next hop's settle (or the caller's
+      // first action, on the last hop) reads it
       dist = dist.unionAll(next).localCheckpoint(false)
       frontier = next.select(col("id"))
     }
@@ -714,30 +732,26 @@ f$h AS (SELECT id FROM x$h)""")
       .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
       .distinct()
       .localCheckpoint(true)
-    var active = adj.select(col("src").as("node")).distinct().localCheckpoint(true)
-    var nActive = active.count()
+    var (active, nActive) = settle(adj.select(col("src").as("node")).distinct(), lit(true))
     var rounds = 0
     var deg: DataFrame = null
     var converged = false
     while (!converged && rounds < maxRounds) {
       rounds += 1
-      // LAZY checkpoint + count-as-materializer: the convergence probe
-      // is the one action of the round, computing + caching `deg` and
-      // counting the survivors in a single job (eager checkpoints paid
-      // a second job per round — pure fixed overhead on short rounds).
+      // [[settle]]: the round's one action checkpoints `deg` and counts
+      // the survivors in the same SQL execution.
       // r18 (opt): the |V|-row active set is broadcast-gated on its
       // MEASURED count (already paid by the convergence probe) — the
       // checkpointed frame carries no size stats, so without the hint
       // both semi-joins shuffled the full edge list every round.
-      deg = adj
+      val (d, n) = settle(adj
         .join(bcastIf(active.select(col("node").as("src")), nActive), Seq("src"), "left_semi")
         .join(bcastIf(active.select(col("node").as("dst")), nActive), Seq("dst"), "left_semi")
-        .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
-        .localCheckpoint(false)
-      val next = deg.filter(col("core_deg") >= k).select("node")
-      val n = next.count()
+        .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg")),
+        col("core_deg") >= k)
+      deg = d
       converged = n == nActive // monotone shrink: equal size = equal set
-      active = next
+      active = deg.filter(col("core_deg") >= k).select("node")
       nActive = n
     }
     require(converged, s"kCore did not converge in $maxRounds rounds")
@@ -760,17 +774,35 @@ f$h AS (SELECT id FROM x$h)""")
     * supports — no triangle list is kept. Each round drops every edge
     * below k−2, then finds exactly the newly-dead triangles by
     * expanding wedges FROM THE DROPPED EDGES: for dropped (u,v), a
-    * common neighbor w (probed from the LOWER-degree endpoint, so hub
-    * fanout never exceeds min(deg u, deg v)) witnesses a triangle that
-    * was alive at round start; the support of its still-surviving
-    * edges decrements by one. Per-round cost is proportional to the
-    * peeled FRONTIER's wedge count — not the graph, and not the alive
-    * triangle count (profiled at sf0.1: 9.7M alive triangles but only
-    * 838/53/2/2 dropped edges per round, so any round shape that scans
-    * triangle state loses). The synchronous drop-all-below-threshold
-    * schedule makes the round sequence — and hence the fixpoint and
-    * the final supports — identical to naive per-round re-enumeration,
-    * so [[kTrussSql]] is unchanged.
+    * common neighbor w witnesses a triangle that was alive at round
+    * start; the support of its still-surviving edges decrements by one.
+    * Per-round cost is proportional to the peeled FRONTIER's wedge
+    * count — not the graph, and not the alive triangle count (profiled
+    * at sf0.1: 9.7M alive triangles but only 838/53/2/2 dropped edges
+    * per round, so any round shape that scans triangle state loses).
+    * The synchronous drop-all-below-threshold schedule makes the round
+    * sequence — and hence the fixpoint and the final supports —
+    * identical to naive per-round re-enumeration, so [[kTrussSql]] is
+    * unchanged.
+    *
+    * Hub bound: the common neighbors of a dropped edge are probed from
+    * its endpoint `lo` of lower INITIAL degree, fixed once at setup (the
+    * orientation's `x`), so a dropped edge's wedge fanout never exceeds
+    * min(initial deg u, initial deg v). The probe side changes only the
+    * cost, never which triangles are found.
+    *
+    * Round shape: ONE driver action per round. The round's only state is
+    * `cur` (u, v, lo, support), the surviving edges; [[settle]]
+    * checkpoints it and, in the same SQL execution, counts the edges
+    * below k−2 — the round's drop set. The adjacency is both directions
+    * of that checkpoint, carrying each edge's support, so no adjacency
+    * or degree frame is maintained; and since an edge drops this round
+    * exactly when its support is < k−2, each wedge edge's drop flag is
+    * read off the support of the adjacency row the probe already
+    * joined. The counted drop set gates the frontier's broadcast.
+    * `maxRounds` counts probe reads: a graph that peels in R drop
+    * rounds converges with `maxRounds = R + 1` (the last read sees no
+    * drops) and fails loudly with `maxRounds = R`.
     *
     * Double-subtraction guard: a triangle with SEVERAL edges dropped
     * the same round is witnessed once per dropped edge; only the
@@ -811,52 +843,39 @@ f$h AS (SELECT id FROM x$h)""")
         .as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("support"))
-    // LAZY checkpoints throughout the loop: each round's convergence
-    // probe (`dropped.count()`) is the single action that materializes
-    // the previous round's `cur` — one job per round, not two
-    var cur = e0.join(sup0, Seq("u", "v"), "left")
-      .select(col("u"), col("v"), coalesce(col("support"), lit(0L)).as("support"))
-      .localCheckpoint(false)
-    // DECREMENTAL round-start frames: the symmetric adjacency and the
-    // degree table are built ONCE from e0, then maintained by
-    // subtracting each round's dropped edges (broadcast anti-join /
-    // broadcast decrement join) — no per-round O(|E|) degree SHUFFLE,
-    // even though Spark's scan of the adjacency per probe join remains
-    // O(|E|) (no index structure exists to avoid it). After round r's
-    // update both frames equal round r+1's round-start set exactly.
-    var adjSym = e0.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(e0.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpoint(true)
-    var degs = adjSym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val below = col("support") < k - 2
+    var next = ori
+      .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"),
+        col("x").as("lo"))
+      .join(sup0, Seq("u", "v"), "left")
+      .select(col("u"), col("v"), col("lo"), coalesce(col("support"), lit(0L)).as("support"))
+    var cur: DataFrame = null
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
       rounds += 1
-      // the probe IS the materializer for the lazily-checkpointed `cur`
-      val dropped = cur.filter(col("support") < k - 2).select("u", "v")
-      val nDropped = dropped.count()
+      val (settled, nDropped) = settle(next, below)
+      cur = settled
       if (nDropped == 0L) converged = true
       else {
-        // probe common neighbors from each dropped edge's lower-degree
-        // endpoint — hub-safe wedge fanout. (r18: broadcast-hinting the
-        // frontier-sized sides of the probe joins + an extra measured
-        // wedge-bound gate was tried and REVERTED — the added per-round
-        // driver actions and broadcast collects cost more than the
-        // small sort-merge joins they replaced: q_ktruss 9.7 → 14.1 s
-        // under the bench protocol.)
-        val dOri = dropped
-          .join(degs.select(col("node").as("u"), col("deg").as("du")), "u")
-          .join(degs.select(col("node").as("v"), col("deg").as("dv")), "v")
-          .select(col("u"), col("v"),
-            when(col("du") <= col("dv"), col("u")).otherwise(col("v")).as("lo"),
-            when(col("du") <= col("dv"), col("v")).otherwise(col("u")).as("hi"))
-        val cand = dOri
-          .join(adjSym.select(col("src").as("lo"), col("dst").as("w")), "lo")
+        val adj = cur.select(col("u").as("a"), col("v").as("b"), col("support").as("s"))
+          .unionAll(cur.select(col("v").as("a"), col("u").as("b"), col("support").as("s")))
+        val dropped = cur.filter(below).select(col("u"), col("v"), col("lo"),
+          when(col("lo") === col("u"), col("v")).otherwise(col("u")).as("hi"))
+        // r18 tried broadcast hints here behind an extra measured gate and
+        // REVERTED them: the added driver actions cost more than the small
+        // sort-merge joins they replaced (q_ktruss 9.7 → 14.1 s). The
+        // settle's count gates the frontier for free.
+        val cand = bcastIf(dropped, nDropped)
+          .join(adj.select(col("a").as("lo"), col("b").as("w"), col("s").as("slo")), "lo")
           .filter(col("w") =!= col("hi"))
-          .join(adjSym.select(col("src").as("hi"), col("dst").as("w")),
-            Seq("hi", "w"), "left_semi")
-          .select(col("u"), col("v"), col("w"))
+          .join(adj.select(col("a").as("hi"), col("b").as("w"), col("s").as("shi")),
+            Seq("hi", "w"))
+        // the triangle's other edges (u,w), (v,w) and whether each drops
+        // this round (support below k−2 at round start)
+        val uLo = col("lo") === col("u")
+        val d2 = when(uLo, col("slo")).otherwise(col("shi")) < k - 2
+        val d3 = when(uLo, col("shi")).otherwise(col("slo")) < k - 2
         // one emission per dead triangle: keep only the candidate whose
         // dropped edge is the triangle's minimum dropped edge
         val me = struct(col("u"), col("v"))
@@ -864,49 +883,23 @@ f$h AS (SELECT id FROM x$h)""")
           greatest(col("u"), col("w")).as("v"))
         val e3 = struct(least(col("v"), col("w")).as("u"),
           greatest(col("v"), col("w")).as("v"))
-        val dset = dropped.select(struct(col("u"), col("v")).as("de"))
-        val flagged = cand
-          .join(dset.select(col("de").as("de2")), e2 === col("de2"), "left")
-          .join(dset.select(col("de").as("de3")), e3 === col("de3"), "left")
-        val dec = flagged
-          .filter((col("de2").isNull || !(col("de2") < me)) &&
-            (col("de3").isNull || !(col("de3") < me)))
-          .select(explode(array(
-            when(col("de2").isNull, e2),
-            when(col("de3").isNull, e3))).as("e"))
+        val dec = cand
+          .filter((!d2 || !(e2 < me)) && (!d3 || !(e3 < me)))
+          .select(explode(array(when(!d2, e2), when(!d3, e3))).as("e"))
           .filter(col("e").isNotNull)
           .select(col("e.u").as("u"), col("e.v").as("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("dec"))
-        cur = cur.filter(col("support") >= k - 2)
+        next = cur.filter(!below)
           .join(dec, Seq("u", "v"), "left")
-          .select(col("u"), col("v"),
+          .select(col("u"), col("v"), col("lo"),
             (col("support") - coalesce(col("dec"), lit(0L))).as("support"))
-          .localCheckpoint(false)
-        // maintain the round-start frames for the NEXT round: remove
-        // this round's dropped edges and decrement endpoint degrees — the
-        // only shuffle left per round is the dec aggregation over the
-        // frontier's wedges. The frontier is usually tiny after round 1,
-        // but round 1 can drop a large fraction of |E|, so the broadcast
-        // is gated on the measured count (already paid for by the
-        // convergence probe): an unbounded frontier falls back to a
-        // shuffle join instead of blowing the broadcast cap at scale.
-        val dropSym = dropped.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(dropped.select(col("v").as("src"), col("u").as("dst")))
-        adjSym = adjSym
-          .join(bcastIf(dropSym, nDropped), Seq("src", "dst"), "left_anti")
-          .localCheckpoint(false)
-        val dropCnt = dropSym.groupBy(col("src").as("node")).agg(count(lit(1)).as("dc"))
-        degs = degs.join(bcastIf(dropCnt, nDropped), Seq("node"), "left")
-          .select(col("node"), (col("deg") - coalesce(col("dc"), lit(0L))).as("deg"))
-          .filter(col("deg") > 0L)
-          .localCheckpoint(false)
       }
     }
     require(converged, s"kTruss did not converge in $maxRounds rounds")
     // by the invariant, `cur`'s support at fixpoint = each edge's
     // triangle count within the final truss — exactly what one more
     // full enumeration over the fixpoint set would produce
-    cur
+    cur.select(col("u"), col("v"), col("support"))
   }
 
   /** Full core decomposition — coreness number for EVERY node in one
@@ -945,9 +938,10 @@ f$h AS (SELECT id FROM x$h)""")
       .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
       .distinct()
       .localCheckpoint(true)
-    // LAZY checkpoints: the ΣC convergence probe is the round's single
-    // action, materializing the round's values and summing them in one
-    // job (eager checkpointing doubled the per-round job count)
+    // LAZY checkpoints: the ΣC convergence probe materializes the
+    // round's values and sums them; under AQE each localCheckpoint(false)
+    // still runs the stages below its final one at call time, in its own
+    // SQL execution, so a round is two driver actions, not one
     var c = adj.groupBy(col("src").as("node")).agg(count(lit(1)).as("c"))
       .localCheckpoint(false)
     // r18 (opt): the per-round score vector is |V| rows and every node

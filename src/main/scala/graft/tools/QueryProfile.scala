@@ -4,12 +4,18 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Per-job wall-clock attribution for one or more declared queries —
-  * the local[N] stand-in for the Spark UI's Jobs/Stages view (guide
+  * the local[N] stand-in for the Spark UI's SQL/Jobs/Stages views (guide
   * §1.1/§7.1): for each query, run the noop-sink action once and print
-  * every job's wall ms, stage count, task count, summed executor run
-  * time and shuffle read/write bytes. Exposes where an iterative
-  * query's wall goes (scheduling overhead vs compute vs shuffle) so
-  * the optimization loop edits the right thing.
+  * its jobs grouped by SQL execution (one driver action: a count, a
+  * collect, a checkpoint). Each execution is headed by the `graft` call
+  * site that started it, read from the execution's start event — AQE
+  * submits query-stage jobs from a pool thread, so their own job names
+  * (`$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java`)
+  * never say which operator they belong to. Each job line shows wall
+  * ms, stage count, task count, summed executor run time and shuffle
+  * read/write bytes. Exposes where an iterative query's wall goes
+  * (driver actions vs scheduling overhead vs compute vs shuffle) so the
+  * optimization loop edits the right thing.
   *
   * Usage: runMain graft.tools.QueryProfile <sfDir> <query>[,<query>...]
   * Env: SPARK_GRAFT_CPUS (default 32).
@@ -30,7 +36,7 @@ object QueryProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    case class JobRec(id: Int, start: Long, var end: Long = -1L,
+    case class JobRec(id: Int, exec: Long, start: Long, var end: Long = -1L,
                       var nStages: Int = 0, var nTasks: Int = 0,
                       var runTimeMs: Long = 0L, var shufR: Long = 0L,
                       var shufW: Long = 0L, var input: Long = 0L,
@@ -43,9 +49,18 @@ object QueryProfile {
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageRec]()
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val sites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(ev: SparkListenerEvent): Unit = ev match {
+        case e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          sites.put(e.executionId, callSite(e.details, e.description))
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.put(js.jobId, JobRec(js.jobId, js.time))
+        val exec = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .fold(-1L)(_.toLong)
+        jobs.put(js.jobId, JobRec(js.jobId, exec, js.time))
         js.stageIds.foreach(sid => stageToJob.put(sid, js.jobId))
         val r = jobs.get(js.jobId); r.nStages = js.stageIds.size
       }
@@ -94,7 +109,7 @@ object QueryProfile {
     val stageDetail = sys.env.get("QP_STAGES").isDefined
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
-      jobs.clear(); stages.clear(); stageToJob.clear()
+      jobs.clear(); stages.clear(); stageToJob.clear(); sites.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
@@ -107,12 +122,18 @@ object QueryProfile {
         jobs.values.asScala.toSeq.sortBy(_.start)
       }
       val jobWall = recs.map(r => math.max(0L, r.end - r.start)).sum
-      println(f"==== $name: wall ${wall}%.2f s, ${recs.size} jobs, " +
+      val byExec = recs.groupBy(_.exec).toSeq.sortBy(_._2.head.start)
+      println(f"==== $name: wall ${wall}%.2f s, ${byExec.count(_._1 >= 0)} SQL executions, ${recs.size} jobs, " +
         f"job-wall ${jobWall / 1e3}%.2f s, gaps ${wall - jobWall / 1e3}%.2f s ====")
-      for (r <- recs) {
-        val d = math.max(0L, r.end - r.start)
-        println(f"  job ${r.id}%3d  ${d}%6d ms  stages=${r.nStages}%2d tasks=${r.nTasks}%4d " +
-          f"cpuRun=${r.runTimeMs}%6d ms gc=${r.gcMs}%5d ms  in=${r.input / 1048576}%5d MB shufR=${r.shufR / 1048576}%4d MB shufW=${r.shufW / 1048576}%4d MB spill=${r.spill / 1048576}%d MB")
+      for ((exec, execJobs) <- byExec) {
+        val site = Option(sites.get(exec)).getOrElse("(no SQL execution)")
+        val span = execJobs.map(_.end).max - execJobs.head.start
+        println(f"  exec $exec%4d  ${execJobs.size}%2d jobs  ${span}%6d ms  $site")
+        for (r <- execJobs) {
+          val d = math.max(0L, r.end - r.start)
+          println(f"    job ${r.id}%3d  ${d}%6d ms  stages=${r.nStages}%2d tasks=${r.nTasks}%4d " +
+            f"cpuRun=${r.runTimeMs}%6d ms gc=${r.gcMs}%5d ms  in=${r.input / 1048576}%5d MB shufR=${r.shufR / 1048576}%4d MB shufW=${r.shufW / 1048576}%4d MB spill=${r.spill / 1048576}%d MB")
+        }
       }
       if (stageDetail) {
         import scala.jdk.CollectionConverters._
@@ -123,5 +144,18 @@ object QueryProfile {
       }
     }
     spark.stop()
+  }
+
+  /** The `graft` frames of an execution's call-site stack (innermost
+    * first, at most three, this tool's own frames skipped), e.g.
+    * `settle Graph.scala:137 < kTruss Graph.scala:857 <
+    * SparkEntry.scala:3775`; the short call site when there is none.
+    */
+  private def callSite(details: String, short: String): String = {
+    val Frame = """graft\.(?!tools\.)[\w.$]*?\.([\w$]+)\((.*)\)""".r
+    val frames = details.linesIterator.map(_.trim).collect {
+      case Frame(method, at) => if (method.startsWith("$anonfun")) at else s"$method $at"
+    }.take(3).toSeq
+    if (frames.isEmpty) short else frames.mkString(" < ")
   }
 }
