@@ -97,9 +97,13 @@ final class VectorIndexFlat private (
   /** Append vectors in insertion order; ids are assigned 0-based
     * contiguously (ref `add`, `mm:185-311`). Norms are always computed
     * from the fp32 input even for reduced-precision storage (`mm:258-268`).
+    * The dimension check runs on the driver, so the append is one Spark
+    * job; an empty append runs none.
     */
   def add(vecs: Seq[Array[Float]]): this.type = {
-    require(vecs.forall(_.length == d), s"all vectors must have dimension $d")
+    require(vecs.forall(v => v != null && v.length == d),
+      s"all vectors must have dimension $d")
+    if (vecs.isEmpty) return this
     val base = cachedNtotal
     val rows = vecs.zipWithIndex.map { case (v, i) => Row(base + i, v) }
     val df = spark.createDataFrame(
@@ -112,31 +116,45 @@ final class VectorIndexFlat private (
     * column; ids continue from the current ntotal in partition order.
     */
   def add(df: DataFrame): this.type = {
-    val base = cachedNtotal
-    // cache the input once: zipWithIndex's internal partition-size job,
-    // the count, and the union materialization all read the same blocks
-    // instead of rescanning the source three times
+    // Two jobs, and the input is computed once: one pass over the cached
+    // source counts each partition's rows and its null or wrong-dimension
+    // vectors, bad input is rejected before the index changes, and the
+    // union materialization then reads the cached blocks, numbering each
+    // partition's rows from its offset.
     val src = df.select(col("vec")).rdd
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val withIds = src.zipWithIndex().map {
-      case (r, i) => Row(base + i, r.getSeq[Float](0).toArray)
-    }
-    val n = src.count()
-    try appendDf(spark.createDataFrame(withIds, rawSchema), n)
-    finally src.unpersist(blocking = false)
-    this
+    try {
+      val dim = d
+      val parts = src.mapPartitions { it =>
+        var rows = 0L; var bad = 0L
+        it.foreach { r =>
+          rows += 1
+          if (r.isNullAt(0) || r.getSeq[Float](0).length != dim) bad += 1
+        }
+        Iterator.single((rows, bad))
+      }.collect()
+      val bad = parts.map(_._2).sum
+      require(bad == 0L, s"all vectors must have dimension $d ($bad rows differ)")
+      val offsets = parts.map(_._1).scanLeft(cachedNtotal)(_ + _)
+      val n = offsets.last - cachedNtotal
+      if (n == 0L) return this
+      val withIds = src.mapPartitionsWithIndex { (p, it) =>
+        var id = offsets(p)
+        it.map { r => val row = Row(id, r.getSeq[Float](0).toArray); id += 1; row }
+      }
+      appendDf(spark.createDataFrame(withIds, rawSchema), n)
+    } finally src.unpersist(blocking = false)
   }
 
+  /** Callers have validated `raw`. One job: `toRdd.count()` builds the
+    * cached union (the old index's cached blocks plus the new rows) in
+    * one pass; a `count()` aggregate would add two AQE jobs, a map job
+    * that scans every partition again and a result job.
+    */
   private def appendDf(raw: DataFrame, n: Long): this.type = {
-    // dimension check on the distributed path too (the Seq overload
-    // validates eagerly; here it costs one cheap agg over cached blocks)
-    val badDims = raw.filter(size(col("vec")) =!= d).count()
-    require(badDims == 0L,
-      s"all vectors must have dimension $d ($badDims rows differ)")
-    val prepared = prepare(raw)
     val old = data
-    data = old.unionByName(prepared).persist(StorageLevel.MEMORY_AND_DISK)
-    data.count() // materialize before dropping the old lineage
+    data = old.unionByName(prepare(raw)).persist(StorageLevel.MEMORY_AND_DISK)
+    data.queryExecution.toRdd.count() // materialize before dropping the old lineage
     old.unpersist()
     cachedNtotal += n
     this
@@ -612,7 +630,9 @@ object VectorIndexFlat {
     val idx = new VectorIndexFlat(spark, d, metric, storage)
     val raw = df.select(col(idCol).cast(LongType).as("id"),
       col(vecCol).as("vec"))
-    val counts = raw.agg(count(lit(1)), sum(when(size(col("vec")) =!= d, 1).otherwise(0))).head
+    // under ANSI `size(null)` is null, so a null vector is counted apart
+    val counts = raw.agg(count(lit(1)),
+      sum(when(col("vec").isNull || size(col("vec")) =!= d, 1).otherwise(0))).head
     val n = counts.getLong(0)
     val badDims = if (counts.isNullAt(1)) 0L else counts.getLong(1) // null sum = empty df
     require(badDims == 0L, s"all vectors must have dimension $d")

@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructField, StructType}
 
 import graft.functions.{FloatBits, dotProduct, squaredL2, vectorNormSq}
 import graft.index.{Metric, StorageType, VectorIndexFlat}
@@ -309,6 +311,99 @@ class VectorIndexFlatSpec extends AnyFunSuite {
     val got = runSearch(inc, qs, 5)
     val want = Oracle.bruteForceKnn(all, qs, 5, innerProduct = false)
     for (q <- 0 until 3) assert(got(q.toLong).map(_._1) === want(q).map(_._1).toSeq)
+  }
+
+  /** An id-less (vec: array<float>) frame in `slices` partitions. */
+  private def vecFrame(vecs: Seq[Array[Float]], slices: Int) = {
+    val schema = StructType(Seq(StructField("vec", ArrayType(FloatType))))
+    spark.createDataFrame(spark.sparkContext.parallelize(vecs.map(Row(_)), slices), schema)
+  }
+
+  test("add(df) ≡ add(Seq): same ids and search rows on a non-empty index") {
+    val d = 16
+    val all = Oracle.genVectors(300, d)
+    val qs = Oracle.queriesDf(spark, Oracle.genVectors(4, d, seed = 4242))
+    val bySeq = VectorIndexFlat(spark, d, Metric.L2)
+    val byDf = VectorIndexFlat(spark, d, Metric.L2)
+    Seq(bySeq, byDf).foreach(_.add(all.take(100).toSeq))
+    bySeq.add(all.drop(100).toSeq)
+    val src = vecFrame(all.drop(100).toSeq, slices = 3)
+    assert(src.rdd.getNumPartitions === 3)
+    byDf.add(src)
+    assert(byDf.ntotal === 300 && bySeq.ntotal === 300)
+    def stored(idx: VectorIndexFlat) = idx.vectors.orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
+    assert(stored(byDf).toSeq === stored(bySeq).toSeq)
+    assert(stored(byDf).map(_._1).toSeq === (0L until 300L))
+    for (k <- Seq(1, 7)) {
+      assert(byDf.search(qs, k).orderBy("qid", "rank").collect() ===
+        bySeq.search(qs, k).orderBy("qid", "rank").collect())
+    }
+    bySeq.reset(); byDf.reset()
+  }
+
+  test("null vectors fail closed: fromDataFrame, add(df) and add(Seq) throw, index unchanged") {
+    val d = 8
+    val vecs = Oracle.genVectors(20, d)
+    val qs = Oracle.queriesDf(spark, Oracle.genVectors(2, d, seed = 4242))
+    val withNull: Seq[Array[Float]] = vecs.take(3).toSeq :+ null
+    val keyed = vecFrame(withNull, slices = 2)
+      .withColumn("id", monotonically_increasing_id())
+    intercept[IllegalArgumentException] {
+      VectorIndexFlat.fromDataFrame(spark, keyed, d)
+    }
+    val idx = VectorIndexFlat(spark, d, Metric.L2)
+    idx.add(vecs.toSeq)
+    val before = idx.search(qs, 5).orderBy("qid", "rank").collect()
+    intercept[IllegalArgumentException] { idx.add(vecFrame(withNull, slices = 2)) }
+    assert(idx.ntotal === 20)
+    intercept[IllegalArgumentException] { idx.add(withNull) }
+    assert(idx.ntotal === 20)
+    // a wrong dimension is refused the same way
+    intercept[IllegalArgumentException] {
+      idx.add(vecFrame(Seq(Array.fill(d + 1)(0f)), slices = 1))
+    }
+    assert(idx.ntotal === 20)
+    assert(idx.search(qs, 5).orderBy("qid", "rank").collect() === before)
+    idx.reset()
+  }
+
+  test("add runs a pinned number of Spark jobs") {
+    // Driver actions dominate a small append's cost, so each add shape's
+    // job count is pinned on an index that already has several
+    // partitions: add(Seq) is the union materialization alone, add(df)
+    // one validation pass more, and an empty add runs nothing.
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(j.jobId)
+    }
+    def jobsOf(run: => Any): Int = {
+      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      jobs.clear()
+      try {
+        run
+        org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+        jobs.asScala.size
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val d = 16
+    val vecs = Oracle.genVectors(400, d)
+    for (storage <- Seq(StorageType.Float32, StorageType.Float16)) {
+      val idx = VectorIndexFlat(spark, d, Metric.L2, storage)
+      (0 until 4).foreach(b => idx.add(vecs.slice(b * 50, (b + 1) * 50).toSeq))
+      assert(idx.vectors.rdd.getNumPartitions >= 4)
+      assert(jobsOf(idx.add(vecs.slice(200, 250).toSeq)) === 1, s"$storage add(Seq)")
+      val df = vecFrame(vecs.slice(250, 400).toSeq, slices = 3)
+      val dfJobs = jobsOf(idx.add(df))
+      assert(dfJobs <= 2, s"$storage add(df) ran $dfJobs jobs")
+      assert(jobsOf(idx.add(Seq.empty[Array[Float]])) === 0, s"$storage empty add")
+      assert(idx.ntotal === 400)
+      assert(idx.reconstruct(399L).length === d)
+      idx.reset()
+    }
   }
 
   test("async ≡ sync, 3 concurrent tokens (ref async contract)") {
