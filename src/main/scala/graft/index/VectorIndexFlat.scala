@@ -227,18 +227,26 @@ final class VectorIndexFlat private (
   /** k-nearest-neighbor search.
     *
     * Physical path selection (the analog of the reference's fused-kernel
-    * gate, `src/MetalDistance.mm:341-363`): when the query batch is small
-    * enough to broadcast (the serving-style case), the fused path runs
-    * distance + per-partition bounded top-k in one tight primitive loop
-    * per vector partition and shuffles only nq·k rows per partition —
-    * never materializing a (pair) row per (q, v). Large query batches fall
-    * back to the declarative cross-join + aggregate plan, which Catalyst
-    * pipelines into one stage up to the top-k shuffle.
+    * gate, `src/MetalDistance.mm:341-363`): a bounded probe collects the
+    * query batch to the driver — at most `maxFusedStateRows / max(k, d)`
+    * rows plus one — and [[VectorIndexFlat.useFusedPath]] decides. Every
+    * batch within that budget takes the fused path: the batch is broadcast
+    * and each vector partition runs distance + bounded top-k in one
+    * primitive loop ([[graft.plans.KnnPartialExec]], four queries per row
+    * load), shuffling only nq·k rows per partition and never
+    * materializing a (pair) row per (q, v). Batches over the budget, tiny
+    * indexes and `forceDeclarative` take the declarative cross-join +
+    * aggregate plan, which Catalyst pipelines into one stage up to the
+    * top-k shuffle.
     *
     * Both paths use the identical fp64 left-to-right distance loop and the
     * (dist, id) total order, so their results are bit-identical.
     *
-    * @param queries DataFrame with (qid: long, qvec: array<float>)
+    * A null or wrong-dimension `qvec` throws: the probed rows are checked
+    * on the driver (`IllegalArgumentException`), and the declarative
+    * scoring projection raises an error for any row the probe did not see.
+    *
+    * @param queries DataFrame with (qid: long, qvec: array<float> of length d)
     * @return (qid, rank, label, dist) — rank 0-based best-first, k rows per
     *         query, sentinel-padded; dist is squared L2 or inner product.
     */
@@ -264,18 +272,22 @@ final class VectorIndexFlat private (
     }
     val qRows =
       if (forceDeclarative) Array.empty[Row]
-      else q.limit(VectorIndexFlat.maxFusedQueries + 1).collect()
+      else q.limit((maxFusedStateRows / math.max(k, d)).toInt + 1).collect()
+    val bad = qRows.count(r => r.isNullAt(1) || r.getSeq[Float](1).length != d)
+    require(bad == 0, s"query vectors must have dimension $d ($bad rows differ)")
     val scored =
-      if (!forceDeclarative &&
-          VectorIndexFlat.useFusedPath(qRows.length, cachedNtotal, k))
+      if (!forceDeclarative && useFusedPath(qRows.length, cachedNtotal, k, d))
         fusedPartials(qRows, k)
       else {
         val dist = metric match {
           case Metric.L2           => squaredL2(col("vec"), col("qvec"))
           case Metric.InnerProduct => dotProduct(col("vec"), col("qvec"))
         }
+        // under ANSI `size(null)` is null, so a null qvec is tested apart
+        val checked = when(col("qvec").isNull || size(col("qvec")) =!= d,
+          raise_error(lit(s"query vectors must have dimension $d"))).otherwise(dist)
         decoded.crossJoin(broadcast(q))
-          .select(col("qid"), col("id"), dist.as("score"))
+          .select(col("qid"), col("id"), checked.as("score"))
       }
     scored
       .groupBy(col("qid"))
@@ -300,10 +312,10 @@ final class VectorIndexFlat private (
 
   private def fusedPartialsData(qData: Seq[(Long, Array[Float])], k: Int): DataFrame = {
     // reduced-precision storage feeds the 16-bit column STRAIGHT into the
-    // fused loop (element decode in-register, ref simdgroup_gemm.metal
-    // f16/bf16 tiles) — the scan moves half the bytes and no fp32 array
-    // is materialized per row, unlike the declarative path's dequantize
-    // projection
+    // fused loop, which decodes each row once into a reused fp64 scratch
+    // array (ref simdgroup_gemm.metal f16/bf16 tiles) — the scan moves
+    // half the bytes and no fp32 array is allocated per row, unlike the
+    // declarative path's dequantize projection
     val (src, dec) = storage match {
       case StorageType.Float32  => (data.select(col("id"), col("vec")), 0)
       case StorageType.Float16  => (data.select(col("id"), col("vech")), 1)
@@ -335,6 +347,7 @@ final class VectorIndexFlat private (
     */
   def searchPoint(qvec: Array[Float], k: Int): Array[(Long, Double)] = {
     require(k > 0, s"k must be > 0, got $k")
+    require(qvec != null && qvec.length == d, s"query must have dimension $d")
     val pad = (-1L, metric.sentinel)
     if (cachedNtotal == 0L) return Array.fill(k)(pad)
     val rows = fusedPartialsData(Seq((0L, qvec)), k).collect()
@@ -556,16 +569,14 @@ final class PointSearcher private[index] (
 
 object VectorIndexFlat {
 
-  /** Fused-path gate: query batches up to this size are collected and
-    * broadcast (analog of the reference's nq ≤ 4 fused gate — ours is
-    * wider because a CPU partition loop has no threadgroup-memory limit).
-    */
-  val maxFusedQueries = 1024
-
-  /** Per-partition fused top-k state budget, in (nq·k) heap rows — beyond
-    * this the bounded buffers themselves dominate partition memory and the
-    * declarative plan's streaming aggregate is the safer shape (the analog
-    * of the reference's k ≤ 32 fused bound, `src/MetalDistance.mm:341-353`).
+  /** The fused path's one budget, 2²² slots. It bounds both what a fused
+    * task holds per partition — nq·k top-k slots, beyond which the
+    * bounded buffers dominate partition memory and the declarative plan's
+    * streaming aggregate is the safer shape (the analog of the reference's
+    * k ≤ 32 fused bound, `src/MetalDistance.mm:341-353`) — and the query
+    * payload the driver collects and broadcasts, nq·d floats (≤ 16 MB).
+    * A CPU partition loop has no threadgroup-memory limit, so unlike the
+    * reference's nq ≤ 4 gate there is no separate cap on nq.
     */
   val maxFusedStateRows: Long = 1L << 22
 
@@ -577,15 +588,18 @@ object VectorIndexFlat {
     */
   val minFusedNtotalFactor = 4L
 
-  /** Cost-model choice of physical path from (nq, ntotal, k) — the Spark
-    * analog of the reference's fused gate (`src/MetalDistance.mm:341-353`:
-    * nq·nv ≥ 8M ∧ nq ≤ 4 ∧ k ≤ 32). All three operands are known exactly
-    * at plan time (ntotal is index metadata, not an estimate). Both paths
-    * are proven bit-identical, so the gate affects cost only.
+  /** Cost-model choice of physical path from (nq, ntotal, k, d) — the
+    * Spark analog of the reference's fused gate
+    * (`src/MetalDistance.mm:341-353`: nq·nv ≥ 8M ∧ nq ≤ 4 ∧ k ≤ 32).
+    * Fused when the top-k state (nq·k) and the query payload (nq·d) both
+    * fit [[maxFusedStateRows]] and the index holds at least
+    * `minFusedNtotalFactor · k` vectors. All operands are known exactly at
+    * plan time (ntotal is index metadata, not an estimate). Both paths are
+    * proven bit-identical, so the gate affects cost only.
     */
-  private[graft] def useFusedPath(nq: Int, nv: Long, k: Int): Boolean =
-    nq <= maxFusedQueries &&
-      nq.toLong * k <= maxFusedStateRows &&
+  private[graft] def useFusedPath(nq: Int, nv: Long, k: Int, d: Int): Boolean =
+    nq.toLong * k <= maxFusedStateRows &&
+      nq.toLong * d <= maxFusedStateRows &&
       nv >= minFusedNtotalFactor * k
 
   private val rawSchema = StructType(Seq(

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.functions.FloatBits
 import graft.operators.TopKBuffer
 
 /** Catalyst-native fused kNN: the whole-operator form of the reference's
@@ -17,10 +18,12 @@ import graft.operators.TopKBuffer
   *
   * The logical node carries the (small, broadcastable) query batch as data;
   * the physical operator runs distance + k-bounded selection in one
-  * primitive-loop pass over each vector partition, emitting ≤ nq·k partial
-  * rows per partition directly as `InternalRow`s — no per-pair join row,
-  * no encoder copy. The regular `TopKAgg` on top performs the final merge
-  * (the analog of the fused kernel's SIMD-group-0 merge).
+  * primitive-loop pass over each vector partition — each row decoded once
+  * to fp64, then scored four queries at a time ([[Knn.scoreRow]]) —
+  * emitting ≤ nq·k partial rows per partition directly as `InternalRow`s:
+  * no per-pair join row, no encoder copy. The regular `TopKAgg` on top
+  * performs the final merge (the analog of the fused kernel's SIMD-group-0
+  * merge).
   */
 case class KnnNode(
     child: LogicalPlan,
@@ -29,10 +32,10 @@ case class KnnNode(
     ascending: Boolean,
     innerProduct: Boolean,
     // 0 = fp32 child rows; 1 = f16 bits (array<short>); 2 = bf16 bits.
-    // Reduced precision decodes per ELEMENT inside the distance loop —
-    // the scan reads half the bytes and no fp32 array is ever
-    // materialized (the J4/J5 analog of the reference's half-width GEMM
-    // tiles, shaders/simdgroup_gemm.metal:262-370).
+    // Reduced precision is decoded inside the fused loop, once per row
+    // into a reused fp64 scratch array — the scan reads half the bytes
+    // and no per-row fp32 array is allocated (the J4/J5 analog of the
+    // reference's half-width GEMM tiles, shaders/simdgroup_gemm.metal:262-370).
     decode: Int = 0,
     // constructor field, NOT a val: tree copies (optimizer rewrites) must
     // preserve the expression ids consumers already reference
@@ -75,55 +78,35 @@ case class KnnPartialExec(
     val dec = decode
     child.execute().mapPartitions({ it =>
       val qs = bc.value
-      val bufs = Array.fill(qs.length)(new TopKBuffer(kk, asc))
+      val nq = qs.length
+      // one query length for the batch (Knn.partials checks it), so each
+      // row scores the same n = min(row length, qn) elements per query
+      val qn = if (nq == 0) 0 else qs(0)._2.length
+      // the queries widened to fp64 once per partition, query-major
+      val qd = new Array[Double](nq * qn)
+      var q = 0
+      while (q < nq) {
+        val qv = qs(q)._2
+        var j = 0
+        while (j < qn) { qd(q * qn + j) = qv(j).toDouble; j += 1 }
+        q += 1
+      }
+      val x = new Array[Double](qn)
+      val bufs = Array.fill(nq)(new TopKBuffer(kk, asc))
       it.foreach { row =>
         val id = row.getLong(0)
         val vec = row.getArray(1)
-        val vn = vec.numElements()
-        var qi = 0
-        while (qi < qs.length) {
-          val qv = qs(qi)._2
-          val n = math.min(vn, qv.length)
-          var acc = 0.0
-          var j = 0
-          // element decode inline (dec 1 = f16 bits, 2 = bf16 bits): the
-          // half-width array is read straight from the scan's ArrayData.
-          // dec is branched OUTSIDE the element loop — the fp32 serving
-          // path keeps its original tight loop
-          if (ip) {
-            if (dec == 0)
-              while (j < n) { acc += vec.getFloat(j).toDouble * qv(j).toDouble; j += 1 }
-            else if (dec == 1)
-              while (j < n) {
-                acc += graft.functions.FloatBits.halfBitsToFloat(vec.getShort(j)).toDouble *
-                  qv(j).toDouble; j += 1
-              }
-            else
-              while (j < n) {
-                acc += graft.functions.FloatBits.bf16BitsToFloat(vec.getShort(j)).toDouble *
-                  qv(j).toDouble; j += 1
-              }
-          } else {
-            if (dec == 0)
-              while (j < n) {
-                val d = vec.getFloat(j).toDouble - qv(j).toDouble; acc += d * d; j += 1
-              }
-            else if (dec == 1)
-              while (j < n) {
-                val d = graft.functions.FloatBits.halfBitsToFloat(vec.getShort(j)).toDouble -
-                  qv(j).toDouble
-                acc += d * d; j += 1
-              }
-            else
-              while (j < n) {
-                val d = graft.functions.FloatBits.bf16BitsToFloat(vec.getShort(j)).toDouble -
-                  qv(j).toDouble
-                acc += d * d; j += 1
-              }
-          }
-          bufs(qi).insert(acc, id)
-          qi += 1
-        }
+        val n = math.min(vec.numElements(), qn)
+        // each row is decoded once (dec 1 = f16 bits, 2 = bf16 bits, read
+        // straight from the scan's ArrayData) and then scored against
+        // every query
+        var j = 0
+        if (dec == 0) while (j < n) { x(j) = vec.getFloat(j).toDouble; j += 1 }
+        else if (dec == 1)
+          while (j < n) { x(j) = FloatBits.halfBitsToFloat(vec.getShort(j)).toDouble; j += 1 }
+        else
+          while (j < n) { x(j) = FloatBits.bf16BitsToFloat(vec.getShort(j)).toDouble; j += 1 }
+        Knn.scoreRow(x, n, qd, qn, nq, ip, id, bufs)
       }
       // UnsafeRow output: lets this node sit at the ROOT of a plan too
       // (e.g. a collect of the partials for a driver-side merge) — Spark's
@@ -167,15 +150,67 @@ object Knn {
     }
   }
 
+  /** Scores one decoded row `x(0 until n)` against every query in `qd`
+    * (nq queries of qn doubles, query-major) and offers each score to
+    * that query's buffer.
+    *
+    * Queries go in blocks of 4: four independent accumulators share each
+    * load of `x(j)`, so the row is read once per block instead of once
+    * per query; a scalar loop takes the remainder. Every accumulator
+    * still sums its own query left to right in fp64, and the JVM never
+    * contracts `a += d * d` into an FMA, so each score is bit-identical
+    * to the one-query loop of `SquaredL2Distance` / `DotProductFloat`
+    * (the declarative path) and of `PointSearcher`.
+    */
+  private[plans] def scoreRow(x: Array[Double], n: Int, qd: Array[Double], qn: Int,
+                              nq: Int, ip: Boolean, id: Long,
+                              bufs: Array[TopKBuffer]): Unit = {
+    var qi = 0
+    while (qi + 4 <= nq) {
+      val o0 = qi * qn; val o1 = o0 + qn; val o2 = o1 + qn; val o3 = o2 + qn
+      var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+      var j = 0
+      if (ip) while (j < n) {
+        val xj = x(j)
+        a0 += xj * qd(o0 + j); a1 += xj * qd(o1 + j)
+        a2 += xj * qd(o2 + j); a3 += xj * qd(o3 + j)
+        j += 1
+      } else while (j < n) {
+        val xj = x(j)
+        val d0 = xj - qd(o0 + j); val d1 = xj - qd(o1 + j)
+        val d2 = xj - qd(o2 + j); val d3 = xj - qd(o3 + j)
+        a0 += d0 * d0; a1 += d1 * d1; a2 += d2 * d2; a3 += d3 * d3
+        j += 1
+      }
+      bufs(qi).insert(a0, id); bufs(qi + 1).insert(a1, id)
+      bufs(qi + 2).insert(a2, id); bufs(qi + 3).insert(a3, id)
+      qi += 4
+    }
+    while (qi < nq) {
+      val o = qi * qn
+      var acc = 0.0
+      var j = 0
+      if (ip) while (j < n) { acc += x(j) * qd(o + j); j += 1 }
+      else while (j < n) { val dd = x(j) - qd(o + j); acc += dd * dd; j += 1 }
+      bufs(qi).insert(acc, id)
+      qi += 1
+    }
+  }
+
   /** Fused partial-kNN DataFrame (qid, id, score) over a (id, vec)
     * DataFrame — apply `topK` grouped by qid on top for final results.
-    */
-  /** @param decode 0 = the vector column is fp32; 1/2 = f16/bf16 bits
-    *         (array<short>), decoded per element inside the fused loop.
+    *
+    * @param queries non-null vectors, all of one length (checked here, on
+    *         the driver); each row scores min(row length, query length)
+    *         elements
+    * @param decode 0 = the vector column is fp32; 1/2 = f16/bf16 bits
+    *         (array<short>), decoded once per row inside the fused loop.
     */
   def partials(vectors: DataFrame, queries: Seq[(Long, Array[Float])],
                k: Int, ascending: Boolean, innerProduct: Boolean,
                decode: Int = 0): DataFrame = {
+    require(queries.forall(_._2 != null) && queries.map(_._2.length).distinct.size <= 1,
+      "Knn.partials: query vectors must be non-null and of one length")
     val spark = vectors.sparkSession
     install(spark)
     GraftBridge.ofRows(spark,

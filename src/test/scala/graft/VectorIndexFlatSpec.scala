@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.functions.{FloatBits, dotProduct, squaredL2, vectorNormSq}
 import graft.index.{Metric, StorageType, VectorIndexFlat}
@@ -29,6 +29,24 @@ class VectorIndexFlatSpec extends AnyFunSuite {
       .map { case (qid, rows) =>
         qid -> rows.map(r => (r.getLong(2), r.getFloat(3).toDouble))
       }
+
+  private val jobIds = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+  private val jobListener = new org.apache.spark.scheduler.SparkListener {
+    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobIds.add(j.jobId)
+  }
+
+  /** Spark jobs started while `run` runs (the GraphSpec pin listener). */
+  private def jobsOf(run: => Any): Int = {
+    org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jobListener)
+    jobIds.clear()
+    try {
+      run
+      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+      jobIds.size
+    } finally spark.sparkContext.removeSparkListener(jobListener)
+  }
 
   private def checkCase(nv: Int, nq: Int, d: Int, k: Int, ip: Boolean,
                         relTol: Double = 1e-5): Unit = {
@@ -373,22 +391,6 @@ class VectorIndexFlatSpec extends AnyFunSuite {
     // job count is pinned on an index that already has several
     // partitions: add(Seq) is the union materialization alone, add(df)
     // one validation pass more, and an empty add runs nothing.
-    import scala.jdk.CollectionConverters._
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(j.jobId)
-    }
-    def jobsOf(run: => Any): Int = {
-      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      jobs.clear()
-      try {
-        run
-        org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-        jobs.asScala.size
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
     val d = 16
     val vecs = Oracle.genVectors(400, d)
     for (storage <- Seq(StorageType.Float32, StorageType.Float16)) {
@@ -421,31 +423,48 @@ class VectorIndexFlatSpec extends AnyFunSuite {
   test("physical paths agree EXACTLY: fused KnnPartialExec vs declarative cross-join+agg") {
     // the analog of the reference's forced-MPS vs default-path test
     // (tests/test_metal_flat.mm:270-307) — ours is bit-exact because both
-    // paths share the same fp64 loop and total order
+    // paths share the same fp64 loop and total order. Every vector is
+    // stored twice, so ties exercise the (dist, id) order; the batch
+    // sizes cover the fused kernel's 4-query blocks, their remainders and
+    // a batch over 1024.
     val d = 64
-    val idx = VectorIndexFlat(spark, d, Metric.L2)
-    idx.add(Oracle.genVectors(300, d).toSeq)
-    val qs = Oracle.queriesDf(spark, Oracle.genVectors(7, d, seed = 4242))
-    val fused = idx.search(qs, 5).orderBy("qid", "rank").collect()
-    val declarative = idx.search(qs, 5, forceDeclarative = true)
-      .orderBy("qid", "rank").collect()
-    assert(fused === declarative)
-    val ip = VectorIndexFlat(spark, d, Metric.InnerProduct)
-    ip.add(Oracle.genVectors(300, d, seed = 9).toSeq)
-    assert(ip.search(qs, 5).orderBy("qid", "rank").collect() ===
-      ip.search(qs, 5, forceDeclarative = true).orderBy("qid", "rank").collect())
+    val half = Oracle.genVectors(150, d)
+    val vecs = (half ++ half).toSeq
+    val allQs = Oracle.genVectors(1100, d, seed = 4242)
+    for ((storage, metric) <- Seq(StorageType.Float32 -> Metric.L2,
+           StorageType.Float32 -> Metric.InnerProduct,
+           StorageType.Float16 -> Metric.InnerProduct,
+           StorageType.BFloat16 -> Metric.L2)) {
+      val idx = VectorIndexFlat(spark, d, metric, storage)
+      idx.add(vecs)
+      for (nq <- Seq(1, 3, 4, 5, 1100)) {
+        val qs = Oracle.queriesDf(spark, allQs.take(nq))
+        val fusedRes = idx.search(qs, 5)
+        val fused = fusedRes.orderBy("qid", "rank").collect()
+        assert(fusedRes.queryExecution.executedPlan.toString.contains("KnnPartial"),
+          s"$storage $metric nq=$nq not fused")
+        val declarative = idx.search(qs, 5, forceDeclarative = true)
+          .orderBy("qid", "rank").collect()
+        assert(fused.length === nq * 5)
+        assert(fused === declarative, s"$storage $metric nq=$nq")
+      }
+      idx.reset()
+    }
   }
 
   test("cost-model gate: fused vs declarative chosen per (nq, ntotal, k) regime") {
     import graft.index.VectorIndexFlat.useFusedPath
     // serving regime: small batch over a big index → fused
-    assert(useFusedPath(nq = 8, nv = 1000000L, k = 10))
-    // huge query batch → declarative (collect/broadcast bound)
-    assert(!useFusedPath(nq = 2000, nv = 1000000L, k = 10))
+    assert(useFusedPath(nq = 8, nv = 1000000L, k = 10, d = 128))
+    // a large batch within the budget → fused
+    assert(useFusedPath(nq = 2000, nv = 1000000L, k = 10, d = 128))
+    // huge query batch: 40,000 × 128 = 5.1M floats, over the budget →
+    // declarative (collect/broadcast bound)
+    assert(!useFusedPath(nq = 40000, nv = 1000000L, k = 10, d = 128))
     // per-partition top-k state beyond budget → declarative
-    assert(!useFusedPath(nq = 1024, nv = 1000000L, k = 8192))
+    assert(!useFusedPath(nq = 1024, nv = 1000000L, k = 8192, d = 128))
     // tiny index: pre-selection cannot drop anything → declarative
-    assert(!useFusedPath(nq = 8, nv = 30L, k = 10))
+    assert(!useFusedPath(nq = 8, nv = 30L, k = 10, d = 128))
     // the physical plans actually chosen match the model
     val d = 16
     val qs = Oracle.queriesDf(spark, Oracle.genVectors(2, d, seed = 5))
@@ -463,6 +482,56 @@ class VectorIndexFlatSpec extends AnyFunSuite {
     assert(tiny.search(qs, 5).orderBy("qid", "rank").collect() ===
       tiny.search(qs, 5, forceDeclarative = true).orderBy("qid", "rank").collect())
     big.reset(); tiny.reset()
+  }
+
+  test("bad query vectors fail closed: both search paths and searchPoint throw, index unchanged") {
+    val d = 8
+    val idx = VectorIndexFlat(spark, d, Metric.L2)
+    idx.add(Oracle.genVectors(50, d).toSeq)
+    val good = Oracle.genVectors(3, d, seed = 4242)
+    val goodQs = Oracle.queriesDf(spark, good)
+    val before = idx.search(goodQs, 5).orderBy("qid", "rank").collect()
+    val schema = StructType(Seq(StructField("qid", LongType), StructField("qvec", ArrayType(FloatType))))
+    def frame(qs: Seq[Array[Float]]) = spark.createDataFrame(java.util.Arrays.asList(
+      qs.zipWithIndex.map { case (q, i) => Row(i.toLong, q) }: _*), schema)
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    for (bad <- Seq(Array.fill(d + 1)(0f), Array.fill(d - 1)(0f), null)) {
+      val qs = frame(good.toSeq :+ bad)
+      // the probe already holds the rows: refused on the driver
+      intercept[IllegalArgumentException] { idx.search(qs, 5) }
+      // the declarative plan probes nothing: its scoring projection raises
+      val e = intercept[Exception] { idx.search(qs, 5, forceDeclarative = true).collect() }
+      assert(messages(e).contains(s"query vectors must have dimension $d"), messages(e))
+      intercept[IllegalArgumentException] { idx.searchPoint(bad, 5) }
+    }
+    assert(idx.ntotal === 50)
+    assert(idx.search(goodQs, 5).orderBy("qid", "rank").collect() === before)
+    assert(idx.search(goodQs, 5, forceDeclarative = true).orderBy("qid", "rank").collect() === before)
+    idx.reset()
+  }
+
+  test("batch search: nq = 1100 is fused and runs as many Spark jobs as nq = 16") {
+    val d = 16
+    val idx = VectorIndexFlat(spark, d, Metric.L2)
+    val vecs = Oracle.genVectors(400, d)
+    (0 until 4).foreach(b => idx.add(vecs.slice(b * 100, (b + 1) * 100).toSeq))
+    assert(idx.vectors.rdd.getNumPartitions >= 4)
+    val allQs = Oracle.genVectors(1100, d, seed = 4242)
+    def searchJobs(nq: Int): (Int, String) = {
+      var plan = ""
+      val jobs = jobsOf {
+        val res = idx.search(Oracle.queriesDf(spark, allQs.take(nq)), 10)
+        assert(res.collect().length === nq * 10)
+        plan = res.queryExecution.executedPlan.toString
+      }
+      (jobs, plan)
+    }
+    val (small, smallPlan) = searchJobs(16)
+    val (large, largePlan) = searchJobs(1100)
+    assert(smallPlan.contains("KnnPartial") && largePlan.contains("KnnPartial"), largePlan)
+    assert(large === small, s"nq=1100 ran $large jobs, nq=16 ran $small")
+    idx.reset()
   }
 
   test("searchPoint ≡ search with one query; sentinel padding; empty index") {
