@@ -68,12 +68,24 @@ final class SearchToken private[index] (fut: Future[Array[Row]]) {
   *   - L2 distances are squared (no sqrt).
   *
   * Physical shape (designed for the 100 TB side being `vectors`):
-  * queries are broadcast; each vector partition computes distances and a
-  * k-bounded partial top-k map-side (ObjectHashAggregate); only k-row
-  * buffers shuffle by qid. This is the same shape as the reference's fused
-  * distance+top-k kernel (`shaders/fused_l2_topk.metal` — partial
-  * selection per chunk, then merge) and never materializes the nq×nv
-  * distance matrix.
+  *   - Storage is a list of sealed segments, oldest first. Each is a
+  *     cached frame with its id range, row count and partition count.
+  *     An `add` seals only its own batch, so an append costs O(batch)
+  *     and never re-caches old rows. When the newest
+  *     [[VectorIndexFlat.mergeWidth]] segments are within
+  *     [[VectorIndexFlat.mergeRatio]]× of each other in rows, one job
+  *     merges them from their cached blocks (log-structured: O(log n)
+  *     segments, each row copied O(log n) times).
+  *   - `vectors` is the union of the segment frames. Every scan (both
+  *     search paths, `searchPoint`, the `pointSearcher` pack) reads it
+  *     coalesced to at most `defaultParallelism` partitions, so a scan is
+  *     one wave of tasks however many segments there are; `reconstruct`
+  *     scans only the segments whose id range holds the key.
+  *   - Queries are broadcast; each vector partition computes distances and
+  *     a k-bounded partial top-k map-side; only k-row buffers shuffle by
+  *     qid. This is the same shape as the reference's fused distance+top-k
+  *     kernel (`shaders/fused_l2_topk.metal` — partial selection per chunk,
+  *     then merge) and never materializes the nq×nv distance matrix.
   *
   * Ordering is the deterministic total order (dist, id) — see SURVEY.md §5
   * for why the reference's tie order is not reproducible.
@@ -86,19 +98,28 @@ final class VectorIndexFlat private (
 
   import VectorIndexFlat._
 
-  private var data: DataFrame = emptyData(spark, storage)
+  private var segments = Vector.empty[Segment]
   private var cachedNtotal: Long = 0L
+  // the union of the segment frames, and the same union narrowed to one
+  // wave for scans; both rebuilt when `segments` changes
+  private var view: DataFrame = emptyData(spark, storage)
+  private var scan: DataFrame = view
 
   def ntotal: Long = cachedNtotal
 
-  /** The backing DataFrame: (id, vec | vech, norm). */
-  def vectors: DataFrame = data
+  /** The backing DataFrame: (id, vec | vech, norm), the union of the
+    * sealed segments.
+    */
+  def vectors: DataFrame = view
+
+  private[graft] def segmentCount: Int = segments.length
 
   /** Append vectors in insertion order; ids are assigned 0-based
     * contiguously (ref `add`, `mm:185-311`). Norms are always computed
     * from the fp32 input even for reduced-precision storage (`mm:258-268`).
     * The dimension check runs on the driver, so the append is one Spark
-    * job; an empty append runs none.
+    * job over the batch alone (two when it triggers a merge); an empty
+    * append runs none.
     */
   def add(vecs: Seq[Array[Float]]): this.type = {
     require(vecs.forall(v => v != null && v.length == d),
@@ -118,8 +139,8 @@ final class VectorIndexFlat private (
   def add(df: DataFrame): this.type = {
     // Two jobs, and the input is computed once: one pass over the cached
     // source counts each partition's rows and its null or wrong-dimension
-    // vectors, bad input is rejected before the index changes, and the
-    // union materialization then reads the cached blocks, numbering each
+    // vectors, bad input is rejected before the index changes, and sealing
+    // the new segment then reads the cached blocks, numbering each
     // partition's rows from its offset.
     val src = df.select(col("vec")).rdd
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -146,19 +167,68 @@ final class VectorIndexFlat private (
     } finally src.unpersist(blocking = false)
   }
 
-  /** Callers have validated `raw`. One job: `toRdd.count()` builds the
-    * cached union (the old index's cached blocks plus the new rows) in
-    * one pass; a `count()` aggregate would add two AQE jobs, a map job
-    * that scans every partition again and a result job.
+  /** Callers have validated `raw`. Seals the batch alone as a new
+    * segment (one job, one task per batch partition; old rows are never
+    * re-cached), then merges while the merge rule holds (one more job per
+    * merge).
     */
   private def appendDf(raw: DataFrame, n: Long): this.type = {
-    val old = data
-    data = old.unionByName(prepare(raw)).persist(StorageLevel.MEMORY_AND_DISK)
-    data.queryExecution.toRdd.count() // materialize before dropping the old lineage
-    old.unpersist()
+    segments :+= seal(prepare(raw), cachedNtotal, cachedNtotal + n - 1, n)
     cachedNtotal += n
+    compact()
     this
   }
+
+  /** Persist and materialize `df` as a segment in one job:
+    * `toRdd.count()` builds the cached relation in one pass; a `count()`
+    * aggregate would add two AQE jobs, a map job that scans every
+    * partition again and a result job.
+    */
+  private def seal(df: DataFrame, lo: Long, hi: Long, rows: Long): Segment = {
+    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val rdd = cached.queryExecution.toRdd
+    rdd.count()
+    Segment(cached, lo, hi, rows, rdd.getNumPartitions)
+  }
+
+  /** Log-structured merge: while the newest `mergeWidth` segments are
+    * within `mergeRatio`× of each other in rows, merge them into one. The
+    * merge reads their cached blocks and runs one job, then drops them. A
+    * merged segment holds at least twice the rows of any of its inputs, so
+    * a row is copied O(log n) times.
+    */
+  private def compact(): Unit = {
+    def due = segments.length >= mergeWidth && {
+      val rows = segments.takeRight(mergeWidth).map(_.rows)
+      rows.max <= mergeRatio * rows.min
+    }
+    while (due) {
+      val (keep, run) = segments.splitAt(segments.length - mergeWidth)
+      val width = math.min(run.map(_.parts).sum, cores)
+      // `coalesce` gives the merged plan a non-Union root. `Dataset.union`
+      // flattens a Union child into the enclosing union, so with a Union
+      // root the cache manager would never match the merged relation
+      // inside `vectors`, and every scan would recompute from the source.
+      val merged = seal(run.map(_.df).reduce(_ union _).coalesce(width),
+        run.map(_.lo).min, run.map(_.hi).max, run.map(_.rows).sum)
+      run.foreach(_.df.unpersist())
+      segments = keep :+ merged
+    }
+    rebuildView()
+  }
+
+  private def rebuildView(): Unit = {
+    view = segments.map(_.df).reduceOption(_ union _).getOrElse(emptyData(spark, storage))
+    scan = narrow(view, segments)
+  }
+
+  private def cores: Int = spark.sparkContext.defaultParallelism
+
+  /** `df` (the union of `segs`) read in at most `defaultParallelism`
+    * partitions: one wave of tasks.
+    */
+  private def narrow(df: DataFrame, segs: Seq[Segment]): DataFrame =
+    if (segs.map(_.parts).sum > cores) df.coalesce(cores) else df
 
   /** norm from fp32, then (for reduced precision) quantize and DROP fp32. */
   private def prepare(raw: DataFrame): DataFrame = storage match {
@@ -191,7 +261,7 @@ final class VectorIndexFlat private (
   }
 
   /** fp32 view of the stored vectors (dequantized when 16-bit). */
-  private def decoded: DataFrame = storage match {
+  private def decode(data: DataFrame): DataFrame = storage match {
     case StorageType.Float32  => data
     case StorageType.Float16  =>
       data.select(col("id"), dequantizeF16(col("vech")).as("vec"), col("norm"))
@@ -209,17 +279,24 @@ final class VectorIndexFlat private (
 
   /** Drop everything (ref `reset`, `mm:492-506`). */
   def reset(): this.type = {
-    data.unpersist()
-    data = emptyData(spark, storage)
+    segments.foreach(_.df.unpersist())
+    segments = Vector.empty
     cachedNtotal = 0L
+    rebuildView()
     this
   }
 
   /** Point lookup + dequantize (ref `reconstruct`, `mm:508-527`).
-    * Bit-exact for fp32 storage.
+    * Bit-exact for fp32 storage. Scans only the segments whose id range
+    * holds `key`, in one job of at most `defaultParallelism` tasks; a key
+    * outside every range throws without running a job.
     */
   def reconstruct(key: Long): Array[Float] = {
-    val rows = decoded.filter(col("id") === key).select("vec").collect()
+    val hit = segments.filter(s => s.lo <= key && key <= s.hi)
+    val rows =
+      if (hit.isEmpty) Array.empty[Row]
+      else decode(narrow(hit.map(_.df).reduce(_ union _), hit))
+        .filter(col("id") === key).select("vec").collect()
     require(rows.nonEmpty, s"reconstruct: id $key not present (ntotal=$cachedNtotal)")
     rows.head.getSeq[Float](0).toArray
   }
@@ -286,7 +363,7 @@ final class VectorIndexFlat private (
         // under ANSI `size(null)` is null, so a null qvec is tested apart
         val checked = when(col("qvec").isNull || size(col("qvec")) =!= d,
           raise_error(lit(s"query vectors must have dimension $d"))).otherwise(dist)
-        decoded.crossJoin(broadcast(q))
+        decode(scan).crossJoin(broadcast(q))
           .select(col("qid"), col("id"), checked.as("score"))
       }
     scored
@@ -316,6 +393,7 @@ final class VectorIndexFlat private (
     // array (ref simdgroup_gemm.metal f16/bf16 tiles) — the scan moves
     // half the bytes and no fp32 array is allocated per row, unlike the
     // declarative path's dequantize projection
+    val data = scan
     val (src, dec) = storage match {
       case StorageType.Float32  => (data.select(col("id"), col("vec")), 0)
       case StorageType.Float16  => (data.select(col("id"), col("vech")), 1)
@@ -324,7 +402,7 @@ final class VectorIndexFlat private (
       // projection (the scale is per-row, so the in-register decode the
       // 16-bit formats use doesn't apply without widening KnnPartialExec)
       case StorageType.Int8 | StorageType.Int4 | StorageType.Fp8 =>
-        (decoded.select(col("id"), col("vec")), 0)
+        (decode(data).select(col("id"), col("vec")), 0)
     }
     graft.plans.Knn.partials(src, qData, k,
       ascending = metric.ascending,
@@ -390,6 +468,7 @@ final class VectorIndexFlat private (
   def pointSearcher(k: Int): PointSearcher = {
     require(k > 0, s"k must be > 0, got $k")
     val dim = d
+    val data = scan // the snapshot's source, also for re-prepares
     val build: () => org.apache.spark.rdd.RDD[(Array[Long], Array[Float], Array[Short])] =
       storage match {
         case StorageType.Float32 | StorageType.Int8 | StorageType.Int4 |
@@ -397,7 +476,7 @@ final class VectorIndexFlat private (
           // SQ8/SQ4 pack the decoded fp32 (per-row scales rule out a
           // shared in-loop decode table; the snapshot is still 1× fp32,
           // and the stored column stays 4×/8× smaller)
-          (if (storage == StorageType.Float32) data else decoded)
+          (if (storage == StorageType.Float32) data else decode(data))
             .select(col("id"), col("vec")).rdd.mapPartitions { it =>
             val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
             val flat = scala.collection.mutable.ArrayBuilder.make[Float]
@@ -446,7 +525,7 @@ final class VectorIndexFlat private (
 
   /** Sink boundary — the analog of `index_metal_to_cpu` + persistence. */
   def toParquet(path: String): Unit =
-    decoded.write.mode("overwrite").parquet(path)
+    decode(view).write.mode("overwrite").parquet(path)
 }
 
 /** Sealed serving snapshot from [[VectorIndexFlat.pointSearcher]]: one
@@ -515,7 +594,7 @@ final class PointSearcher private[index] (
   }
 
   private def run(qvec: Array[Float]): Array[(Long, Double)] = {
-    require(qvec.length == d, s"query must have dimension $d")
+    require(qvec != null && qvec.length == d, s"query must have dimension $d")
     val kk = k; val asc = ascending; val ip = innerProduct; val dim = d
     val bf = bfloat
     val q = qvec // task-closure copy: tiny, cheaper than a broadcast round
@@ -602,6 +681,17 @@ object VectorIndexFlat {
       nq.toLong * d <= maxFusedStateRows &&
       nv >= minFusedNtotalFactor * k
 
+  /** The merge rule: the newest `mergeWidth` segments merge into one
+    * when their row counts are within `mergeRatio`× of each other.
+    */
+  val mergeWidth = 4
+  val mergeRatio = 2L
+
+  /** A sealed segment: a cached frame of `rows` prepared rows in `parts`
+    * partitions, whose ids lie in [`lo`, `hi`].
+    */
+  private final case class Segment(df: DataFrame, lo: Long, hi: Long, rows: Long, parts: Int)
+
   private val rawSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("vec", ArrayType(FloatType, containsNull = false), nullable = false)))
@@ -644,14 +734,24 @@ object VectorIndexFlat {
     val idx = new VectorIndexFlat(spark, d, metric, storage)
     val raw = df.select(col(idCol).cast(LongType).as("id"),
       col(vecCol).as("vec"))
-    // under ANSI `size(null)` is null, so a null vector is counted apart
+    // under ANSI `size(null)` is null, so a null vector is counted apart;
+    // the id range rides on the same aggregate
     val counts = raw.agg(count(lit(1)),
-      sum(when(col("vec").isNull || size(col("vec")) =!= d, 1).otherwise(0))).head
+      sum(when(col("vec").isNull || size(col("vec")) =!= d, 1).otherwise(0)),
+      min(col("id")), max(col("id"))).head
     val n = counts.getLong(0)
     val badDims = if (counts.isNullAt(1)) 0L else counts.getLong(1) // null sum = empty df
     require(badDims == 0L, s"all vectors must have dimension $d")
-    idx.data = idx.prepare(raw).persist(StorageLevel.MEMORY_AND_DISK)
-    idx.cachedNtotal = n
+    if (n > 0) {
+      // all ids null: an empty range, no key routes here
+      val (lo, hi) = if (counts.isNullAt(2)) (0L, -1L) else (counts.getLong(2), counts.getLong(3))
+      // one segment, cached on first use
+      val cached = idx.prepare(raw).persist(StorageLevel.MEMORY_AND_DISK)
+      idx.segments = Vector(Segment(cached, lo, hi, n,
+        cached.queryExecution.toRdd.getNumPartitions))
+      idx.cachedNtotal = n
+      idx.rebuildView()
+    }
     idx
   }
 

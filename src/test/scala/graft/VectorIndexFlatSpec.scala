@@ -31,22 +31,29 @@ class VectorIndexFlatSpec extends AnyFunSuite {
       }
 
   private val jobIds = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+  private val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
   private val jobListener = new org.apache.spark.scheduler.SparkListener {
     override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
       jobIds.add(j.jobId)
+    override def onStageSubmitted(s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+      stageTasks.add(s.stageInfo.numTasks)
   }
 
-  /** Spark jobs started while `run` runs (the GraphSpec pin listener). */
-  private def jobsOf(run: => Any): Int = {
+  /** Spark jobs started while `run` runs (the GraphSpec pin listener),
+    * and the task count of each stage that ran.
+    */
+  private def traceOf(run: => Any): (Int, Seq[Int]) = {
     org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
     spark.sparkContext.addSparkListener(jobListener)
-    jobIds.clear()
+    jobIds.clear(); stageTasks.clear()
     try {
       run
       org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-      jobIds.size
+      (jobIds.size, stageTasks.toArray.toSeq.map(_.asInstanceOf[Int]))
     } finally spark.sparkContext.removeSparkListener(jobListener)
   }
+
+  private def jobsOf(run: => Any): Int = traceOf(run)._1
 
   private def checkCase(nv: Int, nq: Int, d: Int, k: Int, ip: Boolean,
                         relTol: Double = 1e-5): Unit = {
@@ -504,6 +511,9 @@ class VectorIndexFlatSpec extends AnyFunSuite {
       val e = intercept[Exception] { idx.search(qs, 5, forceDeclarative = true).collect() }
       assert(messages(e).contains(s"query vectors must have dimension $d"), messages(e))
       intercept[IllegalArgumentException] { idx.searchPoint(bad, 5) }
+      val searcher = idx.pointSearcher(5)
+      try intercept[IllegalArgumentException] { searcher.search(bad) }
+      finally searcher.close()
     }
     assert(idx.ntotal === 50)
     assert(idx.search(goodQs, 5).orderBy("qid", "rank").collect() === before)
@@ -532,6 +542,73 @@ class VectorIndexFlatSpec extends AnyFunSuite {
     assert(smallPlan.contains("KnnPartial") && largePlan.contains("KnnPartial"), largePlan)
     assert(large === small, s"nq=1100 ran $large jobs, nq=16 ran $small")
     idx.reset()
+  }
+
+  test("100 adds: O(log n) segments, every scan hits the cache in one wave, results exact") {
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val d = 8
+    val vecs = Oracle.genVectors(1000, d)
+    val qs = Oracle.genVectors(5, d, seed = 4242)
+    val cores = spark.sparkContext.defaultParallelism
+    val idx = VectorIndexFlat(spark, d, Metric.L2)
+    (0 until 100).foreach(b => idx.add(vecs.slice(b * 10, (b + 1) * 10).toSeq))
+    assert(idx.ntotal === 1000)
+    assert(idx.segmentCount <= 13, s"${idx.segmentCount} segments")
+    val want = Oracle.bruteForceKnn(vecs, qs, 7, innerProduct = false)
+    for (forceDeclarative <- Seq(false, true)) {
+      val res = idx.search(Oracle.queriesDf(spark, qs), 7, forceDeclarative)
+      val (_, tasks) = traceOf {
+        val got = res.collect().groupBy(_.getLong(0))
+        for (q <- qs.indices) assert(got(q.toLong).sortBy(_.getInt(1)).map(_.getLong(2)).toSeq ===
+          want(q).map(_._1).toSeq, s"qid $q")
+      }
+      assert(tasks.nonEmpty && tasks.forall(_ <= cores), s"stage tasks $tasks")
+      val plan: SparkPlan = res.queryExecution.executedPlan // the final plan, as run
+      assert(plan.toString.contains("isFinalPlan=true"), plan.toString)
+      val cached = Plans.collect(plan) { case s: InMemoryTableScanExec => s }
+      assert(cached.size === idx.segmentCount, plan.toString)
+      assert(Plans.collect(plan) { case s: RDDScanExec => s }.isEmpty, plan.toString)
+    }
+    val searcher = idx.pointSearcher(7)
+    val (jobs, tasks) = traceOf {
+      qs.indices.foreach(q => assert(searcher.search(qs(q)).map(_._1).toSeq === want(q).map(_._1).toSeq))
+    }
+    assert(jobs === qs.length && tasks.forall(_ <= cores), s"serve stage tasks $tasks")
+    searcher.close()
+    idx.reset()
+  }
+
+  test("reconstruct scans only the segment holding the id: 1 job, one wave; absent ids run none") {
+    val d = 8
+    val vecs = Oracle.genVectors(160, d)
+    val cores = spark.sparkContext.defaultParallelism
+    val idx = VectorIndexFlat(spark, d, Metric.L2)
+    (0 until 6).foreach(b => idx.add(vecs.slice(b * 20, (b + 1) * 20).toSeq))
+    idx.add(vecFrame(vecs.drop(120).toSeq, slices = 2 * cores + 1))
+    assert(idx.segmentCount > 1)
+    for (id <- Seq(0L, 79L, 80L, 119L, 120L, 159L)) {
+      var got: Array[Float] = null
+      val (jobs, tasks) = traceOf { got = idx.reconstruct(id) }
+      assert(got.toSeq === vecs(id.toInt).toSeq, s"id $id")
+      assert(jobs === 1 && tasks.forall(_ <= cores), s"id $id: $jobs jobs, stage tasks $tasks")
+    }
+    for (id <- Seq(-1L, 160L, 10000L)) {
+      val (jobs, _) = traceOf {
+        val e = intercept[IllegalArgumentException] { idx.reconstruct(id) }
+        assert(e.getMessage.contains(s"id $id not present (ntotal=160)"))
+      }
+      assert(jobs === 0, s"absent id $id ran $jobs jobs")
+    }
+    idx.reset()
+    // a source frame's id range comes from its own ids
+    val keyed = Oracle.queriesDf(spark, vecs.take(20)).select((col("qid") + 100).as("id"), col("qvec").as("vec"))
+    val src = VectorIndexFlat.fromDataFrame(spark, keyed, d)
+    assert(src.reconstruct(107L).toSeq === vecs(7).toSeq)
+    assert(jobsOf(intercept[IllegalArgumentException] { src.reconstruct(7L) }) === 0)
+    src.reset()
   }
 
   test("searchPoint ≡ search with one query; sentinel padding; empty index") {
