@@ -100,6 +100,8 @@ object Tables {
     * replaces on single-aggregation queries. Footer record counts are
     * exact for the unfiltered table — callers gate on an UPPER bound of
     * their group sizes, so any pre-aggregation filter only adds slack.
+    * Partition directories are counted too; a table with a data file that
+    * is not `*.parquet` counts as `Long.MaxValue`, which fails every cap.
     */
   private val rowCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
@@ -110,21 +112,35 @@ object Tables {
     rowCountCache.compute(path, (_, old) =>
       if (old != null && old._1 == fp) old
       else {
-        val files: Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-              .filter(k => k.isFile && k.getName.endsWith(".parquet"))
-          else Seq(f)
+        val files = dataFiles(f)
         val conf = new org.apache.hadoop.conf.Configuration()
-        val total = files.map { k =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(k.getAbsolutePath), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
+        // a data file the footer reader cannot count: no bound, so every
+        // gate takes its exact path
+        val total =
+          if (!files.forall(_.getName.endsWith(".parquet"))) Long.MaxValue
+          else files.map { k =>
+            val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(k.getAbsolutePath), conf)
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+            try r.getRecordCount finally r.close()
+          }.sum
         (fp, total)
       })._2
   }
+
+  /** The files Spark's reader takes as a table's data: `f` itself, or
+    * every file below it, recursing into (partition) directories and
+    * skipping hidden names — a leading `.`, or a leading `_` outside a
+    * `col=value` directory name.
+    */
+  private def dataFiles(f: java.io.File): Seq[java.io.File] =
+    if (!f.isDirectory) Seq(f)
+    else Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+      .filterNot { k =>
+        val n = k.getName
+        n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+      }
+      .flatMap(dataFiles)
 
   /** Normalizes `events.ts` to session-TZ TIMESTAMP regardless of the
     * physical parquet type the generator happened to emit. Three cases have

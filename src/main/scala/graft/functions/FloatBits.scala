@@ -94,16 +94,6 @@ object FloatBits {
   def bf16BitsToFloat(s: Short): Float =
     java.lang.Float.intBitsToFloat((s & 0xFFFF) << 16)
 
-  private lazy val bf16Table: Array[Float] =
-    Array.tabulate(65536)(i => java.lang.Float.intBitsToFloat(i << 16))
-
-  /** Full 2¹⁶-entry bits→fp32 decode table for either 16-bit format —
-    * for hot loops that index `table(bits & 0xFFFF)` directly instead of
-    * paying a per-element method call. Shared; do not mutate.
-    */
-  def decodeTable(bfloat: Boolean): Array[Float] =
-    if (bfloat) bf16Table else halfTable
-
   /** fp32 → FP8 E4M3 bits (the OCP 8-bit format used for training-data
     * and activation storage: 1 sign, 4 exponent [bias 7], 3 mantissa;
     * NO infinities — S.1111.111 is NaN, max finite ±448). This is the

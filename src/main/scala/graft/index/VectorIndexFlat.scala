@@ -3,12 +3,15 @@ package graft.index
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions._
+import graft.operators.TopKBuffer
 
 /** Metric of the flat index: squared L2 (min-k) or inner product (max-k).
   * Mirrors `faiss::MetricType` as used by the reference
@@ -77,7 +80,7 @@ final class SearchToken private[index] (fut: Future[Array[Row]]) {
   *     merges them from their cached blocks (log-structured: O(log n)
   *     segments, each row copied O(log n) times).
   *   - `vectors` is the union of the segment frames. Every scan (both
-  *     search paths, `searchPoint`, the `pointSearcher` pack) reads it
+  *     search paths, `searchPoint`, the `pointSearcher` snapshot) reads it
   *     coalesced to at most `defaultParallelism` partitions, so a scan is
   *     one wave of tasks however many segments there are; `reconstruct`
   *     scans only the segments whose id range holds the key.
@@ -388,26 +391,29 @@ final class VectorIndexFlat private (
     fusedPartialsData(qRows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq, k)
 
   private def fusedPartialsData(qData: Seq[(Long, Array[Float])], k: Int): DataFrame = {
-    // reduced-precision storage feeds the 16-bit column STRAIGHT into the
-    // fused loop, which decodes each row once into a reused fp64 scratch
-    // array (ref simdgroup_gemm.metal f16/bf16 tiles) — the scan moves
-    // half the bytes and no fp32 array is allocated per row, unlike the
-    // declarative path's dequantize projection
-    val data = scan
-    val (src, dec) = storage match {
-      case StorageType.Float32  => (data.select(col("id"), col("vec")), 0)
-      case StorageType.Float16  => (data.select(col("id"), col("vech")), 1)
-      case StorageType.BFloat16 => (data.select(col("id"), col("vech")), 2)
-      // SQ8/SQ4 ride the fused loop through the codegen'd dequantize
-      // projection (the scale is per-row, so the in-register decode the
-      // 16-bit formats use doesn't apply without widening KnnPartialExec)
-      case StorageType.Int8 | StorageType.Int4 | StorageType.Fp8 =>
-        (decode(data).select(col("id"), col("vec")), 0)
-    }
+    val (src, dec) = fusedSource
     graft.plans.Knn.partials(src, qData, k,
       ascending = metric.ascending,
       innerProduct = metric == Metric.InnerProduct,
       decode = dec)
+  }
+
+  /** What the fused kernel ([[graft.plans.Knn.scan]]) reads: the (id, vec)
+    * rows of the one-wave scan, and the decode code it reads them with.
+    * Reduced-precision storage feeds the 16-bit column STRAIGHT into the
+    * kernel, which decodes each row once into a reused fp64 scratch array
+    * (ref simdgroup_gemm.metal f16/bf16 tiles) — the scan moves half the
+    * bytes and no fp32 array is allocated per row, unlike the declarative
+    * path's dequantize projection. SQ8/SQ4/fp8 ride the codegen'd
+    * dequantize projection (the scale is per-row, so the kernel's
+    * in-register 16-bit decode doesn't apply).
+    */
+  private def fusedSource: (DataFrame, Int) = storage match {
+    case StorageType.Float32  => (scan.select(col("id"), col("vec")), 0)
+    case StorageType.Float16  => (scan.select(col("id"), col("vech")), 1)
+    case StorageType.BFloat16 => (scan.select(col("id"), col("vech")), 2)
+    case StorageType.Int8 | StorageType.Int4 | StorageType.Fp8 =>
+      (decode(scan).select(col("id"), col("vec")), 0)
   }
 
   /** Serving-style single-query search: ONE job, ONE stage, no shuffle.
@@ -426,87 +432,45 @@ final class VectorIndexFlat private (
   def searchPoint(qvec: Array[Float], k: Int): Array[(Long, Double)] = {
     require(k > 0, s"k must be > 0, got $k")
     require(qvec != null && qvec.length == d, s"query must have dimension $d")
-    val pad = (-1L, metric.sentinel)
-    if (cachedNtotal == 0L) return Array.fill(k)(pad)
+    if (cachedNtotal == 0L) return mergePartials(Iterator.empty, k, metric)
     val rows = fusedPartialsData(Seq((0L, qvec)), k).collect()
-    val buf = new graft.operators.TopKBuffer(k, metric.ascending)
-    rows.foreach(r => buf.insert(r.getDouble(2), r.getLong(1)))
-    val order = buf.sortedIndices
-    val out = order.map(i => (buf.labels(i), buf.scores(i)))
-    out ++ Array.fill(k - out.length)(pad)
+    mergePartials(rows.iterator.map(r => (r.getLong(1), r.getDouble(2))), k, metric)
   }
 
   /** Prepared serving handle — the lowest-latency point-search path.
     *
     * [[searchPoint]] still pays SQL planning + a tiny broadcast per call
     * (~150-250 ms on this box). A prepared searcher does that work ONCE:
-    * the corpus is packed into per-partition primitive arrays (ids + flat
-    * vector data) and cached; each subsequent call is one `runJob` over
-    * the cached RDD with the 1-query vector riding in the task closure —
-    * no planning, no broadcast, no shuffle, no SQL. This is the Spark
-    * analog of the reference's persistent command-queue serving loop
-    * (`src/MetalIndexFlat.mm:441-463` reused per-call buffers).
+    * it snapshots exactly the rows the fused path scans (the
+    * `fusedSource` frame's `InternalRow`s, copied out of the scan, in the
+    * scan's ≤ `defaultParallelism` partitions) in one job; each
+    * subsequent call is one `runJob` of [[graft.plans.Knn.scan]] over the
+    * snapshot with the 1-query vector riding in the task closure — no
+    * planning, no broadcast, no shuffle, no SQL — and the driver merge
+    * `searchPoint` uses. This is the Spark analog of the reference's
+    * persistent command-queue serving loop (`src/MetalIndexFlat.mm:441-463`
+    * reused per-call buffers).
     *
-    * Reduced-precision indexes pack the RAW 16-bit `vech` shorts — half
-    * the snapshot memory of an fp32 decode — and decode in-register via
-    * the 2¹⁶-entry lookup table inside the scan loop, the serving analog
-    * of the f16 GEMM scan path (`shaders/simdgroup_gemm.metal:262-370`).
-    * Decoded values are bit-exact, so results equal the fp32-decoded path.
+    * Reduced-precision indexes snapshot the RAW 16-bit `vech` shorts,
+    * which the kernel decodes in-register, as on the fused scan. Because
+    * both paths run the same kernel over the same rows, results equal
+    * `searchPoint` exactly.
     *
     * The handle reflects the index contents AT PREPARE TIME (like a
     * trained/sealed serving snapshot); re-prepare after `add`/`reset`.
-    * Results are identical to `search` (same fp64 loop, (dist, id) order,
-    * sentinel padding).
     *
     * Durability: the snapshot rides on `localCheckpoint`, which is
     * non-reliable BY DESIGN — if an executor holding cached blocks dies,
     * the truncated lineage cannot recompute them. The searcher detects
-    * that failure and transparently re-prepares from the index's (still
-    * reliable) lineage, so a lost executor costs one re-pack, not a
-    * permanently broken handle.
+    * that failure and transparently re-prepares from the frame it was
+    * prepared from (whose lineage is reliable, even after a merge or
+    * `reset` drops the segments it read), so a lost executor costs one
+    * re-snapshot, not a permanently broken handle.
     */
   def pointSearcher(k: Int): PointSearcher = {
     require(k > 0, s"k must be > 0, got $k")
-    val dim = d
-    val data = scan // the snapshot's source, also for re-prepares
-    val build: () => org.apache.spark.rdd.RDD[(Array[Long], Array[Float], Array[Short])] =
-      storage match {
-        case StorageType.Float32 | StorageType.Int8 | StorageType.Int4 |
-             StorageType.Fp8 => () =>
-          // SQ8/SQ4 pack the decoded fp32 (per-row scales rule out a
-          // shared in-loop decode table; the snapshot is still 1× fp32,
-          // and the stored column stays 4×/8× smaller)
-          (if (storage == StorageType.Float32) data else decode(data))
-            .select(col("id"), col("vec")).rdd.mapPartitions { it =>
-            val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val flat = scala.collection.mutable.ArrayBuilder.make[Float]
-            it.foreach { r =>
-              ids += r.getLong(0)
-              val v = r.getSeq[Float](1)
-              var t = 0
-              while (t < dim && t < v.length) { flat += v(t); t += 1 }
-              while (t < dim) { flat += 0f; t += 1 } // defensive pad
-            }
-            if (ids.isEmpty) Iterator.empty
-            else Iterator.single((ids.toArray, flat.result(), Array.emptyShortArray))
-          }
-        case _ => () =>
-          data.select(col("id"), col("vech")).rdd.mapPartitions { it =>
-            val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val flat = scala.collection.mutable.ArrayBuilder.make[Short]
-            it.foreach { r =>
-              ids += r.getLong(0)
-              val v = r.getSeq[Short](1)
-              var t = 0
-              while (t < dim && t < v.length) { flat += v(t); t += 1 }
-              while (t < dim) { flat += 0.toShort; t += 1 } // defensive pad
-            }
-            if (ids.isEmpty) Iterator.empty
-            else Iterator.single((ids.toArray, Array.emptyFloatArray, flat.result()))
-          }
-      }
-    new PointSearcher(spark, build, storage == StorageType.BFloat16, dim, k,
-      metric.ascending, metric == Metric.InnerProduct, metric.sentinel)
+    val (src, dec) = fusedSource // the snapshot's source, also for re-prepares
+    new PointSearcher(() => src.queryExecution.toRdd.map(_.copy()), dec, d, k, metric)
   }
 
   /** Async search: identical plan on a background thread; results must be
@@ -529,31 +493,29 @@ final class VectorIndexFlat private (
 }
 
 /** Sealed serving snapshot from [[VectorIndexFlat.pointSearcher]]: one
-  * `runJob` per query over pre-packed per-partition primitive arrays
-  * (fp32 floats, or raw 16-bit `vech` shorts decoded in the loop via the
-  * [[graft.functions.FloatBits.decodeTable]] lookup — half the snapshot
-  * memory for reduced-precision indexes). `close()` releases the cached
-  * blocks.
+  * `runJob` of the fused kNN kernel per query over a snapshot of the rows
+  * the fused scan reads. `close()` releases the cached blocks.
   *
   * The snapshot uses `localCheckpoint` (lineage truncated to the cached
   * blocks — ~140 ms/job of task-closure serialization saved). That cache
   * is non-reliable: a lost executor makes its blocks unrecoverable, which
   * Spark surfaces as a "Checkpoint block not found" failure. `search`
-  * catches exactly that and re-prepares the snapshot from the index's
-  * reliable lineage, retrying the query once — long-lived cluster serving
-  * degrades to one re-pack per executor loss instead of failing forever.
+  * catches exactly that and re-prepares the snapshot from the frame it was
+  * read from (reliable lineage), retrying the query once — long-lived
+  * cluster serving degrades to one re-snapshot per executor loss instead
+  * of failing forever.
+  *
+  * @param dec the decode code of the snapshot's vector column
+  *        ([[graft.plans.Knn.scan]])
   */
 final class PointSearcher private[index] (
-    spark: SparkSession,
-    build: () => org.apache.spark.rdd.RDD[(Array[Long], Array[Float], Array[Short])],
-    bfloat: Boolean,
-    d: Int, k: Int, ascending: Boolean, innerProduct: Boolean,
-    sentinel: Double) {
+    build: () => RDD[InternalRow],
+    dec: Int, d: Int, k: Int, metric: Metric) {
 
-  private def prepare(): org.apache.spark.rdd.RDD[(Array[Long], Array[Float], Array[Short])] = {
+  private def prepare(): RDD[InternalRow] = {
     val p = build()
     // localCheckpoint, not plain persist: it TRUNCATES the lineage to the
-    // cached blocks. The packed RDD descends from a SQL plan whose object
+    // cached blocks. The snapshot descends from a SQL plan whose object
     // graph otherwise rides inside EVERY task closure — measured ~140 ms
     // of task-serialization per runJob on this box vs ~20 ms truncated.
     p.localCheckpoint()
@@ -595,49 +557,16 @@ final class PointSearcher private[index] (
 
   private def run(qvec: Array[Float]): Array[(Long, Double)] = {
     require(qvec != null && qvec.length == d, s"query must have dimension $d")
-    val kk = k; val asc = ascending; val ip = innerProduct; val dim = d
-    val bf = bfloat
-    val q = qvec // task-closure copy: tiny, cheaper than a broadcast round
-    val partials: Array[(Array[Long], Array[Double])] =
-      spark.sparkContext.runJob(packed,
-        (it: Iterator[(Array[Long], Array[Float], Array[Short])]) => {
-          val table = graft.functions.FloatBits.decodeTable(bf)
-          val buf = new graft.operators.TopKBuffer(kk, asc)
-          it.foreach { case (ids, flatF, flatS) =>
-            val sixteen = flatS.length > 0
-            var i = 0
-            while (i < ids.length) {
-              val off = i * dim
-              var acc = 0.0
-              var t = 0
-              if (sixteen) {
-                if (ip) while (t < dim) {
-                  acc += table(flatS(off + t) & 0xFFFF).toDouble * q(t).toDouble; t += 1
-                } else while (t < dim) {
-                  val dd = table(flatS(off + t) & 0xFFFF).toDouble - q(t).toDouble
-                  acc += dd * dd; t += 1
-                }
-              } else {
-                if (ip) while (t < dim) { acc += flatF(off + t).toDouble * q(t).toDouble; t += 1 }
-                else while (t < dim) {
-                  val dd = flatF(off + t).toDouble - q(t).toDouble; acc += dd * dd; t += 1
-                }
-              }
-              buf.insert(acc, ids(i))
-              i += 1
-            }
-          }
-          val order = buf.sortedIndices
-          (order.map(buf.labels), order.map(buf.scores))
-        })
-    val merged = new graft.operators.TopKBuffer(k, ascending)
-    partials.foreach { case (ls, ss) =>
-      var i = 0
-      while (i < ls.length) { merged.insert(ss(i), ls(i)); i += 1 }
-    }
-    val order = merged.sortedIndices
-    val out = order.map(i => (merged.labels(i), merged.scores(i)))
-    out ++ Array.fill(k - out.length)((-1L, sentinel))
+    val kk = k; val asc = metric.ascending; val ip = metric == Metric.InnerProduct
+    val dc = dec
+    val q = Array(qvec) // task-closure copy: tiny, cheaper than a broadcast round
+    val rdd = packed
+    val partials = rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+      val b = graft.plans.Knn.scan(it, q, kk, asc, ip, dc)(0)
+      (b.labels.take(b.size), b.scores.take(b.size))
+    })
+    VectorIndexFlat.mergePartials(
+      partials.iterator.flatMap { case (ls, ss) => ls.iterator.zip(ss.iterator) }, k, metric)
   }
 
   def close(): Unit = this.synchronized {
@@ -691,6 +620,18 @@ object VectorIndexFlat {
     * partitions, whose ids lie in [`lo`, `hi`].
     */
   private final case class Segment(df: DataFrame, lo: Long, hi: Long, rows: Long, parts: Int)
+
+  /** The driver merge of per-partition top-k lists of (label, score):
+    * the best k, best-first, sentinel-padded to length k. `searchPoint`
+    * and `PointSearcher` both end in it.
+    */
+  private[index] def mergePartials(partials: Iterator[(Long, Double)], k: Int,
+                                   metric: Metric): Array[(Long, Double)] = {
+    val buf = new TopKBuffer(k, metric.ascending)
+    partials.foreach { case (label, score) => buf.insert(score, label) }
+    val out = buf.sortedIndices.map(i => (buf.labels(i), buf.scores(i)))
+    out ++ Array.fill(k - out.length)((-1L, metric.sentinel))
+  }
 
   private val rawSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),

@@ -18,8 +18,8 @@ import graft.operators.TopKBuffer
   *
   * The logical node carries the (small, broadcastable) query batch as data;
   * the physical operator runs distance + k-bounded selection in one
-  * primitive-loop pass over each vector partition — each row decoded once
-  * to fp64, then scored four queries at a time ([[Knn.scoreRow]]) —
+  * primitive-loop pass over each vector partition ([[Knn.scan]]: each row
+  * decoded once to fp64, then scored four queries at a time) —
   * emitting ≤ nq·k partial rows per partition directly as `InternalRow`s:
   * no per-pair join row, no encoder copy. The regular `TopKAgg` on top
   * performs the final merge (the analog of the fused kernel's SIMD-group-0
@@ -78,36 +78,7 @@ case class KnnPartialExec(
     val dec = decode
     child.execute().mapPartitions({ it =>
       val qs = bc.value
-      val nq = qs.length
-      // one query length for the batch (Knn.partials checks it), so each
-      // row scores the same n = min(row length, qn) elements per query
-      val qn = if (nq == 0) 0 else qs(0)._2.length
-      // the queries widened to fp64 once per partition, query-major
-      val qd = new Array[Double](nq * qn)
-      var q = 0
-      while (q < nq) {
-        val qv = qs(q)._2
-        var j = 0
-        while (j < qn) { qd(q * qn + j) = qv(j).toDouble; j += 1 }
-        q += 1
-      }
-      val x = new Array[Double](qn)
-      val bufs = Array.fill(nq)(new TopKBuffer(kk, asc))
-      it.foreach { row =>
-        val id = row.getLong(0)
-        val vec = row.getArray(1)
-        val n = math.min(vec.numElements(), qn)
-        // each row is decoded once (dec 1 = f16 bits, 2 = bf16 bits, read
-        // straight from the scan's ArrayData) and then scored against
-        // every query
-        var j = 0
-        if (dec == 0) while (j < n) { x(j) = vec.getFloat(j).toDouble; j += 1 }
-        else if (dec == 1)
-          while (j < n) { x(j) = FloatBits.halfBitsToFloat(vec.getShort(j)).toDouble; j += 1 }
-        else
-          while (j < n) { x(j) = FloatBits.bf16BitsToFloat(vec.getShort(j)).toDouble; j += 1 }
-        Knn.scoreRow(x, n, qd, qn, nq, ip, id, bufs)
-      }
+      val bufs = Knn.scan(it, qs.map(_._2), kk, asc, ip, dec)
       // UnsafeRow output: lets this node sit at the ROOT of a plan too
       // (e.g. a collect of the partials for a driver-side merge) — Spark's
       // byte-array collect path casts rows to UnsafeRow
@@ -150,6 +121,49 @@ object Knn {
     }
   }
 
+  /** The fused kNN kernel: one pass over (id, vec) rows that keeps each
+    * query's best k. Every index search path runs it —
+    * [[KnnPartialExec]] per partition of a fused batch `search` or a
+    * `searchPoint`, and `PointSearcher` per partition of its snapshot —
+    * so their scores are bit-identical.
+    *
+    * @param rows (id: long, vec) rows; `vec` is fp32 (`dec` 0) or f16/bf16
+    *        bits (`dec` 1/2, array<short>), decoded once per row into a
+    *        reused fp64 scratch array
+    * @param queries non-null vectors of one length qn; each row scores
+    *        min(row length, qn) elements
+    * @return one buffer per query, in query order
+    */
+  def scan(rows: Iterator[InternalRow], queries: Array[Array[Float]], k: Int,
+           ascending: Boolean, innerProduct: Boolean, dec: Int): Array[TopKBuffer] = {
+    val nq = queries.length
+    val qn = if (nq == 0) 0 else queries(0).length
+    // the queries widened to fp64 once, query-major
+    val qd = new Array[Double](nq * qn)
+    var q = 0
+    while (q < nq) {
+      val qv = queries(q)
+      var j = 0
+      while (j < qn) { qd(q * qn + j) = qv(j).toDouble; j += 1 }
+      q += 1
+    }
+    val x = new Array[Double](qn)
+    val bufs = Array.fill(nq)(new TopKBuffer(k, ascending))
+    rows.foreach { row =>
+      val id = row.getLong(0)
+      val vec = row.getArray(1)
+      val n = math.min(vec.numElements(), qn)
+      var j = 0
+      if (dec == 0) while (j < n) { x(j) = vec.getFloat(j).toDouble; j += 1 }
+      else if (dec == 1)
+        while (j < n) { x(j) = FloatBits.halfBitsToFloat(vec.getShort(j)).toDouble; j += 1 }
+      else
+        while (j < n) { x(j) = FloatBits.bf16BitsToFloat(vec.getShort(j)).toDouble; j += 1 }
+      scoreRow(x, n, qd, qn, nq, innerProduct, id, bufs)
+    }
+    bufs
+  }
+
   /** Scores one decoded row `x(0 until n)` against every query in `qd`
     * (nq queries of qn doubles, query-major) and offers each score to
     * that query's buffer.
@@ -159,12 +173,12 @@ object Knn {
     * per query; a scalar loop takes the remainder. Every accumulator
     * still sums its own query left to right in fp64, and the JVM never
     * contracts `a += d * d` into an FMA, so each score is bit-identical
-    * to the one-query loop of `SquaredL2Distance` / `DotProductFloat`
-    * (the declarative path) and of `PointSearcher`.
+    * to the one-query loop of `SquaredL2Distance` / `DotProductFloat`,
+    * the declarative path's expressions. [[scan]] is its only caller.
     */
-  private[plans] def scoreRow(x: Array[Double], n: Int, qd: Array[Double], qn: Int,
-                              nq: Int, ip: Boolean, id: Long,
-                              bufs: Array[TopKBuffer]): Unit = {
+  private def scoreRow(x: Array[Double], n: Int, qd: Array[Double], qn: Int,
+                       nq: Int, ip: Boolean, id: Long,
+                       bufs: Array[TopKBuffer]): Unit = {
     var qi = 0
     while (qi + 4 <= nq) {
       val o0 = qi * qn; val o1 = o0 + qn; val o2 = o1 + qn; val o3 = o2 + qn

@@ -77,7 +77,7 @@ object BenchShapes {
       }.sorted
       println(f"latency-128d   point ${times(times.size / 2)}%10.3f ms/search (median of 20; " +
         f"p90 ${times((times.size * 9) / 10)}%.3f)")
-      // prepared serving handle: pre-packed corpus, one runJob per query
+      // prepared serving handle: snapshot of the scanned rows, one runJob per query
       val searcher = idx.pointSearcher(sh.k)
       (0 until 3).foreach(_ => searcher.search(q))
       val ptimes = (0 until 20).map { _ =>

@@ -49,7 +49,7 @@ object ServeLatency {
     dist("prepared", () => { searcher.search(q); () })
     searcher.close()
     // reduced-precision serving: raw 16-bit snapshot (half the memory),
-    // in-loop table decode — must be <= the fp32 latency
+    // in-loop decode — must be <= the fp32 latency
     val idx16 = VectorIndexFlat(spark, d, Metric.L2, StorageType.Float16)
     idx16.add((0 until nv).map(_ => vec()))
     val searcher16 = idx16.pointSearcher(k)

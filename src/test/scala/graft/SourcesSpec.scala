@@ -179,4 +179,18 @@ class SourcesSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(path)
     assert(Tables(spark, dir, "t").count() === 3L)
   }
+
+  test("Tables.rowCount counts every row of a partitioned table; a non-parquet data file fails closed") {
+    // the long-split gates compare this count against their caps, so an
+    // undercount would route a too-large table onto the int64 path
+    val dir = Files.createTempDirectory("graft_rowcount").toString
+    val path = s"$dir/t.parquet"
+    spark.range(0, 5).toDF("id").coalesce(1).write.parquet(s"$path/p=1")
+    spark.range(0, 7).toDF("id").coalesce(2).write.parquet(s"$path/p=2")
+    assert(Tables(spark, dir, "t").count() === 12L)
+    assert(Tables.rowCount(dir, "t") === 12L)
+    // a data file the footer reader cannot count: no bound at all
+    Files.write(java.nio.file.Paths.get(s"$path/p=2/extra.csv"), "1\n".getBytes)
+    assert(Tables.rowCount(dir, "t") === Long.MaxValue)
+  }
 }

@@ -141,15 +141,12 @@ class VectorIndexFlatSpec extends AnyFunSuite {
     r7.zip(vecs(7)).foreach { case (r, o) =>
       assert(math.abs(r - o) <= scale7 / 2 + 1e-6, s"err ${math.abs(r - o)} scale $scale7")
     }
-    // prepared serving handle ≡ fp64 point path on the quantized index
+    // prepared serving handle ≡ point path on the quantized index
     val q = qs.head
     val viaPoint = idx.searchPoint(q, 5)
     val searcher = idx.pointSearcher(5)
-    val prepared = searcher.search(q)
-    assert(prepared.map(_._1).toSeq === viaPoint.map(_._1).toSeq)
-    prepared.zip(viaPoint).foreach { case ((_, pd), (_, sd)) =>
-      assert(math.abs(pd - sd) <= 1e-12 * math.max(1.0, math.abs(sd)))
-    }
+    // one kernel over the same rows: exactly equal
+    assert(searcher.search(q) === viaPoint)
     searcher.close()
     idx.reset()
   }
@@ -180,15 +177,12 @@ class VectorIndexFlatSpec extends AnyFunSuite {
     r7.zip(vecs(7)).foreach { case (r, o) =>
       assert(math.abs(r - o) <= scale7 / 2 + 1e-6, s"err ${math.abs(r - o)} scale $scale7")
     }
-    // prepared serving handle ≡ fp64 point path on the quantized index
+    // prepared serving handle ≡ point path on the quantized index
     val q = qs.head
     val viaPoint = idx.searchPoint(q, 5)
     val searcher = idx.pointSearcher(5)
-    val prepared = searcher.search(q)
-    assert(prepared.map(_._1).toSeq === viaPoint.map(_._1).toSeq)
-    prepared.zip(viaPoint).foreach { case ((_, pd), (_, sd)) =>
-      assert(math.abs(pd - sd) <= 1e-12 * math.max(1.0, math.abs(sd)))
-    }
+    // one kernel over the same rows: exactly equal
+    assert(searcher.search(q) === viaPoint)
     searcher.close()
     idx.reset()
   }
@@ -221,11 +215,8 @@ class VectorIndexFlatSpec extends AnyFunSuite {
     val q = qs.head
     val viaPoint = idx.searchPoint(q, 5)
     val searcher = idx.pointSearcher(5)
-    val prepared = searcher.search(q)
-    assert(prepared.map(_._1).toSeq === viaPoint.map(_._1).toSeq)
-    prepared.zip(viaPoint).foreach { case ((_, pd), (_, sd)) =>
-      assert(math.abs(pd - sd) <= 1e-12 * math.max(1.0, math.abs(sd)))
-    }
+    // one kernel over the same rows: exactly equal
+    assert(searcher.search(q) === viaPoint)
     searcher.close()
     idx.reset()
   }
@@ -454,6 +445,16 @@ class VectorIndexFlatSpec extends AnyFunSuite {
           .orderBy("qid", "rank").collect()
         assert(fused.length === nq * 5)
         assert(fused === declarative, s"$storage $metric nq=$nq")
+        if (nq == 1) {
+          // the serving paths run the same kernel: labels equal the fused
+          // rows, and their fp64 scores round to the batch dist
+          val searcher = idx.pointSearcher(5)
+          for (served <- Seq(idx.searchPoint(allQs(0), 5), searcher.search(allQs(0)))) {
+            assert(served.map(_._1).toSeq === fused.map(_.getLong(2)).toSeq, s"$storage $metric labels")
+            assert(served.map(_._2.toFloat).toSeq === fused.map(_.getFloat(3)).toSeq, s"$storage $metric dist")
+          }
+          searcher.close()
+        }
       }
       idx.reset()
     }
@@ -572,11 +573,16 @@ class VectorIndexFlatSpec extends AnyFunSuite {
       assert(cached.size === idx.segmentCount, plan.toString)
       assert(Plans.collect(plan) { case s: RDDScanExec => s }.isEmpty, plan.toString)
     }
-    val searcher = idx.pointSearcher(7)
-    val (jobs, tasks) = traceOf {
-      qs.indices.foreach(q => assert(searcher.search(qs(q)).map(_._1).toSeq === want(q).map(_._1).toSeq))
+    // the snapshot is one job of one wave, and each request one job
+    var searcher: graft.index.PointSearcher = null
+    val (prepJobs, prepTasks) = traceOf { searcher = idx.pointSearcher(7) }
+    assert(prepJobs === 1 && prepTasks.forall(_ <= cores), s"prepare: $prepJobs jobs, stage tasks $prepTasks")
+    for (q <- qs.indices) {
+      val (jobs, tasks) = traceOf {
+        assert(searcher.search(qs(q)).map(_._1).toSeq === want(q).map(_._1).toSeq)
+      }
+      assert(jobs === 1 && tasks.forall(_ <= cores), s"serve: $jobs jobs, stage tasks $tasks")
     }
-    assert(jobs === qs.length && tasks.forall(_ <= cores), s"serve stage tasks $tasks")
     searcher.close()
     idx.reset()
   }
@@ -634,11 +640,7 @@ class VectorIndexFlatSpec extends AnyFunSuite {
     assert(empty.searchPoint(q, 3).forall(p => p._1 == -1L && p._2.isPosInfinity))
     // prepared serving handle returns the same rows as the ad-hoc point path
     val searcher = idx.pointSearcher(7)
-    val prepared = searcher.search(q)
-    assert(prepared.map(_._1).toSeq === point.map(_._1).toSeq)
-    prepared.zip(point).foreach { case ((_, pd), (_, sd)) =>
-      assert(math.abs(pd - sd) <= 1e-12 * math.max(1.0, math.abs(sd)))
-    }
+    assert(searcher.search(q) === point)
     searcher.close()
     idx.reset(); small.reset()
   }
@@ -650,26 +652,50 @@ class VectorIndexFlatSpec extends AnyFunSuite {
     for (storage <- Seq(StorageType.Float16, StorageType.BFloat16)) {
       val idx = VectorIndexFlat(spark, d, Metric.L2, storage)
       idx.add(vecs.toSeq)
-      // searchPoint is the fp64 reference path (batch `search` rounds its
-      // dist column to fp32 on output, so it can't anchor a 1e-12 check)
+      // searchPoint keeps the fp64 scores (batch `search` rounds its dist
+      // column to fp32 on output), so it anchors an exact comparison
       val viaBatch = idx.searchPoint(q, 9)
       val searcher = idx.pointSearcher(9)
-      val prepared = searcher.search(q)
-      assert(prepared.map(_._1).toSeq === viaBatch.map(_._1).toSeq, s"$storage labels")
-      prepared.zip(viaBatch).foreach { case ((_, pd), (_, bd)) =>
-        assert(math.abs(pd - bd) <= 1e-12 * math.max(1.0, math.abs(bd)), s"$storage dist")
-      }
+      assert(searcher.search(q) === viaBatch, s"$storage")
       // simulate executor loss: drop the non-reliable localCheckpoint
       // blocks out from under the handle — search must rebuild the
       // snapshot from the index lineage and still answer correctly
       searcher.packed.unpersist(blocking = true)
       val recovered = searcher.search(q)
-      assert(recovered.map(_._1).toSeq === viaBatch.map(_._1).toSeq, s"$storage recovery")
+      assert(recovered === viaBatch, s"$storage recovery")
       searcher.close()
       // a closed searcher must refuse, not silently re-prepare (which would
       // resurrect cached blocks the caller just released)
       intercept[IllegalStateException] { searcher.search(q) }
       idx.reset()
+    }
+  }
+
+  test("a searcher keeps its prepare-time answer after merges, lost blocks and reset") {
+    // the snapshot is read from 3 segments; the 4th add merges them away
+    // (unpersisting what the snapshot was read from) and holds the query's
+    // true nearest row, which the snapshot must never see
+    val d = 16
+    val vecs = Oracle.genVectors(200, d)
+    val q = vecs(170)
+    for (storage <- Seq(StorageType.Float32, StorageType.Float16)) {
+      val idx = VectorIndexFlat(spark, d, Metric.L2, storage)
+      (0 until 3).foreach(b => idx.add(vecs.slice(b * 50, (b + 1) * 50).toSeq))
+      assert(idx.segmentCount === 3)
+      val searcher = idx.pointSearcher(5)
+      val prepared = searcher.search(q)
+      assert(prepared === idx.searchPoint(q, 5), s"$storage")
+      idx.add(vecs.slice(150, 200).toSeq)
+      assert(idx.segmentCount === 1, s"$storage: the 4th add merges")
+      assert(idx.searchPoint(q, 5).head._1 === 170L, s"$storage")
+      assert(!prepared.exists(_._1 >= 150L), s"$storage")
+      assert(searcher.search(q) === prepared, s"$storage after the merge")
+      searcher.packed.unpersist(blocking = true)
+      assert(searcher.search(q) === prepared, s"$storage after lost blocks")
+      idx.reset()
+      searcher.packed.unpersist(blocking = true)
+      assert(searcher.search(q) === prepared, s"$storage after reset and lost blocks")
+      searcher.close()
     }
   }
 
