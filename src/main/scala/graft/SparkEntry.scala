@@ -1,10371 +1,40 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions._
-import graft.ops.{AnnAdvisor, Assoc, AsofJoin, BloomJoin, Curation, Dedup, Graph, Layout, Lexical, Multimodal, Nsw, Profile, Reconcile, Scan, Similarity, Skyline, TextAnalysis}
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Conventions that make the DuckDB-oracle hash compare deterministic:
-  *  - money-like double sums go through an exact DECIMAL(18,2) cast (sum of
-  *    decimals is order-independent), then back to DOUBLE — both engines
-  *    produce the identical rational, hence identical double bits;
-  *  - free-double sums are rounded after an exact-decimal sum as well;
-  *  - every computed column is aliased identically in Spark and SQL;
-  *  - every query ends in a total ORDER BY;
-  *  - ranks use row_number with explicit (key, tiebreak) ordering, cast to
-  *    BIGINT to match DuckDB's row_number type.
+/** The driver contract (SURVEY.md §7): the flagship `entry`, and every
+  * declared query with its DuckDB oracle, both derived from one registry
+  * of [[graft.queries.QuerySpec]]s kept by family under `graft.queries`.
   */
 object SparkEntry {
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-
-  /** Child session with a smaller AQE advisory partition size, for the
-    * dedup-blocking operators whose post-shuffle stages are CPU-DENSE
-    * per byte (shingle prefix builds, array_intersect verification —
-    * ~100x a plain scan's CPU/byte, the [[graft.ops.Dedup.spread]]
-    * rationale). Under the session default (16m, sized for scan-bound
-    * stages) AQE coalesces their MB-scale exchanges to ONE task and the
-    * whole verify runs serially (QueryProfile r19: 0.9-1.4 s single-task
-    * stages inside q_blocking_quality while 31 cores idle). A byte-based
-    * advisory stays scale-adaptive — at corpus scale these exchanges are
-    * far above any advisory and the setting is a no-op; only the
-    * coalescing floor moves. One child per parent session (cached) so
-    * the Tables relation cache keeps hitting.
-    */
-  private val denseSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private def denseSession(s: SparkSession): SparkSession =
-    denseSessions.computeIfAbsent(s, p => {
-      val s2 = p.newSession()
-      s2.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      s2
-    })
-
-  /** Per-JVM scratch dir, recursively deleted by a shutdown hook —
-    * `mode("overwrite")` reuses it across bench reps instead of leaking
-    * one export copy of the slice per invocation.
-    */
-  private def scratchDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      try Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      catch { case _: Throwable => () }
-    }))
-    p.toString
-  }
-  private[graft] lazy val jsonlScratch: String = scratchDir("graft_jsonl")
-  private[graft] lazy val csvScratch: String = scratchDir("graft_csv")
-
-  /** Shared recall-verdict scaffolding for the seeded-ANN queries:
-    * per-query overlap-with-exact counts (the one definition of the
-    * gating semantics — `ann_ivfpq_residual`, `ann_pq_kmeans`, and
-    * `tools/ResidProbe` all count commonality the same way).
-    */
-  private def annOverlap(exact: DataFrame, ann: DataFrame): DataFrame =
-    ann.select(col("qid"), col("label")).join(exact, Seq("qid", "label"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("n_common"))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Brute-force k-NN of the first 4 embedding vectors against the whole
     * embeddings table (squared L2, top-5) — the reference's core query.
     */
   def entry(spark: SparkSession): DataFrame =
-    knnL2(spark, "/root/testdata/sf0.001", nq = 4, k = 5)
+    QueryHelpers.knnL2(spark, "/root/testdata/sf0.001", nq = 4, k = 5)
 
-  /** Shared kNN plan: broadcast queries × vectors → codegen'd distance →
-    * map-side bounded top-k (ObjectHashAggregate) → explode ranks.
-    */
-  private def knn(s: SparkSession, dir: String, nq: Int, k: Int, metric: String): DataFrame = {
-    val e = Tables(s, dir, "embeddings")
-    val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val queries = e.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    Similarity.bruteForceTopK(vectors, queries, k, metric)
-      .select(col("qid"), col("rank"), col("label"),
-        e4Witness(col("score")).as("dist_e4"))
-      .orderBy("qid", "rank")
+  private val registry: Seq[QuerySpec] =
+    RelationalQueries.specs ++ StatisticsQueries.specs ++ VectorQueries.specs ++
+      DedupQueries.specs ++ TextQueries.specs ++ GraphQueries.specs ++
+      MultimodalQueries.specs ++ QualityQueries.specs
+
+  private val duplicated = registry.groupBy(_.name).collect {
+    case (name, specs) if specs.size > 1 => name
   }
-
-  private def knnL2(s: SparkSession, dir: String, nq: Int, k: Int): DataFrame =
-    knn(s, dir, nq, k, "l2")
-
-  /** The corpus-filter verdict per doc (first failing stage of language →
-    * length → lexical quality → span-dedup), shared by `pipeline_filter`
-    * and the end-to-end `pipeline_e2e` composition.
-    */
-  private def filterVerdicts(d: DataFrame): DataFrame = {
-    // r18 (opt): langid + lexical quality are pure PER-ROW functions of
-    // text, so they ride ONE projection of one scan — the old shape
-    // computed them as separate frames and shuffle-joined them back on
-    // doc_id (4 scans + 3 joins for what is 1 scan + 1 join; doc_id is
-    // unique, so the identity joins changed nothing but cost). Only the
-    // span profile is a real aggregation and keeps its join.
-    val base = d
-      .select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("pred_lang"),
-        Dedup.tokens(col("text")).as("w"))
-      .select(col("doc_id"), col("pred_lang"),
-        size(col("w")).cast(LongType).as("n_tokens"),
-        (size(array_distinct(col("w"))).cast(DoubleType) /
-          size(col("w")).cast(DoubleType)).as("ttr"))
-    val spans = Dedup.duplicatedSpans(d, n = 8)
-      .select(col("doc_id"), col("dup_frac_e6"))
-    base.join(spans, "doc_id")
-      .select(col("doc_id"),
-        when(col("pred_lang") === "und", "lang")
-          .when(col("n_tokens") < 16 || col("n_tokens") > 94, "length")
-          .when(col("ttr") < 0.31, "quality")
-          .when(col("dup_frac_e6") > 500000L, "span_dup")
-          .otherwise("kept").as("verdict"))
-  }
+  require(duplicated.isEmpty,
+    s"query names declared more than once: ${duplicated.toSeq.sorted.mkString(", ")}")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- aggregation / scan surface (SURVEY §2.4 built-ins) ----
-
-    "q1_pricing_summary" -> { (s, dir) =>
-      Tables(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(dec(col("l_quantity"))).cast(DoubleType).as("sum_qty"),
-          sum(dec(col("l_extendedprice"))).cast(DoubleType).as("sum_base_price"),
-          sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount"))))
-            .cast(DoubleType).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    },
-
-    "q6_forecast_revenue" -> { (s, dir) =>
-      Tables(s, dir, "lineitem")
-        .filter(col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(sum(dec(col("l_extendedprice")) * dec(col("l_discount")))
-          .cast(DoubleType).as("revenue"),
-          count(lit(1)).as("n_rows"))
-    },
-
-    "q_filter_scan" -> { (s, dir) =>
-      Tables(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 49 && col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"))
-        .orderBy("l_orderkey", "l_partkey", "l_linenumber")
-    },
-
-    // ---- joins (SURVEY §2.3 analog surface) ----
-
-    "q3_top_unshipped_orders" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val o = Tables(s, dir, "orders")
-      val c = Tables(s, dir, "customer")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c.filter(col("c_mktsegment") === "BUILDING")),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"))
-        .agg(sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount"))))
-          .cast(DoubleType).as("revenue"))
-        .orderBy(desc("revenue"), col("l_orderkey"))
-        .limit(10)
-    },
-
-    "q5_nation_revenue" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val o = Tables(s, dir, "orders")
-      val c = Tables(s, dir, "customer")
-      val sup = Tables(s, dir, "supplier")
-      val n = Tables(s, dir, "nation")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .filter(col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount"))))
-          .cast(DoubleType).as("revenue"))
-        .orderBy(desc("revenue"), col("n_name"))
-    },
-
-    // TPC-H Q7 (volume shipping): bilateral trade between two nations by
-    // ship year. Plan shape: the two-year shipdate filter pushes into
-    // the fact scan; supplier and both nation role-copies broadcast
-    // (dims), orders/customer join by shuffle on their keys; ONE
-    // combiner aggregation onto (nation, nation, year) — a bounded
-    // output at any corpus size.
-    "q7_volume_shipping" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val o = Tables(s, dir, "orders")
-      val c = Tables(s, dir, "customer")
-      val sup = Tables(s, dir, "supplier")
-      val n1 = Tables(s, dir, "nation")
-        .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      val n2 = Tables(s, dir, "nation")
-        .select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation"))
-      li.filter(col("l_shipdate").between("1995-01-01", "1996-12-31"))
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n1), col("s_nationkey") === col("s_nk"))
-        .join(broadcast(n2), col("c_nationkey") === col("c_nk"))
-        .filter((col("supp_nation") === "NATION_20" && col("cust_nation") === "NATION_11") ||
-          (col("supp_nation") === "NATION_11" && col("cust_nation") === "NATION_20"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).cast(LongType).as("l_year"))
-        .agg(sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount"))))
-          .cast(DoubleType).as("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    },
-
-    // TPC-H Q8 (national market share): NATION_2's share of ECONOMY-part
-    // revenue sold into ASIA, by order year. The share division is the
-    // only double op and it quantizes through the floor(x·1e6 + 0.5)
-    // BIGINT witness over exact decimal volume sums. Plan shape: the
-    // part/region/nation/supplier dims broadcast, the two fact joins
-    // shuffle on their keys, one bounded (year) aggregation.
-    "q8_market_share" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val o = Tables(s, dir, "orders")
-      val c = Tables(s, dir, "customer")
-      val sup = Tables(s, dir, "supplier")
-      val pEco = Tables(s, dir, "part")
-        .filter(col("p_type") === "ECONOMY").select(col("p_partkey"))
-      val asiaN = Tables(s, dir, "nation")
-        .join(broadcast(Tables(s, dir, "region")
-          .filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey").as("c_nk"))
-      val ns = Tables(s, dir, "nation")
-        .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      val vol = li
-        .join(broadcast(pEco), col("l_partkey") === col("p_partkey"))
-        .join(o.filter(col("o_orderdate").between("1995-01-01", "1996-12-31")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(asiaN), col("c_nationkey") === col("c_nk"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(ns), col("s_nationkey") === col("s_nk"))
-        .select(year(col("o_orderdate")).cast(LongType).as("o_year"),
-          (dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount"))))
-            .as("volume"),
-          col("supp_nation"))
-      val agg = vol.groupBy(col("o_year"))
-        .agg(sum(when(col("supp_nation") === "NATION_2", col("volume"))).as("nv"),
-          sum(col("volume")).as("tv"))
-      agg.select(col("o_year"),
-          coalesce(col("nv"), lit(0).cast(DecimalType(18, 2))).cast(DoubleType).as("nation_vol"),
-          col("tv").cast(DoubleType).as("total_vol"),
-          e6Witness(coalesce(col("nv"), lit(0).cast(DecimalType(18, 2))).cast(DoubleType) /
-            col("tv").cast(DoubleType)).as("share_e6"))
-        .withColumn("mkt_share", col("share_e6").cast(DoubleType) / 1e6)
-        .orderBy("o_year")
-    },
-
-    // ---- semi / anti joins (EXISTS / NOT EXISTS) ----
-
-    "q_semi_join" -> { (s, dir) =>
-      val c = Tables(s, dir, "customer")
-      val bigOrders = Tables(s, dir, "orders").filter(col("o_totalprice") > 300000)
-      c.join(bigOrders, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_mktsegment"))
-        .orderBy("c_custkey")
-    },
-
-    "q_anti_join" -> { (s, dir) =>
-      val p = Tables(s, dir, "part")
-      val li = Tables(s, dir, "lineitem")
-      p.join(li.filter(col("l_quantity") >= 48), col("p_partkey") === col("l_partkey"), "left_anti")
-        .select(col("p_partkey"), col("p_brand"))
-        .orderBy("p_partkey")
-    },
-
-    // ---- window / rank (SURVEY §2.4 missing-in-reference builtins) ----
-
-    "q_window_top_orders" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(desc("o_totalprice"), col("o_orderkey"))
-      Tables(s, dir, "orders")
-        .withColumn("rn", row_number().over(w).cast(LongType))
-        .filter(col("rn") <= 3)
-        .select(col("o_custkey"), col("rn"), col("o_orderkey"), col("o_totalprice"))
-        .orderBy("o_custkey", "rn")
-    },
-
-    // ---- outer join with null handling ----
-
-    "q_outer_join" -> { (s, dir) =>
-      val p = Tables(s, dir, "part")
-      val heavy = Tables(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 48)
-        .groupBy(col("l_partkey")).agg(count(lit(1)).as("cnt"))
-      p.join(heavy, col("p_partkey") === col("l_partkey"), "left")
-        .select(col("p_partkey"), coalesce(col("cnt"), lit(0L)).as("n_heavy"))
-        .orderBy("p_partkey")
-    },
-
-    // ---- ordered string aggregation ----
-
-    "q_string_agg" -> { (s, dir) =>
-      Tables(s, dir, "customer")
-        .filter(col("c_custkey") <= 200)
-        .groupBy(col("c_nationkey").cast(LongType).as("nationkey"))
-        .agg(array_join(array_sort(collect_list(col("c_custkey").cast(StringType))), ",")
-          .as("custkeys"),
-          count(lit(1)).as("n"))
-        .orderBy("nationkey")
-    },
-
-    // ---- INTERSECT set operator ----
-
-    "q_intersect" -> { (s, dir) =>
-      val a = Tables(s, dir, "orders").filter(col("o_totalprice") > 200000)
-        .select(col("o_custkey").as("custkey"))
-      val b = Tables(s, dir, "orders").filter(col("o_orderstatus") === "F")
-        .select(col("o_custkey").as("custkey"))
-      a.intersect(b).orderBy("custkey")
-    },
-
-    // ---- analytic window functions (lead/lag) ----
-
-    "q_lead_lag" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
-      Tables(s, dir, "orders")
-        .filter(col("o_custkey") <= 100)
-        .withColumn("prev_price", lag(col("o_totalprice"), 1).over(w))
-        .withColumn("next_key", lead(col("o_orderkey"), 1).over(w))
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-          col("prev_price"), col("next_key"))
-        .orderBy("o_custkey", "o_orderkey")
-    },
-
-    // ---- distinct / set-ish aggregates ----
-
-    "q_segment_stats" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val c = Tables(s, dir, "customer")
-      o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(
-          countDistinct(col("o_custkey")).as("n_customers"),
-          count(lit(1)).as("n_orders"),
-          sum(dec(col("o_totalprice"))).cast(DoubleType).as("total_price"))
-        .orderBy("c_mktsegment")
-    },
-
-    // ---- cube / exact percentiles / scalar-function surface ----
-
-    "q_cube" -> { (s, dir) =>
-      Tables(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("o_totalprice"))).cast(DoubleType).as("total"))
-        .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
-    },
-
-    // exact per-group order statistics WITHOUT Spark's exact
-    // `percentile` aggregate: that one buffers every distinct value of
-    // a group on one task — l_extendedprice is near-unique, so at
-    // 100 TB the final merge holds the whole group (the hazard
-    // documented on Scan.exactQuantilesByGroup). Routed through the
-    // bounded-memory histogram refinement instead; semantics are
-    // DISCRETE quantiles (ceil(q·n)-th smallest = DuckDB quantile_disc)
-    "q_percentiles" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      // BOTH measures melt into one refinement call on a composite
-      // (returnflag, measure) key — one checkpoint and one set of
-      // histogram rounds instead of two (every open (group, q) range
-      // batches into the same pass), halving the loop's job count.
-      // The price side's p90 rides along unused: extra driver state,
-      // zero extra passes.
-      val melted = li.select(
-          concat(col("l_returnflag"), lit("|qty")).as("gk"),
-          col("l_quantity").cast(DoubleType).as("v"))
-        .unionAll(li.select(
-          concat(col("l_returnflag"), lit("|price")).as("gk"),
-          col("l_extendedprice").cast(DoubleType).as("v")))
-      val qd = Scan.exactQuantilesByGroupDouble(melted, "gk", "v", Seq(0.5, 0.9))
-        .select(substring(col("g"), 1, 1).as("l_returnflag"),
-          substring(col("g"), 3, 5).as("measure"), col("q"), col("value"))
-      qd.groupBy(col("l_returnflag"))
-        .agg(
-          min(when(col("measure") === "qty" && col("q") === 0.5, col("value"))).as("p50_qty"),
-          min(when(col("measure") === "qty" && col("q") === 0.9, col("value"))).as("p90_qty"),
-          e4Witness(min(when(col("measure") === "price" && col("q") === 0.5,
-            col("value"))))
-            .as("p50_price_e4"))
-        .orderBy("l_returnflag")
-    },
-
-    // robust outlier detection via MAD (median absolute deviation,
-    // Hampel 1974): per-group exact discrete median, then the exact
-    // discrete median of |x − med|, then the 3σ-equivalent cut
-    // (1.4826·MAD ≈ σ under normality). Routed through the FUSED
-    // Scan.madByGroup — one stats-collect feeds both refinement rounds
-    // (the second round's bounds derive from the first; r13 verdict's
-    // refinement-wall unification) — then one counting scan against the
-    // broadcast (med, mad) table. No sort, no Percentile buffer. The
-    // robust alternative to q_events_anomaly's mean/stddev z-score:
-    // MAD survives the exact heavy tails that inflate a stddev cut.
-    "q_mad_outliers" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val base = o.select(col("o_orderpriority"),
-        col("o_totalprice").cast(DoubleType).as("v"))
-      val mm = Scan.madByGroup(base, "o_orderpriority", "v")
-        .select(col("g").as("o_orderpriority"), col("med"), col("mad"))
-      base.join(broadcast(mm), "o_orderpriority")
-        .select(col("o_orderpriority"), col("med"), col("mad"),
-          abs(col("v") - col("med")).as("ad"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          e4Witness(min(col("med"))).as("med_e4"),
-          e4Witness(min(col("mad"))).as("mad_e4"),
-          sum(when(col("ad") > lit(3.0) * lit(1.4826) * col("mad"), lit(1L))
-            .otherwise(lit(0L))).as("n_outliers"))
-        .orderBy("o_orderpriority")
-    },
-
-    // WEIGHTED exact quantiles (quantity-weighted price quartiles): the
-    // curation-mix statistic ("median price per UNIT sold", not per
-    // line item) — the weighted generalization of q_percentiles'
-    // bounded-memory refinement: every histogram pass accumulates
-    // weight sums, rank targets are ceil(q·W). Dyadic qs keep q·W
-    // float-exact in both engines. Same no-Percentile, no-single-task
-    // scale contract as the unweighted family.
-    "q_weighted_median" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val qd = Scan.exactQuantilesByGroupDouble(
-        li.select(col("l_returnflag"),
-          col("l_extendedprice").cast(DoubleType).as("v"),
-          col("l_quantity").cast(LongType).as("wt")),
-        "l_returnflag", "v", Seq(0.25, 0.5, 0.75), weightCol = Some("wt"))
-      qd.groupBy(col("g").as("l_returnflag"))
-        .agg(e4Witness(min(when(col("q") === 0.25, col("value")))).as("w_p25_e4"),
-          e4Witness(min(when(col("q") === 0.5, col("value")))).as("w_p50_e4"),
-          e4Witness(min(when(col("q") === 0.75, col("value")))).as("w_p75_e4"))
-        .orderBy("l_returnflag")
-    },
-
-    // winsorized robust stats (Tukey; Dixon 1960): clip o_totalprice at
-    // the exact per-group p05/p95, report clip counts + raw vs
-    // winsorized means. The quantile table is groups-sized and
-    // broadcast back — the corpus scan never shuffles on value; sums
-    // are decimal-quantized so the means are reduction-order-exact
-    // the per-group p05/p95 come from the bounded-memory exact
-    // refinement (DISCRETE quantiles — actual data values), not
-    // Spark's exact `percentile`, whose per-group buffer over the
-    // near-unique o_totalprice domain is the 100 TB cliff
-    "q_winsorize" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val qd = Scan.exactQuantilesByGroupDouble(
-        o.select(col("o_orderpriority"), col("o_totalprice").cast(DoubleType).as("v")),
-        "o_orderpriority", "v", Seq(0.05, 0.95))
-      val q = qd.groupBy(col("g").as("o_orderpriority"))
-        .agg(min(when(col("q") === 0.05, col("value"))).as("p05"),
-          min(when(col("q") === 0.95, col("value"))).as("p95"))
-      o.join(broadcast(q), "o_orderpriority")
-        .select(col("o_orderpriority"), col("o_totalprice"), col("p05"), col("p95"),
-          greatest(least(col("o_totalprice"), col("p95")), col("p05")).as("wp"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          e4Witness(min(col("p05"))).as("p05_e4"),
-          e4Witness(min(col("p95"))).as("p95_e4"),
-          sum(when(col("o_totalprice") < col("p05"), lit(1L)).otherwise(lit(0L))).as("n_low"),
-          sum(when(col("o_totalprice") > col("p95"), lit(1L)).otherwise(lit(0L))).as("n_high"),
-          e4Witness(sum(col("o_totalprice").cast(DecimalType(25, 6))).cast(DoubleType) /
-            count(lit(1))).as("mean_raw_e4"),
-          e4Witness(sum(col("wp").cast(DecimalType(25, 6))).cast(DoubleType) /
-            count(lit(1))).as("mean_wins_e4"))
-        .orderBy("o_orderpriority")
-    },
-
-    "q_scalar_funcs" -> { (s, dir) =>
-      Tables(s, dir, "orders")
-        .filter(col("o_orderkey") <= 500)
-        .select(col("o_orderkey"),
-          upper(col("o_orderpriority")).as("pri_upper"),
-          substring(col("o_orderpriority"), 1, 1).as("pri_code"),
-          concat(col("o_orderstatus"), lit("-"), col("o_orderpriority")).as("tag"),
-          year(col("o_orderdate")).cast(LongType).as("yr"),
-          month(col("o_orderdate")).cast(LongType).as("mo"),
-          dayofmonth(col("o_orderdate")).cast(LongType).as("dom"),
-          length(col("o_orderpriority")).cast(LongType).as("pri_len"))
-        .orderBy("o_orderkey")
-    },
-
-    // anomalous-hour detection: z-score of each hour's event count
-    // against its event type's mean/stddev, from exact integer moments
-    // (n, Σc, Σc² are integers → identical doubles → identical z)
-    "q_events_anomaly" -> { (s, dir) =>
-      val hourly = Tables.events(s, dir)
-        .groupBy(date_trunc("hour", col("ts")).as("h"), col("event_type"))
-        .agg(count(lit(1)).as("c"))
-      val stats = hourly.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
-          sum(col("c") * col("c")).as("scc"))
-      val n = col("n").cast(DoubleType)
-      val mean = col("sc").cast(DoubleType) / n
-      val variance = (col("scc").cast(DoubleType) - col("sc").cast(DoubleType) * col("sc").cast(DoubleType) / n) / n
-      hourly.join(stats, "event_type")
-        .withColumn("z_raw", (col("c").cast(DoubleType) - mean) / sqrt(variance))
-        .filter(abs(col("z_raw")) > 2.0) // filter on the UNROUNDED z, like the oracle
-        .select(col("event_type"),
-          date_format(col("h"), "yyyy-MM-dd HH").as("hour"), col("c"),
-          e4Witness(col("z_raw")).as("z_e4"))
-        .orderBy("event_type", "hour")
-    },
-
-    // time-series densification: fill missing hours per event type with
-    // zero counts (sequence generation + left join — the gap-fill op)
-    "q_events_gapfill" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-        .filter(col("user_id") <= 20)
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-      val hourly = ev.groupBy(col("event_type"), col("h"))
-        .agg(count(lit(1)).as("c"))
-      val spans = ev.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-      val grid = spans.select(col("event_type"),
-        explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      grid.join(hourly, Seq("event_type", "h"), "left")
-        .select(col("event_type"), date_format(col("h"), "yyyy-MM-dd HH").as("hour"),
-          coalesce(col("c"), lit(0L)).as("n"))
-        .orderBy("event_type", "hour")
-    },
-
-    // ---- events: time-bucketed aggregation ----
-
-    "q_events_hourly" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH").as("hour"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(25, 6))).cast(DoubleType).as("sum_value"))
-        .orderBy("hour", "event_type")
-    },
-
-    // the bounded top-k aggregate on a non-vector workload: top-3 spenders
-    // per event type (k-bounded state map-side — no per-group sort)
-    "q_topk_users" -> { (s, dir) =>
-      val spend = Tables.events(s, dir)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(sum(col("value").cast(DecimalType(25, 6))).cast(DoubleType).as("total"))
-      spend.groupBy(col("event_type"))
-        .agg(topK(col("total"), col("user_id"), 3, ascending = false).as("hits"))
-        .select(col("event_type"), posexplode(col("hits")))
-        .select(col("event_type"), (col("pos") + 1).cast(LongType).as("rank"),
-          col("col.label").as("user_id"), col("col.score").as("total"))
-        .orderBy("event_type", "rank")
-    },
-
-    // ---- vector search (SURVEY §2.3/§2.4 core: scored cross join + top-k) ----
-
-    "knn_l2" -> ((s, dir) => knn(s, dir, nq = 8, k = 10, metric = "l2")),
-    "knn_ip" -> ((s, dir) => knn(s, dir, nq = 8, k = 10, metric = "ip")),
-
-    // same result as knn_l2 via the tiled SHUFFLE join — the exact-kNN
-    // formulation for when the query batch is itself too large to
-    // broadcast (both sides 100 TB-scale). Vectors hash-tiled once,
-    // queries replicated per tile, shuffle-hash join, k-bounded partials
-    // per tile. Bit-identical to the broadcast path by the shared
-    // (score, label) total order.
-    "knn_shuffle_tiled" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.shuffleTiledTopK(vectors, queries, k = 10, metric = "l2")
-        .select(col("qid"), col("rank"), col("label"),
-          e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // same result as knn_l2 via the norm-decomposed formulation
-    // ‖q‖²+‖v‖²−2⟨q,v⟩ with norms precomputed per side (the reference's
-    // GEMM path, SURVEY J3/P3: norms once + dot per pair, fused epilogue)
-    "knn_l2_decomposed" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"),
-        vectorNormSq(col("embedding")).as("vnorm"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-          vectorNormSq(col("embedding")).as("qnorm"))
-      Similarity.explodeHits(
-        vectors.crossJoin(broadcast(queries))
-          .select(col("qid"), col("id").as("label"),
-            (col("vnorm") + col("qnorm") - lit(2.0) * dotProduct(col("vec"), col("qv")))
-              .as("score"))
-          .groupBy(col("qid"))
-          .agg(topK(col("score"), col("label"), 10, ascending = true).as("hits")))
-        .select(col("qid"), col("rank"), col("label"),
-          e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // the same kNN through graft's SQL surface (GraftExtensions functions
-    // + spark.sql) — proves a SQL-only user can run the core query
-    "knn_l2_sqlapi" -> { (s, dir) =>
-      GraftExtensions.register(s)
-      Tables(s, dir, "embeddings").createOrReplaceTempView("graft_embeddings")
-      s.sql(
-        """SELECT qid, CAST(pos + 1 AS BIGINT) AS rank, col.label AS label,
-          |       CAST(FLOOR(col.score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-          |FROM (
-          |  SELECT /*+ BROADCAST(q) */ q.vec_id AS qid,
-          |         graft_topk(graft_squared_l2(e.embedding, q.embedding), e.vec_id, 10, true) AS hits
-          |  FROM graft_embeddings e
-          |  CROSS JOIN (SELECT * FROM graft_embeddings WHERE vec_id < 8) q
-          |  GROUP BY q.vec_id
-          |) t LATERAL VIEW posexplode(hits) x AS pos, col
-          |ORDER BY qid, rank""".stripMargin)
-    },
-
-    // point lookup + decode — the reference's `reconstruct` (SURVEY S3)
-    "vec_reconstruct" -> { (s, dir) =>
-      Tables(s, dir, "embeddings")
-        .filter(col("vec_id").isin(3, 7, 11))
-        .select(col("vec_id"), posexplode(col("embedding")))
-        .select(col("vec_id"), (col("pos") + 1).cast(LongType).as("pos"),
-          e4Witness(col("col").cast(DoubleType)).as("val_e4"))
-        .orderBy("vec_id", "pos")
-    },
-
-    // fp16 storage round-trip error profile (SURVEY S7). Oracled: the RNE
-    // quantization is reproduced in DuckDB as exact double step arithmetic
-    // (see oracleSql), and the f32 subtraction below is exact (Sterbenz).
-    // r16: 6-dp e6-floor witness instead of ROUND(double,6) — the max
-    // error is an exact f32 value on both engines, quantized once
-    // through multiply+add+floor (no double is emitted). Overflow-to-
-    // infinity can't occur at |x| ≤ 1 corpus scale (f16 max 65504).
-    "f16_roundtrip" -> { (s, dir) =>
-      Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          dequantizeF16(quantizeF16(col("embedding"))).as("deq"))
-        .select(col("vec_id"),
-          size(col("embedding")).cast(LongType).as("n_dims"),
-          e6Witness(aggregate(
-            zip_with(col("embedding"), col("deq"), (a, b) => abs(a - b)),
-            lit(0.0), (acc, x) => greatest(acc, x.cast(DoubleType)))
-           ).as("max_abs_err_e6"))
-        .orderBy("vec_id")
-    },
-
-    // bf16 storage round-trip error profile (SURVEY S8). Oracled like
-    // f16_roundtrip (8-bit significand, normal range only at this data).
-    "bf16_roundtrip" -> { (s, dir) =>
-      Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          dequantizeBf16(quantizeBf16(col("embedding"))).as("deq"))
-        .select(col("vec_id"),
-          size(col("embedding")).cast(LongType).as("n_dims"),
-          e6Witness(aggregate(
-            zip_with(col("embedding"), col("deq"), (a, b) => abs(a - b)),
-            lit(0.0), (acc, x) => greatest(acc, x.cast(DoubleType)))
-           ).as("max_abs_err_e6"))
-        .orderBy("vec_id")
-    },
-
-    // training-mix reweighting: per-language upsampling factors to hit a
-    // uniform target share across however many languages the corpus holds
-    "q_mix_weights" -> { (s, dir) =>
-      val counts = Tables(s, dir, "documents")
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("n_chars"))
-      val total = counts.agg(sum(col("n_docs")).as("total"),
-        count(lit(1)).as("n_langs"))
-      counts.crossJoin(total)
-        .select(col("lang"), col("n_docs"), col("n_chars"),
-          e6Witness(col("total").cast(DoubleType) /
-            (col("n_langs").cast(DoubleType) * col("n_docs").cast(DoubleType))
-           ).as("upsample_weight_e6"))
-        .orderBy("lang")
-    },
-
-    // MLlib batch index build: bucketed random-projection LSH over the
-    // embedding column, k-NN via the hash-bucket join. The random
-    // projections aren't SQL-reproducible, so the driver-checkable surface
-    // is a per-query RECALL BOUND against exact kNN (the exact side is
-    // itself oracle-verified via knn_l2): each of the 8 queries must keep
-    // ≥ 7 of its true top-10. Measured 9-10/10 at sf0.01 and sf0.1
-    // (seeded, so deterministic); the aggregate ≥ 0.5 recall is
-    // additionally spec-pinned.
-    "ann_lsh_mllib" -> { (s, dir) =>
-      import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-      import org.apache.spark.ml.functions.array_to_vector
-      val e = Tables(s, dir, "embeddings")
-      val feat = e.select(col("vec_id"), array_to_vector(col("embedding")).as("features"))
-      val lsh = new BucketedRandomProjectionLSH()
-        .setBucketLength(2.0).setNumHashTables(3).setSeed(42)
-        .setInputCol("features").setOutputCol("hashes")
-      val model = lsh.fit(feat)
-      val q = feat.filter(col("vec_id") < 8)
-      val ann = Similarity.explodeHits(
-        model.approxSimilarityJoin(q, feat, 20.0, "dist")
-          .select(col("datasetA.vec_id").as("qid"), col("datasetB.vec_id").as("label"),
-            (col("dist") * col("dist")).as("score")) // squared L2, ref semantics
-          .groupBy(col("qid"))
-          .agg(topK(col("score"), col("label"), 10, ascending = true).as("hits")))
-        .select(col("qid"), col("label"))
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      ann.join(exact, Seq("qid", "label"))
-        .groupBy(col("qid")).agg(count(lit(1)).as("n_common"))
-        // right-join the query list: a catastrophic 0-recall query must
-        // surface as a false row, not vanish from the output
-        .join(queries.select(col("qid")), Seq("qid"), "right")
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 7L).as("recall_ok"))
-        .orderBy("qid")
-    },
-
-    "vec_norms" -> { (s, dir) =>
-      Tables(s, dir, "embeddings")
-        .select(col("vec_id"),
-          e4Witness(vectorNormSq(col("embedding"))).as("norm_sq_e4"))
-        .orderBy("vec_id")
-    },
-
-    // ---- dedup: exact (hash-groupBy) ----
-
-    "dedup_exact" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val d = Tables(s, dir, "documents")
-      val w = Window.partitionBy(col("h"))
-      d.select(col("doc_id"), md5(col("text")).as("h"))
-        .withColumn("group_size", count(lit(1)).over(w))
-        .withColumn("keep", col("doc_id") === min(col("doc_id")).over(w))
-        .select(col("doc_id"), col("h"), col("group_size"), col("keep"))
-        .orderBy("doc_id")
-    },
-
-    // ---- text analysis: token counting ----
-
-    "text_tokens" -> { (s, dir) =>
-      Tables(s, dir, "documents")
-        .select(col("doc_id"),
-          size(split(col("text"), " ", -1)).cast(LongType).as("n_tokens"),
-          size(array_distinct(split(col("text"), " ", -1))).cast(LongType).as("n_distinct_tokens"),
-          length(col("text")).cast(LongType).as("n_chars_measured"))
-        .orderBy("doc_id")
-    },
-
-    // PII scrub (the mandatory pre-training redaction pass): the corpus
-    // text is laced with deterministic synthetic PII (email, IPv4,
-    // phone — built from doc_id so both engines construct the identical
-    // string) and redacted via the codegen'd regexp chain. Marker counts
-    // are recomputed from the redacted text, so the oracle pins both the
-    // replacement text and that every planted instance was caught.
-    "text_redact_pii" -> { (s, dir) =>
-      val laced = concat(
-        col("text"),
-        lit(" contact user"), col("doc_id").cast(StringType),
-        lit("@mail.example.org ip 10.0."),
-        (col("doc_id") % 256).cast(StringType), lit(".17 call +1 555-010-"),
-        lpad((col("doc_id") % 10000).cast(StringType), 4, "0"))
-      def markers(c: Column, m: String) =
-        ((length(c) - length(regexp_replace(c, m, ""))) / m.length).cast(LongType)
-      Tables(s, dir, "documents")
-        .filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), graft.ops.TextAnalysis.redactPii(laced).as("red"))
-        .select(col("doc_id"), col("red"),
-          markers(col("red"), "<EMAIL>").as("n_email"),
-          markers(col("red"), "<IP>").as("n_ip"),
-          markers(col("red"), "<PHONE>").as("n_phone"))
-        .orderBy("doc_id")
-    },
-
-    // overlapping token-window chunking (the RAG/pretraining splitter):
-    // 64-token windows at stride 48, per-chunk digest + token count
-    "text_chunks" -> { (s, dir) =>
-      graft.ops.TextAnalysis
-        .chunkDocs(Tables(s, dir, "documents"), window = 64, stride = 48)
-        .orderBy("doc_id", "chunk_id")
-    },
-
-    // ---- rollup / set operators ----
-
-    "q_rollup" -> { (s, dir) =>
-      Tables(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("l_quantity"))).cast(DoubleType).as("sum_qty"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    },
-
-    "q_setop_except" -> { (s, dir) =>
-      val c = Tables(s, dir, "customer").select(col("c_custkey").as("custkey"))
-      val big = Tables(s, dir, "orders")
-        .filter(col("o_totalprice") > 400000)
-        .select(col("o_custkey").as("custkey"))
-      c.except(big).orderBy("custkey")
-    },
-
-    // ---- sessionization (gap-based event-time sessions) ----
-
-    "q_events_sessionize" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      ev.withColumn("prev", lag(col("ts_us"), 1).over(w))
-        .withColumn("new_sess",
-          when(col("prev").isNull || col("ts_us") - col("prev") > 1800L * 1000000L, 1L)
-            .otherwise(0L))
-        .withColumn("session_id", sum(col("new_sess"))
-          .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ts_us")).as("start_us"), max(col("ts_us")).as("end_us"),
-          sum(col("value").cast(DecimalType(25, 6))).cast(DoubleType).as("sum_value"))
-        .orderBy("user_id", "session_id")
-    },
-
-    // Z-order (Morton) clustering value over (user_id, event-time) — the
-    // data-layout operator behind multi-dimensional min/max pruning
-    // (Delta OPTIMIZE ZORDER BY; Orenstein 1984): sorting a 100 TB table
-    // by this value makes range predicates on EITHER dimension prune row
-    // groups, where a single-column sort serves only its own column.
-    // Exact integer shift/mask arithmetic shared with the oracle
-    // (Layout.zorderSqlExpr — the simhashBitSql pattern), so the whole
-    // operator hash-matches; the locality property itself is spec-pinned
-    // (LayoutSpec: an x-slab touches ≤1/4 of z-sorted buckets vs ALL
-    // buckets of a y-sorted layout)
-    "q_zorder_layout" -> { (s, dir) =>
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      ev.select(col("event_id"),
-          Layout.zorder2(
-            pmod(col("user_id"), lit(65536L)),
-            pmod(expr("ts_us div 1000000"), lit(65536L)), 16).as("z"))
-        .orderBy("event_id")
-    },
-
-    // SCD2 state history: compact each user's event-type stream into
-    // validity intervals [valid_from_us, valid_to_us) — the slowly-
-    // changing-dimension type-2 build a feature store derives from an
-    // event log; consecutive same-state events collapse into one interval
-    // and the open (current) interval carries NULL valid_to. Same
-    // bounded-per-user window class as sessionize.
-    "q_scd2_history" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      ev.withColumn("prev_state", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_state").isNull || col("prev_state") =!= col("event_type"))
-        .withColumn("valid_to_us", lead(col("ts_us"), 1).over(w))
-        .select(col("user_id"), col("event_type").as("state"),
-          col("ts_us").as("valid_from_us"), col("valid_to_us"))
-        .orderBy("user_id", "valid_from_us")
-    },
-
-    // ---- range-predicate join (equi key co-locates, range filters) ----
-
-    "q_range_join" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val li = Tables(s, dir, "lineitem")
-      li.join(o, col("l_orderkey") === col("o_orderkey")
-          && col("l_shipdate") >= col("o_orderdate")
-          && col("l_shipdate") < col("o_orderdate") + expr("INTERVAL 30 DAY"))
-        .groupBy(col("o_orderkey"))
-        .agg(count(lit(1)).as("n_shipped_30d"))
-        .orderBy("o_orderkey")
-    },
-
-    // linear multi-touch attribution — every click in the 7 days before
-    // a purchase shares its revenue equally (the marketing-analytics
-    // complement of the as-of family's last-touch): same-user range
-    // join (never a cross product), per-purchase touch count, then
-    // per-click aggregation of the value/k shares
-    "q_attribution_linear" -> { (s, dir) =>
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_eid"), col("user_id"),
-          col("ts_us").as("p_ts"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("c_eid"), col("user_id"),
-          col("ts_us").as("c_ts"))
-      val winUs = 7L * 86400L * 1000000L
-      // touch pairs feed both the per-purchase count and the share agg —
-      // checkpoint so the range join runs once
-      val touches = clicks.join(purchases, Seq("user_id"))
-        .filter(col("c_ts") <= col("p_ts") && col("c_ts") > col("p_ts") - winUs)
-        .localCheckpoint(true)
-      val k = touches.groupBy("p_eid").agg(count(lit(1)).as("k"))
-      touches.join(k, "p_eid")
-        .groupBy(col("c_eid").as("event_id"), col("user_id"))
-        .agg(e6Witness(sum(col("value") / col("k"))).as("attr_revenue_e6"),
-          count(lit(1)).as("n_purchases"))
-        .orderBy("event_id")
-    },
-
-    // ---- as-of join: latest prior click per purchase (union + window,
-    //      one key shuffle, no range cross-product) ----
-
-    "q_asof_join" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_us"), lit(1).as("tag"),
-          col("event_id"), lit(null).cast(LongType).as("click_ts_us"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts_us"), lit(0).as("tag"),
-          lit(null).cast(LongType).as("event_id"), col("ts_us").as("click_ts_us"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("tag"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      purchases.unionByName(clicks)
-        .withColumn("last_click_us", max(col("click_ts_us")).over(w))
-        .filter(col("tag") === 1)
-        .select(col("event_id"), col("user_id"),
-          col("ts_us").as("purchase_ts_us"), col("last_click_us"))
-        .orderBy("event_id")
-    },
-
-    // the skew-safe formulation of the same as-of join: range-bucketed
-    // two-pass (see AsofJoin.asofJoinBucketed) — same oracle as
-    // q_asof_join because the plans are semantically identical; this one
-    // survives a single user_id holding 10⁹ events where the window form
-    // straggles. Bucket = 1 day of event time.
-    "q_asof_join_bucketed" -> { (s, dir) =>
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts_us"), col("ts_us").as("click_ts_us"))
-      AsofJoin.asofJoinBucketed(purchases, clicks, "user_id",
-          "ts_us", "ts_us", Seq("click_ts_us"), bucketWidth = 86400000000L)
-        .select(col("event_id"), col("user_id"),
-          col("ts_us").as("purchase_ts_us"),
-          col("asof_click_ts_us").as("last_click_us"))
-        .orderBy("event_id")
-    },
-
-    // tolerance-bounded as-of join (pandas merge_asof tolerance=...): the
-    // backward match is DISCARDED when staler than 30 minutes — the
-    // feature-store freshness rule (a stale feature is worse than a null
-    // one). Same plan as q_asof_join; the tolerance is a narrow
-    // projection on the carried match timestamp, zero extra shuffles.
-    "q_asof_join_tolerance" -> { (s, dir) =>
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts_us"))
-      val tolUs = 1800L * 1000000L
-      AsofJoin.asofJoin(purchases, clicks, "user_id", "ts_us", "ts_us",
-          Seq("ts_us"))
-        .select(col("event_id"), col("user_id"),
-          col("ts_us").as("purchase_ts_us"),
-          when(col("ts_us") - col("asof_ts_us") <= tolUs, col("asof_ts_us"))
-            .as("fresh_click_us"))
-        .orderBy("event_id")
-    },
-
-    // nearest-direction as-of join (pandas merge_asof direction='nearest',
-    // the sensor/feature-alignment variant): per purchase, the click ts
-    // nearest in event time in EITHER direction, ties to the earlier
-    // click. One union + two cumulative windows (backward max, forward
-    // min) — still a single shuffle on user_id, no self-join; at a
-    // billion events per user this is the same bounded-window shape as
-    // q_asof_join. Same-ts clicks sort before the purchase (tag order) so
-    // they count as the backward candidate with delta 0, which the tie
-    // rule then keeps.
-    "q_asof_join_nearest" -> { (s, dir) =>
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts_us"))
-      AsofJoin.asofJoinNearest(purchases, clicks, "user_id", "ts_us", "ts_us")
-        .select(col("event_id"), col("user_id"),
-          col("ts_us").as("purchase_ts_us"),
-          col("asof_ts").as("nearest_click_us"))
-        .orderBy("event_id")
-    },
-
-    // the skew-safe formulation of the nearest as-of join: symmetric
-    // range-bucketed two-pass (AsofJoin.asofJoinNearestBucketed) — same
-    // oracle as q_asof_join_nearest because the plans are semantically
-    // identical; this one survives a single user_id holding 10⁹ events
-    // (no window keyed on the raw user_id alone). Bucket = 1 day.
-    "q_asof_join_nearest_bucketed" -> { (s, dir) =>
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts_us"))
-      AsofJoin.asofJoinNearestBucketed(purchases, clicks, "user_id",
-          "ts_us", "ts_us", Seq.empty, bucketWidth = 86400000000L)
-        .select(col("event_id"), col("user_id"),
-          col("ts_us").as("purchase_ts_us"),
-          col("asof_ts").as("nearest_click_us"))
-        .orderBy("event_id")
-    },
-
-    // ---- dedup: MinHash + LSH with exact-Jaccard verification ----
-
-    "dedup_minhash" -> { (s, dir) =>
-      Dedup.minhashDedup(Tables(s, dir, "documents"))
-        .select(col("doc_a"), col("doc_b"), col("shared_bands"), col("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    },
-
-    // corpus-pair similarity matrix: one 16-element MinHash signature PER
-    // LANGUAGE SLICE (elementwise min over the per-doc signatures — the
-    // minhash of a union IS the min of the minhashes), pairwise match
-    // fraction estimates cross-slice shingle Jaccard. The curation
-    // diagnostic for "which sources overlap": corpus-size-independent
-    // state (one signature per slice), one combiner-min shuffle.
-    "q_lang_similarity" -> { (s, dir) =>
-      val sig = Tables(s, dir, "documents")
-        .select(col("lang"),
-          posexplode(graft.functions.minhashSignature(
-            graft.functions.wordShingles(Dedup.tokens(col("text")), 3), 16)))
-        .groupBy(col("lang"), col("pos")).agg(min(col("col")).as("h"))
-      val a = sig.select(col("lang").as("lang_a"), col("pos"), col("h").as("ha"))
-      val b = sig.select(col("lang").as("lang_b"), col("pos"), col("h").as("hb"))
-      a.join(b, Seq("pos")).filter(col("lang_a") < col("lang_b"))
-        .groupBy("lang_a", "lang_b")
-        .agg(sum(when(col("ha") === col("hb"), 1L).otherwise(0L)).as("n_match"),
-          count(lit(1)).as("k"))
-        .select(col("lang_a"), col("lang_b"), col("n_match"), col("k"),
-          (col("n_match").cast(DoubleType) / col("k")).as("est_jaccard"))
-        .orderBy("lang_a", "lang_b")
-    },
-
-    // the band-config chooser as a first-class query: the (τ=0.6,
-    // recall≥0.98) requirement resolves — deterministically, on both the
-    // Spark and oracle sides — to (8 hashes, 1 row/band) via the banding
-    // S-curve, and the candidate join runs under THAT config instead of
-    // a hand-picked one. The chosen config rides in the output so the
-    // oracle pins the chooser's decision, not just the pair set.
-    "dedup_minhash_auto" -> { (s, dir) =>
-      val (h, r) = Dedup.chooseBandConfig(0.6, 0.98)
-      Dedup.minhashCandidates(Tables(s, dir, "documents"), h, r)
-        .select(col("doc_a"), col("doc_b"), col("shared_bands"),
-          lit(h).as("num_hashes"), lit(r).as("rows_per_band"))
-        .orderBy("doc_a", "doc_b")
-    },
-
-    // incremental dedup: docs < 400 are the already-ingested corpus (its
-    // MinhashStore stands in for the persisted band index + shingle
-    // features), docs >= 400 are the arriving batch; each new doc is
-    // flagged with its best stored near-dup (Jaccard >= 0.5) WITHOUT
-    // re-scanning old text — bands prune, verification fetches only
-    // candidate old docs' features
-    "dedup_incremental" -> { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val store = Dedup.minhashStore(docs.filter(col("doc_id") < 400))
-      Dedup.incrementalMinhash(docs.filter(col("doc_id") >= 400), store)
-        .orderBy("doc_id")
-    },
-
-    // exact similarity self-join via prefix filtering (Chaudhuri 2006)
-    // with the PPJoin positional filter (Xiao 2008): EVERY pair with
-    // Jaccard >= 0.7 over the FULL corpus — the deterministic
-    // counterpart to dedup_minhash (no probabilistic recall) and to
-    // dedup_ngram_jaccard (no sample, no df-cap erosion); rare-first
-    // prefixes keep boilerplate shingles out of the candidate join, and
-    // tau fixes the prefix fraction at 1−tau (the production near-dup
-    // threshold 0.7 scans 30% prefixes)
-    "dedup_prefix_filter" -> { (s, dir) =>
-      // denseSession: the prefix build + array_intersect verify exchanges
-      // are CPU-dense per byte; see the helper's doc
-      val s2 = denseSession(s)
-      Dedup.prefixFilterPairs(Tables(s2, dir, "documents"), 0.7)
-        .orderBy("doc_a", "doc_b")
-    },
-
-    // Sorted-neighborhood dedup (Hernández & Stolfo 1995): sort by the
-    // first-24-chars blocking key, compare each doc to its 4 successors,
-    // verify with exact Jaccard — O(n·w) candidates by construction,
-    // the record-linkage complement to LSH (catches front-anchored dups,
-    // misses pairs whose edits fall inside the key; both measured here:
-    // 25 pairs at sf0.01 vs the prefix filter's 25-pair exact set)
-    "dedup_sorted_neighborhood" -> { (s, dir) =>
-      val s2 = denseSession(s)
-      Dedup.sortedNeighborhoodPairs(Tables(s2, dir, "documents"),
-          w = 5, tau = 0.7)
-        .orderBy("doc_a", "doc_b")
-    },
-
-    // ---- dedup: exact n-gram Jaccard over a bounded subset ----
-
-    "dedup_ngram_jaccard" -> { (s, dir) =>
-      // exact all-pairs variant on a deterministic 1/4 sample — the
-      // unsampled corpus goes through the LSH path (dedup_minhash)
-      val docs = Tables(s, dir, "documents").filter(col("doc_id") % 4 === 0)
-      Dedup.ngramJaccardPairs(docs, 0.5)
-        .select(col("doc_a"), col("doc_b"), col("n_inter"), col("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    },
-
-    // asymmetric near-CONTAINMENT (Broder 1997): |A∩B| / min(|A|,|B|) —
-    // the quote-inclusion / syndication dup shape Jaccard structurally
-    // misses (short doc embedded in a 10× doc: J≈0.1, containment 1.0);
-    // `contained_id` is the member a keep-longest policy would drop
-    "dedup_containment" -> { (s, dir) =>
-      val docs = Tables(s, dir, "documents").filter(col("doc_id") % 4 === 2)
-      Dedup.containmentPairs(docs, 0.8)
-        .orderBy("doc_a", "doc_b")
-    },
-
-    // eval-set decontamination: 8-gram containment of every train doc
-    // against the held-out subset (doc_id % 7 == 0 stands in for the
-    // benchmark set — wide enough that real overlaps exist at the
-    // correctness-gate scale, so the oracle exercises the count/tie-break/
-    // frac logic, not just all-zero rows)
-    "dedup_decontaminate" -> { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      Dedup.contamination(
-        docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 7 === 0), n = 8)
-        .orderBy("doc_id")
-    },
-
-    // SEMANTIC eval-set decontamination — the embedding-space companion
-    // to the n-gram [[Dedup.contamination]] above: paraphrased or
-    // lightly-edited eval leakage that shares no verbatim 8-gram still
-    // sits next to its source in embedding space. For each held-out eval
-    // vector (the % 97 split), its top-5 nearest TRAIN vectors by cosine
-    // — the rows a curator audits and drops before training. Plan shape:
-    // the eval side is broadcast (a real eval set is a few thousand
-    // rows, fixed as the corpus grows — the gate's % split ties it to n
-    // only for oracle-ability, the ann_ivf nCents convention), the train
-    // corpus is scanned ONCE with the codegen cosine kernel, and the
-    // k-bounded topK aggregate combines map-side — no shuffle wider than
-    // nEval·k rows at any corpus size.
-    "dedup_decontam_semantic" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val evalQ = e.filter(col("vec_id") % 97 === 0)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val train = e.filter(col("vec_id") % 97 =!= 0)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Similarity.autoTopK(train, evalQ, k = 5, metric = "cosine")
-        .select(col("qid").as("eval_id"), col("rank"),
-          col("label").as("train_id"),
-          e6Witness(col("score")).as("cos_e6"))
-        .orderBy("eval_id", "rank")
-    },
-
-    // sequence packing: concat-and-chunk docs into 2048-token training
-    // sequences, packed per language stream (parallel by lang; the chunk
-    // id is a running-token-count prefix sum — deterministic order)
-    "q_pack_sequences" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          size(split(col("text"), " ", -1)).cast(LongType).as("n_tokens"))
-        .withColumn("cum", sum(col("n_tokens")).over(w))
-        .select(col("doc_id"), col("lang"), col("n_tokens"),
-          expr("(cum - n_tokens) div 2048").as("pack_id"),
-          ((col("cum") - col("n_tokens")) % 2048).as("pack_offset"))
-        .orderBy("doc_id")
-    },
-
-    // Bloom-pruned fact-dim join: the dim subset matches ~a few % of fact
-    // rows; the serialized Bloom filter rides in the fact scan's filter so
-    // the non-matching bulk is discarded BEFORE the shuffle (false
-    // positives drop out in the exact join — row-identical to the plain
-    // join, which is exactly what this oracle checks)
-    "q_bloom_join" -> { (s, dir) =>
-      val small = Tables(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 150000.0)
-        .select(col("o_orderkey"))
-      val big = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-      BloomJoin.bloomPrunedJoin(big, small, "o_orderkey")
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_items"),
-          e4Witness(sum(col("l_quantity")))
-            .as("sum_qty_e4"))
-        .orderBy("o_orderkey")
-    },
-
-    // the SCALE-SAFE packing plan: same output as q_pack_sequences (same
-    // oracle), but the cumulative token count runs as a distributed
-    // two-pass prefix sum (Scan.prefixSum) instead of a per-lang window —
-    // one language holding half a 100 TB corpus stays spread over range
-    // partitions instead of stalling one task
-    "q_pack_sequences_scan" -> { (s, dir) =>
-      Scan.packSequences(Tables(s, dir, "documents"), seqLen = 2048)
-        .select("doc_id", "lang", "n_tokens", "pack_id", "pack_offset")
-        .orderBy("doc_id")
-    },
-
-    // GLOBAL running revenue over the full ordered orders stream — the
-    // cumsum Spark's window runs on a single task at any size; the scan
-    // form is the only shape that survives 100 TB. Cents-integer amounts
-    // so the sum is exact at any accumulation order.
-    "q_global_running_sum" -> { (s, dir) =>
-      val cents = Tables(s, dir, "orders")
-        .select(col("o_orderkey"),
-          // round-half-up BEFORE the cast: a bare double→long cast
-          // truncates in Spark but rounds in DuckDB — positive prices
-          // make half-up identical in both engines
-          round(col("o_totalprice") * 100, 0).cast(LongType).as("cents"))
-      Scan.prefixSum(cents, Seq.empty, Seq("o_orderkey"), "cents", "cum_cents")
-        .select(col("o_orderkey"), col("cents"), col("cum_cents"))
-        .orderBy("o_orderkey")
-    },
-
-    // clamped running inventory per part — y = max(0, min(500, y + Δ)):
-    // returns restock (+qty), ships deplete (−qty), floored at empty and
-    // capped at warehouse capacity. NOT expressible as a window (each
-    // step depends on the CLAMPED previous value, not a prefix
-    // aggregate); the naive form is a per-key sequential pass. Runs as
-    // the exact two-pass clamp-affine scan — integer arithmetic, so the
-    // distributed result is bit-identical to the sequential recurrence.
-    "q_clamped_inventory" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_shipdate"), col("l_orderkey"),
-          col("l_linenumber"),
-          when(col("l_returnflag") === "R", col("l_quantity"))
-            .otherwise(-col("l_quantity")).cast(LongType).as("delta"))
-      Scan.clampedScan(li, Seq("l_partkey"),
-          Seq("l_shipdate", "l_orderkey", "l_linenumber"),
-          "delta", lo = 0L, hi = 500L)
-        .select(col("l_partkey"), col("l_orderkey"), col("l_linenumber"),
-          col("delta"), col("level"))
-        .orderBy("l_partkey", "l_orderkey", "l_linenumber")
-    },
-
-    // Gini coefficient of revenue concentration across customers — the
-    // inequality summary (how head-heavy is the customer base). Needs a
-    // GLOBAL ascending rank: computed with the distributed prefix-sum
-    // scan (range partitions), never a single-task full-table window.
-    // Exact long arithmetic throughout (Σ(2i−n−1)·cents fits a long at
-    // any tested scale); one double division at the end, mirrored.
-    "q_gini_revenue" -> { (s, dir) =>
-      val cust = Tables(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100, 0).cast(LongType)).as("cents"))
-      val h = cust.agg(count(lit(1)), sum(col("cents"))).head()
-      val n = h.getLong(0); val tot = h.getLong(1)
-      val ranked = Scan.prefixSum(cust.withColumn("one", lit(1L)),
-        Seq.empty, Seq("cents", "o_custkey"), "one", "rank")
-      // Σ(2i−n−1)·cents overflows LONG at the 100× replica (per-term
-      // ~1.5e15 × 15M rows ≈ 1e22) — accumulate in DECIMAL(38,0); the
-      // decimal→double cast of the exact integer is correctly rounded
-      // identically on both engines (r16)
-      val num = ranked
-        .agg(sum((lit(2L) * col("rank") - lit(n + 1)).cast(DecimalType(38, 0)) *
-          col("cents").cast(DecimalType(38, 0)))).head().getDecimal(0)
-      s.range(1).select(lit(n).as("n_customers"), lit(tot).as("total_cents"),
-        e6Witness(lit(num.toPlainString).cast(DecimalType(38, 0)).cast(DoubleType) /
-          (lit(n).cast(DoubleType) * lit(tot).cast(DoubleType))
-         ).as("gini_e6"))
-    },
-
-    // Lorenz-curve decile shares — the distribution behind the Gini
-    // number: customers ranked ascending by revenue (the same
-    // distributed prefix-sum rank, no single-task window), deciles by
-    // exact integer rank arithmetic, per-decile revenue share
-    "q_lorenz_deciles" -> { (s, dir) =>
-      val cust = Tables(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100, 0).cast(LongType)).as("cents"))
-      val h = cust.agg(count(lit(1)), sum(col("cents"))).head()
-      val n = h.getLong(0); val tot = h.getLong(1)
-      Scan.prefixSum(cust.withColumn("one", lit(1L)),
-          Seq.empty, Seq("cents", "o_custkey"), "one", "rank")
-        .withColumn("decile", expr(s"((rank - 1) * 10) div ${n}L"))
-        .groupBy("decile")
-        .agg(count(lit(1)).as("n_customers"), sum(col("cents")).as("cents"))
-        .select(col("decile"), col("n_customers"), col("cents"),
-          e6Witness(col("cents").cast(DoubleType) / lit(tot.toDouble)
-           ).as("share_e6"))
-        .orderBy("decile")
-    },
-
-    // EXACT global order statistics by iterative histogram refinement —
-    // exact `percentile` puts every value in one aggregation buffer
-    // (the 100 TB straggler), percentile_approx is bounded but fuzzy;
-    // this is exact AND bounded: log_1024(range) combiner aggregations,
-    // driver state = 1024 counts per pass
-    "q_exact_quantile_scan" -> { (s, dir) =>
-      val cents = Tables(s, dir, "orders")
-        .select(round(col("o_totalprice") * 100, 0).cast(LongType).as("v"))
-      val n = cents.count()
-      val Seq(p50, p90, p99) =
-        Scan.exactQuantiles(cents, "v", Seq(0.5, 0.9, 0.99))
-      s.range(1).select(lit(n).as("n"), lit(p50).as("p50_cents"),
-        lit(p90).as("p90_cents"), lit(p99).as("p99_cents"))
-    },
-
-    // per-group exact order statistics — same refinement loop, every
-    // open (group, q) range histogrammed in one batched pass; exact
-    // where percentile() would buffer a whole group's values on one task
-    "q_exact_quantile_group" -> { (s, dir) =>
-      val cents = Tables(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          round(col("l_extendedprice") * 100, 0).cast(LongType).as("v"))
-      Scan.exactQuantilesByGroup(cents, "l_returnflag", "v", Seq(0.5, 0.9))
-        .select(col("g").as("l_returnflag"), col("q"),
-          col("value").as("price_cents"))
-        .orderBy("l_returnflag", "q")
-    },
-
-    // time-decayed per-user activity counter (half-life 1 h) — the CTR
-    // feature: each event adds 1, everything before decays by the REAL
-    // time gap. A window cannot express gap-dependent decay; the naive
-    // form is a per-user sequential pass. Runs as lagScan (previous ts,
-    // no key-partitioned window) + affineScan (per-row decay m_i).
-    "q_time_decay" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-        .withColumn("ts_us", expr("unix_micros(ts)"))
-        .select(col("user_id"), col("event_id"), col("ts_us"), lit(1.0).as("one"))
-      Scan.timeDecayedSum(ev, Seq("user_id"), Seq("ts_us", "event_id"),
-          "ts_us", "one", halfLifeUs = 3600L * 1000000L)
-        .select(col("user_id"), col("event_id"),
-          e6Witness(col("decayed"))
-            .as("decayed_e6"))
-        .orderBy("user_id", "event_id")
-    },
-
-    // CUSUM change-point detection (Page 1954) per nation — the drift
-    // alarm is literally the clamp-affine scan with no upper bound:
-    // S = max(0, S + (count − ref)); sustained above-reference volume
-    // accumulates until the alarm threshold. Integer-exact end to end
-    // (ref = floor of the global mean daily count).
-    "q_cusum_drift" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val c = Tables(s, dir, "customer")
-      val n = Tables(s, dir, "nation")
-      val daily = o.join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_name"), to_date(col("o_orderdate")).as("d"))
-        .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true) // feeds the ref scalar AND the scan
-      val stats = daily.agg(sum(col("cnt")), count(lit(1))).head()
-      val ref = stats.getLong(0) / stats.getLong(1) // exact floor division
-      val deltas = daily.select(col("n_name"), col("d"),
-        (col("cnt") - lit(ref)).as("delta"))
-      Scan.clampedScan(deltas, Seq("n_name"), Seq("d"), "delta",
-          lo = 0L, hi = Long.MaxValue, outCol = "cusum")
-        .select(col("n_name"), col("d"), col("cusum"),
-          (col("cusum") > lit(3L * ref)).as("alarm"))
-        .orderBy("n_name", "d")
-    },
-
-    // per-nation EWMA of daily order counts (pandas ewm(alpha=0.25,
-    // adjust=True) semantics) — exponential weights are impossible in a
-    // window frame; runs as ONE affine-recurrence scan carrying the
-    // numerator and normalizer recurrences together. Day count is
-    // calendar-bounded, so the oracle's closed-form pair join is
-    // scale-independent.
-    "q_ewma_daily" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val c = Tables(s, dir, "customer")
-      val n = Tables(s, dir, "nation")
-      val daily = o.join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_name"), to_date(col("o_orderdate")).as("d"))
-        .agg(count(lit(1)).cast(DoubleType).as("cnt"))
-      Scan.ewma(daily, Seq("n_name"), Seq("d"), "cnt", alpha = 0.25)
-        .select(col("n_name"), col("d"),
-          e6Witness(col("ewma")).as("ewma_e6"))
-        .orderBy("n_name", "d")
-    },
-
-    // Holt level+trend forecast per nation (q_ewma_daily's series with a
-    // slope): the last 5 days of each nation's smoothed state plus the
-    // 7-day-ahead forecast l + 7·b. The coupled recurrence runs
-    // sequentially per CALENDAR-BOUNDED series (Scan.holtLinear — the
-    // only corpus-scale pass is the daily aggregation); both engines
-    // walk the identical IEEE tree, emissions via e6 floor witnesses.
-    "q_holt_trend" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val o = Tables(s, dir, "orders")
-      val c = Tables(s, dir, "customer")
-      val n = Tables(s, dir, "nation")
-      val daily = o.join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_name"), to_date(col("o_orderdate")).as("d"))
-        .agg(count(lit(1)).cast(DoubleType).as("cnt"))
-      val smoothed = Scan.holtLinear(daily, Seq("n_name"), Seq("d"), "cnt",
-        alpha = 0.3, beta = 0.1)
-      val w = Window.partitionBy(col("n_name")).orderBy(col("d").desc)
-      smoothed.withColumn("rr", row_number().over(w))
-        .filter(col("rr") <= 5)
-        .select(col("n_name"), col("d"), col("cnt").cast(LongType).as("cnt"),
-          e6Witness(col("level")).as("level_e6"),
-          e6Witness(col("trend")).as("trend_e6"),
-          e6Witness((col("level") + lit(7.0) * col("trend"))).as("forecast7_e6"))
-        .orderBy("n_name", "d")
-    },
-
-    // Johnson-Lindenstrauss sparse sign projection (Achlioptas 2003,
-    // "Database-friendly random projections"): 64-d → 16-d with entries
-    // {+1, 0, −1}·√(3/16 · 256/258) at p = (43/256, 170/256, 43/256),
-    // derived from md5("jl:i:j") so BOTH engines build the identical
-    // matrix — a training-free embedding compressor (PCA without the
-    // training pass). The 256/258 factor makes E[‖y‖²] exactly unbiased
-    // under the byte-friendly 43/256 sign probability.
-    // Output: per-vector norm ratio ‖y‖/‖x‖, the JL distortion the lemma
-    // bounds around 1.
-    "q_jl_project" -> { (s, dir) =>
-      val dIn = 64; val dOut = 16
-      val mat = Similarity.jlMatrix(dIn, dOut)
-      val y = graft.functions.pcaProject(col("embedding"), Array.fill(dIn)(0.0), mat)
-      Tables(s, dir, "embeddings")
-        .select(col("vec_id"),
-          floor(sqrt(graft.functions.vectorNormSq(y) /
-            graft.functions.vectorNormSq(col("embedding"))) * lit(1e4)
-            + lit(0.5)).cast(LongType).as("norm_ratio_e4"))
-        .orderBy("vec_id")
-    },
-
-    // int8 symmetric per-vector quantization error profile (the next step
-    // down from f16 storage; all arithmetic double + floor → engine-exact)
-    "q_vec_int8" -> { (s, dir) =>
-      val x = col("e").cast(DoubleType)
-      val q = floor(x / col("scale") + lit(0.5)) // symmetric, |q| ≤ 127
-      Tables(s, dir, "embeddings")
-        .select(col("vec_id"),
-          (aggregate(col("embedding"), lit(0.0),
-            (acc, v) => greatest(acc, abs(v.cast(DoubleType)))) / 127.0).as("scale"),
-          col("embedding"))
-        .select(col("vec_id"), col("embedding"), col("scale"),
-          explode(col("embedding")).as("e"))
-        .groupBy(col("vec_id"))
-        .agg(e6Witness(first(col("scale")))
-            .as("scale_e6"),
-          e6Witness(max(when(col("scale") > 0, abs(x - q * col("scale")))
-            .otherwise(0.0)))
-            .as("max_abs_err_e6"))
-        .orderBy("vec_id")
-    },
-
-    // int4 (SQ4) nibble-packed quantization error profile — the rung
-    // below SQ8 on the compression ladder (8× fewer stored bytes than
-    // fp32). Unlike q_vec_int8's pure column math, this runs the REAL
-    // QuantizeVectorInt4/DequantizeVectorInt4 expressions end-to-end:
-    // packed_bytes pins the nibble-packing (⌈d/2⌉) and max_abs_err is
-    // computed from the round-tripped floats, so encode+pack+decode all
-    // have to be exactly the documented arithmetic for the hash to match
-    "q_vec_int4" -> { (s, dir) =>
-      import graft.functions.{quantizeInt4, dequantizeInt4}
-      val enc = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"), quantizeInt4(col("embedding")).as("q"))
-        .select(col("vec_id"), col("embedding"), col("q.scale").as("scale"),
-          size(col("q.codes")).cast(LongType).as("packed_bytes"),
-          dequantizeInt4(col("q.codes"), col("q.scale"), col("q.n")).as("xhat"))
-      enc
-        .select(col("vec_id"), col("scale"), col("packed_bytes"),
-          explode(arrays_zip(col("embedding").as("x"), col("xhat").as("y"))).as("z"))
-        .groupBy(col("vec_id"))
-        .agg(e6Witness(first(col("scale")))
-            .as("scale_e6"),
-          first(col("packed_bytes")).as("packed_bytes"),
-          e6Witness(max(abs(col("z.x").cast(DoubleType) -
-            col("z.y").cast(DoubleType))))
-            .as("max_abs_err_e6"))
-        .orderBy("vec_id")
-    },
-
-    // Farthest-point sampling (greedy k-center, Gonzalez 1985): the 8
-    // maximally-spread embedding vectors — diverse-coreset selection
-    // for data curation. k cheap rounds (narrow min-dist update + a
-    // TakeOrdered(1)); corpus never shuffles. min_dist is the pick's
-    // distance-to-selected-set (+inf for the seed), rounded 6dp on
-    // both engines (summation-order slack).
-    "q_fps_coreset" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      Curation.farthestPointSample(
-          e.select(col("vec_id").as("id"), col("embedding").as("vec")), k = 8)
-        .select(col("rank"), col("id").as("vec_id"),
-          when(col("min_dist") === Double.PositiveInfinity, lit(Long.MaxValue))
-            .otherwise(e6Witness(col("min_dist"))).as("min_dist_e6"))
-        .orderBy("rank")
-    },
-
-    // SSL-prototypes / D4 embedding data pruning (Sorscher 2022;
-    // Tirumala 2023): keep each cluster's LEAST prototypical half —
-    // pruning the easy/redundant examples nearest the prototype is the
-    // selection rule that beats random at scale. Deterministic modulo
-    // centroids (the ann_ivf convention), prototypicality quantized to
-    // an exact integer witness (floor(cos·1e6 + 0.5), the kendall-tau
-    // playbook) BEFORE ranking so no cross-engine double ordering ever
-    // decides a row, integer keep threshold (rn·2 ≤ sz). Window
-    // partitions are ≈modulo-sized regardless of corpus size.
-    "q_proto_prune" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      Curation.prototypicalityPrune(
-          e.select(col("vec_id").as("id"), col("embedding").as("vec")),
-          centroidModulo = 40, keepNum = 1, keepDen = 2)
-        .select(col("id").as("vec_id"), col("cid"), col("proto_e6"),
-          col("rn"), col("kept"))
-        .orderBy("vec_id")
-    },
-
-    // FP8 E4M3 roundtrip error profile — the rung between int8's
-    // uniform grid and f16 on the storage ladder (4× fewer bytes than
-    // fp32, per-ELEMENT exponent so no per-vector scale state). Runs
-    // the REAL QuantizeVectorFp8/DequantizeVectorFp8 expressions end to
-    // end; the oracle reproduces the saturating-finite RNE grid in
-    // closed form (the f16_roundtrip pattern with bias 7 and ±448
-    // clamping). The corpus exercises normals, subnormals (|x| < 2⁻⁶)
-    // AND RNE underflow to zero (|x| < 2⁻¹⁰) — min |x| ≈ 8e-6.
-    "q_vec_fp8" -> { (s, dir) =>
-      import graft.functions.{quantizeFp8, dequantizeFp8}
-      Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          quantizeFp8(col("embedding")).as("codes"))
-        .select(col("vec_id"),
-          size(col("codes")).cast(LongType).as("n_bytes"),
-          explode(arrays_zip(col("embedding").as("x"),
-            dequantizeFp8(col("codes")).as("y"))).as("z"))
-        .groupBy(col("vec_id"))
-        .agg(first(col("n_bytes")).as("n_bytes"),
-          e6Witness(max(abs(col("z.x").cast(DoubleType) -
-            col("z.y").cast(DoubleType)))).as("max_abs_err_e6"))
-        .orderBy("vec_id")
-    },
-
-    // dedup endgame, quality-aware: per duplicate cluster keep the
-    // highest-quality member (longest doc, ties to the smaller id) — the
-    // composition of clustering × quality scoring a real pipeline ships
-    "dedup_keep_best" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables(s, dir, "documents")
-      val cc = Dedup.simhashClusters(docs, hammingMax = 2)
-      val w = Window.partitionBy(col("cluster_id"))
-      cc.join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
-        .withColumn("rn", row_number().over(
-          w.orderBy(col("n_chars").desc, col("doc_id"))))
-        .withColumn("n_cluster", count(lit(1)).over(w))
-        .filter(col("rn") === 1)
-        .select(col("cluster_id"), col("doc_id").as("keep_doc"),
-          col("n_chars").as("keep_chars"), col("n_cluster"))
-        .orderBy("cluster_id")
-    },
-
-    // ---- dedup: SimHash fingerprints ----
-
-    "text_simhash" -> { (s, dir) =>
-      Dedup.simhash16(Tables(s, dir, "documents")).orderBy("doc_id")
-    },
-
-    // ---- dedup: embedding-space near-dup (top cosine pairs) ----
-
-    "dedup_embedding_cosine" -> { (s, dir) =>
-      Similarity.topCosinePairs(
-        Tables(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec")),
-        topN = 20)
-        .orderBy("rn")
-    },
-
-    // ---- lexical retrieval: BM25 more-like-this over documents ----
-
-    "text_bm25" -> { (s, dir) =>
-      val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
-      Lexical.bm25TopK(docs,
-        docs.filter(col("doc_id") < 4).select(col("doc_id").as("qid"), col("text")),
-        k = 10)
-        .select(col("qid"), col("rank"), col("label"),
-          col("score").cast(LongType).as("score_e6"))
-        .orderBy("qid", "rank")
-    },
-
-    // Exact phrase search via positional postings (the inverted-index
-    // primitive bag-of-words scorers can't express): per-term filtered
-    // postings, positions aligned to the occurrence start, equi-joined
-    // on (doc_id, pos). Overlapping occurrences count separately.
-    "text_phrase_search" -> { (s, dir) =>
-      Lexical.phraseSearch(
-          Tables(s, dir, "documents").select(col("doc_id"), col("text")),
-          phrase = Seq("stream", "table", "hash"))
-        .orderBy("doc_id")
-    },
-
-    // TF-IDF cosine more-like-this (vector space model, Salton 1988) —
-    // the second lexical scorer, sharing the BM25 posting stats; cosine
-    // length normalization where BM25 uses b·len/avg_len
-    "text_tfidf" -> { (s, dir) =>
-      val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
-      Lexical.tfidfTopK(Lexical.bm25Stats(docs),
-        docs.filter(col("doc_id") < 4).select(col("doc_id").as("qid"), col("text")),
-        k = 10)
-        .select(col("qid"), col("rank"), col("label"),
-          col("score").cast(LongType).as("score_e6"))
-        .orderBy("qid", "rank")
-    },
-
-    // ---- hybrid retrieval: RRF fusion of BM25 + dense cosine kNN ----
-    // (documents and embeddings share the 0..n-1 id space, so doc_id q
-    // is also its embedding row — the standard dual-index hybrid setup)
-
-    "hybrid_rrf" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
-      val e = Tables(s, dir, "embeddings")
-      // pre-built posting stats (the production shape: corpus state is
-      // computed once and shared across the lexical stack; the dense
-      // stack reads embeddings, not text, so its corpus pass is disjoint)
-      val st = Lexical.bm25Stats(docs)
-      val lex = Lexical.bm25TopK(st,
-        docs.filter(col("doc_id") < 4).select(col("doc_id").as("qid"), col("text")),
-        k = 20, k1 = 1.2, b = 0.75)
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val qs = e.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      // k+1 then self-exclude and re-rank: the dense list must carry
-      // within-list ranks 1..20 after the query row itself is dropped
-      val dense = Similarity.bruteForceTopK(vectors, qs, k = 21, metric = "cosine")
-        .filter(col("label") =!= col("qid"))
-        .withColumnRenamed("rank", "rank0")
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("rank0"))).cast(LongType))
-        .filter(col("rank") <= 20)
-        .drop("rank0")
-      Lexical.rrfFuse(Seq(lex, dense), k = 10)
-        .select(col("qid"), col("rank"), col("label"),
-          col("score").cast(LongType).as("score_e6"))
-        .orderBy("qid", "rank")
-    },
-
-    // ---- dedup: SemDeDup (cluster-bounded embedding near-dup drop) ----
-
-    "dedup_semantic" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      Similarity.semanticDedup(
-        e.select(col("vec_id").as("id"), col("embedding").as("vec")),
-        centroidModulo = 40, tau = 0.4)
-        .select(col("id").as("vec_id"), col("cid"), col("dropped"), col("dup_of"))
-        .orderBy("vec_id")
-    },
-
-    // ---- dedup: per-doc duplicated-span profile (exact-substring
-    // dedup at token granularity) ----
-
-    "dedup_spans" -> { (s, dir) =>
-      Dedup.duplicatedSpans(Tables(s, dir, "documents"), n = 8)
-        .select(col("doc_id"), col("n_spans"), col("n_dup"), col("dup_frac_e6"))
-        .orderBy("doc_id")
-    },
-
-    // ---- dedup: exact duplicated SUBSTRINGS (Lee et al. 2022's
-    // ExactSubstr class — character-level, stride-1, maximal spans),
-    // the contamination class token-shingle methods only catch
-    // probabilistically. Sorted-hashed-grams plan, linear in corpus
-    // bytes; see Dedup.substringSpans.
-
-    "dedup_substring" -> { (s, dir) =>
-      Dedup.substringSpans(Tables(s, dir, "documents"), minLen = 30)
-        .orderBy("doc_id")
-    },
-
-    // ---- end-to-end corpus filter: the stage composition a
-    // pretraining-data run actually ships — language ID, length band,
-    // lexical quality, span-level dedup — each doc tagged with its FIRST
-    // failing stage (the order a real pipeline applies them: cheap and
-    // high-yield first). All four signals are independently oracled
-    // queries (text_langid, text_quality, dedup_spans); this query pins
-    // their composition.
-
-    "pipeline_filter" -> { (s, dir) =>
-      filterVerdicts(Tables(s, dir, "documents")).orderBy("doc_id")
-    },
-
-    // the FULL pretraining-data composition, one query: filter (language/
-    // length/quality/span-dedup) → exact dedup (keep the earliest copy)
-    // → pack the survivors into 2048-token training sequences via the
-    // distributed scan (q_pack_sequences_scan's skew-safe plan). Every
-    // stage is an independently oracled query; this pins the composition
-    // end to end — what a user actually ships.
-    "pipeline_e2e" -> { (s, dir) =>
-      val d = Tables(s, dir, "documents")
-      // kept feeds TWO consumers (hash-dedup + final join): checkpoint the
-      // tiny id set so the span-profile filter stage runs once, not twice
-      // (the mmrTopK/bm25Stats checkpoint convention)
-      val keptIds = filterVerdicts(d)
-        .filter(col("verdict") === "kept").select("doc_id")
-        .localCheckpoint(true)
-      val kept = d.join(keptIds, "doc_id")
-      val firstPerHash = kept
-        .select(col("doc_id"), md5(col("text")).as("h"))
-        .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-        .select("doc_id")
-      Scan.packSequences(kept.join(firstPerHash, "doc_id"), seqLen = 2048)
-        .select("doc_id", "lang", "n_tokens", "pack_id", "pack_offset")
-        .orderBy("doc_id")
-    },
-
-    // ---- approximate heavy hitters: SpaceSaving sketch with verdict
-    // columns (est >= true, est - err <= true, every true heavy tracked
-    // — the mergeable-summaries invariants) over a deterministic
-    // log-bucketed item stream (geometric counts => real heavy hitters;
-    // the raw columns are uniform by construction) ----
-
-    "q_heavy_hitters" -> { (s, dir) =>
-      val items = Tables(s, dir, "lineitem")
-        .select((col("l_orderkey") % 1024).as("v"))
-        .select(when(col("v") < 512, "h0").when(col("v") < 768, "h1")
-          .when(col("v") < 896, "h2").when(col("v") < 960, "h3")
-          .when(col("v") < 992, "h4").when(col("v") < 1008, "h5")
-          .when(col("v") < 1016, "h6").when(col("v") < 1020, "h7")
-          .otherwise("h8").as("item"))
-      val sketch = items.agg(spaceSavingHH(col("item"), 6).as("hh"))
-        .select(explode(col("hh")).as("e"))
-        .select(col("e.item").as("item"), col("e.est").as("est"),
-          col("e.err").as("err"))
-      val exact = items.groupBy(col("item")).agg(count(lit(1)).as("cnt"))
-      val tot = exact.agg(sum(col("cnt")).as("n"))
-      exact.crossJoin(broadcast(tot))
-        .filter(col("cnt") * 6 >= col("n"))
-        .join(sketch, Seq("item"), "left")
-        .select(col("item"), col("cnt"),
-          col("est").isNotNull.as("in_sketch"),
-          (col("est") >= col("cnt")).as("overest_ok"),
-          (col("est") - col("err") <= col("cnt")).as("lower_ok"))
-        .orderBy("item")
-    },
-
-    // q_heavy_hitters PER EVENT-TIME WINDOW — the batch face of
-    // StreamingOps.eventsWindowedHeavyHitters (r14 verdict ask #8):
-    // one SpaceSaving sketch per day window over the events stream
-    // ("top items each day"), verdict columns per (window, heavy item).
-    // The emitted booleans are the mergeable-summaries THEOREMS
-    // (Metwally 2005; Agarwal 2013) — est ≥ true ≥ est − err, every
-    // item with share STRICTLY above 1/capacity tracked — so they are
-    // partition- and merge-order-invariant even though (est, err)
-    // internals are not; StreamingSpec pins this exact frame
-    // bit-identical across two different forced micro-batch splits.
-    // Strict > in the heavy filter (not ≥): the tracking theorem is
-    // strict, and a boundary day with cnt·cap == n exactly must not
-    // flip in_sketch on sketch internals.
-    "q_heavy_hitters_windowed" -> { (s, dir) =>
-      val items = Tables.events(s, dir)
-        .select(window(col("ts"), "1 day").getField("start").as("w"),
-          pmod(col("user_id"), lit(1024)).as("v"))
-        .select(col("w"), when(col("v") < 512, "h0").when(col("v") < 768, "h1")
-          .when(col("v") < 896, "h2").when(col("v") < 960, "h3")
-          .when(col("v") < 992, "h4").when(col("v") < 1008, "h5")
-          .when(col("v") < 1016, "h6").when(col("v") < 1020, "h7")
-          .otherwise("h8").as("item"))
-      val sketch = items.groupBy(col("w"))
-        .agg(spaceSavingHH(col("item"), 6).as("hh"))
-        .select(col("w"), explode(col("hh")).as("e"))
-        .select(col("w"), col("e.item").as("item"), col("e.est").as("est"),
-          col("e.err").as("err"))
-      val exact = items.groupBy(col("w"), col("item")).agg(count(lit(1)).as("cnt"))
-      val tot = exact.groupBy(col("w")).agg(sum(col("cnt")).as("n"))
-      exact.join(broadcast(tot), "w")
-        .filter(col("cnt") * 6 > col("n"))
-        .join(sketch, Seq("w", "item"), "left")
-        .select(date_format(col("w"), "yyyy-MM-dd").as("day"), col("item"),
-          col("cnt"),
-          col("est").isNotNull.as("in_sketch"),
-          (col("est") >= col("cnt")).as("overest_ok"),
-          (col("est") - col("err") <= col("cnt")).as("lower_ok"))
-        .orderBy("day", "item")
-    },
-
-    // DISTINCT USERS PER EVENT-TIME WINDOW ("daily active users") —
-    // the batch face of StreamingOps.streamingWindowedDistinct, whose
-    // streaming ≡ batch bit-exactness is spec-pinned (HLL++ register
-    // merge is insertion- and merge-order-invariant). Exact
-    // count_distinct per window needs state ∝ distinct keys; the
-    // sketch is O(2^p) per window at any cardinality. The emitted
-    // verdict is the observed ≤5% relative error against the exact
-    // count at rsd = 0.01 — a 5σ envelope, so the boolean is TRUE on
-    // any corpus that isn't a 1-in-10⁶ outlier (rsd 0.05 + a 5% bound
-    // is only 1σ and flips on ~a third of windows; measured). The
-    // sketch is deterministic for a fixed input set, so the boolean is
-    // stable run-to-run (the q_hll_sketch convention).
-    // Two-level aggregation, NOT countDistinct-alongside-count: the
-    // single-groupBy form Expands every event ×2 before the shuffle
-    // (measured 13.8× wall at 10× data); grouping to (window, user)
-    // first rides a map-side combine, then the per-window rollup is
-    // exact (n_exact = row count, n_events = Σc) and the HLL estimate
-    // over the DISTINCT pairs has identical registers — HLL is a
-    // set function, so est is bit-identical to the raw-row form.
-    "q_hll_windowed" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      ev.select(window(col("ts"), "1 day").getField("start").as("w"),
-          col("user_id"))
-        .groupBy(col("w"), col("user_id")).agg(count(lit(1)).as("c"))
-        .groupBy(col("w"))
-        .agg(sum(col("c")).as("n_events"),
-          count(lit(1)).as("n_exact"),
-          approx_count_distinct(col("user_id"), 0.01).as("est"))
-        .select(date_format(col("w"), "yyyy-MM-dd").as("day"),
-          col("n_events"), col("n_exact"),
-          (abs(col("est") - col("n_exact")).cast(DoubleType) <=
-            lit(0.05) * col("n_exact").cast(DoubleType)).as("est_ok"))
-        .orderBy("day")
-    },
-
-    // ---- dedup: winnowing fingerprint profile (MOSS selection) ----
-
-    "text_winnowing" -> { (s, dir) =>
-      Dedup.winnowedFingerprints(Tables(s, dir, "documents"), n = 5, window = 4)
-        .orderBy("doc_id")
-    },
-
-    // ---- text quality: corpus-self unigram LM score (CCNet stand-in) ----
-
-    "text_unigram_lp" -> { (s, dir) =>
-      TextAnalysis.unigramLogProb(Tables(s, dir, "documents")).orderBy("doc_id")
-    },
-
-    // the per-source corpus report a curation run emits: docs, chars,
-    // tokens, distinct-content count and the exact-duplicate rate, all
-    // exact integer arithmetic over one scan + one md5 groupBy per source
-    "q_corpus_report" -> { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val base = docs.select(col("source"), col("n_chars"),
-        size(split(col("text"), " ", -1)).cast(LongType).as("n_tokens"),
-        md5(col("text")).as("h"))
-      val perHash = base.groupBy(col("source"), col("h"))
-        .agg(count(lit(1)).as("c"),
-          first(col("n_chars")).as("nc0"), first(col("n_tokens")).as("nt0"))
-      base.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(col("n_tokens")).as("sum_tokens"))
-        .join(perHash.groupBy(col("source"))
-          .agg(count(lit(1)).as("n_distinct"),
-            sum(col("c") - 1).as("n_exact_dups")), "source")
-        .select(col("source"), col("n_docs"), col("sum_chars"),
-          col("sum_tokens"), col("n_distinct"), col("n_exact_dups"),
-          e6Witness(col("n_exact_dups").cast(DoubleType) /
-            col("n_docs").cast(DoubleType)).as("dup_rate_e6"))
-        .orderBy("source")
-    },
-
-    // model-based quality filter (the CCNet/LLaMA-pipeline "quality
-    // classifier" stage): logistic regression DISTILLING the rule-based
-    // pipeline_filter verdicts from cheap per-doc features (length
-    // parabola basis, TTR, language, span-dup, entropy — all existing
-    // oracle-proven kernels), IRLS-trained on the even-doc_id half,
-    // judged on the held-out odd half. Verdict-gated (training isn't
-    // SQL-expressible): held-out accuracy ≥ 0.9 + the Newton loss
-    // actually descended; n_eval pins the split arithmetic exactly
-    "q_quality_model" -> { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      // ONE feature pass: the rule-based labels (the filterVerdicts
-      // thresholds verbatim) derive from the SAME frame's raw columns,
-      // so the expensive span profile runs once, not twice; checkpointed
-      // because train-collect, scoring, and the accuracy join all read it
-      val labeled = Curation.qualityFeatures(docs)
-        .withColumn("label",
-          when(col("und") === 0.0 &&
-            col("n_tokens") >= 16 && col("n_tokens") <= 94 &&
-            col("ttr") >= 0.31 && col("dup_frac_e6") <= 500000L, 1.0)
-            .otherwise(0.0))
-        .localCheckpoint(true)
-      val model = Curation.trainQualityFilter(
-        labeled.filter(col("doc_id") % 2 === 0))
-      val eval_ = labeled.filter(col("doc_id") % 2 === 1)
-      val agg = Curation.scoreQualityModel(eval_.select(col("doc_id"), col("f")), model)
-        .join(eval_.select(col("doc_id"), col("label")), "doc_id")
-        .agg(count(lit(1)).as("n"),
-          sum(when((col("score") >= 0.5) === (col("label") >= 0.5), 1L)
-            .otherwise(0L)).as("ok")).head
-      val nEval = agg.getLong(0)
-      val acc = agg.getLong(1).toDouble / math.max(1L, nEval)
-      val lossOk = model.lossTrace.last < model.lossTrace.head - 1e-9
-      s.range(1).select(
-        lit(nEval).as("n_eval"),
-        lit(acc >= 0.9).as("acc_ok"),
-        lit(lossOk).as("loss_ok"))
-    },
-
-    // CCNet's head/middle/tail split (Wenzek 2020): per-language
-    // perplexity terciles over the corpus-self unigram LM — the bucket
-    // assignment a CCNet-style pipeline trains/filters on (head = most
-    // fluent third). Exact arithmetic end-to-end: the per-doc ppl is the
-    // 6-dp-rounded oracle-proven value, terciles are ntile(3) over the
-    // deterministic (ppl, doc_id) order, and the per-bucket sum runs in
-    // DECIMAL so accumulation order can't move the hash
-    "q_ppl_buckets" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables(s, dir, "documents")
-      val lp = TextAnalysis.unigramLogProb(docs).select(col("doc_id"), col("ppl"))
-      val w = Window.partitionBy(col("lang")).orderBy(col("ppl"), col("doc_id"))
-      docs.select(col("doc_id"), col("lang"))
-        .join(lp, "doc_id")
-        .withColumn("bucket", ntile(3).over(w).cast(LongType))
-        .groupBy(col("lang"), col("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("ppl").cast(DecimalType(25, 6))).cast(DoubleType).as("sum_ppl"),
-          min(col("ppl")).as("min_ppl"),
-          max(col("ppl")).as("max_ppl"))
-        .orderBy("lang", "bucket")
-    },
-
-    // code-point entropy quality filter: natural text sits in a narrow
-    // band, base64/binary blobs run high, padding runs low; one compiled
-    // narrow pass (per-doc histogram — no (doc, char) shuffle exists),
-    // with the corpus-relative band verdict (within ±30% of the corpus
-    // median entropy) a real filter would gate on
-    "text_entropy" -> { (s, dir) =>
-      // empty docs are excluded on BOTH sides: charEntropy('') is null
-      // here while the oracle's UNNEST produces no rows for them — the
-      // two formulations only agree by construction with the filter
-      val docs = Tables(s, dir, "documents").filter(length(col("text")) > 0)
-      // checkpoint: `ent` feeds both the median refinement passes and
-      // the final projection — one entropy computation, not two
-      val ent = docs.select(col("doc_id"),
-        graft.functions.charEntropy(col("text")).as("ent"))
-        .localCheckpoint(true)
-      // exact DISCRETE median via the bounded-memory refinement
-      // (an actual corpus entropy value = DuckDB quantile_disc) —
-      // per-doc entropies are near-unique doubles, exactly the domain
-      // where Spark's exact `percentile` buffers the whole corpus'
-      // values on one task; an approx median could flip band verdicts
-      // at the boundary, so approximate is not an option either
-      val med = Scan.exactQuantilesByGroupDouble(
-        ent.select(lit(0L).as("gg"), col("ent")), "gg", "ent", Seq(0.5))
-        .select(col("value").as("med"))
-      ent.crossJoin(broadcast(med))
-        .select(col("doc_id"),
-          e6Witness(col("ent")).as("entropy_e6"),
-          (col("ent") >= col("med") * 0.7 && col("ent") <= col("med") * 1.3)
-            .as("in_band"))
-        .orderBy("doc_id")
-    },
-
-    // interpolated bigram LM quality score (KenLM-shaped): mean over the
-    // doc's bigram positions of log(0.7·P(w2|w1) + 0.3·P(w2)), corpus-MLE
-    // counts; docs with < 2 tokens have no positions and are omitted
-    "text_bigram_lp" -> { (s, dir) =>
-      TextAnalysis.bigramLogProb(Tables(s, dir, "documents")).orderBy("doc_id")
-    },
-
-    // Kneser-Ney interpolated bigram LM (Chen & Goodman 1998 eq. 18) —
-    // the continuation-count upgrade of text_bigram_lp; same four
-    // combiner aggregations, all keyed on gram/token
-    "text_kn_bigram" -> { (s, dir) =>
-      TextAnalysis.knBigramLogProb(Tables(s, dir, "documents")).orderBy("doc_id")
-    },
-
-    // per-doc corpus-duplication fraction (RefinedWeb-style duplicated
-    // n-gram share): shingle df join, no pair expansion
-    "text_dup_fraction" -> { (s, dir) =>
-      TextAnalysis.dupShingleFraction(Tables(s, dir, "documents")).orderBy("doc_id")
-    },
-
-    // lexical-diversity quality signals: type-token ratio + hapax share
-    // per doc — per-doc keyed aggregations only, scan-bound
-    "text_lexical_diversity" -> { (s, dir) =>
-      TextAnalysis.lexicalDiversity(Tables(s, dir, "documents")).orderBy("doc_id")
-    },
-
-    // Zipf-law OLS fit over the top-200 unigrams (rank by (count DESC,
-    // term) — a total order): the corpus-shape QA scalar. Vocabulary
-    // agg is the only corpus-sized stage; the fit runs on ≤200 rows
-    "text_zipf_fit" -> { (s, dir) =>
-      TextAnalysis.zipfFit(Tables(s, dir, "documents"), topN = 200)
-    },
-
-    // per-doc shingle novelty vs all EARLIER docs (min-owner df join —
-    // the "what does this shard add?" streaming-curation signal)
-    "text_novelty" -> { (s, dir) =>
-      TextAnalysis.shingleNovelty(Tables(s, dir, "documents")).orderBy("doc_id")
-    },
-
-    // cross-source shingle-overlap matrix — Jaccard + both directed
-    // containments per source pair, the "is this dump already inside
-    // the curated set?" pre-mixing diagnostic. Per-shingle pair
-    // expansion is bounded by the SOURCE count (collect_set over
-    // sources, never documents), ratios as e6 integer witnesses
-    "q_source_overlap" -> { (s, dir) =>
-      Dedup.sourceOverlap(Tables(s, dir, "documents"), n = 3)
-        .orderBy("src_a", "src_b")
-    },
-
-    // Heaps'-law vocabulary-growth exponent along the ingest order —
-    // first-owner df join + DISTRIBUTED prefix sums (no single-task
-    // window over the doc spine) + one-row closed-form OLS
-    "text_heaps_fit" -> { (s, dir) =>
-      TextAnalysis.heapsFit(Tables(s, dir, "documents"))
-    },
-
-    // corpus information rate: bigram entropy, first-word marginal,
-    // and the conditional H(w2|w1) — templated/looping feeds read low
-    // independent of vocabulary size
-    "text_entropy_rate" -> { (s, dir) =>
-      TextAnalysis.entropyRate(Tables(s, dir, "documents"))
-    },
-
-    // DSIR hashed-unigram importance weights (Xie et al. 2023): broadcast
-    // bucket models onto the token stream, decimal-exact per-doc sums
-    "q_dsir_weights" -> { (s, dir) =>
-      Curation.dsirWeights(Tables(s, dir, "documents"), targetLang = "en",
-          buckets = 512)
-        .orderBy("doc_id")
-    },
-
-    // link prediction on the simhash near-dup graph: common neighbors +
-    // Adamic-Adar over degree-capped wedge centers — the recall-repair
-    // pass for pairs whose band keys disagreed
-    "q_link_prediction" -> { (s, dir) =>
-      val und = Dedup.simhashPairs(Tables(s, dir, "documents"), hammingMax = 2)
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      Graph.adamicAdar(und, degCap = 64, minCn = 2)
-        .select(col("u").as("doc_a"), col("v").as("doc_b"), col("cn"), col("aa_e6"))
-        .orderBy("doc_a", "doc_b")
-    },
-
-    // ---- contrastive hard-negative mining (similar embedding, different
-    // cluster) ----
-
-    "mining_hard_negatives" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      Similarity.hardNegatives(
-        e.select(col("vec_id").as("id"), col("embedding").as("vec")),
-        e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"), col("embedding").as("qv")),
-        k = 10, centroidModulo = 40)
-        .select(col("qid"), col("rank"), col("label"),
-          e6Witness(col("score")).as("cos_e6"))
-        .orderBy("qid", "rank")
-    },
-
-    // ---- similarity: IVF-partitioned ANN ----
-
-    "ann_ivf" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.ivfTopK(vectors, queries, k = 10, centroidModulo = 40, nProbe = 2)
-        .select(col("qid"), col("rank"), col("label"), e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // filtered ANN (FAISS IDSelector): metadata predicate INSIDE the
-    // probed-cluster scan — k fills from surviving candidates (a
-    // post-filtered k-list would under-fill), and a selective predicate
-    // cuts distance work proportionally
-    "ann_ivf_filtered" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.ivfFilteredTopK(vectors, queries, k = 10,
-          centroidModulo = 40, nProbe = 2, pred = col("id") % 3 =!= 0)
-        .select(col("qid"), col("rank"), col("label"), e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // retrieval EVALUATION as an operator: recall@10 and MRR of the IVF
-    // ranking against the exact-kNN ground truth — the metric job every
-    // retrieval team runs after an index build. Both rankings are
-    // deterministic engine outputs with SQL-exact formulations, so the
-    // metrics themselves hash-match (no verdict needed): MRR uses the
-    // exact TOP-1 item's reciprocal rank in the approximate list, 0 when
-    // absent; ranks/overlaps are pure integer arithmetic
-    "q_eval_recall_mrr" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("rank").as("erank"), col("label"))
-      val approx = Similarity.ivfTopK(vectors, queries, k = 10,
-          centroidModulo = 40, nProbe = 2)
-        .select(col("qid"), col("rank").as("arank"), col("label"))
-      val common = exact.join(approx, Seq("qid", "label"))
-      val recall = common.groupBy(col("qid"))
-        .agg(count(lit(1)).as("n_common"))
-      val mrr = common.filter(col("erank") === 1)
-        .select(col("qid"), (lit(1.0) / col("arank").cast(DoubleType)).as("rr"))
-      queries.select(col("qid"))
-        .join(recall, Seq("qid"), "left")
-        .join(mrr, Seq("qid"), "left")
-        .select(col("qid"),
-          coalesce(col("n_common"), lit(0L)).as("n_common"),
-          e4Witness(coalesce(col("n_common"), lit(0L)).cast(DoubleType) / 10.0
-           ).as("recall_at_10_e4"),
-          e4Witness(coalesce(col("rr"), lit(0.0))).as("mrr_e4"))
-        .orderBy("qid")
-    },
-
-    // nDCG@10 of the IVF serve path against the exact ranking — the
-    // position-weighted retrieval-quality companion to
-    // q_eval_recall_mrr (recall counts hits; nDCG also charges for
-    // putting them in the wrong order). Graded relevance = 11 − exact
-    // rank; the 1/log2(i+1) position discounts are 6-dp integer LITERAL
-    // constants in both engines (no runtime libm log in the hash path),
-    // so DCG and nDCG reduce to exact BIGINT sums and one integer
-    // division — IDCG is the closed-form 29 966 114 (all ten exact
-    // items in exact order). Plan shape: both rankings are the bounded
-    // nq·k frames the ANN family already produces; everything after is
-    // arithmetic on ≤ 80 rows.
-    "q_eval_ndcg" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("rank").as("erank"), col("label"))
-      val approx = Similarity.ivfTopK(vectors, queries, k = 10,
-          centroidModulo = 40, nProbe = 2)
-        .select(col("qid"), col("rank").as("arank"), col("label"))
-      val wts = typedlit(Seq(1000000L, 630930L, 500000L, 430677L, 386853L,
-        356207L, 333333L, 315465L, 301030L, 289065L))
-      val rel = approx.join(exact, Seq("qid", "label"), "left")
-        .select(col("qid"), col("arank"),
-          coalesce(lit(11L) - col("erank"), lit(0L)).as("rel"))
-      val d = rel
-        .withColumn("w_e6", element_at(wts, col("arank").cast(IntegerType)))
-        .groupBy(col("qid")).agg(sum(col("rel") * col("w_e6")).as("dcg"))
-      queries.select(col("qid")).join(d, Seq("qid"), "left")
-        .select(col("qid"),
-          coalesce(col("dcg"), lit(0L)).as("dcg_e6"),
-          expr("(coalesce(dcg, 0) * 1000000) div 29966114").as("ndcg_e6"))
-        .orderBy("qid")
-    },
-
-    // IVF over SQ8 storage (FAISS "IVF…,SQ8" factory composite): coarse
-    // pruning scans nProbe/nClusters of the corpus AND each scanned record
-    // is 4× smaller (int8 codes + scale, decoded in-register). Assignment
-    // on the raw vector at ingest → inverted lists identical to ann_ivf's;
-    // decode is exact double arithmetic + one IEEE float rounding, so the
-    // whole composite is hash-exact against SQL, not a recall bound
-    "ann_ivf_sq8" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.ivfSq8TopK(vectors, queries, k = 10, centroidModulo = 40, nProbe = 2)
-        .select(col("qid"), col("rank"), col("label"), e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // one rung further: IVF over nibble-packed SQ4 storage (8× fewer
-    // scanned bytes than fp32) — same raw-vector inverted lists, same
-    // exact decode arithmetic, so this composite hash-oracles too
-    "ann_ivf_sq4" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.ivfSq4TopK(vectors, queries, k = 10, centroidModulo = 40, nProbe = 2)
-        .select(col("qid"), col("rank"), col("label"), e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // product-quantization ANN: m=8 sub-codebooks of every-25th vector,
-    // codes + ADC scan (the 32×-compression scale path). Deterministic
-    // codebook → the whole operator, tie-breaks included, reproduces in
-    // the SQL oracle
-    "ann_pq" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      // dist IS the 1e-6-rounded ADC score — no second rounding (round4 of
-      // a round6 value lands on .5 boundaries where binary-vs-decimal
-      // rounding diverges between engines)
-      Similarity.pqTopK(vectors, queries, k = 10, centroidModulo = 25, m = 8)
-        .select(col("qid"), col("rank"), col("label"), col("score").as("dist"))
-        .orderBy("qid", "rank")
-    },
-
-    // IVFPQ composite: coarse-cluster pruning (nProbe=2 of ~12) × PQ codes
-    // (m=8) — the classic billion-scale index; both codebooks deterministic
-    // so the whole pipeline reproduces in SQL
-    "ann_ivfpq" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.ivfPqTopK(vectors, queries, k = 10,
-        ivfModulo = 40, nProbe = 2, pqModulo = 25, m = 8)
-        .select(col("qid"), col("rank"), col("label"), col("score").as("dist"))
-        .orderBy("qid", "rank")
-    },
-
-    // binary (1-bit) embedding search: packed sign bits + Hamming ranking
-    // (the 32×-compression end of the ladder; integer-exact, so the oracle
-    // reproduces it bit-for-bit)
-    "ann_hamming" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.hammingTopK(vectors, queries, k = 10)
-        .select(col("qid"), col("rank"), col("label"),
-          col("score").cast(LongType).as("hamming"))
-        .orderBy("qid", "rank")
-    },
-
-    // binary-coarse two-stage retrieval: hamming shortlist (40 candidates)
-    // → exact fp32 rerank to top-10; both stages deterministic → oracled
-    "ann_hamming_rerank" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.hammingRerankTopK(vectors, queries, k = 10, expand = 4)
-        .select(col("qid"), col("rank"), col("label"),
-          e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // MMR diversity re-ranking: top-20 cosine candidates per query,
-    // greedy λ=0.5 selection of 5 (relevance minus max-sim-to-selected) —
-    // the retrieval-diversification pass of a RAG pipeline
-    "ann_mmr" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.mmrTopK(vectors, queries, k = 5, candN = 20, lambda = 0.5)
-        .orderBy("qid", "rank")
-    },
-
-    // ---- salted (skew-safe) two-stage aggregation — must equal the
-    //      direct groupBy exactly (decimal sums are order-independent) ----
-
-    "q_salted_agg" -> { (s, dir) =>
-      graft.ops.Skew.saltedSumCount(
-        Tables(s, dir, "lineitem"),
-        Seq("l_returnflag"), dec(col("l_quantity")), "qty", buckets = 16)
-        .select(col("l_returnflag"),
-          col("sum_qty").cast(DoubleType).as("sum_qty"), col("n_rows"))
-        .orderBy("l_returnflag")
-    },
-
-    // salted skew-safe join — must produce exactly the plain join's rows.
-    // The replicated side must be the SMALL one (supplier: buckets× a few
-    // rows); hot lineitem supplier-keys spread over `buckets` reducers
-    "q_salted_join" -> { (s, dir) =>
-      graft.ops.Skew.saltedJoin(
-        Tables(s, dir, "lineitem").filter(col("l_quantity") >= 45),
-        Tables(s, dir, "supplier").select(col("s_suppkey").as("l_suppkey"),
-          col("s_nationkey")),
-        key = "l_suppkey", buckets = 8)
-        .groupBy(col("s_nationkey").cast(LongType).as("nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("l_extendedprice"))).cast(DoubleType).as("sum_price"))
-        .orderBy("nationkey")
-    },
-
-    // cohort retention: per signup-day cohort, share of users active
-    // again 1 and 7 days later
-    "q_events_retention" -> { (s, dir) =>
-      // ev feeds both the cohort agg and the activity set — materialize once
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("d"))
-        .localCheckpoint(true)
-      val first = ev.groupBy(col("user_id")).agg(min(col("d")).as("cohort_day"))
-      val activity = ev.select(col("user_id"), col("d")).distinct()
-      first.join(activity, "user_id")
-        .groupBy(col("cohort_day"))
-        .agg(countDistinct(col("user_id")).as("n_users"),
-          countDistinct(when(col("d") === date_add(col("cohort_day"), 1), col("user_id")))
-            .as("d1_retained"),
-          countDistinct(when(col("d") === date_add(col("cohort_day"), 7), col("user_id")))
-            .as("d7_retained"))
-        .orderBy("cohort_day")
-    },
-
-    // ---- text analysis: quality, language ID, fingerprint ----
-
-    "text_quality" -> { (s, dir) =>
-      TextAnalysis.quality(Tables(s, dir, "documents")).orderBy("doc_id")
-    },
-
-    // calibration / reliability diagram + ECE decomposition (Naeini 2015
-    // / Guo 2017's metric over a deterministic scorer): buckets the
-    // type-token-ratio "score" into deciles and compares mean score vs
-    // the realized rate of the event it implicitly predicts (short
-    // docs — TTR is length-confounded, which is exactly what a
-    // reliability plot exposes in a quality-filter pipeline before
-    // anyone trusts the score as a probability). One groupBy(bucket)
-    // pass; per-element 6-dp decimal quantization makes the bucket
-    // sums reduction-order-exact, and every post-aggregate double op
-    // is the identical IEEE tree on both engines.
-    "q_calibration" -> { (s, dir) =>
-      // r17 (verdict task #2): the per-element ROUND(ttr, 6) decimal was
-      // the last engine-defined quantizer in this dataflow — each score
-      // now quantizes through the floor e6 witness, the per-bucket sum
-      // runs in exact LONG (≤ n·1e6, int64-safe past 1e11 docs), and the
-      // bucket means are sign-safe integer floordivs — no double is
-      // summed, divided, or emitted anywhere in the query.
-      val q = TextAnalysis.quality(Tables(s, dir, "documents"))
-      val agg = q.select(
-          least(floor(col("type_token_ratio") * 10.0), lit(9L)).as("bucket"),
-          e6Witness(col("type_token_ratio")).as("s6"),
-          when(col("n_tokens") <= 48, 1L).otherwise(0L).as("y"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"), sum(col("s6")).as("ss"), sum(col("y")).as("sy"))
-      val tot = agg.agg(sum(col("n")).as("n_all"))
-      agg.crossJoin(broadcast(tot))
-        .select(col("bucket"), col("n"), col("n_all"),
-          expr("(2 * ss + n) div (2 * n)").as("avg_score_e6"),
-          expr("(2 * sy * 1000000 + n) div (2 * n)").as("pos_rate_e6"))
-        .withColumn("abs_gap_e6", abs(col("avg_score_e6") - col("pos_rate_e6")))
-        // ece_e6 = round-half-up(n·gap/n_all): pure integer floordiv —
-        // (2·n·gap + n_all) div (2·n_all); operands stay far under 2^63
-        .withColumn("ece_contrib_e6",
-          expr("(2 * n * abs_gap_e6 + n_all) div (2 * n_all)"))
-        .select(col("bucket"), col("n"), col("avg_score_e6"),
-          col("pos_rate_e6"), col("abs_gap_e6"), col("ece_contrib_e6"))
-        .orderBy("bucket")
-    },
-
-    "text_langid" -> { (s, dir) =>
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.langId(col("text")).as("pred_lang"))
-        .orderBy("doc_id")
-    },
-
-    "text_fingerprint" -> { (s, dir) =>
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")
-    },
-
-    // BPE-style pre-tokenization count (unicode letter/number boundaries)
-    "text_bpe_tokens" -> { (s, dir) =>
-      Tables(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.bpeishTokenCount(col("text")).cast(LongType).as("n_bpe_tokens"))
-        .orderBy("doc_id")
-    },
-
-    // REAL corpus-trained BPE (Sennrich 2016): merge table trained on the
-    // corpus's own word histogram (bounded, deterministic tie order),
-    // applied as a narrow compiled pass. Token COUNTS have no closed SQL
-    // form, so the oracle is the seeded-ANN pattern: it reproduces the
-    // SQL-expressible pre-token count exactly and asserts the machine-
-    // checked invariants the Spark side computes for real —
-    //  roundtrip_ok: concat(bpe tokens) == concat(pre-tokens) per doc
-    //    (segmentation is exact, tokens never cross a pre-token boundary);
-    //  bounds_ok: n_pretok <= n_bpe_tokens <= total pre-token chars
-    //    (each pre-token is >= 1 token; each token is >= 1 char);
-    //  compressed: Σ n_bpe_tokens < Σ chars globally (training actually
-    //    found repeating pairs — a no-op tokenizer fails this).
-    // Gopher repetition filters (Rae 2021): fraction of document chars in
-    // the most frequent 2/3/4-gram — per-doc narrow compiled pass, ties
-    // to the lexicographically smallest gram, short docs report ("", 0)
-    "text_repetition" -> { (s, dir) =>
-      TextAnalysis.repetition(Tables(s, dir, "documents"))
-        .orderBy("doc_id")
-    },
-
-    "text_bpe_real" -> { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val merges = TextAnalysis.trainBpe(docs, numMerges = 200)
-      val perDoc = docs
-        .select(col("doc_id"),
-          graft.functions.bpeEncode(col("text"), merges).as("t"),
-          TextAnalysis.pretokens(col("text")).as("p"))
-        .select(col("doc_id"),
-          size(col("p")).cast(LongType).as("n_pretok"),
-          size(col("t")).cast(LongType).as("n_bpe"),
-          length(concat_ws("", col("p"))).cast(LongType).as("n_chars"),
-          (concat_ws("", col("t")) === concat_ws("", col("p"))).as("roundtrip_ok"))
-        .localCheckpoint(true)
-      val totals = perDoc
-        .agg((sum(col("n_bpe")) < sum(col("n_chars"))).as("compressed"))
-      perDoc.crossJoin(broadcast(totals))
-        .select(col("doc_id"), col("n_pretok"), col("roundtrip_ok"),
-          (col("n_bpe") >= col("n_pretok") && col("n_bpe") <= col("n_chars"))
-            .as("bounds_ok"),
-          col("compressed"))
-        .orderBy("doc_id")
-    },
-
-    // ---- TPC-H-shaped additions (round 2) ----
-
-    // Q4 shape: EXISTS with a non-equi correlated predicate. Evaluated as
-    // aggregate-below-join: max(l_shipdate) per order first (map-side
-    // combined, 4-7× row reduction), then one equi join + filter — the
-    // existence test needs only the extreme value, so the semi join never
-    // has to probe every matching lineitem row. (q_semi_join keeps the
-    // plain left-semi surface.)
-    "q4_order_priority" -> { (s, dir) =>
-      val lastShip = Tables(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(max(col("l_shipdate")).as("last_ship"))
-      Tables(s, dir, "orders")
-        .join(lastShip, col("o_orderkey") === col("l_orderkey"))
-        .filter(col("last_ship") > col("o_orderdate"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy("o_orderpriority")
-    },
-
-    // Q10 shape: 3-way join, revenue per customer, top 20
-    "q10_returned_revenue" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-      val o = Tables(s, dir, "orders")
-      val c = Tables(s, dir, "customer")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"))
-        .agg(sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount"))))
-          .cast(DoubleType).as("revenue"))
-        .orderBy(desc("revenue"), col("c_custkey"))
-        .limit(20)
-    },
-
-    // Q18 shape: HAVING on a grouped sum, joined back to orders
-    "q18_large_orders" -> { (s, dir) =>
-      val big = Tables(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(dec(col("l_quantity"))).as("tq"))
-        .filter(col("tq") > 200)
-      Tables(s, dir, "orders")
-        .join(big, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          col("tq").cast(DoubleType).as("total_qty"))
-        .orderBy("o_orderkey")
-    },
-
-    // TPC-H Q21 (suppliers who kept the order waiting) — the canonical
-    // double-correlated EXISTS / NOT EXISTS join stressor, adapted to
-    // this schema (no commit/receipt dates: the "failed" line predicate
-    // is l_returnflag = 'R'). Expressed Spark-first as LEFT SEMI (some
-    // OTHER supplier shares the order) + LEFT ANTI (no OTHER supplier's
-    // line was returned) — both key on l_orderkey, so after the fact
-    // shuffle the three join legs are co-partitioned; supplier and
-    // nation are broadcast dims; output is supplier-bounded. No
-    // cartesian anywhere; the semi/anti forms stop at first match
-    // instead of multiplying rows the way an inner self-join would.
-    "q21_waiting_supplier" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val o = Tables(s, dir, "orders")
-      val sup = Tables(s, dir, "supplier")
-      val n = Tables(s, dir, "nation")
-      val l1 = li.filter(col("l_returnflag") === "R")
-        .join(o.filter(col("o_orderstatus") === "F")
-          .select(col("o_orderkey")), col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_linenumber"))
-      val l2 = li.select(col("l_orderkey").as("k2"), col("l_suppkey").as("s2"))
-      val l3 = li.filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey").as("k3"), col("l_suppkey").as("s3"))
-      l1.join(l2, col("l_orderkey") === col("k2") && col("l_suppkey") =!= col("s2"),
-          "left_semi")
-        .join(l3, col("l_orderkey") === col("k3") && col("l_suppkey") =!= col("s3"),
-          "left_anti")
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n.filter(col("n_nationkey") <= 4)),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(desc("numwait"), col("s_name"))
-        .limit(100)
-    },
-
-    // TPC-H Q20 (excess supply) — nested semi-join stack with a
-    // correlated aggregate threshold, adapted to this schema (no
-    // partsupp: "availqty" is the supplier's shipped quantity of the
-    // part in 1996). A supplier qualifies if, for SOME filtered part,
-    // its 1996 shipments exceed half of that part's total 1996
-    // shipments. All-integer threshold (2·supp_qty > part_total — the
-    // quantities are integral longs), so no float ever decides a row.
-    // Plan: the filtered part list broadcast-semi-joins into the fact
-    // scan; per-(supp, part) and per-part aggs share one shuffle key
-    // family; the final supplier list is a semi join onto a dim.
-    "q20_excess_supply" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val p = Tables(s, dir, "part")
-      val sup = Tables(s, dir, "supplier")
-      val n = Tables(s, dir, "nation")
-      val parts = p.filter(col("p_name").startsWith("small"))
-        .select(col("p_partkey"))
-      val supply = li
-        .filter(col("l_shipdate") >= "1996-01-01" && col("l_shipdate") < "1997-01-01")
-        .join(broadcast(parts), col("l_partkey") === col("p_partkey"), "left_semi")
-        .select(col("l_suppkey"), col("l_partkey"),
-          col("l_quantity").cast(LongType).as("q"))
-        .localCheckpoint(true) // feeds both the per-supplier and per-part aggs
-      val perSupp = supply.groupBy(col("l_suppkey"), col("l_partkey"))
-        .agg(sum(col("q")).as("sq"))
-      val perPart = supply.groupBy(col("l_partkey")).agg(sum(col("q")).as("tq"))
-      val qualifying = perSupp.join(perPart, "l_partkey")
-        .filter(col("sq") * 2 > col("tq"))
-        .select(col("l_suppkey")).distinct()
-      // nation cut <= 15, not <= 9 (r16 ADVICE): at sf0.001 every
-      // half-share qualifier sat in nations 12+, so the <= 9 pin was the
-      // empty-result hash and the tier gate was vacuous; <= 15 keeps 3
-      // qualifiers at sf0.001 and stays selective at every larger scale
-      sup.join(qualifying, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .join(broadcast(n.filter(col("n_nationkey") <= 15)),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_name"), col("n_name"))
-        .orderBy("s_name")
-    },
-
-    // TPC-H Q22 (global sales opportunity) — the anti-join + scalar-
-    // aggregate-threshold shape: dormant rich customers (above-average
-    // balance, no order since 2000 — this generator gives every
-    // customer SOME order, so recency is the dormancy cut), grouped by
-    // nation band (standing in for the phone country code). The average threshold is applied as an
-    // EXACT cross-multiplied decimal compare (bal·n > Σbal), so no
-    // division or float decides membership on either engine; the order
-    // probe is a LEFT ANTI join (stops at first match, no row
-    // multiplication); emission is exact cents.
-    "q22_dormant_customers" -> { (s, dir) =>
-      val c = Tables(s, dir, "customer")
-      val o = Tables(s, dir, "orders")
-      val band = c.filter(col("c_nationkey") <= 6)
-      val pos = band.filter(dec(col("c_acctbal")) > 0)
-        .agg(count(lit(1)).as("npos"),
-          sum(dec(col("c_acctbal"))).as("sumpos"))
-      band.crossJoin(broadcast(pos))
-        .filter(dec(col("c_acctbal")) * col("npos") > col("sumpos"))
-        .join(o.filter(col("o_orderdate") >= "2000-01-01")
-          .select(col("o_custkey")),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("numcust"),
-          (sum(dec(col("c_acctbal"))) * 100).cast(DecimalType(38, 0))
-            .cast(LongType).as("totacctbal_cents"))
-        .orderBy("c_nationkey")
-    },
-
-    // TPC-H Q13 (customer order-count distribution) — the filtered
-    // LEFT OUTER join + double aggregation: customers keep their row
-    // even with zero qualifying orders (the histogram's zero bucket is
-    // the point of the query). The priority filter stands in for the
-    // o_comment NOT LIKE filter. Plan: one shuffle on custkey for the
-    // outer join + count, one combiner agg onto the bounded count
-    // domain.
-    "q13_order_histogram" -> { (s, dir) =>
-      val c = Tables(s, dir, "customer")
-      val o = Tables(s, dir, "orders")
-        .filter(!col("o_orderpriority").startsWith("4-"))
-        .select(col("o_custkey"), col("o_orderkey"))
-      c.select(col("c_custkey"))
-        .join(o, col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count")) // count skips nulls
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(desc("custdist"), desc("c_count"))
-    },
-
-    // TPC-H Q19 (discounted revenue over a disjunctive predicate) —
-    // the pushdown stressor: three (brand, size-range, quantity-range)
-    // OR-blocks spanning both join sides. Catalyst's CNF conversion
-    // pushes the part-only disjunction into the broadcast dim scan and
-    // the quantity disjunction into the fact scan, so the join input is
-    // pre-pruned on both sides. Emission is the exact 10⁻⁴-quantized
-    // revenue integer (the decimal sum is exact at scale 4; ×10⁴ is
-    // integral, so the cast rounds nothing).
-    "q19_disjunctive_revenue" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val p = Tables(s, dir, "part")
-      def block(brand: String, sizeHi: Int, qLo: Int, qHi: Int): Column =
-        col("p_brand") === brand &&
-        col("p_size").between(1, sizeHi) &&
-        col("l_quantity").between(qLo, qHi)
-      li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .filter(block("Brand#12", 5, 1, 11) ||
-                block("Brand#23", 10, 10, 20) ||
-                block("Brand#34", 15, 20, 30))
-        .agg(count(lit(1)).as("n_lines"),
-          (sum(dec(col("l_extendedprice")) *
-            (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount")))) * 10000)
-            .cast(DecimalType(38, 0)).cast(LongType).as("revenue_e4"))
-    },
-
-    // TPC-H Q17 (small-quantity-order revenue) — the correlated scalar
-    // AVG subquery a SQL user hits weekly: lines whose quantity is under
-    // 20% of their part's average. Decorrelated into one per-part agg
-    // re-joined to the brand-filtered fact slice; the threshold is the
-    // exact integer cross-multiply 5·q·n < Σq (quantities are integral
-    // longs), so no float ever decides a row. Plan: the part list
-    // broadcast-semi-joins the scan once; the agg and the re-join share
-    // the l_partkey shuffle key family (AQE broadcasts the agg side
-    // when small).
-    "q17_small_qty_revenue" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val parts = Tables(s, dir, "part")
-        .filter(col("p_brand") === "Brand#23").select(col("p_partkey"))
-      val fact = li
-        .join(broadcast(parts), col("l_partkey") === col("p_partkey"), "left_semi")
-        .select(col("l_partkey"), col("l_quantity").cast(LongType).as("q"),
-          col("l_extendedprice"))
-        .localCheckpoint(true) // feeds the per-part agg AND the re-join
-      val pp = fact.groupBy(col("l_partkey")).agg(
-          sum(col("q")).as("sumq"), count(lit(1)).as("nq"))
-        .withColumnRenamed("l_partkey", "pk")
-      fact.join(pp, col("l_partkey") === col("pk"))
-        .filter(col("q") * 5 * col("nq") < col("sumq"))
-        .agg(count(lit(1)).as("n_lines"),
-          (sum(dec(col("l_extendedprice"))) * 100)
-            .cast(DecimalType(38, 0)).cast(LongType).as("revenue_cents"))
-    },
-
-    // TPC-H Q2 (min-cost supplier) — the correlated scalar MIN subquery
-    // over a second dimension path. This schema has no partsupp, so
-    // "supply cost" is the cheapest line (exact cents) the supplier ever
-    // shipped the part at. Decorrelated: per-(part,supp) MIN, then
-    // per-part MIN over the region's suppliers, equi-joined back on
-    // (part, cost) to keep every min-achieving pair — set semantics,
-    // exactly TPC-H's own tie rule, so no tiebreak is needed for
-    // determinism (equal-sort-key rows are value-identical). Both aggs
-    // share the l_partkey key family; dims broadcast.
-    "q2_min_cost_supplier" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val p = Tables(s, dir, "part").filter(col("p_size") <= 5)
-        .select(col("p_partkey"))
-      val rs = Tables(s, dir, "supplier")
-        .join(broadcast(Tables(s, dir, "nation")
-          .filter(col("n_regionkey") === 1)),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_acctbal"), col("s_name"), col("n_name"))
-      val cost = li
-        .join(broadcast(rs.select(col("s_suppkey"))),
-          col("l_suppkey") === col("s_suppkey"), "left_semi")
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"), "left_semi")
-        .groupBy(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
-        .agg(min(round(col("l_extendedprice") * 100, 0).cast(LongType))
-          .as("cost_cents"))
-        .localCheckpoint(true) // feeds the per-part min AND the pair join
-      val mc = cost.groupBy(col("pk")).agg(min(col("cost_cents")).as("mcost"))
-        .withColumnRenamed("pk", "pk2")
-      cost.join(mc, col("pk") === col("pk2") && col("cost_cents") === col("mcost"))
-        .join(broadcast(rs), col("sk") === col("s_suppkey"))
-        .select(round(col("s_acctbal") * 100, 0).cast(LongType).as("bal_cents"),
-          col("s_name"), col("n_name"), col("pk").as("p_partkey"),
-          col("cost_cents"))
-        .orderBy(desc("bal_cents"), col("s_name"), col("p_partkey"),
-          col("n_name"), col("cost_cents"))
-        .limit(100)
-    },
-
-    // TPC-H Q15 (top supplier) — the revenue view + global scalar MAX:
-    // quarterly revenue per supplier, keep the max achiever(s). Exact
-    // e4 integer revenue; the 1-row max broadcasts into an equality
-    // filter (ties kept — TPC-H's own rule).
-    "q15_top_supplier" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val one = lit(1).cast(DecimalType(18, 2))
-      val rev = li
-        .filter(col("l_shipdate") >= "1996-01-01" && col("l_shipdate") < "1996-04-01")
-        .groupBy(col("l_suppkey"))
-        .agg((sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))) * 10000)
-          .cast(DecimalType(38, 0)).cast(LongType).as("total_rev_e4"))
-        .localCheckpoint(true) // feeds the max AND the equality filter
-      val mx = rev.agg(max(col("total_rev_e4")).as("mx"))
-      rev.crossJoin(broadcast(mx)).filter(col("total_rev_e4") === col("mx"))
-        .join(broadcast(Tables(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_rev_e4"))
-        .orderBy("s_suppkey")
-    },
-
-    // TPC-H Q11 (important stock) — the group-vs-global HAVING shape:
-    // per-part shipped value from one nation band's suppliers, kept when
-    // the part's value exceeds 2× the mean part value. TPC-H's fraction
-    // is SF-dependent (0.0001/SF); the mean-relative form is the
-    // scale-invariant equivalent, applied as the exact integer
-    // cross-multiply val·n_parts > 2·total on e4 decimals, so the gate
-    // is never decided by a float at any scale.
-    "q11_important_parts" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val one = lit(1).cast(DecimalType(18, 2))
-      val sup = Tables(s, dir, "supplier").filter(col("s_nationkey") <= 3)
-        .select(col("s_suppkey"))
-      val v = Tables(s, dir, "lineitem")
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"), "left_semi")
-        .groupBy(col("l_partkey"))
-        .agg((sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))) * 10000)
-          .cast(d38).as("val"))
-        .localCheckpoint(true) // feeds the global total AND the filter
-      val t = v.agg(sum(col("val")).as("tot"), count(lit(1)).as("np"))
-      v.crossJoin(broadcast(t))
-        .filter(col("val") * col("np") > col("tot") * 2)
-        .select(col("l_partkey"), col("val").cast(LongType).as("value_e4"))
-        .orderBy(desc("value_e4"), col("l_partkey"))
-    },
-
-    // TPC-H Q16 (supplier count by part descriptor) — COUNT(DISTINCT) +
-    // NOT IN: distinct shipping suppliers per (brand, type, size) over
-    // the filtered parts, excluding negative-balance suppliers (the
-    // complaints-comment proxy) via a broadcast ANTI join (NOT IN with a
-    // non-null key is exactly an anti join). One shuffle on the
-    // grouping key for the distinct.
-    "q16_supplier_count" -> { (s, dir) =>
-      val p = Tables(s, dir, "part")
-        .filter(col("p_brand") =!= "Brand#5" && col("p_type") =!= "PROMO" &&
-          col("p_size").isin(1, 4, 9, 16, 25, 36, 49))
-        .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-      val bad = Tables(s, dir, "supplier")
-        .filter(dec(col("s_acctbal")) < 0).select(col("s_suppkey"))
-      Tables(s, dir, "lineitem")
-        .join(broadcast(bad), col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(desc("supplier_cnt"), col("p_brand"), col("p_type"), col("p_size"))
-    },
-
-    // TPC-H Q9 (product-type profit by nation and year) — the 5-way
-    // star with a LIKE part filter. No partsupp: unit cost is the
-    // catalog stand-in 0.1·p_retailprice, so profit = Σ ext·(1−disc) −
-    // Σ 0.1·retail·qty; both sums are exact decimals and the emission is
-    // one e4 integer (retail·qty·1000 ≡ e4 of the 10% cost — nothing is
-    // ever rounded). Dims broadcast; the orders join is the only
-    // fact-fact shuffle, keyed on l_orderkey.
-    "q9_product_type_profit" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val one = lit(1).cast(DecimalType(18, 2))
-      val o = Tables(s, dir, "orders")
-        .select(col("o_orderkey"), year(col("o_orderdate")).cast(LongType).as("yr"))
-      val p = Tables(s, dir, "part").filter(col("p_name").endsWith("rod"))
-        .select(col("p_partkey"), col("p_retailprice"))
-      val sup = Tables(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey"))
-      Tables(s, dir, "lineitem")
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(Tables(s, dir, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"), col("yr"))
-        .agg(((sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))) * 10000).cast(d38) -
-            (sum(dec(col("p_retailprice")) * col("l_quantity").cast(LongType)) * 1000).cast(d38))
-            .cast(LongType).as("profit_e4"),
-          count(lit(1)).as("n_lines"))
-        .orderBy(col("n_name"), desc("yr"))
-    },
-
-    // TPC-H Q12 (shipping-priority counts) — join + conditional counts.
-    // This schema has no shipmode/commitdate: the mode proxy is
-    // l_linestatus and "late" is shipped more than 90 days after the
-    // order date, one shipment year. Integer counts end to end; the
-    // orders join is the one shuffle and the CASE counts fold map-side.
-    "q12_late_lines" -> { (s, dir) =>
-      val hi = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      Tables(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= "1997-01-01" && col("l_shipdate") < "1998-01-01")
-        .join(Tables(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority")),
-          col("l_orderkey") === col("o_orderkey"))
-        .filter(datediff(col("l_shipdate").cast(DateType),
-          col("o_orderdate").cast(DateType)) > 90)
-        .groupBy(col("l_linestatus"))
-        .agg(count(when(hi, 1)).as("high_line_count"),
-          count(when(!hi, 1)).as("low_line_count"))
-        .orderBy("l_linestatus")
-    },
-
-    // TPC-H Q14 (promo revenue share) — one shipment month; the share is
-    // the repo's integer-ratio witness: pct_e6 = floordiv(2·pr·1e8 + tr,
-    // 2·tr) over the exact e4 revenue integers (= 100·pr/tr at 6 dp,
-    // half-up; numerator nonnegative so plain floordiv is sign-correct).
-    // q_promo_share keeps the legacy double-share face; this is the
-    // declared Q14 with the witness emission.
-    "q14_promo_revenue" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val one = lit(1).cast(DecimalType(18, 2))
-      val rev = dec(col("l_extendedprice")) * (one - dec(col("l_discount")))
-      val agg = Tables(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= "1996-09-01" && col("l_shipdate") < "1996-10-01")
-        .join(broadcast(Tables(s, dir, "part")
-          .select(col("p_partkey"), col("p_type"))),
-          col("l_partkey") === col("p_partkey"))
-        .agg((sum(when(col("p_type") === "PROMO", rev)
-            .otherwise(lit(0).cast(DecimalType(18, 2)))) * 10000).cast(d38).as("pr"),
-          (sum(rev) * 10000).cast(d38).as("tr"),
-          count(lit(1)).as("n_lines"))
-      val num = col("pr") * lit(200000000L).cast(d38) + col("tr")
-      val den = col("tr") * lit(2)
-      agg.select(((num - pmod(num, den)) / den).cast(LongType).as("promo_pct_e6"),
-        col("pr").cast(LongType).as("promo_rev_e4"),
-        col("tr").cast(LongType).as("total_rev_e4"),
-        col("n_lines"))
-    },
-
-    // conditional aggregation (count/sum over CASE predicates)
-    "q_conditional_agg" -> { (s, dir) =>
-      Tables(s, dir, "orders")
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          count(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)).as("n_high"),
-          count(when(col("o_orderpriority") === "5-LOW", 1)).as("n_low"),
-          count(lit(1)).as("n_total"),
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), dec(col("o_totalprice"))))
-            .cast(DoubleType).as("high_revenue"))
-        .orderBy("o_orderstatus")
-    },
-
-    // Q14 shape: ratio of conditional revenue (promo share)
-    "q_promo_share" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val p = Tables(s, dir, "part")
-      val rev = dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount")))
-      li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .agg(
-          (lit(100.0) * sum(when(col("p_type") === "PROMO", rev)).cast(DoubleType)
-            / sum(rev).cast(DoubleType)).as("promo_share"),
-          count(lit(1)).as("n_rows"))
-    },
-
-    // GROUPING SETS with grouping() flags (SQL surface)
-    "q_grouping_sets" -> { (s, dir) =>
-      Tables(s, dir, "lineitem").createOrReplaceTempView("graft_lineitem_gs")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus,
-          |  CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
-          |  CAST(grouping(l_linestatus) AS BIGINT) AS g_ls,
-          |  COUNT(*) AS n,
-          |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-          |FROM graft_lineitem_gs
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-          |ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin)
-    },
-
-    // pivot: status columns per priority row
-    "q_pivot" -> { (s, dir) =>
-      Tables(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(sum(dec(col("o_totalprice"))).cast(DoubleType))
-        .select(col("o_orderpriority"), col("F").as("f_total"),
-          col("O").as("o_total"), col("P").as("p_total"))
-        .orderBy("o_orderpriority")
-    },
-
-    // max_by / min_by with an epsilon tie-break key (acctbal has exact
-    // duplicates at sf0.1; custkey·1e-9 is far below the 0.01 grid, so the
-    // key is unique and both engines pick the smaller custkey on ties)
-    "q_minmax_by" -> { (s, dir) =>
-      Tables(s, dir, "customer")
-        .groupBy(col("c_nationkey").cast(LongType).as("nationkey"))
-        .agg(
-          max_by(col("c_custkey"), col("c_acctbal") - col("c_custkey") * lit(1e-9)).as("richest_cust"),
-          max(col("c_acctbal")).as("max_bal"),
-          min_by(col("c_custkey"), col("c_acctbal") + col("c_custkey") * lit(1e-9)).as("poorest_cust"),
-          min(col("c_acctbal")).as("min_bal"))
-        .orderBy("nationkey")
-    },
-
-    // exact MODE per group with a deterministic tie policy (most frequent
-    // o_orderpriority per order month; ties → lexicographically smallest
-    // mode). Shape: one combiner-friendly groupBy to the (month, priority)
-    // frequency table — the only corpus-wide pass — then a row_number
-    // window whose partitions are bounded by the mode-domain size (≤ 5
-    // rows each), the always-safe window class. The frequency share
-    // quantizes through exact BIGINT arithmetic
-    // (floor(cnt·1e6/total + 1/2) as integer ops), never a ROUND(double)
-    // — the boundary-proof emission convention.
-    "q_mode_by_group" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val freq = Tables(s, dir, "orders")
-        .groupBy(trunc(col("o_orderdate"), "month").as("order_month"),
-          col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy(col("order_month"))
-        .orderBy(col("cnt").desc, col("o_orderpriority"))
-      val tot = Window.partitionBy(col("order_month"))
-      freq
-        .withColumn("rn", row_number().over(w))
-        .withColumn("total", sum(col("cnt")).over(tot))
-        .filter(col("rn") === 1)
-        .select(col("order_month"), col("o_orderpriority").as("mode_priority"),
-          col("cnt").as("mode_count"),
-          expr("(cnt * 2000000 + total) div (total * 2)").as("share_e6"))
-        .orderBy("order_month")
-    },
-
-    // cumulative window (running decimal sum → exact)
-    "q_running_sum" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables(s, dir, "orders")
-        .filter(col("o_custkey") <= 200)
-        .select(col("o_custkey"), col("o_orderkey"),
-          sum(dec(col("o_totalprice"))).over(w).cast(DoubleType).as("running_spend"),
-          count(lit(1)).over(w).as("n_so_far"))
-        .orderBy("o_custkey", "o_orderkey")
-    },
-
-    // sliding-frame moving average (3-row; exact decimal sum / count)
-    "q_moving_avg" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(-2, Window.currentRow)
-      Tables(s, dir, "orders")
-        .filter(col("o_custkey") <= 200)
-        .select(col("o_custkey"), col("o_orderkey"),
-          (sum(dec(col("o_totalprice"))).over(w).cast(DoubleType) / count(lit(1)).over(w))
-            .as("avg3"))
-        .orderBy("o_custkey", "o_orderkey")
-    },
-
-    // EXACT rolling median over a 7-row sliding frame — the robust
-    // moving-average companion (a single fat-finger order perturbs avg3
-    // above; the median shrugs it off). Only full frames emit, so the
-    // median is always the 4th of 7 sorted DECIMAL values — an actual
-    // data value, no interpolation, no engine-defined even-count
-    // semantics; the decimal→double cast is correctly rounded on both
-    // engines. Shape: the frame is 7 rows by construction, so the
-    // collect+sort per row is O(7 log 7) — the bounded-frame window
-    // class (same safety argument as q_moving_avg), NEVER a
-    // percentile over an unbounded partition.
-    "q_rolling_median" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(-6, Window.currentRow)
-      Tables(s, dir, "orders")
-        .filter(col("o_custkey") <= 200)
-        .select(col("o_custkey"), col("o_orderkey"),
-          sort_array(collect_list(dec(col("o_totalprice"))).over(w)).as("win"),
-          count(lit(1)).over(w).as("nwin"))
-        .filter(col("nwin") === 7)
-        .select(col("o_custkey"), col("o_orderkey"),
-          element_at(col("win"), 4).cast(DoubleType).as("med7"))
-        .orderBy("o_custkey", "o_orderkey")
-    },
-
-    // the same exact 7-frame rolling median over the EVENTS stream —
-    // the batch face of StreamingOps.streamingRollingMedian, whose
-    // streaming ≡ batch bit-exactness is spec-pinned (StreamingSpec):
-    // integer cents in (ts_us, event_id) order, median = 4th of 7
-    // sorted longs, full frames only. Bounded-frame window class; the
-    // user filter keeps the gate row count proportionate.
-    "q_rolling_median_stream" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(-6, Window.currentRow)
-      Tables.events(s, dir)
-        .filter(col("user_id") <= 100)
-        .withColumn("ts_us", expr("unix_micros(ts)"))
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          round(col("value") * 100, 0).cast(LongType).as("cents"))
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          sort_array(collect_list(col("cents")).over(w)).as("win"),
-          count(lit(1)).over(w).as("nwin"))
-        .filter(col("nwin") === 7)
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          element_at(col("win"), 4).as("med7_cents"))
-        .orderBy("user_id", "ts_us", "event_id")
-    },
-
-    // batch face of StreamingOps.streamingModeByGroup (r16 verdict task
-    // #7): per event, the running MODE of the user's event types so far,
-    // ties to the smallest type. The argmax rides a sortable string
-    // encoding min(lpad(1e10 − rc) ∥ type) — identical byte-wise
-    // comparison on both engines (counts < 1e10 per user by corpus
-    // construction); streaming ≡ batch is spec-pinned bit-exact.
-    "q_mode_stream" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w1 = Window.partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val w2 = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, dir)
-        .filter(col("user_id") <= 100)
-        .withColumn("ts_us", expr("unix_micros(ts)"))
-        .withColumn("rc", count(lit(1)).over(w1))
-        .withColumn("best", min(concat(
-          lpad((lit(10000000000L) - col("rc")).cast(StringType), 12, "0"),
-          col("event_type"))).over(w2))
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          expr("substr(best, 13)").as("mode_type"),
-          (lit(10000000000L) - substring(col("best"), 1, 12).cast(LongType))
-            .as("mode_count"))
-        .orderBy("user_id", "ts_us", "event_id")
-    },
-
-    // batch face of StreamingOps.streamingBenford: per event, the
-    // running count of the event value's leading digit and the running
-    // total for the user — pure integer counting over two running COUNT
-    // windows, with the same ≥ 1 domain guard as q_benford.
-    "q_benford_stream" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w1 = Window.partitionBy(col("user_id"), col("digit"))
-        .orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val w2 = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, dir)
-        .filter(col("user_id") <= 100 && dec(col("value")) >= 1)
-        .withColumn("ts_us", expr("unix_micros(ts)"))
-        .withColumn("digit",
-          substring(dec(col("value")).cast(StringType), 1, 1).cast(LongType))
-        .withColumn("digit_n", count(lit(1)).over(w1))
-        .withColumn("n", count(lit(1)).over(w2))
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          col("digit"), col("digit_n"), col("n"))
-        .orderBy("user_id", "ts_us", "event_id")
-    },
-
-    // batch face of StreamingOps.streamingLagAutocorr: the exact running
-    // (n, Σx, Σx², Σ xᵢ·xᵢ₋₁) lag-1 witnesses per user over integer
-    // cents — lag-1 Pearson is one closed-form expression over these,
-    // and emitting the integer sums keeps the face loss-free.
-    "q_autocorr_stream" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val wl = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-      val w2 = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, dir)
-        .filter(col("user_id") <= 100)
-        .withColumn("ts_us", expr("unix_micros(ts)"))
-        .withColumn("cents", round(col("value") * 100, 0).cast(LongType))
-        .withColumn("p", lag(col("cents"), 1).over(wl))
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          count(lit(1)).over(w2).as("n"),
-          sum(col("cents")).over(w2).as("s1"),
-          sum(col("cents") * col("cents")).over(w2).as("s2"),
-          sum(coalesce(col("cents") * col("p"), lit(0L))).over(w2).as("sl1"))
-        .orderBy("user_id", "ts_us", "event_id")
-    },
-
-    // batch face of StreamingOps.streamingCusum: per-user running CUSUM
-    // S = max(0, S + (cents − ref)) over events — emitted through the
-    // reflected-walk closed form S_i = P_i − min(0, min_{j≤i} P_j)
-    // (P = plain prefix sum), which IS window-expressible, unlike the
-    // clamped recurrence itself. Exact longs end to end; ref is the
-    // exact floor of the filtered set's mean cents.
-    "q_cusum_stream" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, dir)
-        .filter(col("user_id") <= 100)
-        .withColumn("ts_us", expr("unix_micros(ts)"))
-        .withColumn("cents", round(col("value") * 100, 0).cast(LongType))
-        .localCheckpoint(true) // feeds the ref scalar AND the windows
-      val st = ev.agg(sum(col("cents")), count(lit(1))).head()
-      val ref = st.getLong(0) / st.getLong(1) // exact floor division
-      val w2 = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("ps", sum(col("cents") - lit(ref)).over(w2))
-        .withColumn("mn", min(col("ps")).over(w2))
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          (col("ps") - least(col("mn"), lit(0L))).as("cusum"))
-        .orderBy("user_id", "ts_us", "event_id")
-    },
-
-    // batch face of StreamingOps.streamingKsToRef: per-user running
-    // two-sample KS sup-gap against the filtered set's own global
-    // bucket histogram (the frozen reference), as the exact INTEGER
-    // numerator max_b |cum_u(b)·n_ref − refCum(b)·n| — ten conditional
-    // running counts per row, a GREATEST over ten integer cross
-    // products, no doubles anywhere.
-    "q_ks_stream" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val base = Tables.events(s, dir)
-        .filter(col("user_id") <= 100)
-        .withColumn("ts_us", expr("unix_micros(ts)"))
-        .withColumn("cents", round(col("value") * 100, 0).cast(LongType))
-        .localCheckpoint(true)
-      val mm = base.agg(min(col("cents")), max(col("cents"))).head()
-      val (mn, mx) = (mm.getLong(0), mm.getLong(1))
-      val ev = base.withColumn("bk",
-        least(expr(s"((cents - $mn) * 10) div (${mx - mn + 1}L)"), lit(9L)))
-        .localCheckpoint(true)
-      val refRow = ev.groupBy().pivot("bk", 0L to 9L).count().na.fill(0L).head()
-      val refCum = (0 to 9).map(refRow.getLong).scanLeft(0L)(_ + _).tail
-      val nRef = refCum.last
-      val w2 = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val withCums = (0 to 9).foldLeft(ev) { (d, b) =>
-        d.withColumn(s"c$b",
-          sum(when(col("bk") <= b, lit(1L)).otherwise(lit(0L))).over(w2))
-      }
-      val n = col("c9")
-      val gaps = (0 to 9).map(b => abs(col(s"c$b") * lit(nRef) - lit(refCum(b)) * n))
-      withCums.select(col("user_id"), col("event_id"), col("ts_us"),
-        n.as("n"), greatest(gaps: _*).as("ks_num"))
-        .orderBy("user_id", "ts_us", "event_id")
-    },
-
-    // ranking-function surface: ntile / percent_rank / cume_dist / dense_rank
-    "q_ntile_rank" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_orderstatus"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      Tables(s, dir, "orders")
-        .filter(col("o_custkey") <= 50)
-        .select(col("o_orderstatus"), col("o_orderkey"), col("o_totalprice"),
-          ntile(4).over(w).cast(LongType).as("quartile"),
-          percent_rank().over(w).as("pct_rank"),
-          cume_dist().over(w).as("cume"),
-          dense_rank().over(w).cast(LongType).as("drank"))
-        .orderBy("o_orderstatus", "o_orderkey")
-    },
-
-    // date/time function surface
-    "q_date_arith" -> { (s, dir) =>
-      Tables(s, dir, "orders")
-        .filter(col("o_orderkey") <= 300)
-        .select(col("o_orderkey"), to_date(col("o_orderdate")).as("d"))
-        .select(col("o_orderkey"), col("d"),
-          date_add(col("d"), 30).as("plus30d"),
-          add_months(col("d"), 2).as("plus2m"),
-          last_day(col("d")).as("eom"),
-          datediff(to_date(lit("1998-12-31")), col("d")).cast(LongType).as("days_to_end"),
-          quarter(col("d")).cast(LongType).as("qtr"),
-          dayofweek(col("d")).cast(LongType).as("dow"),
-          date_trunc("month", col("d")).cast(DateType).as("month_start"))
-        .orderBy("o_orderkey")
-    },
-
-    // string-function surface
-    "q_string_funcs" -> { (s, dir) =>
-      Tables(s, dir, "part")
-        .filter(col("p_partkey") <= 300)
-        .select(col("p_partkey"),
-          lpad(col("p_name"), 20, "*").as("padded"),
-          translate(col("p_name"), "aeiou", "AEIOU").as("tr"),
-          regexp_replace(col("p_name"), "[aeiou]", "").as("novowel"),
-          reverse(col("p_name")).as("rev"),
-          instr(col("p_name"), " ").cast(LongType).as("space_at"),
-          expr("split_part(p_name, ' ', 1)").as("first_word"),
-          repeat(col("p_brand"), 2).as("b2"))
-        .orderBy("p_partkey")
-    },
-
-    // regexp extraction over free text
-    "q_regexp_extract" -> { (s, dir) =>
-      Tables(s, dir, "documents")
-        .select(col("doc_id"),
-          regexp_extract(col("text"), "[a-z]{7,}", 0).as("first_long"),
-          size(regexp_extract_all(col("text"), lit("[a-z]{7,}"), lit(0)))
-            .cast(LongType).as("n_long"),
-          col("text").rlike("[0-9]").as("has_num"))
-        .orderBy("doc_id")
-    },
-
-    // UNION ALL + re-aggregation
-    "q_union_all" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val hi = o.filter(col("o_totalprice") > 300000)
-        .select(col("o_custkey"), lit("hi").as("bucket"))
-      val lo = o.filter(col("o_totalprice") < 10000)
-        .select(col("o_custkey"), lit("lo").as("bucket"))
-      hi.unionByName(lo)
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("o_custkey")).as("n_cust"))
-        .orderBy("bucket")
-    },
-
-    // uncorrelated scalar subquery in a filter (SQL surface); the average
-    // rides through an exact decimal sum so both engines build the same
-    // double threshold. 1.005× keeps the result non-empty at every scale
-    // (this generator's retail prices span only 900–919.9 at sf0.001,
-    // max/mean ≈ 1.011 — the old 1.5× selected zero rows everywhere, so
-    // the subquery VALUE was never exercised, only an empty hash).
-    "q_scalar_subquery" -> { (s, dir) =>
-      Tables(s, dir, "part").createOrReplaceTempView("graft_part_sq")
-      s.sql(
-        """SELECT p_partkey, p_retailprice
-          |FROM graft_part_sq
-          |WHERE p_retailprice > 1.005 * (
-          |  SELECT CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
-          |  FROM graft_part_sq)
-          |ORDER BY p_partkey""".stripMargin)
-    },
-
-    // exact second-moment statistics: corr and regression slope from
-    // decimal Σx, Σy, Σxy, Σx², Σy² (order-independent sums; the only
-    // doubles appear after aggregation, in an identical formula both sides)
-    // exact standardized moments (skewness, excess kurtosis) from
-    // EXACT integer power sums — the distribution-shape QA row.
-    // l_quantity is integral (1..50), so x..x⁴ are exact Longs per row
-    // and the DECIMAL(38,0) accumulators never round OR overflow (a
-    // Long accumulator would overflow Σx⁴ past ~10¹² rows). Central
-    // moments expand from the raw sums in DOUBLE with the identical
-    // expression in both engines (exact inputs + same IEEE op order →
-    // identical bits); sqrt(m2³) instead of pow (sqrt is correctly
-    // rounded, pow is not)
-    "q_moment_stats" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val x = col("l_quantity").cast(LongType)
-      // r19 (opt): the four power sums ride primitive LONG aggregation
-      // (whole-stage codegen, no per-row BigDecimal) when the FOOTER row
-      // count bounds them inside int64: x ≤ 50 (the domain the per-row
-      // LONG x⁴ above already assumes), so Σx⁴ ≤ n·6.25e6 < 2⁶³ for
-      // n ≤ 1e12. Tables.rowCount is host-side parquet-footer metadata —
-      // zero extra jobs. Cast to DECIMAL(38,0) per GROUP: the identical
-      // integers the decimal path (kept above the gate) produces.
-      val longSafe = Tables.rowCount(dir, "lineitem") <= 1000000000000L
-      val li = Tables(s, dir, "lineitem")
-      val agg = if (longSafe)
-        li.groupBy(col("l_returnflag"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(x).as("s1L"), sum(x * x).as("s2L"),
-            sum(x * x * x).as("s3L"), sum(x * x * x * x).as("s4L"))
-          .select(col("l_returnflag"), col("n_rows"),
-            col("s1L").cast(d38).as("s1"), col("s2L").cast(d38).as("s2"),
-            col("s3L").cast(d38).as("s3"), col("s4L").cast(d38).as("s4"))
-      else li
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(x.cast(d38)).as("s1"),
-          sum((x * x).cast(d38)).as("s2"),
-          sum((x * x * x).cast(d38)).as("s3"),
-          sum((x * x * x * x).cast(d38)).as("s4"))
-      val n = col("n_rows").cast(DoubleType)
-      val s1 = col("s1").cast(DoubleType)
-      val s2 = col("s2").cast(DoubleType)
-      val s3 = col("s3").cast(DoubleType)
-      val s4 = col("s4").cast(DoubleType)
-      val mean = s1 / n
-      val m2 = s2 / n - mean * mean
-      val m3 = s3 / n - lit(3.0) * mean * (s2 / n) + lit(2.0) * mean * mean * mean
-      val m4 = s4 / n - lit(4.0) * mean * (s3 / n) +
-        lit(6.0) * mean * mean * (s2 / n) - lit(3.0) * mean * mean * mean * mean
-      // e6Witness, not a bare floor-cast: a zero-variance group makes
-      // m3/√m2³ NaN, which the bare cast silently maps to 0 while the
-      // oracle errors — the sentinel makes it one loud named row (r16
-      // ADVICE); finite values are bit-identical to the old emission
-      agg.select(col("l_returnflag"), col("n_rows"),
-          e6Witness(mean).as("mean_e6"),
-          e6Witness(m2).as("m2_e6"),
-          e6Witness(m3 / sqrt(m2 * m2 * m2)).as("skewness_e6"),
-          e6Witness(m4 / (m2 * m2) - lit(3.0)).as("kurtosis_excess_e6"))
-        .orderBy("l_returnflag")
-    },
-
-    "q_corr_stats" -> { (s, dir) =>
-      val x = dec(col("l_quantity"))
-      val y = dec(col("l_extendedprice"))
-      val d38 = DecimalType(38, 4)
-      // r19 (opt): below a footer-measured row cap the five decimal sums
-      // ride primitive LONGs. Work in centi-units (xc = 100x, yc = 100y
-      // — exact: the DECIMAL(18,2) values are integral in cents), split
-      // each product into base-2³¹ digits (hi = p >> 31 arithmetic,
-      // lo = p & (2³¹−1); hi·2³¹ + lo ≡ p for every long), and
-      // reconstruct the EXACT decimal per group:
-      //   Σp = (Σhi)·2³¹ + (Σlo), value Σp/10⁴ — recovered through
-      // decimal division by 10⁴ at scale 6, which is exact (the value
-      // has ≤ 4 dp) and casts to the identical double the DECIMAL(38,4)
-      // sum produced (Decimal→double depends on the value, not the
-      // scale). Overflow bounds at the n ≤ 2e9 gate: yc ≤ ~1e7 (TPC-H
-      // price domain; per-row products stay < 2⁶³ up to yc ~ 1e12), so
-      // Σlo ≤ n·2³¹ ≈ 4.3e18 < 2⁶³ and Σhi ≤ n·(1e14/2³¹) ≈ 9e13.
-      // Decimal path kept above the gate — identical values either way.
-      val longSafe = Tables.rowCount(dir, "lineitem") <= 2000000000L
-      val li = Tables(s, dir, "lineitem")
-      val agg = if (longSafe) {
-        val xc = (x * lit(100)).cast(LongType)
-        val yc = (y * lit(100)).cast(LongType)
-        def hi(p: Column) = shiftright(p, 31)
-        def lo(p: Column) = p.bitwiseAND(lit(2147483647L))
-        val d20 = DecimalType(20, 0)
-        val b31 = lit(new java.math.BigDecimal(2147483648L))
-        val c100 = lit(new java.math.BigDecimal(100))
-        val c1e4 = lit(new java.math.BigDecimal(10000))
-        def recon(h: Column, l: Column, div: Column): Column =
-          (h.cast(d20) * b31 + l.cast(d20)) / div
-        val pxy = xc * yc
-        val pxx = xc * xc
-        val pyy = yc * yc
-        li.groupBy(col("l_returnflag"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(xc).as("sxL"), sum(yc).as("syL"),
-            sum(hi(pxy)).as("sxyH"), sum(lo(pxy)).as("sxyL"),
-            sum(hi(pxx)).as("sxxH"), sum(lo(pxx)).as("sxxL"),
-            sum(hi(pyy)).as("syyH"), sum(lo(pyy)).as("syyL"))
-          .select(col("l_returnflag"), col("n_rows"),
-            (col("sxL").cast(d20) / c100).as("sx"),
-            (col("syL").cast(d20) / c100).as("sy"),
-            recon(col("sxyH"), col("sxyL"), c1e4).as("sxy"),
-            recon(col("sxxH"), col("sxxL"), c1e4).as("sxx"),
-            recon(col("syyH"), col("syyL"), c1e4).as("syy"))
-      } else li
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(x).as("sx"), sum(y).as("sy"),
-          sum((x * y).cast(d38)).as("sxy"),
-          sum((x * x).cast(d38)).as("sxx"),
-          sum((y * y).cast(d38)).as("syy"))
-      val n = col("n_rows").cast(DoubleType)
-      val sx = col("sx").cast(DoubleType)
-      val sy = col("sy").cast(DoubleType)
-      val sxy = col("sxy").cast(DoubleType)
-      val sxx = col("sxx").cast(DoubleType)
-      val syy = col("syy").cast(DoubleType)
-      // e6Witness guards the zero-variance group (0/0 → NaN sentinel
-      // instead of a silent 0 vs an oracle-side CAST error — r16 ADVICE)
-      agg.select(col("l_returnflag"), col("n_rows"),
-          e6Witness((n * sxy - sx * sy) /
-            sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)))
-            .as("corr_qty_price_e6"),
-          e6Witness((n * sxy - sx * sy) / (n * sxx - sx * sx)).as("slope_e6"))
-        .orderBy("l_returnflag")
-    },
-
-    // Lag-k autocorrelation (k = 1..7) of the daily order-revenue
-    // series — the time-series health check behind ingestion-drift
-    // dashboards (a strong lag-7 says weekly seasonality; a lag-1
-    // collapse says the feed went bursty). The ONLY corpus-wide pass is
-    // the daily groupBy (combiner-friendly, output bounded by the date
-    // domain); the series frame is ≤ a-few-thousand rows at ANY corpus
-    // size, so the lag self-join is broadcast-sized by construction.
-    // Exactness: daily revenue re-quantizes to DECIMAL(18,2) (document
-    // corpora sum < 10^16 per day), lagged products sum in
-    // DECIMAL(38,4), and the Pearson expansion is the q_corr_stats
-    // shared-expression-tree convention; the emission quantizes through
-    // the floor(r·1e6 + 0.5) BIGINT witness, never ROUND(double).
-    "q_autocorr" -> { (s, dir) =>
-      val d38 = DecimalType(38, 4)
-      val daily = Tables(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast(DateType).as("d"))
-        .agg(sum(dec(col("o_totalprice"))).cast(DecimalType(18, 2)).as("rev"))
-      val lags = s.range(1, 8).select(col("id").cast(IntegerType).as("lag"))
-      val x = daily.select(col("d"), col("rev").as("xr"))
-      val y = daily.select(col("d").as("dy"), col("rev").as("yr"))
-      val pairs = x.crossJoin(broadcast(lags))
-        .join(y, date_add(col("d"), col("lag")) === col("dy"))
-      val agg = pairs.groupBy(col("lag"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("xr").cast(d38)).as("sx"),
-          sum(col("yr").cast(d38)).as("sy"),
-          sum((col("xr") * col("yr")).cast(d38)).as("sxy"),
-          sum((col("xr") * col("xr")).cast(d38)).as("sxx"),
-          sum((col("yr") * col("yr")).cast(d38)).as("syy"))
-      val n = col("n_pairs").cast(DoubleType)
-      val sx = col("sx").cast(DoubleType)
-      val sy = col("sy").cast(DoubleType)
-      val sxy = col("sxy").cast(DoubleType)
-      val sxx = col("sxx").cast(DoubleType)
-      val syy = col("syy").cast(DoubleType)
-      val r = (n * sxy - sx * sy) /
-        sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-      agg
-        .filter(col("n_pairs") >= 2 &&
-          (n * sxx - sx * sx) > 0.0 && (n * syy - sy * sy) > 0.0)
-        .select(col("lag").cast(LongType).as("lag"), col("n_pairs"),
-          e6Witness(r).as("ac_e6"))
-        .withColumn("ac", col("ac_e6").cast(DoubleType) / 1e6)
-        .orderBy("lag")
-    },
-
-    // Spearman rank correlation (exact, tie-aware midranks) — the
-    // robust monotone-association companion to q_corr_stats' Pearson:
-    // quality-score vs length style checks survive heavy tails only on
-    // ranks. Ranks come from Scan.avgRank2Pair (ONE tall frequency
-    // table + ONE distributed prefix-sum round covers both variables —
-    // NO global-order window, the single-task cliff
-    // rank().over(orderBy) would hit at corpus scale; r15 fused the
-    // former two avgRank2 rounds), doubled to stay integral so every
-    // moment sums exactly in DECIMAL(38,0) / HUGEINT; the ρ expansion
-    // is the identical IEEE tree on both engines (the q_corr_stats /
-    // q_moment_stats convention; exactness bound 4n³ ≤ 10³⁸ ⇒
-    // n ≤ ~2.9e12 rows per group). Each variable ranks over its own
-    // non-null rows, exactly like the oracle's independent fx/fy CTEs
-    // (both columns are NOT NULL in TPC-H, but the semantics now agree
-    // even if they weren't — the r14 ADVICE divergence note).
-    "q_spearman" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val base = Tables(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_quantity").as("x"),
-          col("l_extendedprice").as("y"))
-      val ranked = Scan.avgRank2Pair(base, "x", "y", Seq("l_returnflag"),
-        "r2x", "r2y")
-      // r18 (opt): the five exact sums ride primitive LONG aggregation
-      // (whole-stage codegen, no per-row BigDecimal churn) whenever the
-      // MEASURED row count keeps every term and sum inside int64:
-      // midranks r2 ≤ 2n+1, so with n ≤ 1.5e9 the products
-      // (2n+1)² ≤ 9.0e18 < 2⁶³ and — split as hi·2³¹+lo — the
-      // component sums stay ≤ 6.3e18. Reconstructed per GROUP in
-      // DECIMAL(38,0): the identical integers the decimal path (kept as
-      // the above-cap fallback) produces, so the witnessed output
-      // cannot move. r19: the gate reads the parquet FOOTER row count
-      // host-side (Tables.rowCount) — the r18 count() job is gone.
-      val longSafe = Tables.rowCount(dir, "lineitem") <= 1500000000L
-      def hi(p: Column) = shiftright(p, 31)
-      def lo(p: Column) = p.bitwiseAND(lit(2147483647L))
-      def recon(h: Column, l: Column): Column =
-        (h.cast(d38) * lit(2147483648L) + l.cast(d38)).cast(d38)
-      val agg = if (longSafe) {
-        val pxy = col("r2x") * col("r2y")
-        val pxx = col("r2x") * col("r2x")
-        val pyy = col("r2y") * col("r2y")
-        ranked.groupBy(col("l_returnflag"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("r2x")).as("sxL"), sum(col("r2y")).as("syL"),
-            sum(hi(pxy)).as("sxyH"), sum(lo(pxy)).as("sxyL"),
-            sum(hi(pxx)).as("sxxH"), sum(lo(pxx)).as("sxxL"),
-            sum(hi(pyy)).as("syyH"), sum(lo(pyy)).as("syyL"))
-          .select(col("l_returnflag"), col("n_rows"),
-            col("sxL").cast(d38).as("sx"), col("syL").cast(d38).as("sy"),
-            recon(col("sxyH"), col("sxyL")).as("sxy"),
-            recon(col("sxxH"), col("sxxL")).as("sxx"),
-            recon(col("syyH"), col("syyL")).as("syy"))
-      } else ranked.groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("r2x").cast(d38)).as("sx"),
-          sum(col("r2y").cast(d38)).as("sy"),
-          sum((col("r2x").cast(d38) * col("r2y").cast(d38)).cast(d38)).as("sxy"),
-          sum((col("r2x").cast(d38) * col("r2x").cast(d38)).cast(d38)).as("sxx"),
-          sum((col("r2y").cast(d38) * col("r2y").cast(d38)).cast(d38)).as("syy"))
-      val n = col("n_rows").cast(DoubleType)
-      val sx = col("sx").cast(DoubleType)
-      val sy = col("sy").cast(DoubleType)
-      val sxy = col("sxy").cast(DoubleType)
-      val sxx = col("sxx").cast(DoubleType)
-      val syy = col("syy").cast(DoubleType)
-      // e6Witness: zero-variance rank column → NaN sentinel (r16 ADVICE)
-      agg.select(col("l_returnflag"), col("n_rows"),
-          e6Witness((n * sxy - sx * sy) /
-            sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)))
-            .as("spearman_e6"))
-        .orderBy("l_returnflag")
-    },
-
-    // ROC AUC per event type, one-vs-rest (Mann-Whitney U estimator,
-    // tie-aware midranks): the ranking-quality statistic every
-    // quality-classifier pipeline reports. ONE global rank pass over
-    // the score column (Scan.avgRank2 — freq table + distributed
-    // prefix-sum, no single-task window) serves all five labels:
-    // AUC_t = (Σ_{i∈t} r_i − n_t(n_t+1)/2) / (n_t·(n−n_t)), computed
-    // from the integral 2·midranks so the only roundings are the final
-    // identical-IEEE expansion on both engines.
-    "q_auc" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val ranked = Scan.avgRank2(
-        Tables.events(s, dir).select(col("event_type"), col("value")),
-        "value", Seq.empty, "r2")
-      // r19 (opt): midranks r2 ≤ 2n+1, so Σr2 per type ≤ n(2n+1) < 2⁶³
-      // for n ≤ 1.5e9 — a primitive LONG sum under the footer-measured
-      // row gate (zero extra jobs), cast to DECIMAL(38,0) per group:
-      // identical integers to the decimal path, which stays above the cap
-      val longSafe = Tables.rowCount(dir, "events") <= 1500000000L
-      val byType =
-        if (longSafe)
-          ranked.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n_pos"), sum(col("r2")).as("s2L"))
-            .select(col("event_type"), col("n_pos"),
-              col("s2L").cast(d38).as("s2"))
-        else ranked.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_pos"), sum(col("r2").cast(d38)).as("s2"))
-      val tot = byType.agg(sum(col("n_pos")).as("n_all"))
-      val nPos = col("n_pos").cast(DoubleType)
-      val nAll = col("n_all").cast(DoubleType)
-      val s2 = col("s2").cast(DoubleType)
-      byType.crossJoin(broadcast(tot))
-        .select(col("event_type"), col("n_pos"),
-          e6Witness((s2 - nPos * (nPos + lit(1.0))) /
-            ((lit(2.0) * nPos) * (nAll - nPos))).as("auc_e6"))
-        .orderBy("event_type")
-    },
-
-    // join-key skew diagnostics — the MEASUREMENT that feeds the salting
-    // decision (q_salted_join/q_salted_agg apply the cure; this query
-    // quantifies the disease): per candidate key, the key-frequency
-    // distribution's exact order statistics. One combiner groupBy to the
-    // frequency table per key, then the bounded-memory exact-quantile
-    // refinement over the COUNTS (range [1, max] → 1-2 histogram
-    // passes; the scale-safe exact p99 of key frequencies — a global
-    // sort would be corpus-sized). top_share = hottest key's row
-    // fraction: the number that predicts the straggler.
-    "q_skew_profile" -> { (s, dir) =>
-      def profile(df: DataFrame, keyCol: String, name: String): DataFrame = {
-        val freq = df.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(true)
-        val qs = Scan.exactQuantilesByGroup(
-            freq.select(lit(name).as("g"), col("cnt").as("v")),
-            "g", "v", Seq(0.5, 0.99))
-          .groupBy(col("g").as("key_name"))
-          .agg(min(when(col("q") === 0.5, col("value"))).as("p50_freq"),
-            min(when(col("q") === 0.99, col("value"))).as("p99_freq"))
-        freq.agg(count(lit(1)).as("n_keys"), sum(col("cnt")).as("n_rows"),
-            max(col("cnt")).as("max_freq"))
-          .crossJoin(broadcast(qs))
-          .select(col("key_name"), col("n_rows"), col("n_keys"),
-            col("max_freq"), col("p50_freq"), col("p99_freq"),
-            e6Witness(col("max_freq").cast(DoubleType) / col("n_rows").cast(DoubleType)
-             )
-              .as("top_share_e6"))
-      }
-      profile(Tables(s, dir, "lineitem"), "l_orderkey", "lineitem.l_orderkey")
-        .unionByName(profile(Tables.events(s, dir), "user_id", "events.user_id"))
-        .orderBy("key_name")
-    },
-
-    // Kendall's τ-b (Kendall 1945 tie adjustment) for BOUNDED-domain
-    // pairs: when both variables have few distinct values (quantity×
-    // discount: 50×11), the n² pair space collapses onto the joint
-    // contingency table — ONE combiner groupBy to ≤550 cells, then
-    // concordant/discordant counts are a broadcast cell self-join
-    // (cells² ≈ 300k products, each pair of rows counted exactly once).
-    // Integer C, D, and tie terms sum in DECIMAL(38,0); τ-b's final
-    // expression is one identical IEEE tree. Near-unique domains have
-    // no bounded table — use q_spearman's rank path there (the paired
-    // design: τ for categorical-ish, ρ for continuous).
-    "q_kendall_tau" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val cells = Tables(s, dir, "lineitem")
-        .groupBy(col("l_quantity").as("x"), col("l_discount").as("y"))
-        .agg(count(lit(1)).as("nc"))
-        .localCheckpoint(true)
-      def pairSum(cond: Column): Column =
-        sum(when(cond, col("a.nc").cast(d38) * col("b.nc").cast(d38))
-          .otherwise(lit(0).cast(d38)))
-      val joined = cells.as("a").crossJoin(broadcast(cells.as("b")))
-      val agg = joined.agg(
-        pairSum(col("b.x") > col("a.x") && col("b.y") > col("a.y")).as("cc"),
-        pairSum(col("b.x") > col("a.x") && col("b.y") < col("a.y")).as("dd"))
-      // tie terms from the marginals; n0 = n(n−1)/2 pairs total
-      val tx = cells.groupBy(col("x")).agg(sum(col("nc")).as("m"))
-        .agg(sum((col("m").cast(d38) * (col("m") - 1).cast(d38)) / 2).as("tx"))
-      val ty = cells.groupBy(col("y")).agg(sum(col("nc")).as("m"))
-        .agg(sum((col("m").cast(d38) * (col("m") - 1).cast(d38)) / 2).as("ty"))
-      val n = cells.agg(sum(col("nc")).as("n"))
-      val n0 = (col("n").cast(d38) * (col("n") - 1).cast(d38)) / 2
-      // Boundary-proof 6-dp emission (the q_dsir_weights playbook, r13):
-      // ROUND(double, 6) is engine-defined at digit boundaries (Spark
-      // rounds the double's exact binary expansion via BigDecimal
-      // HALF_UP; other engines scale-and-rint), so the gate hash can
-      // diverge on a single ulp. Instead quantize once through pure
-      // correctly-rounded IEEE single ops — multiply, add, floor —
-      // which are bit-identical on any IEEE-754 engine evaluating the
-      // same expression tree: tau_e6 = floor(tau*1e6 + 0.5) is an exact
-      // integer witness, and tau_b = tau_e6/1e6 is one correctly-rounded
-      // division of the same two values on both engines.
-      // r16 REVISION: r15's IEEE-tree emission was proven arithmetically
-      // sound by the judge (gap to the nearest floor boundary ≥ 3.2e-3
-      // at every scale) yet still gated red — so the driver divergence
-      // lives in double RENDERING, and the cure is to never emit or
-      // route through a double at all. tau_b_e6 is redefined as a pure
-      // integer function of the exact integer witnesses: with
-      // a = (C−D)·1e6 and Dq = (n0−tx)(n0−ty), take s = isqrt(Dq)
-      // (floor-sqrt, exact: double-sqrt seed + ±1 pure-integer-compare
-      // correction; the seed is within 1 of the true root since
-      // s < 2^52) and emit
-      //   tau_b_e6 = floor(a/s + 1/2) = floordiv(2a + s, 2s)
-      // with floordiv made sign-correct via pmod — every op is integer
-      // DECIMAL(38,0) arithmetic, bit-identical on ANY engine by
-      // construction. |a/s − a/√Dq| ≤ |tau_e6|/s ≤ 1e6/3e10 ≈ 3e-5,
-      // two orders inside the proven 3.2e-3 boundary gap, so the value
-      // also equals the r15 definition at every tested scale.
-      // (Headroom: Dq ≤ n0² caps n at ~4.3e9 rows for DECIMAL(38);
-      // beyond that sample the cells table or widen to two limbs.)
-      // cast the /2 tie terms (integral, but typed with fractional
-      // scale) back to scale-0 BEFORE multiplying — (38,6)·(38,6)
-      // would cap precision and lose exactness at corpus scale
-      val dq = (n0.cast(d38) - col("tx").cast(d38)) *
-        (n0.cast(d38) - col("ty").cast(d38))
-      val s0 = floor(sqrt(dq.cast(DoubleType))).cast(d38)
-      val s1 = when(s0 * s0 > dq, s0 - lit(1)).otherwise(s0)
-      val sI = when((s1 + lit(1)) * (s1 + lit(1)) <= dq, s1 + lit(1)).otherwise(s1)
-      val aN = (col("cc") - col("dd")) * lit(1000000L).cast(d38)
-      val num = aN * lit(2) + sI
-      val den = sI * lit(2)
-      val tauE6 = ((num - pmod(num, den)) / den).cast(LongType)
-      // r17: emit the witnesses as BIGINT, not DECIMAL(38,0) — the r16
-      // bisect proved the VALUES identical across engines at all five
-      // scales while the decimal-typed emission still gated red; these
-      // were the inventory's only decimal outputs and its only red rows,
-      // so the driver's hash canonicalization of decimal columns is the
-      // defect. C, D ≤ n0 fit int64 to n ≈ 4.3e9 rows (same headroom cap
-      // as the Dq bound above); past it the decimal→long cast nulls out
-      // and the gate trips loudly rather than wrapping.
-      agg.crossJoin(broadcast(tx)).crossJoin(broadcast(ty)).crossJoin(broadcast(n))
-        .select(col("n").as("n_rows"),
-          col("cc").cast(LongType).as("concordant"),
-          col("dd").cast(LongType).as("discordant"),
-          tauE6.as("tau_b_e6"))
-    },
-
-    // Witness-split bisect for the q_kendall_tau gate divergence (r16
-    // verdict task #1a): ONLY the exact integer inputs to τ-b — pair
-    // counts, concordant/discordant, tie terms — zero derived columns.
-    // If this gates green while q_kendall_tau stays red, the driver's
-    // divergence is pinned to derived-column handling, not the
-    // contingency arithmetic. Same one-groupBy + broadcast-cell-self-
-    // join plan as q_kendall_tau (≤550 cells at any corpus scale).
-    "q_kendall_parts" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val cells = Tables(s, dir, "lineitem")
-        .groupBy(col("l_quantity").as("x"), col("l_discount").as("y"))
-        .agg(count(lit(1)).as("nc"))
-        .localCheckpoint(true)
-      def pairSum(cond: Column): Column =
-        sum(when(cond, col("a.nc").cast(d38) * col("b.nc").cast(d38))
-          .otherwise(lit(0).cast(d38)))
-      val joined = cells.as("a").crossJoin(broadcast(cells.as("b")))
-      val agg = joined.agg(
-        pairSum(col("b.x") > col("a.x") && col("b.y") > col("a.y")).as("cc"),
-        pairSum(col("b.x") > col("a.x") && col("b.y") < col("a.y")).as("dd"))
-      val tx = cells.groupBy(col("x")).agg(sum(col("nc")).as("m"))
-        .agg(sum((col("m").cast(d38) * (col("m") - 1).cast(d38)) / 2).as("tx"))
-      val ty = cells.groupBy(col("y")).agg(sum(col("nc")).as("m"))
-        .agg(sum((col("m").cast(d38) * (col("m") - 1).cast(d38)) / 2).as("ty"))
-      val n = cells.agg(sum(col("nc")).as("n"))
-      // r17: BIGINT witnesses (see q_kendall_tau) — int64 headroom to
-      // n ≈ 4.3e9 rows; overflow nulls the cast and trips the gate.
-      agg.crossJoin(broadcast(tx)).crossJoin(broadcast(ty)).crossJoin(broadcast(n))
-        .select(col("n").as("n_rows"),
-          col("cc").cast(LongType).as("concordant"),
-          col("dd").cast(LongType).as("discordant"),
-          col("tx").cast(LongType).as("tie_x"),
-          col("ty").cast(LongType).as("tie_y"),
-          ((col("n").cast(d38) * (col("n") - 1).cast(d38)) / 2)
-            .cast(LongType).as("n_pairs"))
-    },
-
-    // Gate type-canary (r16 verdict task #5): one 3-row, scale-invariant
-    // query emitting every output type the 263-query inventory relies on
-    // (BIGINT, STRING, DATE, BOOL, typed NULL) with pinned values — the
-    // region table is identical at every SF. If a driver-hasher change
-    // ever drifts on one type's canonicalization (the decimal class that
-    // burned kendall for two rounds), this row localizes it to a single
-    // named query instead of a red smear. First row to check when a red
-    // round starts (COVERAGE.md §gate-canary).
-    "q_gate_canary" -> { (s, dir) =>
-      Tables(s, dir, "region")
-        .filter(col("r_regionkey") < 3)
-        .select(
-          col("r_regionkey").cast(LongType).as("k_bigint"),
-          col("r_name").as("v_string"),
-          date_add(lit("1996-01-01").cast(DateType),
-            col("r_regionkey").cast(IntegerType)).as("v_date"),
-          (col("r_regionkey") % 2 === 0).as("v_bool"),
-          when(col("r_regionkey") === 1, col("r_name"))
-            .otherwise(lit(null).cast(StringType)).as("v_nullable"))
-    },
-
-    // JSON extraction from the events props column
-    "q_json_extract" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast(LongType).as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy("event_type")
-    },
-
-    // cosine-metric kNN (third reference metric surface)
-    "knn_cosine" -> ((s, dir) => knn(s, dir, nq = 8, k = 10, metric = "cosine")),
-
-    // SimHash near-dup pairs: 3-band LSH over a 63-bit fingerprint
-    // (21 bits/band — hamming ≤ 2 leaves at least one band untouched, so
-    // recall is exact, and buckets stay near-singleton at corpus scale);
-    // bucket-grouped pair generation, no self-join
-    "simhash_pairs" -> { (s, dir) =>
-      Dedup.simhashPairs(Tables(s, dir, "documents"), hammingMax = 2)
-        .orderBy("doc_a", "doc_b")
-    },
-
-    // RANGE-framed window: per event, activity of the same user in the
-    // trailing hour (value-based frame, not row-based — peers with equal
-    // timestamps enter the frame together in both engines)
-    "q_range_frame" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
-        .rangeBetween(-3600L * 1000000L, Window.currentRow)
-      Tables.events(s, dir)
-        .withColumn("ts_us", expr("unix_micros(ts)"))
-        .filter(col("user_id") <= 100)
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          count(lit(1)).over(w).as("n_last_hour"),
-          sum(col("value").cast(DecimalType(25, 6))).over(w).cast(DoubleType)
-            .as("sum_last_hour"))
-        .orderBy("user_id", "ts_us", "event_id")
-    },
-
-    // dedup endgame: near-dup pairs → duplicate clusters (connected
-    // components, iterative min-label propagation), one kept representative
-    // per cluster
-    "dedup_clusters" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      Dedup.simhashClusters(Tables(s, dir, "documents"), hammingMax = 2)
-        .withColumn("n_cluster",
-          count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
-        .select(col("doc_id"), col("cluster_id"),
-          col("n_cluster"), (col("doc_id") === col("cluster_id")).as("keep"))
-        .orderBy("doc_id")
-    },
-
-    // the SAME clustering through the large-star/small-star component
-    // plan (Kiveris 2014 — O(log²) rounds vs min-label's O(diameter);
-    // the algorithm for high-diameter graphs): a third independent CC
-    // algorithm checked against dedup_clusters' exact oracle
-    "dedup_clusters_star" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      Dedup.simhashClusters(Tables(s, dir, "documents"), hammingMax = 2,
-          useStar = true)
-        .withColumn("n_cluster",
-          count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
-        .select(col("doc_id"), col("cluster_id"),
-          col("n_cluster"), (col("doc_id") === col("cluster_id")).as("keep"))
-        .orderBy("doc_id")
-    },
-
-    // degree assortativity (Newman 2002) of the near-dup pair graph: do
-    // high-degree docs (heavily replicated) pair with each other (r > 0,
-    // clique-heavy replica families) or with rare docs (r < 0,
-    // hub-and-spoke contamination)? One number summarizing the graph's
-    // mixing. Exact integer moment sums (every term fits a long), the
-    // final Pearson ratio in identical IEEE ops both engines.
-    "q_assortativity" -> { (s, dir) =>
-      val und = Dedup.simhashPairs(Tables(s, dir, "documents"), hammingMax = 2)
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      val adj = und.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-        .localCheckpoint(true)
-      val deg = adj.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      val pairs = adj
-        .join(deg.select(col("node").as("src"), col("deg").as("du")), "src")
-        .join(deg.select(col("node").as("dst"), col("deg").as("dv")), "dst")
-      pairs.agg(count(lit(1)).as("n"),
-          sum(col("du")).as("sx"), sum(col("dv")).as("sy"),
-          sum(col("du") * col("dv")).as("sxy"),
-          sum(col("du") * col("du")).as("sxx"),
-          sum(col("dv") * col("dv")).as("syy"))
-        .select(col("n"),
-          e6Witness((col("n").cast(DoubleType) * col("sxy") - col("sx").cast(DoubleType) * col("sy")) /
-            (sqrt(col("n").cast(DoubleType) * col("sxx") - col("sx").cast(DoubleType) * col("sx")) *
-             sqrt(col("n").cast(DoubleType) * col("syy") - col("sy").cast(DoubleType) * col("sy")))
-           ).as("assortativity_e6"))
-    },
-
-    // k-core of the near-dup pair graph: documents in DENSE duplicate
-    // communities (every member ≥ 3 in-core neighbors) vs incidental
-    // chains of borderline matches, which peel away — a sharper "how
-    // duplicated is this doc really" signal than component membership,
-    // since the giant component fuses cliques and chains alike
-    "q_kcore" -> { (s, dir) =>
-      val und = Dedup.simhashPairs(Tables(s, dir, "documents"), hammingMax = 2)
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      Graph.kCore(und, k = 3)
-        .select(col("node").as("doc_id"), col("core_deg"))
-        .orderBy("doc_id")
-    },
-
-    // full core decomposition of the pair graph: every doc's coreness
-    // number in ONE fixpoint (H-index iteration), not a per-k rerun —
-    // the graded "how deep in a duplicate community" signal q_kcore
-    // thresholds at a single k
-    "q_coreness" -> { (s, dir) =>
-      val und = Dedup.simhashPairs(Tables(s, dir, "documents"), hammingMax = 2)
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      Graph.coreness(und)
-        .select(col("node").as("doc_id"), col("coreness"))
-        .orderBy("doc_id")
-    },
-
-    // k-truss of the same pair graph — the EDGE-level sharpening of
-    // q_kcore: an edge survives only with ≥ 3 common neighbors, so
-    // high-degree bridge nodes can't hold unrelated replica families
-    // together (a k-core can be hub-glued; a truss cannot)
-    "q_ktruss" -> { (s, dir) =>
-      val und = Dedup.simhashPairs(Tables(s, dir, "documents"), hammingMax = 2)
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      Graph.kTruss(und, k = 5)
-        .select(col("u").as("doc_a"), col("v").as("doc_b"), col("support"))
-        .orderBy("doc_a", "doc_b")
-    },
-
-    // leakage-safe train/val/test split: the q_hash_split recipe applied
-    // to the near-dup CLUSTER id instead of the doc id, so every member
-    // of a duplicate cluster lands in the SAME split — the hygiene rule
-    // that stops a train doc's near-copy from leaking into eval. Hashing
-    // doc_id (q_hash_split) is only safe AFTER dedup; this is the split
-    // that is safe before it.
-    "q_split_cluster_safe" -> { (s, dir) =>
-      val h = substring(md5(concat(lit("split:"), col("cluster_id").cast(StringType))), 1, 2)
-      Dedup.simhashClusters(Tables(s, dir, "documents"), hammingMax = 2)
-        .select(col("doc_id"), col("cluster_id"),
-          when(h < "0d", "val").when(h < "1a", "test").otherwise("train").as("split"))
-        .orderBy("doc_id")
-    },
-
-    // funnel analysis: ordered view → click → purchase progression per user
-    "q_events_funnel" -> { (s, dir) =>
-      // ev fans into 4 consumers (fv/fc/fp/spine) — materialize once
-      val ev = Tables.events(s, dir)
-        .withColumn("ts_us", expr("unix_micros(ts)"))
-        .select(col("user_id"), col("event_type"), col("ts_us"))
-        .localCheckpoint(true)
-      val fv = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts_us")).as("first_view_us"))
-      val fc = ev.join(fv, "user_id")
-        .filter(col("event_type") === "click" && col("ts_us") > col("first_view_us"))
-        .groupBy(col("user_id")).agg(min(col("ts_us")).as("first_click_us"))
-      val fp = ev.join(fc, "user_id")
-        .filter(col("event_type") === "purchase" && col("ts_us") > col("first_click_us"))
-        .groupBy(col("user_id")).agg(min(col("ts_us")).as("first_purchase_us"))
-      ev.select(col("user_id")).distinct()
-        .join(fv, Seq("user_id"), "left")
-        .join(fc, Seq("user_id"), "left")
-        .join(fp, Seq("user_id"), "left")
-        .select(col("user_id"), col("first_view_us"), col("first_click_us"),
-          col("first_purchase_us"),
-          (when(col("first_purchase_us").isNotNull, 3)
-            .when(col("first_click_us").isNotNull, 2)
-            .when(col("first_view_us").isNotNull, 1)
-            .otherwise(0)).cast(LongType).as("stage"))
-        .orderBy("user_id")
-    },
-
-    // conversion-window funnel — the product-analytics form: a click
-    // only converts within 30 min of the first view, a purchase within
-    // 24 h of the converting click. Same bounded-join shape as
-    // q_events_funnel with the windows as join predicates (never a
-    // per-user event sort on one task).
-    "q_events_funnel_windowed" -> { (s, dir) =>
-      val clickWinUs = 1800L * 1000000L
-      val buyWinUs = 86400L * 1000000L
-      val ev = Tables.events(s, dir)
-        .withColumn("ts_us", expr("unix_micros(ts)"))
-        .select(col("user_id"), col("event_type"), col("ts_us"))
-        .localCheckpoint(true)
-      val fv = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts_us")).as("first_view_us"))
-      val fc = ev.join(fv, "user_id")
-        .filter(col("event_type") === "click" &&
-          col("ts_us") > col("first_view_us") &&
-          col("ts_us") <= col("first_view_us") + clickWinUs)
-        .groupBy(col("user_id")).agg(min(col("ts_us")).as("first_click_us"))
-      val fp = ev.join(fc, "user_id")
-        .filter(col("event_type") === "purchase" &&
-          col("ts_us") > col("first_click_us") &&
-          col("ts_us") <= col("first_click_us") + buyWinUs)
-        .groupBy(col("user_id")).agg(min(col("ts_us")).as("first_purchase_us"))
-      ev.select(col("user_id")).distinct()
-        .join(fv, Seq("user_id"), "left")
-        .join(fc, Seq("user_id"), "left")
-        .join(fp, Seq("user_id"), "left")
-        .select(col("user_id"), col("first_view_us"), col("first_click_us"),
-          col("first_purchase_us"),
-          (when(col("first_purchase_us").isNotNull, 3)
-            .when(col("first_click_us").isNotNull, 2)
-            .when(col("first_view_us").isNotNull, 1)
-            .otherwise(0)).cast(LongType).as("stage"))
-        .orderBy("user_id")
-    },
-
-    // deterministic hash sampling — reproducible ~10% subset selection for
-    // training-data splits (hex-prefix comparison on a seeded md5; no RNG,
-    // identical on every engine and every run)
-    "q_hash_sample" -> { (s, dir) =>
-      Tables(s, dir, "documents")
-        .filter(substring(md5(concat(lit("sample:"), col("doc_id").cast(StringType))), 1, 2) <= "19")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy("doc_id")
-    },
-
-    // corpus-level n-gram document frequency, top 30 — global top-k via
-    // TakeOrderedAndProject (per-partition heap + k-row merge, no full sort)
-    "q_top_ngrams" -> { (s, dir) =>
-      Dedup.explodedShingles(Tables(s, dir, "documents"))
-        .groupBy(col("s").as("shingle"))
-        .agg(count(lit(1)).as("df"))
-        .orderBy(desc("df"), col("shingle"))
-        .limit(30)
-    },
-
-    // text scrubbing: numeric-literal masking (PII-style cleanup pass);
-    // compact output — digest + length, not the scrubbed text itself
-    "q_text_scrub" -> { (s, dir) =>
-      val scrubbed = regexp_replace(col("text"), "[0-9]+", "<NUM>")
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), md5(scrubbed).as("scrub_md5"),
-          length(scrubbed).cast(LongType).as("scrub_len"))
-        .orderBy("doc_id")
-    },
-
-    // deterministic train/val/test split (seeded-md5 hex ranges:
-    // ~5% val, ~5% test, rest train — stable across engines and runs)
-    "q_hash_split" -> { (s, dir) =>
-      val h = substring(md5(concat(lit("split:"), col("doc_id").cast(StringType))), 1, 2)
-      Tables(s, dir, "documents")
-        .select(col("doc_id"),
-          when(h < "0d", "val").when(h < "1a", "test").otherwise("train").as("split"))
-        .orderBy("doc_id")
-    },
-
-    // L2 normalization of the embedding column (unit vectors for cosine
-    // retrieval); compact output — first component + norm
-    "q_vec_normalize" -> { (s, dir) =>
-      // e6Witness guards the zero-norm case (0/0 → NaN sentinel, not a
-      // silent 0 vs an oracle-side CAST error — r16 ADVICE)
-      val nrm = sqrt(vectorNormSq(col("embedding")))
-      Tables(s, dir, "embeddings")
-        .select(col("vec_id"),
-          e6Witness(element_at(col("embedding"), 1).cast(DoubleType) / nrm)
-            .as("u0_e6"),
-          e4Witness(nrm).as("norm_e4"))
-        .orderBy("vec_id")
-    },
-
-    // Matryoshka-style truncated-dimension search: exact kNN over the
-    // first 16 of 64 dims — the cheap first stage of adaptive retrieval
-    // (4× less compute/bandwidth per pair; same plan shape as knn_l2)
-    "knn_l2_prefix" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"),
-        slice(col("embedding"), 1, 16).as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), slice(col("embedding"), 1, 16).as("qv"))
-      Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("rank"), col("label"),
-          e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // adaptive (Matryoshka) retrieval: coarse shortlist on the first 16
-    // of 64 dims (quarter the scan bytes on a columnar layout), exact
-    // full-dim rerank of the k·4 candidates — knn_l2_prefix's first
-    // stage composed with the rerank that restores exact ordering
-    "ann_prefix_rerank" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.prefixRerankTopK(vectors, queries, k = 10, prefixDims = 16)
-        .select(col("qid"), col("rank"), col("label"), e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // kNN label classification (leave-self-out majority vote over the 10
-    // nearest neighbors) — the label-propagation / auto-labeling shape of
-    // a curation pipeline. Fully deterministic and hash-exact: top-11 by
-    // (L2², id), remove self, re-rank, majority by (count desc, class
-    // asc) — the oracle reproduces the identical three steps, so even
-    // duplicate vectors cannot diverge the two sides
-    "ann_knn_classify" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val classes = e.select(col("vec_id").as("nid"), col("label").as("cls"))
-      val queries = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val trueCls = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("qid"), col("label").as("true_cls"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("score"), col("nid"))
-      val top10 = Similarity.bruteForceTopK(vectors, queries, k = 11, "l2")
-        .select(col("qid"), col("label").as("nid"), col("score"))
-        .filter(col("nid") =!= col("qid"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 10)
-      // broadcast the BOUNDED 16·10-row top-k frame and stream the
-      // corpus-sized label table past it (r16 — the old hint broadcast
-      // the ∝n label table, an OOM cliff at corpus scale)
-      val voted = classes.join(broadcast(top10), "nid")
-        .groupBy(col("qid"), col("cls")).agg(count(lit(1)).as("votes"))
-        .groupBy(col("qid"))
-        .agg(max(struct(col("votes"), (-col("cls")).cast(LongType).as("nc"))).as("best"))
-        .select(col("qid"), (-col("best.nc")).cast(IntegerType).as("pred_cls"))
-      voted.join(broadcast(trueCls), "qid")
-        .select(col("qid"), col("pred_cls"), col("true_cls"),
-          (col("pred_cls") === col("true_cls")).as("correct"))
-        .orderBy("qid")
-    },
-
-    // kNN label-noise audit (confident-learning style, Northcutt 2021's
-    // kNN baseline): for each audited vector, do its 10 nearest
-    // neighbors' labels out-vote its own? A `suspect` row is the classic
-    // mislabeled-example signature curators re-annotate before
-    // training. The audited set is a deterministic % sample (real
-    // audits sample too; the % ties it to n only for oracle-ability —
-    // the ann_ivf convention); votes ride the bounded nq·k top-k frame
-    // (broadcast against the label table, which is never collected),
-    // ties break (votes desc, smaller class) on both engines.
-    "q_label_noise" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val classes = e.select(col("vec_id").as("nid"), col("label").as("cls"))
-      val audited = e.filter(col("vec_id") % 97 === 0)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val own = e.filter(col("vec_id") % 97 === 0)
-        .select(col("vec_id").as("qid"), col("label").as("own_cls"))
-      // measured broadcast gate (r16): the audited frame is ∝ n/97
-      // under the gate convention, so every hint on it (or on the
-      // 10×-larger top-k frame) is count-gated; past the cap the joins
-      // fall back to shuffle plans and the kNN takes the tiled path —
-      // both bit-identical, so the route never moves the hash
-      val nAudited = audited.count()
-      def mb(df: DataFrame): DataFrame =
-        if (nAudited <= Similarity.queryBroadcastCap) broadcast(df) else df
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("score"), col("nid"))
-      // the already-measured count rides into the routing gate
-      // (autoTopK(knownCount), r16 verdict #6) — one count job total
-      val knn = Similarity.autoTopK(vectors, audited, k = 11, "l2",
-        knownCount = nAudited)
-      val top10 = knn
-        .select(col("qid"), col("label").as("nid"), col("score"))
-        .filter(col("nid") =!= col("qid"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 10)
-        .select(col("qid"), col("nid"))
-      val votes = classes.join(mb(top10), "nid")
-        .groupBy(col("qid"), col("cls")).agg(count(lit(1)).as("votes"))
-      val pred = votes.groupBy(col("qid"))
-        .agg(max(struct(col("votes"), (-col("cls")).cast(LongType).as("nc"))).as("best"))
-        .select(col("qid"), (-col("best.nc")).cast(IntegerType).as("pred_cls"),
-          col("best.votes").as("pred_votes"))
-      val agree = votes.join(mb(own),
-          votes("qid") === own("qid") && votes("cls") === own("own_cls"))
-        .select(votes("qid"), col("votes").as("n_agree"))
-      pred.join(mb(own), "qid")
-        .join(agree, Seq("qid"), "left")
-        .select(col("qid"), col("own_cls"), col("pred_cls"), col("pred_votes"),
-          coalesce(col("n_agree"), lit(0L)).as("n_agree"),
-          (col("pred_cls") =!= col("own_cls")).as("suspect"))
-        .orderBy("qid")
-    },
-
-    // ColBERT-style late-interaction retrieval: the 8 query vectors act
-    // as one multi-token query, documents are the label groups;
-    // score(doc) = sum over tokens of the best in-doc cosine (MaxSim) —
-    // per-(doc, token) max and per-doc sum are combiner aggs, the top-5
-    // a TakeOrdered
-    "ann_maxsim" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("label"), col("embedding").as("vec"))
-      val tokens = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("tid"), col("embedding").as("qv"))
-      Similarity.maxSimTopK(vectors, tokens, k = 5)
-        .orderBy("rank")
-    },
-
-    // transform-then-quantize composition (FAISS index factory
-    // "PCAR64,PQ8"): full-rank PCA ROTATION (trace-preserving, verified
-    // by the rot_ok verdict to 1e-6 relative) in front of k-means PQ —
-    // the rotation decorrelates dimensions so each PQ subspace quantizes
-    // independent coordinates (the cheap standard approximation of OPQ,
-    // Ge et al. 2013). Same deterministic training as ann_pq_kmeans
-    // (sorted bounded samples, seeded Lloyd), recall gated vs exact kNN
-    // in the ORIGINAL space — valid because an orthonormal rotation
-    // preserves L2 exactly up to fp32 projection rounding
-    "ann_pca_pq" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val n = vectors.count()
-      val model = Similarity.trainPca(vectors, dOut = 64, knownCount = n)
-      val rotV = vectors.select(col("id"),
-        graft.functions.pcaProject(col("vec"), model.mean, model.components).as("vec"))
-      val rotQ = queries.select(col("qid"),
-        graft.functions.pcaProject(col("qv"), model.mean, model.components).as("qv"))
-      val ncent = math.max(8, math.min(256, (n / 25L).toInt))
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      val overlap = annOverlap(exact,
-        Similarity.pqKmeansTopK(rotV, rotQ, k = 10, ncent = ncent, m = 8,
-          knownCount = n))
-      val rotOk = math.abs(model.explained.sum - model.totalVar) <=
-        1e-6 * model.totalVar
-      queries.select(col("qid"))
-        .join(overlap, Seq("qid"), "left")
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 1L).as("recall_ok"),
-          lit(rotOk).as("rot_ok"))
-        .orderBy("qid")
-    },
-
-    // OPQ (Ge et al. 2013; FAISS "OPQ8,PQ8" factory): alternating
-    // rotation/codebook optimization, PCA init — the trained upgrade of
-    // ann_pca_pq. Eigensolve + k-means have no closed SQL form → the
-    // verdict pattern: per-query recall vs exact kNN, plus two
-    // machine-checked model invariants — improved_ok (the final
-    // training objective ≤ the PCA+PQ-init objective, i.e. the
-    // optimization optimized; monotone by construction, spec-pinned)
-    // and rot_ok (the learned rotation is orthonormal to 1e-9, i.e.
-    // distances in the rotated space are the true distances)
-    "ann_opq" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val n = vectors.count()
-      val ncent = math.max(8, math.min(256, (n / 25L).toInt))
-      // iters = 8 keeps the gate-query cost in the text_bm25 class;
-      // the operator default (20, measured in tools/OpqRecall) is for
-      // production training where the one-off driver cost is irrelevant.
-      // The verdicts (monotone improvement, orthonormality) hold at any
-      // iteration count by construction.
-      val model = Similarity.trainOpq(vectors, m = 8, ncent = ncent,
-        iters = 8, knownCount = n)
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      val overlap = annOverlap(exact,
-        Similarity.opqTopK(vectors, queries, k = 10, model))
-      val improvedOk = model.errTrace.last <= model.errTrace.head + 1e-12
-      val d = model.mean.length
-      val rotOk = {
-        var worst = 0.0
-        var p = 0
-        while (p < d) {
-          var q = 0
-          while (q < d) {
-            var dot = 0.0; var j = 0
-            while (j < d) { dot += model.rotation(p)(j) * model.rotation(q)(j); j += 1 }
-            val want = if (p == q) 1.0 else 0.0
-            worst = math.max(worst, math.abs(dot - want)); q += 1
-          }
-          p += 1
-        }
-        worst <= 1e-9
-      }
-      queries.select(col("qid"))
-        .join(overlap, Seq("qid"), "left")
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 1L).as("recall_ok"),
-          lit(improvedOk).as("improved_ok"),
-          lit(rotOk).as("rot_ok"))
-        .orderBy("qid")
-    },
-
-    // OPQ-ADC shortlist + exact fp32 rerank — the composition that
-    // recovers the ADC quantization cap with the OPQ coarse stage; one
-    // trained model shared by both arms of the beats-un-reranked verdict
-    "ann_opq_rerank" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val n = vectors.count()
-      val ncent = math.max(8, math.min(256, (n / 25L).toInt))
-      val model = Similarity.trainOpq(vectors, m = 8, ncent = ncent,
-        iters = 8, knownCount = n)
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      val rerank = annOverlap(exact,
-        Similarity.opqRerankTopK(vectors, queries, k = 10, model, expand = 4))
-      val plain = annOverlap(exact,
-        Similarity.opqTopK(vectors, queries, k = 10, model))
-      val totals = rerank.agg(sum(col("n_common")).as("t_rr"))
-        .crossJoin(plain.agg(sum(col("n_common")).as("t_plain")))
-        .select((col("t_rr") >= col("t_plain")).as("beats_unreranked"))
-      queries.select(col("qid"))
-        .join(rerank, Seq("qid"), "left")
-        .crossJoin(broadcast(totals))
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 1L).as("recall_ok"),
-          col("beats_unreranked"))
-        .orderBy("qid")
-    },
-
-    // the full production factory string OPQ8,IVF40,PQ8: trained OPQ
-    // rotation+codebook in front of IVF coarse pruning — nProbe/nClusters
-    // of the corpus scanned at m bytes/vector with the rotation-optimized
-    // codebook. Verdict-gated like every trained-ANN query
-    "ann_opq_ivfpq" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val n = vectors.count()
-      val ncent = math.max(8, math.min(256, (n / 25L).toInt))
-      val model = Similarity.trainOpq(vectors, m = 8, ncent = ncent,
-        iters = 8, knownCount = n)
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      val overlap = annOverlap(exact,
-        Similarity.ivfOpqTopK(vectors, queries, k = 10, ivfModulo = 40,
-          nProbe = 4, model))
-      queries.select(col("qid"))
-        .join(overlap, Seq("qid"), "left")
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 1L).as("recall_ok"))
-        .orderBy("qid")
-    },
-
-    // NSW graph ANN (single-layer HNSW, Malkov & Yashunin 2018 — the
-    // graph family of the FAISS index taxonomy; IndexHNSWFlat's sharded
-    // Spark analog, ops/Nsw.scala). 4 hash shards, per-shard
-    // deterministic graph build in mapPartitions, beam search every
-    // shard, global top-k merge. Recall verdict vs exact kNN: the beam
-    // is generous relative to shard sizes at every gate scale, so the
-    // pinned threshold is ≥ 7 of top-10 (probed: 10/10 at sf0.01 and
-    // sf0.1, ≥ 9/10 at sf1) — far above the ~1/10 a broken (random)
-    // graph would score, unlike the seeded-ANN ≥ 1 convention.
-    "ann_hnsw" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      val overlap = annOverlap(exact,
-        Nsw.nswTopK(vectors, queries, k = 10, numShards = 4, m = 12,
-          efConstruction = 48, efSearch = 64))
-      queries.select(col("qid"))
-        .join(overlap, Seq("qid"), "left")
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 7L).as("recall_ok"))
-        .orderBy("qid")
-    },
-
-    // PCA-coarse two-stage retrieval (FAISS PCAMatrix / "PCAR16,..."
-    // pre-transform): corpus + queries projected onto the trained
-    // 16-of-64-dim max-variance basis (narrow no-shuffle pass, coarse
-    // scan reads 1/4 of the bytes), GEMM top-40 in the projected space,
-    // exact full-dim rerank to top-10. The eigendecomposition has no
-    // closed SQL form, so the gate is the verdict pattern: per-query
-    // recall vs exact kNN (≥1 of top-10, the seeded-ANN convention;
-    // measured 3–7 at sf0.01, 1–7 at sf0.1 — the synthetic embeddings
-    // are near-isotropic, spectrum ratio 0.31–0.38 vs the 0.25 floor,
-    // so 16 kept dims carry ~30% of the signal and recall is honestly
-    // modest), plus the spectral-mass invariant (top-16 eigenvalues
-    // carry ≥ 16/64 of the trace — violated by any wrong sort order or
-    // broken eigensolve, machine-checked driver-side)
-    "ann_pca_rerank" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val dOut = 16
-      val model = Similarity.trainPca(vectors, dOut)
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      val overlap = annOverlap(exact,
-        Similarity.pcaRerankTopK(vectors, queries, k = 10, model, expand = 4))
-      val d = model.mean.length
-      val varOk = model.explained.sum >= model.totalVar * dOut / d - 1e-9
-      queries.select(col("qid"))
-        .join(overlap, Seq("qid"), "left")
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 1L).as("recall_ok"),
-          lit(varOk).as("var_ok"))
-        .orderBy("qid")
-    },
-
-    // training-free two-stage retrieval: JL-projected 16-d shortlist
-    // (k·8) + exact 64-d rerank — the cold-start counterpart of
-    // ann_pca_rerank (no training pass; distortion bound is
-    // distribution-free). Verdict bar matches the pca query's.
-    "ann_jl_rerank" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      val overlap = annOverlap(exact,
-        Similarity.jlRerankTopK(vectors, queries, k = 10, dIn = 64, dOut = 16,
-          expand = 8))
-      queries.select(col("qid"))
-        .join(overlap, Seq("qid"), "left")
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 1L).as("recall_ok"))
-        .orderBy("qid")
-    },
-
-    // two-stage retrieval: f16-quantized coarse shortlist (k·4) + exact
-    // fp32 rerank — equals exact brute force, so it shares the knn_l2
-    // oracle (the correctness gate re-proves shortlist sufficiency)
-    "ann_f16_rerank" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.rerankedTopK(vectors, queries, k = 10, expand = 4)
-        .select(col("qid"), col("rank"), col("label"),
-          e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // GEMM-batched kNN: per-partition netlib dgemm over vector blocks —
-    // the reference's tiled-GEMM physical path; bit-compatible output with
-    // the expression path at the oracle's rounding, so it shares the
-    // knn_l2 oracle
-    "knn_l2_gemm" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.gemmTopK(vectors, queries, k = 10)
-        .select(col("qid"), col("rank"), col("label"),
-          e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // radius (range) search: every neighbor within squared-L2 1.4 —
-    // FAISS range_search semantics (absent from the reference's GPU path)
-    "vec_range_search" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.radiusSearch(vectors, queries, radius = 1.4)
-        .select(col("qid"), col("label"), e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "label")
-    },
-
-    // embedding-corpus outlier filter: per-vector max|x| (the driver of
-    // every scalar-quantization scale — an outlier here blows up SQ8/SQ4
-    // precision for its whole vector) z-scored against exact corpus
-    // moments (rounded features summed in DECIMAL, so mean/std — and
-    // therefore every flag — are accumulation-order-independent). The
-    // L2 norm is NOT the feature on purpose: these embeddings are
-    // unit-normalized, so norm variance is exactly zero (the corpus
-    // itself proved this — a norm z-score divides by zero); the std=0
-    // guard stays for degenerate corpora on any feature
-    "q_vec_outliers" -> { (s, dir) =>
-      // r17 (verdict task #2): the per-element ROUND(mx, 6) /
-      // ROUND(mx·mx, 6) quantizers are gone — each vector's max-abs
-      // quantizes ONCE through the floor e6 witness (an exact LONG that
-      // is also the emitted mx_e6), the moment sums run exact (s1 LONG,
-      // s2 in DECIMAL(38,0) — m6² ~1e14 per row overflows int64 past
-      // ~1e4 rows), and the z-score is one mirrored IEEE tree over the
-      // exact integer aggregates (the e6 scaling cancels in z).
-      val e = Tables(s, dir, "embeddings")
-      val d38 = DecimalType(38, 0)
-      val feats = e.select(col("vec_id"),
-        e6Witness(aggregate(col("embedding"), lit(0.0),
-            (acc, x) => greatest(acc, abs(x.cast(DoubleType))))
-         ).as("m6"))
-      val stats = feats.agg(
-        count(lit(1)).as("n"),
-        sum(col("m6")).as("s1"),
-        sum(col("m6").cast(d38) * col("m6").cast(d38)).as("s2"))
-      feats.crossJoin(broadcast(stats))
-        .withColumn("nd", col("n").cast(DoubleType))
-        .withColumn("mean", col("s1").cast(DoubleType) / col("nd"))
-        .withColumn("std",
-          sqrt(col("s2").cast(DoubleType) / col("nd") - col("mean") * col("mean")))
-        .select(col("vec_id"), col("m6").as("mx_e6"),
-          when(col("std") > 0,
-            e4Witness((col("m6").cast(DoubleType) - col("mean")) / col("std")
-             ))
-            .otherwise(lit(0L)).as("z_e4"))
-        .withColumn("is_outlier", abs(col("z_e4")) > 30000L)
-        .orderBy("vec_id")
-    },
-
-    // FAISS range_search on an IVF index: all matches within the radius
-    // AMONG the probed clusters (the scan-fraction trade every IVF op
-    // makes); higher radius than the flat query so pruning effects are
-    // visible in the result set, deterministic modulo codebook → the
-    // composite reproduces in SQL hash-exact
-    "vec_range_search_ivf" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.ivfRadiusSearch(vectors, queries, radius = 1.6,
-          centroidModulo = 40, nProbe = 2)
-        .select(col("qid"), col("label"), e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "label")
-    },
-
-    // bulk self-retrieval: EVERY vector queries the whole table (the
-    // corpus-vs-corpus regime — query side too big to broadcast at once),
-    // via 4 hash-batched GEMM jobs; k=5 keeps the output bounded
-    "knn_l2_batched" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.batchedTopK(vectors, queries, k = 5, batches = 4)
-        .select(col("qid"), col("rank"), col("label"),
-          e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // metadata-filtered vector search: predicate on the label column
-    // prunes BEFORE the distance computation (pushed to the parquet scan),
-    // then exact kNN among the survivors
-    "knn_l2_filtered" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.filter(col("label") % 3 === 0)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("rank"), col("label"),
-          e4Witness(col("score")).as("dist_e4"))
-        .orderBy("qid", "rank")
-    },
-
-    // array-function surface over the embedding column (scalar outputs)
-    "q_array_funcs" -> { (s, dir) =>
-      Tables(s, dir, "embeddings")
-        .select(col("vec_id"),
-          size(slice(col("embedding"), 1, 8)).cast(LongType).as("n_slice"),
-          floor(array_max(col("embedding")).cast(DoubleType) * lit(1e4)
-            + lit(0.5)).cast(LongType).as("vmax_e4"),
-          floor(array_min(col("embedding")).cast(DoubleType) * lit(1e4)
-            + lit(0.5)).cast(LongType).as("vmin_e4"),
-          floor(element_at(col("embedding"), 5).cast(DoubleType) * lit(1e4)
-            + lit(0.5)).cast(LongType).as("v5_e4"),
-          e4Witness(element_at(array_sort(col("embedding")), 3).cast(DoubleType)
-           ).as("third_smallest_e4"))
-        .orderBy("vec_id")
-    },
-
-    // correlated LATERAL subquery (SQL surface): each customer's single
-    // latest order
-    "q_lateral_join" -> { (s, dir) =>
-      Tables(s, dir, "customer").createOrReplaceTempView("graft_cust_lat")
-      Tables(s, dir, "orders").createOrReplaceTempView("graft_ord_lat")
-      s.sql(
-        """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-          |FROM graft_cust_lat c
-          |JOIN LATERAL (
-          |  SELECT o_orderkey, o_totalprice FROM graft_ord_lat
-          |  WHERE o_custkey = c.c_custkey
-          |  ORDER BY o_orderdate DESC, o_orderkey DESC LIMIT 1) o
-          |WHERE c.c_custkey <= 100
-          |ORDER BY c.c_custkey""".stripMargin)
-    },
-
-    // IVF with real k-means training (MLlib, seeded). k-means init isn't
-    // SQL-reproducible, so (like ann_lsh_mllib) the driver-checkable
-    // surface is a per-query recall bound vs exact kNN: ≥ 3 of the true
-    // top-10 with nProbe=4 of 16 clusters. Measured 4-8/10 per query at
-    // sf0.01/sf0.1 (seeded k-means → deterministic); aggregate ≥ 0.7 on
-    // clustered data is spec-pinned.
-    "ann_ivf_kmeans" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val ann = Similarity
-        .ivfKmeansTopK(vectors, queries, k = 10, nClusters = 16, nProbe = 4)
-        .select(col("qid"), col("label"))
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      ann.join(exact, Seq("qid", "label"))
-        .groupBy(col("qid")).agg(count(lit(1)).as("n_common"))
-        .join(queries.select(col("qid")), Seq("qid"), "right")
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 3L).as("recall_ok"))
-        .orderBy("qid")
-    },
-
-    // advisor-routed retrieval: AnnAdvisor.choose picks the index tier
-    // from the MEASURED Pareto table (recall target 0.99 under a
-    // 128 B/vec coarse-scan budget → f16-rerank) and the chosen tier
-    // executes — ≅ the reference's capability-driven kernel routing
-    // (src/MetalDistance.mm:121-127, 255-284). A strict 0.99 target
-    // routes only to recall-BY-CONSTRUCTION tiers (round-13 fix): the
-    // fixture-measured tiers' recall doesn't transfer to this corpus
-    // (testdata embeddings are near-isotropic; PCA-16 ≈ a random
-    // 16-dim slice there), which is exactly the fragility the r12 spec
-    // caught at sf0.001. The oracle pins the tier NAME, so an
-    // advisor-table drift fails the gate visibly rather than silently
-    // rerouting production scans.
-    "ann_auto" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val n = vectors.count()
-      val d = e.select(size(col("embedding"))).first().getInt(0)
-      val choice = AnnAdvisor.choose(n, d, recallTarget = 0.99,
-        scanBudgetBytesPerVec = 128.0)
-      val k = 10
-      val ann = choice.tier match {
-        case "pca16-rerank" => Similarity.pcaRerankTopK(vectors, queries, k,
-          dOut = choice.params("dOut").toInt, expand = choice.params("expand").toInt)
-        case "f16-rerank" => Similarity.rerankedTopK(vectors, queries, k,
-          expand = choice.params("expand").toInt)
-        case "ivf-p2" | "ivf-p4" => Similarity.ivfTopK(vectors, queries, k,
-          choice.params("centroidModulo").toInt, choice.params("nProbe").toInt)
-        case "ivf-kmeans-p2" => Similarity.ivfKmeansTopK(vectors, queries, k,
-          nClusters = math.max(1L, n / choice.params("clustersPer")).toInt,
-          nProbe = choice.params("nProbe").toInt)
-        case "flat" => Similarity.gemmTopK(vectors, queries, k)
-        case other =>
-          throw new IllegalStateException(s"ann_auto: no dispatch for tier $other")
-      }
-      val exact = Similarity.bruteForceTopK(vectors, queries, k, "l2")
-        .select(col("qid"), col("label"))
-      queries.select(col("qid"))
-        .join(annOverlap(exact, ann), Seq("qid"), "left")
-        .select(col("qid"), lit(choice.tier).as("tier"),
-          (coalesce(col("n_common"), lit(0L)) >= 3L).as("recall_ok"),
-          lit(choice.meetsTarget).as("meets_target"))
-        .orderBy("qid")
-    },
-
-    // the advisor's OTHER production branch: a relaxed target (0.90)
-    // under a tight scan budget routes through the fixture-measured
-    // tiers — ivf-p4 on the current table. The advisor is consulted at
-    // the DEPLOYMENT corpus size (10M vectors — the 100 TB design
-    // point), not the gate corpus's count: that is how the routing is
-    // used in production (pick the index for the target scale, prove
-    // the choice on the small gate), and it makes the decision — and
-    // the oracle's pinned tier name — scale-invariant across the gate
-    // dirs, where IVF's probed fraction would otherwise flip the
-    // argmin between sf0.001 and sf0.1. meets_target pins that the
-    // fallback path was NOT taken. recall_ok uses the ≥1-of-10 floor
-    // (the ann_ivfpq_residual precedent), NOT ≥3: the advisor's 0.947
-    // is FIXTURE-measured, and this gate corpus is near-isotropic
-    // where 4-of-50 sampled-centroid probes keep less mass — exactly
-    // the transfer caveat the tier-provenance split formalizes. The
-    // strict-recall branch (ann_auto) carries the strong bound.
-    "ann_auto_scan" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val d = e.select(size(col("embedding"))).first().getInt(0)
-      val choice = AnnAdvisor.choose(n = 10000000L, d = d, recallTarget = 0.90,
-        scanBudgetBytesPerVec = 2.0)
-      val k = 10
-      val ann = choice.tier match {
-        case "ivf-p2" | "ivf-p4" => Similarity.ivfTopK(vectors, queries, k,
-          choice.params("centroidModulo").toInt, choice.params("nProbe").toInt)
-        case "f16-rerank" => Similarity.rerankedTopK(vectors, queries, k,
-          expand = choice.params("expand").toInt)
-        case "flat" => Similarity.gemmTopK(vectors, queries, k)
-        case other =>
-          throw new IllegalStateException(s"ann_auto_scan: no dispatch for tier $other")
-      }
-      val exact = Similarity.bruteForceTopK(vectors, queries, k, "l2")
-        .select(col("qid"), col("label"))
-      queries.select(col("qid"))
-        .join(annOverlap(exact, ann), Seq("qid"), "left")
-        .select(col("qid"), lit(choice.tier).as("tier"),
-          (coalesce(col("n_common"), lit(0L)) >= 1L).as("recall_ok"),
-          lit(choice.meetsTarget).as("meets_target"))
-        .orderBy("qid")
-    },
-
-    // Residual-encoded IVFPQ (FAISS IVFPQ proper: PQ codes v − coarse
-    // centroid, k-means-trained residual sub-codebooks). Training isn't
-    // SQL-reproducible → driver-checkable verdicts: per-query recall ≥ 1
-    // of the exact top-10, AND the residual total recall beats the
-    // raw-encoded variant at the same m/probes (measured 32 vs 19 at
-    // sf0.01, 24 vs 21 at sf0.1; seeded + un-spread training input →
-    // identical across 8/32 cores)
-    "ann_ivfpq_residual" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      // scale-aware probing (r17, the r16 100× exclusion's cure): a
-      // FIXED nProbe over a corpus-proportional cell count probes a
-      // vanishing fraction as the corpus grows — exactly how a real
-      // deployment loses recall when nlist scales but nprobe doesn't.
-      // Hold the probe FRACTION at the sf0.01 operating point (8/500 =
-      // 1.6%): nProbe = max(8, cells/64). One count feeds it (the
-      // autoTopK(knownCount) convention).
-      val nVec = vectors.count()
-      val nProbe = math.max(8, (nVec / 40 / 64).toInt)
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      val resid = annOverlap(exact, Similarity.ivfPqResidualTopK(vectors, queries,
-        k = 10, ivfModulo = 40, nProbe = nProbe, pqModulo = 25, m = 8,
-        trainedNcent = 64))
-      // beats_standin is the DISTORTION claim (r18), in RESIDUAL space
-      // at EQUAL codebook budget: the Lloyd-trained residual codebook
-      // reconstructs the coarse residuals with lower total squared error
-      // than the same-size deterministic modulo stand-in — the exact
-      // claim `trainedNcent` exists to deliver (FAISS trains residual
-      // codebooks for this reason), measured corpus-wide so no pinned
-      // query set can get lucky. Probed margins: 220M vs 493M e6-SSE at
-      // sf0.01, 980M vs 1354M at sf0.1. The previous recall-on-8-queries
-      // `beats_raw` form flipped at the 100× replica, whose scale-shell
-      // structure made the capped raw codebook an accidental specialist
-      // for the shell-0 queries; and "residual beats raw at equal
-      // budget" is NOT a theorem when the coarse table is a sparse
-      // untrained pick (13 arbitrary cells at sf0.01 leave residuals
-      // with MORE energy than the raw vectors — measured 220M vs 161M).
-      val ncentR = Similarity.pqModuloCodebook(vectors, 25).size
-      val totals = Similarity.ivfPqResidualCorpusSse(vectors,
-          ivfModulo = 40, pqModulo = 25, m = 8, trainedNcent = ncentR,
-          knownCount = nVec)
-        .select(col("sse").as("sse_trained"))
-        .crossJoin(Similarity.ivfPqResidualCorpusSse(vectors,
-          ivfModulo = 40, pqModulo = 25, m = 8, trainedNcent = 0,
-          knownCount = nVec)
-          .select(col("sse").as("sse_standin")))
-        .select((col("sse_trained") < col("sse_standin")).as("beats_standin"))
-      queries.select(col("qid"))
-        .join(resid, Seq("qid"), "left")
-        .crossJoin(broadcast(totals))
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 1L).as("recall_ok"),
-          col("beats_standin"))
-        .orderBy("qid")
-    },
-
-    // the production composition the recall sweep motivates: residual-
-    // IVFPQ shortlist (k·5 candidates at m bytes/vector) + exact fp32
-    // rerank. Rerank recall ≥ the un-reranked tier BY CONSTRUCTION (a
-    // true-top-k member in the shortlist cannot be outranked by k others),
-    // so beats_resid is a structural invariant, not a tuned bound.
-    "ann_ivfpq_rerank" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      val rerank = annOverlap(exact, Similarity.ivfPqResidualRerankTopK(
-        vectors, queries, k = 10, ivfModulo = 40, nProbe = 8, pqModulo = 25,
-        m = 8, trainedNcent = 64, expand = 5))
-      val resid = annOverlap(exact, Similarity.ivfPqResidualTopK(vectors, queries,
-        k = 10, ivfModulo = 40, nProbe = 8, pqModulo = 25, m = 8,
-        trainedNcent = 64))
-      val totals = rerank.agg(sum(col("n_common")).as("t_rr"))
-        .crossJoin(resid.agg(sum(col("n_common")).as("t_resid")))
-        .select((col("t_rr") >= col("t_resid")).as("beats_resid"))
-      queries.select(col("qid"))
-        .join(rerank, Seq("qid"), "left")
-        .crossJoin(broadcast(totals))
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 1L).as("recall_ok"),
-          col("beats_resid"))
-        .orderBy("qid")
-    },
-
-    // PQ with k-means-trained sub-codebooks at the SAME codebook budget as
-    // the modulo stand-in (ncent = n/25): per-query recall bound plus the
-    // trained-beats-sampled aggregate (Lloyd trainer: 35 vs 17 at sf0.01,
-    // 26 vs 24 at sf0.1; the sorted training sample → core-stable)
-    "ann_pq_kmeans" -> { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      // match the modulo codebook's budget (n/25) but cap at 256 — PQ
-      // codes are canonically one byte, and a corpus-proportional k-means
-      // k would make training itself super-linear at scale. ONE count
-      // feeds both the budget and the training-sample bound.
-      val n = vectors.count()
-      val ncent = math.max(8, math.min(256, (n / 25L).toInt))
-      val exact = Similarity.bruteForceTopK(vectors, queries, 10, "l2")
-        .select(col("qid"), col("label"))
-      val trained = annOverlap(exact, Similarity.pqKmeansTopK(vectors, queries,
-        k = 10, ncent = ncent, m = 8, knownCount = n))
-      // beats_modulo is the DISTORTION claim (r18): the Lloyd-trained
-      // codebook reconstructs the corpus with lower total squared error
-      // than the deterministic modulo stand-in — the objective k-means
-      // MINIMIZES, so the invariant holds at every corpus shape. The
-      // previous recall-on-8-pinned-queries form flipped at the 100×
-      // replica, whose scale-shell structure made the capped modulo
-      // codebook (80 replica-0 picks) an accidental specialist for the
-      // shell-0 queries while the trained 256 spread over 100 shells.
-      val centsT = Similarity.trainPqCodebook(
-        Similarity.trainSampleOf(vectors, knownCount = n).select(col("vec").as("v")),
-        m = 8, ncent = ncent, seed = 42L)
-      val totals = Similarity.pqCorpusSse(vectors, centsT, m = 8)
-        .select(col("sse").as("sse_km"))
-        .crossJoin(Similarity.pqCorpusSse(vectors,
-          Similarity.pqModuloCodebook(vectors, 25), m = 8)
-          .select(col("sse").as("sse_mod")))
-        .select((col("sse_km") < col("sse_mod")).as("beats_modulo"))
-      queries.select(col("qid"))
-        .join(trained, Seq("qid"), "left")
-        .crossJoin(broadcast(totals))
-        .select(col("qid"),
-          (coalesce(col("n_common"), lit(0L)) >= 1L).as("recall_ok"),
-          col("beats_modulo"))
-        .orderBy("qid")
-    },
-
-    // join-based upsert (MERGE semantics over immutable storage): a delta
-    // of updates + inserts full-outer-joined into the base table; output
-    // is the per-status summary of the merged state
-    "q_upsert_merge" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val updates = o.filter(col("o_orderkey") <= 50)
-        .select(col("o_orderkey"),
-          (dec(col("o_totalprice")) + lit(1000).cast(DecimalType(18, 2))).as("new_price"))
-      val inserts = o.filter(col("o_orderkey") <= 20)
-        .select((col("o_orderkey") + 10000000L).as("o_orderkey"),
-          dec(col("o_totalprice")).as("new_price"))
-      o.select(col("o_orderkey"), dec(col("o_totalprice")).as("old_price"))
-        .join(updates.unionByName(inserts), Seq("o_orderkey"), "full_outer")
-        .select(col("o_orderkey"),
-          coalesce(col("new_price"), col("old_price")).as("price"),
-          when(col("old_price").isNull, "inserted")
-            .when(col("new_price").isNull, "unchanged")
-            .otherwise("updated").as("status"))
-        .groupBy(col("status"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast(DoubleType).as("sum_price"))
-        .orderBy("status")
-    },
-
-    // JSONL round-trip as an ORACLED query (not just a spec): a documents
-    // slice is written to JSON-lines and read back under an explicit
-    // schema, and the oracle — DuckDB over the ORIGINAL parquet — must
-    // hash-match the re-read values, so JSON escaping of real corpus text
-    // (quotes, unicode, control chars) is verified byte-exact through the
-    // engine's ingest boundary. At 100 TB this is the narrow
-    // export/import path: a partitioned columnar scan → line-delimited
-    // text → schema-enforced parallel re-read, no shuffle anywhere.
-    "q_jsonl_roundtrip" -> { (s, dir) =>
-      val slice = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"))
-      // one fixed scratch dir per JVM, deleted on exit: a fresh temp dir
-      // per invocation leaked a JSON copy of the slice per bench rep
-      val out = SparkEntry.jsonlScratch
-      slice.write.mode("overwrite").json(out)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text", StringType, nullable = true),
-        org.apache.spark.sql.types.StructField("lang", StringType, nullable = true),
-        org.apache.spark.sql.types.StructField("source", StringType, nullable = true),
-        org.apache.spark.sql.types.StructField("n_chars", LongType, nullable = true)))
-      s.read.schema(schema).json(out)
-        .orderBy("doc_id")
-    },
-
-    // CSV round-trip through the other line-delimited export boundary:
-    // quoting/escaping of real corpus text (commas, quotes, newlines in
-    // values are quoted per RFC 4180 by Spark's writer) must survive a
-    // schema-enforced parallel re-read byte-exact vs the ORIGINAL
-    // parquet. Same scale shape as q_jsonl_roundtrip: columnar scan →
-    // text files → parallel re-read, no shuffle. multiLine handles
-    // quoted embedded newlines (at the cost of file-granular splits —
-    // the documented CSV trade-off; JSONL keeps line-granular splits,
-    // which is why it is the preferred 100 TB interchange format).
-    "q_csv_roundtrip" -> { (s, dir) =>
-      val slice = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 9 === 0)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"))
-      val out = SparkEntry.csvScratch
-      slice.write.mode("overwrite").option("header", "true").csv(out)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text", StringType, nullable = true),
-        org.apache.spark.sql.types.StructField("lang", StringType, nullable = true),
-        org.apache.spark.sql.types.StructField("source", StringType, nullable = true),
-        org.apache.spark.sql.types.StructField("n_chars", LongType, nullable = true)))
-      s.read.schema(schema).option("header", "true").option("multiLine", "true")
-        .csv(out)
-        .orderBy("doc_id")
-    },
-
-    // value-bucketed histogram (integer bucket arithmetic on doubles —
-    // identical bucket assignment in both engines)
-    "q_histogram" -> { (s, dir) =>
-      Tables(s, dir, "orders")
-        .select((floor(col("o_totalprice") / 50000.0)).cast(LongType).as("bucket"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("bucket")
-    },
-
-    // Benford first-significant-digit audit of the money column — the
-    // classic fabricated-data detector (synthetic/duplicated numeric
-    // feeds flunk it; organic multiplicative data passes). The digit
-    // comes from the DECIMAL's canonical string head (prices ≥ 1, so no
-    // leading zero; NO log10 — libm log rounding differs across engines
-    // at power-of-ten boundaries, and this needs only the digit).
-    // Everything emitted is exact BIGINT arithmetic: observed share and
-    // its deviation from Benford's law quantize as
-    // floor(x·1e6 + 1/2) = (2·n·1e6 + total) div (2·total), and the
-    // expected shares are 6-dp literal constants in BOTH engines.
-    // Shape: one map-side-combined groupBy onto ≤ 9 rows.
-    "q_benford" -> { (s, dir) =>
-      val expected = typedlit(Seq(301030L, 176091L, 124939L, 96910L,
-        79181L, 66947L, 57992L, 51153L, 45757L))
-      Tables(s, dir, "lineitem")
-        // explicit domain guard (r16 ADVICE): a price < 1 yields leading
-        // digit 0 (element_at index 0 → error/null) and a negative price
-        // makes the two engines diverge on digit extraction — filter the
-        // out-of-domain rows identically on BOTH sides instead of
-        // leaving the invariant to a comment
-        .filter(dec(col("l_extendedprice")) >= 1)
-        .select(substring(dec(col("l_extendedprice")).cast(StringType), 1, 1)
-          .cast(LongType).as("digit"))
-        .groupBy(col("digit"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("total", sum(col("n")).over())
-        .withColumn("share_e6", expr("(n * 2000000 + total) div (total * 2)"))
-        .withColumn("benford_e6",
-          element_at(expected, col("digit").cast(IntegerType)))
-        .select(col("digit"), col("n"), col("share_e6"), col("benford_e6"),
-          (col("share_e6") - col("benford_e6")).as("dev_e6"))
-        .orderBy("digit")
-    },
-
-    // k-anonymity audit over quasi-identifiers (Sweeney 2002): every
-    // (lang, source, length-bucket) equivalence class with its size and
-    // a violation verdict at k = 5 — the privacy sweep run beside PII
-    // redaction before a corpus ships. A released row in a class of
-    // size < k is re-identifiable by its quasi-identifiers alone, even
-    // with all direct identifiers scrubbed. Shape: ONE combiner
-    // groupBy; output bounded by the quasi-identifier domain (langs ×
-    // sources × buckets), not the corpus.
-    "q_k_anonymity" -> { (s, dir) =>
-      Tables(s, dir, "documents")
-        .select(col("lang"), col("source"),
-          expr("n_chars div 100").as("len_bucket"))
-        .groupBy(col("lang"), col("source"), col("len_bucket"))
-        .agg(count(lit(1)).as("class_size"))
-        .withColumn("violates_k5", col("class_size") < 5)
-        .orderBy("lang", "source", "len_bucket")
-    },
-
-    // stratified sampling: a fixed quota per language, rows chosen by a
-    // deterministic seeded-hash order — the training-data "mix" builder
-    "q_sample_stratified" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val h = md5(concat(lit("strat:"), col("doc_id").cast(StringType)))
-      val w = Window.partitionBy(col("lang")).orderBy(h, col("doc_id"))
-      Tables(s, dir, "documents")
-        .withColumn("rn", row_number().over(w).cast(LongType))
-        .filter(col("rn") <= 20)
-        .select(col("lang"), col("rn"), col("doc_id"))
-        .orderBy("lang", "rn")
-    },
-
-    // α-power source-mixture resampling (GPT-3 appendix A style): small
-    // sources upweighted via w_s ∝ n_s^0.7, per-source keep rates applied
-    // as deterministic md5 thresholds — no RNG, so the sample is
-    // reproducible across runs, partitionings, and engines. Plan: two
-    // tiny aggs + a broadcast rate join + a narrow filter; zero corpus
-    // shuffle.
-    "q_mixture_sample" -> { (s, dir) =>
-      Curation.mixtureSample(Tables(s, dir, "documents"),
-        alpha = 0.7, targetTotal = 250)
-        .orderBy("doc_id")
-    },
-
-    // per-domain cap: ≤ 8 docs per source by hash priority, selected with
-    // the mergeable bounded topK aggregate — the skew-safe formulation of
-    // q_sample_stratified's window (a 10⁹-page domain ships `cap` rows
-    // per partition, not its whole history to one task)
-    "q_domain_cap" -> { (s, dir) =>
-      Curation.domainCap(Tables(s, dir, "documents"), cap = 8)
-        .orderBy("source", "rank")
-    },
-
-    // Gopher-style within-doc repetition: characters inside lines that
-    // repeat in the SAME document (lines = 5-token chunks; fixture text
-    // has no newlines). Exact-integer outputs; doc-keyed shuffle only.
-    "text_dup_lines" -> { (s, dir) =>
-      Curation.dupLineStats(Tables(s, dir, "documents"), lineTokens = 5)
-        .orderBy("doc_id")
-    },
-
-    // C4/Lee-style corpus-wide boilerplate line filter: lines occurring
-    // in > 5 distinct docs are dropped everywhere; per-doc retention
-    // counts. Line-df agg is combiner-friendly; the join back has a
-    // unique df side — no pair expansion at any corpus frequency.
-    "text_line_df_filter" -> { (s, dir) =>
-      Curation.lineDfFilter(Tables(s, dir, "documents"), maxDf = 5,
-        lineTokens = 5)
-        .orderBy("doc_id")
-    },
-
-    // Efraimidis–Spirakis weighted sampling without replacement: 25 docs
-    // drawn ∝ length(text), keys = ln(u)/w from deterministic md5
-    // uniforms — reproducible, engine-portable, and selected by the
-    // k-bounded mergeable topK aggregate (no global sort).
-    "q_weighted_sample" -> { (s, dir) =>
-      Curation.weightedSample(Tables(s, dir, "documents"), k = 25,
-        weight = length(col("text")).cast(DoubleType))
-        .orderBy("rank")
-    },
-
-    // HLL approximate distinct next to the exact count. Sketch internals
-    // differ per engine, so the raw estimate can't hash-match — instead the
-    // output carries the EXACT count (oracle-verifiable in SQL) plus a
-    // bounded-relative-error verdict on the estimate (≤ 5% = 2.5× the
-    // requested rsd; measured ≤ 0.9% at sf0.01/sf0.1)
-    // Count-Min sketch point-frequency estimates (Cormode & Muthukrishnan
-    // 2005) via Spark's built-in mergeable count_min_sketch aggregate —
-    // the sketch is one combiner-friendly aggregation at ANY corpus size
-    // (width·depth counters per partial), probed driver-side for 20 fixed
-    // keys. Machine-checked CMS guarantees: est ≥ true (one-sided error,
-    // deterministic) and est ≤ true + 5·eps·N. The 1×eps·N bound only
-    // holds w.p. 1−δ per key, so a different seed/scale/key set could
-    // fail it on a healthy sketch; at 5× the per-row Markov bound
-    // amplifies over depth=7 rows to P(violation) ≤ 10^-7 per key —
-    // a failure means a broken sketch on ANY fixture, not fixture luck.
-    // (Seed pinned at 42, so the estimate is also deterministic here.)
-    "q_count_min" -> { (s, dir) =>
-      import s.implicits._
-      val o = Tables(s, dir, "orders")
-      val eps = 0.001
-      val bytes = o.agg(expr(
-          "count_min_sketch(o_custkey, CAST(0.001 AS DOUBLE), " +
-            "CAST(0.99 AS DOUBLE), 42)").as("sk"))
-        .head.getAs[Array[Byte]]("sk")
-      val cms = org.apache.spark.util.sketch.CountMinSketch
-        .readFrom(new java.io.ByteArrayInputStream(bytes))
-      val slack = math.ceil(5.0 * eps * cms.totalCount()).toLong
-      val est = (1L to 20L).map(k =>
-        (k, cms.estimateCount(java.lang.Long.valueOf(k)))).toDF("o_custkey", "est")
-      val exact = o.filter(col("o_custkey") <= 20)
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
-      est.join(exact, Seq("o_custkey"), "left")
-        .select(col("o_custkey"),
-          coalesce(col("cnt"), lit(0L)).as("exact_cnt"),
-          (col("est") >= coalesce(col("cnt"), lit(0L))).as("lower_ok"),
-          (col("est") <= coalesce(col("cnt"), lit(0L)) + slack).as("upper_ok"))
-        .orderBy("o_custkey")
-    },
-
-    "q_approx_distinct" -> { (s, dir) =>
-      Tables(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(approx_count_distinct(col("o_custkey"), 0.02).as("approx_cust"),
-          countDistinct(col("o_custkey")).as("exact_cust"))
-        .select(col("o_orderpriority"), col("exact_cust"),
-          (abs(col("approx_cust") - col("exact_cust")).cast(DoubleType) <=
-            lit(0.05) * col("exact_cust").cast(DoubleType)).as("approx_ok"))
-        .orderBy("o_orderpriority")
-    },
-
-    // sketch-based set-intersection estimate: |A∩B| from HLL sketches by
-    // inclusion–exclusion (est_A + est_B − est_A∪B) — the audience-
-    // overlap question ("users who viewed AND purchased") answered
-    // without shuffling user sets; exact counts ride the same output so
-    // the verdict (estimate within 5% of the exact union + slack) is
-    // machine-checked, the q_approx_distinct pattern
-    "q_set_intersection_est" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("view", "purchase"))
-        .select(col("user_id"), col("event_type"))
-      val flags = ev.groupBy(col("user_id")).agg(
-        max(when(col("event_type") === "view", 1L).otherwise(0L)).as("v"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("p"))
-      val exact = flags.agg(
-        sum(col("v")).as("exact_view"),
-        sum(col("p")).as("exact_purchase"),
-        count(lit(1)).as("exact_union"),
-        sum(col("v") * col("p")).as("exact_inter"))
-      val est = ev.agg(
-        approx_count_distinct(when(col("event_type") === "view", col("user_id")), 0.02).as("ea"),
-        approx_count_distinct(when(col("event_type") === "purchase", col("user_id")), 0.02).as("eb"),
-        approx_count_distinct(col("user_id"), 0.02).as("eu"))
-      exact.crossJoin(est)
-        .select(col("exact_view"), col("exact_purchase"),
-          col("exact_union"), col("exact_inter"),
-          (abs((col("ea") + col("eb") - col("eu")) - col("exact_inter"))
-            .cast(DoubleType) <=
-            lit(0.05) * col("exact_union").cast(DoubleType) + 10.0).as("est_ok"))
-    },
-
-    // per-user event-type transition mining (first-order Markov counts):
-    // (from → to) over each user's (ts, event_id)-ordered stream, with
-    // the conditional probability — the sequence-pattern summary a
-    // behavioral pipeline derives before training sequence models
-    "q_event_transitions" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      val pairs = ev
-        .withColumn("to_type", lead(col("event_type"), 1).over(w))
-        .filter(col("to_type").isNotNull)
-        .groupBy(col("event_type").as("from_type"), col("to_type"))
-        .agg(count(lit(1)).as("n"))
-      val totals = pairs.groupBy(col("from_type")).agg(sum(col("n")).as("tot"))
-      pairs.join(totals, "from_type")
-        .select(col("from_type"), col("to_type"), col("n"),
-          e6Witness(col("n").cast(DoubleType) / col("tot").cast(DoubleType)
-           ).as("prob_e6"))
-        .orderBy("from_type", "to_type")
-    },
-
-    // Top onboarding paths: each user's FIRST THREE event types as one
-    // "a>b>c" path string, counted across users — the entry-funnel
-    // report behind every activation dashboard (q_event_transitions is
-    // the memoryless view; this keeps 3 steps of order). Shape: one
-    // per-user window (the events-family bounded class) pruned to
-    // rn ≤ 3 immediately, a rank-pivot (max-when, no ordered
-    // collect_list — aggregation order is undefined in both engines),
-    // one combiner groupBy onto the path domain (≤ |types|³ rows), and
-    // a TakeOrdered top-15.
-    "q_top_paths" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      val first3 = ev.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-      val paths = first3.groupBy(col("user_id"))
-        .agg(max(when(col("rn") === 1, col("event_type"))).as("e1"),
-          max(when(col("rn") === 2, col("event_type"))).as("e2"),
-          max(when(col("rn") === 3, col("event_type"))).as("e3"))
-        .select(concat_ws(">", col("e1"), col("e2"), col("e3")).as("path"))
-      paths.groupBy(col("path")).agg(count(lit(1)).as("n_users"))
-        .orderBy(desc("n_users"), col("path"))
-        .limit(15)
-    },
-
-    // GK quantile sketch (percentile_approx's guarantee is |rank(v) −
-    // q·n| ≤ n/accuracy): the verdict re-ranks each approximate quantile
-    // against the data — count(< v) and count(≤ v) bracket v's true rank
-    // range, which must intersect [q·n − n/acc − 1, q·n + n/acc + 1].
-    // The sketch is mergeable partial/merge aggregation state, so the
-    // check holds at any partition count; oracle recomputes n exactly
-    // and asserts the verdicts (the q_approx_distinct pattern).
-    "q_approx_quantiles" -> { (s, dir) =>
-      val acc = 1000
-      val li = Tables(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_extendedprice"))
-      val approx = li.groupBy(col("l_returnflag"))
-        .agg(percentile_approx(col("l_extendedprice"),
-          array(lit(0.25), lit(0.5), lit(0.75), lit(0.95)), lit(acc)).as("vs"))
-        .select(col("l_returnflag"),
-          posexplode(col("vs")).as(Seq("qi", "v")))
-        .withColumn("q", element_at(
-          array(lit(0.25), lit(0.5), lit(0.75), lit(0.95)), col("qi") + 1))
-      approx.join(li, "l_returnflag")
-        .groupBy(col("l_returnflag"), col("q"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("l_extendedprice") < col("v"), 1L).otherwise(0L)).as("below"),
-          sum(when(col("l_extendedprice") <= col("v"), 1L).otherwise(0L)).as("at_or_below"))
-        .select(col("l_returnflag"), col("q"), col("n"),
-          (col("below").cast(DoubleType) <=
-             col("q") * col("n") + col("n").cast(DoubleType) / acc + 1 &&
-           col("at_or_below").cast(DoubleType) >=
-             col("q") * col("n") - col("n").cast(DoubleType) / acc - 1).as("rank_ok"))
-        .orderBy("l_returnflag", "q")
-    },
-
-    // media frame sampling: fixed-size frames cut from each payload (the
-    // frame-sample step of a video/audio pipeline, exercised on character
-    // frames so the oracle can reproduce the chunk arithmetic), every 2nd
-    // frame kept, per-frame digest + byte length
-    "q_media_frames" -> { (s, dir) =>
-      Tables(s, dir, "documents")
-        .select(col("doc_id").as("media_id"), col("text"),
-          explode(expr("sequence(0L, (length(text) - 1) div 256)")).as("frame_idx"))
-        .filter(col("frame_idx") % 2 === 0) // sample every 2nd frame
-        .withColumn("frame",
-          expr("substring(text, cast(frame_idx * 256 + 1 as int), 256)"))
-        .select(col("media_id"), col("frame_idx"),
-          md5(col("frame")).as("frame_md5"),
-          length(encode(col("frame"), "UTF-8")).cast(LongType).as("frame_bytes"))
-        .orderBy("media_id", "frame_idx")
-    },
-
-    // ---- multimodal: binary-column batched feature extraction (decode
-    //      stubbed; plumbing real). Oracled: the stub's byte-stat features
-    //      are reproduced in DuckDB over the ASCII payload bytes. ----
-
-    "multimodal_features" -> { (s, dir) =>
-      // flattened to scalar columns: the driver's row compare canonicalizes
-      // with a column sort that rejects array-typed cells
-      Multimodal.extractFeatures(
-        Multimodal.mediaFromDocuments(Tables(s, dir, "documents")))
-        .select(col("media_id"), col("n_bytes"), col("mime"),
-          size(col("features")).cast(LongType).as("n_dims"),
-          e4Witness(aggregate(col("features"), lit(0.0),
-            (acc, x) => acc + x.cast(DoubleType))).as("feat_sum_e4"),
-          floor(array_max(col("features")).cast(DoubleType) * lit(1e4)
-            + lit(0.5)).cast(LongType).as("feat_max_e4"))
-        .orderBy("media_id")
-    },
-
-    // ---- multimodal: REAL JDK codec roundtrips. Payloads are generated
-    //      from a closed-form pixel/sample formula, encoded into genuine
-    //      compressed/structured containers (PNG via javax.imageio, WAV
-    //      via javax.sound.sampled, a length-prefixed frame container),
-    //      then DECODED by the real codec; the oracle recomputes every
-    //      decoded statistic from the formula alone. PNG is lossless and
-    //      WAV is PCM, so values are exact doubles on both sides — no
-    //      rounding needed. ----
-    "multimodal_image_decode" -> { (s, dir) =>
-      val ids = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0).select(col("doc_id").as("media_id"))
-      Multimodal.imageDecodeStats(Multimodal.imageMedia(ids))
-        .orderBy("media_id")
-    },
-    "multimodal_audio_decode" -> { (s, dir) =>
-      val ids = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0).select(col("doc_id").as("media_id"))
-      Multimodal.audioDecodeStats(Multimodal.audioMedia(ids))
-        .orderBy("media_id")
-    },
-    // video TEMPORAL quality (static-clip drop + scene-cut density):
-    // mean-gray jumps across frame boundaries compared by EXACT
-    // cross-multiplication (frames change dims in this corpus), all
-    // BIGINT — real container+PNG decode, zero-tolerance oracle
-    "multimodal_video_temporal" -> { (s, dir) =>
-      val ids = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0).select(col("doc_id").as("media_id"))
-      Multimodal.videoTemporalStats(Multimodal.videoMedia(ids))
-        .orderBy("media_id")
-    },
-
-    // image QUALITY FILTER (the LAION-class curation pass): aspect,
-    // exposure extremes, flat-raster verdicts — real PNG decode, exact
-    // integer outputs incl. the variance NUMERATOR n·Σg²−(Σg)² (no
-    // division, no doubles anywhere), zero-tolerance oracle
-    "multimodal_image_quality" -> { (s, dir) =>
-      val ids = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0).select(col("doc_id").as("media_id"))
-      Multimodal.imageQualityStats(Multimodal.imageMedia(ids))
-        .orderBy("media_id")
-    },
-
-    // audio QUALITY FILTER (the speech-corpus curation pass): silence
-    // fraction, clipping fraction, energy, peak per clip — real WAV
-    // decode, all-integer outputs (ppm fractions by integer division),
-    // oracle from the closed-form generator with zero tolerance
-    "multimodal_audio_quality" -> { (s, dir) =>
-      val ids = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0).select(col("doc_id").as("media_id"))
-      Multimodal.audioQualityStats(Multimodal.audioMedia(ids))
-        .orderBy("media_id")
-    },
-    "multimodal_frame_sample" -> { (s, dir) =>
-      val ids = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0).select(col("doc_id").as("media_id"))
-      Multimodal.frameSampleStats(Multimodal.videoMedia(ids), stride = 2)
-        .orderBy("media_id", "frame_idx")
-    },
-    // decode + nearest-neighbor resize to 8×6 (the thumbnail/preprocess
-    // step): NN sampling is integer-exact, so the oracle reproduces the
-    // whole resized raster from the closed-form generator
-    "multimodal_image_resize" -> { (s, dir) =>
-      val ids = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0).select(col("doc_id").as("media_id"))
-      Multimodal.imageResizeStats(Multimodal.imageMedia(ids), ow = 8, oh = 6)
-        .orderBy("media_id")
-    },
-
-    // perceptual-hash (dHash) image dedup: decode real PNGs, NN-sample to
-    // a 9×7 grid, one bit per horizontal gradient → 56-bit hash, then ONE
-    // combiner groupBy on the hash — the image-side exact-dedup pass of
-    // corpus curation. The fixture corpus carries closed-form duplicates
-    // (pattern = media_id % 97), and NN sampling + integer compares are
-    // exact, so the oracle recomputes every hash from the formula WITHOUT
-    // a codec: equality proves the whole encode→PNG→decode→hash chain
-    "multimodal_phash_dedup" -> { (s, dir) =>
-      val ids = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0).select(col("doc_id").as("media_id"))
-      Multimodal.phashDedup(Multimodal.dupImageMedia(ids, patMod = 97))
-        .orderBy("media_id")
-    },
-
-    // Lossy-codec roundtrip: encode the closed-form pattern as a REAL JPEG
-    // (javax.imageio, quality 0.95), decode it back, and emit tolerance
-    // VERDICTS — dims are exact even under DCT compression; pixel values
-    // are bounded-error (bounds calibrated with headroom in OpsSpec).
-    // The oracle recomputes dims from the closed form and asserts the
-    // verdicts uniformly true (the seeded-ANN oracle pattern: lossy decode
-    // has no hashable SQL form, but the machine-checked invariants do).
-    "multimodal_jpeg_decode" -> { (s, dir) =>
-      val ids = Tables(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0).select(col("doc_id").as("media_id"))
-      Multimodal.jpegDecodeStats(Multimodal.jpegMedia(ids))
-        .orderBy("media_id")
-    },
-
-    // ---- graph analytics: corpus-quality priors ----
-
-    // Damped PageRank (5 iterations) over the part co-occurrence graph
-    // (parts sharing an order, both directions) — the page-quality prior
-    // of web-corpus curation (Page et al. 1999), here as "product
-    // centrality". Ranks broadcast into each iteration's edge join; ONE
-    // combiner-friendly shuffle (the contribution sum on dst) per
-    // iteration. Per-edge contributions quantize to DECIMAL(28,14) so the
-    // reduction is exact decimal arithmetic — reduction-order-independent
-    // in both engines, hence hash-oracled (Graph.pageRankSql generates
-    // the unrolled oracle from the same constants).
-    "q_pagerank" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val parts = Tables(s, dir, "part").select(col("p_partkey").as("id"))
-      val edges = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
-      Graph.pageRank(parts, edges, iters = 5)
-        .select(col("id").as("p_partkey"), col("r").as("rank"))
-        .orderBy("p_partkey")
-    },
-
-    // HITS hubs & authorities (Kleinberg 1999) on the customer→supplier
-    // bipartite purchase graph (supplier ids offset into a disjoint id
-    // space) — the hub/authority quality pair for bipartite corpora.
-    // Decimal-quantized contribution sums + MAX normalization keep every
-    // iteration reduction-order-independent → hash-oracled via the
-    // unrolled Graph.hitsSql.
-    "q_hits" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val li = Tables(s, dir, "lineitem")
-      val edges = o.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(10000000L)).as("dst"))
-      val nodes = Tables(s, dir, "customer").select(col("c_custkey").as("id"))
-        .unionByName(Tables(s, dir, "supplier")
-          .select((col("s_suppkey") + lit(10000000L)).as("id")))
-      Graph.hits(nodes, edges, iters = 4)
-        .select(col("id"), col("h").as("hub"), col("a").as("auth"))
-        .orderBy("id")
-    },
-
-    // Personalized PageRank (Haveliwala 2002): teleport mass restricted
-    // to a seed set (every 97th part) — relevance-to-the-seeds instead of
-    // global centrality, the "expand from a trusted core" curation
-    // primitive. Same decimal-exact iteration and broadcast-rank shape
-    // as q_pagerank.
-    "q_ppr_seeded" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val parts = Tables(s, dir, "part").select(col("p_partkey").as("id"))
-      val seeds = parts.filter(col("id") % 97 === 0)
-      val edges = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
-      Graph.pageRankSeeded(parts, edges, seeds, iters = 4)
-        .select(col("id").as("p_partkey"), col("r").as("rank"))
-        .orderBy("p_partkey")
-    },
-
-    // Association rules at the pair level (Agrawal & Srikant 1994):
-    // top-20 co-purchased part pairs by pair count with directional
-    // confidence and lift — support floor 3 prunes before the stats
-    // join (the Apriori downward-closure step). Fully deterministic
-    // order: (c_pair desc, u, v).
-    "q_assoc_rules" -> { (s, dir) =>
-      Assoc.pairRules(Tables(s, dir, "lineitem"), "l_orderkey", "l_partkey",
-          minPairCount = 3L)
-        .orderBy(desc("c_pair"), col("u"), col("v"))
-        .limit(20)
-    },
-
-    // The next Apriori level: top size-3 BRAND itemsets with the three
-    // pair→third confidences ("orders with these two brands also carry
-    // …"). Items are brands, not parts: the bounded brand domain keeps
-    // support dense at every corpus size, where part-level triples
-    // dilute as the catalog grows. Triple expansion stays cubic in
-    // BASKET size (≤ 7 distinct brands per order here), never corpus
-    // size — both explosion joins key on the basket id (see
-    // Assoc.tripleRules scaladoc); the brand lookup is a broadcast dim
-    // join before the distinct.
-    "q_assoc_triples" -> { (s, dir) =>
-      val branded = Tables(s, dir, "lineitem")
-        .join(broadcast(Tables(s, dir, "part")
-          .select(col("p_partkey"), col("p_brand"))),
-          col("l_partkey") === col("p_partkey"))
-      Assoc.tripleRules(branded, "l_orderkey", "p_brand",
-          minTripleCount = 2L)
-        .orderBy(desc("c_triple"), col("u"), col("v"), col("w"))
-        .limit(15)
-    },
-
-    // Multi-source BFS: hop distance ≤ 3 from the seed part set along
-    // the co-purchase graph (k-hop neighborhoods around trusted seeds —
-    // the graph-locality filter of web-corpus curation). Same edge set
-    // and seed rule as q_ppr_seeded; integer-exact, oracle generated
-    // from the same constants by Graph.bfsHopsSql.
-    "q_bfs_hops" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val edges = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
-      val seeds = Tables(s, dir, "part")
-        .select(col("p_partkey").as("id")).filter(col("id") % 97 === 0)
-      Graph.bfsHops(edges, seeds, maxHops = 3)
-        .select(col("id").as("p_partkey"), col("d").as("hops"))
-        .orderBy("p_partkey")
-    },
-
-    // Exact triangle count + local clustering coefficient (Watts &
-    // Strogatz 1998) on the part co-purchase graph, support ≥ 2 (pairs
-    // must co-occur in ≥ 2 basket instances — the market-basket
-    // sparsifier that keeps |E| roughly scale-constant while instance
-    // pairs grow linearly: 3.6k edges at sf0.01, 3.9k at sf0.1).
-    // Degree-ordered orientation bounds the wedge join (Suri &
-    // Vassilvitskii 2011); the oracle runs the identical formulation.
-    "q_triangles" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val und = Assoc.incidencePairCounts(li, "l_orderkey", "l_partkey")
-        .filter(col("c_pair") >= 2).select("u", "v")
-      Graph.triangleStats(und)
-        .select(col("node").as("p_partkey"), col("deg"), col("tri"), col("cc"))
-        .orderBy("p_partkey")
-    },
-
-    // Snapshot reconciliation: exact diff of two table versions (CDC /
-    // backfill audit) — full outer join on the pk, null-safe column
-    // compares, diffs only. The "after" version is derived
-    // deterministically (drop keys %997, bump price on keys %500, add
-    // shifted copies of keys %1000==1) so both engines diff the same
-    // snapshots.
-    "q_table_diff" -> { (s, dir) =>
-      val orders = Tables(s, dir, "orders")
-      val after = orders.filter(col("o_orderkey") % 997 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 500 === 0, col("o_totalprice") + 1.0)
-            .otherwise(col("o_totalprice")))
-        .unionByName(orders.filter(col("o_orderkey") % 1000 === 1)
-          .withColumn("o_orderkey", col("o_orderkey") + 100000000L))
-      Reconcile.tableDiff(orders, after, Seq("o_orderkey"),
-          Seq("o_custkey", "o_orderstatus", "o_totalprice"))
-        .orderBy("o_orderkey")
-    },
-
-    // ---- data-quality gate (the Deequ / Great Expectations role) ----
-
-    // One-pass column profile of orders: non-null count, exact distinct
-    // count, min/max (numeric as DOUBLE, strings as-is) per column —
-    // ALL statistics from one scan + one single-row exchange.
-    "q_profile" -> { (s, dir) =>
-      Profile.profile(Tables(s, dir, "orders"),
-          numericCols = Seq("o_orderkey", "o_custkey", "o_totalprice"),
-          stringCols = Seq("o_orderstatus", "o_orderpriority"))
-        .orderBy("col_name")
-    },
-
-    // Constraint suite: PK uniqueness, completeness, value range, value
-    // domain (one aggregation pass over orders) + referential integrity
-    // lineitem→orders (one anti-join). Verdict rows carry the violation
-    // COUNT, not just a boolean, so a regression's size is visible.
-    "q_quality_checks" -> { (s, dir) =>
-      val orders = Tables(s, dir, "orders")
-      Profile.runChecks(orders, Seq(
-          Profile.Unique("orders_pk_unique", Seq("o_orderkey")),
-          Profile.Complete("orders_custkey_complete", "o_custkey"),
-          Profile.InRange("orders_totalprice_range", "o_totalprice",
-            0.0, 1000000.0),
-          Profile.InSet("orders_status_domain", "o_orderstatus",
-            Seq("F", "O", "P"))))
-        .unionAll(Profile.riCheck("lineitem_orders_ri",
-          Tables(s, dir, "lineitem"), "l_orderkey", orders, "o_orderkey"))
-        .orderBy("check_name")
-    },
-
-    // Label-propagation communities (Raghavan et al. 2007) on the
-    // support-≥2 co-purchase graph (the q_triangles sparsifier), 4
-    // synchronous rounds — integer-exact argmax updates, so the unrolled
-    // oracle matches hash-exactly (no decimal quantization needed).
-    "q_communities" -> { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-      val und = Assoc.incidencePairCounts(li, "l_orderkey", "l_partkey")
-        .filter(col("c_pair") >= 2).select("u", "v")
-      val edges = und.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-      val nodes = edges.select(col("src").as("id"))
-      Graph.labelPropagation(nodes, edges, iters = 4)
-        .select(col("id").as("p_partkey"), col("lbl").as("community"))
-        .orderBy("p_partkey")
-    },
-
-    // Two-sample KS drift between order-value distributions of final
-    // vs open orders — the distribution-drift alarm between two ingest
-    // slices. Sup over exact integer cross products; ONE double
-    // division at the end.
-    "q_ks_drift" -> { (s, dir) =>
-      Profile.ksDrift(Tables(s, dir, "orders"), "o_totalprice",
-        "o_orderstatus", "F", "O")
-    },
-
-    // Population Stability Index per event type between the first and
-    // second half of the time range — the bucket-decomposable drift
-    // gauge complementing q_ks_drift's exact sup-gap; Laplace-smoothed,
-    // decimal-exact per-bucket terms
-    "q_psi_drift" -> { (s, dir) =>
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      Profile.psiDrift(ev, "value", "ts_us", "event_type")
-        .select(col("g").as("event_type"), col("n_a"), col("n_b"), col("psi_e6"))
-        .orderBy("event_type")
-    },
-
-    // Jensen–Shannon drift (Lin 1991): the bounded (≤ ln 2), symmetric
-    // companion to PSI over the same time-split bucket grid — the score
-    // whose thresholds transfer across metrics because it cannot blow
-    // up on near-empty cells. Same dense-grid/Laplace/decimal-term
-    // machinery (Profile.timeSplitGrid is shared with psiDrift).
-    "q_js_drift" -> { (s, dir) =>
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
-      Profile.jsDrift(ev, "value", "ts_us", "event_type")
-        .select(col("g").as("event_type"), col("n_a"), col("n_b"), col("js_e6"))
-        .orderBy("event_type")
-    },
-
-    // mergeable-sketch cardinality (Datasketches HLL, the engine's
-    // 100 TB count-distinct surface): per-type sketches aggregate
-    // map-side and MERGE losslessly — hll_union_agg over the per-type
-    // sketches estimates the global cardinality without rescanning,
-    // the property that lets a deployment keep per-partition sketches
-    // and answer union queries from metadata. The exact distincts ride
-    // along as the verification arm; the driver checks the ±5%
-    // envelope (estimates are deterministic but engine-specific, so
-    // the oracle pins the exact counts + the envelope verdicts — the
-    // ann_ivfpq_residual precedent for non-SQL-reproducible internals).
-    "q_hll_sketch" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      val perType = ev.groupBy(col("event_type"))
-        .agg(hll_sketch_agg(col("user_id")).as("sk"),
-          countDistinct(col("user_id")).as("n_exact"))
-        .localCheckpoint(true)
-      val union = perType.agg(hll_union_agg(col("sk")).as("usk"))
-        .select(hll_sketch_estimate(col("usk")).as("est_u"))
-      val exactAll = ev.agg(countDistinct(col("user_id")).as("n_all"))
-      perType
-        .select(col("event_type"), col("n_exact"),
-          hll_sketch_estimate(col("sk")).as("est"))
-        .crossJoin(broadcast(union)).crossJoin(broadcast(exactAll))
-        .select(col("event_type"), col("n_exact"),
-          (abs(col("est") - col("n_exact")).cast(DoubleType) <=
-            lit(0.05) * col("n_exact").cast(DoubleType)).as("type_ok"),
-          col("n_all"),
-          (abs(col("est_u") - col("n_all")).cast(DoubleType) <=
-            lit(0.05) * col("n_all").cast(DoubleType)).as("union_ok"))
-        .orderBy("event_type")
-    },
-
-    // behavioral diversity per user: Shannon entropy of the event-type
-    // distribution (bot heuristic: near-zero entropy = single-action
-    // loops; log(n_types) = uniform randomness). Two keyed
-    // aggregations; the per-user entropy sum runs over ≤ |event types|
-    // terms
-    "q_session_entropy" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      val c = ev.groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("c"))
-      val totals = c.groupBy(col("user_id"))
-        .agg(sum(col("c")).as("n"), count(lit(1)).as("n_types"))
-      val p = col("c").cast(DoubleType) / col("n").cast(DoubleType)
-      c.join(totals, "user_id")
-        .groupBy(col("user_id"))
-        .agg(min(col("n")).as("n_events"), min(col("n_types")).as("n_types"),
-          e6Witness(sum(-p * log(p)))
-            .as("entropy_e6"))
-        .orderBy("user_id")
-    },
-
-    // per-dimension embedding moments (the projection-tier diagnostic:
-    // near-zero-variance dims → PCA truncation is free; uniform
-    // variance → it costs recall). Decimal-quantized moment sums —
-    // reduction order cannot move the hash
-    "q_dim_variance" -> { (s, dir) =>
-      Profile.dimStats(Tables(s, dir, "embeddings"), "embedding").orderBy("dim")
-    },
-
-    // blocking-scheme evaluation (Christen 2012 §7.2): pair completeness
-    // and reduction ratio of sorted-neighborhood CANDIDATES against the
-    // exact prefix-filter ground truth — the metric pair that justifies
-    // a blocking choice before anyone trusts its recall
-    "q_blocking_quality" -> { (s, dir) =>
-      val docs = Tables(denseSession(s), dir, "documents")
-      val truth = Dedup.prefixFilterPairs(docs, 0.7)
-        .select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-      val cand = Dedup.sortedNeighborhoodCandidates(docs, w = 5)
-        .localCheckpoint(true)
-      // r18 (opt): a doc has ≥ 1 word 3-shingle iff it has ≥ 3 tokens —
-      // count on the token length instead of materializing the full
-      // distinct-shingle arrays a third time (truth and cand already
-      // shingled the corpus); same predicate, same count
-      val nd = docs.select(Dedup.tokens(col("text")).as("w"))
-        .filter(size(col("w")) >= 3)
-        .agg(count(lit(1)).as("n_docs"))
-      cand.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
-        .crossJoin(cand.join(truth, Seq("doc_a", "doc_b"))
-          .agg(count(lit(1)).as("n_hit")))
-        .crossJoin(nd)
-        .select(col("n_docs"), col("n_candidates"), col("n_truth"), col("n_hit"),
-          e6Witness(col("n_hit").cast(DoubleType) / col("n_truth")
-           ).as("pair_completeness_e6"),
-          e6Witness((lit(1.0) - col("n_candidates").cast(DoubleType) /
-            (col("n_docs").cast(DoubleType) * (col("n_docs") - 1) / lit(2.0)))
-           ).as("reduction_ratio_e6"))
-    },
-
-    // top-k PMI collocations (Church & Hanks 1990) with a support floor
-    // — the multi-word units a vocab builder should keep whole
-    "text_pmi_collocations" -> { (s, dir) =>
-      TextAnalysis.pmiCollocations(
-        Tables(s, dir, "documents").select(col("doc_id"), col("text")),
-        minCount = 5, k = 20)
-        .orderBy("rank")
-    },
-
-    // ---- entity resolution: fuzzy (edit-distance) self-join ----
-
-    // Levenshtein-≤1 pairs over customer names via deletion-neighborhood
-    // blocking (FastSS, Bocek et al. 2007) — candidates come from an
-    // equi-join on single-deletion variants (output-proportional, NEVER
-    // all-pairs), then the exact levenshtein filter confirms. The oracle
-    // replicates the same blocking in SQL because the definitional
-    // formulation (all-pairs levenshtein) is quadratic; blocking
-    // completeness for distance ≤ 1 is proved in the Scaladoc and
-    // spec-pinned against a brute-force small fixture.
-    // key-level emission (r18): the id-pair materialization is
-    // quadratic in the key-repetition factor (the 100× replica repeats
-    // every c_name 100× → ~2.7e9 id pairs, a row count no oracle or
-    // sink should materialize); the summary (key_a, key_b, dist,
-    // n_pairs) carries the identical information at distinct-key size
-    // and is oracle-able at every tier. Dedup.fuzzyPairsEdit1 keeps the
-    // id-pair contract for library callers.
-    "q_fuzzy_join" -> { (s, dir) =>
-      Dedup.fuzzyKeySummary(Tables(s, dir, "customer"), "c_custkey", "c_name")
-        .select(col("key_a").as("name_a"), col("key_b").as("name_b"),
-          col("dist"), col("n_pairs"))
-        .orderBy("name_a", "name_b")
-    },
-
-    // record linkage scored the way linkage pipelines rank: same
-    // recall-complete edit-1 blocking as q_fuzzy_join, but each key
-    // pair carries its Jaro-Winkler similarity — prefix-weighted, so a
-    // typo in the first characters scores lower than one at the tail
-    "q_jw_link" -> { (s, dir) =>
-      Dedup.fuzzyKeySummary(Tables(s, dir, "customer"), "c_custkey", "c_name",
-          jw = true)
-        .select(col("key_a").as("name_a"), col("key_b").as("name_b"),
-          col("dist"), col("n_pairs"), col("jw_e6"))
-        .orderBy("name_a", "name_b")
-    },
-
-    // ---- skyline (Pareto frontier): multi-criteria best tradeoffs ----
-
-    // 2-D skyline of orders by (total price ↓, order recency ↑) — the
-    // cheap-and-recent Pareto frontier (Börzsönyi et al. 2001), computed
-    // with the O(n log n) sort-scan (one window over the distinct point
-    // set) instead of the textbook quadratic NOT-EXISTS anti-join;
-    // maximization enters as negation, and the identical scan is the
-    // oracle (Skyline.skyline2dSql).
-    "q_skyline" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val pts = o.select(col("o_orderkey"), col("o_totalprice").as("x"),
-        (-expr("unix_micros(cast(o_orderdate as timestamp))")).as("y"))
-      val sky = Skyline.skyline2d(pts, "x", "y")
-      pts.join(sky, Seq("x", "y"))
-        .select(col("o_orderkey"), col("x").as("total_price"),
-          (-col("y")).as("order_ts_us"))
-        .orderBy("o_orderkey")
-    }
-  )
-
-  /** One DuckDB oracle shared by the three equivalent kNN formulations
-    * (direct expression, norm-decomposed, SQL-surface).
-    */
-  private val oracleKnnL2: String =
-    """WITH q AS (
-      |  SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-      |pairs AS (
-      |  SELECT q.qid, e.vec_id AS label, q.qv, e.embedding AS v
-      |  FROM q CROSS JOIN embeddings e),
-      |dists AS (
-      |  SELECT qid, label, SUM((CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE)) * (CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE))) AS score
-      |  FROM (SELECT qid, label, UNNEST(qv) AS qe, UNNEST(v) AS ve FROM pairs)
-      |  GROUP BY qid, label),
-      |ranked AS (
-      |  SELECT qid, label, score,
-      |    row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank
-      |  FROM dists)
-      |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-      |FROM ranked WHERE rank <= 10
-      |ORDER BY qid, rank""".stripMargin
-
-  /** BM25 posting-statistic CTEs shared by `text_bm25` and `hybrid_rrf`:
-    * Okapi BM25, k1=1.2, b=0.75, +1-smoothed idf; queries are the
-    * distinct token sets of doc_id < 4 with the query doc self-excluded.
-    * Constants are written as the same literal arithmetic the Spark side
-    * evaluates (`1.2 + 1.0`, `1.0 - 0.75`) so both engines fold them to
-    * identical doubles.
-    */
-  private val oracleBm25Ctes: String =
-    """toksb AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-      |lensb AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS len FROM toksb),
-      |tfb AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-      |        FROM (SELECT doc_id, UNNEST(w) AS tok FROM toksb) GROUP BY 1, 2),
-      |dfb AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tfb GROUP BY 1
-      |        HAVING count(*) <= 100000),
-      |statsb AS (SELECT CAST((SELECT count(*) FROM documents) AS DOUBLE) AS n_docs,
-      |           (SELECT avg(len) FROM lensb) AS avg_len),
-      |qb AS (SELECT doc_id AS qid, UNNEST(list_distinct(string_split(text,' '))) AS tok
-      |       FROM documents WHERE doc_id < 4),
-      |contribb AS (
-      |  SELECT qb.qid, tfb.doc_id AS label,
-      |    ln(1.0 + (s.n_docs - dfb.df + 0.5)/(dfb.df + 0.5)) * (tfb.tf * (1.2 + 1.0)) /
-      |      (tfb.tf + 1.2*((1.0 - 0.75) + 0.75*lensb.len/s.avg_len)) AS c
-      |  FROM qb JOIN dfb ON qb.tok = dfb.tok JOIN tfb ON qb.tok = tfb.tok
-      |  JOIN lensb ON tfb.doc_id = lensb.doc_id, statsb s
-      |  WHERE tfb.doc_id <> qb.qid),
-      |scb AS (SELECT qid, label,
-      |        FLOOR(SUM(c) * 1000000.0 + 0.5) AS score FROM contribb GROUP BY 1, 2),
-      |bm25 AS (SELECT qid, label, score,
-      |         row_number() OVER (PARTITION BY qid ORDER BY score DESC, label) AS rank
-      |         FROM scb)""".stripMargin
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops →
-    * driver records a weaker rows-only check.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] = Map(
-
-    "text_bm25" ->
-      s"""WITH $oracleBm25Ctes
-         |SELECT qid, rank, label, CAST(score AS BIGINT) AS score_e6
-         |FROM bm25 WHERE rank <= 10
-         |ORDER BY qid, rank""".stripMargin,
-
-    "text_phrase_search" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |p AS (SELECT doc_id, UNNEST(w) AS tok,
-        |        generate_subscripts(w, 1) AS pos FROM t),
-        |m AS (SELECT p1.doc_id, CAST(p1.pos AS BIGINT) AS pos
-        |      FROM p p1
-        |      JOIN p p2 ON p2.doc_id = p1.doc_id AND p2.pos = p1.pos + 1
-        |        AND p2.tok = 'table'
-        |      JOIN p p3 ON p3.doc_id = p1.doc_id AND p3.pos = p1.pos + 2
-        |        AND p3.tok = 'hash'
-        |      WHERE p1.tok = 'stream')
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-        |  MIN(pos) AS first_pos
-        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // reuses the shared posting CTEs (toksb/tfb/dfb/statsb); query-side
-    // weights from the query doc's term FREQUENCIES (classic VSM), norms
-    // over each doc's full capped-term vector
-    "text_tfidf" ->
-      s"""WITH $oracleBm25Ctes,
-         |wtb AS (SELECT tfb.doc_id, tfb.tok, tfb.tf * ln(1.0 + s.n_docs/dfb.df) AS w
-         |        FROM tfb JOIN dfb ON tfb.tok = dfb.tok, statsb s),
-         |nrmb AS (SELECT doc_id, SQRT(SUM(w*w)) AS nrm FROM wtb GROUP BY 1),
-         |qtfb AS (SELECT doc_id AS qid, tok, CAST(count(*) AS BIGINT) AS qtf
-         |         FROM (SELECT doc_id, UNNEST(string_split(text,' ')) AS tok
-         |               FROM documents WHERE doc_id < 4)
-         |         GROUP BY 1, 2),
-         |qwb AS (SELECT qtfb.qid, qtfb.tok, qtfb.qtf * ln(1.0 + s.n_docs/dfb.df) AS qw
-         |        FROM qtfb JOIN dfb ON qtfb.tok = dfb.tok, statsb s),
-         |qnrmb AS (SELECT qid, SQRT(SUM(qw*qw)) AS qnrm FROM qwb GROUP BY 1),
-         |dotb AS (SELECT qwb.qid, wtb.doc_id AS label, SUM(qwb.qw * wtb.w) AS dot
-         |         FROM qwb JOIN wtb ON qwb.tok = wtb.tok
-         |         WHERE wtb.doc_id <> qwb.qid GROUP BY 1, 2),
-         |sctf AS (SELECT dotb.qid, dotb.label,
-         |         FLOOR(dotb.dot/(nrmb.nrm*qnrmb.qnrm) * 1000000.0 + 0.5) AS score
-         |         FROM dotb JOIN nrmb ON dotb.label = nrmb.doc_id
-         |         JOIN qnrmb ON dotb.qid = qnrmb.qid),
-         |tfr AS (SELECT qid, label, score,
-         |        row_number() OVER (PARTITION BY qid ORDER BY score DESC, label) AS rank
-         |        FROM sctf)
-         |SELECT qid, rank, label, CAST(score AS BIGINT) AS score_e6
-         |FROM tfr WHERE rank <= 10
-         |ORDER BY qid, rank""".stripMargin,
-
-    "hybrid_rrf" ->
-      s"""WITH $oracleBm25Ctes,
-         |qd AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 4),
-         |pairsd AS (SELECT qd.qid, e.vec_id AS label, qd.qv, e.embedding AS v
-         |           FROM qd CROSS JOIN embeddings e WHERE e.vec_id <> qd.qid),
-         |distsd AS (
-         |  SELECT qid, label,
-         |    SUM(CAST(qe AS DOUBLE) * CAST(ve AS DOUBLE)) /
-         |      (SQRT(SUM(CAST(qe AS DOUBLE) * CAST(qe AS DOUBLE))) *
-         |       SQRT(SUM(CAST(ve AS DOUBLE) * CAST(ve AS DOUBLE)))) AS score
-         |  FROM (SELECT qid, label, UNNEST(qv) AS qe, UNNEST(v) AS ve FROM pairsd)
-         |  GROUP BY qid, label),
-         |dense AS (SELECT qid, label,
-         |          row_number() OVER (PARTITION BY qid ORDER BY score DESC, label) AS rank
-         |          FROM distsd),
-         |votes AS (SELECT qid, label, 1.0/(60 + rank) AS v FROM bm25 WHERE rank <= 20
-         |          UNION ALL
-         |          SELECT qid, label, 1.0/(60 + rank) FROM dense WHERE rank <= 20),
-         |fs AS (SELECT qid, label,
-         |       FLOOR(SUM(v) * 1000000.0 + 0.5) AS score FROM votes GROUP BY 1, 2),
-         |fr AS (SELECT qid, label, score,
-         |       row_number() OVER (PARTITION BY qid ORDER BY score DESC, label) AS rank
-         |       FROM fs)
-         |SELECT qid, rank, label, CAST(score AS BIGINT) AS score_e6
-         |FROM fr WHERE rank <= 10
-         |ORDER BY qid, rank""".stripMargin,
-
-    "dedup_semantic" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc0 AS (SELECT v0.vec_id, c.cid, array_distance(v0.varr, c.carr) AS ad
-        |  FROM v0, c),
-        |amin0 AS (SELECT vec_id, MIN(ad) AS m FROM avc0 GROUP BY vec_id),
-        |vcand0 AS (SELECT a.vec_id, a.cid FROM avc0 a
-        |  JOIN amin0 ON a.vec_id = amin0.vec_id
-        |  WHERE a.ad <= amin0.m * 1.00001 + 1e-3),
-        |vc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM vcand0 w JOIN v0 v ON w.vec_id = v.vec_id JOIN c ON w.cid = c.cid)
-        |  GROUP BY 1, 2),
-        |va AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vc) WHERE rn = 1),
-        |pr AS (SELECT a.vec_id AS i, b.vec_id AS j FROM va a
-        |       JOIN va b ON a.cid = b.cid AND a.vec_id < b.vec_id),
-        |ex AS (SELECT i, j, UNNEST(av) AS ae, UNNEST(bv) AS be FROM (
-        |  SELECT pr.i, pr.j, x.embedding AS av, y.embedding AS bv
-        |  FROM pr JOIN embeddings x ON pr.i = x.vec_id
-        |  JOIN embeddings y ON pr.j = y.vec_id)),
-        |p AS (SELECT i, j,
-        |  SUM(CAST(ae AS DOUBLE)*CAST(be AS DOUBLE)) /
-        |    (SQRT(SUM(CAST(ae AS DOUBLE)*CAST(ae AS DOUBLE))) *
-        |     SQRT(SUM(CAST(be AS DOUBLE)*CAST(be AS DOUBLE)))) AS cos
-        |  FROM ex GROUP BY 1, 2),
-        |dups AS (SELECT j, MIN(i) AS dup_of FROM p
-        |         WHERE cos > 0.4 AND NOT isnan(cos) GROUP BY j)
-        |SELECT va.vec_id, va.cid, (dups.dup_of IS NOT NULL) AS dropped,
-        |  CAST(COALESCE(dups.dup_of, -1) AS BIGINT) AS dup_of
-        |FROM va LEFT JOIN dups ON va.vec_id = dups.j
-        |ORDER BY va.vec_id""".stripMargin,
-
-    "q_heavy_hitters" ->
-      """WITH it AS (SELECT CASE WHEN v < 512 THEN 'h0' WHEN v < 768 THEN 'h1'
-        |  WHEN v < 896 THEN 'h2' WHEN v < 960 THEN 'h3' WHEN v < 992 THEN 'h4'
-        |  WHEN v < 1008 THEN 'h5' WHEN v < 1016 THEN 'h6' WHEN v < 1020 THEN 'h7'
-        |  ELSE 'h8' END AS item
-        |  FROM (SELECT l_orderkey % 1024 AS v FROM lineitem)),
-        |e AS (SELECT item, CAST(count(*) AS BIGINT) AS cnt FROM it GROUP BY 1),
-        |t AS (SELECT SUM(cnt) AS n FROM e)
-        |SELECT item, cnt, TRUE AS in_sketch, TRUE AS overest_ok, TRUE AS lower_ok
-        |FROM e, t WHERE cnt * 6 >= n ORDER BY item""".stripMargin,
-
-    // the heavy set + exact counts are pure SQL; the verdict booleans
-    // are the sketch theorems, TRUE by construction for every heavy
-    // item (strict-share tracking guarantee — hence the strict > in
-    // the filter on BOTH engines)
-    "q_heavy_hitters_windowed" ->
-      """WITH it AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |  CASE WHEN v < 512 THEN 'h0' WHEN v < 768 THEN 'h1'
-        |  WHEN v < 896 THEN 'h2' WHEN v < 960 THEN 'h3' WHEN v < 992 THEN 'h4'
-        |  WHEN v < 1008 THEN 'h5' WHEN v < 1016 THEN 'h6' WHEN v < 1020 THEN 'h7'
-        |  ELSE 'h8' END AS item
-        |  FROM (SELECT ts, user_id % 1024 AS v FROM events)),
-        |e AS (SELECT day, item, CAST(count(*) AS BIGINT) AS cnt FROM it GROUP BY 1, 2),
-        |t AS (SELECT day, SUM(cnt) AS n FROM e GROUP BY 1)
-        |SELECT e.day, item, cnt, TRUE AS in_sketch, TRUE AS overest_ok, TRUE AS lower_ok
-        |FROM e JOIN t ON e.day = t.day WHERE cnt * 6 > n ORDER BY e.day, item""".stripMargin,
-
-    // exact per-day counts are pure SQL; the estimate verdict is
-    // observed-deterministic (fixed input set → fixed sketch), TRUE on
-    // this corpus — the q_hll_sketch convention
-    "q_hll_windowed" ->
-      """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
-        |  TRUE AS est_ok
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "text_winnowing" -> {
-      val gram5 = "i -> " + (0 until 5).map(o => s"w[i+$o]").mkString("||' '||")
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-         |g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos, n_grams,
-         |        substr(md5(gram), 1, 16) || lpad(CAST(i AS VARCHAR), 10, '0') AS comb
-         |      FROM (SELECT doc_id, CAST(greatest(len(w)-4, 0) AS BIGINT) AS n_grams,
-         |              UNNEST(list_transform(range(1, len(w)-3), $gram5)) AS gram,
-         |              UNNEST(range(1, len(w)-3)) AS i FROM t)),
-         |sel AS (SELECT doc_id, pos, n_grams,
-         |        MIN(comb) OVER (PARTITION BY doc_id ORDER BY pos
-         |          ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS s
-         |        FROM g),
-         |f AS (SELECT DISTINCT doc_id, s FROM sel WHERE pos <= n_grams - 3),
-         |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fp FROM f GROUP BY 1),
-         |lens AS (SELECT doc_id, CAST(greatest(len(w)-4-3, 0) AS BIGINT) AS n_windows FROM t)
-         |SELECT l.doc_id, l.n_windows, COALESCE(cnt.n_fp, 0) AS n_fp,
-         |  CASE WHEN l.n_windows > 0
-         |       THEN CAST((2 * COALESCE(cnt.n_fp, 0) * 1000000 + l.n_windows)
-         |            // (2 * l.n_windows) AS BIGINT) ELSE 0 END AS fp_density_e6
-         |FROM lens l LEFT JOIN cnt ON l.doc_id = cnt.doc_id
-         |ORDER BY l.doc_id""".stripMargin
-    },
-
-    "text_unigram_lp" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-        |       FROM (SELECT doc_id, UNNEST(w) AS tok FROM t) GROUP BY 1, 2),
-        |lens AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS len FROM t),
-        |cnt AS (SELECT tok, SUM(tf) AS cnt FROM tf GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS total FROM cnt),
-        |m AS (SELECT tf.doc_id, MIN(lens.len) AS n_tokens,
-        |      SUM(tf.tf * ln(CAST(cnt.cnt AS DOUBLE)/t2.total)) / MIN(lens.len) AS mlp
-        |      FROM tf JOIN cnt ON tf.tok = cnt.tok
-        |      JOIN lens ON tf.doc_id = lens.doc_id, tot t2 GROUP BY 1)
-        |SELECT doc_id, n_tokens, ROUND(mlp, 6) AS mean_lp, ROUND(exp(-mlp), 6) AS ppl
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    "q_corpus_report" ->
-      """WITH b AS (SELECT source, n_chars,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    md5(text) AS h
-        |  FROM documents),
-        |ph AS (SELECT source, h, CAST(COUNT(*) AS BIGINT) AS c FROM b GROUP BY 1, 2),
-        |agg AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |    CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |    CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-        |  FROM b GROUP BY 1),
-        |dd AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_distinct,
-        |    CAST(SUM(c - 1) AS BIGINT) AS n_exact_dups
-        |  FROM ph GROUP BY 1)
-        |SELECT agg.source, agg.n_docs, agg.sum_chars, agg.sum_tokens,
-        |  dd.n_distinct, dd.n_exact_dups,
-        |  CAST(FLOOR(CAST(dd.n_exact_dups AS DOUBLE) / CAST(agg.n_docs AS DOUBLE)
-        |    * 1000000.0 + 0.5) AS BIGINT) AS dup_rate_e6
-        |FROM agg JOIN dd ON agg.source = dd.source
-        |ORDER BY agg.source""".stripMargin,
-
-    "q_quality_model" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_eval,
-        |  CAST(TRUE AS BOOLEAN) AS acc_ok, CAST(TRUE AS BOOLEAN) AS loss_ok
-        |FROM documents WHERE doc_id % 2 = 1""".stripMargin,
-
-    // same unigram-LM CTEs as text_unigram_lp; buckets over the SAME
-    // 6-dp-rounded ppl, deterministic (ppl, doc_id) tercile order
-    "q_ppl_buckets" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-        |       FROM (SELECT doc_id, UNNEST(w) AS tok FROM t) GROUP BY 1, 2),
-        |lens AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS len FROM t),
-        |cnt AS (SELECT tok, SUM(tf) AS cnt FROM tf GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS total FROM cnt),
-        |m AS (SELECT tf.doc_id,
-        |      SUM(tf.tf * ln(CAST(cnt.cnt AS DOUBLE)/t2.total)) / MIN(lens.len) AS mlp
-        |      FROM tf JOIN cnt ON tf.tok = cnt.tok
-        |      JOIN lens ON tf.doc_id = lens.doc_id, tot t2 GROUP BY 1),
-        |p AS (SELECT doc_id, ROUND(exp(-mlp), 6) AS ppl FROM m),
-        |b AS (SELECT d.lang, p.doc_id, p.ppl,
-        |      ntile(3) OVER (PARTITION BY d.lang ORDER BY p.ppl, p.doc_id) AS bucket
-        |      FROM p JOIN documents d ON p.doc_id = d.doc_id)
-        |SELECT lang, CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n_docs,
-        |  CAST(SUM(CAST(ppl AS DECIMAL(25,6))) AS DOUBLE) AS sum_ppl,
-        |  MIN(ppl) AS min_ppl, MAX(ppl) AS max_ppl
-        |FROM b GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    "text_entropy" ->
-      """WITH ch AS (SELECT doc_id, UNNEST(string_split(text, '')) AS c
-        |      FROM documents WHERE length(text) > 0),
-        |f AS (SELECT doc_id, c, CAST(COUNT(*) AS DOUBLE) AS cnt FROM ch GROUP BY 1, 2),
-        |n AS (SELECT doc_id, SUM(cnt) AS n FROM f GROUP BY 1),
-        |e AS (SELECT f.doc_id, -SUM((f.cnt / n.n) * ln(f.cnt / n.n)) AS ent
-        |      FROM f JOIN n ON f.doc_id = n.doc_id GROUP BY 1),
-        |m AS (SELECT quantile_disc(ent, 0.5) AS med FROM e)
-        |SELECT e.doc_id,
-        |  CAST(FLOOR(e.ent * 1000000.0 + 0.5) AS BIGINT) AS entropy_e6,
-        |  (e.ent >= m.med * 0.7 AND e.ent <= m.med * 1.3) AS in_band
-        |FROM e, m ORDER BY e.doc_id""".stripMargin,
-
-    "text_bigram_lp" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |uni AS (SELECT tok, CAST(count(*) AS BIGINT) AS c1
-        |        FROM (SELECT UNNEST(w) AS tok FROM t) GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(c1) AS DOUBLE) AS total FROM uni),
-        |bg AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2
-        |       FROM t, LATERAL (SELECT UNNEST(range(1, len(w))) AS i)),
-        |docbg AS (SELECT doc_id, w1, w2, CAST(count(*) AS BIGINT) AS m
-        |          FROM bg GROUP BY 1, 2, 3),
-        |bgc AS (SELECT w1, w2, SUM(m) AS c2 FROM docbg GROUP BY 1, 2),
-        |sc AS (SELECT d.doc_id, d.m,
-        |       ln(0.7 * CAST(bgc.c2 AS DOUBLE) / u1.c1
-        |          + 0.3 * CAST(u2.c1 AS DOUBLE) / t2.total) AS lp
-        |       FROM docbg d
-        |       JOIN bgc ON d.w1 = bgc.w1 AND d.w2 = bgc.w2
-        |       JOIN uni u1 ON d.w1 = u1.tok
-        |       JOIN uni u2 ON d.w2 = u2.tok, tot t2),
-        |m AS (SELECT doc_id, CAST(SUM(m) AS BIGINT) AS n_bigrams,
-        |      SUM(m * lp) / SUM(m) AS mlp FROM sc GROUP BY 1)
-        |SELECT doc_id, n_bigrams, ROUND(mlp, 6) AS mean_lp,
-        |  ROUND(exp(-mlp), 6) AS ppl
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    // same positional-bigram CTEs as text_bigram_lp; KN continuation
-    // counts are COUNT(*) over the bigram-TYPE table per side
-    "text_kn_bigram" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |bg AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2
-        |       FROM t, LATERAL (SELECT UNNEST(range(1, len(w))) AS i)),
-        |docbg AS (SELECT doc_id, w1, w2, CAST(count(*) AS BIGINT) AS m
-        |          FROM bg GROUP BY 1, 2, 3),
-        |bgc AS (SELECT w1, w2, SUM(m) AS c2 FROM docbg GROUP BY 1, 2),
-        |cv AS (SELECT w1, SUM(c2) AS cv, CAST(COUNT(*) AS BIGINT) AS n1f
-        |       FROM bgc GROUP BY 1),
-        |n1p AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS n1p FROM bgc GROUP BY 1),
-        |n1all AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n1all FROM bgc),
-        |sc AS (SELECT d.doc_id, d.m,
-        |       ln((GREATEST(CAST(bgc.c2 AS DOUBLE) - 0.75, 0.0)
-        |           + 0.75 * cv.n1f * (CAST(n1p.n1p AS DOUBLE) / a.n1all))
-        |          / CAST(cv.cv AS DOUBLE)) AS lp
-        |       FROM docbg d
-        |       JOIN bgc ON d.w1 = bgc.w1 AND d.w2 = bgc.w2
-        |       JOIN cv ON d.w1 = cv.w1
-        |       JOIN n1p ON d.w2 = n1p.w2, n1all a),
-        |m AS (SELECT doc_id, CAST(SUM(m) AS BIGINT) AS n_bigrams,
-        |      SUM(m * lp) / SUM(m) AS mlp FROM sc GROUP BY 1)
-        |SELECT doc_id, n_bigrams, ROUND(mlp, 6) AS mean_lp,
-        |  ROUND(exp(-mlp), 6) AS ppl
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    "text_dup_fraction" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |sh AS (SELECT doc_id, UNNEST(list_distinct(list_transform(range(1, len(w)-1),
-        |  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS s FROM t),
-        |df AS (SELECT s, CAST(COUNT(*) AS BIGINT) AS df FROM sh GROUP BY 1),
-        |agg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
-        |  CAST(SUM(CASE WHEN df.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
-        |  FROM sh JOIN df ON sh.s = df.s GROUP BY 1)
-        |SELECT doc_id, n_shingles, n_dup,
-        |  CAST((2 * n_dup * 1000000 + n_shingles) // (2 * n_shingles) AS BIGINT)
-        |    AS dup_frac_e6
-        |FROM agg ORDER BY doc_id""".stripMargin,
-
-    "text_lexical_diversity" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM t GROUP BY 1, 2)
-        |SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
-        |  CAST(COUNT(*) AS BIGINT) AS n_types,
-        |  ROUND(CAST(COUNT(*) AS DOUBLE) / CAST(SUM(tf) AS DOUBLE), 6) AS ttr,
-        |  ROUND(CAST(SUM(CASE WHEN tf = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(SUM(tf) AS DOUBLE), 6) AS hapax_ratio
-        |FROM tf GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "text_zipf_fit" ->
-      """WITH c AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
-        |    FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-        |    GROUP BY 1 ORDER BY cnt DESC, tok LIMIT 200),
-        |r AS (SELECT ln(CAST(row_number() OVER (ORDER BY cnt DESC, tok) AS DOUBLE)) AS x,
-        |    ln(CAST(cnt AS DOUBLE)) AS y FROM c),
-        |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(x) AS sx, SUM(y) AS sy,
-        |    SUM(x*y) AS sxy, SUM(x*x) AS sxx FROM r)
-        |SELECT n AS n_terms,
-        |  ROUND((n*sxy - sx*sy) / (n*sxx - sx*sx), 6) AS slope,
-        |  ROUND((sy - (n*sxy - sx*sy) / (n*sxx - sx*sx) * sx) / n, 6) AS intercept
-        |FROM a""".stripMargin,
-
-    // distinct (source, shingle) sets; the matrix joins the tiny
-    // per-source size table to the pair intersections; e6 witnesses
-    // quantize the three ratios identically on both engines
-    "q_source_overlap" ->
-      """WITH t AS (SELECT source, string_split(text,' ') AS w FROM documents),
-        |sh AS (SELECT DISTINCT source, s FROM (
-        |  SELECT source, UNNEST(list_distinct(list_transform(range(1, len(w)-1),
-        |    i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS s FROM t)),
-        |sz AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1),
-        |iv AS (SELECT a.source AS src_a, b.source AS src_b,
-        |         CAST(COUNT(*) AS BIGINT) AS inter
-        |       FROM sh a JOIN sh b ON a.s = b.s AND a.source < b.source
-        |       GROUP BY 1, 2)
-        |SELECT sa.source AS src_a, sb.source AS src_b,
-        |  sa.n_sh AS n_a, sb.n_sh AS n_b,
-        |  COALESCE(iv.inter, 0) AS inter,
-        |  CAST(FLOOR(CAST(COALESCE(iv.inter, 0) AS DOUBLE) /
-        |    CAST(sa.n_sh + sb.n_sh - COALESCE(iv.inter, 0) AS DOUBLE)
-        |    * 1000000.0 + 0.5) AS BIGINT) AS jaccard_e6,
-        |  CAST(FLOOR(CAST(COALESCE(iv.inter, 0) AS DOUBLE) /
-        |    CAST(sa.n_sh AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS contain_a_e6,
-        |  CAST(FLOOR(CAST(COALESCE(iv.inter, 0) AS DOUBLE) /
-        |    CAST(sb.n_sh AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS contain_b_e6
-        |FROM sz sa JOIN sz sb ON sa.source < sb.source
-        |LEFT JOIN iv ON iv.src_a = sa.source AND iv.src_b = sb.source
-        |ORDER BY 1, 2""".stripMargin,
-
-    "text_novelty" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |sh AS (SELECT doc_id, UNNEST(list_distinct(list_transform(range(1, len(w)-1),
-        |  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS s FROM t),
-        |own AS (SELECT s, MIN(doc_id) AS first_doc FROM sh GROUP BY 1)
-        |SELECT sh.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
-        |  CAST(SUM(CASE WHEN own.first_doc = sh.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-        |  ROUND(CAST(SUM(CASE WHEN own.first_doc = sh.doc_id THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE), 6) AS novelty
-        |FROM sh JOIN own ON sh.s = own.s GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // the trailing + 0.0 normalizes IEEE signed zero: a single-type
-    // user's entropy is -(1)·ln(1) = -0.0 (the q_dsir_weights lesson)
-    "q_session_entropy" ->
-      """WITH c AS (SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
-        |    FROM events GROUP BY 1, 2),
-        |t AS (SELECT user_id, CAST(SUM(c) AS BIGINT) AS n,
-        |    CAST(COUNT(*) AS BIGINT) AS n_types FROM c GROUP BY 1)
-        |SELECT c.user_id, MIN(t.n) AS n_events, MIN(t.n_types) AS n_types,
-        |  CAST(FLOOR(SUM(-(CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE))
-        |    * ln(CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE))) * 1000000.0 + 0.5)
-        |    AS BIGINT) AS entropy_e6
-        |FROM c JOIN t USING (user_id) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // entropy terms decimal-quantized per element (the heaps pattern);
-    // trailing + 0.0 normalizes signed zeros on degenerate
-    // single-type distributions
-    "text_entropy_rate" ->
-      """WITH t AS (SELECT string_split(text, ' ') AS w FROM documents),
-        |bg AS (SELECT w[i] AS w1, w[i+1] AS w2
-        |    FROM t, LATERAL (SELECT UNNEST(range(1, len(w))) AS i)),
-        |c2 AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c FROM bg GROUP BY 1, 2),
-        |n AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM c2),
-        |h2 AS (SELECT CAST(SUM(CAST(-(CAST(c AS DOUBLE) / CAST(n.n AS DOUBLE))
-        |    * ln(CAST(c AS DOUBLE) / CAST(n.n AS DOUBLE)) AS DECIMAL(28,14))) AS DOUBLE) AS h
-        |  FROM c2, n),
-        |c1 AS (SELECT w1, CAST(SUM(c) AS BIGINT) AS c FROM c2 GROUP BY 1),
-        |h1 AS (SELECT CAST(SUM(CAST(-(CAST(c AS DOUBLE) / CAST(n.n AS DOUBLE))
-        |    * ln(CAST(c AS DOUBLE) / CAST(n.n AS DOUBLE)) AS DECIMAL(28,14))) AS DOUBLE) AS h
-        |  FROM c1, n)
-        |SELECT n.n AS n_bigrams,
-        |  ROUND(h2.h, 6) + 0.0 AS h_bigram,
-        |  ROUND(h1.h, 6) + 0.0 AS h_marginal,
-        |  ROUND(h2.h - h1.h, 6) + 0.0 AS h_cond
-        |FROM n, h2, h1""".stripMargin,
-
-    "text_heaps_fit" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |pt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens FROM t GROUP BY 1),
-        |dt AS (SELECT doc_id, tok FROM t GROUP BY 1, 2),
-        |own AS (SELECT tok, MIN(doc_id) AS first_doc FROM dt GROUP BY 1),
-        |pn AS (SELECT dt.doc_id,
-        |    CAST(SUM(CASE WHEN own.first_doc = dt.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_new
-        |  FROM dt JOIN own ON dt.tok = own.tok GROUP BY 1),
-        |cumf AS (SELECT pt.doc_id,
-        |    SUM(pt.n_tokens) OVER (ORDER BY pt.doc_id) AS cum_tokens,
-        |    SUM(pn.n_new) OVER (ORDER BY pt.doc_id) AS cum_types
-        |  FROM pt JOIN pn ON pt.doc_id = pn.doc_id),
-        |r AS (SELECT
-        |    CAST(ln(CAST(cum_tokens AS DOUBLE)) AS DECIMAL(28,14)) AS x,
-        |    CAST(ln(CAST(cum_types AS DOUBLE)) AS DECIMAL(28,14)) AS y,
-        |    CAST(ln(CAST(cum_tokens AS DOUBLE)) * ln(CAST(cum_types AS DOUBLE)) AS DECIMAL(28,14)) AS xy,
-        |    CAST(ln(CAST(cum_tokens AS DOUBLE)) * ln(CAST(cum_tokens AS DOUBLE)) AS DECIMAL(28,14)) AS xx
-        |  FROM cumf),
-        |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd, CAST(SUM(x) AS DOUBLE) AS sx,
-        |    CAST(SUM(y) AS DOUBLE) AS sy, CAST(SUM(xy) AS DOUBLE) AS sxy,
-        |    CAST(SUM(xx) AS DOUBLE) AS sxx FROM r)
-        |SELECT nd AS n_docs,
-        |  ROUND((CAST(nd AS DOUBLE) * sxy - sx * sy)
-        |    / (CAST(nd AS DOUBLE) * sxx - sx * sx), 6) AS beta,
-        |  ROUND((sy - (CAST(nd AS DOUBLE) * sxy - sx * sy)
-        |    / (CAST(nd AS DOUBLE) * sxx - sx * sx) * sx) / CAST(nd AS DOUBLE), 6) AS ln_k
-        |FROM a""".stripMargin,
-
-    "q_dim_variance" ->
-      """WITH x AS (SELECT CAST(unnest(range(1, len(embedding)+1)) AS BIGINT) AS dim,
-        |    CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings)
-        |SELECT dim, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(FLOOR(CAST(SUM(CAST(x AS DECIMAL(28,14))) AS DOUBLE) / COUNT(*)
-        |    * 1000000.0 + 0.5) AS BIGINT) AS mean_e6,
-        |  CAST(FLOOR((CAST(SUM(CAST(x*x AS DECIMAL(28,14))) AS DOUBLE) / COUNT(*)
-        |    - (CAST(SUM(CAST(x AS DECIMAL(28,14))) AS DOUBLE) / COUNT(*))
-        |      * (CAST(SUM(CAST(x AS DECIMAL(28,14))) AS DOUBLE) / COUNT(*)))
-        |    * 1000000.0 + 0.5) AS BIGINT) AS variance_e6
-        |FROM x GROUP BY dim ORDER BY dim""".stripMargin,
-
-    "q_dsir_weights" ->
-      """WITH t AS (SELECT doc_id, lang, string_split(text,' ') AS w FROM documents),
-        |tk AS (SELECT doc_id, lang,
-        |  ('0x' || substr(md5(tok), 1, 6))::BIGINT % 512 AS b
-        |  FROM (SELECT doc_id, lang, UNNEST(w) AS tok FROM t)),
-        |db AS (SELECT doc_id, lang, b, CAST(COUNT(*) AS BIGINT) AS m
-        |       FROM tk GROUP BY 1, 2, 3),
-        |raw AS (SELECT b, SUM(m) AS cs FROM db GROUP BY 1),
-        |tgt AS (SELECT b, SUM(m) AS ct FROM db WHERE lang = 'en' GROUP BY 1),
-        |tot AS (SELECT (SELECT SUM(cs) FROM raw) AS ns,
-        |               (SELECT SUM(ct) FROM tgt) AS nt),
-        |model AS (SELECT raw.b,
-        |  CAST(FLOOR(ln((CAST(COALESCE(tgt.ct, 0) + 1 AS DOUBLE) / (tot.nt + 512))
-        |              / (CAST(raw.cs + 1 AS DOUBLE) / (tot.ns + 512)))
-        |    * 1000000000000.0 + 0.5) AS BIGINT) AS lr_e12
-        |  FROM raw LEFT JOIN tgt ON raw.b = tgt.b, tot),
-        |sc AS (SELECT doc_id, CAST(SUM(m) AS BIGINT) AS n_tokens,
-        |       SUM(CAST(m AS HUGEINT) * lr_e12) AS slr
-        |       FROM db JOIN model ON db.b = model.b GROUP BY 1)
-        |SELECT doc_id, n_tokens,
-        |  CAST(FLOOR(CAST(slr AS DOUBLE) / n_tokens / 1000000.0 + 0.5) AS BIGINT)
-        |    AS mean_lr_e6,
-        |  CAST(FLOOR(exp(CAST(slr AS DOUBLE) / n_tokens / 1000000000000.0)
-        |    * 1000000.0 + 0.5) AS BIGINT) AS weight_e6
-        |FROM sc ORDER BY doc_id""".stripMargin,
-
-    "q_link_prediction" ->
-      s"""WITH $simhashBandedPairCtes,
-         |${graft.ops.Graph.adamicAdarSql(
-           "SELECT doc_a AS u, doc_b AS v FROM p", degCap = 64, minCn = 2)}
-         |SELECT u AS doc_a, v AS doc_b, cn, aa_e6 FROM aa_pred
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q_winsorize" ->
-      """WITH q AS (SELECT o_orderpriority,
-        |  quantile_disc(CAST(o_totalprice AS DOUBLE), 0.05) AS p05,
-        |  quantile_disc(CAST(o_totalprice AS DOUBLE), 0.95) AS p95
-        |  FROM orders GROUP BY 1),
-        |j AS (SELECT o.o_orderpriority, o.o_totalprice, q.p05, q.p95,
-        |  GREATEST(LEAST(o.o_totalprice, q.p95), q.p05) AS wp
-        |  FROM orders o JOIN q ON o.o_orderpriority = q.o_orderpriority)
-        |SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(FLOOR(MIN(p05) * 10000.0 + 0.5) AS BIGINT) AS p05_e4,
-        |  CAST(FLOOR(MIN(p95) * 10000.0 + 0.5) AS BIGINT) AS p95_e4,
-        |  CAST(SUM(CASE WHEN o_totalprice < p05 THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
-        |  CAST(SUM(CASE WHEN o_totalprice > p95 THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
-        |  CAST(FLOOR(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*)
-        |    * 10000.0 + 0.5) AS BIGINT) AS mean_raw_e4,
-        |  CAST(FLOOR(CAST(SUM(CAST(wp AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*)
-        |    * 10000.0 + 0.5) AS BIGINT) AS mean_wins_e4
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "mining_hard_negatives" ->
-      // scale-shaped assignment (the guard-band argmin argument): the
-      // float32 array_distance band ±1e-3 provably contains the exact
-      // nearest centroid (float error ~1e-5 absolute at this scale), so
-      // the fp64 rescore + (d, cid) row_number picks the identical
-      // assignment while the quadratic UNNEST expansion touches only
-      // the banded candidates
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc AS (SELECT v0.vec_id, c.cid, array_distance(v0.varr, c.carr) AS ad
-        |  FROM v0, c),
-        |amin AS (SELECT vec_id, MIN(ad) AS m FROM avc GROUP BY vec_id),
-        |vcand AS (SELECT a.vec_id, a.cid FROM avc a
-        |  JOIN amin ON a.vec_id = amin.vec_id
-        |  WHERE a.ad <= amin.m * 1.00001 + 1e-3),
-        |vc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM vcand w JOIN v0 v ON w.vec_id = v.vec_id JOIN c ON w.cid = c.cid)
-        |  GROUP BY 1, 2),
-        |va AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vc) WHERE rn = 1),
-        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |qa AS (SELECT vec_id AS qid, cid AS qcid FROM va WHERE vec_id < 8),
-        |pairs AS (SELECT q.qid, v.vec_id AS label, q.qv, v.embedding AS vv
-        |          FROM q JOIN qa ON q.qid = qa.qid
-        |          CROSS JOIN embeddings v JOIN va ON v.vec_id = va.vec_id
-        |          WHERE va.cid <> qa.qcid),
-        |d AS (SELECT qid, label,
-        |  FLOOR(SUM(CAST(qe AS DOUBLE) * CAST(ve AS DOUBLE)) /
-        |    (SQRT(SUM(CAST(qe AS DOUBLE) * CAST(qe AS DOUBLE))) *
-        |     SQRT(SUM(CAST(ve AS DOUBLE) * CAST(ve AS DOUBLE))))
-        |    * 1000000.0 + 0.5) / 1000000.0 AS score
-        |  FROM (SELECT qid, label, UNNEST(qv) AS qe, UNNEST(vv) AS ve FROM pairs)
-        |  GROUP BY qid, label),
-        |r AS (SELECT qid, label, score,
-        |      row_number() OVER (PARTITION BY qid ORDER BY score DESC, label) AS rank
-        |      FROM d WHERE NOT isnan(score))
-        |SELECT qid, rank, label,
-        |  CAST(FLOOR(score * 1000000.0 + 0.5) AS BIGINT) AS cos_e6
-        |FROM r WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    "pipeline_filter" -> {
-      val dicts = TextAnalysis.stopwords.map { case (code, words) =>
-        val arr = words.map(w => s"'$w'").mkString("[", ",", "]")
-        s"len(list_intersect(list_distinct(w), $arr)) AS $code"
-      }.mkString(",\n  ")
-      val gram8 = "i -> " + (0 until 8).map(o => s"w[i+$o]").mkString("||' '||")
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-         |s AS (SELECT doc_id, DICTS FROM t),
-         |lang AS (SELECT doc_id, CASE WHEN greatest(de,en,es,fr,zh) = 0 THEN 'und'
-         |  WHEN de >= en AND de >= es AND de >= fr AND de >= zh THEN 'de'
-         |  WHEN en >= es AND en >= fr AND en >= zh THEN 'en'
-         |  WHEN es >= fr AND es >= zh THEN 'es'
-         |  WHEN fr >= zh THEN 'fr' ELSE 'zh' END AS pred_lang FROM s),
-         |qual AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-         |  CAST(len(list_distinct(w)) AS DOUBLE)/CAST(len(w) AS DOUBLE) AS ttr FROM t),
-         |spansf AS (SELECT doc_id, UNNEST(list_transform(range(1, len(w)-6), $gram8)) AS gram FROM t),
-         |ddff AS (SELECT gram, COUNT(DISTINCT doc_id) AS df FROM spansf GROUP BY gram),
-         |dupf AS (SELECT s2.doc_id, COUNT(*) AS n_dup FROM spansf s2
-         |         JOIN ddff ON s2.gram = ddff.gram WHERE ddff.df >= 2 GROUP BY 1),
-         |lensf AS (SELECT doc_id, CAST(greatest(len(w)-7, 0) AS BIGINT) AS n_spans FROM t),
-         |sp AS (SELECT l.doc_id, CASE WHEN l.n_spans > 0
-         |       THEN (2 * COALESCE(d2.n_dup, 0) * 1000000 + l.n_spans)
-         |            // (2 * l.n_spans) ELSE 0 END AS dup_frac_e6
-         |       FROM lensf l LEFT JOIN dupf d2 ON l.doc_id = d2.doc_id)
-         |SELECT lang.doc_id,
-         |  CASE WHEN pred_lang = 'und' THEN 'lang'
-         |       WHEN n_tokens < 16 OR n_tokens > 94 THEN 'length'
-         |       WHEN ttr < 0.31 THEN 'quality'
-         |       WHEN dup_frac_e6 > 500000 THEN 'span_dup'
-         |       ELSE 'kept' END AS verdict
-         |FROM lang JOIN qual ON lang.doc_id = qual.doc_id
-         |JOIN sp ON lang.doc_id = sp.doc_id
-         |ORDER BY lang.doc_id""".stripMargin.replace("DICTS", dicts)
-    },
-
-    // filter CTEs (same as pipeline_filter) + exact dedup keep-earliest +
-    // per-lang window cumsum packing — the whole pipeline in one statement
-    "pipeline_e2e" -> {
-      val dicts = TextAnalysis.stopwords.map { case (code, words) =>
-        val arr = words.map(w => s"'$w'").mkString("[", ",", "]")
-        s"len(list_intersect(list_distinct(w), $arr)) AS $code"
-      }.mkString(",\n  ")
-      val gram8 = "i -> " + (0 until 8).map(o => s"w[i+$o]").mkString("||' '||")
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-         |s AS (SELECT doc_id, DICTS FROM t),
-         |lang AS (SELECT doc_id, CASE WHEN greatest(de,en,es,fr,zh) = 0 THEN 'und'
-         |  WHEN de >= en AND de >= es AND de >= fr AND de >= zh THEN 'de'
-         |  WHEN en >= es AND en >= fr AND en >= zh THEN 'en'
-         |  WHEN es >= fr AND es >= zh THEN 'es'
-         |  WHEN fr >= zh THEN 'fr' ELSE 'zh' END AS pred_lang FROM s),
-         |qual AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-         |  CAST(len(list_distinct(w)) AS DOUBLE)/CAST(len(w) AS DOUBLE) AS ttr FROM t),
-         |spansf AS (SELECT doc_id, UNNEST(list_transform(range(1, len(w)-6), $gram8)) AS gram FROM t),
-         |ddff AS (SELECT gram, COUNT(DISTINCT doc_id) AS df FROM spansf GROUP BY gram),
-         |dupf AS (SELECT s2.doc_id, COUNT(*) AS n_dup FROM spansf s2
-         |         JOIN ddff ON s2.gram = ddff.gram WHERE ddff.df >= 2 GROUP BY 1),
-         |lensf AS (SELECT doc_id, CAST(greatest(len(w)-7, 0) AS BIGINT) AS n_spans FROM t),
-         |sp AS (SELECT l.doc_id, CASE WHEN l.n_spans > 0
-         |       THEN (2 * COALESCE(d2.n_dup, 0) * 1000000 + l.n_spans)
-         |            // (2 * l.n_spans) ELSE 0 END AS dup_frac_e6
-         |       FROM lensf l LEFT JOIN dupf d2 ON l.doc_id = d2.doc_id),
-         |kept AS (SELECT lang.doc_id FROM lang
-         |  JOIN qual ON lang.doc_id = qual.doc_id
-         |  JOIN sp ON lang.doc_id = sp.doc_id
-         |  WHERE pred_lang <> 'und' AND n_tokens >= 16 AND n_tokens <= 94
-         |    AND ttr >= 0.31 AND dup_frac_e6 <= 500000),
-         |dd AS (SELECT MIN(d.doc_id) AS doc_id FROM documents d
-         |  JOIN kept ON d.doc_id = kept.doc_id GROUP BY md5(d.text)),
-         |surv AS (SELECT d.doc_id, d.lang,
-         |    CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents d JOIN dd ON d.doc_id = dd.doc_id)
-         |SELECT doc_id, lang, n_tokens,
-         |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-         |  CAST((cum - n_tokens) % 2048 AS BIGINT) AS pack_offset
-         |FROM (SELECT doc_id, lang, n_tokens,
-         |    SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS cum
-         |  FROM surv)
-         |ORDER BY doc_id""".stripMargin.replace("DICTS", dicts)
-    },
-
-    "dedup_spans" -> {
-      val gram8 = "i -> " + (0 until 8).map(o => s"w[i+$o]").mkString("||' '||")
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-         |spans AS (SELECT doc_id, UNNEST(list_transform(range(1, len(w)-6), $gram8)) AS gram FROM t),
-         |ddf AS (SELECT gram, COUNT(DISTINCT doc_id) AS df FROM spans GROUP BY gram),
-         |dup AS (SELECT s.doc_id, COUNT(*) AS n_dup FROM spans s
-         |        JOIN ddf ON s.gram = ddf.gram WHERE ddf.df >= 2 GROUP BY 1),
-         |lens AS (SELECT doc_id, CAST(greatest(len(w)-7, 0) AS BIGINT) AS n_spans FROM t)
-         |SELECT l.doc_id, l.n_spans, CAST(COALESCE(d.n_dup, 0) AS BIGINT) AS n_dup,
-         |  CASE WHEN l.n_spans > 0
-         |       THEN CAST((2 * COALESCE(d.n_dup, 0) * 1000000 + l.n_spans)
-         |            // (2 * l.n_spans) AS BIGINT) ELSE 0 END AS dup_frac_e6
-         |FROM lens l LEFT JOIN dup d ON l.doc_id = d.doc_id
-         |ORDER BY l.doc_id""".stripMargin
-    },
-
-    "dedup_substring" ->
-      """WITH p AS (SELECT doc_id, text,
-        |  unnest(range(0, GREATEST(len(text) - 30 + 1, 0))) AS pos FROM documents),
-        |w AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-        |  md5(substr(text, CAST(pos AS INTEGER) + 1, 30)) AS h FROM p),
-        |dup AS (SELECT h FROM w GROUP BY h HAVING COUNT(*) >= 2),
-        |dp AS (SELECT w.doc_id, w.pos FROM w JOIN dup USING (h)),
-        |fl AS (SELECT doc_id, pos,
-        |  CASE WHEN lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
-        |         OR pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 30
-        |       THEN 1 ELSE 0 END AS f FROM dp),
-        |si AS (SELECT doc_id, pos,
-        |  SUM(f) OVER (PARTITION BY doc_id ORDER BY pos) AS span_id FROM fl),
-        |sp AS (SELECT doc_id, span_id, CAST(COUNT(*) AS BIGINT) AS nwin,
-        |  MAX(pos) - MIN(pos) + 30 AS span_len FROM si GROUP BY doc_id, span_id),
-        |pd AS (SELECT doc_id, SUM(nwin) AS dup_windows,
-        |  CAST(COUNT(*) AS BIGINT) AS dup_spans, SUM(span_len) AS dup_chars,
-        |  MAX(span_len) AS max_span FROM sp GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(COALESCE(pd.dup_windows, 0) AS BIGINT) AS dup_windows,
-        |  CAST(COALESCE(pd.dup_spans, 0) AS BIGINT) AS dup_spans,
-        |  CAST(COALESCE(pd.dup_chars, 0) AS BIGINT) AS dup_chars,
-        |  CAST(COALESCE(pd.max_span, 0) AS BIGINT) AS max_span
-        |FROM documents d LEFT JOIN pd USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // The ANN/sketch queries emit engine-independent VERDICT columns
-    // (recall/error bounds vs the exact side, which other oracles verify
-    // directly), so the oracle's expected output is exact: every bound
-    // must hold. A recall regression or sketch-error blowout flips a
-    // boolean and fails the hash compare.
-    "ann_ivf_kmeans" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_auto" ->
-      """SELECT vec_id AS qid, 'f16-rerank' AS tier,
-        |  CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS meets_target
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_auto_scan" ->
-      """SELECT vec_id AS qid, 'ivf-p4' AS tier,
-        |  CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS meets_target
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_lsh_mllib" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_ivfpq_residual" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS beats_standin
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_pq_kmeans" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS beats_modulo
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_pca_rerank" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS var_ok
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_pca_pq" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS rot_ok
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_opq" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS improved_ok,
-        |  CAST(TRUE AS BOOLEAN) AS rot_ok
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_opq_ivfpq" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_hnsw" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_jl_rerank" ->
-      // verdict oracle (probed: min overlap 1/10 at sf0.1 expand=8,
-      // 4/10 at sf0.01, 10/10 at sf1 — tools/JlProbe)
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_opq_rerank" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS beats_unreranked
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "ann_knn_classify" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 16),
-        |t AS (SELECT vec_id AS qid, label AS true_cls FROM embeddings WHERE vec_id < 16),
-        |d AS (
-        |  SELECT qid, nid,
-        |    SUM((CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE)) * (CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE))) AS score
-        |  FROM (SELECT q.qid, e.vec_id AS nid,
-        |      UNNEST(q.qv) AS qe, UNNEST(e.embedding) AS ve
-        |    FROM q CROSS JOIN embeddings e)
-        |  GROUP BY qid, nid),
-        |k11 AS (SELECT qid, nid, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, nid) AS rk FROM d),
-        |k10 AS (SELECT qid, nid,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, nid) AS rn
-        |  FROM (SELECT * FROM k11 WHERE rk <= 11 AND nid != qid)),
-        |v AS (SELECT k10.qid, e.label AS cls, COUNT(*) AS votes
-        |  FROM k10 JOIN embeddings e ON e.vec_id = k10.nid
-        |  WHERE k10.rn <= 10 GROUP BY 1, 2),
-        |p AS (SELECT qid, cls AS pred_cls,
-        |  row_number() OVER (PARTITION BY qid ORDER BY votes DESC, cls) AS pr FROM v)
-        |SELECT p.qid, p.pred_cls, t.true_cls,
-        |  p.pred_cls = t.true_cls AS correct
-        |FROM p JOIN t ON p.qid = t.qid WHERE p.pr = 1 ORDER BY p.qid""".stripMargin,
-
-    "q_label_noise" ->
-      // scale-shaped oracle: native float32 array_distance prefilter
-      // keeps each audited vector's approx top-20-with-guard-band
-      // neighbors (k = 11 needed), exact fp64 squared-L2 rescores only
-      // those — float32 distance error is ~1e-7 relative, far inside
-      // the 1e-3 absolute band, so the exact 11-NN provably survive
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv,
-        |    embedding::FLOAT[64] AS qarr
-        |  FROM embeddings WHERE vec_id % 97 = 0),
-        |own AS (SELECT vec_id AS qid, label AS own_cls FROM embeddings WHERE vec_id % 97 = 0),
-        |approx AS (
-        |  SELECT q.qid, e.vec_id AS nid,
-        |    array_distance(q.qarr, e.embedding::FLOAT[64]) AS ad
-        |  FROM q CROSS JOIN embeddings e),
-        |thr AS (SELECT qid, MAX(ad) AS t20 FROM (
-        |  SELECT qid, ad,
-        |    row_number() OVER (PARTITION BY qid ORDER BY ad) AS arn
-        |  FROM approx) WHERE arn <= 20 GROUP BY qid),
-        |cand AS (SELECT a.qid, a.nid FROM approx a
-        |  JOIN thr ON a.qid = thr.qid
-        |  WHERE a.ad <= thr.t20 * 1.00001 + 1e-3),
-        |d AS (
-        |  SELECT c.qid, c.nid,
-        |    SUM((CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE)) * (CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE))) AS score
-        |  FROM (SELECT c.qid, c.nid, UNNEST(q.qv) AS qe, UNNEST(e.embedding) AS ve
-        |    FROM cand c JOIN q ON c.qid = q.qid
-        |    JOIN embeddings e ON c.nid = e.vec_id) c
-        |  GROUP BY qid, nid),
-        |k11 AS (SELECT qid, nid, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, nid) AS rk FROM d),
-        |k10 AS (SELECT qid, nid,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, nid) AS rn
-        |  FROM (SELECT * FROM k11 WHERE rk <= 11 AND nid != qid)),
-        |v AS (SELECT k10.qid, e.label AS cls, COUNT(*) AS votes
-        |  FROM k10 JOIN embeddings e ON e.vec_id = k10.nid
-        |  WHERE k10.rn <= 10 GROUP BY 1, 2),
-        |p AS (SELECT qid, cls AS pred_cls, votes AS pred_votes,
-        |  row_number() OVER (PARTITION BY qid ORDER BY votes DESC, cls) AS pr FROM v),
-        |ag AS (SELECT v.qid, v.votes AS n_agree
-        |  FROM v JOIN own ON v.qid = own.qid AND v.cls = own.own_cls)
-        |SELECT p.qid, own.own_cls, p.pred_cls, p.pred_votes,
-        |  COALESCE(ag.n_agree, 0) AS n_agree,
-        |  p.pred_cls <> own.own_cls AS suspect
-        |FROM p JOIN own ON p.qid = own.qid
-        |LEFT JOIN ag ON p.qid = ag.qid
-        |WHERE p.pr = 1 ORDER BY p.qid""".stripMargin,
-
-    "ann_maxsim" ->
-      """WITH q AS (
-        |  SELECT vec_id AS tid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |cos AS (
-        |  SELECT tid, label, vec_id,
-        |    SUM(CAST(qe AS DOUBLE) * CAST(ve AS DOUBLE)) /
-        |      (SQRT(SUM(CAST(qe AS DOUBLE) * CAST(qe AS DOUBLE))) *
-        |       SQRT(SUM(CAST(ve AS DOUBLE) * CAST(ve AS DOUBLE)))) AS score
-        |  FROM (SELECT q.tid, e.label, e.vec_id,
-        |      UNNEST(q.qv) AS qe, UNNEST(e.embedding) AS ve
-        |    FROM q CROSS JOIN embeddings e)
-        |  GROUP BY tid, label, vec_id),
-        |pt AS (SELECT label, tid, MAX(score) AS m FROM cos
-        |       WHERE NOT isnan(score) GROUP BY 1, 2),
-        |sc AS (SELECT label, SUM(m) AS maxsim FROM pt GROUP BY 1),
-        |ranked AS (SELECT label, maxsim,
-        |  row_number() OVER (ORDER BY maxsim DESC, label) AS rank FROM sc)
-        |SELECT rank, label, FLOOR(maxsim * 1000000.0 + 0.5) / 1000000.0 AS maxsim
-        |FROM ranked WHERE rank <= 5 ORDER BY rank""".stripMargin,
-
-    "ann_ivfpq_rerank" ->
-      """SELECT vec_id AS qid, CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS beats_resid
-        |FROM embeddings WHERE vec_id < 8 ORDER BY qid""".stripMargin,
-
-    "q_count_min" ->
-      """WITH k AS (SELECT CAST(UNNEST(range(1, 21)) AS BIGINT) AS o_custkey),
-        |c AS (SELECT o_custkey, COUNT(*) AS cnt FROM orders
-        |      WHERE o_custkey <= 20 GROUP BY 1)
-        |SELECT k.o_custkey, CAST(COALESCE(c.cnt, 0) AS BIGINT) AS exact_cnt,
-        |  CAST(TRUE AS BOOLEAN) AS lower_ok, CAST(TRUE AS BOOLEAN) AS upper_ok
-        |FROM k LEFT JOIN c ON k.o_custkey = c.o_custkey
-        |ORDER BY k.o_custkey""".stripMargin,
-
-    "q_approx_distinct" ->
-      """SELECT o_orderpriority,
-        |  CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS exact_cust,
-        |  CAST(TRUE AS BOOLEAN) AS approx_ok
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q_set_intersection_est" ->
-      """WITH f AS (SELECT user_id,
-        |  MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS v,
-        |  MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS p
-        |  FROM events WHERE event_type IN ('view', 'purchase') GROUP BY user_id)
-        |SELECT CAST(SUM(v) AS BIGINT) AS exact_view,
-        |  CAST(SUM(p) AS BIGINT) AS exact_purchase,
-        |  CAST(COUNT(*) AS BIGINT) AS exact_union,
-        |  CAST(SUM(v * p) AS BIGINT) AS exact_inter,
-        |  CAST(TRUE AS BOOLEAN) AS est_ok
-        |FROM f""".stripMargin,
-
-    "q_event_transitions" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |pr AS (SELECT event_type AS from_type,
-        |        lead(event_type) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS to_type
-        |       FROM e),
-        |c AS (SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
-        |      FROM pr WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT from_type, SUM(n) AS tot FROM c GROUP BY 1)
-        |SELECT c.from_type, c.to_type, c.n,
-        |  CAST(FLOOR(CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE)
-        |    * 1000000.0 + 0.5) AS BIGINT) AS prob_e6
-        |FROM c JOIN t ON c.from_type = t.from_type
-        |ORDER BY c.from_type, c.to_type""".stripMargin,
-
-    "q_top_paths" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |r AS (SELECT user_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS rn
-        |  FROM e),
-        |pv AS (SELECT user_id,
-        |  MAX(CASE WHEN rn = 1 THEN event_type END) AS e1,
-        |  MAX(CASE WHEN rn = 2 THEN event_type END) AS e2,
-        |  MAX(CASE WHEN rn = 3 THEN event_type END) AS e3
-        |  FROM r WHERE rn <= 3 GROUP BY user_id),
-        |pth AS (SELECT concat_ws('>', e1, e2, e3) AS path FROM pv)
-        |SELECT path, COUNT(*) AS n_users
-        |FROM pth GROUP BY path
-        |ORDER BY n_users DESC, path LIMIT 15""".stripMargin,
-
-    "q_approx_quantiles" ->
-      """SELECT l_returnflag, q, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(TRUE AS BOOLEAN) AS rank_ok
-        |FROM lineitem
-        |CROSS JOIN (SELECT CAST(UNNEST([0.25, 0.5, 0.75, 0.95]) AS DOUBLE) AS q)
-        |GROUP BY l_returnflag, q
-        |ORDER BY l_returnflag, q""".stripMargin,
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_rows
-        |FROM lineitem
-        |WHERE l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q_filter_scan" ->
-      """SELECT l_orderkey, l_partkey, l_linenumber
-        |FROM lineitem
-        |WHERE l_quantity >= 49 AND l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_partkey, l_linenumber""".stripMargin,
-
-    "q3_top_unshipped_orders" ->
-      """SELECT l_orderkey,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY l_orderkey
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q5_nation_revenue" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE c_nationkey = s_nationkey
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q7_volume_shipping" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE l_shipdate BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1996-12-31'
-        |  AND ((n1.n_name = 'NATION_20' AND n2.n_name = 'NATION_11')
-        |    OR (n1.n_name = 'NATION_11' AND n2.n_name = 'NATION_20'))
-        |GROUP BY 1, 2, 3
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-
-    "q8_market_share" ->
-      """WITH vol AS (
-        |  SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |    CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS volume,
-        |    ns.n_name AS supp_nation
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey AND p_type = 'ECONOMY'
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation nc ON c_nationkey = nc.n_nationkey
-        |  JOIN region ON nc.n_regionkey = r_regionkey AND r_name = 'ASIA'
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ns ON s_nationkey = ns.n_nationkey
-        |  WHERE o_orderdate BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1996-12-31'),
-        |a AS (
-        |  SELECT o_year,
-        |    CAST(COALESCE(SUM(CASE WHEN supp_nation = 'NATION_2' THEN volume END),
-        |      CAST(0 AS DECIMAL(18,2))) AS DOUBLE) AS nation_vol,
-        |    CAST(SUM(volume) AS DOUBLE) AS total_vol
-        |  FROM vol GROUP BY o_year)
-        |SELECT o_year, nation_vol, total_vol,
-        |  CAST(FLOOR(nation_vol / total_vol * 1e6 + 0.5) AS BIGINT) AS share_e6,
-        |  CAST(FLOOR(nation_vol / total_vol * 1e6 + 0.5) AS BIGINT) / 1e6 AS mkt_share
-        |FROM a
-        |ORDER BY o_year""".stripMargin,
-
-    "q_semi_join" ->
-      """SELECT c_custkey, c_mktsegment FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 300000)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_anti_join" ->
-      """SELECT p_partkey, p_brand FROM part
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey AND l_quantity >= 48)
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_window_top_orders" ->
-      """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders)
-        |WHERE rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin,
-
-    "q_outer_join" ->
-      """SELECT p_partkey, COALESCE(cnt, 0) AS n_heavy
-        |FROM part LEFT JOIN (
-        |  SELECT l_partkey, COUNT(*) AS cnt FROM lineitem
-        |  WHERE l_quantity >= 48 GROUP BY l_partkey) h
-        |ON p_partkey = l_partkey
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_string_agg" ->
-      """SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-        |  string_agg(CAST(c_custkey AS VARCHAR), ',' ORDER BY CAST(c_custkey AS VARCHAR)) AS custkeys,
-        |  COUNT(*) AS n
-        |FROM customer WHERE c_custkey <= 200
-        |GROUP BY c_nationkey
-        |ORDER BY nationkey""".stripMargin,
-
-    "q_intersect" ->
-      """SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 200000
-        |INTERSECT
-        |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY custkey""".stripMargin,
-
-    "q_lead_lag" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-        |  lag(o_totalprice, 1) OVER w AS prev_price,
-        |  lead(o_orderkey, 1) OVER w AS next_key
-        |FROM orders WHERE o_custkey <= 100
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_segment_stats" ->
-      """SELECT c_mktsegment,
-        |  COUNT(DISTINCT o_custkey) AS n_customers,
-        |  COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-
-    "q_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders
-        |GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-
-    "q_percentiles" ->
-      """SELECT l_returnflag,
-        |  quantile_disc(CAST(l_quantity AS DOUBLE), 0.5) AS p50_qty,
-        |  quantile_disc(CAST(l_quantity AS DOUBLE), 0.9) AS p90_qty,
-        |  CAST(FLOOR(quantile_disc(CAST(l_extendedprice AS DOUBLE), 0.5)
-        |    * 10000.0 + 0.5) AS BIGINT) AS p50_price_e4
-        |FROM lineitem
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q_mad_outliers" ->
-      """WITH b AS (SELECT o_orderpriority AS g, CAST(o_totalprice AS DOUBLE) AS v FROM orders),
-        |med AS (SELECT g, quantile_disc(v, 0.5) AS med FROM b GROUP BY 1),
-        |d AS (SELECT b.g, v, med, abs(v - med) AS ad FROM b JOIN med USING (g)),
-        |mad AS (SELECT g, quantile_disc(ad, 0.5) AS mad FROM d GROUP BY 1)
-        |SELECT d.g AS o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(FLOOR(MIN(d.med) * 10000.0 + 0.5) AS BIGINT) AS med_e4,
-        |  CAST(FLOOR(MIN(mad.mad) * 10000.0 + 0.5) AS BIGINT) AS mad_e4,
-        |  CAST(SUM(CASE WHEN d.ad > 3.0 * 1.4826 * mad.mad THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_outliers
-        |FROM d JOIN mad USING (g) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // weighted discrete quantile: smallest v whose cumulative weight
-    // reaches ceil(q·W) — the definitional window formulation here,
-    // the bounded-memory weighted refinement on the Spark side
-    "q_weighted_median" ->
-      """WITH w AS (SELECT l_returnflag AS g, CAST(l_extendedprice AS DOUBLE) AS v,
-        |    CAST(l_quantity AS BIGINT) AS wt FROM lineitem),
-        |c AS (SELECT g, v, SUM(wt) AS cw FROM w GROUP BY 1, 2),
-        |cum AS (SELECT g, v, SUM(cw) OVER (PARTITION BY g ORDER BY v) AS cum,
-        |    SUM(cw) OVER (PARTITION BY g) AS tw FROM c)
-        |SELECT g AS l_returnflag,
-        |  CAST(FLOOR(MIN(CASE WHEN cum >= CEIL(0.25 * tw) THEN v END)
-        |    * 10000.0 + 0.5) AS BIGINT) AS w_p25_e4,
-        |  CAST(FLOOR(MIN(CASE WHEN cum >= CEIL(0.5 * tw) THEN v END)
-        |    * 10000.0 + 0.5) AS BIGINT) AS w_p50_e4,
-        |  CAST(FLOOR(MIN(CASE WHEN cum >= CEIL(0.75 * tw) THEN v END)
-        |    * 10000.0 + 0.5) AS BIGINT) AS w_p75_e4
-        |FROM cum GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_scalar_funcs" ->
-      """SELECT o_orderkey,
-        |  upper(o_orderpriority) AS pri_upper,
-        |  substr(o_orderpriority, 1, 1) AS pri_code,
-        |  o_orderstatus || '-' || o_orderpriority AS tag,
-        |  CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |  CAST(month(o_orderdate) AS BIGINT) AS mo,
-        |  CAST(day(o_orderdate) AS BIGINT) AS dom,
-        |  CAST(length(o_orderpriority) AS BIGINT) AS pri_len
-        |FROM orders WHERE o_orderkey <= 500
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_events_anomaly" ->
-      """WITH hourly AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS h, COUNT(*) AS c
-        |  FROM events GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT event_type, COUNT(*) AS n,
-        |    CAST(SUM(c) AS BIGINT) AS sc, CAST(SUM(c * c) AS BIGINT) AS scc
-        |  FROM hourly GROUP BY event_type)
-        |SELECT hourly.event_type, strftime(h, '%Y-%m-%d %H') AS hour, c,
-        |  CAST(FLOOR((CAST(c AS DOUBLE) - CAST(sc AS DOUBLE) / CAST(n AS DOUBLE))
-        |    / SQRT((CAST(scc AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE) / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE))
-        |    * 10000.0 + 0.5) AS BIGINT) AS z_e4
-        |FROM hourly JOIN stats ON hourly.event_type = stats.event_type
-        |WHERE abs((CAST(c AS DOUBLE) - CAST(sc AS DOUBLE) / CAST(n AS DOUBLE))
-        |    / SQRT((CAST(scc AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE) / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE))) > 2.0
-        |ORDER BY hourly.event_type, hour""".stripMargin,
-
-    "q_events_gapfill" ->
-      """WITH ev AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS h FROM events WHERE user_id <= 20),
-        |hourly AS (SELECT event_type, h, COUNT(*) AS c FROM ev GROUP BY 1, 2),
-        |spans AS (SELECT event_type, MIN(h) AS h0, MAX(h) AS h1 FROM ev GROUP BY 1),
-        |grid AS (
-        |  SELECT event_type, UNNEST(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        |  FROM spans)
-        |SELECT grid.event_type, strftime(grid.h, '%Y-%m-%d %H') AS hour,
-        |  COALESCE(c, 0) AS n
-        |FROM grid LEFT JOIN hourly ON grid.event_type = hourly.event_type AND grid.h = hourly.h
-        |ORDER BY grid.event_type, hour""".stripMargin,
-
-    "q_events_hourly" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS sum_value
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY hour, event_type""".stripMargin,
-
-    "q_topk_users" ->
-      """WITH spend AS (
-        |  SELECT user_id, event_type,
-        |    CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS total
-        |  FROM events GROUP BY user_id, event_type),
-        |ranked AS (
-        |  SELECT event_type, user_id, total,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY total DESC, user_id) AS rank
-        |  FROM spend)
-        |SELECT event_type, rank, user_id, total
-        |FROM ranked WHERE rank <= 3
-        |ORDER BY event_type, rank""".stripMargin,
-
-    "knn_l2" -> oracleKnnL2,
-    "knn_shuffle_tiled" -> oracleKnnL2,
-
-    "knn_ip" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |pairs AS (
-        |  SELECT q.qid, e.vec_id AS label, q.qv, e.embedding AS v
-        |  FROM q CROSS JOIN embeddings e),
-        |dists AS (
-        |  SELECT qid, label, SUM(CAST(qe AS DOUBLE) * CAST(ve AS DOUBLE)) AS score
-        |  FROM (SELECT qid, label, UNNEST(qv) AS qe, UNNEST(v) AS ve FROM pairs)
-        |  GROUP BY qid, label),
-        |ranked AS (
-        |  SELECT qid, label, score,
-        |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, label) AS rank
-        |  FROM dists)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    "knn_l2_sqlapi" -> oracleKnnL2,
-    "knn_l2_decomposed" -> oracleKnnL2,
-    "ann_f16_rerank" -> oracleKnnL2,
-
-    // exact two-stage reproduction: prefix-16 shortlist (rank ≤ k·4 by
-    // truncated distance, (score, label) ties) then full-dim rerank —
-    // NOT oracleKnnL2: a quarter-signal shortlist need not contain the
-    // true full-dim top-10, and the oracle must reproduce what the
-    // composition actually returns
-    "ann_prefix_rerank" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |pre AS (
-        |  SELECT qid, label, SUM((CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE)) * (CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE))) AS pscore
-        |  FROM (SELECT q.qid, e.vec_id AS label,
-        |      UNNEST(q.qv[1:16]) AS qe, UNNEST(e.embedding[1:16]) AS ve
-        |    FROM q CROSS JOIN embeddings e)
-        |  GROUP BY qid, label),
-        |short AS (SELECT qid, label FROM (
-        |  SELECT qid, label,
-        |    row_number() OVER (PARTITION BY qid ORDER BY pscore, label) AS rn
-        |  FROM pre) WHERE rn <= 40),
-        |d AS (
-        |  SELECT qid, label, SUM((CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE)) * (CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE))) AS score
-        |  FROM (SELECT s.qid, s.label,
-        |      UNNEST(q.qv) AS qe, UNNEST(v.embedding) AS ve
-        |    FROM short s JOIN q ON s.qid = q.qid
-        |    JOIN embeddings v ON s.label = v.vec_id)
-        |  GROUP BY qid, label),
-        |ranked AS (SELECT qid, label, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank FROM d)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-    "knn_l2_gemm" -> oracleKnnL2,
-
-    "vec_reconstruct" ->
-      """SELECT vec_id, CAST(i AS BIGINT) AS pos,
-        |  CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * 10000.0 + 0.5) AS BIGINT) AS val_e4
-        |FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)
-        |WHERE vec_id IN (3, 7, 11)
-        |ORDER BY vec_id, pos""".stripMargin,
-
-    // f16/bf16 round-trip: DuckDB has no half types, but the quantization
-    // IS expressible as exact double arithmetic — for x with exponent e,
-    // RNE to an m-bit significand is round_even(x/s)*s with step
-    // s = 2^(max(e, e_min) - (m-1)) (e_min = -14 covers f16 subnormals;
-    // bf16 normals reach e_min = -126, never hit here). floor(log2(ax))
-    // can be off by one at binade edges → clamped by direct comparison.
-    // The f32 subtraction in the Spark query is exact (Sterbenz: deq is
-    // within a factor 2 of x), so both sides compute the same double.
-    // Edge guards (data-independent correctness): x = 0 pins e0 = 0
-    // (log2(0) = -inf would blow the BIGINT cast; err is exactly 0 via the
-    // arithmetic), and an RNE result beyond the format's max finite value
-    // (65504 for f16) mirrors the Spark side's overflow-to-±Inf: the
-    // round-trip error is +Infinity on both engines.
-    // assignment CTEs are the ann_ivf/dedup_semantic convention
-    // (modulo-40 centroids, L2-argmin with (d, cid) tie order); the
-    // prototypicality double is quantized to an integer witness before
-    // the rank, so the window order is integer-driven on both engines
-    "q_proto_prune" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc0 AS (SELECT v0.vec_id, c.cid, array_distance(v0.varr, c.carr) AS ad
-        |  FROM v0, c),
-        |amin0 AS (SELECT vec_id, MIN(ad) AS m FROM avc0 GROUP BY vec_id),
-        |vcand0 AS (SELECT a.vec_id, a.cid FROM avc0 a
-        |  JOIN amin0 ON a.vec_id = amin0.vec_id
-        |  WHERE a.ad <= amin0.m * 1.00001 + 1e-3),
-        |vc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM vcand0 w JOIN v0 v ON w.vec_id = v.vec_id JOIN c ON w.cid = c.cid)
-        |  GROUP BY 1, 2),
-        |va AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vc) WHERE rn = 1),
-        |ex AS (SELECT vec_id, cid, UNNEST(ev) AS x, UNNEST(cv) AS y FROM (
-        |  SELECT va.vec_id, va.cid, v.embedding AS ev, c2.cv
-        |  FROM va JOIN embeddings v ON va.vec_id = v.vec_id
-        |  JOIN c c2 ON va.cid = c2.cid)),
-        |p AS (SELECT vec_id, cid,
-        |  CASE WHEN SUM(CAST(x AS DOUBLE)*CAST(x AS DOUBLE)) = 0
-        |         OR SUM(CAST(y AS DOUBLE)*CAST(y AS DOUBLE)) = 0
-        |       THEN CAST(-1000001 AS BIGINT)
-        |       ELSE CAST(FLOOR(SUM(CAST(x AS DOUBLE)*CAST(y AS DOUBLE)) /
-        |         (SQRT(SUM(CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) *
-        |          SQRT(SUM(CAST(y AS DOUBLE)*CAST(y AS DOUBLE)))) * 1000000.0
-        |         + 0.5) AS BIGINT) END AS proto_e6
-        |  FROM ex GROUP BY 1, 2),
-        |r AS (SELECT vec_id, cid, proto_e6,
-        |  CAST(row_number() OVER (PARTITION BY cid ORDER BY proto_e6, vec_id) AS BIGINT) AS rn,
-        |  COUNT(*) OVER (PARTITION BY cid) AS sz FROM p)
-        |SELECT vec_id, cid, proto_e6, rn, (rn * 2 <= sz * 1) AS kept
-        |FROM r ORDER BY vec_id""".stripMargin,
-
-    "q_fps_coreset" -> {
-      val body = Curation.farthestPointSampleSql(
-        "SELECT vec_id AS id, embedding AS v FROM embeddings", k = 8)
-      s"""SELECT rank, id AS vec_id,
-         |  CASE WHEN isinf(min_dist) THEN 9223372036854775807
-         |       ELSE CAST(FLOOR(min_dist * 1000000.0 + 0.5) AS BIGINT)
-         |  END AS min_dist_e6
-         |FROM ($body) ORDER BY rank""".stripMargin
-    },
-
-    "q_vec_fp8" ->
-      """WITH el AS (
-        |  SELECT vec_id, len(embedding) AS nd, UNNEST(embedding) AS x FROM embeddings),
-        |e1 AS (
-        |  SELECT vec_id, nd, CAST(x AS DOUBLE) AS xd, abs(CAST(x AS DOUBLE)) AS ax,
-        |    CASE WHEN x = 0 THEN 0
-        |         ELSE CAST(floor(log2(abs(CAST(x AS DOUBLE)))) AS BIGINT) END AS e0
-        |  FROM el),
-        |e2 AS (
-        |  SELECT vec_id, nd, xd, power(CAST(2 AS DOUBLE),
-        |    greatest(CASE WHEN ax >= power(CAST(2 AS DOUBLE), e0+1) THEN e0+1
-        |                  WHEN ax <  power(CAST(2 AS DOUBLE), e0)   THEN e0-1
-        |                  ELSE e0 END, -6) - 3) AS s FROM e1),
-        |r AS (
-        |  SELECT vec_id, nd,
-        |    CASE WHEN abs(round_even(xd / s, 0) * s) > 448
-        |         THEN abs(xd - CASE WHEN xd < 0 THEN -448.0 ELSE 448.0 END)
-        |         ELSE abs(xd - round_even(xd / s, 0) * s) END AS err FROM e2)
-        |SELECT vec_id, CAST(MAX(nd) AS BIGINT) AS n_bytes,
-        |  CAST(FLOOR(MAX(err) * 1000000.0 + 0.5) AS BIGINT) AS max_abs_err_e6
-        |FROM r GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    "f16_roundtrip" ->
-      """WITH el AS (
-        |  SELECT vec_id, len(embedding) AS nd, UNNEST(embedding) AS x FROM embeddings),
-        |e1 AS (
-        |  SELECT vec_id, nd, CAST(x AS DOUBLE) AS xd, abs(CAST(x AS DOUBLE)) AS ax,
-        |    CASE WHEN x = 0 THEN 0
-        |         ELSE CAST(floor(log2(abs(CAST(x AS DOUBLE)))) AS BIGINT) END AS e0
-        |  FROM el),
-        |e2 AS (
-        |  SELECT vec_id, nd, xd, power(CAST(2 AS DOUBLE),
-        |    greatest(CASE WHEN ax >= power(CAST(2 AS DOUBLE), e0+1) THEN e0+1
-        |                  WHEN ax <  power(CAST(2 AS DOUBLE), e0)   THEN e0-1
-        |                  ELSE e0 END, -14) - 10) AS s FROM e1),
-        |r AS (
-        |  SELECT vec_id, nd,
-        |    CASE WHEN abs(round_even(xd / s, 0) * s) > 65504
-        |         THEN CAST('infinity' AS DOUBLE)
-        |         ELSE abs(xd - round_even(xd / s, 0) * s) END AS err FROM e2)
-        |SELECT vec_id, CAST(MAX(nd) AS BIGINT) AS n_dims,
-        |  CAST(FLOOR(MAX(err) * 1000000.0 + 0.5) AS BIGINT) AS max_abs_err_e6
-        |FROM r GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    "bf16_roundtrip" ->
-      """WITH el AS (
-        |  SELECT vec_id, len(embedding) AS nd, UNNEST(embedding) AS x FROM embeddings),
-        |e1 AS (
-        |  SELECT vec_id, nd, CAST(x AS DOUBLE) AS xd, abs(CAST(x AS DOUBLE)) AS ax,
-        |    CASE WHEN x = 0 THEN 0
-        |         ELSE CAST(floor(log2(abs(CAST(x AS DOUBLE)))) AS BIGINT) END AS e0
-        |  FROM el),
-        |e2 AS (
-        |  SELECT vec_id, nd, xd, power(CAST(2 AS DOUBLE),
-        |    greatest(CASE WHEN ax >= power(CAST(2 AS DOUBLE), e0+1) THEN e0+1
-        |                  WHEN ax <  power(CAST(2 AS DOUBLE), e0)   THEN e0-1
-        |                  ELSE e0 END, -126) - 7) AS s FROM e1),
-        |r AS (
-        |  SELECT vec_id, nd,
-        |    CASE WHEN abs(round_even(xd / s, 0) * s) > 3.3895313892515355e38
-        |         THEN CAST('infinity' AS DOUBLE)
-        |         ELSE abs(xd - round_even(xd / s, 0) * s) END AS err FROM e2)
-        |SELECT vec_id, CAST(MAX(nd) AS BIGINT) AS n_dims,
-        |  CAST(FLOOR(MAX(err) * 1000000.0 + 0.5) AS BIGINT) AS max_abs_err_e6
-        |FROM r GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    // the stub decoder's byte-stat features are plain arithmetic over the
-    // utf-8 payload bytes; documents.text is pure ASCII (verified), so
-    // unicode(char) == byte value and length == octet_length. The per-dim
-    // double sum is cast to FLOAT on both sides, which absorbs summation-
-    // order differences.
-    "multimodal_features" ->
-      """WITH b AS (
-        |  SELECT doc_id AS media_id, text, length(text) AS n FROM documents),
-        |bytes AS (
-        |  SELECT media_id, i % 8 AS j, unicode(substr(text, CAST(i AS INT) + 1, 1)) AS bv
-        |  FROM (SELECT media_id, text, UNNEST(range(n)) AS i FROM b)),
-        |feat AS (
-        |  SELECT media_id, j,
-        |    CAST(CAST(SUM(CAST(bv AS DOUBLE) / CAST(255 AS DOUBLE)) AS FLOAT) AS DOUBLE) AS f
-        |  FROM bytes GROUP BY media_id, j),
-        |agg AS (
-        |  SELECT media_id, SUM(f) AS fs, MAX(f) AS fm FROM feat GROUP BY media_id)
-        |SELECT b.media_id, CAST(b.n AS BIGINT) AS n_bytes, 'text/plain' AS mime,
-        |  CAST(8 AS BIGINT) AS n_dims,
-        |  CAST(FLOOR(a.fs * 10000.0 + 0.5) AS BIGINT) AS feat_sum_e4,
-        |  CAST(FLOOR(a.fm * 10000.0 + 0.5) AS BIGINT) AS feat_max_e4
-        |FROM b JOIN agg a ON a.media_id = b.media_id
-        |ORDER BY b.media_id""".stripMargin,
-
-    // Real-codec roundtrips: the oracle recomputes each decoded statistic
-    // from the closed-form generator formula (pixel = (id*31+x*7+y*13)%256,
-    // sample = (id*131+i*17)%4096-2048, frame f of video id = image
-    // id*1000+f). PNG/WAV are lossless, integer sums divide identically in
-    // double on both sides → exact hash match without rounding.
-    "multimodal_image_decode" ->
-      """WITH ids AS (SELECT doc_id AS media_id,
-        |    16 + CAST(doc_id % 3 AS INT) * 4 AS w,
-        |    12 + CAST(doc_id % 2 AS INT) * 4 AS h
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |xs AS (SELECT media_id, w, h, UNNEST(range(w)) AS x FROM ids),
-        |ps AS (SELECT media_id, w, h, x, UNNEST(range(h)) AS y FROM xs),
-        |v AS (SELECT media_id, w, h, x, y,
-        |    (media_id * 31 + x * 7 + y * 13) % 256 AS g FROM ps),
-        |agg AS (SELECT media_id, w, h, SUM(g) AS sg,
-        |    SUM(CASE WHEN x < w // 2 AND y < h // 2 THEN g ELSE 0 END) AS st
-        |  FROM v GROUP BY media_id, w, h)
-        |SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-        |  CAST(sg AS DOUBLE) / (w * h) AS mean_gray,
-        |  CAST(st AS DOUBLE) / ((w // 2) * (h // 2)) AS mean_tl
-        |FROM agg ORDER BY media_id""".stripMargin,
-
-    // dHash recomputed from the closed-form pattern — no codec in the
-    // oracle; equality proves encode→PNG→decode→NN-sample→hash
-    "multimodal_phash_dedup" -> {
-      val ph = Multimodal.phashSqlExpr("(media_id % 97)")
-      s"""WITH m AS (SELECT doc_id AS media_id FROM documents WHERE doc_id % 10 = 0),
-         |h AS (SELECT media_id, ($ph) AS phash FROM m),
-         |g AS (SELECT phash, CAST(COUNT(*) AS BIGINT) AS group_n,
-         |        MIN(media_id) AS keeper
-         |      FROM h GROUP BY phash)
-         |SELECT h.media_id, h.phash, g.group_n, h.media_id = g.keeper AS keep
-         |FROM h JOIN g ON h.phash = g.phash
-         |ORDER BY h.media_id""".stripMargin
-    },
-
-    // NN resize: out(x,y) = pattern(x*w//8, y*h//6), integer-exact
-    "multimodal_image_resize" ->
-      """WITH ids AS (SELECT doc_id AS media_id,
-        |    16 + CAST(doc_id % 3 AS INT) * 4 AS w,
-        |    12 + CAST(doc_id % 2 AS INT) * 4 AS h
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |xs AS (SELECT media_id, w, h, UNNEST(range(8)) AS x FROM ids),
-        |ps AS (SELECT media_id, w, h, x, UNNEST(range(6)) AS y FROM xs),
-        |v AS (SELECT media_id, w, h,
-        |    (media_id * 31 + (x * w // 8) * 7 + (y * h // 6) * 13) % 256 AS g
-        |  FROM ps),
-        |agg AS (SELECT media_id, w, h, SUM(g) AS sg FROM v GROUP BY 1, 2, 3)
-        |SELECT media_id, CAST(w AS INT) AS src_w, CAST(h AS INT) AS src_h,
-        |  CAST(sg AS BIGINT) AS out_sum, CAST(sg AS DOUBLE) / 48 AS out_mean
-        |FROM agg ORDER BY media_id""".stripMargin,
-
-    // lossy codec → tolerance-verdict oracle: dims exact, verdicts TRUE
-    "multimodal_jpeg_decode" ->
-      """SELECT doc_id AS media_id,
-        |  16 + CAST(doc_id % 3 AS INT) * 4 AS width,
-        |  12 + CAST(doc_id % 2 AS INT) * 4 AS height,
-        |  TRUE AS mean_ok, TRUE AS px_ok
-        |FROM documents WHERE doc_id % 10 = 0
-        |ORDER BY media_id""".stripMargin,
-
-    "multimodal_audio_decode" ->
-      """WITH ids AS (SELECT doc_id AS media_id,
-        |    800 + CAST(doc_id % 5 AS INT) * 100 AS n
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |s AS (SELECT media_id, n, UNNEST(range(n)) AS i FROM ids),
-        |v AS (SELECT media_id, n,
-        |    ABS((media_id * 131 + i * 17) % 4096 - 2048) AS a FROM s),
-        |agg AS (SELECT media_id, n, SUM(a) AS sa FROM v GROUP BY media_id, n)
-        |SELECT media_id, CAST(n AS BIGINT) AS n_samples,
-        |  CAST(8000 AS INT) AS sample_rate,
-        |  CAST(sa AS DOUBLE) / n AS mean_abs
-        |FROM agg ORDER BY media_id""".stripMargin,
-
-    // per-frame sums from the generator formula, frame-boundary jumps
-    // via LAG over each video's own (tiny) frame spine, the SAME exact
-    // cross-multiplied integer compare the kernel performs
-    "multimodal_video_temporal" ->
-      """WITH ids AS (SELECT doc_id AS media_id,
-        |    3 + CAST(doc_id % 3 AS INT) AS nf
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |fr AS (SELECT media_id, UNNEST(range(nf)) AS f FROM ids),
-        |sel AS (SELECT media_id, f, media_id * 1000 + f AS fid FROM fr),
-        |dims AS (SELECT media_id, f, fid,
-        |    16 + CAST(fid % 3 AS INT) * 4 AS w,
-        |    12 + CAST(fid % 2 AS INT) * 4 AS h FROM sel),
-        |xs AS (SELECT media_id, f, fid, w, h, UNNEST(range(w)) AS x FROM dims),
-        |ps AS (SELECT media_id, f, fid, w, h, x, UNNEST(range(h)) AS y FROM xs),
-        |agg AS (SELECT media_id, f, w * h AS n,
-        |    SUM((fid * 31 + x * 7 + y * 13) % 256) AS sg
-        |  FROM ps GROUP BY media_id, f, w, h),
-        |d AS (SELECT media_id, f, n, sg,
-        |    LAG(n) OVER (PARTITION BY media_id ORDER BY f) AS pn,
-        |    LAG(sg) OVER (PARTITION BY media_id ORDER BY f) AS psg
-        |  FROM agg)
-        |SELECT media_id, CAST(COUNT(*) AS INT) AS n_frames,
-        |  CAST(SUM(CASE WHEN pn IS NOT NULL
-        |    AND ABS(sg * pn - psg * n) >= 8 * n * pn THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
-        |  (SUM(CASE WHEN pn IS NOT NULL
-        |    AND sg * pn - psg * n <> 0 THEN 1 ELSE 0 END) = 0) AS is_static
-        |FROM d GROUP BY media_id ORDER BY media_id""".stripMargin,
-
-    // closed-form recomputation of the PNG quality counters — exact
-    // integer sums/variance numerator, boolean verdicts from the same
-    // integer compares the kernel performs
-    "multimodal_image_quality" ->
-      """WITH ids AS (SELECT doc_id AS media_id,
-        |    16 + CAST(doc_id % 3 AS INT) * 4 AS w,
-        |    12 + CAST(doc_id % 2 AS INT) * 4 AS h
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |xs AS (SELECT media_id, w, h, UNNEST(range(w)) AS x FROM ids),
-        |ps AS (SELECT media_id, w, h, x, UNNEST(range(h)) AS y FROM xs),
-        |v AS (SELECT media_id, w, h,
-        |    (media_id * 31 + x * 7 + y * 13) % 256 AS g FROM ps),
-        |agg AS (SELECT media_id, MIN(w) AS w, MIN(h) AS h,
-        |    SUM(g) AS sg, SUM(g * g) AS sg2,
-        |    MIN(g) AS mn, MAX(g) AS mx
-        |  FROM v GROUP BY media_id)
-        |SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-        |  CAST((w * 1000000) // h AS BIGINT) AS aspect_ppm,
-        |  CAST(sg AS BIGINT) AS sum_g,
-        |  CAST(w * h * sg2 - sg * sg AS BIGINT) AS var_num,
-        |  CAST(mn AS INT) AS min_g, CAST(mx AS INT) AS max_g,
-        |  (w * h * sg2 - sg * sg = 0) AS is_flat,
-        |  (sg < 32 * w * h) AS is_dark,
-        |  (sg >= 224 * w * h) AS is_bright
-        |FROM agg ORDER BY media_id""".stripMargin,
-
-    // closed-form recomputation of the WAV quality counters; `//` is
-    // DuckDB integer division, matching the kernel's long division
-    "multimodal_audio_quality" ->
-      """WITH ids AS (SELECT doc_id AS media_id,
-        |    800 + CAST(doc_id % 5 AS INT) * 100 AS n
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |s AS (SELECT media_id, n, UNNEST(range(n)) AS i FROM ids),
-        |v AS (SELECT media_id, n,
-        |    ABS((media_id * 131 + i * 17) % 4096 - 2048) AS a FROM s),
-        |agg AS (SELECT media_id, MIN(n) AS n,
-        |    SUM(CASE WHEN a < 256 THEN 1 ELSE 0 END) AS n_silent,
-        |    SUM(CASE WHEN a >= 2040 THEN 1 ELSE 0 END) AS n_clipped,
-        |    SUM(a * a) AS energy, MAX(a) AS peak
-        |  FROM v GROUP BY media_id)
-        |SELECT media_id, CAST(n AS BIGINT) AS n_samples,
-        |  CAST(n_silent AS BIGINT) AS n_silent,
-        |  CAST(n_clipped AS BIGINT) AS n_clipped,
-        |  CAST(energy AS BIGINT) AS energy, CAST(peak AS INT) AS peak,
-        |  CAST((n_silent * 1000000) // n AS BIGINT) AS silence_ppm,
-        |  CAST((n_clipped * 1000000) // n AS BIGINT) AS clip_ppm
-        |FROM agg ORDER BY media_id""".stripMargin,
-
-    "multimodal_frame_sample" ->
-      """WITH ids AS (SELECT doc_id AS media_id,
-        |    3 + CAST(doc_id % 3 AS INT) AS nf
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |fr AS (SELECT media_id, UNNEST(range(nf)) AS f FROM ids),
-        |sel AS (SELECT media_id, f, media_id * 1000 + f AS fid
-        |  FROM fr WHERE f % 2 = 0),
-        |dims AS (SELECT media_id, f, fid,
-        |    16 + CAST(fid % 3 AS INT) * 4 AS w,
-        |    12 + CAST(fid % 2 AS INT) * 4 AS h FROM sel),
-        |xs AS (SELECT media_id, f, fid, w, h, UNNEST(range(w)) AS x FROM dims),
-        |ps AS (SELECT media_id, f, fid, w, h, x, UNNEST(range(h)) AS y FROM xs),
-        |agg AS (SELECT media_id, f, w, h,
-        |    SUM((fid * 31 + x * 7 + y * 13) % 256) AS sg
-        |  FROM ps GROUP BY media_id, f, fid, w, h)
-        |SELECT media_id, CAST(f AS INT) AS frame_idx,
-        |  CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-        |  CAST(sg AS DOUBLE) / (w * h) AS mean_gray
-        |FROM agg ORDER BY media_id, frame_idx""".stripMargin,
-
-    "vec_norms" ->
-      """SELECT vec_id,
-        |  CAST(FLOOR(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))
-        |    * 10000.0 + 0.5) AS BIGINT) AS norm_sq_e4
-        |FROM (SELECT vec_id, UNNEST(embedding) AS e FROM embeddings)
-        |GROUP BY vec_id
-        |ORDER BY vec_id""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT doc_id, md5(text) AS h,
-        |  COUNT(*) OVER (PARTITION BY md5(text)) AS group_size,
-        |  doc_id = MIN(doc_id) OVER (PARTITION BY md5(text)) AS keep
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_tokens" ->
-      """SELECT doc_id,
-        |  len(string_split(text, ' ')) AS n_tokens,
-        |  len(list_distinct(string_split(text, ' '))) AS n_distinct_tokens,
-        |  length(text) AS n_chars_measured
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // NOTE: regex patterns must behave identically under Java regex
-    // (Spark codegen) and RE2 (DuckDB) — conservative ASCII classes, no
-    // lookaround; DuckDB needs the explicit 'g' flag Spark implies
-    "text_redact_pii" ->
-      """WITH laced AS (
-        |  SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR)
-        |    || '@mail.example.org ip 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-        |    || '.17 call +1 555-010-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS t
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |red AS (
-        |  SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(t,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |    '\+?\d{1,3}[ .-]\d{3}[ .-]\d{3}[ .-]?\d{2,4}\b', '<PHONE>', 'g') AS red
-        |  FROM laced)
-        |SELECT doc_id, red,
-        |  CAST((length(red) - length(regexp_replace(red, '<EMAIL>', '', 'g'))) / 7 AS BIGINT) AS n_email,
-        |  CAST((length(red) - length(regexp_replace(red, '<IP>', '', 'g'))) / 4 AS BIGINT) AS n_ip,
-        |  CAST((length(red) - length(regexp_replace(red, '<PHONE>', '', 'g'))) / 7 AS BIGINT) AS n_phone
-        |FROM red
-        |ORDER BY doc_id""".stripMargin,
-
-    // chunk c covers tokens [48c+1, 48c+64] (1-based list_slice, clipped
-    // at the end); a doc shorter than one window yields exactly one chunk
-    "text_chunks" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |c AS (SELECT doc_id, w, UNNEST(range(0, (len(w) - 1) // 48 + 1)) AS chunk_id
-        |      FROM t),
-        |ch AS (SELECT doc_id, chunk_id, chunk_id * 48 AS start_tok,
-        |  array_to_string(list_slice(w, CAST(chunk_id * 48 + 1 AS BIGINT),
-        |    CAST(chunk_id * 48 + 64 AS BIGINT)), ' ') AS chunk
-        |  FROM c)
-        |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  CAST(start_tok AS BIGINT) AS start_tok,
-        |  CAST(len(string_split(chunk, ' ')) AS BIGINT) AS n_tok,
-        |  md5(chunk) AS chunk_md5
-        |FROM ch
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_setop_except" ->
-      """SELECT c_custkey AS custkey FROM customer
-        |EXCEPT
-        |SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 400000
-        |ORDER BY custkey""".stripMargin,
-
-    "q_events_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us, value FROM events),
-        |f AS (
-        |  SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
-        |      OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |g AS (
-        |  SELECT *, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM f)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |  COUNT(*) AS n_events,
-        |  MIN(ts_us) AS start_us, MAX(ts_us) AS end_us,
-        |  CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS sum_value
-        |FROM g GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-
-    // identical shift/mask interleave, generated by the same code
-    "q_zorder_layout" -> {
-      val z = graft.ops.Layout.zorderSqlExpr(
-        "(user_id % 65536)", "((epoch_us(ts) // 1000000) % 65536)", 16)
-      s"""SELECT event_id, $z AS z
-         |FROM events ORDER BY event_id""".stripMargin
-    },
-
-    "q_scd2_history" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |f AS (SELECT *, lag(event_type) OVER
-        |        (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_state
-        |      FROM e),
-        |r AS (SELECT * FROM f WHERE prev_state IS NULL OR prev_state <> event_type),
-        |g AS (SELECT user_id, event_type AS state, ts_us AS valid_from_us,
-        |        lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS valid_to_us
-        |      FROM r)
-        |SELECT user_id, state, valid_from_us, valid_to_us
-        |FROM g ORDER BY user_id, valid_from_us""".stripMargin,
-
-    "q_range_join" ->
-      """SELECT o_orderkey, COUNT(*) AS n_shipped_30d
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  AND l_shipdate >= o_orderdate
-        |  AND l_shipdate < o_orderdate + INTERVAL 30 DAY
-        |GROUP BY o_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_asof_join" ->
-      """WITH u AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, 1 AS tag, event_id,
-        |         NULL::BIGINT AS click_ts_us
-        |  FROM events WHERE event_type = 'purchase'
-        |  UNION ALL
-        |  SELECT user_id, epoch_us(ts), 0, NULL, epoch_us(ts)
-        |  FROM events WHERE event_type = 'click'),
-        |w AS (
-        |  SELECT *, MAX(click_ts_us) OVER (PARTITION BY user_id
-        |    ORDER BY ts_us, tag ROWS UNBOUNDED PRECEDING) AS last_click_us
-        |  FROM u)
-        |SELECT event_id, user_id, ts_us AS purchase_ts_us, last_click_us
-        |FROM w WHERE tag = 1
-        |ORDER BY event_id""".stripMargin,
-
-    "q_asof_join_tolerance" ->
-      """WITH u AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, 1 AS tag, event_id,
-        |         NULL::BIGINT AS click_ts_us
-        |  FROM events WHERE event_type = 'purchase'
-        |  UNION ALL
-        |  SELECT user_id, epoch_us(ts), 0, NULL, epoch_us(ts)
-        |  FROM events WHERE event_type = 'click'),
-        |w AS (
-        |  SELECT *, MAX(click_ts_us) OVER (PARTITION BY user_id
-        |    ORDER BY ts_us, tag ROWS UNBOUNDED PRECEDING) AS last_click_us
-        |  FROM u)
-        |SELECT event_id, user_id, ts_us AS purchase_ts_us,
-        |  CASE WHEN ts_us - last_click_us <= 1800000000 THEN last_click_us
-        |  END AS fresh_click_us
-        |FROM w WHERE tag = 1
-        |ORDER BY event_id""".stripMargin,
-
-    "q_asof_join_nearest" ->
-      """WITH u AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, 1 AS tag, event_id,
-        |         NULL::BIGINT AS click_ts_us
-        |  FROM events WHERE event_type = 'purchase'
-        |  UNION ALL
-        |  SELECT user_id, epoch_us(ts), 0, NULL, epoch_us(ts)
-        |  FROM events WHERE event_type = 'click'),
-        |w AS (
-        |  SELECT *,
-        |    MAX(click_ts_us) OVER (PARTITION BY user_id
-        |      ORDER BY ts_us, tag ROWS UNBOUNDED PRECEDING) AS prev_click_us,
-        |    MIN(click_ts_us) OVER (PARTITION BY user_id
-        |      ORDER BY ts_us, tag
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_click_us
-        |  FROM u)
-        |SELECT event_id, user_id, ts_us AS purchase_ts_us,
-        |  CASE WHEN prev_click_us IS NULL THEN next_click_us
-        |       WHEN next_click_us IS NULL THEN prev_click_us
-        |       WHEN ts_us - prev_click_us <= next_click_us - ts_us THEN prev_click_us
-        |       ELSE next_click_us END AS nearest_click_us
-        |FROM w WHERE tag = 1
-        |ORDER BY event_id""".stripMargin,
-
-    "q_asof_join_nearest_bucketed" ->
-      """WITH u AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, 1 AS tag, event_id,
-        |         NULL::BIGINT AS click_ts_us
-        |  FROM events WHERE event_type = 'purchase'
-        |  UNION ALL
-        |  SELECT user_id, epoch_us(ts), 0, NULL, epoch_us(ts)
-        |  FROM events WHERE event_type = 'click'),
-        |w AS (
-        |  SELECT *,
-        |    MAX(click_ts_us) OVER (PARTITION BY user_id
-        |      ORDER BY ts_us, tag ROWS UNBOUNDED PRECEDING) AS prev_click_us,
-        |    MIN(click_ts_us) OVER (PARTITION BY user_id
-        |      ORDER BY ts_us, tag
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_click_us
-        |  FROM u)
-        |SELECT event_id, user_id, ts_us AS purchase_ts_us,
-        |  CASE WHEN prev_click_us IS NULL THEN next_click_us
-        |       WHEN next_click_us IS NULL THEN prev_click_us
-        |       WHEN ts_us - prev_click_us <= next_click_us - ts_us THEN prev_click_us
-        |       ELSE next_click_us END AS nearest_click_us
-        |FROM w WHERE tag = 1
-        |ORDER BY event_id""".stripMargin,
-
-    // the bucketed two-pass plan answers the SAME question — one oracle
-    // text, two physical strategies (window vs range-bucketed)
-    "q_asof_join_bucketed" ->
-      """WITH u AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, 1 AS tag, event_id,
-        |         NULL::BIGINT AS click_ts_us
-        |  FROM events WHERE event_type = 'purchase'
-        |  UNION ALL
-        |  SELECT user_id, epoch_us(ts), 0, NULL, epoch_us(ts)
-        |  FROM events WHERE event_type = 'click'),
-        |w AS (
-        |  SELECT *, MAX(click_ts_us) OVER (PARTITION BY user_id
-        |    ORDER BY ts_us, tag ROWS UNBOUNDED PRECEDING) AS last_click_us
-        |  FROM u)
-        |SELECT event_id, user_id, ts_us AS purchase_ts_us, last_click_us
-        |FROM w WHERE tag = 1
-        |ORDER BY event_id""".stripMargin,
-
-    "q_lang_similarity" -> {
-      val mins = (0 until 16).map(Dedup.minhashElemSql).mkString(", ")
-      val matches = (0 until 16)
-        .map(j => s"CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END")
-        .mkString(" + ")
-      s"""WITH t AS (SELECT lang, string_split(text,' ') AS w FROM documents),
-         |shl AS (SELECT lang, list_distinct(list_transform(range(1, len(w)-1),
-         |  i -> w[i]||' '||w[i+1]||' '||w[i+2])) AS shingles FROM t),
-         |ex AS (SELECT DISTINCT lang, UNNEST(shingles) AS s FROM shl),
-         |mh AS (SELECT lang, $mins FROM ex GROUP BY lang)
-         |SELECT a.lang AS lang_a, b.lang AS lang_b,
-         |  CAST($matches AS BIGINT) AS n_match,
-         |  CAST(16 AS BIGINT) AS k,
-         |  CAST($matches AS DOUBLE) / 16 AS est_jaccard
-         |FROM mh a JOIN mh b ON a.lang < b.lang
-         |ORDER BY lang_a, lang_b""".stripMargin
-    },
-
-    "dedup_minhash" -> {
-      s"""WITH ${minhashBandCtes(8, 2)},
-         |cand AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared_bands
-         |  FROM bands a JOIN bands b
-         |    ON a.key = b.key AND a.band = b.band AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |ns AS (SELECT doc_id, len(shingles) AS n_sh FROM sh),
-         |inter AS (
-         |  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-         |  FROM cand c
-         |  JOIN ex ea ON ea.doc_id = c.doc_a
-         |  JOIN ex eb ON eb.doc_id = c.doc_b AND eb.s = ea.s
-         |  GROUP BY 1, 2)
-         |SELECT c.doc_a, c.doc_b, c.shared_bands,
-         |  CAST(i.n_inter AS DOUBLE) / CAST(na.n_sh + nb.n_sh - i.n_inter AS DOUBLE) AS jaccard
-         |FROM cand c
-         |JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-         |JOIN ns na ON na.doc_id = c.doc_a
-         |JOIN ns nb ON nb.doc_id = c.doc_b
-         |ORDER BY c.doc_a, c.doc_b""".stripMargin
-    },
-
-    "dedup_minhash_auto" -> {
-      val (h, r) = Dedup.chooseBandConfig(0.6, 0.98)
-      s"""WITH ${minhashBandCtes(h, r)}
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared_bands,
-         |  $h AS num_hashes, $r AS rows_per_band
-         |FROM bands a JOIN bands b
-         |  ON a.key = b.key AND a.band = b.band AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2
-         |ORDER BY doc_a, doc_b""".stripMargin
-    },
-
-    "dedup_incremental" -> {
-      s"""WITH ${minhashBandCtes(8, 2)},
-         |cand AS (
-         |  SELECT b.doc_id AS doc_a, a.doc_id AS doc_b
-         |  FROM bands a JOIN bands b
-         |    ON a.key = b.key AND a.band = b.band
-         |    AND a.doc_id < 400 AND b.doc_id >= 400
-         |  GROUP BY 1, 2),
-         |ns AS (SELECT doc_id, len(shingles) AS n_sh FROM sh),
-         |inter AS (
-         |  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-         |  FROM cand c
-         |  JOIN ex ea ON ea.doc_id = c.doc_a
-         |  JOIN ex eb ON eb.doc_id = c.doc_b AND eb.s = ea.s
-         |  GROUP BY 1, 2),
-         |j AS (
-         |  SELECT i.doc_a, i.doc_b,
-         |    CAST(i.n_inter AS DOUBLE) / CAST(na.n_sh + nb.n_sh - i.n_inter AS DOUBLE) AS jaccard
-         |  FROM inter i
-         |  JOIN ns na ON na.doc_id = i.doc_a
-         |  JOIN ns nb ON nb.doc_id = i.doc_b),
-         |best AS (
-         |  SELECT doc_a, doc_b, jaccard,
-         |    row_number() OVER (PARTITION BY doc_a ORDER BY jaccard DESC, doc_b) AS rn
-         |  FROM j WHERE jaccard >= 0.5)
-         |SELECT doc_a AS doc_id, doc_b AS dup_of,
-         |  CAST(FLOOR(jaccard * 1000000.0 + 0.5) AS BIGINT) AS jaccard_e6
-         |FROM best WHERE rn = 1 ORDER BY doc_id""".stripMargin
-    },
-
-    "dedup_prefix_filter" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-        |  i -> w[i]||' '||w[i+1]||' '||w[i+2])) AS shingles FROM t),
-        |ex AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
-        |ns AS (SELECT doc_id, len(shingles) AS n_sh FROM sh),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        |  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT i.doc_a, i.doc_b, i.n_inter,
-        |  CAST(i.n_inter AS DOUBLE) / CAST(na.n_sh + nb.n_sh - i.n_inter AS DOUBLE) AS jaccard
-        |FROM inter i
-        |JOIN ns na ON na.doc_id = i.doc_a
-        |JOIN ns nb ON nb.doc_id = i.doc_b
-        |WHERE CAST(i.n_inter AS DOUBLE) / CAST(na.n_sh + nb.n_sh - i.n_inter AS DOUBLE) >= 0.7
-        |ORDER BY i.doc_a, i.doc_b""".stripMargin,
-
-    "dedup_sorted_neighborhood" ->
-      """WITH t AS (SELECT doc_id, substr(text, 1, 24) AS k, string_split(text,' ') AS w
-        |           FROM documents),
-        |sh AS (SELECT doc_id, k, list_distinct(list_transform(range(1, len(w)-1),
-        |  i -> w[i]||' '||w[i+1]||' '||w[i+2])) AS shingles FROM t),
-        |r AS (SELECT doc_id, shingles, len(shingles) AS n_sh,
-        |  row_number() OVER (ORDER BY k, doc_id) AS rank FROM sh
-        |  WHERE len(shingles) > 0),
-        |cand AS (SELECT a.doc_id AS da, b.doc_id AS db,
-        |    len(list_intersect(a.shingles, b.shingles)) AS n_inter,
-        |    a.n_sh AS na, b.n_sh AS nb
-        |  FROM r a JOIN r b ON b.rank > a.rank AND b.rank < a.rank + 5)
-        |SELECT LEAST(da, db) AS doc_a, GREATEST(da, db) AS doc_b,
-        |  CAST(n_inter AS BIGINT) AS n_inter,
-        |  CAST(n_inter AS DOUBLE) / CAST(na + nb - n_inter AS DOUBLE) AS jaccard
-        |FROM cand
-        |WHERE CAST(n_inter AS DOUBLE) / CAST(na + nb - n_inter AS DOUBLE) >= 0.7
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "dedup_ngram_jaccard" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents WHERE doc_id % 4 = 0),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-        |  i -> w[i]||' '||w[i+1]||' '||w[i+2])) AS shingles FROM t),
-        |ex0 AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
-        |df AS (SELECT s, COUNT(*) AS df FROM ex0 GROUP BY s),
-        |ex AS (SELECT ex0.doc_id, ex0.s FROM ex0 JOIN df ON ex0.s = df.s WHERE df.df <= 1000),
-        |ns AS (SELECT doc_id, COUNT(*) AS n_sh FROM ex GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        |  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT i.doc_a, i.doc_b, i.n_inter,
-        |  CAST(i.n_inter AS DOUBLE) / CAST(na.n_sh + nb.n_sh - i.n_inter AS DOUBLE) AS jaccard
-        |FROM inter i
-        |JOIN ns na ON na.doc_id = i.doc_a
-        |JOIN ns nb ON nb.doc_id = i.doc_b
-        |WHERE CAST(i.n_inter AS DOUBLE) / CAST(na.n_sh + nb.n_sh - i.n_inter AS DOUBLE) >= 0.5
-        |ORDER BY i.doc_a, i.doc_b""".stripMargin,
-
-    "dedup_containment" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents WHERE doc_id % 4 = 2),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-        |  i -> w[i]||' '||w[i+1]||' '||w[i+2])) AS shingles FROM t),
-        |ex0 AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
-        |df AS (SELECT s, COUNT(*) AS df FROM ex0 GROUP BY s),
-        |ex AS (SELECT ex0.doc_id, ex0.s FROM ex0 JOIN df ON ex0.s = df.s WHERE df.df <= 1000),
-        |ns AS (SELECT doc_id, COUNT(*) AS n_sh FROM ex GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        |  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT i.doc_a, i.doc_b, i.n_inter,
-        |  CAST(i.n_inter AS DOUBLE) / CAST(LEAST(na.n_sh, nb.n_sh) AS DOUBLE) AS containment,
-        |  CASE WHEN na.n_sh <= nb.n_sh THEN i.doc_a ELSE i.doc_b END AS contained_id
-        |FROM inter i
-        |JOIN ns na ON na.doc_id = i.doc_a
-        |JOIN ns nb ON nb.doc_id = i.doc_b
-        |WHERE CAST(i.n_inter AS DOUBLE) / CAST(LEAST(na.n_sh, nb.n_sh) AS DOUBLE) >= 0.8
-        |ORDER BY i.doc_a, i.doc_b""".stripMargin,
-
-    "q_mix_weights" ->
-      """WITH c AS (
-        |  SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS n_chars
-        |  FROM documents GROUP BY lang),
-        |t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total, COUNT(*) AS n_langs FROM c)
-        |SELECT lang, n_docs, n_chars,
-        |  CAST(FLOOR(CAST(total AS DOUBLE) / (CAST(n_langs AS DOUBLE) * CAST(n_docs AS DOUBLE))
-        |    * 1000000.0 + 0.5) AS BIGINT) AS upsample_weight_e6
-        |FROM c CROSS JOIN t
-        |ORDER BY lang""".stripMargin,
-
-    "q_media_frames" ->
-      """SELECT doc_id AS media_id, CAST(f AS BIGINT) AS frame_idx,
-        |  md5(substr(text, CAST(f * 256 + 1 AS BIGINT), 256)) AS frame_md5,
-        |  CAST(octet_length(encode(substr(text, CAST(f * 256 + 1 AS BIGINT), 256))) AS BIGINT) AS frame_bytes
-        |FROM documents, UNNEST(range(0, (length(text) - 1) // 256 + 1)) AS t(f)
-        |WHERE f % 2 = 0
-        |ORDER BY media_id, frame_idx""".stripMargin,
-
-    "q_pack_sequences" ->
-      """SELECT doc_id, lang, n_tokens,
-        |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-        |  CAST((cum - n_tokens) % 2048 AS BIGINT) AS pack_offset
-        |FROM (
-        |  SELECT doc_id, lang, n_tokens,
-        |    SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM (SELECT doc_id, lang,
-        |      CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |    FROM documents))
-        |ORDER BY doc_id""".stripMargin,
-
-    // the bloom-pruned plan must be row-identical to the plain join
-    "q_bloom_join" ->
-      """SELECT l_orderkey AS o_orderkey, COUNT(*) AS n_items,
-        |  CAST(FLOOR(SUM(l_quantity) * 10000.0 + 0.5) AS BIGINT) AS sum_qty_e4
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    // same semantics as q_pack_sequences — the scan plan must reproduce
-    // the window plan's answer bit-for-bit
-    "q_pack_sequences_scan" ->
-      """SELECT doc_id, lang, n_tokens,
-        |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-        |  CAST((cum - n_tokens) % 2048 AS BIGINT) AS pack_offset
-        |FROM (
-        |  SELECT doc_id, lang, n_tokens,
-        |    SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM (SELECT doc_id, lang,
-        |      CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |    FROM documents))
-        |ORDER BY doc_id""".stripMargin,
-
-    // CAST the window SUM back to BIGINT: DuckDB widens SUM(BIGINT) to
-    // HUGEINT, which Arrow materializes as decimal128(38,0) and the gate's
-    // hasher canonicalizes differently from Spark's int64 (r7 verdict).
-    "q_global_running_sum" ->
-      """SELECT o_orderkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-        |    OVER (ORDER BY o_orderkey ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_cents
-        |FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_clamped_inventory" ->
-      // sequential recurrence per part via recursive CTE — integer
-      // arithmetic, so it must equal the scan bit for bit; depth = max
-      // rows per part, which Replicate keeps scale-independent
-      """WITH RECURSIVE base AS MATERIALIZED (
-        |  SELECT l_partkey, l_orderkey, l_linenumber,
-        |    CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS BIGINT)
-        |         ELSE -CAST(l_quantity AS BIGINT) END AS delta,
-        |    row_number() OVER (PARTITION BY l_partkey
-        |      ORDER BY l_shipdate, l_orderkey, l_linenumber) AS rn
-        |  FROM lineitem),
-        |rec AS (
-        |  SELECT l_partkey, l_orderkey, l_linenumber, rn, delta,
-        |    GREATEST(0, LEAST(500, delta)) AS level FROM base WHERE rn = 1
-        |  UNION ALL
-        |  SELECT b.l_partkey, b.l_orderkey, b.l_linenumber, b.rn, b.delta,
-        |    GREATEST(0, LEAST(500, r.level + b.delta))
-        |  FROM base b JOIN rec r ON b.l_partkey = r.l_partkey AND b.rn = r.rn + 1)
-        |SELECT l_partkey, l_orderkey, l_linenumber, delta, level
-        |FROM rec ORDER BY l_partkey, l_orderkey, l_linenumber""".stripMargin,
-
-    "q_gini_revenue" ->
-      """WITH cust AS (SELECT o_custkey,
-        |    CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-        |  FROM orders GROUP BY o_custkey),
-        |rk AS (SELECT cents,
-        |    row_number() OVER (ORDER BY cents, o_custkey) AS rn FROM cust),
-        |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(cents) AS BIGINT) AS tot,
-        |    SUM(CAST(2 * rn - (SELECT COUNT(*) FROM cust) - 1 AS HUGEINT)
-        |        * cents) AS num
-        |  FROM rk)
-        |SELECT n AS n_customers, tot AS total_cents,
-        |  CAST(FLOOR(CAST(num AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(tot AS DOUBLE))
-        |    * 1000000.0 + 0.5) AS BIGINT) AS gini_e6
-        |FROM m""".stripMargin,
-
-    "q_lorenz_deciles" ->
-      """WITH cust AS (SELECT o_custkey,
-        |    CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-        |  FROM orders GROUP BY o_custkey),
-        |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(cents) AS BIGINT) AS tot FROM cust),
-        |rk AS (SELECT cents,
-        |    row_number() OVER (ORDER BY cents, o_custkey) AS rn FROM cust)
-        |SELECT ((rn - 1) * 10) // (SELECT n FROM nn) AS decile,
-        |  CAST(COUNT(*) AS BIGINT) AS n_customers,
-        |  CAST(SUM(cents) AS BIGINT) AS cents,
-        |  CAST(FLOOR(CAST(SUM(cents) AS DOUBLE) /
-        |    CAST((SELECT tot FROM nn) AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS share_e6
-        |FROM rk GROUP BY 1 ORDER BY decile""".stripMargin,
-
-    "q_exact_quantile_scan" ->
-      // quantile_disc's rank convention (ceil(q·n)-th smallest) is the
-      // refinement loop's contract — exact integer equality, no rounding
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |  quantile_disc(CAST(round(o_totalprice * 100) AS BIGINT), 0.5) AS p50_cents,
-        |  quantile_disc(CAST(round(o_totalprice * 100) AS BIGINT), 0.9) AS p90_cents,
-        |  quantile_disc(CAST(round(o_totalprice * 100) AS BIGINT), 0.99) AS p99_cents
-        |FROM orders""".stripMargin,
-
-    "q_exact_quantile_group" ->
-      """WITH c AS (SELECT l_returnflag,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem)
-        |SELECT l_returnflag, CAST(0.5 AS DOUBLE) AS q, quantile_disc(v, 0.5) AS price_cents
-        |FROM c GROUP BY l_returnflag
-        |UNION ALL
-        |SELECT l_returnflag, CAST(0.9 AS DOUBLE) AS q, quantile_disc(v, 0.9) AS price_cents
-        |FROM c GROUP BY l_returnflag
-        |ORDER BY l_returnflag, q""".stripMargin,
-
-    "q_time_decay" ->
-      // sequential recurrence per user (recursive CTE by rn); depth =
-      // max events per user, which Replicate keeps scale-independent.
-      // Both engines run the identical two IEEE ops per step (pow,
-      // fused add-multiply sequence) on values O(1-10); ROUND(,6)
-      // absorbs the ≤1-ulp libm pow spread
-      """WITH RECURSIVE base AS MATERIALIZED (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), event_id) AS rn
-        |  FROM events),
-        |rec AS (
-        |  SELECT user_id, event_id, ts_us, rn, CAST(1.0 AS DOUBLE) AS y
-        |  FROM base WHERE rn = 1
-        |  UNION ALL
-        |  SELECT b.user_id, b.event_id, b.ts_us, b.rn,
-        |    1.0 + POWER(0.5, CAST(b.ts_us - r.ts_us AS DOUBLE) / 3600000000.0) * r.y
-        |  FROM base b JOIN rec r ON b.user_id = r.user_id AND b.rn = r.rn + 1)
-        |SELECT user_id, event_id,
-        |  CAST(FLOOR(y * 1000000.0 + 0.5) AS BIGINT) AS decayed_e6
-        |FROM rec ORDER BY user_id, event_id""".stripMargin,
-
-    "q_cusum_drift" ->
-      // same sequential CUSUM per nation (recursive CTE by rn); ref is
-      // exact integer floor division in both engines
-      """WITH RECURSIVE daily AS MATERIALIZED (
-        |  SELECT n.n_name, CAST(o.o_orderdate AS DATE) AS d,
-        |    CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |    JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  GROUP BY 1, 2),
-        |r AS MATERIALIZED (
-        |  SELECT CAST(SUM(cnt) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS rf
-        |  FROM daily),
-        |idx AS MATERIALIZED (
-        |  SELECT n_name, d, cnt,
-        |    row_number() OVER (PARTITION BY n_name ORDER BY d) AS rn
-        |  FROM daily),
-        |rec AS (
-        |  SELECT n_name, d, rn,
-        |    GREATEST(0, cnt - (SELECT rf FROM r)) AS cusum
-        |  FROM idx WHERE rn = 1
-        |  UNION ALL
-        |  SELECT i.n_name, i.d, i.rn,
-        |    GREATEST(0, rec.cusum + i.cnt - (SELECT rf FROM r))
-        |  FROM idx i JOIN rec ON i.n_name = rec.n_name AND i.rn = rec.rn + 1)
-        |SELECT n_name, d, cusum, cusum > 3 * (SELECT rf FROM r) AS alarm
-        |FROM rec ORDER BY n_name, d""".stripMargin,
-
-    "q_ewma_daily" ->
-      // closed-form normalized exponential weights (the recurrences the
-      // scan runs are exactly these sums); both engines round to 6 dp on
-      // values O(25), leaving ~1e-14 arithmetic spread far below the
-      // rounding grain
-      """WITH daily AS MATERIALIZED (
-        |  SELECT n.n_name, CAST(o.o_orderdate AS DATE) AS d,
-        |    CAST(COUNT(*) AS DOUBLE) AS cnt
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |    JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  GROUP BY 1, 2),
-        |idx AS MATERIALIZED (
-        |  SELECT n_name, d, cnt,
-        |    row_number() OVER (PARTITION BY n_name ORDER BY d) AS rn
-        |  FROM daily)
-        |SELECT a.n_name, a.d,
-        |  CAST(FLOOR(SUM(power(0.75, a.rn - b.rn) * b.cnt)
-        |        / SUM(power(0.75, a.rn - b.rn)) * 1000000.0 + 0.5) AS BIGINT) AS ewma_e6
-        |FROM idx a JOIN idx b ON a.n_name = b.n_name AND b.rn <= a.rn
-        |GROUP BY a.n_name, a.d
-        |ORDER BY a.n_name, a.d""".stripMargin,
-
-    "q_holt_trend" ->
-      // the identical sequential recurrence as Scan.holtLinear, walked
-      // by a recursive CTE over the same row_number order; (1.0 - 0.3)
-      // and (1.0 - 0.1) are SPELLED as subtractions because the Scala
-      // side computes them at runtime and e.g. literal-0.9's double
-      // differs from (1.0 - 0.1)'s by one ulp
-      """WITH RECURSIVE daily AS MATERIALIZED (
-        |  SELECT n.n_name, CAST(o.o_orderdate AS DATE) AS d,
-        |    CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |    JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  GROUP BY 1, 2),
-        |idx AS MATERIALIZED (
-        |  SELECT n_name, d, cnt,
-        |    row_number() OVER (PARTITION BY n_name ORDER BY d) AS rn,
-        |    COUNT(*) OVER (PARTITION BY n_name) AS n_days
-        |  FROM daily),
-        |h AS (
-        |  SELECT n_name, d, cnt, rn, n_days,
-        |    CAST(cnt AS DOUBLE) AS level, CAST(0.0 AS DOUBLE) AS trend
-        |  FROM idx WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.n_name, r.d, r.cnt, r.rn, r.n_days,
-        |    CAST(0.3 AS DOUBLE) * r.cnt
-        |      + (CAST(1.0 AS DOUBLE) - CAST(0.3 AS DOUBLE)) * (h.level + h.trend) AS level,
-        |    CAST(0.1 AS DOUBLE) * ((CAST(0.3 AS DOUBLE) * r.cnt
-        |        + (CAST(1.0 AS DOUBLE) - CAST(0.3 AS DOUBLE)) * (h.level + h.trend)) - h.level)
-        |      + (CAST(1.0 AS DOUBLE) - CAST(0.1 AS DOUBLE)) * h.trend AS trend
-        |  FROM h JOIN idx r ON r.n_name = h.n_name AND r.rn = h.rn + 1)
-        |SELECT n_name, d, cnt,
-        |  CAST(FLOOR(level * 1e6 + 0.5) AS BIGINT) AS level_e6,
-        |  CAST(FLOOR(trend * 1e6 + 0.5) AS BIGINT) AS trend_e6,
-        |  CAST(FLOOR((level + CAST(7.0 AS DOUBLE) * trend) * 1e6 + 0.5) AS BIGINT) AS forecast7_e6
-        |FROM h WHERE rn > n_days - 5
-        |ORDER BY n_name, d""".stripMargin,
-
-    "q_jl_project" ->
-      // identical md5-derived sign matrix; per-element fp32 cast after
-      // the fp64 dot product mirrors PcaProject's storage convention
-      """WITH pos AS MATERIALIZED (
-        |  SELECT vec_id, UNNEST(embedding) AS x, UNNEST(range(len(embedding))) AS i
-        |  FROM embeddings),
-        |mat AS MATERIALIZED (
-        |  SELECT i, j,
-        |    CASE WHEN h < '2b' THEN 1.0 WHEN h >= 'd5' THEN -1.0
-        |         ELSE 0.0 END * sqrt(3.0 / 16.0 * (256.0 / 258.0)) AS r
-        |  FROM (SELECT a.i, b.j,
-        |          substr(md5('jl:' || CAST(a.i AS VARCHAR) || ':'
-        |                  || CAST(b.j AS VARCHAR)), 1, 2) AS h
-        |        FROM (SELECT UNNEST(range(64)) AS i) a,
-        |             (SELECT UNNEST(range(16)) AS j) b)),
-        |y AS (SELECT p.vec_id, m.j,
-        |        CAST(SUM(m.r * CAST(p.x AS DOUBLE)) AS REAL) AS yv
-        |      FROM pos p JOIN mat m ON m.i = p.i GROUP BY p.vec_id, m.j),
-        |ny AS (SELECT vec_id, SUM(CAST(yv AS DOUBLE) * CAST(yv AS DOUBLE)) AS ny2
-        |       FROM y GROUP BY vec_id),
-        |nx AS (SELECT vec_id, SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS nx2
-        |       FROM pos GROUP BY vec_id)
-        |SELECT ny.vec_id,
-        |  CAST(FLOOR(sqrt(ny.ny2 / nx.nx2) * 10000.0 + 0.5) AS BIGINT) AS norm_ratio_e4
-        |FROM ny JOIN nx USING (vec_id)
-        |ORDER BY vec_id""".stripMargin,
-
-    "q_vec_int8" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
-        |  FROM embeddings),
-        |ex AS (SELECT vec_id, scale, UNNEST(embedding) AS e FROM s)
-        |SELECT vec_id,
-        |  CAST(FLOOR(MIN(scale) * 1000000.0 + 0.5) AS BIGINT) AS scale_e6,
-        |  CAST(FLOOR(MAX(CASE WHEN scale > 0
-        |    THEN abs(CAST(e AS DOUBLE) - floor(CAST(e AS DOUBLE) / scale + 0.5) * scale)
-        |    ELSE 0.0 END) * 1000000.0 + 0.5) AS BIGINT) AS max_abs_err_e6
-        |FROM ex
-        |GROUP BY vec_id
-        |ORDER BY vec_id""".stripMargin,
-
-    // scale = max|x|/7, code = floor(x/scale + 0.5), decode =
-    // float(code·scale); packed_bytes = ⌈d/2⌉ (two biased nibbles/byte)
-    "q_vec_int4" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 7.0 AS scale
-        |  FROM embeddings),
-        |ex AS (SELECT vec_id, scale, len(embedding) AS d, UNNEST(embedding) AS e FROM s)
-        |SELECT vec_id,
-        |  CAST(FLOOR(MIN(scale) * 1000000.0 + 0.5) AS BIGINT) AS scale_e6,
-        |  CAST((MIN(d) + 1) // 2 AS BIGINT) AS packed_bytes,
-        |  CAST(FLOOR(MAX(CASE WHEN scale > 0
-        |    THEN abs(CAST(e AS DOUBLE) -
-        |      CAST(CAST(floor(CAST(e AS DOUBLE) / scale + 0.5) * scale AS REAL) AS DOUBLE))
-        |    ELSE 0.0 END) * 1000000.0 + 0.5) AS BIGINT) AS max_abs_err_e6
-        |FROM ex
-        |GROUP BY vec_id
-        |ORDER BY vec_id""".stripMargin,
-
-    "dedup_decontaminate" -> {
-      val gram8 = "i -> " + (0 until 8).map(o => s"w[i+$o]").mkString("||' '||")
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents WHERE doc_id % 7 <> 0),
-         |tsh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-6), $gram8)) AS sh FROM t),
-         |e AS (SELECT doc_id, string_split(text,' ') AS w FROM documents WHERE doc_id % 7 = 0),
-         |esh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-6), $gram8)) AS sh FROM e),
-         |tex0 AS (SELECT doc_id, len(sh) AS n_sh, UNNEST(sh) AS s FROM tsh),
-         |tdf AS (SELECT s, COUNT(*) AS df FROM tex0 GROUP BY s),
-         |tex AS (SELECT tex0.doc_id, tex0.n_sh, tex0.s FROM tex0
-         |        JOIN tdf ON tex0.s = tdf.s WHERE tdf.df <= 1000),
-         |eex0 AS (SELECT doc_id AS eval_id, UNNEST(sh) AS s FROM esh),
-         |edf AS (SELECT s, COUNT(*) AS df FROM eex0 GROUP BY s),
-         |eex AS (SELECT eex0.eval_id, eex0.s FROM eex0
-         |        JOIN edf ON eex0.s = edf.s WHERE edf.df <= 1000),
-         |ov AS (SELECT tex.doc_id, eex.eval_id, COUNT(*) AS n_overlap, MIN(tex.n_sh) AS n_sh
-         |       FROM tex JOIN eex ON tex.s = eex.s GROUP BY 1, 2),
-         |top AS (SELECT doc_id, eval_id, n_overlap, n_sh,
-         |        row_number() OVER (PARTITION BY doc_id ORDER BY n_overlap DESC, eval_id) AS rn FROM ov)
-         |SELECT t.doc_id, top.eval_id,
-         |  COALESCE(top.n_overlap, 0) AS n_overlap,
-         |  CAST(FLOOR(COALESCE(CAST(top.n_overlap AS DOUBLE) / CAST(top.n_sh AS DOUBLE), 0.0)
-         |    * 1000000.0 + 0.5) AS BIGINT) AS frac_e6
-         |FROM (SELECT doc_id FROM documents WHERE doc_id % 7 <> 0) t
-         |LEFT JOIN (SELECT * FROM top WHERE rn = 1) top ON t.doc_id = top.doc_id
-         |ORDER BY t.doc_id""".stripMargin
-    },
-
-    "dedup_decontam_semantic" ->
-      // scale-shaped oracle (the dedup_embedding_cosine pattern): a
-      // native float32 array_cosine_similarity prefilter keeps each
-      // eval's top-30-with-guard-band candidates, then ONLY those are
-      // rescored with the exact fp64 list arithmetic that defines the
-      // result — float32 cosine error (~1e-7 relative) is orders below
-      // the 1e-4 guard band, so the exact top-5 provably survive
-      """WITH q AS (SELECT vec_id AS eval_id, embedding AS qv,
-        |    embedding::FLOAT[64] AS qarr
-        |  FROM embeddings WHERE vec_id % 97 = 0),
-        |t AS (SELECT vec_id AS train_id, embedding AS v,
-        |    embedding::FLOAT[64] AS tarr
-        |  FROM embeddings WHERE vec_id % 97 <> 0),
-        |approx AS (SELECT q.eval_id, t.train_id,
-        |    array_cosine_similarity(q.qarr, t.tarr) AS ascore
-        |  FROM q CROSS JOIN t),
-        |thr AS (SELECT eval_id, MIN(ascore) AS t30 FROM (
-        |  SELECT eval_id, ascore,
-        |    row_number() OVER (PARTITION BY eval_id ORDER BY ascore DESC) AS arn
-        |  FROM approx) WHERE arn <= 30 GROUP BY eval_id),
-        |cand AS (SELECT a.eval_id, a.train_id FROM approx a
-        |  JOIN thr ON a.eval_id = thr.eval_id
-        |  WHERE a.ascore >= thr.t30 - (1e-4 + ABS(thr.t30) * 1e-5)),
-        |p AS (SELECT c.eval_id, c.train_id,
-        |  list_sum(list_transform(list_zip(q.qv, t.v),
-        |    z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) /
-        |  (SQRT(list_sum(list_transform(q.qv, e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)))) *
-        |   SQRT(list_sum(list_transform(t.v, e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))) AS score
-        |  FROM cand c JOIN q ON c.eval_id = q.eval_id
-        |  JOIN t ON c.train_id = t.train_id),
-        |r AS (SELECT eval_id, train_id, score,
-        |  row_number() OVER (PARTITION BY eval_id ORDER BY score DESC, train_id) AS rank
-        |  FROM p WHERE NOT isnan(score))
-        |SELECT eval_id, rank, train_id,
-        |  CAST(FLOOR(score * 1000000.0 + 0.5) AS BIGINT) AS cos_e6
-        |FROM r WHERE rank <= 5
-        |ORDER BY eval_id, rank""".stripMargin,
-
-    "text_simhash" -> {
-      val sums = (0 until 16)
-        .map(b => s"SUM(${Dedup.simhashBitSql(b, "//")}) AS s$b").mkString(", ")
-      val bits = (0 until 16)
-        .map(b => s"CASE WHEN 2*s$b > n THEN ${1L << b} ELSE 0 END")
-        .mkString(" + ")
-      s"""WITH toks AS (
-         |  SELECT doc_id, UNNEST(list_distinct(string_split(text,' '))) AS tok
-         |  FROM documents),
-         |s AS (SELECT doc_id, COUNT(*) AS n, $sums FROM toks GROUP BY doc_id)
-         |SELECT doc_id, CAST($bits AS BIGINT) AS simhash
-         |FROM s ORDER BY doc_id""".stripMargin
-    },
-
-    // Exact global-top-20 cosine pairs, two-stage for sf1 scale: native
-    // fp32 cosine pre-filter keeps everything within 1e-4 of the 200th
-    // approx score (threshold-based, NOT LIMIT-based — exact-duplicate
-    // pairs all sit at cos=1.0 within fp32 noise of each other, and a
-    // hard top-200 heap could drop the (i,j)-smallest ones the exact
-    // rank keeps), then the exact fp64 formula re-scores survivors.
-    "dedup_embedding_cosine" ->
-      """WITH a AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS arr FROM embeddings),
-        |approx AS (
-        |  SELECT x.vec_id AS i, y.vec_id AS j, array_cosine_similarity(x.arr, y.arr) AS ascore
-        |  FROM a x JOIN a y ON x.vec_id < y.vec_id),
-        |thr AS (SELECT MIN(ascore) AS t FROM (SELECT ascore FROM approx ORDER BY ascore DESC LIMIT 200)),
-        |cand AS (SELECT i, j FROM approx
-        |  WHERE ascore >= (SELECT t FROM thr) - (1e-4 + ABS((SELECT t FROM thr)) * 1e-5)),
-        |p AS (SELECT c.i, c.j,
-        |  list_sum(list_transform(list_zip(x.embedding, y.embedding),
-        |    t -> CAST(t[1] AS DOUBLE) * CAST(t[2] AS DOUBLE))) /
-        |  (SQRT(list_sum(list_transform(x.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))) *
-        |   SQRT(list_sum(list_transform(y.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))) AS cos
-        |  FROM cand c JOIN a x ON c.i = x.vec_id JOIN a y ON c.j = y.vec_id),
-        |r AS (SELECT i, j, cos, row_number() OVER (ORDER BY cos DESC, i, j) AS rn FROM p)
-        |SELECT rn, i, j, FLOOR(cos * 1000000.0 + 0.5) / 1000000.0 AS cos
-        |FROM r WHERE rn <= 20
-        |ORDER BY rn""".stripMargin,
-
-    "ann_ivf" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc0 AS (SELECT v0.vec_id, c.cid, array_distance(v0.varr, c.carr) AS ad
-        |  FROM v0, c),
-        |amin0 AS (SELECT vec_id, MIN(ad) AS m FROM avc0 GROUP BY vec_id),
-        |vcand0 AS (SELECT a.vec_id, a.cid FROM avc0 a
-        |  JOIN amin0 ON a.vec_id = amin0.vec_id
-        |  WHERE a.ad <= amin0.m * 1.00001 + 1e-3),
-        |vc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM vcand0 w JOIN v0 v ON w.vec_id = v.vec_id JOIN c ON w.cid = c.cid)
-        |  GROUP BY 1, 2),
-        |vassign AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vc) WHERE rn = 1),
-        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |qc AS (SELECT qid, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT q.qid, c.cid,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM q, c) GROUP BY 1, 2),
-        |probes AS (SELECT qid, cid FROM (
-        |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY d, cid) AS rn
-        |  FROM qc) WHERE rn <= 2),
-        |cand AS (SELECT p.qid, a.vec_id AS label FROM probes p JOIN vassign a ON p.cid = a.cid),
-        |d AS (SELECT qid, label, SUM((x-y)*(x-y)) AS score FROM (
-        |  SELECT cand.qid, cand.label,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(v.embedding) AS DOUBLE) AS y
-        |  FROM cand JOIN q ON cand.qid = q.qid
-        |  JOIN embeddings v ON cand.label = v.vec_id) GROUP BY 1, 2),
-        |ranked AS (SELECT qid, label, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank FROM d)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    // ann_ivf's CTEs with the candidate scan over int8-DEQUANTIZED vectors:
-    // scale = max|x|/127, code = floor(x/scale + 0.5), decode =
-    // float(code·scale) — the exact arithmetic of QuantizeVectorInt8/
-    // DequantizeVectorInt8, so the composite hash-matches
-    "ann_ivf_sq8" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc0 AS (SELECT v0.vec_id, c.cid, array_distance(v0.varr, c.carr) AS ad
-        |  FROM v0, c),
-        |amin0 AS (SELECT vec_id, MIN(ad) AS m FROM avc0 GROUP BY vec_id),
-        |vcand0 AS (SELECT a.vec_id, a.cid FROM avc0 a
-        |  JOIN amin0 ON a.vec_id = amin0.vec_id
-        |  WHERE a.ad <= amin0.m * 1.00001 + 1e-3),
-        |vc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM vcand0 w JOIN v0 v ON w.vec_id = v.vec_id JOIN c ON w.cid = c.cid)
-        |  GROUP BY 1, 2),
-        |vassign AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vc) WHERE rn = 1),
-        |sc AS (SELECT vec_id,
-        |  list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
-        |  FROM embeddings),
-        |deq AS (SELECT e.vec_id, list_transform(e.embedding, x ->
-        |    CAST(CAST(CASE WHEN s.scale > 0
-        |      THEN floor(CAST(x AS DOUBLE) / s.scale + 0.5) * s.scale
-        |      ELSE 0.0 END AS REAL) AS DOUBLE)) AS dv
-        |  FROM embeddings e JOIN sc s ON e.vec_id = s.vec_id),
-        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |qc AS (SELECT qid, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT q.qid, c.cid,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM q, c) GROUP BY 1, 2),
-        |probes AS (SELECT qid, cid FROM (
-        |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY d, cid) AS rn
-        |  FROM qc) WHERE rn <= 2),
-        |cand AS (SELECT p.qid, a.vec_id AS label FROM probes p JOIN vassign a ON p.cid = a.cid),
-        |d AS (SELECT qid, label, SUM((x-y)*(x-y)) AS score FROM (
-        |  SELECT cand.qid, cand.label,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, UNNEST(v.dv) AS y
-        |  FROM cand JOIN q ON cand.qid = q.qid
-        |  JOIN deq v ON cand.label = v.vec_id) GROUP BY 1, 2),
-        |ranked AS (SELECT qid, label, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank FROM d)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    // exact-kNN + ann_ivf CTEs joined into the metric table
-    "q_eval_recall_mrr" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |ed AS (SELECT qid, label, SUM((x-y)*(x-y)) AS score FROM (
-        |  SELECT q.qid, e.vec_id AS label,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(e.embedding) AS DOUBLE) AS y
-        |  FROM q CROSS JOIN embeddings e) GROUP BY 1, 2),
-        |er AS (SELECT qid, label,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS erank FROM ed),
-        |e10 AS (SELECT * FROM er WHERE erank <= 10),
-        |c AS (SELECT vec_id AS cid, embedding AS cv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc0 AS (SELECT v0.vec_id, c.cid, array_distance(v0.varr, c.carr) AS ad
-        |  FROM v0, c),
-        |amin0 AS (SELECT vec_id, MIN(ad) AS m FROM avc0 GROUP BY vec_id),
-        |vcand0 AS (SELECT a.vec_id, a.cid FROM avc0 a
-        |  JOIN amin0 ON a.vec_id = amin0.vec_id
-        |  WHERE a.ad <= amin0.m * 1.00001 + 1e-3),
-        |vc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM vcand0 w JOIN v0 v ON w.vec_id = v.vec_id JOIN c ON w.cid = c.cid)
-        |  GROUP BY 1, 2),
-        |vassign AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vc) WHERE rn = 1),
-        |qc AS (SELECT qid, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT q.qid, c.cid,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM q, c) GROUP BY 1, 2),
-        |probes AS (SELECT qid, cid FROM (
-        |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY d, cid) AS rn
-        |  FROM qc) WHERE rn <= 2),
-        |cand AS (SELECT p.qid, a.vec_id AS label FROM probes p JOIN vassign a ON p.cid = a.cid),
-        |ad AS (SELECT qid, label, SUM((x-y)*(x-y)) AS score FROM (
-        |  SELECT cand.qid, cand.label,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(v.embedding) AS DOUBLE) AS y
-        |  FROM cand JOIN q ON cand.qid = q.qid
-        |  JOIN embeddings v ON cand.label = v.vec_id) GROUP BY 1, 2),
-        |ar AS (SELECT qid, label,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS arank FROM ad),
-        |a10 AS (SELECT * FROM ar WHERE arank <= 10),
-        |common AS (SELECT e10.qid, e10.label, e10.erank, a10.arank
-        |           FROM e10 JOIN a10 ON e10.qid = a10.qid AND e10.label = a10.label),
-        |rec AS (SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_common FROM common GROUP BY 1),
-        |m AS (SELECT qid, 1.0 / arank AS rr FROM common WHERE erank = 1)
-        |SELECT q.qid, COALESCE(rec.n_common, 0) AS n_common,
-        |  CAST(FLOOR(CAST(COALESCE(rec.n_common, 0) AS DOUBLE) / 10.0
-        |    * 10000.0 + 0.5) AS BIGINT) AS recall_at_10_e4,
-        |  CAST(FLOOR(COALESCE(m.rr, 0.0) * 10000.0 + 0.5) AS BIGINT) AS mrr_e4
-        |FROM q LEFT JOIN rec ON q.qid = rec.qid LEFT JOIN m ON q.qid = m.qid
-        |ORDER BY q.qid""".stripMargin,
-
-    "q_eval_ndcg" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |ed AS (SELECT qid, label, SUM((x-y)*(x-y)) AS score FROM (
-        |  SELECT q.qid, e.vec_id AS label,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(e.embedding) AS DOUBLE) AS y
-        |  FROM q CROSS JOIN embeddings e) GROUP BY 1, 2),
-        |er AS (SELECT qid, label,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS erank FROM ed),
-        |e10 AS (SELECT * FROM er WHERE erank <= 10),
-        |c AS (SELECT vec_id AS cid, embedding AS cv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc AS (SELECT v0.vec_id, c.cid, array_distance(v0.varr, c.carr) AS adist
-        |  FROM v0, c),
-        |amin AS (SELECT vec_id, MIN(adist) AS m FROM avc GROUP BY vec_id),
-        |vcand AS (SELECT a.vec_id, a.cid FROM avc a
-        |  JOIN amin ON a.vec_id = amin.vec_id
-        |  WHERE a.adist <= amin.m * 1.00001 + 1e-3),
-        |vc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM vcand w JOIN v0 v ON w.vec_id = v.vec_id JOIN c ON w.cid = c.cid)
-        |  GROUP BY 1, 2),
-        |vassign AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vc) WHERE rn = 1),
-        |qc AS (SELECT qid, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT q.qid, c.cid,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM q, c) GROUP BY 1, 2),
-        |probes AS (SELECT qid, cid FROM (
-        |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY d, cid) AS rn
-        |  FROM qc) WHERE rn <= 2),
-        |cand AS (SELECT p.qid, a.vec_id AS label FROM probes p JOIN vassign a ON p.cid = a.cid),
-        |ad AS (SELECT qid, label, SUM((x-y)*(x-y)) AS score FROM (
-        |  SELECT cand.qid, cand.label,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(v.embedding) AS DOUBLE) AS y
-        |  FROM cand JOIN q ON cand.qid = q.qid
-        |  JOIN embeddings v ON cand.label = v.vec_id) GROUP BY 1, 2),
-        |ar AS (SELECT qid, label,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS arank FROM ad),
-        |a10 AS (SELECT * FROM ar WHERE arank <= 10),
-        |rel AS (SELECT a10.qid, a10.arank,
-        |  COALESCE(11 - e10.erank, 0) AS rel
-        |  FROM a10 LEFT JOIN e10 ON a10.qid = e10.qid AND a10.label = e10.label),
-        |w(arank, w_e6) AS (VALUES (1, 1000000), (2, 630930), (3, 500000),
-        |  (4, 430677), (5, 386853), (6, 356207), (7, 333333), (8, 315465),
-        |  (9, 301030), (10, 289065)),
-        |dg AS (SELECT rel.qid, SUM(rel.rel * w.w_e6) AS dcg
-        |  FROM rel JOIN w ON rel.arank = w.arank GROUP BY 1)
-        |SELECT q.qid, CAST(COALESCE(dg.dcg, 0) AS BIGINT) AS dcg_e6,
-        |  CAST((COALESCE(dg.dcg, 0) * 1000000) // 29966114 AS BIGINT) AS ndcg_e6
-        |FROM q LEFT JOIN dg ON q.qid = dg.qid
-        |ORDER BY q.qid""".stripMargin,
-
-    // ann_ivf_sq8's CTEs with the SQ4 grid: scale = max|x|/7, code =
-    // floor(x/scale + 0.5), decode = float(code·scale)
-    "ann_ivf_sq4" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc0 AS (SELECT v0.vec_id, c.cid, array_distance(v0.varr, c.carr) AS ad
-        |  FROM v0, c),
-        |amin0 AS (SELECT vec_id, MIN(ad) AS m FROM avc0 GROUP BY vec_id),
-        |vcand0 AS (SELECT a.vec_id, a.cid FROM avc0 a
-        |  JOIN amin0 ON a.vec_id = amin0.vec_id
-        |  WHERE a.ad <= amin0.m * 1.00001 + 1e-3),
-        |vc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM vcand0 w JOIN v0 v ON w.vec_id = v.vec_id JOIN c ON w.cid = c.cid)
-        |  GROUP BY 1, 2),
-        |vassign AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vc) WHERE rn = 1),
-        |sc AS (SELECT vec_id,
-        |  list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 7.0 AS scale
-        |  FROM embeddings),
-        |deq AS (SELECT e.vec_id, list_transform(e.embedding, x ->
-        |    CAST(CAST(CASE WHEN s.scale > 0
-        |      THEN floor(CAST(x AS DOUBLE) / s.scale + 0.5) * s.scale
-        |      ELSE 0.0 END AS REAL) AS DOUBLE)) AS dv
-        |  FROM embeddings e JOIN sc s ON e.vec_id = s.vec_id),
-        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |qc AS (SELECT qid, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT q.qid, c.cid,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM q, c) GROUP BY 1, 2),
-        |probes AS (SELECT qid, cid FROM (
-        |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY d, cid) AS rn
-        |  FROM qc) WHERE rn <= 2),
-        |cand AS (SELECT p.qid, a.vec_id AS label FROM probes p JOIN vassign a ON p.cid = a.cid),
-        |d AS (SELECT qid, label, SUM((x-y)*(x-y)) AS score FROM (
-        |  SELECT cand.qid, cand.label,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, UNNEST(v.dv) AS y
-        |  FROM cand JOIN q ON cand.qid = q.qid
-        |  JOIN deq v ON cand.label = v.vec_id) GROUP BY 1, 2),
-        |ranked AS (SELECT qid, label, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank FROM d)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    // same CTEs as ann_ivf with the predicate applied to the candidate
-    // set (search-time filtering), not to the index build
-    "ann_ivf_filtered" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc0 AS (SELECT v0.vec_id, c.cid, array_distance(v0.varr, c.carr) AS ad
-        |  FROM v0, c),
-        |amin0 AS (SELECT vec_id, MIN(ad) AS m FROM avc0 GROUP BY vec_id),
-        |vcand0 AS (SELECT a.vec_id, a.cid FROM avc0 a
-        |  JOIN amin0 ON a.vec_id = amin0.vec_id
-        |  WHERE a.ad <= amin0.m * 1.00001 + 1e-3),
-        |vc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM vcand0 w JOIN v0 v ON w.vec_id = v.vec_id JOIN c ON w.cid = c.cid)
-        |  GROUP BY 1, 2),
-        |vassign AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vc) WHERE rn = 1),
-        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |qc AS (SELECT qid, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT q.qid, c.cid,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM q, c) GROUP BY 1, 2),
-        |probes AS (SELECT qid, cid FROM (
-        |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY d, cid) AS rn
-        |  FROM qc) WHERE rn <= 2),
-        |cand AS (SELECT p.qid, a.vec_id AS label FROM probes p
-        |  JOIN vassign a ON p.cid = a.cid WHERE a.vec_id % 3 <> 0),
-        |d AS (SELECT qid, label, SUM((x-y)*(x-y)) AS score FROM (
-        |  SELECT cand.qid, cand.label,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(v.embedding) AS DOUBLE) AS y
-        |  FROM cand JOIN q ON cand.qid = q.qid
-        |  JOIN embeddings v ON cand.label = v.vec_id) GROUP BY 1, 2),
-        |ranked AS (SELECT qid, label, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank FROM d)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    // PQ: per-subspace argmin assignment (codes) + ADC scoring, both as
-    // exact double arithmetic; parallel UNNESTs zip in lockstep so the
-    // element index (→ subspace j = i // 8) rides alongside the values.
-    // Scores round to 1e-6 BEFORE ranking on both sides (fp64 sum-order
-    // ulps must not flip near-ties between engines).
-    // r17 (100×-feasible pq oracle): the per-subspace assignment mirrors
-    // PqEncode BIT-EXACTLY — each 8-dim distance is the explicit
-    // left-associated fp64 term sum (the identical IEEE tree PqEncode's
-    // sequential loop evaluates), so the argmin needs no guard band and
-    // no arbitrary-order SUM; the 256-entry codebook cap (vec_id < 6400)
-    // keeps the vd CTE LINEAR in corpus size (the old per-(vector,
-    // centroid, dim) UNNEST was quadratic — the pq-family 100× wall).
-    "ann_pq" -> {
-      val diffs = (1 to 8).map(t =>
-        s"CAST(v.embedding[j.jj*8+$t] AS DOUBLE) - CAST(pc.cv[j.jj*8+$t] AS DOUBLE) AS dx$t")
-        .mkString(",\n      ")
-      val ssum = (1 to 8).map(t => s"dx$t*dx$t").mkString(" + ")
-      s"""WITH pc AS MATERIALIZED (
-        |  SELECT CAST(vec_id // 25 AS BIGINT) AS ci, embedding AS cv
-        |  FROM embeddings WHERE vec_id % 25 = 0 AND vec_id < 6400),
-        |j AS (SELECT CAST(UNNEST(range(8)) AS BIGINT) AS jj),
-        |vd AS MATERIALIZED (
-        |  SELECT vec_id, ci, jj, $ssum AS d FROM (
-        |    SELECT v.vec_id, pc.ci, j.jj,
-        |      $diffs
-        |    FROM embeddings v, pc, j)),
-        |mn AS (SELECT vec_id, jj, MIN(d) AS md FROM vd GROUP BY 1, 2),
-        |assign AS (SELECT vd.vec_id, vd.jj AS j, MIN(vd.ci) AS ci
-        |  FROM vd JOIN mn ON vd.vec_id = mn.vec_id AND vd.jj = mn.jj
-        |    AND vd.d = mn.md
-        |  GROUP BY 1, 2),
-        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |qd AS (SELECT qid, i // 8 AS j, ci, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT q.qid, pc.ci, UNNEST(range(len(q.qv))) AS i,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(pc.cv) AS DOUBLE) AS y
-        |  FROM q, pc) GROUP BY 1, 2, 3),
-        |score AS (SELECT qd.qid, a.vec_id AS label,
-        |    FLOOR(SUM(qd.d) * 1000000.0 + 0.5) / 1000000.0 AS score
-        |  FROM assign a JOIN qd ON qd.j = a.j AND qd.ci = a.ci
-        |  GROUP BY 1, 2),
-        |ranked AS (SELECT qid, label, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank FROM score)
-        |SELECT qid, rank, label, score AS dist
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin
-    },
-
-    // IVFPQ = ann_ivf's coarse assignment/probes ∘ ann_pq's codes/ADC:
-    // candidates come from the probed clusters only, scores from the codes
-    // r17 (100×-feasible): coarse assignment takes ann_ivf's
-    // magnitude-relative fp32 guard-band prefilter (band only ADDS
-    // candidates to the exact rescore — hashes never move); the PQ half
-    // is ann_pq's capped-codebook explicit-term form. Both CTE families
-    // are linear in corpus size.
-    "ann_ivfpq" -> {
-      val diffs = (1 to 8).map(t =>
-        s"CAST(v.embedding[j.jj*8+$t] AS DOUBLE) - CAST(pc.cv[j.jj*8+$t] AS DOUBLE) AS dx$t")
-        .mkString(",\n      ")
-      val ssum = (1 to 8).map(t => s"dx$t*dx$t").mkString(" + ")
-      s"""WITH cc AS (SELECT vec_id AS cid, embedding AS ccv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc0 AS (SELECT v0.vec_id, cc.cid, array_distance(v0.varr, cc.carr) AS ad
-        |  FROM v0, cc),
-        |amin0 AS (SELECT vec_id, MIN(ad) AS m FROM avc0 GROUP BY vec_id),
-        |vcand0 AS (SELECT a.vec_id, a.cid FROM avc0 a
-        |  JOIN amin0 ON a.vec_id = amin0.vec_id
-        |  WHERE a.ad <= amin0.m * 1.00001 + 1e-3),
-        |vcc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(cc.ccv) AS DOUBLE) AS y
-        |  FROM vcand0 w JOIN v0 v ON w.vec_id = v.vec_id JOIN cc ON w.cid = cc.cid)
-        |  GROUP BY 1, 2),
-        |vassign AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vcc) WHERE rn = 1),
-        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |qcc AS (SELECT qid, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT q.qid, cc.cid,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(cc.ccv) AS DOUBLE) AS y
-        |  FROM q, cc) GROUP BY 1, 2),
-        |probes AS (SELECT qid, cid FROM (
-        |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY d, cid) AS rn
-        |  FROM qcc) WHERE rn <= 2),
-        |pc AS MATERIALIZED (
-        |  SELECT CAST(vec_id // 25 AS BIGINT) AS ci, embedding AS cv
-        |  FROM embeddings WHERE vec_id % 25 = 0 AND vec_id < 6400),
-        |j AS (SELECT CAST(UNNEST(range(8)) AS BIGINT) AS jj),
-        |vd AS MATERIALIZED (
-        |  SELECT vec_id, ci, jj, $ssum AS d FROM (
-        |    SELECT v.vec_id, pc.ci, j.jj,
-        |      $diffs
-        |    FROM embeddings v, pc, j)),
-        |mn AS (SELECT vec_id, jj, MIN(d) AS md FROM vd GROUP BY 1, 2),
-        |assign AS (SELECT vd.vec_id, vd.jj AS j, MIN(vd.ci) AS ci
-        |  FROM vd JOIN mn ON vd.vec_id = mn.vec_id AND vd.jj = mn.jj
-        |    AND vd.d = mn.md
-        |  GROUP BY 1, 2),
-        |qd AS (SELECT qid, i // 8 AS j, ci, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT q.qid, pc.ci, UNNEST(range(len(q.qv))) AS i,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(pc.cv) AS DOUBLE) AS y
-        |  FROM q, pc) GROUP BY 1, 2, 3),
-        |cand AS (SELECT p.qid, a.vec_id AS label
-        |         FROM probes p JOIN vassign a ON p.cid = a.cid),
-        |score AS (SELECT c.qid, c.label,
-        |    FLOOR(SUM(qd.d) * 1000000.0 + 0.5) / 1000000.0 AS score
-        |  FROM cand c
-        |  JOIN assign a ON a.vec_id = c.label
-        |  JOIN qd ON qd.qid = c.qid AND qd.j = a.j AND qd.ci = a.ci
-        |  GROUP BY 1, 2),
-        |ranked AS (SELECT qid, label, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank FROM score)
-        |SELECT qid, rank, label, score AS dist
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin
-    },
-
-    // sign-bit words rebuilt with exact integer arithmetic (63 bits/word
-    // keeps every power of two in a signed BIGINT); hamming = popcount of
-    // xor per word — integer-exact in both engines
-    "ann_hamming" ->
-      """WITH el AS (SELECT vec_id, UNNEST(range(len(embedding))) AS i,
-        |  CAST(UNNEST(embedding) AS DOUBLE) AS x FROM embeddings),
-        |w AS (SELECT vec_id, i // 63 AS j,
-        |  CAST(SUM(CASE WHEN x > 0 THEN (CAST(1 AS BIGINT) << CAST(i % 63 AS INT))
-        |           ELSE 0 END) AS BIGINT) AS word
-        |  FROM el GROUP BY 1, 2),
-        |h AS (SELECT qw.vec_id AS qid, vw.vec_id AS label,
-        |  CAST(SUM(bit_count(xor(qw.word, vw.word))) AS BIGINT) AS hd
-        |  FROM w qw JOIN w vw ON qw.j = vw.j
-        |  WHERE qw.vec_id < 8
-        |  GROUP BY 1, 2),
-        |ranked AS (SELECT qid, label, hd,
-        |  row_number() OVER (PARTITION BY qid ORDER BY hd, label) AS rank FROM h)
-        |SELECT qid, rank, label, hd AS hamming
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    // hamming shortlist (top-40 by integer hamming, exact) → fp32 L2
-    // rerank of just those rows; ROUND(,4) as in the other knn oracles
-    "ann_hamming_rerank" ->
-      """WITH el AS (SELECT vec_id, UNNEST(range(len(embedding))) AS i,
-        |  CAST(UNNEST(embedding) AS DOUBLE) AS x FROM embeddings),
-        |w AS (SELECT vec_id, i // 63 AS j,
-        |  CAST(SUM(CASE WHEN x > 0 THEN (CAST(1 AS BIGINT) << CAST(i % 63 AS INT))
-        |           ELSE 0 END) AS BIGINT) AS word
-        |  FROM el GROUP BY 1, 2),
-        |h AS (SELECT qw.vec_id AS qid, vw.vec_id AS label,
-        |  CAST(SUM(bit_count(xor(qw.word, vw.word))) AS BIGINT) AS hd
-        |  FROM w qw JOIN w vw ON qw.j = vw.j
-        |  WHERE qw.vec_id < 8
-        |  GROUP BY 1, 2),
-        |short AS (SELECT qid, label FROM (
-        |  SELECT qid, label, row_number() OVER (PARTITION BY qid ORDER BY hd, label) AS rn
-        |  FROM h) WHERE rn <= 40),
-        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |d AS (SELECT qid, label, SUM((x-y)*(x-y)) AS score FROM (
-        |  SELECT s.qid, s.label,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(v.embedding) AS DOUBLE) AS y
-        |  FROM short s JOIN q ON s.qid = q.qid
-        |  JOIN embeddings v ON s.label = v.vec_id) GROUP BY 1, 2),
-        |ranked AS (SELECT qid, label, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank FROM d)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    // greedy MMR as a recursive CTE: state = (qid, rank, selected list);
-    // each step's LATERAL picks the remaining candidate maximizing
-    // 0.5·rel − 0.5·max-sim-to-selected (exact arithmetic on round6
-    // inputs; ties → min id). Matches mapGroups greedy step for step.
-    "ann_mmr" ->
-      """WITH RECURSIVE
-        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |qc AS (SELECT qid, id,
-        |    FLOOR(cos * 1000000.0 + 0.5) / 1000000.0 AS rel FROM (
-        |  SELECT t.qid, t.id,
-        |    SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))) AS cos
-        |  FROM (SELECT q.qid, v.vec_id AS id,
-        |          CAST(UNNEST(q.qv) AS DOUBLE) AS x,
-        |          CAST(UNNEST(v.embedding) AS DOUBLE) AS y
-        |        FROM q, embeddings v) t
-        |  GROUP BY 1, 2) WHERE NOT isnan(cos)),
-        |cand AS (SELECT qid, id, rel FROM (
-        |  SELECT qid, id, rel, row_number() OVER (PARTITION BY qid ORDER BY rel DESC, id) AS rn
-        |  FROM qc) WHERE rn <= 20),
-        |cc AS (SELECT qid, ia, ib,
-        |    FLOOR(cos * 1000000.0 + 0.5) / 1000000.0 AS sim FROM (
-        |  SELECT t.qid, t.ia, t.ib,
-        |    SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))) AS cos
-        |  FROM (SELECT a.qid, a.id AS ia, b.id AS ib,
-        |          CAST(UNNEST(va.embedding) AS DOUBLE) AS x,
-        |          CAST(UNNEST(vb.embedding) AS DOUBLE) AS y
-        |        FROM cand a JOIN cand b ON a.qid = b.qid
-        |        JOIN embeddings va ON va.vec_id = a.id
-        |        JOIN embeddings vb ON vb.vec_id = b.id) t
-        |  GROUP BY 1, 2, 3)),
-        |mmr AS (
-        |  SELECT qid, 1 AS rank, [id] AS sel, id, rel AS score FROM (
-        |    SELECT qid, id, rel, row_number() OVER (PARTITION BY qid ORDER BY rel DESC, id) AS rn
-        |    FROM cand) WHERE rn = 1
-        |  UNION ALL
-        |  SELECT m.qid, m.rank + 1, list_append(m.sel, p.id), p.id, p.score
-        |  FROM mmr m, LATERAL (
-        |    SELECT c.id, 0.5 * c.rel - 0.5 * ms.mx AS score
-        |    FROM cand c
-        |    JOIN LATERAL (SELECT MAX(cc.sim) AS mx FROM cc
-        |                  WHERE cc.qid = m.qid AND cc.ia = c.id
-        |                    AND list_contains(m.sel, cc.ib)) ms ON TRUE
-        |    WHERE c.qid = m.qid AND NOT list_contains(m.sel, c.id)
-        |    ORDER BY score DESC, c.id LIMIT 1) p
-        |  WHERE m.rank < 5)
-        |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score
-        |FROM mmr ORDER BY qid, rank""".stripMargin,
-
-    "q_salted_agg" ->
-      """SELECT l_returnflag,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  COUNT(*) AS n_rows
-        |FROM lineitem
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q_salted_join" ->
-      """SELECT CAST(s_nationkey AS BIGINT) AS nationkey, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE l_quantity >= 45
-        |GROUP BY s_nationkey
-        |ORDER BY nationkey""".stripMargin,
-
-    "q_events_retention" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events),
-        |f AS (SELECT user_id, MIN(d) AS cohort_day FROM e GROUP BY user_id),
-        |a AS (SELECT DISTINCT user_id, d FROM e)
-        |SELECT cohort_day,
-        |  COUNT(DISTINCT a.user_id) AS n_users,
-        |  COUNT(DISTINCT CASE WHEN a.d = f.cohort_day + INTERVAL 1 DAY THEN a.user_id END) AS d1_retained,
-        |  COUNT(DISTINCT CASE WHEN a.d = f.cohort_day + INTERVAL 7 DAY THEN a.user_id END) AS d7_retained
-        |FROM f JOIN a ON f.user_id = a.user_id
-        |GROUP BY cohort_day
-        |ORDER BY cohort_day""".stripMargin,
-
-    "text_quality" ->
-      """SELECT doc_id,
-        |  len(string_split(text,' ')) AS n_tokens,
-        |  len(list_distinct(string_split(text,' '))) AS n_distinct,
-        |  length(text) AS n_chars,
-        |  CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE) /
-        |    CAST(len(string_split(text,' ')) AS DOUBLE) AS type_token_ratio,
-        |  CAST(length(text) - (len(string_split(text,' ')) - 1) AS DOUBLE) /
-        |    CAST(len(string_split(text,' ')) AS DOUBLE) AS avg_token_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // decile buckets of the same ttr; 6-dp element quantization into
-    // DECIMAL sums, then the identical IEEE post-aggregate tree
-    "q_calibration" ->
-      """WITH q AS (SELECT
-        |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE) /
-        |      CAST(len(string_split(text,' ')) AS DOUBLE) AS ttr
-        |  FROM documents),
-        |g AS (SELECT LEAST(CAST(FLOOR(ttr * 10.0) AS BIGINT), 9) AS bucket,
-        |    COUNT(*) AS n,
-        |    SUM(CAST(FLOOR(ttr * 1000000.0 + 0.5) AS BIGINT)) AS ss,
-        |    SUM(CASE WHEN n_tokens <= 48 THEN 1 ELSE 0 END) AS sy
-        |  FROM q GROUP BY 1),
-        |t AS (SELECT SUM(n) AS n_all FROM g),
-        |w AS (SELECT bucket, n,
-        |  CAST((2 * ss + n) // (2 * n) AS BIGINT) AS avg_score_e6,
-        |  CAST((2 * sy * 1000000 + n) // (2 * n) AS BIGINT) AS pos_rate_e6,
-        |  n_all FROM g, t)
-        |SELECT bucket, n, avg_score_e6, pos_rate_e6,
-        |  ABS(avg_score_e6 - pos_rate_e6) AS abs_gap_e6,
-        |  CAST((2 * n * ABS(avg_score_e6 - pos_rate_e6) + n_all)
-        |    // (2 * n_all) AS BIGINT) AS ece_contrib_e6
-        |FROM w
-        |ORDER BY bucket""".stripMargin,
-
-    "text_langid" -> {
-      val dicts = TextAnalysis.stopwords.map { case (code, words) =>
-        val arr = words.map(w => s"'$w'").mkString("[", ",", "]")
-        s"len(list_intersect(list_distinct(string_split(text,' ')), $arr)) AS $code"
-      }.mkString(",\n  ")
-      """WITH s AS (SELECT doc_id,
-        |  DICTS
-        |FROM documents)
-        |SELECT doc_id, CASE WHEN greatest(de,en,es,fr,zh) = 0 THEN 'und'
-        |  WHEN de >= en AND de >= es AND de >= fr AND de >= zh THEN 'de'
-        |  WHEN en >= es AND en >= fr AND en >= zh THEN 'en'
-        |  WHEN es >= fr AND es >= zh THEN 'es'
-        |  WHEN fr >= zh THEN 'fr' ELSE 'zh' END AS pred_lang
-        |FROM s ORDER BY doc_id""".stripMargin.replace("DICTS", dicts)
-    },
-
-    "text_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(array_to_string(list_sort(list_distinct(string_split(text,' '))), ' ')) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "text_bpe_tokens" ->
-      """SELECT doc_id,
-        |  CAST(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'),
-        |    x -> len(x) > 0)) AS BIGINT) AS n_bpe_tokens
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_repetition" -> {
-      def gramExpr(n: Int) = (0 until n).map(o => s"w[i+$o]").mkString("||' '||")
-      def ctes(n: Int) =
-        s"""g$n AS (SELECT doc_id,
-           |  UNNEST(list_transform(range(1, len(w) - ${n - 2}), i -> ${gramExpr(n)})) AS g FROM t),
-           |c$n AS (SELECT doc_id, g, COUNT(*) AS c FROM g$n GROUP BY 1, 2),
-           |b$n AS (SELECT doc_id, g, c FROM (SELECT doc_id, g, c,
-           |    row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, g) AS rn
-           |  FROM c$n) WHERE rn = 1)""".stripMargin
-      def cols(n: Int) =
-        s"""COALESCE(b$n.g, '') AS top${n}_gram,
-           |  ROUND(COALESCE(b$n.c * length(b$n.g) / CAST(t.nc AS DOUBLE), 0.0), 6) AS top${n}_frac""".stripMargin
-      s"""WITH t AS (SELECT doc_id, length(text) AS nc, string_split(text, ' ') AS w
-         |  FROM documents),
-         |${ctes(2)},
-         |${ctes(3)},
-         |${ctes(4)}
-         |SELECT t.doc_id, ${cols(2)}, ${cols(3)}, ${cols(4)}
-         |FROM t
-         |LEFT JOIN b2 ON t.doc_id = b2.doc_id
-         |LEFT JOIN b3 ON t.doc_id = b3.doc_id
-         |LEFT JOIN b4 ON t.doc_id = b4.doc_id
-         |ORDER BY t.doc_id""".stripMargin
-    },
-
-    // verdict-pattern oracle (cf. q_heavy_hitters): n_pretok is exact
-    // SQL; the BPE-specific columns are invariants the Spark side
-    // computes for real and the oracle asserts
-    "text_bpe_real" ->
-      """WITH p AS (SELECT doc_id,
-        |  list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'),
-        |    x -> len(x) > 0) AS p
-        |  FROM documents)
-        |SELECT doc_id, CAST(len(p) AS BIGINT) AS n_pretok,
-        |  TRUE AS roundtrip_ok, TRUE AS bounds_ok, TRUE AS compressed
-        |FROM p
-        |ORDER BY doc_id""".stripMargin,
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_orders
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q10_returned_revenue" ->
-      """SELECT c_custkey, c_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY c_custkey, c_name
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-
-    "q18_large_orders" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-        |  CAST(tq AS DOUBLE) AS total_qty
-        |FROM orders JOIN (
-        |  SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS tq
-        |  FROM lineitem GROUP BY l_orderkey HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 200) t
-        |ON o_orderkey = l_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q21_waiting_supplier" ->
-      """SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-        |FROM lineitem l1
-        |JOIN orders ON o_orderkey = l1.l_orderkey AND o_orderstatus = 'F'
-        |JOIN supplier ON s_suppkey = l1.l_suppkey
-        |JOIN nation ON n_nationkey = s_nationkey AND n_nationkey <= 4
-        |WHERE l1.l_returnflag = 'R'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |      AND l3.l_returnflag = 'R')
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin,
-
-    "q20_excess_supply" ->
-      """WITH supply AS (
-        |  SELECT l_suppkey, l_partkey, CAST(l_quantity AS BIGINT) AS q
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-01-01'
-        |    AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')),
-        |per_supp AS (SELECT l_suppkey, l_partkey, SUM(q) AS sq
-        |  FROM supply GROUP BY 1, 2),
-        |per_part AS (SELECT l_partkey, SUM(q) AS tq FROM supply GROUP BY 1)
-        |SELECT s_name, n_name
-        |FROM supplier
-        |JOIN nation ON n_nationkey = s_nationkey AND n_nationkey <= 15
-        |WHERE s_suppkey IN (
-        |  SELECT ps.l_suppkey FROM per_supp ps
-        |  JOIN per_part pp ON ps.l_partkey = pp.l_partkey
-        |  WHERE ps.sq * 2 > pp.tq)
-        |ORDER BY s_name""".stripMargin,
-
-    "q22_dormant_customers" ->
-      """WITH band AS (SELECT * FROM customer WHERE c_nationkey <= 6),
-        |pos AS (SELECT CAST(COUNT(*) AS BIGINT) AS npos,
-        |    SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS sumpos
-        |  FROM band WHERE CAST(c_acctbal AS DECIMAL(18,2)) > 0)
-        |SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS numcust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |    AS totacctbal_cents
-        |FROM band, pos
-        |WHERE CAST(c_acctbal AS DECIMAL(18,2)) * npos > sumpos
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |    AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin,
-
-    "q13_order_histogram" ->
-      """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
-        |FROM (
-        |  SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS c_count
-        |  FROM customer
-        |  LEFT OUTER JOIN orders ON c_custkey = o_custkey
-        |    AND o_orderpriority NOT LIKE '4-%'
-        |  GROUP BY c_custkey)
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q19_disjunctive_revenue" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        |    * 10000 AS BIGINT) AS revenue_e4
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-        |       AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-        |       AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-    "q17_small_qty_revenue" ->
-      """WITH fact AS (SELECT l_partkey, CAST(l_quantity AS BIGINT) AS q,
-        |    l_extendedprice
-        |  FROM lineitem
-        |  WHERE l_partkey IN (SELECT p_partkey FROM part
-        |    WHERE p_brand = 'Brand#23')),
-        |pp AS (SELECT l_partkey AS pk, SUM(q) AS sumq,
-        |    CAST(COUNT(*) AS BIGINT) AS nq
-        |  FROM fact GROUP BY 1)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |    AS revenue_cents
-        |FROM fact JOIN pp ON l_partkey = pk
-        |WHERE q * 5 * nq < sumq""".stripMargin,
-
-    "q2_min_cost_supplier" ->
-      """WITH rs AS (SELECT s_suppkey, s_acctbal, s_name, n_name
-        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |    AND n_regionkey = 1),
-        |cost AS (SELECT l_partkey AS pk, l_suppkey AS sk,
-        |    MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS cost_cents
-        |  FROM lineitem
-        |  WHERE l_suppkey IN (SELECT s_suppkey FROM rs)
-        |    AND l_partkey IN (SELECT p_partkey FROM part WHERE p_size <= 5)
-        |  GROUP BY 1, 2),
-        |mc AS (SELECT pk, MIN(cost_cents) AS mcost FROM cost GROUP BY 1)
-        |SELECT CAST(ROUND(s_acctbal * 100) AS BIGINT) AS bal_cents,
-        |  s_name, n_name, pk AS p_partkey, cost_cents
-        |FROM cost JOIN mc USING (pk) JOIN rs ON sk = s_suppkey
-        |WHERE cost_cents = mcost
-        |ORDER BY bal_cents DESC, s_name, p_partkey, n_name, cost_cents
-        |LIMIT 100""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH rev AS (SELECT l_suppkey,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |      (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        |      * 10000 AS BIGINT) AS total_rev_e4
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, total_rev_e4
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_rev_e4 = (SELECT MAX(total_rev_e4) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q11_important_parts" ->
-      """WITH v AS (SELECT l_partkey,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |      (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        |      * 10000 AS HUGEINT) AS val
-        |  FROM lineitem
-        |  WHERE l_suppkey IN (SELECT s_suppkey FROM supplier
-        |    WHERE s_nationkey <= 3)
-        |  GROUP BY 1),
-        |t AS (SELECT SUM(val) AS tot, CAST(COUNT(*) AS HUGEINT) AS np FROM v)
-        |SELECT l_partkey, CAST(val AS BIGINT) AS value_e4
-        |FROM v, t
-        |WHERE val * np > tot * 2
-        |ORDER BY value_e4 DESC, l_partkey""".stripMargin,
-
-    "q16_supplier_count" ->
-      """SELECT p_brand, p_type, p_size,
-        |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO'
-        |  AND p_size IN (1, 4, 9, 16, 25, 36, 49)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-        |    WHERE CAST(s_acctbal AS DECIMAL(18,2)) < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-
-    "q9_product_type_profit" ->
-      """SELECT n_name, CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS yr,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |      (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        |      * 10000 AS HUGEINT)
-        |    - CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2)) *
-        |      CAST(l_quantity AS BIGINT)) * 1000 AS HUGEINT)
-        |    AS BIGINT) AS profit_e4,
-        |  CAST(COUNT(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE p_name LIKE '%rod'
-        |GROUP BY 1, 2
-        |ORDER BY n_name, yr DESC""".stripMargin,
-
-    "q12_late_lines" ->
-      """SELECT l_linestatus,
-        |  CAST(COUNT(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |    THEN 1 END) AS BIGINT) AS high_line_count,
-        |  CAST(COUNT(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-        |    THEN 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND date_diff('day', CAST(o_orderdate AS DATE),
-        |    CAST(l_shipdate AS DATE)) > 90
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q14_promo_revenue" ->
-      """WITH agg AS (SELECT
-        |    CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |      THEN CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |        (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-        |      ELSE CAST(0 AS DECIMAL(18,2)) END) * 10000 AS HUGEINT) AS pr,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |      (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        |      * 10000 AS HUGEINT) AS tr,
-        |    CAST(COUNT(*) AS BIGINT) AS n_lines
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1996-09-01'
-        |    AND l_shipdate < TIMESTAMP '1996-10-01')
-        |SELECT CAST((pr * 200000000 + tr) // (tr * 2) AS BIGINT) AS promo_pct_e6,
-        |  CAST(pr AS BIGINT) AS promo_rev_e4,
-        |  CAST(tr AS BIGINT) AS total_rev_e4,
-        |  n_lines
-        |FROM agg""".stripMargin,
-
-    "q_conditional_agg" ->
-      """SELECT o_orderstatus,
-        |  COUNT(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 END) AS n_high,
-        |  COUNT(CASE WHEN o_orderpriority = '5-LOW' THEN 1 END) AS n_low,
-        |  COUNT(*) AS n_total,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |    THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS high_revenue
-        |FROM orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-
-    "q_promo_share" ->
-      """SELECT
-        |  100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |      THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) END) AS DOUBLE)
-        |    / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-        |    AS promo_share,
-        |  COUNT(*) AS n_rows
-        |FROM lineitem JOIN part ON l_partkey = p_partkey""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(GROUPING(l_returnflag) AS BIGINT) AS g_rf,
-        |  CAST(GROUPING(l_linestatus) AS BIGINT) AS g_ls,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT o_orderpriority,
-        |  CAST(SUM(CASE WHEN o_orderstatus='F' THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS f_total,
-        |  CAST(SUM(CASE WHEN o_orderstatus='O' THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS o_total,
-        |  CAST(SUM(CASE WHEN o_orderstatus='P' THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS p_total
-        |FROM orders
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q_minmax_by" ->
-      """SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-        |  arg_max(c_custkey, c_acctbal - c_custkey * 1e-9) AS richest_cust,
-        |  MAX(c_acctbal) AS max_bal,
-        |  arg_min(c_custkey, c_acctbal + c_custkey * 1e-9) AS poorest_cust,
-        |  MIN(c_acctbal) AS min_bal
-        |FROM customer
-        |GROUP BY c_nationkey
-        |ORDER BY nationkey""".stripMargin,
-
-    "q_mode_by_group" ->
-      """WITH f AS (
-        |  SELECT date_trunc('month', o_orderdate)::DATE AS order_month,
-        |    o_orderpriority, COUNT(*) AS cnt
-        |  FROM orders GROUP BY 1, 2),
-        |r AS (
-        |  SELECT order_month, o_orderpriority, cnt,
-        |    row_number() OVER (PARTITION BY order_month
-        |      ORDER BY cnt DESC, o_orderpriority) AS rn,
-        |    SUM(cnt) OVER (PARTITION BY order_month) AS total
-        |  FROM f)
-        |SELECT order_month, o_orderpriority AS mode_priority, cnt AS mode_count,
-        |  CAST((cnt * 2000000 + total) // (total * 2) AS BIGINT) AS share_e6
-        |FROM r WHERE rn = 1
-        |ORDER BY order_month""".stripMargin,
-
-    "q_running_sum" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS running_spend,
-        |  COUNT(*) OVER w AS n_so_far
-        |FROM orders WHERE o_custkey <= 200
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |  ROWS UNBOUNDED PRECEDING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_moving_avg" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
-        |    / (COUNT(*) OVER w) AS avg3
-        |FROM orders WHERE o_custkey <= 200
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_rolling_median" ->
-      """WITH t AS (
-        |  SELECT o_custkey, o_orderkey,
-        |    list_sort(list(CAST(o_totalprice AS DECIMAL(18,2))) OVER w) AS win,
-        |    COUNT(*) OVER w AS nwin
-        |  FROM orders WHERE o_custkey <= 200
-        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-        |SELECT o_custkey, o_orderkey, CAST(win[4] AS DOUBLE) AS med7
-        |FROM t WHERE nwin = 7
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_rolling_median_stream" ->
-      """WITH t AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events WHERE user_id <= 100),
-        |wf AS (
-        |  SELECT user_id, event_id, ts_us,
-        |    list_sort(list(cents) OVER w) AS win,
-        |    COUNT(*) OVER w AS nwin
-        |  FROM t
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
-        |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-        |SELECT user_id, event_id, ts_us, win[4] AS med7_cents
-        |FROM wf WHERE nwin = 7
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q_mode_stream" ->
-      """WITH t AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type
-        |  FROM events WHERE user_id <= 100),
-        |r AS (SELECT user_id, event_id, ts_us, event_type,
-        |    COUNT(*) OVER (PARTITION BY user_id, event_type
-        |      ORDER BY ts_us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rc
-        |  FROM t),
-        |b AS (SELECT user_id, event_id, ts_us,
-        |    MIN(lpad(CAST(10000000000 - rc AS VARCHAR), 12, '0') || event_type)
-        |      OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS best
-        |  FROM r)
-        |SELECT user_id, event_id, ts_us,
-        |  substr(best, 13) AS mode_type,
-        |  CAST(10000000000 - CAST(substr(best, 1, 12) AS BIGINT) AS BIGINT)
-        |    AS mode_count
-        |FROM b ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q_benford_stream" ->
-      """WITH t AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CAST(substr(CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR), 1, 1)
-        |      AS BIGINT) AS digit
-        |  FROM events
-        |  WHERE user_id <= 100 AND CAST(value AS DECIMAL(18,2)) >= 1)
-        |SELECT user_id, event_id, ts_us, digit,
-        |  CAST(COUNT(*) OVER (PARTITION BY user_id, digit
-        |    ORDER BY ts_us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS digit_n,
-        |  CAST(COUNT(*) OVER (PARTITION BY user_id
-        |    ORDER BY ts_us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS n
-        |FROM t ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q_autocorr_stream" ->
-      """WITH t AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events WHERE user_id <= 100),
-        |l AS (SELECT *, lag(cents, 1)
-        |    OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS p FROM t)
-        |SELECT user_id, event_id, ts_us,
-        |  CAST(COUNT(*) OVER w AS BIGINT) AS n,
-        |  CAST(SUM(cents) OVER w AS BIGINT) AS s1,
-        |  CAST(SUM(cents * cents) OVER w AS BIGINT) AS s2,
-        |  CAST(SUM(COALESCE(cents * p, 0)) OVER w AS BIGINT) AS sl1
-        |FROM l
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q_cusum_stream" ->
-      """WITH t AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events WHERE user_id <= 100),
-        |r AS (SELECT SUM(cents) // COUNT(*) AS ref FROM t),
-        |p AS (SELECT user_id, event_id, ts_us,
-        |    SUM(cents - (SELECT ref FROM r)) OVER w AS ps
-        |  FROM t
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |m AS (SELECT user_id, event_id, ts_us, ps,
-        |    MIN(ps) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mn
-        |  FROM p)
-        |SELECT user_id, event_id, ts_us,
-        |  CAST(ps - LEAST(mn, 0) AS BIGINT) AS cusum
-        |FROM m ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q_ks_stream" -> {
-      val caseSums = (0 to 9).map(b =>
-        s"SUM(CASE WHEN bk <= $b THEN 1 ELSE 0 END) OVER w AS c$b").mkString(",\n    ")
-      val refs = (0 to 9).map(b =>
-        s"(SELECT COUNT(*) FROM e WHERE bk <= $b) AS r$b").mkString(",\n    ")
-      val gaps = (0 to 9).map(b => s"ABS(c$b * r.nref - r.r$b * c9)").mkString(",\n    ")
-      s"""WITH t AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         |    CAST(round(value * 100) AS BIGINT) AS cents
-         |  FROM events WHERE user_id <= 100),
-         |mm AS (SELECT MIN(cents) AS mn, MAX(cents) AS mx FROM t),
-         |e AS (SELECT t.*,
-         |    LEAST(((t.cents - mm.mn) * 10) // (mm.mx - mm.mn + 1), 9) AS bk
-         |  FROM t, mm),
-         |cums AS (SELECT user_id, event_id, ts_us,
-         |    $caseSums
-         |  FROM e
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |r AS (SELECT
-         |    $refs,
-         |    (SELECT COUNT(*) FROM e) AS nref)
-         |SELECT user_id, event_id, ts_us, CAST(c9 AS BIGINT) AS n,
-         |  CAST(GREATEST(
-         |    $gaps) AS BIGINT) AS ks_num
-         |FROM cums, r ORDER BY user_id, ts_us, event_id""".stripMargin
-    },
-
-    "q_ntile_rank" ->
-      """SELECT o_orderstatus, o_orderkey, o_totalprice,
-        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        |  percent_rank() OVER w AS pct_rank,
-        |  cume_dist() OVER w AS cume,
-        |  CAST(dense_rank() OVER w AS BIGINT) AS drank
-        |FROM orders WHERE o_custkey <= 50
-        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderstatus, o_orderkey""".stripMargin,
-
-    "q_date_arith" ->
-      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS d,
-        |  CAST(CAST(o_orderdate AS DATE) + INTERVAL 30 DAY AS DATE) AS plus30d,
-        |  CAST(CAST(o_orderdate AS DATE) + INTERVAL 2 MONTH AS DATE) AS plus2m,
-        |  last_day(CAST(o_orderdate AS DATE)) AS eom,
-        |  date_diff('day', CAST(o_orderdate AS DATE), DATE '1998-12-31') AS days_to_end,
-        |  CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-        |  CAST(dayofweek(o_orderdate) + 1 AS BIGINT) AS dow,
-        |  CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month_start
-        |FROM orders WHERE o_orderkey <= 300
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_string_funcs" ->
-      """SELECT p_partkey,
-        |  lpad(p_name, 20, '*') AS padded,
-        |  translate(p_name, 'aeiou', 'AEIOU') AS tr,
-        |  regexp_replace(p_name, '[aeiou]', '', 'g') AS novowel,
-        |  reverse(p_name) AS rev,
-        |  CAST(strpos(p_name, ' ') AS BIGINT) AS space_at,
-        |  split_part(p_name, ' ', 1) AS first_word,
-        |  repeat(p_brand, 2) AS b2
-        |FROM part WHERE p_partkey <= 300
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_regexp_extract" ->
-      """SELECT doc_id,
-        |  regexp_extract(text, '[a-z]{7,}') AS first_long,
-        |  CAST(len(regexp_extract_all(text, '[a-z]{7,}')) AS BIGINT) AS n_long,
-        |  regexp_matches(text, '[0-9]') AS has_num
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_union_all" ->
-      """SELECT bucket, COUNT(*) AS n, COUNT(DISTINCT o_custkey) AS n_cust
-        |FROM (
-        |  SELECT o_custkey, 'hi' AS bucket FROM orders WHERE o_totalprice > 300000
-        |  UNION ALL
-        |  SELECT o_custkey, 'lo' AS bucket FROM orders WHERE o_totalprice < 10000)
-        |GROUP BY bucket
-        |ORDER BY bucket""".stripMargin,
-
-    "q_scalar_subquery" ->
-      """SELECT p_partkey, p_retailprice
-        |FROM part
-        |WHERE p_retailprice > 1.005 * (
-        |  SELECT CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
-        |  FROM part)
-        |ORDER BY p_partkey""".stripMargin,
-
-    // central-moment expansion from the exact integer power sums —
-    // IDENTICAL double expression order as the Spark side so the bits
-    // match before the 6 dp rounding
-    "q_moment_stats" ->
-      """WITH m AS (
-        |  SELECT l_returnflag, COUNT(*) AS n_rows,
-        |    SUM(CAST(CAST(l_quantity AS BIGINT) AS DECIMAL(38,0))) AS s1,
-        |    SUM(CAST(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT) AS DECIMAL(38,0))) AS s2,
-        |    SUM(CAST(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT) AS DECIMAL(38,0))) AS s3,
-        |    SUM(CAST(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT) AS DECIMAL(38,0))) AS s4
-        |  FROM lineitem GROUP BY l_returnflag),
-        |e AS (
-        |  SELECT l_returnflag, n_rows,
-        |    CAST(n_rows AS DOUBLE) AS n, CAST(s1 AS DOUBLE) AS s1,
-        |    CAST(s2 AS DOUBLE) AS s2, CAST(s3 AS DOUBLE) AS s3,
-        |    CAST(s4 AS DOUBLE) AS s4
-        |  FROM m),
-        |c AS (
-        |  SELECT l_returnflag, n_rows, s1 / n AS mean,
-        |    s2 / n - (s1 / n) * (s1 / n) AS m2,
-        |    s3 / n - 3.0 * (s1 / n) * (s2 / n) + 2.0 * (s1 / n) * (s1 / n) * (s1 / n) AS m3,
-        |    s4 / n - 4.0 * (s1 / n) * (s3 / n)
-        |      + 6.0 * (s1 / n) * (s1 / n) * (s2 / n)
-        |      - 3.0 * (s1 / n) * (s1 / n) * (s1 / n) * (s1 / n) AS m4
-        |  FROM e)
-        |SELECT l_returnflag, n_rows,
-        |  CAST(FLOOR(mean * 1000000.0 + 0.5) AS BIGINT) AS mean_e6,
-        |  CAST(FLOOR(m2 * 1000000.0 + 0.5) AS BIGINT) AS m2_e6,
-        |  CAST(FLOOR(m3 / SQRT(m2 * m2 * m2) * 1000000.0 + 0.5) AS BIGINT) AS skewness_e6,
-        |  CAST(FLOOR((m4 / (m2 * m2) - 3.0) * 1000000.0 + 0.5) AS BIGINT) AS kurtosis_excess_e6
-        |FROM c ORDER BY l_returnflag""".stripMargin,
-
-    "q_corr_stats" ->
-      """WITH m AS (
-        |  SELECT l_returnflag, COUNT(*) AS n_rows,
-        |    SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sx,
-        |    SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS sy,
-        |    SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxy,
-        |    SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxx,
-        |    SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS syy
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, n_rows,
-        |  CAST(FLOOR((CAST(n_rows AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / SQRT((CAST(n_rows AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |         * (CAST(n_rows AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-        |    * 1000000.0 + 0.5) AS BIGINT) AS corr_qty_price_e6,
-        |  CAST(FLOOR((CAST(n_rows AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / (CAST(n_rows AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |    * 1000000.0 + 0.5) AS BIGINT) AS slope_e6
-        |FROM m
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q_autocorr" ->
-      """WITH daily AS (
-        |  SELECT o_orderdate::DATE AS d,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS rev
-        |  FROM orders GROUP BY 1),
-        |lags AS (SELECT UNNEST(range(1, 8)) AS lag),
-        |p AS (
-        |  SELECT l.lag, x.rev AS xr, y.rev AS yr
-        |  FROM lags l
-        |  CROSS JOIN daily x
-        |  JOIN daily y ON y.d = x.d + CAST(l.lag AS INT)),
-        |m AS (
-        |  SELECT lag, COUNT(*) AS n_pairs,
-        |    SUM(CAST(xr AS DECIMAL(38,4))) AS sx,
-        |    SUM(CAST(yr AS DECIMAL(38,4))) AS sy,
-        |    SUM(CAST(CAST(xr AS DECIMAL(19,2)) * CAST(yr AS DECIMAL(19,2)) AS DECIMAL(38,4))) AS sxy,
-        |    SUM(CAST(CAST(xr AS DECIMAL(19,2)) * CAST(xr AS DECIMAL(19,2)) AS DECIMAL(38,4))) AS sxx,
-        |    SUM(CAST(CAST(yr AS DECIMAL(19,2)) * CAST(yr AS DECIMAL(19,2)) AS DECIMAL(38,4))) AS syy
-        |  FROM p GROUP BY lag),
-        |e AS (
-        |  SELECT CAST(lag AS BIGINT) AS lag, n_pairs,
-        |    CAST(n_pairs AS DOUBLE) AS n,
-        |    CAST(sx AS DOUBLE) AS dsx, CAST(sy AS DOUBLE) AS dsy,
-        |    CAST(sxy AS DOUBLE) AS dsxy, CAST(sxx AS DOUBLE) AS dsxx,
-        |    CAST(syy AS DOUBLE) AS dsyy
-        |  FROM m)
-        |SELECT lag, n_pairs,
-        |  CAST(FLOOR((n * dsxy - dsx * dsy)
-        |    / SQRT((n * dsxx - dsx * dsx) * (n * dsyy - dsy * dsy))
-        |    * 1e6 + 0.5) AS BIGINT) AS ac_e6,
-        |  CAST(FLOOR((n * dsxy - dsx * dsy)
-        |    / SQRT((n * dsxx - dsx * dsx) * (n * dsyy - dsy * dsy))
-        |    * 1e6 + 0.5) AS BIGINT) / 1e6 AS ac
-        |FROM e
-        |WHERE n_pairs >= 2 AND (n * dsxx - dsx * dsx) > 0.0
-        |  AND (n * dsyy - dsy * dsy) > 0.0
-        |ORDER BY lag""".stripMargin,
-
-    // per-key frequency tables; quantile_disc = the engine's ceil(q·n)
-    // discrete convention (the documented equivalence)
-    "q_skew_profile" ->
-      """WITH f1 AS (SELECT l_orderkey AS k, COUNT(*) AS c FROM lineitem GROUP BY 1),
-        |p1 AS (SELECT 'lineitem.l_orderkey' AS key_name,
-        |    CAST(SUM(c) AS BIGINT) AS n_rows, CAST(COUNT(*) AS BIGINT) AS n_keys,
-        |    MAX(c) AS max_freq,
-        |    quantile_disc(c, 0.5) AS p50_freq, quantile_disc(c, 0.99) AS p99_freq
-        |  FROM f1),
-        |f2 AS (SELECT user_id AS k, COUNT(*) AS c FROM events GROUP BY 1),
-        |p2 AS (SELECT 'events.user_id' AS key_name,
-        |    CAST(SUM(c) AS BIGINT) AS n_rows, CAST(COUNT(*) AS BIGINT) AS n_keys,
-        |    MAX(c) AS max_freq,
-        |    quantile_disc(c, 0.5) AS p50_freq, quantile_disc(c, 0.99) AS p99_freq
-        |  FROM f2),
-        |u AS (SELECT * FROM p1 UNION ALL SELECT * FROM p2)
-        |SELECT key_name, n_rows, n_keys, max_freq, p50_freq, p99_freq,
-        |  CAST(FLOOR(CAST(max_freq AS DOUBLE) / CAST(n_rows AS DOUBLE)
-        |    * 1000000.0 + 0.5) AS BIGINT) AS top_share_e6
-        |FROM u ORDER BY key_name""".stripMargin,
-
-    // contingency-cell pair counting (≤550 cells); HUGEINT ≡ the Spark
-    // side's DECIMAL(38,0). r16: tau_b_e6 is FLOAT-FREE — exact integer
-    // sqrt (double seed, ±1 integer-compare correction) then half-up
-    // by sign-correct integer floordiv; no double is emitted or routed,
-    // so both engines compute the identical integer by construction.
-    "q_kendall_tau" ->
-      """WITH cells AS (SELECT l_quantity AS x, l_discount AS y, COUNT(*) AS nc
-        |  FROM lineitem GROUP BY 1, 2),
-        |cd AS (SELECT
-        |    SUM(CASE WHEN b.x > a.x AND b.y > a.y
-        |        THEN CAST(a.nc AS HUGEINT) * b.nc ELSE 0 END) AS cc,
-        |    SUM(CASE WHEN b.x > a.x AND b.y < a.y
-        |        THEN CAST(a.nc AS HUGEINT) * b.nc ELSE 0 END) AS dd
-        |  FROM cells a, cells b),
-        |tx AS (SELECT SUM(CAST(m AS HUGEINT) * (m - 1) // 2) AS tx
-        |  FROM (SELECT SUM(nc) AS m FROM cells GROUP BY x)),
-        |ty AS (SELECT SUM(CAST(m AS HUGEINT) * (m - 1) // 2) AS ty
-        |  FROM (SELECT SUM(nc) AS m FROM cells GROUP BY y)),
-        |nn AS (SELECT SUM(nc) AS n, CAST(SUM(nc) AS HUGEINT) * (SUM(nc) - 1) // 2 AS n0
-        |  FROM cells),
-        |w AS (SELECT nn.n, cd.cc, cd.dd,
-        |    (nn.n0 - tx.tx) * (nn.n0 - ty.ty) AS dq
-        |  FROM cd, tx, ty, nn),
-        |sq AS (SELECT *, CAST(FLOOR(SQRT(CAST(dq AS DOUBLE))) AS HUGEINT) AS s0 FROM w),
-        |sq1 AS (SELECT *, CASE WHEN s0 * s0 > dq THEN s0 - 1 ELSE s0 END AS s1 FROM sq),
-        |sq2 AS (SELECT *, CASE WHEN (s1 + 1) * (s1 + 1) <= dq THEN s1 + 1 ELSE s1 END AS si FROM sq1),
-        |f AS (SELECT n, cc, dd,
-        |    2 * (cc - dd) * 1000000 + si AS num, 2 * si AS den FROM sq2)
-        |SELECT CAST(n AS BIGINT) AS n_rows,
-        |  CAST(cc AS BIGINT) AS concordant,
-        |  CAST(dd AS BIGINT) AS discordant,
-        |  CAST((num - (((num % den) + den) % den)) // den AS BIGINT) AS tau_b_e6
-        |FROM f""".stripMargin,
-
-    // witness-split bisect (r16): only the exact integer τ-b inputs
-    "q_kendall_parts" ->
-      """WITH cells AS (SELECT l_quantity AS x, l_discount AS y, COUNT(*) AS nc
-        |  FROM lineitem GROUP BY 1, 2),
-        |cd AS (SELECT
-        |    SUM(CASE WHEN b.x > a.x AND b.y > a.y
-        |        THEN CAST(a.nc AS HUGEINT) * b.nc ELSE 0 END) AS cc,
-        |    SUM(CASE WHEN b.x > a.x AND b.y < a.y
-        |        THEN CAST(a.nc AS HUGEINT) * b.nc ELSE 0 END) AS dd
-        |  FROM cells a, cells b),
-        |tx AS (SELECT SUM(CAST(m AS HUGEINT) * (m - 1) // 2) AS tx
-        |  FROM (SELECT SUM(nc) AS m FROM cells GROUP BY x)),
-        |ty AS (SELECT SUM(CAST(m AS HUGEINT) * (m - 1) // 2) AS ty
-        |  FROM (SELECT SUM(nc) AS m FROM cells GROUP BY y)),
-        |nn AS (SELECT SUM(nc) AS n, CAST(SUM(nc) AS HUGEINT) * (SUM(nc) - 1) // 2 AS n0
-        |  FROM cells)
-        |SELECT CAST(nn.n AS BIGINT) AS n_rows,
-        |  CAST(cd.cc AS BIGINT) AS concordant,
-        |  CAST(cd.dd AS BIGINT) AS discordant,
-        |  CAST(tx.tx AS BIGINT) AS tie_x,
-        |  CAST(ty.ty AS BIGINT) AS tie_y,
-        |  CAST(nn.n0 AS BIGINT) AS n_pairs
-        |FROM cd, tx, ty, nn""".stripMargin,
-
-    // gate type-canary: pinned 3 rows over the scale-invariant region table
-    "q_gate_canary" ->
-      """SELECT CAST(r_regionkey AS BIGINT) AS k_bigint,
-        |  r_name AS v_string,
-        |  DATE '1996-01-01' + CAST(r_regionkey AS INT) AS v_date,
-        |  (r_regionkey % 2 = 0) AS v_bool,
-        |  CASE WHEN r_regionkey = 1 THEN r_name ELSE NULL END AS v_nullable
-        |FROM region WHERE r_regionkey < 3""".stripMargin,
-
-    // midrank r = (#less) + (ties+1)/2 from the value-frequency table;
-    // 2r = 2·cum − cnt + 1 stays integral, summed exactly in HUGEINT
-    // (≡ the Spark side's DECIMAL(38,0)); the ρ expansion mirrors the
-    // Spark expression tree operation-for-operation
-    "q_spearman" ->
-      """WITH fx AS (SELECT l_returnflag AS g, l_quantity AS v, COUNT(*) AS c
-        |  FROM lineitem GROUP BY 1, 2),
-        |rx AS (SELECT g, v,
-        |    2 * SUM(c) OVER (PARTITION BY g ORDER BY v) - c + 1 AS r2 FROM fx),
-        |fy AS (SELECT l_returnflag AS g, l_extendedprice AS v, COUNT(*) AS c
-        |  FROM lineitem GROUP BY 1, 2),
-        |ry AS (SELECT g, v,
-        |    2 * SUM(c) OVER (PARTITION BY g ORDER BY v) - c + 1 AS r2 FROM fy),
-        |j AS (SELECT l.l_returnflag, rx.r2 AS r2x, ry.r2 AS r2y
-        |  FROM lineitem l
-        |  JOIN rx ON rx.g = l.l_returnflag AND rx.v = l.l_quantity
-        |  JOIN ry ON ry.g = l.l_returnflag AND ry.v = l.l_extendedprice),
-        |m AS (SELECT l_returnflag, COUNT(*) AS n_rows,
-        |    SUM(CAST(r2x AS HUGEINT)) AS sx,
-        |    SUM(CAST(r2y AS HUGEINT)) AS sy,
-        |    SUM(CAST(r2x AS HUGEINT) * CAST(r2y AS HUGEINT)) AS sxy,
-        |    SUM(CAST(r2x AS HUGEINT) * CAST(r2x AS HUGEINT)) AS sxx,
-        |    SUM(CAST(r2y AS HUGEINT) * CAST(r2y AS HUGEINT)) AS syy
-        |  FROM j GROUP BY l_returnflag)
-        |SELECT l_returnflag, n_rows,
-        |  CAST(FLOOR((CAST(n_rows AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / SQRT((CAST(n_rows AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |         * (CAST(n_rows AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-        |    * 1000000.0 + 0.5) AS BIGINT) AS spearman_e6
-        |FROM m
-        |ORDER BY l_returnflag""".stripMargin,
-
-    // one global midrank pass serves all one-vs-rest labels;
-    // AUC_t = (Σ2r − n_t(n_t+1)) / (2·n_t·(n−n_t)) in the identical
-    // IEEE order as the Spark side
-    "q_auc" ->
-      """WITH f AS (SELECT value AS v, COUNT(*) AS c FROM events GROUP BY 1),
-        |r AS (SELECT v, 2 * SUM(c) OVER (ORDER BY v) - c + 1 AS r2 FROM f),
-        |a AS (SELECT e.event_type, COUNT(*) AS n_pos,
-        |    SUM(CAST(r.r2 AS HUGEINT)) AS s2
-        |  FROM events e JOIN r ON r.v = e.value GROUP BY 1),
-        |t AS (SELECT SUM(n_pos) AS n_all FROM a)
-        |SELECT event_type, n_pos,
-        |  CAST(FLOOR((CAST(s2 AS DOUBLE) - CAST(n_pos AS DOUBLE) * (CAST(n_pos AS DOUBLE) + 1.0))
-        |    / ((2.0 * CAST(n_pos AS DOUBLE)) * (CAST(n_all AS DOUBLE) - CAST(n_pos AS DOUBLE)))
-        |    * 1000000.0 + 0.5) AS BIGINT) AS auc_e6
-        |FROM a, t
-        |ORDER BY event_type""".stripMargin,
-
-    "q_range_frame" ->
-      """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |  COUNT(*) OVER w AS n_last_hour,
-        |  CAST(SUM(CAST(value AS DECIMAL(25,6))) OVER w AS DOUBLE) AS sum_last_hour
-        |FROM events WHERE user_id <= 100
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q_json_extract" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-        |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "knn_cosine" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |pairs AS (
-        |  SELECT q.qid, e.vec_id AS label, q.qv, e.embedding AS v
-        |  FROM q CROSS JOIN embeddings e),
-        |dists AS (
-        |  SELECT qid, label,
-        |    SUM(CAST(qe AS DOUBLE) * CAST(ve AS DOUBLE)) /
-        |      (SQRT(SUM(CAST(qe AS DOUBLE) * CAST(qe AS DOUBLE))) *
-        |       SQRT(SUM(CAST(ve AS DOUBLE) * CAST(ve AS DOUBLE)))) AS score
-        |  FROM (SELECT qid, label, UNNEST(qv) AS qe, UNNEST(v) AS ve FROM pairs)
-        |  GROUP BY qid, label),
-        |ranked AS (
-        |  SELECT qid, label, score,
-        |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, label) AS rank
-        |  FROM dists)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    "simhash_pairs" ->
-      // banded-candidate oracle over the same 63-bit fingerprint — the
-      // 3-band pigeonhole is EXACT at hamming ≤ 2, so this equals the
-      // old brute-force all-pairs text without its O(n²) bit_count scan
-      s"""WITH $simhashBandedPairCtes
-         |SELECT p.doc_a, p.doc_b,
-         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         |FROM p JOIN sim a ON p.doc_a = a.doc_id JOIN sim b ON p.doc_b = b.doc_id
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "dedup_clusters" ->
-      // connected components over the banded pair set; cluster id = min
-      // reachable doc id via unrolled min-label propagation (see
-      // simhashClusterLabCtes for the convergence guard)
-      s"""WITH $simhashClusterLabCtes
-         |SELECT doc_id, cluster_id,
-         |  COUNT(*) OVER (PARTITION BY cluster_id) AS n_cluster,
-         |  doc_id = cluster_id AS keep
-         |FROM lab ORDER BY doc_id""".stripMargin,
-
-    // identical truth to dedup_clusters — different engine-side
-    // algorithm, one oracle
-    "dedup_clusters_star" ->
-      s"""WITH $simhashClusterLabCtes
-         |SELECT doc_id, cluster_id,
-         |  COUNT(*) OVER (PARTITION BY cluster_id) AS n_cluster,
-         |  doc_id = cluster_id AS keep
-         |FROM lab ORDER BY doc_id""".stripMargin,
-
-    "q_assortativity" ->
-      s"""WITH $simhashBandedPairCtes,
-         |adj AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM p
-         |  UNION ALL SELECT doc_b, doc_a FROM p),
-         |dg AS MATERIALIZED (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
-         |  FROM adj GROUP BY src),
-         |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         |  CAST(SUM(a.deg) AS BIGINT) AS sx, CAST(SUM(b.deg) AS BIGINT) AS sy,
-         |  CAST(SUM(a.deg * b.deg) AS BIGINT) AS sxy,
-         |  CAST(SUM(a.deg * a.deg) AS BIGINT) AS sxx,
-         |  CAST(SUM(b.deg * b.deg) AS BIGINT) AS syy
-         |  FROM adj e JOIN dg a ON a.node = e.src JOIN dg b ON b.node = e.dst)
-         |SELECT n, CAST(FLOOR(
-         |  (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy) /
-         |  (sqrt(CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) *
-         |   sqrt(CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy))
-         |  * 1000000.0 + 0.5) AS BIGINT) AS assortativity_e6
-         |FROM m""".stripMargin,
-
-    "q_kcore" ->
-      // unrolled synchronous peeling over the same banded pair set, with
-      // the same convergence-or-error guard discipline as dedup_clusters
-      s"""WITH $simhashBandedPairCtes,
-         |${graft.ops.Graph.kCoreSql("SELECT doc_a AS u, doc_b AS v FROM p", k = 3, rounds = 12)}
-         |SELECT node AS doc_id, core_deg FROM core ORDER BY doc_id""".stripMargin,
-
-    "q_coreness" ->
-      s"""WITH $simhashBandedPairCtes,
-         |${graft.ops.Graph.corenessSql("SELECT doc_a AS u, doc_b AS v FROM p", rounds = 20)}
-         |SELECT node AS doc_id, coreness FROM core_out ORDER BY doc_id""".stripMargin,
-
-    "q_ktruss" ->
-      s"""WITH $simhashBandedPairCtes,
-         |${graft.ops.Graph.kTrussSql("SELECT doc_a AS u, doc_b AS v FROM p", k = 5, rounds = 8)}
-         |SELECT u AS doc_a, v AS doc_b, support FROM truss
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q_split_cluster_safe" ->
-      s"""WITH $simhashClusterLabCtes,
-         |h AS (SELECT doc_id, cluster_id,
-         |  substr(md5('split:' || CAST(cluster_id AS VARCHAR)), 1, 2) AS hx FROM lab)
-         |SELECT doc_id, cluster_id,
-         |  CASE WHEN hx < '0d' THEN 'val' WHEN hx < '1a' THEN 'test'
-         |       ELSE 'train' END AS split
-         |FROM h ORDER BY doc_id""".stripMargin,
-
-    "dedup_keep_best" ->
-      s"""WITH $simhashClusterLabCtes,
-         |j AS (SELECT lab.doc_id, lab.cluster_id, d.n_chars
-         |      FROM lab JOIN documents d ON lab.doc_id = d.doc_id),
-         |rk AS (SELECT *,
-         |  row_number() OVER (PARTITION BY cluster_id ORDER BY n_chars DESC, doc_id) AS rn,
-         |  COUNT(*) OVER (PARTITION BY cluster_id) AS n_cluster FROM j)
-         |SELECT cluster_id, doc_id AS keep_doc, CAST(n_chars AS BIGINT) AS keep_chars, n_cluster
-         |FROM rk WHERE rn = 1
-         |ORDER BY cluster_id""".stripMargin,
-
-    "q_events_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |fv AS (SELECT user_id, MIN(ts_us) AS first_view_us FROM e
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |fc AS (SELECT e.user_id, MIN(e.ts_us) AS first_click_us
-        |  FROM e JOIN fv ON e.user_id = fv.user_id
-        |  WHERE e.event_type = 'click' AND e.ts_us > fv.first_view_us GROUP BY e.user_id),
-        |fp AS (SELECT e.user_id, MIN(e.ts_us) AS first_purchase_us
-        |  FROM e JOIN fc ON e.user_id = fc.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts_us > fc.first_click_us GROUP BY e.user_id),
-        |u AS (SELECT DISTINCT user_id FROM e)
-        |SELECT u.user_id, fv.first_view_us, fc.first_click_us, fp.first_purchase_us,
-        |  CAST(CASE WHEN fp.first_purchase_us IS NOT NULL THEN 3
-        |       WHEN fc.first_click_us IS NOT NULL THEN 2
-        |       WHEN fv.first_view_us IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage
-        |FROM u LEFT JOIN fv USING (user_id) LEFT JOIN fc USING (user_id)
-        |  LEFT JOIN fp USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-
-    "q_events_funnel_windowed" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |fv AS (SELECT user_id, MIN(ts_us) AS first_view_us FROM e
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |fc AS (SELECT e.user_id, MIN(e.ts_us) AS first_click_us
-        |  FROM e JOIN fv ON e.user_id = fv.user_id
-        |  WHERE e.event_type = 'click' AND e.ts_us > fv.first_view_us
-        |    AND e.ts_us <= fv.first_view_us + 1800000000 GROUP BY e.user_id),
-        |fp AS (SELECT e.user_id, MIN(e.ts_us) AS first_purchase_us
-        |  FROM e JOIN fc ON e.user_id = fc.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts_us > fc.first_click_us
-        |    AND e.ts_us <= fc.first_click_us + 86400000000 GROUP BY e.user_id),
-        |u AS (SELECT DISTINCT user_id FROM e)
-        |SELECT u.user_id, fv.first_view_us, fc.first_click_us, fp.first_purchase_us,
-        |  CAST(CASE WHEN fp.first_purchase_us IS NOT NULL THEN 3
-        |       WHEN fc.first_click_us IS NOT NULL THEN 2
-        |       WHEN fv.first_view_us IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage
-        |FROM u LEFT JOIN fv USING (user_id) LEFT JOIN fc USING (user_id)
-        |  LEFT JOIN fp USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-
-    "q_hash_sample" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 2) <= '19'
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_text_scrub" ->
-      """SELECT doc_id,
-        |  md5(regexp_replace(text, '[0-9]+', '<NUM>', 'g')) AS scrub_md5,
-        |  CAST(length(regexp_replace(text, '[0-9]+', '<NUM>', 'g')) AS BIGINT) AS scrub_len
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_hash_split" ->
-      """SELECT doc_id,
-        |  CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < '0d' THEN 'val'
-        |       WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < '1a' THEN 'test'
-        |       ELSE 'train' END AS split
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_vec_normalize" ->
-      """SELECT vec_id,
-        |  CAST(FLOOR(CAST(embedding[1] AS DOUBLE) / sqrt(nsq)
-        |    * 1000000.0 + 0.5) AS BIGINT) AS u0_e6,
-        |  CAST(FLOOR(sqrt(nsq) * 10000.0 + 0.5) AS BIGINT) AS norm_e4
-        |FROM (
-        |  SELECT vec_id, embedding,
-        |    (SELECT SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE)) FROM UNNEST(embedding) AS t(e)) AS nsq
-        |  FROM embeddings)
-        |ORDER BY vec_id""".stripMargin,
-
-    "knn_l2_prefix" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding[1:16] AS qv FROM embeddings WHERE vec_id < 8),
-        |pairs AS (
-        |  SELECT q.qid, e.vec_id AS label, q.qv, e.embedding[1:16] AS v
-        |  FROM q CROSS JOIN embeddings e),
-        |dists AS (
-        |  SELECT qid, label, SUM((CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE)) * (CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE))) AS score
-        |  FROM (SELECT qid, label, UNNEST(qv) AS qe, UNNEST(v) AS ve FROM pairs)
-        |  GROUP BY qid, label),
-        |ranked AS (
-        |  SELECT qid, label, score,
-        |    row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank
-        |  FROM dists)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    // Exact brute-force kNN, two-stage so the oracle scales: a native
-    // fp32 array_distance pre-filter keeps every pair within the per-qid
-    // 1%-quantile + 1e-3 absolute margin (the margin is ~2500× the fp32
-    // noise on these d=64 uniforms, so approx-vs-exact rank inversions —
-    // and all exact-duplicate ties, which sit at distance 0 together —
-    // cannot cross it), then the EXACT fp64 sum re-scores survivors and
-    // the final rank/ROUND text is unchanged. Replaces an UNNEST plan
-    // that exploded n²·d rows and timed out at sf1.
-    // r17 (100×-feasible self-kNN oracle): the old MATERIALIZED all-pairs
-    // CTE was the wall (n² rows ≈ 1 TB at the 200k-vector replica), and
-    // the per-qid quantile threshold was a second wall (quantile_disc is
-    // HOLISTIC — it buffers every ascore, 320 GB at n²=4e10). The
-    // un-materialized form streams the cross join, and the band
-    // threshold is the 5th-smallest per-(qid, label%256) BUCKET MIN —
-    // five distinct values upper-bound the 5th order statistic, so
-    // coverage of the exact top-5 is guaranteed, state is bounded
-    // (256 minima per query), and the band stays tight (~the 5th-15th
-    // order stat). Exact rescore of the banded candidates is the
-    // explicit left-associated 64-term fp64 sum (the identical IEEE tree
-    // SquaredL2Distance's loop evaluates, minus list-lambda overhead).
-    "knn_l2_batched" -> {
-      val ds = (1 to 64).map(t =>
-        s"CAST(q.embedding[$t] AS DOUBLE) - CAST(e.embedding[$t] AS DOUBLE) AS d$t")
-        .mkString(",\n      ")
-      val ssum = (1 to 64).map(t => s"d$t*d$t").mkString(" + ")
-      s"""WITH a AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS arr FROM embeddings),
-        |approx AS (
-        |  SELECT q.vec_id AS qid, e.vec_id AS label, array_distance(q.arr, e.arr) AS ascore
-        |  FROM a q CROSS JOIN a e),
-        |bm AS (SELECT qid, label % 256 AS bk, MIN(ascore) AS m
-        |  FROM approx GROUP BY 1, 2),
-        |thr AS (SELECT qid, MAX(m) AS t FROM (
-        |    SELECT qid, m, row_number() OVER (PARTITION BY qid ORDER BY m) AS rn
-        |    FROM bm) WHERE rn <= 5
-        |  GROUP BY qid),
-        |cand AS MATERIALIZED (
-        |  SELECT ap.qid, ap.label FROM approx ap JOIN thr ON ap.qid = thr.qid
-        |  WHERE ap.ascore <= thr.t * 1.00001 + 1e-3),
-        |guard AS (SELECT CASE WHEN (
-        |    SELECT MIN(c) FROM (SELECT COUNT(*) AS c FROM cand GROUP BY qid)) < 5
-        |  THEN error('knn_l2_batched oracle pre-filter under-selected: the 5th-smallest bucket-min must bound >= k candidates')
-        |  ELSE 1 END AS ok),
-        |dists AS (
-        |  SELECT qid, label, $ssum AS score FROM (
-        |    SELECT c.qid, c.label,
-        |      $ds
-        |    FROM cand c JOIN a q ON c.qid = q.vec_id JOIN a e ON c.label = e.vec_id)),
-        |ranked AS (
-        |  SELECT qid, label, score,
-        |    row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank
-        |  FROM dists)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 5 AND (SELECT ok FROM guard) = 1
-        |ORDER BY qid, rank""".stripMargin
-    },
-
-    "vec_range_search" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |pairs AS (
-        |  SELECT q.qid, e.vec_id AS label, q.qv, e.embedding AS v
-        |  FROM q CROSS JOIN embeddings e),
-        |dists AS (
-        |  SELECT qid, label, SUM((CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE)) * (CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE))) AS score
-        |  FROM (SELECT qid, label, UNNEST(qv) AS qe, UNNEST(v) AS ve FROM pairs)
-        |  GROUP BY qid, label)
-        |SELECT qid, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM dists WHERE score <= 1.4
-        |ORDER BY qid, label""".stripMargin,
-
-    // same rounded-feature + DECIMAL-moment arithmetic; the flag reads
-    // the ROUNDED z on both sides so the boolean can't straddle rounding
-    "q_vec_outliers" ->
-      """WITH nr AS (SELECT vec_id,
-        |    CAST(FLOOR(list_max(list_transform(embedding,
-        |      x -> abs(CAST(x AS DOUBLE)))) * 1000000.0 + 0.5) AS BIGINT) AS m6
-        |  FROM embeddings),
-        |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(m6) AS BIGINT) AS s1,
-        |  SUM(CAST(m6 AS HUGEINT) * m6) AS s2
-        |  FROM nr),
-        |w AS (SELECT vec_id, m6,
-        |  CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-        |  SQRT(CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE)
-        |    - (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-        |      * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))) AS std
-        |  FROM nr, st),
-        |z AS (SELECT vec_id, m6,
-        |  CASE WHEN std > 0
-        |    THEN CAST(FLOOR((CAST(m6 AS DOUBLE) - mean) / std
-        |      * 10000.0 + 0.5) AS BIGINT)
-        |    ELSE 0 END AS z_e4
-        |  FROM w)
-        |SELECT vec_id, m6 AS mx_e6,
-        |  z_e4, ABS(z_e4) > 30000 AS is_outlier
-        |FROM z ORDER BY vec_id""".stripMargin,
-
-    // ann_ivf's probe CTEs with a radius filter instead of top-k
-    "vec_range_search_ivf" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cv,
-        |    embedding::FLOAT[64] AS carr FROM embeddings WHERE vec_id % 40 = 0),
-        |v0 AS (SELECT vec_id, embedding, embedding::FLOAT[64] AS varr FROM embeddings),
-        |avc0 AS (SELECT v0.vec_id, c.cid, array_distance(v0.varr, c.carr) AS ad
-        |  FROM v0, c),
-        |amin0 AS (SELECT vec_id, MIN(ad) AS m FROM avc0 GROUP BY vec_id),
-        |vcand0 AS (SELECT a.vec_id, a.cid FROM avc0 a
-        |  JOIN amin0 ON a.vec_id = amin0.vec_id
-        |  WHERE a.ad <= amin0.m * 1.00001 + 1e-3),
-        |vc AS (SELECT vec_id, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT w.vec_id, w.cid,
-        |    CAST(UNNEST(v.embedding) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM vcand0 w JOIN v0 v ON w.vec_id = v.vec_id JOIN c ON w.cid = c.cid)
-        |  GROUP BY 1, 2),
-        |vassign AS (SELECT vec_id, cid FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM vc) WHERE rn = 1),
-        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |qc AS (SELECT qid, cid, SUM((x-y)*(x-y)) AS d FROM (
-        |  SELECT q.qid, c.cid,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(c.cv) AS DOUBLE) AS y
-        |  FROM q, c) GROUP BY 1, 2),
-        |probes AS (SELECT qid, cid FROM (
-        |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY d, cid) AS rn
-        |  FROM qc) WHERE rn <= 2),
-        |cand AS (SELECT p.qid, a.vec_id AS label FROM probes p JOIN vassign a ON p.cid = a.cid),
-        |dists AS (SELECT qid, label, SUM((x-y)*(x-y)) AS score FROM (
-        |  SELECT cand.qid, cand.label,
-        |    CAST(UNNEST(q.qv) AS DOUBLE) AS x, CAST(UNNEST(v.embedding) AS DOUBLE) AS y
-        |  FROM cand JOIN q ON cand.qid = q.qid
-        |  JOIN embeddings v ON cand.label = v.vec_id) GROUP BY 1, 2)
-        |SELECT qid, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM dists WHERE score <= 1.6
-        |ORDER BY qid, label""".stripMargin,
-
-    "knn_l2_filtered" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |pairs AS (
-        |  SELECT q.qid, e.vec_id AS label, q.qv, e.embedding AS v
-        |  FROM q CROSS JOIN embeddings e WHERE e.label % 3 = 0),
-        |dists AS (
-        |  SELECT qid, label, SUM((CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE)) * (CAST(qe AS DOUBLE) - CAST(ve AS DOUBLE))) AS score
-        |  FROM (SELECT qid, label, UNNEST(qv) AS qe, UNNEST(v) AS ve FROM pairs)
-        |  GROUP BY qid, label),
-        |ranked AS (
-        |  SELECT qid, label, score,
-        |    row_number() OVER (PARTITION BY qid ORDER BY score, label) AS rank
-        |  FROM dists)
-        |SELECT qid, rank, label, CAST(FLOOR(score * 10000.0 + 0.5) AS BIGINT) AS dist_e4
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
-
-    "q_array_funcs" ->
-      """SELECT vec_id,
-        |  CAST(len(embedding[1:8]) AS BIGINT) AS n_slice,
-        |  CAST(FLOOR(CAST(list_max(embedding) AS DOUBLE) * 10000.0 + 0.5) AS BIGINT) AS vmax_e4,
-        |  CAST(FLOOR(CAST(list_min(embedding) AS DOUBLE) * 10000.0 + 0.5) AS BIGINT) AS vmin_e4,
-        |  CAST(FLOOR(CAST(embedding[5] AS DOUBLE) * 10000.0 + 0.5) AS BIGINT) AS v5_e4,
-        |  CAST(FLOOR(CAST(list_sort(embedding)[3] AS DOUBLE) * 10000.0 + 0.5) AS BIGINT) AS third_smallest_e4
-        |FROM embeddings
-        |ORDER BY vec_id""".stripMargin,
-
-    "q_lateral_join" ->
-      """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        |FROM customer c
-        |JOIN LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_custkey = c.c_custkey
-        |  ORDER BY o_orderdate DESC, o_orderkey DESC LIMIT 1) o ON TRUE
-        |WHERE c.c_custkey <= 100
-        |ORDER BY c.c_custkey""".stripMargin,
-
-    "q_histogram" ->
-      """SELECT CAST(floor(o_totalprice / 50000.0) AS BIGINT) AS bucket, COUNT(*) AS n
-        |FROM orders
-        |GROUP BY 1
-        |ORDER BY bucket""".stripMargin,
-
-    "q_benford" ->
-      """WITH c AS (
-        |  SELECT CAST(substr(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-        |    COUNT(*) AS n
-        |  FROM lineitem
-        |  WHERE CAST(l_extendedprice AS DECIMAL(18,2)) >= 1 GROUP BY 1),
-        |t AS (SELECT digit, n, SUM(n) OVER () AS total FROM c),
-        |b(digit, benford_e6) AS (VALUES (1, 301030), (2, 176091), (3, 124939),
-        |  (4, 96910), (5, 79181), (6, 66947), (7, 57992), (8, 51153), (9, 45757))
-        |SELECT t.digit, t.n,
-        |  CAST((t.n * 2000000 + t.total) // (t.total * 2) AS BIGINT) AS share_e6,
-        |  CAST(b.benford_e6 AS BIGINT) AS benford_e6,
-        |  CAST((t.n * 2000000 + t.total) // (t.total * 2) - b.benford_e6 AS BIGINT) AS dev_e6
-        |FROM t JOIN b ON t.digit = b.digit
-        |ORDER BY t.digit""".stripMargin,
-
-    "q_k_anonymity" ->
-      """SELECT lang, source, n_chars // 100 AS len_bucket,
-        |  COUNT(*) AS class_size,
-        |  COUNT(*) < 5 AS violates_k5
-        |FROM documents
-        |GROUP BY 1, 2, 3
-        |ORDER BY lang, source, len_bucket""".stripMargin,
-
-    "q_jsonl_roundtrip" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents
-        |WHERE doc_id % 10 = 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_csv_roundtrip" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents
-        |WHERE doc_id % 9 = 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_sample_stratified" ->
-      """SELECT lang, rn, doc_id FROM (
-        |  SELECT lang, doc_id,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY md5('strat:' || CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 20
-        |ORDER BY lang, rn""".stripMargin,
-
-    "q_mixture_sample" ->
-      """WITH cnt AS (
-        |  SELECT source, CAST(COUNT(*) AS DOUBLE) AS n_src
-        |  FROM documents GROUP BY source),
-        |z AS (SELECT SUM(pow(n_src, 0.7)) AS z FROM cnt),
-        |rates AS (
-        |  SELECT source,
-        |    LEAST(1.0, FLOOR(250.0 * pow(n_src, 0.7) / z.z / n_src
-        |      * 1000000.0 + 0.5) / 1000000.0) AS rate
-        |  FROM cnt CROSS JOIN z)
-        |SELECT d.doc_id, d.source,
-        |  CAST(FLOOR(r.rate * 1000000.0 + 0.5) AS BIGINT) AS rate_e6
-        |FROM documents d JOIN rates r ON d.source = r.source
-        |WHERE r.rate >= 1.0
-        |   OR substr(md5('mix:' || CAST(d.doc_id AS VARCHAR)), 1, 8)
-        |      < lpad(lower(to_hex(CAST(ceil(r.rate * 4294967296.0) AS BIGINT))), 8, '0')
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_domain_cap" ->
-      """SELECT source, CAST(rank AS BIGINT) AS rank, doc_id FROM (
-        |  SELECT source, doc_id,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY substr(md5('cap:' || CAST(doc_id AS VARCHAR)), 1, 12),
-        |        doc_id) AS rank
-        |  FROM documents)
-        |WHERE rank <= 8
-        |ORDER BY source, rank""".stripMargin,
-
-    "text_dup_lines" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |lines AS (
-        |  SELECT doc_id,
-        |    array_to_string(list_slice(w, i * 5 + 1, i * 5 + 5), ' ') AS line
-        |  FROM toks, UNNEST(range(0, (len(w) - 1) // 5 + 1)) AS t(i)),
-        |per AS (
-        |  SELECT doc_id, line, COUNT(*) AS cnt,
-        |    CAST(length(line) AS BIGINT) AS chars
-        |  FROM lines GROUP BY doc_id, line)
-        |SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_lines,
-        |  CAST(SUM(cnt * chars) AS BIGINT) AS chars_total,
-        |  CAST(SUM(CASE WHEN cnt > 1 THEN cnt * chars ELSE 0 END) AS BIGINT) AS chars_dup
-        |FROM per GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_line_df_filter" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |lines AS (
-        |  SELECT doc_id,
-        |    array_to_string(list_slice(w, i * 5 + 1, i * 5 + 5), ' ') AS line
-        |  FROM toks, UNNEST(range(0, (len(w) - 1) // 5 + 1)) AS t(i)),
-        |ldf AS (
-        |  SELECT line, COUNT(DISTINCT doc_id) AS line_df FROM lines GROUP BY line)
-        |SELECT l.doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines,
-        |  CAST(SUM(CASE WHEN d.line_df <= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  CAST(SUM(CASE WHEN d.line_df <= 5 THEN length(l.line) ELSE 0 END) AS BIGINT) AS chars_kept
-        |FROM lines l JOIN ldf d ON l.line = d.line
-        |GROUP BY l.doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_weighted_sample" ->
-      """WITH keyed AS (
-        |  SELECT doc_id, CAST(length(text) AS DOUBLE) AS weight,
-        |    ln((('0x' || substr(md5('ws:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT + 0.5)
-        |       / 281474976710656.0) / CAST(length(text) AS DOUBLE) AS es_key
-        |  FROM documents WHERE length(text) > 0)
-        |SELECT rank, doc_id, weight FROM (
-        |  SELECT CAST(row_number() OVER (ORDER BY es_key DESC, doc_id) AS BIGINT) AS rank,
-        |         doc_id, weight
-        |  FROM keyed)
-        |WHERE rank <= 25
-        |ORDER BY rank""".stripMargin,
-
-    "q_upsert_merge" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, CAST(o_totalprice AS DECIMAL(18,2)) AS old_price FROM orders),
-        |delta AS (
-        |  SELECT o_orderkey, CAST(o_totalprice AS DECIMAL(18,2)) + CAST(1000 AS DECIMAL(18,2)) AS new_price
-        |  FROM orders WHERE o_orderkey <= 50
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, CAST(o_totalprice AS DECIMAL(18,2))
-        |  FROM orders WHERE o_orderkey <= 20),
-        |merged AS (
-        |  SELECT COALESCE(delta.o_orderkey, base.o_orderkey) AS o_orderkey,
-        |    COALESCE(new_price, old_price) AS price,
-        |    CASE WHEN old_price IS NULL THEN 'inserted'
-        |         WHEN new_price IS NULL THEN 'unchanged'
-        |         ELSE 'updated' END AS status
-        |  FROM base FULL OUTER JOIN delta ON base.o_orderkey = delta.o_orderkey)
-        |SELECT status, COUNT(*) AS n, CAST(SUM(price) AS DOUBLE) AS sum_price
-        |FROM merged
-        |GROUP BY status
-        |ORDER BY status""".stripMargin,
-
-    "q_top_ngrams" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-        |  i -> w[i]||' '||w[i+1]||' '||w[i+2])) AS shingles FROM t),
-        |ex AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh)
-        |SELECT s AS shingle, COUNT(*) AS df FROM ex
-        |GROUP BY s
-        |ORDER BY df DESC, shingle
-        |LIMIT 30""".stripMargin,
-
-    // unrolled from the SAME constants and decimal quantization as the
-    // Spark iteration (Graph.pageRankSql) — exact decimal contribution
-    // sums make the fixpoint reduction-order-independent in both engines
-    "q_pagerank" -> {
-      val body = Graph.pageRankSql(
-        "SELECT p_partkey AS id FROM part",
-        """SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-          |FROM lineitem a JOIN lineitem b
-          |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey""".stripMargin,
-        iters = 5)
-      s"SELECT id AS p_partkey, r AS rank FROM ($body) ORDER BY p_partkey"
-    },
-
-    // unrolled from the same constants as Graph.hits (decimal sums,
-    // MAX normalization)
-    "q_hits" -> {
-      val body = Graph.hitsSql(
-        """SELECT c_custkey AS id FROM customer
-          |UNION SELECT s_suppkey + 10000000 AS id FROM supplier""".stripMargin,
-        """SELECT o_custkey AS src, l_suppkey + 10000000 AS dst
-          |FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin,
-        iters = 4)
-      s"SELECT id, hub, auth FROM ($body) ORDER BY id"
-    },
-
-    // unrolled from the same constants as Graph.pageRankSeeded
-    "q_ppr_seeded" -> {
-      val body = Graph.pageRankSeededSql(
-        "SELECT p_partkey AS id FROM part",
-        """SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-          |FROM lineitem a JOIN lineitem b
-          |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey""".stripMargin,
-        "SELECT p_partkey AS id FROM part WHERE p_partkey % 97 = 0",
-        iters = 4)
-      s"SELECT id AS p_partkey, r AS rank FROM ($body) ORDER BY p_partkey"
-    },
-
-    "q_profile" ->
-      """SELECT * FROM (
-        |  SELECT 'o_orderkey' AS col_name, COUNT(o_orderkey) AS n_nonnull,
-        |    COUNT(DISTINCT o_orderkey) AS n_distinct,
-        |    CAST(MIN(o_orderkey) AS DOUBLE) AS min_num,
-        |    CAST(MAX(o_orderkey) AS DOUBLE) AS max_num,
-        |    CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_custkey', COUNT(o_custkey), COUNT(DISTINCT o_custkey),
-        |    CAST(MIN(o_custkey) AS DOUBLE), CAST(MAX(o_custkey) AS DOUBLE),
-        |    CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR) FROM orders
-        |  UNION ALL
-        |  SELECT 'o_totalprice', COUNT(o_totalprice), COUNT(DISTINCT o_totalprice),
-        |    CAST(MIN(o_totalprice) AS DOUBLE), CAST(MAX(o_totalprice) AS DOUBLE),
-        |    CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR) FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', COUNT(o_orderstatus), COUNT(DISTINCT o_orderstatus),
-        |    CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-        |    CAST(MIN(o_orderstatus) AS VARCHAR), CAST(MAX(o_orderstatus) AS VARCHAR)
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderpriority', COUNT(o_orderpriority), COUNT(DISTINCT o_orderpriority),
-        |    CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-        |    CAST(MIN(o_orderpriority) AS VARCHAR), CAST(MAX(o_orderpriority) AS VARCHAR)
-        |  FROM orders)
-        |ORDER BY col_name""".stripMargin,
-
-    "q_quality_checks" ->
-      """SELECT * FROM (
-        |  SELECT 'orders_pk_unique' AS check_name,
-        |    CAST(COUNT(*) - COUNT(DISTINCT o_orderkey) AS BIGINT) AS violations,
-        |    (COUNT(*) - COUNT(DISTINCT o_orderkey)) = 0 AS passed FROM orders
-        |  UNION ALL
-        |  SELECT 'orders_custkey_complete',
-        |    CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |    SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) = 0 FROM orders
-        |  UNION ALL
-        |  SELECT 'orders_totalprice_range',
-        |    CAST(SUM(CASE WHEN o_totalprice IS NULL OR o_totalprice < 0.0
-        |      OR o_totalprice > 1000000.0 THEN 1 ELSE 0 END) AS BIGINT),
-        |    SUM(CASE WHEN o_totalprice IS NULL OR o_totalprice < 0.0
-        |      OR o_totalprice > 1000000.0 THEN 1 ELSE 0 END) = 0 FROM orders
-        |  UNION ALL
-        |  SELECT 'orders_status_domain',
-        |    CAST(SUM(CASE WHEN o_orderstatus IS NULL
-        |      OR o_orderstatus NOT IN ('F','O','P') THEN 1 ELSE 0 END) AS BIGINT),
-        |    SUM(CASE WHEN o_orderstatus IS NULL
-        |      OR o_orderstatus NOT IN ('F','O','P') THEN 1 ELSE 0 END) = 0
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'lineitem_orders_ri', CAST(COUNT(*) AS BIGINT), COUNT(*) = 0
-        |  FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
-        |    ON l.l_orderkey = o.o_orderkey
-        |  WHERE o.o_orderkey IS NULL)
-        |ORDER BY check_name""".stripMargin,
-
-    "q_table_diff" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-        |           FROM orders),
-        |a AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    CASE WHEN o_orderkey % 500 = 0 THEN o_totalprice + 1.0
-        |         ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 997 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 100000000, o_custkey, o_orderstatus, o_totalprice
-        |  FROM orders WHERE o_orderkey % 1000 = 1),
-        |j AS (SELECT COALESCE(b.o_orderkey, a.o_orderkey) AS o_orderkey,
-        |  CASE WHEN b.o_orderkey IS NULL THEN 'added'
-        |       WHEN a.o_orderkey IS NULL THEN 'removed'
-        |       WHEN (b.o_custkey IS DISTINCT FROM a.o_custkey)
-        |         OR (b.o_orderstatus IS DISTINCT FROM a.o_orderstatus)
-        |         OR (b.o_totalprice IS DISTINCT FROM a.o_totalprice)
-        |         THEN 'changed' END AS status,
-        |  CASE WHEN b.o_orderkey IS NOT NULL AND a.o_orderkey IS NOT NULL
-        |         AND ((b.o_custkey IS DISTINCT FROM a.o_custkey)
-        |           OR (b.o_orderstatus IS DISTINCT FROM a.o_orderstatus)
-        |           OR (b.o_totalprice IS DISTINCT FROM a.o_totalprice))
-        |       THEN concat_ws(',',
-        |         CASE WHEN b.o_custkey IS DISTINCT FROM a.o_custkey
-        |              THEN 'o_custkey' END,
-        |         CASE WHEN b.o_orderstatus IS DISTINCT FROM a.o_orderstatus
-        |              THEN 'o_orderstatus' END,
-        |         CASE WHEN b.o_totalprice IS DISTINCT FROM a.o_totalprice
-        |              THEN 'o_totalprice' END)
-        |       ELSE '' END AS changed_cols
-        |  FROM b FULL OUTER JOIN a ON b.o_orderkey = a.o_orderkey)
-        |SELECT o_orderkey, status, changed_cols FROM j
-        |WHERE status IS NOT NULL ORDER BY o_orderkey""".stripMargin,
-
-    "q_ks_drift" ->
-      """WITH s AS (SELECT o_totalprice AS v,
-        |    CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS ca,
-        |    CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END AS cb
-        |  FROM orders WHERE o_orderstatus IN ('F', 'O')),
-        |n AS (SELECT SUM(ca) AS na, SUM(cb) AS nb FROM s),
-        |g AS (SELECT v, SUM(ca) AS fa, SUM(cb) AS fb FROM s GROUP BY v),
-        |c AS (SELECT v, SUM(fa) OVER (ORDER BY v) AS cuma,
-        |        SUM(fb) OVER (ORDER BY v) AS cumb FROM g)
-        |SELECT CAST(n.na AS BIGINT) AS n_a, CAST(n.nb AS BIGINT) AS n_b,
-        |  CAST(MAX(ABS(c.cuma * n.nb - c.cumb * n.na)) AS DOUBLE) /
-        |    CAST(n.na * n.nb AS DOUBLE) AS d_stat
-        |FROM c, n GROUP BY n.na, n.nb""".stripMargin,
-
-    "q_psi_drift" ->
-      """WITH e AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v,
-        |           epoch_us(ts) AS tu FROM events),
-        |piv AS (SELECT (MIN(tu) + MAX(tu)) // 2 AS pivot FROM e),
-        |rng AS (SELECT g, MIN(v) AS vmin, MAX(v) AS vmax FROM e GROUP BY 1),
-        |b AS (SELECT e.g,
-        |  CASE WHEN e.tu <= piv.pivot THEN 1 ELSE 0 END AS ca,
-        |  CASE WHEN e.tu > piv.pivot THEN 1 ELSE 0 END AS cb,
-        |  CASE WHEN rng.vmax = rng.vmin THEN 0
-        |       ELSE LEAST(CAST(FLOOR((e.v - rng.vmin) /
-        |         ((rng.vmax - rng.vmin) / 10)) AS BIGINT), 9) END AS bk
-        |  FROM e JOIN rng ON e.g = rng.g, piv),
-        |grid AS (SELECT g, UNNEST(range(0, 10)) AS bk FROM rng),
-        |cnt0 AS (SELECT g, bk, SUM(ca) AS fa, SUM(cb) AS fb FROM b GROUP BY 1, 2),
-        |cnt AS (SELECT grid.g, grid.bk, COALESCE(cnt0.fa, 0) AS fa,
-        |        COALESCE(cnt0.fb, 0) AS fb
-        |        FROM grid LEFT JOIN cnt0 ON grid.g = cnt0.g AND grid.bk = cnt0.bk),
-        |tot AS (SELECT g, SUM(fa) AS na, SUM(fb) AS nb FROM cnt GROUP BY 1),
-        |terms AS (SELECT cnt.g, tot.na, tot.nb,
-        |  CAST(FLOOR((CAST(cnt.fa + 1 AS DOUBLE) / (tot.na + 10)
-        |              - CAST(cnt.fb + 1 AS DOUBLE) / (tot.nb + 10))
-        |    * ln((CAST(cnt.fa + 1 AS DOUBLE) / (tot.na + 10))
-        |         / (CAST(cnt.fb + 1 AS DOUBLE) / (tot.nb + 10)))
-        |    * 1000000000000.0 + 0.5) AS BIGINT) AS term_e12
-        |  FROM cnt JOIN tot ON cnt.g = tot.g)
-        |SELECT g AS event_type, CAST(MIN(na) AS BIGINT) AS n_a,
-        |  CAST(MIN(nb) AS BIGINT) AS n_b,
-        |  CAST((2 * SUM(term_e12) + 1000000) // 2000000 AS BIGINT) AS psi_e6
-        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // same grid CTEs as q_psi_drift; JS term with m = (pa+pb)/2
-    "q_js_drift" ->
-      """WITH e AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v,
-        |           epoch_us(ts) AS tu FROM events),
-        |piv AS (SELECT (MIN(tu) + MAX(tu)) // 2 AS pivot FROM e),
-        |rng AS (SELECT g, MIN(v) AS vmin, MAX(v) AS vmax FROM e GROUP BY 1),
-        |b AS (SELECT e.g,
-        |  CASE WHEN e.tu <= piv.pivot THEN 1 ELSE 0 END AS ca,
-        |  CASE WHEN e.tu > piv.pivot THEN 1 ELSE 0 END AS cb,
-        |  CASE WHEN rng.vmax = rng.vmin THEN 0
-        |       ELSE LEAST(CAST(FLOOR((e.v - rng.vmin) /
-        |         ((rng.vmax - rng.vmin) / 10)) AS BIGINT), 9) END AS bk
-        |  FROM e JOIN rng ON e.g = rng.g, piv),
-        |grid AS (SELECT g, UNNEST(range(0, 10)) AS bk FROM rng),
-        |cnt0 AS (SELECT g, bk, SUM(ca) AS fa, SUM(cb) AS fb FROM b GROUP BY 1, 2),
-        |cnt AS (SELECT grid.g, grid.bk, COALESCE(cnt0.fa, 0) AS fa,
-        |        COALESCE(cnt0.fb, 0) AS fb
-        |        FROM grid LEFT JOIN cnt0 ON grid.g = cnt0.g AND grid.bk = cnt0.bk),
-        |tot AS (SELECT g, SUM(fa) AS na, SUM(fb) AS nb FROM cnt GROUP BY 1),
-        |terms AS (SELECT cnt.g, tot.na, tot.nb,
-        |  CAST(FLOOR((
-        |      (CAST(cnt.fa + 1 AS DOUBLE) / (tot.na + 10))
-        |        * ln((CAST(cnt.fa + 1 AS DOUBLE) / (tot.na + 10))
-        |             / ((CAST(cnt.fa + 1 AS DOUBLE) / (tot.na + 10)
-        |                 + CAST(cnt.fb + 1 AS DOUBLE) / (tot.nb + 10)) / 2.0))
-        |    + (CAST(cnt.fb + 1 AS DOUBLE) / (tot.nb + 10))
-        |        * ln((CAST(cnt.fb + 1 AS DOUBLE) / (tot.nb + 10))
-        |             / ((CAST(cnt.fa + 1 AS DOUBLE) / (tot.na + 10)
-        |                 + CAST(cnt.fb + 1 AS DOUBLE) / (tot.nb + 10)) / 2.0))
-        |    ) * 0.5 * 1000000000000.0 + 0.5) AS BIGINT) AS term_e12
-        |  FROM cnt JOIN tot ON cnt.g = tot.g)
-        |SELECT g AS event_type, CAST(MIN(na) AS BIGINT) AS n_a,
-        |  CAST(MIN(nb) AS BIGINT) AS n_b,
-        |  CAST((2 * SUM(term_e12) + 1000000) // 2000000 AS BIGINT) AS js_e6
-        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // exact distincts + TRUE envelope verdicts (sketch internals are
-    // engine-specific; the ±5% check runs on the Spark side)
-    "q_hll_sketch" ->
-      """WITH a AS (SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact
-        |  FROM events GROUP BY 1),
-        |t AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_all FROM events)
-        |SELECT event_type, n_exact, CAST(TRUE AS BOOLEAN) AS type_ok,
-        |  n_all, CAST(TRUE AS BOOLEAN) AS union_ok
-        |FROM a, t ORDER BY event_type""".stripMargin,
-
-    // prefix-filter ground truth + sorted-neighborhood CANDIDATES, both
-    // verbatim from their own oracles; metrics over the composed sets
-    "q_blocking_quality" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-        |  i -> w[i]||' '||w[i+1]||' '||w[i+2])) AS shingles FROM t),
-        |ex AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
-        |ns AS (SELECT doc_id, len(shingles) AS n_sh FROM sh),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        |  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |truth AS MATERIALIZED (SELECT i.doc_a, i.doc_b FROM inter i
-        |  JOIN ns na ON na.doc_id = i.doc_a
-        |  JOIN ns nb ON nb.doc_id = i.doc_b
-        |  WHERE CAST(i.n_inter AS DOUBLE)
-        |    / CAST(na.n_sh + nb.n_sh - i.n_inter AS DOUBLE) >= 0.7),
-        |kk AS (SELECT doc_id, substr(text, 1, 24) AS k FROM documents),
-        |r AS (SELECT sh.doc_id,
-        |    row_number() OVER (ORDER BY kk.k, sh.doc_id) AS rank
-        |  FROM sh JOIN kk ON sh.doc_id = kk.doc_id
-        |  WHERE len(sh.shingles) > 0),
-        |cand AS MATERIALIZED (SELECT LEAST(a.doc_id, b.doc_id) AS doc_a,
-        |    GREATEST(a.doc_id, b.doc_id) AS doc_b
-        |  FROM r a JOIN r b ON b.rank > a.rank AND b.rank < a.rank + 5),
-        |nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM r),
-        |m AS (SELECT nd.n_docs,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM cand) AS n_candidates,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM truth) AS n_truth,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM cand c
-        |     JOIN truth tr ON c.doc_a = tr.doc_a AND c.doc_b = tr.doc_b) AS n_hit
-        |  FROM nd)
-        |SELECT n_docs, n_candidates, n_truth, n_hit,
-        |  CAST(FLOOR(CAST(n_hit AS DOUBLE) / n_truth * 1000000.0 + 0.5) AS BIGINT)
-        |    AS pair_completeness_e6,
-        |  CAST(FLOOR((1.0 - CAST(n_candidates AS DOUBLE)
-        |    / (CAST(n_docs AS DOUBLE) * (n_docs - 1) / 2.0)) * 1000000.0 + 0.5)
-        |    AS BIGINT) AS reduction_ratio_e6
-        |FROM m""".stripMargin,
-
-    "text_pmi_collocations" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |uni AS (SELECT tok, CAST(count(*) AS BIGINT) AS c1
-        |        FROM (SELECT UNNEST(w) AS tok FROM t) GROUP BY 1),
-        |n1 AS (SELECT CAST(SUM(c1) AS DOUBLE) AS n1 FROM uni),
-        |n2 AS (SELECT CAST(SUM(GREATEST(len(w) - 1, 0)) AS DOUBLE) AS n2 FROM t),
-        |bg AS (SELECT w[i] AS w1, w[i+1] AS w2
-        |       FROM t, LATERAL (SELECT UNNEST(range(1, len(w))) AS i)),
-        |bgc AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM bg
-        |        GROUP BY 1, 2 HAVING count(*) >= 5),
-        |sc AS (SELECT bgc.w1, bgc.w2, bgc.c2,
-        |  ROUND(ln((bgc.c2 / n2.n2)
-        |    / ((u1.c1 / n1.n1) * (u2.c1 / n1.n1))), 6) AS pmi
-        |  FROM bgc JOIN uni u1 ON bgc.w1 = u1.tok
-        |  JOIN uni u2 ON bgc.w2 = u2.tok, n1, n2),
-        |r AS (SELECT row_number() OVER (ORDER BY pmi DESC, w1, w2) AS rank,
-        |      w1, w2, c2, pmi FROM sc)
-        |SELECT CAST(rank AS BIGINT) AS rank, w1, w2, c2, pmi
-        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-    "q_assoc_rules" ->
-      """WITH inc AS MATERIALIZED (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS it FROM lineitem),
-        |nb AS (SELECT COUNT(DISTINCT ok) AS n FROM inc),
-        |ci AS MATERIALIZED (SELECT it, COUNT(*) AS c FROM inc GROUP BY it),
-        |p AS (SELECT a.it AS u, b.it AS v, COUNT(*) AS c_pair
-        |      FROM inc a JOIN inc b ON a.ok = b.ok AND a.it < b.it
-        |      GROUP BY 1, 2 HAVING COUNT(*) >= 3)
-        |SELECT p.u, p.v, p.c_pair, cu.c AS c_u, cv.c AS c_v,
-        |  CAST(p.c_pair AS DOUBLE) / CAST(cu.c AS DOUBLE) AS conf_uv,
-        |  CAST(p.c_pair AS DOUBLE) / CAST(cv.c AS DOUBLE) AS conf_vu,
-        |  CAST(p.c_pair * nb.n AS DOUBLE) / CAST(cu.c * cv.c AS DOUBLE) AS lift
-        |FROM p JOIN ci cu ON cu.it = p.u JOIN ci cv ON cv.it = p.v, nb
-        |ORDER BY p.c_pair DESC, p.u, p.v LIMIT 20""".stripMargin,
-
-    "q_assoc_triples" ->
-      """WITH inc AS MATERIALIZED (
-        |  SELECT DISTINCT l_orderkey AS ok, p_brand AS it
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |p AS MATERIALIZED (
-        |  SELECT a.it AS u, b.it AS v, COUNT(*) AS c_pair
-        |  FROM inc a JOIN inc b ON a.ok = b.ok AND a.it < b.it
-        |  GROUP BY 1, 2),
-        |t AS (
-        |  SELECT a.it AS u, b.it AS v, c.it AS w, COUNT(*) AS c_triple
-        |  FROM inc a JOIN inc b ON a.ok = b.ok AND a.it < b.it
-        |  JOIN inc c ON b.ok = c.ok AND b.it < c.it
-        |  GROUP BY 1, 2, 3 HAVING COUNT(*) >= 2)
-        |SELECT t.u, t.v, t.w, t.c_triple,
-        |  puv.c_pair AS c_uv, puw.c_pair AS c_uw, pvw.c_pair AS c_vw,
-        |  CAST(t.c_triple AS DOUBLE) / CAST(puv.c_pair AS DOUBLE) AS conf_uv_w,
-        |  CAST(t.c_triple AS DOUBLE) / CAST(puw.c_pair AS DOUBLE) AS conf_uw_v,
-        |  CAST(t.c_triple AS DOUBLE) / CAST(pvw.c_pair AS DOUBLE) AS conf_vw_u
-        |FROM t
-        |JOIN p puv ON puv.u = t.u AND puv.v = t.v
-        |JOIN p puw ON puw.u = t.u AND puw.v = t.w
-        |JOIN p pvw ON pvw.u = t.v AND pvw.v = t.w
-        |ORDER BY t.c_triple DESC, t.u, t.v, t.w LIMIT 15""".stripMargin,
-
-    "q_bfs_hops" -> {
-      val body = Graph.bfsHopsSql(
-        """SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-          |FROM lineitem a JOIN lineitem b
-          |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey""".stripMargin,
-        "SELECT p_partkey AS id FROM part WHERE p_partkey % 97 = 0",
-        maxHops = 3)
-      s"SELECT id AS p_partkey, d AS hops FROM ($body) ORDER BY p_partkey"
-    },
-
-    "q_communities" -> {
-      val pairSql =
-        """SELECT a.l_partkey AS u, b.l_partkey AS v
-          |FROM lineitem a JOIN lineitem b
-          |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin
-      val body = Graph.labelPropagationSql(
-        s"SELECT u AS id FROM ($pairSql) UNION SELECT v AS id FROM ($pairSql)",
-        s"SELECT u AS src, v AS dst FROM ($pairSql) " +
-          s"UNION ALL SELECT v AS src, u AS dst FROM ($pairSql)",
-        iters = 4)
-      s"SELECT id AS p_partkey, lbl AS community FROM ($body) ORDER BY p_partkey"
-    },
-
-    "q_triangles" ->
-      """WITH und AS MATERIALIZED (
-        |  SELECT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |deg AS MATERIALIZED (SELECT node, COUNT(*) AS deg FROM (
-        |  SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und)
-        |  GROUP BY node),
-        |ori AS MATERIALIZED (
-        |  SELECT CASE WHEN (du.deg < dv.deg) OR (du.deg = dv.deg AND u < v)
-        |              THEN u ELSE v END AS x,
-        |         CASE WHEN (du.deg < dv.deg) OR (du.deg = dv.deg AND u < v)
-        |              THEN v ELSE u END AS y
-        |  FROM und JOIN deg du ON du.node = und.u
-        |           JOIN deg dv ON dv.node = und.v),
-        |tri AS MATERIALIZED (
-        |  SELECT e1.x AS a, e1.y AS b, e2.y AS c
-        |  FROM ori e1 JOIN ori e2 ON e2.x = e1.y
-        |  JOIN ori e3 ON e3.x = e1.x AND e3.y = e2.y),
-        |tpn AS (SELECT node, COUNT(*) AS tri FROM (
-        |  SELECT a AS node FROM tri UNION ALL SELECT b AS node FROM tri
-        |  UNION ALL SELECT c AS node FROM tri) GROUP BY node)
-        |SELECT tpn.node AS p_partkey, deg.deg, tpn.tri,
-        |  (2.0 * tpn.tri) / (deg.deg * (deg.deg - 1)) AS cc
-        |FROM tpn JOIN deg ON deg.node = tpn.node
-        |ORDER BY p_partkey""".stripMargin,
-
-    // same deletion-neighborhood blocking (completeness for distance ≤ 1
-    // proved at Dedup.fuzzyPairsEdit1) — the definitional all-pairs
-    // formulation is quadratic and would not survive sf1
-    "q_fuzzy_join" ->
-      """WITH c AS (SELECT c_name AS k, COUNT(*) AS cnt FROM customer GROUP BY 1),
-        |p AS (SELECT unnest(range(-1, (SELECT MAX(length(k)) FROM c))) AS pos),
-        |v AS MATERIALIZED (SELECT DISTINCT k, CASE WHEN pos < 0 THEN k
-        |        ELSE substr(k, 1, pos) || substr(k, pos + 2) END AS variant
-        |      FROM c JOIN p ON pos < length(k)),
-        |np AS (SELECT DISTINCT a.k AS key_a, b.k AS key_b
-        |       FROM v a JOIN v b ON a.variant = b.variant AND a.k < b.k
-        |       WHERE levenshtein(a.k, b.k) <= 1)
-        |SELECT k AS name_a, k AS name_b, CAST(0 AS BIGINT) AS dist,
-        |  CAST(cnt * (cnt - 1) // 2 AS BIGINT) AS n_pairs
-        |FROM c WHERE cnt > 1
-        |UNION ALL
-        |SELECT np.key_a, np.key_b, CAST(1 AS BIGINT),
-        |  CAST(ca.cnt * cb.cnt AS BIGINT)
-        |FROM np JOIN c ca ON ca.k = np.key_a JOIN c cb ON cb.k = np.key_b
-        |ORDER BY name_a, name_b""".stripMargin,
-
-    "q_attribution_linear" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-        |             epoch_us(ts) AS ts_us FROM events),
-        |p AS (SELECT event_id AS p_eid, user_id, ts_us AS p_ts, value
-        |      FROM e WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id AS c_eid, user_id, ts_us AS c_ts
-        |      FROM e WHERE event_type = 'click'),
-        |touches AS MATERIALIZED (
-        |  SELECT c.c_eid, c.user_id, p.p_eid, p.value
-        |  FROM c JOIN p ON c.user_id = p.user_id
-        |   AND c.c_ts <= p.p_ts AND c.c_ts > p.p_ts - 604800000000),
-        |k AS (SELECT p_eid, COUNT(*) AS k FROM touches GROUP BY p_eid)
-        |SELECT t.c_eid AS event_id, t.user_id,
-        |  CAST(FLOOR(SUM(t.value / k.k) * 1000000.0 + 0.5) AS BIGINT) AS attr_revenue_e6,
-        |  COUNT(*) AS n_purchases
-        |FROM touches t JOIN k ON k.p_eid = t.p_eid
-        |GROUP BY t.c_eid, t.user_id
-        |ORDER BY event_id""".stripMargin,
-
-    "q_jw_link" ->
-      // DuckDB's jaro_winkler_similarity is the pinned reference for the
-      // Scala expression (JaroWinkler scaladoc: verified 1e-12-identical
-      // on 3000 random pairs, incl. the empty→0.0 edge)
-      """WITH c AS (SELECT c_name AS k, COUNT(*) AS cnt FROM customer GROUP BY 1),
-        |p AS (SELECT unnest(range(-1, (SELECT MAX(length(k)) FROM c))) AS pos),
-        |v AS MATERIALIZED (SELECT DISTINCT k, CASE WHEN pos < 0 THEN k
-        |        ELSE substr(k, 1, pos) || substr(k, pos + 2) END AS variant
-        |      FROM c JOIN p ON pos < length(k)),
-        |np AS (SELECT DISTINCT a.k AS key_a, b.k AS key_b
-        |       FROM v a JOIN v b ON a.variant = b.variant AND a.k < b.k
-        |       WHERE levenshtein(a.k, b.k) <= 1)
-        |SELECT k AS name_a, k AS name_b, CAST(0 AS BIGINT) AS dist,
-        |  CAST(cnt * (cnt - 1) // 2 AS BIGINT) AS n_pairs,
-        |  CAST(1000000 AS BIGINT) AS jw_e6
-        |FROM c WHERE cnt > 1
-        |UNION ALL
-        |SELECT np.key_a, np.key_b, CAST(1 AS BIGINT),
-        |  CAST(ca.cnt * cb.cnt AS BIGINT),
-        |  CAST(FLOOR(jaro_winkler_similarity(np.key_a, np.key_b) * 1000000.0 + 0.5)
-        |    AS BIGINT)
-        |FROM np JOIN c ca ON ca.k = np.key_a JOIN c cb ON cb.k = np.key_b
-        |ORDER BY name_a, name_b""".stripMargin,
-
-    // identical sort-scan formulation (Skyline.skyline2dSql)
-    "q_skyline" -> {
-      val sky = Skyline.skyline2dSql("SELECT x, y FROM pts")
-      s"""WITH pts AS (SELECT o_orderkey, o_totalprice AS x,
-         |               -epoch_us(o_orderdate) AS y
-         |             FROM orders),
-         |sky AS ($sky)
-         |SELECT p.o_orderkey, p.x AS total_price, -p.y AS order_ts_us
-         |FROM pts p JOIN sky USING (x, y)
-         |ORDER BY p.o_orderkey""".stripMargin
-    }
-  )
-
-  /** Shared DuckDB CTE text: shingles → MinHash signatures (`mh` with
-    * h0..h{n−1}) → band rows (`bands`) for a (numHashes, rowsPerBand)
-    * config — the common prefix of every minhash oracle, kept in ONE
-    * place so a future edit cannot desynchronize the copies (the same
-    * role simhash63Ctes plays for the simhash family).
-    */
-  private def minhashBandCtes(numHashes: Int, rowsPerBand: Int): String = {
-    val mins = (0 until numHashes).map(Dedup.minhashElemSql).mkString(", ")
-    val nBands = numHashes / rowsPerBand
-    val bands = (0 until nBands).map { b =>
-      val key = (0 until rowsPerBand).map(i => s"h${b * rowsPerBand + i}").mkString("||")
-      s"SELECT doc_id, $b AS band, $key AS key FROM mh"
-    }.mkString(" UNION ALL ")
-    s"""t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-       |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-       |  i -> w[i]||' '||w[i+1]||' '||w[i+2])) AS shingles FROM t),
-       |ex AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
-       |mh AS (SELECT doc_id, $mins FROM ex GROUP BY doc_id),
-       |bands AS ($bands)""".stripMargin
-  }
-
-  /** Shared DuckDB CTE text building the 63-bit SimHash table `sim`
-    * (doc_id, simhash) — used by simhash_pairs and the cluster family.
-    */
-  private lazy val simhash63Ctes: String = {
-    val sums = (0 until 63)
-      .map(b => s"SUM(${Dedup.simhashBitSql(b, "//")}) AS s$b").mkString(", ")
-    val bits = (0 until 63)
-      .map(b => s"CASE WHEN 2*s$b > n THEN ${1L << b} ELSE 0 END")
-      .mkString(" + ")
-    s"""toks AS (
-       |  SELECT doc_id, UNNEST(list_distinct(string_split(text,' '))) AS tok
-       |  FROM documents),
-       |s AS (SELECT doc_id, COUNT(*) AS n, $sums FROM toks GROUP BY doc_id),
-       |sim AS MATERIALIZED (SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM s)""".stripMargin
-  }
-
-  /** `sim` + banded candidate pairs `p`: the brute-force all-pairs
-    * `sim a JOIN sim b ... bit_count(...) <= 2` is O(n²) and was the sf1
-    * oracle-timeout cause; the 3×21-bit band join is the engine's own
-    * pigeonhole (hamming ≤ 2 over 3 disjoint bands ⇒ at least one band
-    * identical, so recall is EXACT) and keeps candidates linear in the
-    * duplicate mass. DISTINCT dedups pairs matching in several bands.
-    * Produces the identical pair set (verified value-identical at
-    * sf0.01/sf0.1 against the all-pairs text).
-    */
-  private lazy val simhashBandedPairCtes: String =
-    s"""$simhash63Ctes,
-       |bands AS (
-       |  SELECT doc_id, simhash, 0 AS band, simhash & 2097151 AS bkey FROM sim
-       |  UNION ALL SELECT doc_id, simhash, 1, (simhash >> 21) & 2097151 FROM sim
-       |  UNION ALL SELECT doc_id, simhash, 2, simhash >> 42 FROM sim),
-       |p AS MATERIALIZED (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-       |    AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.simhash, b.simhash)) <= 2)""".stripMargin
-
-  /** Banded pairs + connected-component labels `lab (doc_id, cluster_id)`
-    * via UNROLLED min-label propagation with pointer jumping — replaces
-    * the recursive-CTE transitive closure whose working set is
-    * Σ|component|² (the other sf1 timeout cause: the adversarial corpus
-    * has components with 10⁵ reachability pairs).
-    *
-    * Each round r does (1) neighbor-min over `edges` (self-loops
-    * included) and (2) one pointer jump `lab ← min(lab, lab(lab))`, so
-    * label influence distance at least DOUBLES per round: 20 rounds cover
-    * any component diameter ≤ 2²⁰. Every per-round CTE is MATERIALIZED —
-    * the jump references its round twice, and inlining would blow up
-    * 2^rounds. Correctness does not rest on the round count: any fixpoint
-    * of (neighbor-min, jump) is exactly the component-min labeling
-    * (induction along a path from the min), and `conv` verifies the
-    * fixpoint on the final table, calling error() — a loud oracle
-    * failure, not a wrong hash — if 20 rounds were ever insufficient.
-    */
-  private lazy val simhashClusterLabCtes: String = {
-    val rounds = 20
-    val sb = new StringBuilder
-    sb.append(simhashBandedPairCtes).append(",\n")
-    sb.append(
-      """edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM p
-        |  UNION ALL SELECT doc_b, doc_a FROM p
-        |  UNION ALL SELECT doc_id, doc_id FROM documents),
-        |l0 AS MATERIALIZED (SELECT e.src AS doc, MIN(e.dst) AS lab FROM edges e GROUP BY e.src)""".stripMargin)
-    var prev = "l0"
-    for (r <- 1 to rounds) {
-      sb.append(
-        s""",
-           |n$r AS MATERIALIZED (SELECT e.src AS doc, MIN(l.lab) AS lab
-           |  FROM edges e JOIN $prev l ON l.doc = e.dst GROUP BY e.src),
-           |j$r AS MATERIALIZED (SELECT a.doc, LEAST(a.lab, b.lab) AS lab
-           |  FROM n$r a JOIN n$r b ON a.lab = b.doc)""".stripMargin)
-      prev = s"j$r"
-    }
-    sb.append(
-      s""",
-         |final AS MATERIALIZED (SELECT doc, lab FROM $prev),
-         |conv AS (SELECT CASE WHEN EXISTS (
-         |    SELECT 1 FROM edges e JOIN final a ON a.doc = e.src
-         |    JOIN final b ON b.doc = e.dst WHERE b.lab < a.lab)
-         |  THEN error('label propagation not converged') ELSE 1 END AS ok),
-         |lab AS (SELECT doc AS doc_id, lab AS cluster_id FROM final
-         |  WHERE (SELECT ok FROM conv) = 1)""".stripMargin)
-    sb.toString
-  }
+  val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
 }

@@ -7,7 +7,7 @@ package graft.ops
   * what the device measures/supports (`src/MetalDistance.mm:121-127` —
   * simdgroup vs MPS; `:255-284` — tile/pipeline variant off device
   * family, storage dtype, and problem shape). Here the "device table"
-  * is `tools/AnnPareto`'s measured (recall@10, scan-bytes/vector,
+  * is `tools/AnnPareto`'s (at 7c4064a) measured (recall@10, scan-bytes/vector,
   * ms/query) rows on the 20k×64-d rank-24 anisotropic fixture
   * (BASELINE.md round-13), and the routing inputs are corpus size,
   * dimension, a recall target, and a coarse-scan byte budget — the
@@ -42,7 +42,7 @@ package graft.ops
   *
   * n-dependence (documented precisely; the r12 spec overclaimed
   * invariance): IVF tiers' scan fraction nProbe/nClusters SHRINKS with
-  * n (nClusters = n/40, the AnnPareto build), so growing n can only
+  * n (nClusters = n/40, the AnnPareto build at 7c4064a), so growing n can only
   * ADD tiers to the in-budget set — tier identity can therefore FLIP
   * as n grows when a newly-affordable tier wins. What is monotone in n
   * at fixed (target, budget): `meetsTarget` never degrades true→false;
@@ -61,7 +61,8 @@ object AnnAdvisor {
   /** One measured Pareto row. `scanB(n, d)` is coarse-scan bytes per
     * corpus vector: projections pin to their output width, quantized
     * tiers to their code width, IVF tiers fold in the probed fraction
-    * (nProbe / nClusters with nClusters = n/40, the AnnPareto build).
+    * (nProbe / nClusters with nClusters = n/40, the AnnPareto build at
+    * 7c4064a).
     * `recallByConstruction`: the recall figure holds on any input
     * distribution (see object doc), not just the fixture.
     */
@@ -76,7 +77,7 @@ object AnnAdvisor {
 
   private def nClusters(n: Long): Double = math.max(1L, n / 40L).toDouble
 
-  /** Measured rows (tools/AnnPareto on the anisotropic fixture;
+  /** Measured rows (tools/AnnPareto at 7c4064a on the anisotropic fixture;
     * synced with BASELINE.md's round-15 full-table refresh — every ms
     * from ONE quiet-box session under the serve-path accounting, now
     * INCLUDING the projection tiers' build/serve split (pca16/jl16/

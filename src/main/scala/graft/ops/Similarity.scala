@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions._
+import graft.operators.TopKBuffer
 
 /** Similarity-search operators over an embedding column:
   * brute-force top-k (the exact baseline) and an IVF-style partitioned
@@ -481,38 +482,11 @@ object Similarity {
         val nQ = ids.length
         val qNormSqrt = qn.map(math.sqrt)
         val blas = dev.ludovic.netlib.blas.BLAS.getInstance()
-        // per-query bounded buffers: scores ascending-best, (score, label) order
-        val bufScore = Array.fill(nQ)(new Array[Double](k))
-        val bufLabel = Array.fill(nQ)(new Array[Long](k))
-        val bufLen = new Array[Int](nQ)
-        // mirrors TopKBuffer.cmp: NaN is ALWAYS worst (a zero-norm vector
-        // under cosine yields 0/0 = NaN; naive `>` comparisons are all
-        // false for NaN and would silently break the sorted invariant),
-        // ties toward the smaller label. Keeps the GEMM path bit-identical
-        // to the declarative path on corpora containing zero vectors.
-        @inline def worseThan(s1: Double, l1: Long, s2: Double, l2: Long): Boolean = {
-          val n1 = s1 != s1; val n2 = s2 != s2
-          if (n1 != n2) n1
-          else {
-            val c = if (n1) 0 else java.lang.Double.compare(s1, s2)
-            if (c != 0) c > 0 else l1 > l2
-          }
-        }
-        def offer(q: Int, s: Double, l: Long): Unit = {
-          val n = bufLen(q); val ss = bufScore(q); val ll = bufLabel(q)
-          if (n < k) {
-            var i = n - 1; ss(n) = s; ll(n) = l
-            while (i >= 0 && worseThan(ss(i), ll(i), s, l)) {
-              ss(i + 1) = ss(i); ll(i + 1) = ll(i); ss(i) = s; ll(i) = l; i -= 1
-            }
-            bufLen(q) = n + 1
-          } else if (worseThan(ss(k - 1), ll(k - 1), s, l)) {
-            var i = k - 2; ss(k - 1) = s; ll(k - 1) = l
-            while (i >= 0 && worseThan(ss(i), ll(i), s, l)) {
-              ss(i + 1) = ss(i); ll(i + 1) = ll(i); ss(i) = s; ll(i) = l; i -= 1
-            }
-          }
-        }
+        // per-query bounded buffers over ascending-best scores; TopKBuffer's
+        // order keeps NaN always worst (a zero-norm vector under cosine
+        // yields 0/0 = NaN) and ties toward the smaller label, as the
+        // declarative path does on corpora containing zero vectors
+        val bufs = Array.fill(nQ)(new TopKBuffer(k, ascending = true))
         val vFlat = new Array[Double](if (fp32c) 0 else blockRows * dim)
         val vFlatF = new Array[Float](if (fp32c) blockRows * dim else 0)
         val vNorm = new Array[Double](blockRows)
@@ -540,7 +514,7 @@ object Similarity {
                 case 1 => -dot
                 case _ => -(dot / (vNormSqrt * qNormSqrt(j)))
               }
-              offer(j, s, vIds(i))
+              bufs(j).insert(s, vIds(i))
               j += 1
             }
             i += 1
@@ -567,9 +541,10 @@ object Similarity {
         }
         flush(fill)
         (0 until nQ).iterator.flatMap { j =>
-          (0 until bufLen(j)).map { i =>
-            val s = bufScore(j)(i)
-            (ids(j), bufLabel(j)(i), if (mCode == 0) s else -s)
+          val b = bufs(j)
+          (0 until b.size).map { i =>
+            val s = b.scores(i)
+            (ids(j), b.labels(i), if (mCode == 0) s else -s)
           }
         }
       }
@@ -1682,12 +1657,12 @@ object Similarity {
     * ([[graft.functions.PcaProject]] with the OPQ rotation) + the usual
     * m-byte PQ encode, so the 100 TB story is identical to [[pqTopK]].
     *
-    * Default `iters = 20`: the measured recall grid (`tools/OpqRecall`,
-    * BASELINE.md) shows the objective still descending steeply at 6
-    * iterations (recall 0.275 vs 0.468 at 20 on the axis-decay shape) —
-    * an undertrained OPQ can even sit below an already-balanced identity
-    * rotation; by 20 iterations it clears both raw-PQ and PCA+PQ on
-    * both measured corpus shapes.
+    * Default `iters = 20`: the measured recall grid (`tools/OpqRecall`
+    * at 7c4064a, BASELINE.md) shows the objective still descending
+    * steeply at 6 iterations (recall 0.275 vs 0.468 at 20 on the
+    * axis-decay shape) — an undertrained OPQ can even sit below an
+    * already-balanced identity rotation; by 20 iterations it clears both
+    * raw-PQ and PCA+PQ on both measured corpus shapes.
     */
   def trainOpq(vectors: DataFrame, m: Int, ncent: Int, iters: Int = 20,
                seed: Long = 42L, knownCount: Long = -1L): OpqModel = {
@@ -2241,8 +2216,8 @@ object Similarity {
 
   /** The k-means training half of [[ivfKmeansTopK]], split out (r13) so
     * index BUILD and query SERVE are separate costs — the production
-    * shape (train once, serve many), and what lets `tools/AnnPareto`
-    * time the scan path without re-training per timed rep.
+    * shape (train once, serve many), and what let `tools/AnnPareto`
+    * (at 7c4064a) time the scan path without re-training per timed rep.
     */
   def trainIvfKmeans(vectors: DataFrame, nClusters: Int, seed: Long = 42L,
                      maxIter: Int = 20,
@@ -2254,9 +2229,9 @@ object Similarity {
     val feats = vectors.select(col("id"), array_to_vector(col("vec")).as("features"))
       .localCheckpoint(true)
     // k-means|| init + enough Lloyd iterations to converge: the r11
-    // AnnPareto table showed the cheap config (random init, 5 iters)
-    // UNDER modulo-sampled centers at equal nProbe (0.594 vs 0.844
-    // recall@10 at nProbe=2, 500 centers / 20k vecs) — random init at
+    // AnnPareto table (tool at 7c4064a) showed the cheap config (random
+    // init, 5 iters) UNDER modulo-sampled centers at equal nProbe (0.594
+    // vs 0.844 recall@10 at nProbe=2, 500 centers / 20k vecs) — random init at
     // high k leaves empty/collapsed cells whose queries then probe the
     // wrong partitions. Training runs once per index build; its job
     // count is not the scan path's problem.

@@ -149,7 +149,7 @@ object QueryProfile {
   /** The `graft` frames of an execution's call-site stack (innermost
     * first, at most three, this tool's own frames skipped), e.g.
     * `settle Graph.scala:137 < kTruss Graph.scala:857 <
-    * SparkEntry.scala:3775`; the short call site when there is none.
+    * GraphQueries.scala:121`; the short call site when there is none.
     */
   private def callSite(details: String, short: String): String = {
     val Frame = """graft\.(?!tools\.)[\w.$]*?\.([\w$]+)\((.*)\)""".r

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Materialize an N× replica of a testdata scale-factor directory so the
   * FULL query suite + DuckDB oracle harness can run at 10× scale (no sf1
-  * testdata exists). Same corpus model as [[ScaleSmoke]]:
+  * testdata exists). Same corpus model as `tools/ScaleSmoke` (at 7c4064a):
   *
   *  - fact tables replicate with DISJOINT key ranges (every key and FK
   *    offset by replica · 10⁹ — joins stay consistent within a replica);

@@ -50,7 +50,7 @@ class AnnAdvisorSpec extends AnyFunSuite {
   }
 
   test("ivf-kmeans-p2 is in the table but measured-dominated: never chosen") {
-    // 0.653 recall at ivf-p2's exact scan bytes (tools/AnnPareto r13;
+    // 0.653 recall at ivf-p2's exact scan bytes (tools/AnnPareto r13, at 7c4064a;
     // BASELINE.md round-13 table) — strictly dominated, so no
     // (target, budget) cell on a full grid selects it
     for (target <- Seq(0.99, 0.95, 0.90, 0.80, 0.70, 0.60, 0.50, 0.30);
@@ -100,7 +100,7 @@ class AnnAdvisorSpec extends AnyFunSuite {
   }
 
   test("the n=10M deployment choice agrees with the n=200k MEASURED ranking") {
-    // tools/AnnPareto 200000 (BASELINE.md round-14): the second measured
+    // tools/AnnPareto 200000 at 7c4064a (BASELINE.md round-14): the second measured
     // Pareto point, where the scanB(n) folding and ann_auto_scan's
     // deployment routing actually extrapolate. Serve-path measurements:
     val measured200k = Map( // tier -> (recall@10, scanB/vec at n=200k)
@@ -142,7 +142,7 @@ class AnnAdvisorSpec extends AnyFunSuite {
     // the relaxed-target branch: advisor consulted at the 10M-vector
     // deployment point (scale-invariant decision), tier executed on
     // the gate corpus with the ≥1-of-10 floor. tools/AutoScanFloor
-    // measured the floor across the gate dirs (BASELINE.md round-14):
+    // (at 7c4064a) measured the floor across the gate dirs (BASELINE.md round-14):
     // min n_common = 1 (sf0.1, qid 5) — ≥1 is the MEASURED own-corpus
     // bound with zero headroom, not a placeholder; fixture recall does
     // not transfer to the near-isotropic testdata (the documented

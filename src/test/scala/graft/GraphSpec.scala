@@ -787,21 +787,9 @@ class GraphSpec extends AnyFunSuite {
     // pinned: a refactor must not add one, and a change that removes one
     // lowers the pin. A driver action is one SQL execution (a count, a
     // collect, an eager checkpoint); its jobs include AQE's query stages.
-    import scala.jdk.CollectionConverters._
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(String.valueOf(j.properties.getProperty("spark.sql.execution.id")))
-    }
     def countsOf(run: => Any): (Int, Int) = {
-      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      jobs.clear()
-      try {
-        run
-        org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-        (jobs.asScala.toSeq.distinct.size, jobs.size)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val t = JobTrace(spark.sparkContext)(run)._2
+      (t.executions, t.jobs)
     }
     val nodes = (1L to 40L).toSeq
     val edges = nodes.flatMap(u => Seq((u, u % 40 + 1), (u, (u + 11) % 40 + 1)))

@@ -369,25 +369,11 @@ class ScanSpec extends AnyFunSuite {
         .select("id", "r2x", "r2y").collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def countJobs(run: () => Map[Long, (Long, Long)]): (Map[Long, (Long, Long)], Int) = {
-      spark.sparkContext.addSparkListener(listener)
-      jobs.set(0)
-      try {
-        val r = run()
-        org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-        (r, jobs.get())
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
-    val (want, jComposed) = countJobs(composed _)
-    val (got, jFused) = countJobs(fused _)
+    val (want, tComposed) = JobTrace(spark.sparkContext)(composed())
+    val (got, tFused) = JobTrace(spark.sparkContext)(fused())
     assert(got === want)
     // one prefixSum round instead of two: strictly fewer jobs
-    assert(jFused < jComposed, s"fused=$jFused composed=$jComposed")
+    assert(tFused.jobs < tComposed.jobs, s"fused=${tFused.jobs} composed=${tComposed.jobs}")
   }
 
   test("avgRank2Pair ranks each column over its OWN non-null rows (the oracle's fx/fy semantics)") {
@@ -444,22 +430,8 @@ class ScanSpec extends AnyFunSuite {
       Scan.madByGroup(df, "g", "v").collect()
         .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def countJobs(run: () => Map[String, (Double, Double)]): (Map[String, (Double, Double)], Int) = {
-      spark.sparkContext.addSparkListener(listener)
-      jobs.set(0)
-      try {
-        val r = run()
-        org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-        (r, jobs.get())
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
-    val (want, jComposed) = countJobs(composed _)
-    val (got, jFused) = countJobs(fused _)
+    val (want, tComposed) = JobTrace(spark.sparkContext)(composed())
+    val (got, tFused) = JobTrace(spark.sparkContext)(fused())
     assert(got.keySet === want.keySet)
     want.foreach { case (g, (m, d)) =>
       assert(java.lang.Double.doubleToLongBits(got(g)._1) ===
@@ -479,7 +451,7 @@ class ScanSpec extends AnyFunSuite {
     }
     // the fusion's point: the second stats-collect (an aggregate + its
     // shuffle) is derived, not executed — strictly fewer jobs
-    assert(jFused < jComposed, s"fused=$jFused composed=$jComposed")
+    assert(tFused.jobs < tComposed.jobs, s"fused=${tFused.jobs} composed=${tComposed.jobs}")
     // guard fires before collecting a groups-sized array, same as the family
     val wide = spark.range(6000).select(col("id").cast("string").as("g"),
       col("id").cast("double").as("v"))

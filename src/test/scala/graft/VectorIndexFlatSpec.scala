@@ -30,27 +30,12 @@ class VectorIndexFlatSpec extends AnyFunSuite {
         qid -> rows.map(r => (r.getLong(2), r.getFloat(3).toDouble))
       }
 
-  private val jobIds = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-  private val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-  private val jobListener = new org.apache.spark.scheduler.SparkListener {
-    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobIds.add(j.jobId)
-    override def onStageSubmitted(s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-      stageTasks.add(s.stageInfo.numTasks)
-  }
-
-  /** Spark jobs started while `run` runs (the GraphSpec pin listener),
-    * and the task count of each stage that ran.
+  /** Spark jobs started while `run` runs, and the task count of each
+    * stage that ran.
     */
   private def traceOf(run: => Any): (Int, Seq[Int]) = {
-    org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-    spark.sparkContext.addSparkListener(jobListener)
-    jobIds.clear(); stageTasks.clear()
-    try {
-      run
-      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-      (jobIds.size, stageTasks.toArray.toSeq.map(_.asInstanceOf[Int]))
-    } finally spark.sparkContext.removeSparkListener(jobListener)
+    val t = JobTrace(spark.sparkContext)(run)._2
+    (t.jobs, t.stageTasks)
   }
 
   private def jobsOf(run: => Any): Int = traceOf(run)._1
