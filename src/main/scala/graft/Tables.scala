@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, ParquetMetadata}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet table loader for the driver-provided TPC-H-ish test data
@@ -43,31 +48,36 @@ object Tables {
     * gap — a same-tick same-LENGTH in-place byte rewrite — by folding in
     * the file's last 64 bytes (the parquet footer tail: metadata length +
     * row-group offsets, which move with any content change) and recursing
-    * into child directories. Cost per lookup: a stat plus one 64-byte
-    * pread per part file — still noise next to the ~70 ms footer read it
-    * saves.
+    * into child directories. Cost per lookup: a listing plus one 64-byte
+    * pread per data file — still noise next to the ~70 ms footer read it
+    * saves. Listed through the path's Hadoop `FileSystem`, so any scheme
+    * the classpath can open works.
     */
-  private def tailSig(f: java.io.File): Int = {
-    val len = f.length
+  private def fingerprint(fs: FileSystem, files: Seq[FileStatus]): String =
+    files.map(f =>
+      s"${f.getPath}|${f.getModificationTime}|${f.getLen}|${tailSig(fs, f)}").mkString(",")
+
+  private def tailSig(fs: FileSystem, f: FileStatus): Int = {
+    val len = f.getLen
     if (len == 0) 0
     else {
-      val n = math.min(64L, len).toInt
-      val raf = new java.io.RandomAccessFile(f, "r")
-      try {
-        raf.seek(len - n)
-        val buf = new Array[Byte](n)
-        raf.readFully(buf)
-        java.util.Arrays.hashCode(buf)
-      } finally raf.close()
+      val buf = new Array[Byte](math.min(64L, len).toInt)
+      val in = fs.open(f.getPath)
+      try in.readFully(len - buf.length, buf) finally in.close()
+      java.util.Arrays.hashCode(buf)
     }
   }
-  private def fingerprint(f: java.io.File): String =
-    if (f.isDirectory) {
-      val kids = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      val inner = kids.sortBy(_.getName)
-        .map(k => s"${k.getName}:${fingerprint(k).##}").mkString(",")
-      s"${f.lastModified}|${kids.length}|${inner.##}"
-    } else s"${f.lastModified}|${f.length}|${tailSig(f)}"
+
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** The table's file system and data files (see [[dataFiles]]); throws
+    * when the path cannot be listed.
+    */
+  private def listing(path: String): (FileSystem, Seq[FileStatus]) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    (fs, dataFiles(fs, fs.getFileStatus(p)))
+  }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val perSession = cache.synchronized {
@@ -85,62 +95,108 @@ object Tables {
     // the compute() below replaces the entry in place, so superseded
     // relations are evicted instead of accreting one per regeneration.
     val path = s"$dir/$name.parquet"
-    val fp = fingerprint(new java.io.File(path))
+    // an unlistable path leaves the error to the reader below
+    val fp =
+      try { val (fs, files) = listing(path); fingerprint(fs, files) }
+      catch { case scala.util.control.NonFatal(_) => "" }
     perSession.compute(path, (_, old) =>
       if (old != null && old._1 == fp) old
       else (fp, spark.read.parquet(path)))._2
   }
 
-  /** Exact table row count from the parquet FOOTERS, host-side — zero
-    * Spark jobs (a footer read per part file, cached under the same
-    * freshness fingerprint as the relation). This is the measured gate
-    * the long-split aggregation paths route on (r19): a sum that is
-    * provably int64-safe for n rows needs n, and launching a count job
-    * to decide how to aggregate would cost more than the decimal it
-    * replaces on single-aggregation queries. Footer record counts are
-    * exact for the unfiltered table — callers gate on an UPPER bound of
-    * their group sizes, so any pre-aggregation filter only adds slack.
-    * Partition directories are counted too; a table with a data file that
-    * is not `*.parquet` counts as `Long.MaxValue`, which fails every cap.
+  /** What the long-split gates read from a table's parquet FOOTERS,
+    * host-side — zero Spark jobs (a footer read per part file, cached
+    * under a fingerprint of the listing). The gates route on it (r19): a
+    * sum that is provably int64-safe needs n and the value bound, and
+    * launching a job to decide how to aggregate would cost more than the
+    * decimal it replaces on single-aggregation queries.
+    *
+    * @param rows exact row count of the unfiltered table — callers gate
+    *        on an UPPER bound of their group sizes, so any
+    *        pre-aggregation filter only adds slack
+    * @param absMax per column path, max |value| over every row group's
+    *        min/max statistics; only plain (signed integer or floating)
+    *        numeric columns whose every column chunk carries statistics
     */
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-  def rowCount(dir: String, name: String): Long = {
-    val path = s"$dir/$name.parquet"
-    val f = new java.io.File(path)
-    val fp = fingerprint(f)
-    rowCountCache.compute(path, (_, old) =>
-      if (old != null && old._1 == fp) old
-      else {
-        val files = dataFiles(f)
-        val conf = new org.apache.hadoop.conf.Configuration()
-        // a data file the footer reader cannot count: no bound, so every
-        // gate takes its exact path
-        val total =
-          if (!files.forall(_.getName.endsWith(".parquet"))) Long.MaxValue
-          else files.map { k =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(k.getAbsolutePath), conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getRecordCount finally r.close()
-          }.sum
-        (fp, total)
-      })._2
+  private final case class Footers(rows: Long, absMax: Map[String, Double])
+
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Option[Footers])]()
+
+  /** The table's [[Footers]], listed and read through the path's Hadoop
+    * `FileSystem` (any scheme the classpath can open). None — no bound,
+    * so every gate takes its exact path — when the path cannot be listed
+    * or a footer opened, or a data file is not `*.parquet`. Partition
+    * directories are counted too.
+    */
+  private def footers(dir: String, name: String): Option[Footers] =
+    try {
+      val path = s"$dir/$name.parquet"
+      val (fs, files) = listing(path)
+      val fp = fingerprint(fs, files)
+      footerCache.compute(path, (_, old) =>
+        if (old != null && old._1 == fp) old
+        else if (!files.forall(_.getPath.getName.endsWith(".parquet"))) (fp, None)
+        else (fp, Some(summarize(files.map { f =>
+          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf))
+          try r.getFooter finally r.close()
+        }))))._2
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  private def summarize(meta: Seq[ParquetMetadata]): Footers = {
+    import scala.jdk.CollectionConverters._
+    val blocks = meta.flatMap(_.getBlocks.asScala)
+    val bound = scala.collection.mutable.Map.empty[String, Option[Double]]
+    for (b <- blocks; c <- b.getColumns.asScala) {
+      val key = c.getPath.toDotString
+      bound(key) = for (a <- bound.getOrElse(key, Some(0.0)); m <- chunkAbsMax(c))
+        yield math.max(a, m)
+    }
+    Footers(blocks.map(_.getRowCount).sum,
+      bound.collect { case (k, Some(m)) if !m.isNaN => k -> m }.toMap)
   }
+
+  private def chunkAbsMax(c: ColumnChunkMetaData): Option[Double] = {
+    val plain = c.getPrimitiveType.getLogicalTypeAnnotation match {
+      case null => true
+      case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+      case _ => false
+    }
+    val st = c.getStatistics
+    if (!plain || st == null || st.isEmpty) None
+    else if (!st.hasNonNullValue) Some(0.0) // an all-null chunk bounds nothing
+    else (st.genericGetMin, st.genericGetMax) match {
+      case (lo: java.lang.Number, hi: java.lang.Number) =>
+        Some(math.max(math.abs(lo.doubleValue), math.abs(hi.doubleValue)))
+      case _ => None
+    }
+  }
+
+  /** Exact row count of the table from its footers (see [[footers]]);
+    * `Long.MaxValue`, which fails every cap, when there is no bound.
+    */
+  def rowCount(dir: String, name: String): Long =
+    footers(dir, name).fold(Long.MaxValue)(_.rows)
+
+  /** max |value| of a numeric column from the footers' min/max
+    * statistics (see [[footers]]); None when any row group lacks them.
+    */
+  def columnAbsMax(dir: String, name: String, column: String): Option[Double] =
+    footers(dir, name).flatMap(_.absMax.get(column))
 
   /** The files Spark's reader takes as a table's data: `f` itself, or
     * every file below it, recursing into (partition) directories and
     * skipping hidden names — a leading `.`, or a leading `_` outside a
     * `col=value` directory name.
     */
-  private def dataFiles(f: java.io.File): Seq[java.io.File] =
+  private def dataFiles(fs: FileSystem, f: FileStatus): Seq[FileStatus] =
     if (!f.isDirectory) Seq(f)
-    else Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+    else fs.listStatus(f.getPath).toSeq
       .filterNot { k =>
-        val n = k.getName
+        val n = k.getPath.getName
         n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
       }
-      .flatMap(dataFiles)
+      .flatMap(dataFiles(fs, _))
 
   /** Normalizes `events.ts` to session-TZ TIMESTAMP regardless of the
     * physical parquet type the generator happened to emit. Three cases have

@@ -203,6 +203,12 @@ package object functions {
   def jaroWinkler(a: Column, b: Column): Column =
     GraftBridge.column(JaroWinkler(e(a), e(b)))
 
+  /** |a ∩ b| for two ascending arrays of distinct longs, by one merge;
+    * see [[SortedIntersectSize]].
+    */
+  def sortedIntersectSize(a: Column, b: Column): Column =
+    GraftBridge.column(SortedIntersectSize(e(a), e(b)))
+
   /** SpaceSaving heavy-hitter sketch (capacity-bounded, mergeable):
     * `array<struct<item, est, err>>`, est desc. See
     * [[graft.operators.SpaceSavingAgg]] for the invariants.

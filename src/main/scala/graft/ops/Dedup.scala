@@ -55,9 +55,13 @@ object Dedup {
     math.min(max, justified).toInt
   }
 
-  private[ops] def spread(df: DataFrame): DataFrame = {
+  private[ops] def spread(df: DataFrame): DataFrame = spreadWithWidth(df)._1
+
+  /** [[spread]] and the partition count of the frame it returns. */
+  private def spreadWithWidth(df: DataFrame): (DataFrame, Int) = {
     val target = sizedWidth(df, 64L << 10)
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
+    val n = df.rdd.getNumPartitions
+    if (n >= target) (df, n) else (df.repartition(target), target)
   }
 
   /** Word tokens; split on single spaces, keeping empties (matches DuckDB
@@ -161,104 +165,123 @@ object Dedup {
     * 2006; the candidate-generation core of PPJoin, Xiao et al. 2008) —
     * the deterministic counterpart to MinHash-LSH: every pair with
     * shingle Jaccard ≥ tau is found, no probabilistic recall and no
-    * df-cap recall erosion. The filter theorem: order the shingle
-    * vocabulary by ascending document frequency (ties by shingle text —
-    * a strict total order, no materialized integer rank needed); for a
-    * doc with n distinct shingles, its PREFIX is the first
-    * `n − ceil(tau·n) + 1` shingles in that order. If J(x,y) ≥ tau the
-    * two prefixes must share a shingle, so the candidate join runs on
-    * prefix shingles only.
+    * df-cap recall erosion. The filter theorem: fix ANY global total
+    * order on the shingle vocabulary; for a doc with n distinct
+    * shingles, its PREFIX is the first `n − ceil(tau·n) + 1` shingles in
+    * that order. If J(x,y) ≥ tau the two prefixes must share a shingle,
+    * so the candidate join runs on prefix shingles only. The order used
+    * here is ascending document frequency, ties by the shingle's integer
+    * key (see below).
     *
     * Why this scales where the plain equi-join doesn't: the join cost is
     * Σ df_prefix(s)² and rare-first ordering pushes boilerplate (high-df)
     * shingles OUT of prefixes, so hot shingles never generate join rows
     * unless a document consists almost entirely of boilerplate — in which
     * case those documents genuinely are near-dups of each other and the
-    * OUTPUT itself is quadratic. One df aggregation (combiner-friendly),
-    * one per-doc sort of its own shingles (bounded by doc length), one
-    * equi-join on prefix shingles, then exact verification on the full
-    * shingle sets — the [[jaccardOnShingles]] shape.
+    * OUTPUT itself is quadratic.
+    *
+    * Plan shape — shingle STRINGS cross exactly one exchange, everything
+    * after it runs on longs (integer-encoded token lists under a global
+    * frequency order, as in the compressed-index string joins of ICDE
+    * 2022):
+    *  - the exploded (doc_id, s) occurrences are hash-partitioned by `s`
+    *    once, at the input-derived width [[spread]] chose for the
+    *    shingle scan, and sorted by `s` within each partition;
+    *  - one window partitioned by `s` over that partitioning gives every
+    *    occurrence its shingle's df and KEY: the smallest
+    *    `monotonically_increasing_id` of the shingle's run of rows. Each
+    *    shingle lives in one partition and the id packs the partition
+    *    index with the row's position, so keys are injective (a hash
+    *    could collide and inflate `n_inter`); the run's first position
+    *    depends only on the partition's rows, not on their fetch order,
+    *    so a retried task assigns the same keys;
+    *  - one aggregation by doc_id orders each doc's keys by (df, key),
+    *    keeps the first ones as its prefix `pre` and the whole set as
+    *    `ids`, sorted by key, and is checkpointed once; the prefix
+    *    `posexplode` and both verification joins read it, so there is no
+    *    other checkpoint;
+    *  - the prefix self-join, the candidate `distinct` and verification
+    *    (one linear merge of the two `ids` arrays,
+    *    [[graft.functions.SortedIntersectSize]]) are keyed on longs.
     *
     * Output: (doc_a < doc_b, n_inter, jaccard ≥ tau) over the FULL
-    * corpus.
+    * corpus; docs with fewer than 3 tokens have no shingles and no pairs.
     */
   def prefixFilterPairs(docs: DataFrame, tau: Double): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0, 1], got $tau")
-    // compact per-doc distinct-shingle arrays, checkpointed ONCE (the
-    // minhashDedup pattern): they feed the df table, the prefix build,
-    // and verification
-    val compact = spread(docs)
-      .select(col("doc_id"), tokens(col("text")).as("w"))
-      .select(col("doc_id"), graft.functions.wordShingles(col("w"), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .localCheckpoint(true)
-    // r19 (opt): the prefix-build aggregation and the verification join
-    // are CPU-DENSE per shuffled byte (per-doc struct sorts; per-pair
-    // array_intersect) — their MB-scale exchanges AQE-coalesce to 1-2
+    import org.apache.spark.sql.expressions.Window
+    // r19 (opt): the per-doc aggregation and the verification join are
+    // CPU-DENSE per shuffled byte (per-doc struct sorts; per-pair
+    // intersections) — their MB-scale exchanges AQE-coalesce to 1-2
     // tasks and ran serially (QueryProfile: 0.9 s + 1.3 s single-task
-    // stages at local[32] while 31 cores idled). Pin those two exchanges
-    // to the same INPUT-SIZE-derived width [[spread]] chose for the
-    // shingle scan (bytes-proportional, core-capped — scale-adaptive,
-    // not a local[32] constant): explicit numPartitions is respected by
-    // AQE, and hash(doc_id)/hash(doc_b) satisfy the downstream
-    // aggregation/join clustering, so no exchange is added — the
-    // implicit one is widened.
-    val nDense = compact.rdd.getNumPartitions
-    val sh = compact.select(col("doc_id"), size(col("sh")).as("n_sh"),
-      explode(col("sh")).as("s"))
-    val dfreq = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    // per-doc shingles sorted rare-first; struct sort orders by (df, s);
-    // positions ride along for the PPJoin positional filter below
-    val pref = sh.join(dfreq, "s")
+    // stages at local[32] while 31 cores idled). Every exchange this
+    // operator places itself gets the width [[spread]] chose for the
+    // shingle scan (bytes-proportional, core-capped — scale-adaptive, not
+    // a local[32] constant): explicit numPartitions is respected by AQE,
+    // and hash(s)/hash(doc_id)/hash(doc_a) satisfy the window,
+    // aggregation and join clustering above them, so no exchange is
+    // added — the implicit one is widened.
+    val (spreadDocs, nDense) = spreadWithWidth(docs)
+    val occ = spreadDocs
+      .select(col("doc_id"), tokens(col("text")).as("w"))
+      .select(col("doc_id"),
+        explode(graft.functions.wordShingles(col("w"), 3)).as("s"))
+      .repartition(nDense, col("s"))
+      .sortWithinPartitions(col("s"))
+      .withColumn("mid", monotonically_increasing_id())
+    val byS = Window.partitionBy(col("s"))
+    val enc = occ
+      .select(col("doc_id"), count(lit(1)).over(byS).as("df"),
+        min(col("mid")).over(byS).as("key"))
       .repartition(nDense, col("doc_id"))
       .groupBy(col("doc_id"))
-      .agg(first(col("n_sh")).as("n_sh"),
-        sort_array(collect_list(struct(col("df"), col("s")))).as("o"))
-      .select(col("doc_id"), col("n_sh"),
-        // the 1e-9 epsilon guards fp64 ceil: for tau whose double repr
-        // rounds above the decimal (0.1, 0.3, ...), tau*n can land one ulp
-        // above an exact integer and ceil would overestimate, silently
-        // shortening the prefix and dropping a pair at exactly J = tau.
-        // Erring downward only lengthens prefixes — more candidates, same
-        // exact output after verification.
-        posexplode(slice(col("o"), lit(1),
-          (col("n_sh") - ceil(lit(tau) * col("n_sh") - lit(1e-9)) + 1)
-            .cast(IntegerType))))
-      .select(col("doc_id"), col("n_sh"), (col("pos") + 1).as("i"),
-        col("col.s").as("s"))
-      // checkpointed: the self-join below reads this subtree TWICE, and
-      // exchange reuse under AQE is not reliable for it — unchecked, the
-      // df-join + groupBy + posexplode upstream recomputes on both sides
-      // (measured 5-23 s full-pipeline vs 3.6 s with the cut; the
-      // regenerated small-vocabulary corpus made the upstream heavy
-      // enough to expose it)
+      .agg(sort_array(collect_list(struct(col("df"), col("key")))).as("o"))
+      // the 1e-9 epsilon guards fp64 ceil: for tau whose double repr
+      // rounds above the decimal (0.1, 0.3, ...), tau*n can land one ulp
+      // above an exact integer and ceil would overestimate, silently
+      // shortening the prefix and dropping a pair at exactly J = tau.
+      // Erring downward only lengthens prefixes — more candidates, same
+      // exact output after verification.
+      .select(col("doc_id"),
+        slice(col("o.key"), lit(1),
+          (size(col("o")) - ceil(lit(tau) * size(col("o")) - lit(1e-9)) + 1)
+            .cast(IntegerType)).as("pre"),
+        sort_array(col("o.key")).as("ids"))
       .localCheckpoint(true)
+    val pref = enc
+      .select(col("doc_id"), size(col("ids")).as("n"), posexplode(col("pre")))
+      .select(col("doc_id"), col("n"), (col("pos") + 1).as("i"), col("col").as("key"))
     // candidate pairs with the POSITIONAL filter (Xiao et al. 2008): a
-    // prefix match at rare-first positions (i, j) caps the achievable
-    // overlap at min(nx−i, ny−j) + 1, and J ≥ tau needs overlap ≥
+    // prefix match at positions (i, j) caps the achievable overlap at
+    // min(nx−i, ny−j) + 1, and J ≥ tau needs overlap ≥
     // ceil(tau/(1+tau)·(nx+ny)) — candidates that cannot reach it are
     // dropped BEFORE the distinct/verify stages
-    val cand = pref.select(col("doc_id").as("doc_a"), col("n_sh").as("na"),
-        col("i").as("ia"), col("s"))
-      .join(pref.select(col("doc_id").as("doc_b"), col("n_sh").as("nb"),
-        col("i").as("ib"), col("s")), "s")
+    val cand = pref.select(col("doc_id").as("doc_a"), col("n").as("na"),
+        col("i").as("ia"), col("key"))
+      .join(pref.select(col("doc_id").as("doc_b"), col("n").as("nb"),
+        col("i").as("ib"), col("key")), "key")
       .filter(col("doc_a") < col("doc_b"))
       .filter(least(col("na") - col("ia"), col("nb") - col("ib")) + 1 >=
         ceil(lit(tau / (1.0 + tau)) * (col("na") + col("nb")) - lit(1e-9)))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    // verification on the compact arrays: one narrow array_intersect per
+      .select(col("doc_a"), col("doc_b"))
+    // verification on the per-doc key arrays: one narrow merge per
     // candidate pair — no pair × shingle row expansion (the exploded
     // equi-join verification multiplies every candidate by its doc
-    // length; measured 3× the whole operator's cost at sf0.1)
-    cand
-      .join(compact.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
-      // pin the exchange feeding the array_intersect stage (see nDense)
-      .repartition(nDense, col("doc_b"))
-      .join(compact.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
+    // length; measured 3× the whole operator's cost at sf0.1). The width
+    // pin sits on the candidate PAIRS, before the `distinct` and before
+    // any array joins them: hash(doc_a) clusters the distinct, so it
+    // adds no exchange of its own; when the key arrays broadcast (one
+    // row per doc), the distinct, both joins and the merge run in one
+    // stage and no array is shuffled; otherwise the doc_a join reuses
+    // the partitioning
+    cand.repartition(nDense, col("doc_a")).distinct()
+      .join(enc.select(col("doc_id").as("doc_a"), col("ids").as("ida")), "doc_a")
+      .join(enc.select(col("doc_id").as("doc_b"), col("ids").as("idb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("sha"), col("shb"))).cast(LongType).as("n_inter"),
-        size(col("sha")).cast(LongType).as("na"),
-        size(col("shb")).cast(LongType).as("nb"))
+        graft.functions.sortedIntersectSize(col("ida"), col("idb")).cast(LongType)
+          .as("n_inter"),
+        size(col("ida")).cast(LongType).as("na"),
+        size(col("idb")).cast(LongType).as("nb"))
       .withColumn("jaccard",
         col("n_inter").cast(DoubleType) /
           (col("na") + col("nb") - col("n_inter")).cast(DoubleType))
@@ -283,8 +306,9 @@ object Dedup {
     * (rank/w buckets, right side replicated to its own and previous
     * bucket), so every pair with 0 < Δrank < w meets in exactly one
     * bucket and bucket sizes are uniform by construction (ranks are a
-    * permutation). Verification is the compact-array
-    * `array_intersect` shape shared with [[prefixFilterPairs]].
+    * permutation). Verification is one `array_intersect` of two per-doc
+    * shingle arrays per pair, the shape [[prefixFilterPairs]] runs as a
+    * merge of sorted integer keys.
     *
     * Output: (doc_a < doc_b, n_inter, jaccard ≥ tau).
     */

@@ -4,10 +4,13 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow,
+  UnsafeArrayData, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.unsafe.Platform
 
 import graft.functions.FloatBits
 import graft.operators.TopKBuffer
@@ -129,7 +132,8 @@ object Knn {
     *
     * @param rows (id: long, vec) rows; `vec` is fp32 (`dec` 0) or f16/bf16
     *        bits (`dec` 1/2, array<short>), decoded once per row into a
-    *        reused fp64 scratch array
+    *        reused fp64 scratch array; an `UnsafeRow`'s elements are read
+    *        in place, any other row's through `getArray`
     * @param queries non-null vectors of one length qn; each row scores
     *        min(row length, qn) elements
     * @return one buffer per query, in query order
@@ -150,18 +154,47 @@ object Knn {
     val x = new Array[Double](qn)
     val bufs = Array.fill(nq)(new TopKBuffer(k, ascending))
     rows.foreach { row =>
-      val id = row.getLong(0)
-      val vec = row.getArray(1)
-      val n = math.min(vec.numElements(), qn)
-      var j = 0
-      if (dec == 0) while (j < n) { x(j) = vec.getFloat(j).toDouble; j += 1 }
-      else if (dec == 1)
-        while (j < n) { x(j) = FloatBits.halfBitsToFloat(vec.getShort(j)).toDouble; j += 1 }
-      else
-        while (j < n) { x(j) = FloatBits.bf16BitsToFloat(vec.getShort(j)).toDouble; j += 1 }
-      scoreRow(x, n, qd, qn, nq, innerProduct, id, bufs)
+      val n = row match {
+        case u: UnsafeRow if !u.isNullAt(1) => decodeUnsafe(u, x, qn, dec)
+        case _ => decode(row.getArray(1), x, qn, dec)
+      }
+      scoreRow(x, n, qd, qn, nq, innerProduct, row.getLong(0), bufs)
     }
     bufs
+  }
+
+  /** Decodes min(length, qn) elements of the row's vector into `x` and
+    * returns that count. The element reads are those of `UnsafeArrayData`
+    * (`getFloat`/`getShort` at the header-skipped offset), taken straight
+    * from the row's buffer, so no array view is allocated per row.
+    */
+  private def decodeUnsafe(row: UnsafeRow, x: Array[Double], qn: Int, dec: Int): Int = {
+    val base = row.getBaseObject
+    val at = row.getBaseOffset + (row.getLong(1) >> 32)
+    val len = Platform.getLong(base, at).toInt
+    val data = at + UnsafeArrayData.calculateHeaderPortionInBytes(len)
+    val n = math.min(len, qn)
+    var j = 0
+    if (dec == 0)
+      while (j < n) { x(j) = Platform.getFloat(base, data + 4L * j).toDouble; j += 1 }
+    else if (dec == 1) while (j < n) {
+      x(j) = FloatBits.halfBitsToFloat(Platform.getShort(base, data + 2L * j)).toDouble; j += 1
+    } else while (j < n) {
+      x(j) = FloatBits.bf16BitsToFloat(Platform.getShort(base, data + 2L * j)).toDouble; j += 1
+    }
+    n
+  }
+
+  /** [[decodeUnsafe]] for a vector of any other row format. */
+  private def decode(vec: ArrayData, x: Array[Double], qn: Int, dec: Int): Int = {
+    val n = math.min(vec.numElements(), qn)
+    var j = 0
+    if (dec == 0) while (j < n) { x(j) = vec.getFloat(j).toDouble; j += 1 }
+    else if (dec == 1)
+      while (j < n) { x(j) = FloatBits.halfBitsToFloat(vec.getShort(j)).toDouble; j += 1 }
+    else
+      while (j < n) { x(j) = FloatBits.bf16BitsToFloat(vec.getShort(j)).toDouble; j += 1 }
+    n
   }
 
   /** Scores one decoded row `x(0 until n)` against every query in `qd`

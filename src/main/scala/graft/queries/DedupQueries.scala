@@ -137,11 +137,14 @@ private[graft] object DedupQueries {
     // tau fixes the prefix fraction at 1−tau (the production near-dup
     // threshold 0.7 scans 30% prefixes)
     QuerySpec("dedup_prefix_filter", { (s, dir) =>
-      // denseSession: the prefix build + array_intersect verify exchanges
-      // are CPU-dense per byte; see the helper's doc
+      // denseSession: the per-doc key build and verify exchanges are
+      // CPU-dense per byte; see the helper's doc
       val s2 = denseSession(s)
+      // the pairs are few (hundreds at sf0.1): they are sorted in one
+      // partition, so no range partitioner samples them first — its
+      // sampling job would recompute the whole verification
       Dedup.prefixFilterPairs(Tables(s2, dir, "documents"), 0.7)
-        .orderBy("doc_a", "doc_b")
+        .repartition(1).sortWithinPartitions("doc_a", "doc_b")
     },
       """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),

@@ -1031,9 +1031,8 @@ private[graft] object StatisticsQueries {
     // doubles appear after aggregation, in an identical formula both sides)
     // exact standardized moments (skewness, excess kurtosis) from
     // EXACT integer power sums — the distribution-shape QA row.
-    // l_quantity is integral (1..50), so x..x⁴ are exact Longs per row
-    // and the DECIMAL(38,0) accumulators never round OR overflow (a
-    // Long accumulator would overflow Σx⁴ past ~10¹² rows). Central
+    // x = CAST(l_quantity AS BIGINT); the DECIMAL(38,0) power sums never
+    // round, and overflow only once n·max|x|⁴ reaches 10³⁸. Central
     // moments expand from the raw sums in DOUBLE with the identical
     // expression in both engines (exact inputs + same IEEE op order →
     // identical bits); sqrt(m2³) instead of pow (sqrt is correctly
@@ -1042,13 +1041,17 @@ private[graft] object StatisticsQueries {
       val d38 = DecimalType(38, 0)
       val x = col("l_quantity").cast(LongType)
       // r19 (opt): the four power sums ride primitive LONG aggregation
-      // (whole-stage codegen, no per-row BigDecimal) when the FOOTER row
-      // count bounds them inside int64: x ≤ 50 (the domain the per-row
-      // LONG x⁴ above already assumes), so Σx⁴ ≤ n·6.25e6 < 2⁶³ for
-      // n ≤ 1e12. Tables.rowCount is host-side parquet-footer metadata —
-      // zero extra jobs. Cast to DECIMAL(38,0) per GROUP: the identical
-      // integers the decimal path (kept above the gate) produces.
-      val longSafe = Tables.rowCount(dir, "lineitem") <= 1000000000000L
+      // (whole-stage codegen, no per-row BigDecimal) when the parquet
+      // FOOTERS prove them inside int64: n rows of |x| ≤ m bound every
+      // per-row power and every Σxᵏ by n·m⁴, so n·m⁴ < 2⁶³ is the gate
+      // (n and m from Tables' host-side footer metadata — zero extra
+      // jobs; a table without min/max statistics takes the decimal
+      // path). Cast to DECIMAL(38,0) per GROUP: the identical integers
+      // the decimal path produces.
+      val longSafe = Tables.columnAbsMax(dir, "lineitem", "l_quantity").exists { m =>
+        val bound = BigDecimal(m).setScale(0, BigDecimal.RoundingMode.CEILING).toBigInt
+        BigInt(Tables.rowCount(dir, "lineitem")) * bound.pow(4) < (BigInt(1) << 63)
+      }
       val li = Tables(s, dir, "lineitem")
       val agg = if (longSafe)
         li.groupBy(col("l_returnflag"))
@@ -1058,13 +1061,15 @@ private[graft] object StatisticsQueries {
           .select(col("l_returnflag"), col("n_rows"),
             col("s1L").cast(d38).as("s1"), col("s2L").cast(d38).as("s2"),
             col("s3L").cast(d38).as("s3"), col("s4L").cast(d38).as("s4"))
-      else li
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(x.cast(d38)).as("s1"),
-          sum((x * x).cast(d38)).as("s2"),
-          sum((x * x * x).cast(d38)).as("s3"),
-          sum((x * x * x * x).cast(d38)).as("s4"))
+      else {
+        // the powers themselves in DECIMAL(38,0): a LONG x⁴ overflows
+        // past |x| ≈ 55,000
+        val xd = x.cast(d38)
+        li.groupBy(col("l_returnflag"))
+          .agg(count(lit(1)).as("n_rows"),
+            sum(xd).as("s1"), sum(xd * xd).as("s2"),
+            sum(xd * xd * xd).as("s3"), sum(xd * xd * xd * xd).as("s4"))
+      }
       val n = col("n_rows").cast(DoubleType)
       val s1 = col("s1").cast(DoubleType)
       val s2 = col("s2").cast(DoubleType)

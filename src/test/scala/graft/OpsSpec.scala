@@ -509,6 +509,37 @@ class OpsSpec extends AnyFunSuite {
     assert(math.abs(tauE6) < 50000L)
   }
 
+  test("q_moment_stats: exact decimal power sums when |l_quantity| is too large for int64") {
+    // x⁴ = 10²⁰ > 2⁶³: the footer bound must route the sums onto the
+    // decimal path, which must take its powers in DECIMAL(38,0)
+    val dir = java.nio.file.Files.createTempDirectory("graft_moments").toString
+    val rows = Seq("A" -> 100000.0, "A" -> 1.0, "A" -> 100000.0, "A" -> 7.0, "A" -> 2.0,
+      "N" -> 3.0, "N" -> 4.0, "N" -> 5.0)
+    val schema = StructType(Seq(StructField("l_returnflag", StringType),
+      StructField("l_quantity", DoubleType)))
+    spark.createDataFrame(java.util.Arrays.asList(rows.map { case (f, q) => Row(f, q) }: _*),
+        schema).coalesce(1).write.parquet(s"$dir/lineitem.parquet")
+    assert(Tables.columnAbsMax(dir, "lineitem", "l_quantity") === Some(100000.0))
+    val got = SparkEntry.queries("q_moment_stats")(spark, dir).collect()
+      .map(r => r.getString(0) -> (1 to 5).map(r.getLong)).toMap
+    // the query's double expression over the exact sums, op for op
+    def e6(v: Double): Long =
+      if (v.isNaN) Long.MinValue + 1 else math.floor(v * 1e6 + 0.5).toLong
+    val want = rows.groupBy(_._1).map { case (f, g) =>
+      val xs = g.map(t => BigInt(t._2.toLong))
+      val n = xs.size.toDouble
+      val Seq(s1, s2, s3, s4) = (1 to 4).map(k => xs.map(_.pow(k)).sum.toDouble)
+      val mean = s1 / n
+      val m2 = s2 / n - mean * mean
+      val m3 = s3 / n - 3.0 * mean * (s2 / n) + 2.0 * mean * mean * mean
+      val m4 = s4 / n - 4.0 * mean * (s3 / n) +
+        6.0 * mean * mean * (s2 / n) - 3.0 * mean * mean * mean * mean
+      f -> Seq(xs.size.toLong, e6(mean), e6(m2), e6(m3 / math.sqrt(m2 * m2 * m2)),
+        e6(m4 / (m2 * m2) - 3.0))
+    }
+    assert(got === want)
+  }
+
   test("q_kendall_parts witnesses == the brute-force pair/tie counts") {
     val r = SparkEntry.queries("q_kendall_parts")(spark, "/root/testdata/sf0.001").head
     val data = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")

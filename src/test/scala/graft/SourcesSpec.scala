@@ -193,4 +193,15 @@ class SourcesSpec extends AnyFunSuite {
     Files.write(java.nio.file.Paths.get(s"$path/p=2/extra.csv"), "1\n".getBytes)
     assert(Tables.rowCount(dir, "t") === Long.MaxValue)
   }
+
+  test("Tables.rowCount reads a file: URI through its FileSystem; a missing path fails closed") {
+    val dir = Files.createTempDirectory("graft_rowcount_fs").toString
+    spark.range(0, 9).toDF("id").coalesce(3).write.parquet(s"$dir/t.parquet")
+    assert(Tables.rowCount(s"file://$dir", "t") === 9L)
+    assert(Tables.rowCount(dir, "t") === 9L)
+    assert(Tables.columnAbsMax(s"file://$dir", "t", "id") === Some(8.0))
+    // nothing to list: no bound, so every gate takes its exact path
+    assert(Tables.rowCount(dir, "absent") === Long.MaxValue)
+    assert(Tables.columnAbsMax(dir, "absent", "id") === None)
+  }
 }
