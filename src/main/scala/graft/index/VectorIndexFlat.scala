@@ -17,13 +17,19 @@ import graft.operators.TopKBuffer
   * Mirrors `faiss::MetricType` as used by the reference
   * (`/root/reference/include/faiss-metal/MetalIndexFlat.h:51-57`).
   */
-sealed trait Metric { def ascending: Boolean; def sentinel: Double }
+sealed trait Metric {
+  def ascending: Boolean; def sentinel: Double
+  /** The fused kernel's metric code ([[graft.plans.Knn.scan]]). */
+  def knn: Int
+}
 object Metric {
   case object L2 extends Metric {
     val ascending = true; val sentinel = Double.PositiveInfinity
+    val knn = graft.plans.Knn.L2
   }
   case object InnerProduct extends Metric {
     val ascending = false; val sentinel = Double.NegativeInfinity
+    val knn = graft.plans.Knn.InnerProduct
   }
 }
 
@@ -394,7 +400,7 @@ final class VectorIndexFlat private (
     val (src, dec) = fusedSource
     graft.plans.Knn.partials(src, qData, k,
       ascending = metric.ascending,
-      innerProduct = metric == Metric.InnerProduct,
+      metric = metric.knn,
       decode = dec)
   }
 
@@ -557,12 +563,12 @@ final class PointSearcher private[index] (
 
   private def run(qvec: Array[Float]): Array[(Long, Double)] = {
     require(qvec != null && qvec.length == d, s"query must have dimension $d")
-    val kk = k; val asc = metric.ascending; val ip = metric == Metric.InnerProduct
+    val kk = k; val asc = metric.ascending; val m = metric.knn
     val dc = dec
     val q = Array(qvec) // task-closure copy: tiny, cheaper than a broadcast round
     val rdd = packed
     val partials = rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
-      val b = graft.plans.Knn.scan(it, q, kk, asc, ip, dc)(0)
+      val b = graft.plans.Knn.scan(it, q, kk, asc, m, dc)(0)
       (b.labels.take(b.size), b.scores.take(b.size))
     })
     VectorIndexFlat.mergePartials(

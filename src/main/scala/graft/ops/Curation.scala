@@ -295,7 +295,9 @@ object Curation {
                                 featureNames: Seq[String])
 
   /** Per-doc feature frame for the model-based quality filter — all from
-    * existing deterministic kernels, one narrow pass each:
+    * existing deterministic kernels: one projection over the spread docs
+    * for the per-doc counts, language and entropy, joined on doc_id (a
+    * key the docs hold once) to the span profile:
     * ln(n_tokens) and its square (a two-sided length window is a
     * PARABOLA threshold — linearly separable in this basis, not in
     * ln(n) alone), type-token ratio, average token length, an
@@ -307,17 +309,15 @@ object Curation {
     * genuinely expensive input.
     */
   def qualityFeatures(docs: DataFrame): DataFrame = {
-    val q = TextAnalysis.quality(docs)
+    val q = TextAnalysis.qualityWith(Dedup.spread(docs),
+        when(TextAnalysis.langId(col("text")) === "und", 1.0).otherwise(0.0).as("und"),
+        coalesce(graft.functions.charEntropy(col("text")), lit(0.0)).as("ent"))
       .select(col("doc_id"), col("n_tokens"), col("type_token_ratio"),
-        col("avg_token_len"))
-    val lang = docs.select(col("doc_id"),
-      when(TextAnalysis.langId(col("text")) === "und", 1.0).otherwise(0.0).as("und"))
-    val ent = docs.select(col("doc_id"),
-      coalesce(graft.functions.charEntropy(col("text")), lit(0.0)).as("ent"))
+        col("avg_token_len"), col("und"), col("ent"))
     val spans = Dedup.duplicatedSpans(docs, n = 8)
       .select(col("doc_id"), col("dup_frac_e6"), col("dup_frac"))
     val lnTok = log(col("n_tokens").cast(DoubleType) + 1.0)
-    q.join(lang, "doc_id").join(ent, "doc_id").join(spans, "doc_id")
+    q.join(spans, "doc_id")
       .select(col("doc_id"), col("n_tokens"),
         col("type_token_ratio").as("ttr"), col("und"),
         col("dup_frac_e6"), col("dup_frac"),
@@ -334,9 +334,11 @@ object Curation {
     * λ=1e-6 for conditioning. Deterministic by the same contract as
     * every trained model here (sorted sample → pure function of the
     * sample set; fixed iteration count; no RNG), so the scored corpus
-    * and the verdicts are reproducible run-to-run. Training cost is
-    * corpus-independent at scale (bounded sample); scoring is a narrow
-    * projection with the weights as literals.
+    * and the verdicts are reproducible run-to-run. The whole `labeled`
+    * frame is collected to the driver, so training cost is the caller's
+    * sample size (`q_quality_model` passes the even half of the corpus,
+    * which grows with it); scoring is a narrow projection with the
+    * weights as literals.
     *
     * `labeled`: (doc_id, f: array<double>, label: 0.0/1.0).
     */

@@ -1085,15 +1085,21 @@ object Dedup {
     // the positional-gram frame feeds three sub-plans (df aggregation,
     // dup-membership probe, n_spans projection) and Spark does not share
     // common sub-plans across join inputs — checkpoint the compact
-    // one-row-per-doc form so tokenize+shingle runs ONCE (the mmrTopK
-    // pattern)
-    val pos = spread(docs)
+    // one-row-per-doc form so tokenize+shingle runs ONCE
+    val (spreadDocs, width) = spreadWithWidth(docs)
+    val pos = spreadDocs
       .select(col("doc_id"), tokens(col("text")).as("w"))
       .select(col("doc_id"),
         graft.functions.wordShingles(col("w"), n, distinct = false).as("g"))
       .localCheckpoint(true)
     val spans = pos.select(col("doc_id"), explode(col("g")).as("gram"))
-    val dupGrams = spans.select(col("doc_id"), col("gram")).distinct()
+    // the df aggregation's one exchange: the exploded grams hashed on the
+    // gram at the spread width (the [[prefixFilterPairs]] rule), which the
+    // distinct and the count by gram both cluster on, and AQE keeps an
+    // explicit width — left to itself it coalesced these MB-scale
+    // exchanges to single-task stages
+    val dupGrams = spans.select(col("doc_id"), col("gram"))
+      .repartition(width, col("gram")).distinct()
       .groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDocs)
       .select(col("gram"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions._
 import graft.operators.TopKBuffer
+import graft.plans.Knn
 
 /** Similarity-search operators over an embedding column:
   * brute-force top-k (the exact baseline) and an IVF-style partitioned
@@ -41,23 +42,104 @@ object Similarity {
       .select(col("qid"), (col("pos") + 1).cast(LongType).as("rank"),
         col("col.label").as("label"), col("col.score").as("score"))
 
-  /** Exact top-k by squared L2. queries: (qid, qv); vectors: (id, vec).
-    * Broadcast the queries; k-bounded partial agg map-side; shuffle is k
-    * rows per query. Output: (qid, rank[1-based], label, score).
+  /** Exact top-k by squared L2 (`l2`), inner product (`ip`) or cosine.
+    * queries: (qid, qv); vectors: (id, vec). Output: (qid, rank[1-based],
+    * label, score), qid keeping the queries' type.
+    *
+    * Queries that fit the fused budget ([[fusedPartials]]) are scored by
+    * the fused kNN kernel ([[graft.plans.Knn.scan]]) on each partition of
+    * the spread vectors, which emits ≤ nq·k rows a partition. Otherwise
+    * the queries are broadcast and a cross join scores every pair through
+    * the Catalyst expressions. Either way a k-bounded `topK` merges each
+    * query's rows; both paths run the same fp64 sums and the (score,
+    * label) order, so they return the same rows, bit for bit.
     */
   def bruteForceTopK(vectors: DataFrame, queries: DataFrame, k: Int,
-                     metric: String = "l2"): DataFrame = {
-    val (scoreCol, asc) = metric match {
-      case "l2"     => (squaredL2(col("vec"), col("qv")), true)
-      case "ip"     => (dotProduct(col("vec"), col("qv")), false)
-      case "cosine" => (cosineSimilarity(col("vec"), col("qv")), false)
-      case other    => throw new IllegalArgumentException(s"unknown metric $other")
+                     metric: String = "l2"): DataFrame =
+    exactTopK(vectors, queries, k, metric, round6 = false)
+
+  /** A metric name's Catalyst score over (vec, qv), whether smaller is
+    * better, and its fused-kernel code.
+    */
+  private def metricOf(metric: String): (Column, Boolean, Int) = metric match {
+    case "l2"     => (squaredL2(col("vec"), col("qv")), true, Knn.L2)
+    case "ip"     => (dotProduct(col("vec"), col("qv")), false, Knn.InnerProduct)
+    case "cosine" => (cosineSimilarity(col("vec"), col("qv")), false, Knn.Cosine)
+    case other    => throw new IllegalArgumentException(s"unknown metric $other")
+  }
+
+  /** [[bruteForceTopK]]; under `round6` every score is rounded with
+    * [[q6]] and NaN scores are dropped before the top-k.
+    */
+  private[graft] def exactTopK(vectors: DataFrame, queries: DataFrame, k: Int,
+                               metric: String, round6: Boolean): DataFrame = {
+    val (_, asc, code) = metricOf(metric)
+    fusedPartials(vectors, queries, k, asc, code, round6) match {
+      case Some(partials) =>
+        explodeHits(partials.groupBy(col("qid"))
+            .agg(topK(col("score"), col("id"), k, ascending = asc).as("hits")))
+          .withColumn("qid", col("qid").cast(queries.schema("qid").dataType))
+      case None => crossJoinTopK(vectors, queries, k, metric, round6)
     }
+  }
+
+  /** [[exactTopK]]'s path for queries over the fused budget, and the
+    * reference the fused route is checked against: the queries broadcast,
+    * a cross join with the spread vectors scoring every pair through the
+    * Catalyst expressions, and `topK` per query.
+    */
+  private[graft] def crossJoinTopK(vectors: DataFrame, queries: DataFrame, k: Int,
+                                   metric: String, round6: Boolean): DataFrame = {
+    val (scoreCol, asc, _) = metricOf(metric)
+    val scored = Dedup.spread(vectors).crossJoin(broadcast(queries))
+      .select(col("qid"), col("id").as("label"),
+        (if (round6) q6(scoreCol) else scoreCol).as("score"))
     explodeHits(
-      Dedup.spread(vectors).crossJoin(broadcast(queries))
-        .select(col("qid"), col("id").as("label"), scoreCol.as("score"))
+      (if (round6) scored.filter(!isnan(col("score"))) else scored)
         .groupBy(col("qid"))
         .agg(topK(col("score"), col("label"), k, ascending = asc).as("hits")))
+  }
+
+  /** The fused route of [[exactTopK]]: the kernel's (qid, id, score)
+    * partials over the spread vectors, or None when the queries do not
+    * fit it. The gate fails closed; its one action is the collect of at
+    * most `maxFusedStateRows / k + 1` queries, in place of the collect the
+    * broadcast would make. The kernel runs only when nq·k and nq·d both
+    * fit [[graft.index.VectorIndexFlat.maxFusedStateRows]] (2²²), every
+    * qid and query vector is non-null, the query vectors have one length,
+    * and qid, id and the vectors have the kernel's types (integers and
+    * array<float>). The vectors are not counted: partials are exact at
+    * any size. Rows with a null id or vector score nothing, as the cross
+    * join's null scores do.
+    */
+  private def fusedPartials(vectors: DataFrame, queries: DataFrame, k: Int,
+                            ascending: Boolean, metric: Int,
+                            round6: Boolean): Option[DataFrame] = {
+    def integral(t: DataType) = t match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    def floats(t: DataType) = t match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    val budget = graft.index.VectorIndexFlat.maxFusedStateRows
+    if (k <= 0 ||
+        !integral(queries.schema("qid").dataType) || !floats(queries.schema("qv").dataType) ||
+        !integral(vectors.schema("id").dataType) || !floats(vectors.schema("vec").dataType))
+      return None
+    val rows = queries.select(col("qid").cast(LongType), col("qv"))
+      .limit((budget / k).toInt + 1).collect()
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val qs = rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+    val d = qs.headOption.fold(0)(_._2.length)
+    if (qs.length.toLong * k > budget || qs.length.toLong * d > budget ||
+        qs.exists(_._2.length != d)) None
+    else Some(Knn.partials(
+      Dedup.spread(vectors)
+        .filter(col("id").isNotNull && col("vec").isNotNull)
+        .select(col("id").cast(LongType).as("id"), col("vec")),
+      qs, k, ascending, metric, round6 = round6))
   }
 
   /** Measured-size routing between the broadcast and shuffle-tiled
@@ -115,12 +197,7 @@ object Similarity {
     val t =
       if (numTiles > 0) numTiles
       else vectors.sparkSession.sparkContext.defaultParallelism
-    val (scoreCol, asc) = metric match {
-      case "l2"     => (squaredL2(col("vec"), col("qv")), true)
-      case "ip"     => (dotProduct(col("vec"), col("qv")), false)
-      case "cosine" => (cosineSimilarity(col("vec"), col("qv")), false)
-      case other    => throw new IllegalArgumentException(s"unknown metric $other")
-    }
+    val (scoreCol, asc, _) = metricOf(metric)
     val vt = vectors.withColumn("tile", pmod(hash(col("id")), lit(t)))
     val qt = queries.withColumn("tile",
       explode(sequence(lit(0), lit(t - 1))))
@@ -1164,15 +1241,22 @@ object Similarity {
     * candidates, greedily select k maximizing
     * λ·rel(q,d) − (1−λ)·max_{s∈selected} sim(d,s) — the standard
     * retrieval-diversification pass (RAG context assembly, dedup'd search
-    * results). Plan shape: one kNN pass for candidates, one bounded
-    * candidate×candidate cosine join (nq·candN² rows — candN is a
-    * constant, never the corpus), then the inherently-sequential greedy
-    * runs per-query inside `mapGroups` — distributed BY QUERY, each group
-    * a few hundred rows. Relevances and pairwise sims are rounded to 1e-6
-    * (identical doubles in every engine); the combined score is then exact
-    * arithmetic on those — so the (score desc, id asc) selection order is
+    * results).
+    *
+    * Plan shape: the candidates are [[exactTopK]]'s cosine top-`candN`
+    * (the fused kernel when the queries fit its budget, else the
+    * broadcast cross join); the ≤ nq·candN candidates are broadcast
+    * against the corpus to fetch their vectors and gathered by qid, one
+    * shuffle of ≤ candN rows a query (candN is a constant, never the
+    * corpus). Each query's group then computes its candN² pairwise sims
+    * ([[graft.plans.Knn.cosine]], each vector's ‖v‖² once) and runs the
+    * inherently sequential greedy ([[mmrGreedy]]).
+    *
+    * Relevances and pairwise sims are rounded to 1e-6 (identical doubles
+    * in every engine); the combined score is then exact arithmetic on
+    * those — so the (score desc, id asc) selection order is
     * engine-independent and the whole operator reproduces in a DuckDB
-    * recursive CTE.
+    * recursive CTE. Output: (qid: long, rank[1-based], id, score).
     */
   def mmrTopK(vectors: DataFrame, queries: DataFrame, k: Int,
               candN: Int = 20, lambda: Double = 0.5): DataFrame = {
@@ -1186,81 +1270,93 @@ object Similarity {
     // Zero-norm vectors have NaN cosine; TopKAgg only ranks NaN worst
     // WITHIN a full buffer — under candN entries a NaN candidate survives,
     // and the greedy's unconditional first-pick would then select it at
-    // rank 1 (NaN comparisons block any later replacement). Filter before
-    // the topK, mirroring [[topCosinePairs]]; the oracle filters likewise.
-    val cand = explodeHits(
-      Dedup.spread(vectors).crossJoin(broadcast(queries))
-        .select(col("qid"), col("id").as("label"),
-          q6(cosineSimilarity(col("vec"), col("qv"))).as("score"))
-        .filter(!isnan(col("score")))
-        .groupBy(col("qid"))
-        .agg(graft.functions.topK(col("score"), col("label"), candN,
-          ascending = false).as("hits")))
+    // rank 1 (NaN comparisons block any later replacement). NaN is dropped
+    // before the topK, mirroring [[topCosinePairs]]; the oracle filters
+    // likewise.
+    val cand = exactTopK(vectors, queries, candN, "cosine", round6 = true)
       .select(col("qid"), col("label").as("id"), col("score").as("rel"))
     // attach each candidate's vector: broadcast the (tiny) candidate set
     // against the (huge) corpus — never the reverse
-    val withVec = broadcast(cand)
-      .join(vectors.select(col("id"), col("vec")), "id")
-      .select(col("qid"), col("id"), col("rel"), col("vec"))
-      .localCheckpoint(true) // feeds both sides of the pair join
-    val pairs = withVec.as("x").join(withVec.as("y"), "qid")
-      .select(col("qid"), col("x.id").as("ia"), col("x.rel").as("rel"),
-        col("y.id").as("ib"),
-        q6(cosineSimilarity(col("x.vec"), col("y.vec"))).as("sim"))
-      .as[(Long, Long, Double, Long, Double)]
-    pairs.groupByKey(_._1).flatMapGroups { (qid, it) =>
-      // index candidates 0..n−1 once (ids ascending, so index order = id
-      // order and the ascending scan's first-wins IS the min-id tie-break);
-      // rel and sim become array reads — no boxed tuple keys, no linear
-      // `selected.contains` scans in the O(n²·k) inner loop
-      val rows = it.toArray
-      val ids = rows.map(_._2).distinct.sorted
-      val n = ids.length
-      val idx = new scala.collection.mutable.LongMap[Int](n * 2)
+    broadcast(cand).join(vectors.select(col("id"), col("vec")), "id")
+      .groupBy(col("qid"))
+      .agg(collect_list(struct(col("id"), col("rel"), col("vec"))).as("c"))
+      .as[(Long, Seq[(Long, Double, Array[Float])])]
+      .flatMap { case (qid, c) => mmrGreedy(qid, c, k, lambda) }
+      .toDF("qid", "rank", "id", "score")
+  }
+
+  /** One query's MMR selection over its candidates (id, rel, vec):
+    * (qid, rank, id, score) rows, best first.
+    */
+  private def mmrGreedy(qid: Long, cands: Seq[(Long, Double, Array[Float])],
+                        k: Int, lambda: Double): Seq[(Long, Long, Long, Double)] = {
+    // index candidates 0..n−1 by ascending id, so index order is id order
+    // and the ascending scan's first-wins IS the min-id tie-break; rel and
+    // sim are array reads in the O(n·k²) inner loop
+    val cs = cands.sortBy(_._1).distinctBy(_._1).toArray
+    val n = cs.length
+    val rel = cs.map(_._2)
+    val vec = cs.map(_._3)
+    val normSq = vec.map { v =>
+      var acc = 0.0
       var i = 0
-      while (i < n) { idx(ids(i)) = i; i += 1 }
-      val rel = new Array[Double](n)
-      val sim = Array.ofDim[Double](n, n)
-      rows.foreach { r =>
-        val a = idx(r._2); rel(a) = r._3; sim(a)(idx(r._4)) = r._5
+      while (i < v.length) { val x = v(i).toDouble; acc += x * x; i += 1 }
+      acc
+    }
+    // sim is symmetric bit for bit (each product and the norm product
+    // commute), so each pair is scored once
+    val sim = Array.ofDim[Double](n, n)
+    var a = 0
+    while (a < n) {
+      var b = a + 1
+      while (b < n) {
+        val va = vec(a); val vb = vec(b)
+        val m = math.min(va.length, vb.length)
+        var dot = 0.0
+        var i = 0
+        while (i < m) { dot += va(i).toDouble * vb(i).toDouble; i += 1 }
+        val s = Knn.round6(Knn.cosine(dot, normSq(a), normSq(b)))
+        sim(a)(b) = s; sim(b)(a) = s
+        b += 1
       }
-      val kEff = math.min(k, n)
-      val selected = new Array[Int](kEff)
-      val taken = new Array[Boolean](n)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-      var nSel = 0
-      while (nSel < kEff) {
-        var best = -1
-        var bestScore = 0.0
-        var c = 0
-        while (c < n) {
-          if (!taken(c)) {
-            // rel and sim are round6 values — identical doubles in every
-            // engine — so the combined score needs NO further rounding:
-            // λ·rel − (1−λ)·mx is deterministic arithmetic on identical
-            // inputs (a second rounding would land exactly on half-ulp
-            // boundaries at λ=0.5, where round-half conventions diverge)
-            val score =
-              if (nSel == 0) rel(c)
-              else {
-                var mx = Double.NegativeInfinity
-                var s = 0
-                while (s < nSel) {
-                  val v = sim(c)(selected(s)); if (v > mx) mx = v; s += 1
-                }
-                lambda * rel(c) - (1 - lambda) * mx
+      a += 1
+    }
+    val kEff = math.min(k, n)
+    val selected = new Array[Int](kEff)
+    val taken = new Array[Boolean](n)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
+    var nSel = 0
+    while (nSel < kEff) {
+      var best = -1
+      var bestScore = 0.0
+      var c = 0
+      while (c < n) {
+        if (!taken(c)) {
+          // rel and sim are round6 values — identical doubles in every
+          // engine — so the combined score needs NO further rounding:
+          // λ·rel − (1−λ)·mx is deterministic arithmetic on identical
+          // inputs (a second rounding would land exactly on half-ulp
+          // boundaries at λ=0.5, where round-half conventions diverge)
+          val score =
+            if (nSel == 0) rel(c)
+            else {
+              var mx = Double.NegativeInfinity
+              var s = 0
+              while (s < nSel) {
+                val v = sim(c)(selected(s)); if (v > mx) mx = v; s += 1
               }
-            if (best < 0 || score > bestScore) { best = c; bestScore = score }
-          }
-          c += 1
+              lambda * rel(c) - (1 - lambda) * mx
+            }
+          if (best < 0 || score > bestScore) { best = c; bestScore = score }
         }
-        taken(best) = true
-        selected(nSel) = best
-        nSel += 1
-        out += ((qid, nSel.toLong, ids(best), bestScore))
+        c += 1
       }
-      out.iterator
-    }.toDF("qid", "rank", "id", "score")
+      taken(best) = true
+      selected(nSel) = best
+      nSel += 1
+      out += ((qid, nSel.toLong, cs(best)._1, bestScore))
+    }
+    out.toSeq
   }
 
   /** IVFPQ composite: IVF coarse partitioning × PQ code compression — the

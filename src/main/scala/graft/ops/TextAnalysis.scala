@@ -71,13 +71,18 @@ object TextAnalysis {
   /** Per-doc quality metrics. All ratios are exact-integer divisions →
     * bit-identical doubles in any engine.
     */
-  def quality(docs: DataFrame): DataFrame = {
+  def quality(docs: DataFrame): DataFrame = qualityWith(docs)
+
+  /** [[quality]] with `extra` columns of `docs` computed in the same
+    * projection, after the counts.
+    */
+  private[ops] def qualityWith(docs: DataFrame, extra: Column*): DataFrame = {
     val w = toks(col("text"))
-    docs.select(
+    docs.select(Seq(
       col("doc_id"),
       size(w).cast(LongType).as("n_tokens"),
       size(array_distinct(w)).cast(LongType).as("n_distinct"),
-      length(col("text")).cast(LongType).as("n_chars"))
+      length(col("text")).cast(LongType).as("n_chars")) ++ extra: _*)
       .withColumn("type_token_ratio",
         col("n_distinct").cast(DoubleType) / col("n_tokens").cast(DoubleType))
       .withColumn("avg_token_len",

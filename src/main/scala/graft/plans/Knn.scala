@@ -27,19 +27,23 @@ import graft.operators.TopKBuffer
   * no per-pair join row, no encoder copy. The regular `TopKAgg` on top
   * performs the final merge (the analog of the fused kernel's SIMD-group-0
   * merge).
+  *
+  * `metric` is a [[Knn]] metric code (`L2`, `InnerProduct`, `Cosine`);
+  * `round6` finishes each score with [[Knn.round6]] and drops NaN scores.
   */
 case class KnnNode(
     child: LogicalPlan,
     queries: Seq[(Long, Array[Float])],
     k: Int,
     ascending: Boolean,
-    innerProduct: Boolean,
+    metric: Int,
     // 0 = fp32 child rows; 1 = f16 bits (array<short>); 2 = bf16 bits.
     // Reduced precision is decoded inside the fused loop, once per row
     // into a reused fp64 scratch array — the scan reads half the bytes
     // and no per-row fp32 array is allocated (the J4/J5 analog of the
     // reference's half-width GEMM tiles, shaders/simdgroup_gemm.metal:262-370).
     decode: Int = 0,
+    round6: Boolean = false,
     // constructor field, NOT a val: tree copies (optimizer rewrites) must
     // preserve the expression ids consumers already reference
     output: Seq[Attribute] = KnnNode.freshOutput())
@@ -65,8 +69,9 @@ case class KnnPartialExec(
     queries: Seq[(Long, Array[Float])],
     k: Int,
     ascending: Boolean,
-    innerProduct: Boolean,
+    metric: Int,
     decode: Int,
+    round6: Boolean,
     child: SparkPlan)
   extends UnaryExecNode {
 
@@ -77,11 +82,12 @@ case class KnnPartialExec(
     val bc = session.sparkContext.broadcast(queries.toArray)
     val kk = k
     val asc = ascending
-    val ip = innerProduct
+    val m = metric
     val dec = decode
+    val r6 = round6
     child.execute().mapPartitions({ it =>
       val qs = bc.value
-      val bufs = Knn.scan(it, qs.map(_._2), kk, asc, ip, dec)
+      val bufs = Knn.scan(it, qs.map(_._2), kk, asc, m, dec, r6)
       // UnsafeRow output: lets this node sit at the ROOT of a plan too
       // (e.g. a collect of the partials for a driver-side merge) — Spark's
       // byte-array collect path casts rows to UnsafeRow
@@ -108,8 +114,8 @@ object KnnStrategy extends SparkStrategy {
 
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case KnnNode(child, queries, k, asc, ip, dec, out) =>
-      KnnPartialExec(out, queries, k, asc, ip, dec, planLater(child)) :: Nil
+    case KnnNode(child, queries, k, asc, m, dec, r6, out) =>
+      KnnPartialExec(out, queries, k, asc, m, dec, r6, planLater(child)) :: Nil
     case _ => Nil
   }
 }
@@ -124,22 +130,41 @@ object Knn {
     }
   }
 
+  /** Metric codes of [[scan]]: squared L2, inner product, and cosine in
+    * `graft.functions.cosineSimilarity`'s arithmetic ([[cosine]]).
+    */
+  final val L2 = 0
+  final val InnerProduct = 1
+  final val Cosine = 2
+
   /** The fused kNN kernel: one pass over (id, vec) rows that keeps each
     * query's best k. Every index search path runs it —
     * [[KnnPartialExec]] per partition of a fused batch `search` or a
     * `searchPoint`, and `PointSearcher` per partition of its snapshot —
-    * so their scores are bit-identical.
+    * so their scores are bit-identical. `Similarity.bruteForceTopK` and
+    * `Similarity.mmrTopK`'s candidates run it too when their queries fit
+    * the fused budget, and otherwise fall back to a broadcast cross join
+    * of the same arithmetic.
     *
-    * @param rows (id: long, vec) rows; `vec` is fp32 (`dec` 0) or f16/bf16
-    *        bits (`dec` 1/2, array<short>), decoded once per row into a
-    *        reused fp64 scratch array; an `UnsafeRow`'s elements are read
-    *        in place, any other row's through `getArray`
+    * The metric is chosen once per call: L2 and inner product without
+    * `round6` take the four-query blocked loop ([[scoreRow]]), cosine or
+    * `round6` the per-score finishing loop ([[scanFinished]]).
+    *
+    * @param rows (id: long, vec) rows with a non-null `vec`; `vec` is fp32
+    *        (`dec` 0) or f16/bf16 bits (`dec` 1/2, array<short>), decoded
+    *        once per row into a reused fp64 scratch array; an
+    *        `UnsafeRow`'s elements are read in place, any other row's
+    *        through `getArray`
     * @param queries non-null vectors of one length qn; each row scores
-    *        min(row length, qn) elements
+    *        min(row length, qn) elements (cosine's norms take each
+    *        vector's full length)
+    * @param metric [[L2]], [[InnerProduct]] or [[Cosine]]
+    * @param round6 round each score with [[round6]] and drop NaN scores
     * @return one buffer per query, in query order
     */
   def scan(rows: Iterator[InternalRow], queries: Array[Array[Float]], k: Int,
-           ascending: Boolean, innerProduct: Boolean, dec: Int): Array[TopKBuffer] = {
+           ascending: Boolean, metric: Int, dec: Int,
+           round6: Boolean = false): Array[TopKBuffer] = {
     val nq = queries.length
     val qn = if (nq == 0) 0 else queries(0).length
     // the queries widened to fp64 once, query-major
@@ -153,15 +178,90 @@ object Knn {
     }
     val x = new Array[Double](qn)
     val bufs = Array.fill(nq)(new TopKBuffer(k, ascending))
-    rows.foreach { row =>
-      val n = row match {
-        case u: UnsafeRow if !u.isNullAt(1) => decodeUnsafe(u, x, qn, dec)
-        case _ => decode(row.getArray(1), x, qn, dec)
+    if (metric == Cosine || round6)
+      scanFinished(rows, x, qd, qn, nq, metric, dec, round6, bufs)
+    else {
+      val ip = metric == InnerProduct
+      rows.foreach { row =>
+        val n = row match {
+          case u: UnsafeRow if !u.isNullAt(1) => decodeUnsafe(u, x, qn, dec)
+          case _ => decode(row.getArray(1), x, qn, dec)
+        }
+        scoreRow(x, n, qd, qn, nq, ip, row.getLong(0), bufs)
       }
-      scoreRow(x, n, qd, qn, nq, innerProduct, row.getLong(0), bufs)
     }
     bufs
   }
+
+  /** Cosine similarity from a dot product and the two squared norms, in
+    * `graft.functions.cosineSimilarity`'s fp64 order: dot /
+    * (sqrt(‖a‖²)·sqrt(‖b‖²)), NaN when that product is 0. The one
+    * definition outside Catalyst: [[scan]], `Similarity.mmrTopK`'s
+    * pairwise sims and the streaming semantic dedup call it.
+    */
+  def cosine(dot: Double, normSqA: Double, normSqB: Double): Double = {
+    val denom = math.sqrt(normSqA) * math.sqrt(normSqB)
+    if (denom == 0.0) Double.NaN else dot / denom
+  }
+
+  /** `Similarity.q6` on one double: floor(x·1e6 + ½)/1e6 through a long,
+    * as Spark's `floor` returns one; NaN and ±Inf pass through.
+    */
+  def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else math.floor(x * 1e6 + 0.5).toLong.toDouble / 1e6
+
+  /** [[scan]]'s loop for scores that need finishing: each row's ‖v‖² is
+    * taken once over its full length when the metric is cosine, each
+    * query is scored on its own left to right (the sums of [[scoreRow]]),
+    * then divided by the norms ([[cosine]]) and, under `round6`, rounded
+    * with [[round6]], a NaN being dropped.
+    */
+  private def scanFinished(rows: Iterator[InternalRow], x: Array[Double],
+                           qd: Array[Double], qn: Int, nq: Int, metric: Int,
+                           dec: Int, round6: Boolean, bufs: Array[TopKBuffer]): Unit = {
+    val cos = metric == Cosine
+    val ip = metric != L2
+    val qNormSq = new Array[Double](nq)
+    var q = 0
+    while (q < nq) {
+      var acc = 0.0
+      var j = 0
+      while (j < qn) { val v = qd(q * qn + j); acc += v * v; j += 1 }
+      qNormSq(q) = acc
+      q += 1
+    }
+    rows.foreach { row =>
+      val vec = row.getArray(1)
+      val n = decode(vec, x, qn, dec)
+      var normSq = 0.0
+      if (cos) {
+        val len = vec.numElements()
+        var j = 0
+        while (j < n) { normSq += x(j) * x(j); j += 1 }
+        while (j < len) { val v = element(vec, j, dec); normSq += v * v; j += 1 }
+      }
+      val id = row.getLong(0)
+      var qi = 0
+      while (qi < nq) {
+        val o = qi * qn
+        var acc = 0.0
+        var j = 0
+        if (ip) while (j < n) { acc += x(j) * qd(o + j); j += 1 }
+        else while (j < n) { val dd = x(j) - qd(o + j); acc += dd * dd; j += 1 }
+        val s = if (cos) cosine(acc, normSq, qNormSq(qi)) else acc
+        if (!round6) bufs(qi).insert(s, id)
+        else { val r = Knn.round6(s); if (!r.isNaN) bufs(qi).insert(r, id) }
+        qi += 1
+      }
+    }
+  }
+
+  /** Element `j` of a vector, decoded as [[decode]] does. */
+  private def element(vec: ArrayData, j: Int, dec: Int): Double =
+    if (dec == 0) vec.getFloat(j).toDouble
+    else if (dec == 1) FloatBits.halfBitsToFloat(vec.getShort(j)).toDouble
+    else FloatBits.bf16BitsToFloat(vec.getShort(j)).toDouble
 
   /** Decodes min(length, qn) elements of the row's vector into `x` and
     * returns that count. The element reads are those of `UnsafeArrayData`
@@ -250,18 +350,20 @@ object Knn {
     * @param queries non-null vectors, all of one length (checked here, on
     *         the driver); each row scores min(row length, query length)
     *         elements
+    * @param metric [[L2]], [[InnerProduct]] or [[Cosine]]
     * @param decode 0 = the vector column is fp32; 1/2 = f16/bf16 bits
     *         (array<short>), decoded once per row inside the fused loop.
+    * @param round6 round each score with [[round6]] and drop NaN scores
     */
   def partials(vectors: DataFrame, queries: Seq[(Long, Array[Float])],
-               k: Int, ascending: Boolean, innerProduct: Boolean,
-               decode: Int = 0): DataFrame = {
+               k: Int, ascending: Boolean, metric: Int,
+               decode: Int = 0, round6: Boolean = false): DataFrame = {
     require(queries.forall(_._2 != null) && queries.map(_._2.length).distinct.size <= 1,
       "Knn.partials: query vectors must be non-null and of one length")
     val spark = vectors.sparkSession
     install(spark)
     GraftBridge.ofRows(spark,
       KnnNode(vectors.queryExecution.analyzed, queries, k, ascending,
-        innerProduct, decode))
+        metric, decode, round6))
   }
 }

@@ -1214,13 +1214,15 @@ private[graft] object VectorQueries {
       val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
       val queries = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      // ≤ nq·k rows: sorted in one partition, so no range partitioner
+      // samples (and recomputes) the greedy's input first
       Similarity.mmrTopK(vectors, queries, k = 5, candN = 20, lambda = 0.5)
-        .orderBy("qid", "rank")
+        .repartition(1).sortWithinPartitions("qid", "rank")
     },
     // greedy MMR as a recursive CTE: state = (qid, rank, selected list);
     // each step's LATERAL picks the remaining candidate maximizing
     // 0.5·rel − 0.5·max-sim-to-selected (exact arithmetic on round6
-    // inputs; ties → min id). Matches mapGroups greedy step for step.
+    // inputs; ties → min id). Matches mmrTopK's greedy step for step.
       """WITH RECURSIVE
         |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
         |qc AS (SELECT qid, id,

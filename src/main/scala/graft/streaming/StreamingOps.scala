@@ -492,8 +492,7 @@ object StreamingOps {
         nb += b(i).toDouble * b(i).toDouble
         i += 1
       }
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      if (denom == 0.0) Double.NaN else dot / denom
+      graft.plans.Knn.cosine(dot, na, nb)
     }
     def fn(cid: Long, it: Iterator[(Long, Array[Float], Long)],
            state: GroupState[Seq[SemMember]]): Iterator[SemFlag] = {

@@ -37,7 +37,7 @@ class KnnPlanSpec extends AnyFunSuite {
       .repartition(4)
     val qs = Oracle.genVectors(3, 16, seed = 7)
       .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq
-    val partials = Knn.partials(vdf, qs, 5, ascending = true, innerProduct = false)
+    val partials = Knn.partials(vdf, qs, 5, ascending = true, metric = Knn.L2)
     assert(partials.count() <= 4L * 3 * 5)
     // global top-k over partials equals scalar oracle
     import graft.functions.topK
