@@ -304,18 +304,13 @@ package object functions {
   def witnessSplit3(c: Column, scale: Double): (Column, Column, Column) = {
     import org.apache.spark.sql.functions.{isnan, lit, pmod, when}
     val lt = org.apache.spark.sql.types.LongType
-    val B = 2147483648.0 // 2^31, exact double
+    val B = SplitBase
     val x = c * lit(scale) + lit(0.5)
     val f = x - pmod(x, lit(1.0))
     val lo = f % lit(B)
     val t = (f - lo) / lit(B)
     val mid = t % lit(B)
     val hi = (t - mid) / lit(B)
-    def tri(s: Long): (Long, Long, Long) = {
-      val h = s >> 62; val r = s - (h << 62)
-      val m = r >> 31; val a = r - (m << 31)
-      (h, m, a)
-    }
     val (nanH, nanM, nanL) = tri(Long.MinValue + 1L)
     val (posH, posM, posL) = tri(Long.MaxValue)
     val (negH, negM, negL) = tri(Long.MinValue)
@@ -326,6 +321,43 @@ package object functions {
         .otherwise(fin.cast(lt))
     (sel(hi, nanH, posH, negH), sel(mid, nanM, posM, negM),
       sel(lo, nanL, posL, negL))
+  }
+
+  /** [[witnessSplit3]] of one double, written to `out(at)`, `out(at + 1)`
+    * and `out(at + 2)` as (hi, mid, lo): the form for loops that keep a
+    * score vector in primitive arrays (`Graph`'s driver-resident rounds).
+    * The same IEEE ops in the same order as the Column form (Spark's
+    * double `pmod` is `r = a % n; if (r < 0) (r + n) % n else r`, its
+    * `%` and `/` are Java's, and its double→long cast truncates), so the
+    * components are equal component for component wherever the Column
+    * form's cast is in range (every component of |f| < 2⁹³); the
+    * non-finite inputs take the same sentinels.
+    */
+  def witnessSplit3(x: Double, scale: Double, out: Array[Long], at: Int): Unit = {
+    if (x.isNaN || x.isInfinite) {
+      val (h, m, l) = tri(
+        if (x.isNaN) Long.MinValue + 1L else if (x > 0) Long.MaxValue else Long.MinValue)
+      out(at) = h; out(at + 1) = m; out(at + 2) = l
+    } else {
+      val v = x * scale + 0.5
+      val r = v % 1.0
+      val f = v - (if (r < 0) (r + 1.0) % 1.0 else r)
+      val lo = f % SplitBase
+      val t = (f - lo) / SplitBase
+      val mid = t % SplitBase
+      out(at) = ((t - mid) / SplitBase).toLong
+      out(at + 1) = mid.toLong
+      out(at + 2) = lo.toLong
+    }
+  }
+
+  private val SplitBase = 2147483648.0 // 2^31, exact double
+
+  /** An exact long split as (hi, mid, lo) with s = hi·2⁶² + mid·2³¹ + lo. */
+  private def tri(s: Long): (Long, Long, Long) = {
+    val h = s >> 62; val r = s - (h << 62)
+    val m = r >> 31; val a = r - (m << 31)
+    (h, m, a)
   }
 
   /** 6-dp integer witness with non-finite sentinels — see [[intWitness]]. */

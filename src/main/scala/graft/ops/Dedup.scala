@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -60,8 +62,31 @@ object Dedup {
   /** [[spread]] and the partition count of the frame it returns. */
   private def spreadWithWidth(df: DataFrame): (DataFrame, Int) = {
     val target = sizedWidth(df, 64L << 10)
-    val n = df.rdd.getNumPartitions
+    val n = plannedWidth(df).getOrElse(df.rdd.getNumPartitions)
     if (n >= target) (df, n) else (df.repartition(target), target)
+  }
+
+  /** The width of a frame whose physical plan holds a shuffle exchange,
+    * read off the plan without running it: `rdd.getNumPartitions` would
+    * run the exchange's AQE query stages in an execution of their own,
+    * and the query would then run them again. A fixed-width exchange
+    * (`repartition(n)`) that sets the output partitioning reports its
+    * width; any other width is one AQE may still coalesce, so it reads 0
+    * (below every target: the frame is re-spread). None when the plan
+    * holds no shuffle exchange, where the RDD's partition count runs no
+    * query stage.
+    */
+  private def plannedWidth(df: DataFrame): Option[Int] = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val exchanges = plan.collect { case x: ShuffleExchangeLike => x }
+    if (exchanges.isEmpty) None
+    else Some(exchanges.collectFirst {
+      case x if x.shuffleOrigin == REPARTITION_BY_NUM &&
+        x.outputPartitioning == plan.outputPartitioning => x.numPartitions
+    }.getOrElse(0))
   }
 
   /** Word tokens; split on single spaces, keeping empties (matches DuckDB

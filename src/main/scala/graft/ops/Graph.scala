@@ -1,8 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import scala.collection.mutable.ArrayBuilder
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph analytics for corpus curation.
   *
@@ -11,9 +16,13 @@ import org.apache.spark.sql.types._
   * prior (Page et al. 1999, "The PageRank Citation Ranking"; CommonCrawl
   * curation pipelines rank hosts the same way). The operators here are
   * the Spark-native forms of those computations: edges stay distributed,
-  * the rank vector (|V| rows, orders of magnitude smaller than |E|) is
-  * broadcast into each iteration's join so the only shuffle per iteration
-  * is the contribution aggregation on `dst`.
+  * and the O(|V|) state (orders of magnitude smaller than |E|) is kept
+  * small-side. PageRank and HITS keep their score vectors on the driver
+  * under [[BroadcastNodeCap]] — one Spark job per round over edge
+  * partitions encoded once, no SQL planning per round — and above it
+  * iterate as DataFrames whose one shuffle per round is the
+  * contribution aggregation on `dst`. The other loops broadcast their
+  * |V|-row frames into each round's join under the same cap.
   *
   * Exactness contract: an iterative double-precision computation is only
   * oracle-able if the floating-point reduction order cannot influence the
@@ -206,42 +215,93 @@ object Graph {
     * arithmetic — reduction-order-independent, hence oracle-able.
     * Isolated nodes (no in-edges) settle at `1 - d`.
     *
-    * Scale shape: `edges` + out-degrees are localCheckpointed once and
-    * reused by every iteration; the rank vector is |V| rows and is
-    * broadcast into the edge join (map-side, no shuffle on |E|), leaving
-    * ONE shuffle per iteration — the `groupBy(dst)` partial-aggregated
-    * contribution sum. At 100 TB of edges the per-iteration cost is a
-    * single combiner-friendly aggregation. BOTH O(|V|)-row frames (the
-    * rank vector and the out-degree table) are broadcast only when the
-    * measured node count is under [[BroadcastNodeCap]] — the count is
-    * free (it materializes the node checkpoint anyway) — so a
-    * billion-node graph falls back to shuffle joins automatically
-    * without changing results; `broadcastNodeCap = 0` forces the
-    * shuffle path regardless.
+    * Scale shape: within [[BroadcastNodeCap]] (measured by the one node
+    * collect that also loads the vector) the rank vector lives on the
+    * driver in primitive arrays and each round is ONE Spark job with no
+    * SQL planning: the driver broadcasts every source's witness triple,
+    * each edge partition (encoded once as node-index pairs, persisted)
+    * returns its exact per-dst (Σhi, Σmid, Σlo), and the driver adds
+    * them and applies the damping update ([[pageRankLoop]]). Above the
+    * cap — or with ids that are not integral, or a null id — the rounds
+    * run as DataFrames: `edges` + out-degrees are localCheckpointed once,
+    * each round joins the per-source witnesses into the edge list and
+    * aggregates on `dst` (ONE combiner-friendly shuffle per round), and
+    * nothing |V|-sized is hinted broadcast, so a billion-node graph stays
+    * distributed. Both paths compute the same integers and the same IEEE
+    * ops, so results are bit-identical; `broadcastNodeCap = 0` forces
+    * the DataFrame rounds.
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int,
                damping: Double = 0.85,
                broadcastNodeCap: Long = BroadcastNodeCap,
                splitSumNodeCap: Long = SplitSumNodeCap): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
-    val n = nodes.select(col("id")).distinct().localCheckpoint(true)
-    pageRankLoop(n, edges, lit(1.0), lit(1.0 - damping), iters, damping,
-      broadcastNodeCap, splitSumNodeCap)
+    pageRankLoop(nodes.select(col("id")).distinct(), edges, lit(1.0),
+      lit(1.0 - damping), iters, damping, broadcastNodeCap, splitSumNodeCap)
   }
 
   /** The damped iteration shared by [[pageRank]] and [[pageRankSeeded]]:
     *
     *   r₀ = init;  r'(v) = teleport + d · Σ_{u→v} q(r(u) / odeg(u))
     *
-    * over the checkpointed node frame `n` (column `id`, plus whatever
+    * over the distinct node frame `n` (column `id`, plus whatever
     * `init`/`teleport` read). The two forms differ only in those two
-    * columns, so both run the identical per-iteration plan.
+    * columns, so both run the identical rounds.
+    *
+    * The driver path keeps the DataFrame rounds' join semantics exactly: `odeg` counts
+    * every out-edge of a source (duplicates twice, to non-nodes and null
+    * dsts too), only sources that are nodes contribute, sums landing on
+    * a dst that is not a node are dropped, and a node with no in-edges
+    * gets `teleport + d·0.0`. `init` and `teleport` are evaluated by
+    * Catalyst in the node collect; the update is the DataFrame round's
+    * `teleport + d · (s / 1e14)` with `s` the DECIMAL(38,0) sum read as a
+    * double ([[splitSumDouble]]).
     */
   private def pageRankLoop(n: DataFrame, edges: DataFrame, init: Column,
                            teleport: Column, iters: Int, damping: Double,
                            broadcastNodeCap: Long,
                            splitSumNodeCap: Long): DataFrame = {
-    val e = checkpointScaled(edges.select(col("src"), col("dst")))
+    val es = edges.select(col("src"), col("dst"))
+    val cap = math.min(broadcastNodeCap, splitSumNodeCap)
+    driverNodes(n, es, Seq(init, teleport), cap) match {
+      case Some((ids, vals)) =>
+        val (r, t) = (vals(0), vals(1))
+        val nV = ids.length
+        val odeg = new Array[Long](nV)
+        val w = new Array[Long](3 * nV)
+        val s = new Array[Long](3 * nV)
+        withIndexedEdges(es, ids, reverse = false) { blocks =>
+          for (deg <- blocks.sparkContext.runJob(blocks, (it: Iterator[EdgeBlock]) => it.next().deg);
+               p <- deg)
+            odeg((p >>> 32).toInt) += p & 0xffffffffL
+          for (_ <- 1 to iters) {
+            var i = 0
+            while (i < nV) {
+              if (odeg(i) > 0) graft.functions.witnessSplit3(r(i) / odeg(i).toDouble, 1e14, w, 3 * i)
+              i += 1
+            }
+            roundSums(blocks, w, forward = true, s)
+            i = 0
+            while (i < nV) {
+              r(i) = t(i) + damping * (splitSumDouble(s(3 * i), s(3 * i + 1), s(3 * i + 2)) / 1e14)
+              i += 1
+            }
+          }
+        }
+        frameOf(n.sparkSession,
+          StructType(Seq(n.schema("id"), StructField("r", DoubleType, nullable = true))), ids, r)
+      case None =>
+        pageRankFrames(n.localCheckpoint(true), es, init, teleport, iters, damping,
+          broadcastNodeCap, splitSumNodeCap)
+    }
+  }
+
+  /** [[pageRankLoop]]'s DataFrame rounds over the checkpointed nodes `n`. */
+  private def pageRankFrames(n: DataFrame, edges: DataFrame, init: Column,
+                             teleport: Column, iters: Int, damping: Double,
+                             broadcastNodeCap: Long,
+                             splitSumNodeCap: Long): DataFrame = {
+    val e = checkpointScaled(edges)
     val deg = e.groupBy("src").agg(count(lit(1)).as("odeg")).localCheckpoint(true)
     val nV = n.count()
     val split = nV <= splitSumNodeCap
@@ -280,9 +340,10 @@ object Graph {
         nV, broadcastNodeCap)
       // LAZY checkpoint, but not free: under AQE localCheckpoint(false)
       // runs every query stage below the final one at call time, in its
-      // own SQL execution (4 jobs per iteration here); only the final
-      // stage waits for the next iteration's broadcast collect (or the
-      // caller's first action on the last iteration)
+      // own SQL execution; only the final stage waits for the next
+      // round's first action (or the caller's, after the last round).
+      // This is the scale path: the rounds under the cap run on the
+      // driver and plan nothing.
       ranks = n.join(sums, Seq("id"), "left")
         .select(col("id"),
           (teleport +
@@ -291,6 +352,181 @@ object Graph {
         .localCheckpoint(false)
     }
     ranks
+  }
+
+  /** The gate of the driver-resident rounds ([[pageRankLoop]], [[hits]]),
+    * and their node vector when it passes: the node ids ascending (a
+    * node's index is its position) and each of `cols` (doubles evaluated
+    * by Catalyst) at its node's index. It passes when |V| is within
+    * `cap`, the node ids and both ends of `edges` are IntegerType or
+    * LongType, and no node id is null; otherwise the caller runs its
+    * DataFrame rounds. The probe is ONE bounded collect, `limit(cap +
+    * 1)`, which also measures |V|; a cap below 1 skips it, so
+    * `broadcastNodeCap = 0` forces the DataFrame rounds. `cap` is the
+    * measured broadcast cap (a |V|-row vector the broadcast path would
+    * collect anyway) clamped to the long-split regime's and the witness
+    * array's bounds.
+    */
+  private def driverNodes(n: DataFrame, edges: DataFrame, cols: Seq[Column],
+                          cap: Long): Option[(Array[Long], Array[Array[Double]])] = {
+    def integral(df: DataFrame, c: String) =
+      df.schema(c).dataType == IntegerType || df.schema(c).dataType == LongType
+    val lim = math.min(cap, Int.MaxValue / 3 - 1L)
+    if (lim < 1 || !integral(n, "id") || !integral(edges, "src") || !integral(edges, "dst")) None
+    else {
+      val rows = n.select(col("id") +: cols: _*).limit(lim.toInt + 1).collect()
+      if (rows.length > lim || rows.exists(_.isNullAt(0))) None
+      else {
+        val sorted = rows.sortBy(_.getAs[Number](0).longValue)
+        Some((sorted.map(_.getAs[Number](0).longValue),
+          Array.tabulate(cols.size)(c => sorted.map(_.getDouble(c + 1)))))
+      }
+    }
+  }
+
+  /** One partition of a graph's edges for the driver-resident rounds, as
+    * indexes into the sorted node ids packed two to a long: `fwd` holds
+    * `dst << 32 | src` sorted, so a task sums each dst's run along
+    * src → dst; `rev` holds `src << 32 | dst` sorted when the rounds also
+    * sum the other way (else empty). An edge with a null or non-node end
+    * is in neither: from a non-node source it joins no score, and a sum
+    * landing on a non-node is dropped. `deg` holds `src << 32 | count`,
+    * the partition's count of edges out of each node, whatever their dst.
+    */
+  private final class EdgeBlock(val fwd: Array[Long], val rev: Array[Long],
+                                val deg: Array[Long]) extends Serializable
+
+  /** Runs `body` over `edges` encoded as one persisted [[EdgeBlock]] per
+    * partition (computed by the first job over them), then unpersists the
+    * blocks and destroys the id broadcast the encoding read.
+    */
+  private def withIndexedEdges[T](edges: DataFrame, ids: Array[Long], reverse: Boolean)(
+      body: RDD[EdgeBlock] => T): T = {
+    val sc = edges.sparkSession.sparkContext
+    val bIds = sc.broadcast(ids)
+    val srcInt = edges.schema("src").dataType == IntegerType
+    val dstInt = edges.schema("dst").dataType == IntegerType
+    val blocks = edges.queryExecution.toRdd.mapPartitions { rows =>
+      val ix = bIds.value
+      def node(row: InternalRow, i: Int, int: Boolean): Int =
+        if (row.isNullAt(i)) -1
+        else math.max(-1, java.util.Arrays.binarySearch(ix,
+          if (int) row.getInt(i).toLong else row.getLong(i)))
+      val fwd = new ArrayBuilder.ofLong
+      val rev = new ArrayBuilder.ofLong
+      val srcs = new ArrayBuilder.ofInt
+      rows.foreach { row =>
+        val s = node(row, 0, srcInt)
+        if (s >= 0) {
+          srcs += s
+          val d = node(row, 1, dstInt)
+          if (d >= 0) {
+            fwd += d.toLong << 32 | s
+            if (reverse) rev += s.toLong << 32 | d
+          }
+        }
+      }
+      val ss = srcs.result()
+      java.util.Arrays.sort(ss)
+      val deg = new ArrayBuilder.ofLong
+      var i = 0
+      while (i < ss.length) {
+        var j = i
+        while (j < ss.length && ss(j) == ss(i)) j += 1
+        deg += ss(i).toLong << 32 | (j - i)
+        i = j
+      }
+      val (f, r) = (fwd.result(), rev.result())
+      java.util.Arrays.sort(f)
+      java.util.Arrays.sort(r)
+      Iterator.single(new EdgeBlock(f, r, deg.result()))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(blocks) finally {
+      blocks.unpersist(blocking = false)
+      bIds.destroy()
+    }
+  }
+
+  /** One driver-resident round: broadcast the witness triples `w` (three
+    * longs per node index), run ONE job over the edge blocks, and add
+    * each block's per-target sums into `s` (three longs per node index,
+    * zeroed first). The sums are integers, so the order the partitions
+    * come back in cannot change them.
+    */
+  private def roundSums(blocks: RDD[EdgeBlock], w: Array[Long], forward: Boolean,
+                        s: Array[Long]): Unit = {
+    val sc = blocks.sparkContext
+    val bw = sc.broadcast(w)
+    val parts = try sc.runJob(blocks, (it: Iterator[EdgeBlock]) => {
+      val b = it.next()
+      blockSums(if (forward) b.fwd else b.rev, bw.value)
+    }) finally bw.destroy()
+    java.util.Arrays.fill(s, 0L)
+    for (p <- parts) {
+      var j = 0
+      while (j < p.length) {
+        val k = 3 * p(j).toInt
+        s(k) += p(j + 1); s(k + 1) += p(j + 2); s(k + 2) += p(j + 3)
+        j += 4
+      }
+    }
+  }
+
+  /** A block's sums of the witness triples `w` along `pairs` (`target <<
+    * 32 | source`, sorted): `(target, Σhi, Σmid, Σlo)` per target.
+    */
+  private def blockSums(pairs: Array[Long], w: Array[Long]): Array[Long] = {
+    val out = new ArrayBuilder.ofLong
+    var i = 0
+    while (i < pairs.length) {
+      val to = pairs(i) >>> 32
+      var h = 0L; var m = 0L; var l = 0L
+      while (i < pairs.length && (pairs(i) >>> 32) == to) {
+        val k = 3 * pairs(i).toInt
+        h += w(k); m += w(k + 1); l += w(k + 2)
+        i += 1
+      }
+      out += to; out += h; out += m; out += l
+    }
+    out.result()
+  }
+
+  /** The exact split sum `h·2⁶² + m·2³¹ + l` as a double, read the way the
+    * DataFrame rounds read it: the DECIMAL(38,0) value cast to double
+    * through Spark's `Decimal` (a correctly rounded conversion). A sum
+    * inside a long takes `Long.toDouble`, which is what that conversion
+    * does with a compact value.
+    */
+  private[graft] def splitSumDouble(h: Long, m: Long, l: Long): Double =
+    if (h == 0L && m > -(1L << 31) && m < (1L << 31) && l > -(1L << 62) && l < (1L << 62))
+      ((m << 31) + l).toDouble
+    else {
+      import java.math.BigInteger.valueOf
+      Decimal(new java.math.BigDecimal(valueOf(h).shiftLeft(62)
+        .add(valueOf(m).shiftLeft(31)).add(valueOf(l)))).toDouble
+    }
+
+  /** A DataFrame of `schema` over driver arrays: the node ids (as the id
+    * column's integral type) and one double column per entry of `cols`,
+    * sliced into partitions of at most 2²⁰ rows so a task ships only its
+    * slice.
+    */
+  private def frameOf(spark: SparkSession, schema: StructType, ids: Array[Long],
+                      cols: Array[Double]*): DataFrame = {
+    val intIds = schema.head.dataType == IntegerType
+    val step = 1 << 20
+    val slices = (0 until math.max(1, ids.length) by step).map { lo =>
+      val hi = math.min(ids.length, lo + step)
+      (java.util.Arrays.copyOfRange(ids, lo, hi),
+        cols.map(java.util.Arrays.copyOfRange(_, lo, hi)))
+    }
+    val rows = spark.sparkContext.parallelize(slices, slices.size).flatMap { case (is, cs) =>
+      is.indices.iterator.map { i =>
+        val id: Any = if (intIds) is(i).toInt else is(i)
+        Row.fromSeq(id +: cs.map(_(i)))
+      }
+    }
+    spark.createDataFrame(rows, schema)
   }
 
   /** HITS hubs & authorities (Kleinberg 1999, "Authoritative Sources in
@@ -310,11 +546,15 @@ object Graph {
     * Max-normalization (not L2) keeps the arithmetic exact-comparable;
     * the ranking it induces is identical.
     *
-    * Scale shape: per half-iteration ONE combiner aggregation over the
-    * edge list with the small score vector broadcast in, plus a
-    * broadcast scalar max — the [[pageRank]] cost class exactly,
-    * including the measured-|V| broadcast gate ([[BroadcastNodeCap]]):
-    * score vectors above the cap join by shuffle instead.
+    * Scale shape: a half-iteration is [[pageRank]]'s round without the
+    * division — sum q(x_src) along the (distinct) edges per target —
+    * then `raw / (max > 0 ? max : 1.0)`. Within [[BroadcastNodeCap]] it
+    * runs on [[pageRank]]'s driver path: both score vectors live on the
+    * driver, each half-iteration is ONE Spark job over the edges encoded
+    * once in both directions, and the max is a driver loop. Above the
+    * cap (or for non-integral or null ids) each half-iteration is ONE
+    * combiner aggregation over the edge list plus a broadcast scalar max,
+    * with the score vectors joined by shuffle. Bit-identical either way.
     * Returns (id, hub, auth) over all nodes (either side's absentees
     * score 0).
     */
@@ -322,8 +562,52 @@ object Graph {
            broadcastNodeCap: Long = BroadcastNodeCap,
            splitSumNodeCap: Long = SplitSumNodeCap): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
-    val e = checkpointScaled(edges.select(col("src"), col("dst")).distinct())
-    val n = nodes.select(col("id")).distinct().localCheckpoint(true)
+    val es = edges.select(col("src"), col("dst")).distinct()
+    val nodeIds = nodes.select(col("id")).distinct()
+    driverNodes(nodeIds, es, Nil, math.min(broadcastNodeCap, splitSumNodeCap)) match {
+      case Some((ids, _)) =>
+        val nV = ids.length
+        val hub = Array.fill(nV)(1.0)
+        val auth = new Array[Double](nV)
+        val w = new Array[Long](3 * nV)
+        val s = new Array[Long](3 * nV)
+        // one half-iteration: `in` flows along the edges (src → dst when
+        // `forward`), sums per target and max-normalizes into `out`
+        def half(blocks: RDD[EdgeBlock], in: Array[Double], out: Array[Double],
+                 forward: Boolean): Unit = {
+          var i = 0
+          while (i < nV) { graft.functions.witnessSplit3(in(i), 1e14, w, 3 * i); i += 1 }
+          roundSums(blocks, w, forward, s)
+          var mx = Double.NegativeInfinity
+          i = 0
+          while (i < nV) {
+            out(i) = splitSumDouble(s(3 * i), s(3 * i + 1), s(3 * i + 2)) / 1e14
+            if (out(i) > mx) mx = out(i)
+            i += 1
+          }
+          val norm = if (mx > 0.0) mx else 1.0
+          i = 0
+          while (i < nV) { out(i) = out(i) / norm; i += 1 }
+        }
+        withIndexedEdges(es, ids, reverse = true) { blocks =>
+          for (_ <- 1 to iters) {
+            half(blocks, hub, auth, forward = true)
+            half(blocks, auth, hub, forward = false)
+          }
+        }
+        frameOf(nodes.sparkSession, StructType(Seq(nodeIds.schema("id"),
+          StructField("h", DoubleType, nullable = true),
+          StructField("a", DoubleType, nullable = true))), ids, hub, auth)
+      case None =>
+        hitsFrames(nodeIds, es, iters, broadcastNodeCap, splitSumNodeCap)
+    }
+  }
+
+  /** [[hits]]'s DataFrame rounds over distinct nodes and edges. */
+  private def hitsFrames(nodeIds: DataFrame, edges: DataFrame, iters: Int,
+                         broadcastNodeCap: Long, splitSumNodeCap: Long): DataFrame = {
+    val e = checkpointScaled(edges)
+    val n = nodeIds.localCheckpoint(true)
     val nV = n.count()
     val split = nV <= splitSumNodeCap
 
@@ -341,11 +625,11 @@ object Graph {
     // r18 (opt): the max normalizer stays IN the plan as a broadcast
     // 1-row aggregate instead of a driver `.head` probe — same two IEEE
     // ops (max, divide; the >0 guard rides a when()), but each
-    // half-iteration's final stage is materialized by the next
-    // broadcast collect instead of a head job + checkpoint job +
-    // collect job (under AQE the lazy checkpoint still runs the stages
-    // below it at call time). The raw subtree is referenced twice (max +
-    // the division) and its aggregation exchange is reused.
+    // half-iteration's final stage is materialized by the next round's
+    // action instead of a head job + checkpoint job + collect job (under
+    // AQE the lazy checkpoint still runs the stages below it at call
+    // time). The raw subtree is referenced twice (max + the division)
+    // and its aggregation exchange is reused.
     def half(scores: DataFrame, in: String, from: String, to: String,
              out: String): DataFrame = {
       val side = bcastIf(scores.select(col("id") +: contribCols(col(in), split): _*),
@@ -412,9 +696,10 @@ h$i AS MATERIALIZED (SELECT id, h / (CASE WHEN (SELECT MAX(h) FROM hr$i) > 0
     *   r'(v) = (1 - d)·[v ∈ S] + d · Σ_{u→v} q(r(u) / odeg(u)),
     *   init r = [v ∈ S]
     *
-    * Same floor-witness exactness contract and per-iteration cost as
-    * [[pageRank]]; the seed indicator rides as a 0/1 column on the
-    * broadcast node vector.
+    * Same floor-witness exactness contract and rounds as [[pageRank]];
+    * the seed indicator is a 0/1 column of the node frame, and the
+    * teleport term `(1 - d)·seed` is evaluated by Catalyst on both
+    * paths.
     */
   def pageRankSeeded(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
                      iters: Int, damping: Double = 0.85,
@@ -425,7 +710,6 @@ h$i AS MATERIALIZED (SELECT id, h / (CASE WHEN (SELECT MAX(h) FROM hr$i) > 0
       .join(seeds.select(col("id")).distinct().withColumn("__s", lit(1.0)),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("__s"), lit(0.0)).as("seed"))
-      .localCheckpoint(true)
     pageRankLoop(n, edges, col("seed"), lit(1.0 - damping) * col("seed"),
       iters, damping, broadcastNodeCap, splitSumNodeCap)
   }
@@ -500,14 +784,17 @@ r$i AS MATERIALIZED (SELECT n.id,
     * unrolls an identical oracle; no decimal quantization needed.
     *
     * Scale shape per iteration: label vector broadcast into the edge
-    * join (the [[pageRank]] play), ONE combiner aggregation on
-    * (dst, label), then a per-node argmax as `max(struct(c, −label))`
-    * — an aggregation, NOT a window, so a hub with 10⁸ neighbors is a
-    * combiner-friendly group, never a single-task sort partition.
-    * The O(|V|)-row label frame is broadcast only when the measured
-    * node count is under `broadcastNodeCap` (the [[pageRank]] gate,
-    * counted once off the checkpointed frame) — a billion-node graph
+    * join, ONE combiner aggregation on (dst, label), then a per-node
+    * argmax as `max(struct(c, −label))` — an aggregation, NOT a window,
+    * so a hub with 10⁸ neighbors is a combiner-friendly group, never a
+    * single-task sort partition. The O(|V|)-row label frame is broadcast
+    * only when the measured node count is under `broadcastNodeCap`
+    * (counted once off the checkpointed frame) — a billion-node graph
     * falls back to shuffle joins automatically with identical results.
+    * Under the cap it stays on DataFrame rounds: its per-node step is an
+    * argmax over per-label counts, not the per-target sum of one
+    * per-source scalar that [[pageRank]]'s and [[hits]]' driver rounds
+    * compute.
     *
     * Pass edges in BOTH directions for undirected community semantics.
     * Returns (id, lbl).

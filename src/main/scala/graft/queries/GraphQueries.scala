@@ -203,12 +203,13 @@ private[graft] object GraphQueries {
     // Damped PageRank (5 iterations) over the part co-occurrence graph
     // (parts sharing an order, both directions) — the page-quality prior
     // of web-corpus curation (Page et al. 1999), here as "product
-    // centrality". Ranks broadcast into each iteration's edge join; ONE
-    // combiner-friendly shuffle (the contribution sum on dst) per
-    // iteration. Per-edge contributions quantize to DECIMAL(28,14) so the
-    // reduction is exact decimal arithmetic — reduction-order-independent
-    // in both engines, hence hash-oracled (Graph.pageRankSql generates
-    // the unrolled oracle from the same constants).
+    // centrality". Under Graph.BroadcastNodeCap the rank vector stays on
+    // the driver and each iteration is one Spark job over the encoded
+    // edges; above it, ONE combiner-friendly shuffle (the contribution
+    // sum on dst) per iteration. Per-edge contributions quantize through
+    // the e14 floor witness and sum as exact integers — reduction-order-
+    // independent in both engines, hence hash-oracled (Graph.pageRankSql
+    // generates the unrolled oracle from the same constants).
     QuerySpec("q_pagerank", { (s, dir) =>
       val li = Tables(s, dir, "lineitem")
       val parts = Tables(s, dir, "part").select(col("p_partkey").as("id"))
@@ -264,8 +265,8 @@ private[graft] object GraphQueries {
     // Personalized PageRank (Haveliwala 2002): teleport mass restricted
     // to a seed set (every 97th part) — relevance-to-the-seeds instead of
     // global centrality, the "expand from a trusted core" curation
-    // primitive. Same decimal-exact iteration and broadcast-rank shape
-    // as q_pagerank.
+    // primitive. Same decimal-exact iteration and round shape as
+    // q_pagerank.
     QuerySpec("q_ppr_seeded", { (s, dir) =>
       val li = Tables(s, dir, "lineitem")
       val parts = Tables(s, dir, "part").select(col("p_partkey").as("id"))

@@ -139,6 +139,18 @@ class FusedTopKSpec extends AnyFunSuite {
     assert((trace.executions, trace.jobs) === ((1, 3)), trace)
   }
 
+  test("bruteForceTopK over a repartitioned corpus runs the exchange's map stage once") {
+    // the spread reads a repartition(3) input's width off its plan; read
+    // off the RDD, the 4-task map stage ran in an execution of its own
+    // and then again in the query's
+    val (n, _, trace) = traced {
+      Similarity.bruteForceTopK(corpus().repartition(3), queries(5), 3, "l2").count()
+    }
+    assert(n === 15L)
+    assert(trace.stageTasks.count(_ == 4) === 1, trace)
+    assert((trace.executions, trace.looseJobs) === ((1, 0)), trace)
+  }
+
   test("mmrTopK plan: kernel candidates, one join, no checkpoint, pinned actions and jobs") {
     val vecs = corpus()
     val (out, plans, trace) = traced {

@@ -138,6 +138,170 @@ class GraphSpec extends AnyFunSuite {
       assert(r.getDecimal(0) === r.getDecimal(1), s"mismatch: $r")
   }
 
+  test("witnessSplit3's scalar form equals its Column form component for component") {
+    import org.apache.spark.sql.types.{DoubleType, StructField => SF}
+    val extremes = Seq(0.0, 1.0, -1.0, 0.123456789012345, 92.2337203685,
+      9.3e-4, 1.0e0, 2.5, -2.5, 7.77, 10.0, 99.999999, 500.0, -123.456,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    // the witness boundary: floor(x·1e14 + ½) at k + ½ over 1e14
+    val halves = Seq(0L, 1L, 7L, 12345L, 99999999L, 123456789012L, 9007199254740991L)
+      .flatMap(k => Seq((k + 0.5) / 1e14, -(k + 0.5) / 1e14))
+    val pow2 = (-60 to 70).flatMap(e => Seq(math.pow(2, e), -math.pow(2, e)))
+    val vals = extremes ++ halves ++ pow2
+    val d = df(StructType(Seq(SF("x", DoubleType, nullable = false))), vals.map(Row(_)))
+    val (h, m, l) = graft.functions.witnessSplit3(col("x"), 1e14)
+    val got = d.select(col("x"), h, m, l).collect()
+    val out = new Array[Long](3)
+    for (r <- got) {
+      graft.functions.witnessSplit3(r.getDouble(0), 1e14, out, 0)
+      assert(out.toSeq === Seq(r.getLong(1), r.getLong(2), r.getLong(3)), s"x = ${r.getDouble(0)}")
+    }
+    assert(got.length === vals.length)
+  }
+
+  test("the driver rounds read a split sum as the DataFrame rounds' DECIMAL(38,0) cast") {
+    val two31 = 1L << 31
+    val rnd = new scala.util.Random(5)
+    val triples = Seq((0L, 0L, 0L), (0L, 0L, 1L), (0L, two31 - 1, two31 - 1),
+        (0L, two31, 0L), (0L, 0L, (1L << 62) - 1), (0L, 0L, 1L << 62),
+        (1L, 0L, 0L), (1L, 2L, 3L), (-2L, 0L, 0L), (0L, -5L, 7L), (3L, two31 - 1, 1L << 40),
+        ((1L << 46) + 17, (1L << 61) + 3, (1L << 61) + 5), (0L, 1L << 45, 1L << 60)) ++
+      Seq.fill(200)((rnd.nextInt(4).toLong, rnd.nextLong() >>> 2, rnd.nextLong() >>> 2)) ++
+      Seq.fill(200)((0L, rnd.nextLong() >>> 20, rnd.nextLong() >>> 2))
+    val sch = StructType(Seq("h", "m", "l").map(StructField(_, LongType, nullable = false)))
+    val dec = DecimalType(38, 0)
+    val got = df(sch, triples.map { case (h, m, l) => Row(h, m, l) })
+      .select(col("h"), col("m"), col("l"),
+        (col("h").cast(dec) * lit(4611686018427387904L) +
+          col("m").cast(dec) * lit(2147483648L) + col("l").cast(dec))
+          .cast(DoubleType).as("s"))
+      .collect()
+    for (r <- got) {
+      val want = r.getDouble(3)
+      val mine = Graph.splitSumDouble(r.getLong(0), r.getLong(1), r.getLong(2))
+      assert(java.lang.Double.doubleToRawLongBits(mine) ===
+        java.lang.Double.doubleToRawLongBits(want), s"$r: $mine")
+    }
+  }
+
+  /** Rows keyed by their id's string form, doubles by their bits. */
+  private def bits(d: org.apache.spark.sql.DataFrame): Map[String, Seq[Long]] =
+    d.collect().map { r =>
+      String.valueOf(r.get(0)) ->
+        (1 until r.length).map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+    }.toMap
+
+  private val nullableEdges = StructType(Seq(
+    StructField("src", LongType, nullable = true),
+    StructField("dst", LongType, nullable = true)))
+
+  test("pagerank family: driver rounds ≡ DataFrame rounds bit for bit on adversarial graphs") {
+    // broadcastNodeCap = 0 forces the DataFrame rounds; the default cap
+    // runs these graphs on the driver. Each graph stresses one of the
+    // join semantics the driver rounds reproduce.
+    val rnd = new scala.util.Random(29)
+    val ring = (1L to 30L).map(u => (u, u % 30 + 1))
+    val hub = 500L
+    val graphs: Seq[(String, Seq[Long], Seq[(java.lang.Long, java.lang.Long)], Seq[Long])] = Seq(
+      ("duplicates and self-loops", (1L to 30L),
+        (ring ++ ring.take(9) ++ Seq((3L, 3L), (3L, 3L), (7L, 7L), (8L, 2L), (8L, 2L)) ++
+          Seq.fill(40)((1L + rnd.nextInt(30), 1L + rnd.nextInt(30))))
+          .map { case (a, b) => (Long.box(a), Long.box(b)) },
+        Seq(4L, 9L)),
+      ("ends and seeds outside the nodes", (1L to 30L),
+        (ring ++ Seq((5L, 100L), (5L, 101L), (100L, 6L), (101L, 102L), (6L, 7L), (103L, 1L)))
+          .map { case (a, b) => (Long.box(a), Long.box(b)) },
+        Seq(2L, 100L, 200L)),
+      ("null ends and isolated nodes", (1L to 36L),
+        ring.map { case (a, b) => (Long.box(a), Long.box(b)) } ++
+          Seq[(java.lang.Long, java.lang.Long)]((4L, null), (4L, null), (null, 5L),
+            (null, null), (9L, null)),
+        Seq(33L, 1L)),
+      ("a hub with large r/odeg", (1L to 600L),
+        ((1L to 499L).map(u => (u, hub)) ++ Seq((hub, 1L)) ++ (501L to 600L).map(u => (u, u - 500)))
+          .map { case (a, b) => (Long.box(a), Long.box(b)) },
+        Seq(hub, 3L)))
+    for ((name, nodes, edges, seeds) <- graphs) {
+      val n = df(nodeSchema, nodes.map(Row(_)))
+      val e = df(nullableEdges, edges.map { case (a, b) => Row(a, b) })
+      val sd = df(nodeSchema, seeds.map(Row(_)))
+      def same(driver: org.apache.spark.sql.DataFrame, frames: org.apache.spark.sql.DataFrame,
+               what: String): Unit = {
+        assert(driver.schema === frames.schema, s"$name: $what schema")
+        assert(bits(driver) === bits(frames), s"$name: $what")
+      }
+      same(Graph.pageRank(n, e, iters = 5), Graph.pageRank(n, e, iters = 5, broadcastNodeCap = 0L),
+        "pageRank")
+      same(Graph.pageRankSeeded(n, e, sd, iters = 4),
+        Graph.pageRankSeeded(n, e, sd, iters = 4, broadcastNodeCap = 0L), "pageRankSeeded")
+      same(Graph.hits(n, e, iters = 3), Graph.hits(n, e, iters = 3, broadcastNodeCap = 0L), "hits")
+    }
+    // the hub really is large: its witness is past 2^53 at the e14 scale
+    val hubRank = Graph.pageRank(df(nodeSchema, graphs(3)._2.map(Row(_))),
+        df(nullableEdges, graphs(3)._3.map { case (a, b) => Row(a, b) }), iters = 2)
+      .filter(col("id") === hub).head().getDouble(1)
+    assert(hubRank * 1e14 > math.pow(2, 53), s"hub rank $hubRank")
+
+    // IntegerType ids, on a graph whose edge ends are IntegerType too
+    val intNode = StructType(Seq(StructField("id", IntegerType, nullable = false)))
+    val intEdge = StructType(Seq(StructField("src", IntegerType, nullable = true),
+      StructField("dst", IntegerType, nullable = true)))
+    val n = df(intNode, (1 to 30).map(Row(_)))
+    val e = df(intEdge, (ring.map { case (a, b) => Row(a.toInt, b.toInt) } ++
+      Seq(Row(3, 3), Row(3, 40), Row(null, 2), Row(41, 5))))
+    val sd = df(intNode, Seq(Row(2), Row(50)))
+    for ((driver, frames) <- Seq(
+        (Graph.pageRank(n, e, iters = 4), Graph.pageRank(n, e, iters = 4, broadcastNodeCap = 0L)),
+        (Graph.pageRankSeeded(n, e, sd, iters = 4),
+          Graph.pageRankSeeded(n, e, sd, iters = 4, broadcastNodeCap = 0L)),
+        (Graph.hits(n, e, iters = 3), Graph.hits(n, e, iters = 3, broadcastNodeCap = 0L)))) {
+      assert(driver.schema === frames.schema)
+      assert(driver.schema.head.dataType === IntegerType)
+      assert(bits(driver) === bits(frames))
+    }
+  }
+
+  test("pagerank family: string ids and a null node id take the DataFrame rounds") {
+    // the driver rounds run jobs outside any SQL execution; the DataFrame
+    // rounds run none
+    def loose(run: => Any): Int = JobTrace(spark.sparkContext)(run)._2.looseJobs
+    val ring = (1L to 12L).map(u => (u, u % 12 + 1)) ++ Seq((2L, 5L), (2L, 7L))
+    val n = df(nodeSchema, (1L to 12L).map(Row(_)))
+    val e = df(edgeSchema, ring.map { case (a, b) => Row(a, b) })
+    val want = bits(Graph.pageRank(n, e, iters = 4))
+    assert(loose(Graph.pageRank(n, e, iters = 4).collect()) > 0)
+
+    val strNode = StructType(Seq(StructField("id", StringType, nullable = false)))
+    val strEdge = StructType(Seq(StructField("src", StringType, nullable = false),
+      StructField("dst", StringType, nullable = false)))
+    val sn = df(strNode, (1L to 12L).map(i => Row(i.toString)))
+    val se = df(strEdge, ring.map { case (a, b) => Row(a.toString, b.toString) })
+    val (strRanks, strTrace) = JobTrace(spark.sparkContext)(bits(Graph.pageRank(sn, se, iters = 4)))
+    assert(strTrace.looseJobs === 0, strTrace)
+    assert(strRanks === want)
+    assert(loose(Graph.hits(sn, se, iters = 2).collect()) === 0)
+    assert(loose(Graph.pageRankSeeded(sn, se, sn.limit(2), iters = 2).collect()) === 0)
+
+    val nullNode = StructType(Seq(StructField("id", LongType, nullable = true)))
+    val nn = df(nullNode, ((1L to 12L).map(Row(_)) :+ Row(null)))
+    val (withNull, nullTrace) = JobTrace(spark.sparkContext)(bits(Graph.pageRank(nn, e, iters = 4)))
+    assert(nullTrace.looseJobs === 0, nullTrace)
+    assert(withNull - "null" === want)
+    assert(withNull("null") === Seq(java.lang.Double.doubleToRawLongBits(1.0 - 0.85)))
+    assert(loose(Graph.hits(nn, e, iters = 2).collect()) === 0)
+  }
+
+  test("pageRank's and hits' driver rounds leave no persisted RDD behind") {
+    val sc = spark.sparkContext
+    val n = df(nodeSchema, (1L to 40L).map(Row(_)))
+    val e = df(edgeSchema, (1L to 40L).flatMap(u => Seq(Row(u, u % 40 + 1), Row(u, (u + 7) % 40 + 1))))
+    val before = sc.getPersistentRDDs.keySet
+    Graph.pageRank(n, e, iters = 4).collect()
+    Graph.hits(n, e, iters = 2).collect()
+    // the result holds its rows in a parallelized RDD, nothing persisted
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty, sc.getPersistentRDDs)
+  }
+
   test("pagerank family above BroadcastNodeCap plans NO broadcast hint, same results") {
     // The 100 TB contract: the rank vector and degree table are |V| rows;
     // above the measured-count cap neither may be HINTED broadcast (a
@@ -205,10 +369,19 @@ class GraphSpec extends AnyFunSuite {
       assert(hitsGot === hitsWant)
       assert(lpGot === lpWant)
 
+      // the driver rounds (pageRank, hits under the cap) plan no |V|-row
+      // broadcast either: their rank vector never enters a plan
+      Graph.pageRank(n, e, iters = 2).collect()
+      Graph.pageRankSeeded(n, e, seeds, iters = 2).collect()
+      Graph.hits(n, e, iters = 2).collect()
+      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+      assert(seen.isEmpty,
+        s"broadcast hint planned by the driver rounds in: ${seen.toArray.mkString(", ")}")
+
       // positive control: the same listener DOES see the hint on the
       // default small-graph path, so an all-green run can't be a
       // listener that never fired
-      Graph.pageRank(n, e, iters = 1).collect()
+      Graph.labelPropagation(n, e, iters = 1).collect()
       org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
       assert(!seen.isEmpty, "listener never observed the broadcast hint on the default path")
     } finally spark.listenerManager.unregister(listener)
@@ -786,10 +959,12 @@ class GraphSpec extends AnyFunSuite {
     // each operator's counts on a fixed graph (build + collect) are
     // pinned: a refactor must not add one, and a change that removes one
     // lowers the pin. A driver action is one SQL execution (a count, a
-    // collect, an eager checkpoint); its jobs include AQE's query stages.
+    // collect, an eager checkpoint; its jobs include AQE's query stages)
+    // or one job outside any (a round of the driver-resident pageRank
+    // and hits, which plan no SQL).
     def countsOf(run: => Any): (Int, Int) = {
       val t = JobTrace(spark.sparkContext)(run)._2
-      (t.executions, t.jobs)
+      (t.actions, t.jobs)
     }
     val nodes = (1L to 40L).toSeq
     val edges = nodes.flatMap(u => Seq((u, u % 40 + 1), (u, (u + 11) % 40 + 1)))
@@ -800,9 +975,13 @@ class GraphSpec extends AnyFunSuite {
     val lattice = df(undSchema, triLattice(8).map { case (a, b) => Row(a, b) })
 
     // (driver actions, jobs)
-    assert(countsOf(Graph.pageRank(n, e, iters = 4).collect()) === ((9, 24)))
-    assert(countsOf(Graph.pageRankSeeded(n, e, seeds, iters = 4).collect()) === ((9, 26)))
-    assert(countsOf(Graph.hits(n, e, iters = 3).collect()) === ((10, 40)))
+    // driver-resident rounds: the node collect, the out-degree job that
+    // encodes the edges (pageRank), one job per round (hits: per half),
+    // and the collect; the rest are AQE stages (the node distinct, the
+    // seed join, hits' edge distinct)
+    assert(countsOf(Graph.pageRank(n, e, iters = 4).collect()) === ((7, 8)))
+    assert(countsOf(Graph.pageRankSeeded(n, e, seeds, iters = 4).collect()) === ((7, 10)))
+    assert(countsOf(Graph.hits(n, e, iters = 3).collect()) === ((9, 10)))
     // one action per peel round / hop: setup, one checkpoint-plus-probe
     // per round, and the collect
     assert(countsOf(Graph.kCore(lattice, k = 4).collect()) === ((12, 30)))

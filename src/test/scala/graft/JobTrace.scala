@@ -6,11 +6,17 @@ import org.apache.spark.{GraftTestBridge, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 
 /** What a block made Spark do: the jobs it started, the distinct SQL
-  * executions those jobs ran under (one per driver action: a count, a
+  * executions those jobs ran under (one per Dataset action: a count, a
   * collect, an eager checkpoint; AQE's query stages are jobs of the same
-  * execution), and the task count of each stage it submitted.
+  * execution), the jobs it ran outside any SQL execution (an RDD action
+  * such as a `runJob`, or query stages AQE runs for a plan read as an
+  * RDD), and the task count of each stage it submitted.
   */
-final case class JobTrace(jobs: Int, executions: Int, stageTasks: Seq[Int])
+final case class JobTrace(jobs: Int, executions: Int, stageTasks: Seq[Int],
+                          looseJobs: Int) {
+  /** Driver actions: each SQL execution, and each job outside one. */
+  def actions: Int = executions + looseJobs
+}
 
 object JobTrace {
   /** Runs `run` with a listener attached and returns its result and
@@ -19,11 +25,11 @@ object JobTrace {
     * `run`, so every event of its own is.
     */
   def apply[T](sc: SparkContext)(run: => T): (T, JobTrace) = {
-    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobExecs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        executions.add(String.valueOf(j.properties.getProperty("spark.sql.execution.id")))
+        jobExecs.add(Option(j.properties.getProperty("spark.sql.execution.id")).getOrElse(""))
       override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
         stageTasks.add(s.stageInfo.numTasks)
     }
@@ -32,8 +38,9 @@ object JobTrace {
     try {
       val result = run
       GraftTestBridge.waitForListeners(sc)
-      val ids = executions.asScala.toSeq
-      (result, JobTrace(ids.size, ids.distinct.size, stageTasks.asScala.toSeq))
+      val (sql, loose) = jobExecs.asScala.toSeq.partition(_.nonEmpty)
+      (result, JobTrace(sql.size + loose.size, sql.distinct.size,
+        stageTasks.asScala.toSeq, loose.size))
     } finally sc.removeSparkListener(listener)
   }
 }
