@@ -22,24 +22,6 @@ import graft.functions.topK
   */
 object Curation {
 
-  /** α-power source-mixture resampling (the multilingual/multi-source
-    * reweighting rule of GPT-3 appendix A / Conneau & Lample 2019):
-    * source s with n_s docs gets sampling weight w_s = n_s^α / Σ_t n_t^α,
-    * a per-source keep rate min(1, target·w_s / n_s), and each doc is
-    * kept iff the first 4 hex chars of md5(salt:id) fall below the
-    * rate's 32-bit threshold. α < 1 upweights small sources (the reason
-    * the rule exists); α = 1 is proportional sampling.
-    *
-    * Scale shape: one combiner-friendly count per source, one scalar
-    * aggregate, one broadcast join of the (tiny) rate table, then a
-    * narrow hash filter — no corpus shuffle at all. The rate is rounded
-    * to 6 decimals BEFORE quantization so both engines ceil the same
-    * double. The threshold is ceil(rate·2³²)/2³² over an 8-hex-char
-    * hash slice: the realized keep probability brackets the exact rate
-    * from above by < 2⁻³² (a floor over 16 bits undershoots by up to
-    * 1/65536 and silently drops sources with rate < 1/65536 — the exact
-    * small-source upweighting this operator exists for).
-    */
   /** DSIR hashed-n-gram importance weights (Xie et al. 2023, "Data
     * Selection for Language Models via Importance Resampling"): score
     * every raw document by how target-like its hashed unigram features
@@ -143,6 +125,24 @@ object Curation {
          ).as("weight_e6"))
   }
 
+  /** α-power source-mixture resampling (the multilingual/multi-source
+    * reweighting rule of GPT-3 appendix A / Conneau & Lample 2019):
+    * source s with n_s docs gets sampling weight w_s = n_s^α / Σ_t n_t^α,
+    * a per-source keep rate min(1, target·w_s / n_s), and each doc is
+    * kept iff the first 4 hex chars of md5(salt:id) fall below the
+    * rate's 32-bit threshold. α < 1 upweights small sources (the reason
+    * the rule exists); α = 1 is proportional sampling.
+    *
+    * Scale shape: one combiner-friendly count per source, one scalar
+    * aggregate, one broadcast join of the (tiny) rate table, then a
+    * narrow hash filter — no corpus shuffle at all. The rate is rounded
+    * to 6 decimals BEFORE quantization so both engines ceil the same
+    * double. The threshold is ceil(rate·2³²)/2³² over an 8-hex-char
+    * hash slice: the realized keep probability brackets the exact rate
+    * from above by < 2⁻³² (a floor over 16 bits undershoots by up to
+    * 1/65536 and silently drops sources with rate < 1/65536 — the exact
+    * small-source upweighting this operator exists for).
+    */
   def mixtureSample(docs: DataFrame, alpha: Double, targetTotal: Long,
                     sourceCol: String = "source", idCol: String = "doc_id",
                     salt: String = "mix"): DataFrame = {

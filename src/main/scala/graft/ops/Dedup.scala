@@ -24,21 +24,6 @@ import org.apache.spark.sql.types._
   */
 object Dedup {
 
-  /** Fan a small-file scan out to more cores before per-row-heavy work
-    * (shingling, hashing). The driver testdata is one parquet file per
-    * table → one input partition → one busy core without this. Two guards:
-    *  - when the scan is already at least target-parallel (any real
-    *    multi-file corpus), this is a no-op — an unconditional repartition
-    *    would be a full shuffle of the corpus at 100 TB;
-    *  - the target is capped by what the INPUT SIZE justifies (one task
-    *    per 64 KiB of plan-stats bytes — shingling+hashing is ~100×
-    *    heavier per byte than a plain scan, hence far below Spark's
-    *    128 MiB scan split), so a 500-doc corpus on a 32-core box doesn't
-    *    pay 32-near-empty-task fixed costs per downstream stage: measured
-    *    as the r6 driver-bench amplification on the dedup trio. Stats come
-    *    from the optimized plan (parquet file bytes) — no job; an unknown
-    *    size falls back to full parallelism.
-    */
   /** Input-size-derived task width: one task per `perTask` plan-stats
     * bytes, capped at defaultParallelism; unknown/overflowed stats fall
     * back to full parallelism. The shared sizing rule for pinning
@@ -57,6 +42,21 @@ object Dedup {
     math.min(max, justified).toInt
   }
 
+  /** Fan a small-file scan out to more cores before per-row-heavy work
+    * (shingling, hashing). The driver testdata is one parquet file per
+    * table → one input partition → one busy core without this. Two guards:
+    *  - when the scan is already at least target-parallel (any real
+    *    multi-file corpus), this is a no-op — an unconditional repartition
+    *    would be a full shuffle of the corpus at 100 TB;
+    *  - the target is capped by what the INPUT SIZE justifies (one task
+    *    per 64 KiB of plan-stats bytes — shingling+hashing is ~100×
+    *    heavier per byte than a plain scan, hence far below Spark's
+    *    128 MiB scan split), so a 500-doc corpus on a 32-core box doesn't
+    *    pay 32-near-empty-task fixed costs per downstream stage: measured
+    *    as the r6 driver-bench amplification on the dedup trio. Stats come
+    *    from the optimized plan (parquet file bytes) — no job; an unknown
+    *    size falls back to full parallelism.
+    */
   private[ops] def spread(df: DataFrame): DataFrame = spreadWithWidth(df)._1
 
   /** [[spread]] and the partition count of the frame it returns. */
@@ -795,23 +795,6 @@ object Dedup {
   /** Per-doc 16-bit SimHash (the oracle-pinned fingerprint surface). */
   def simhash16(docs: DataFrame): DataFrame = simhash(docs, 16)
 
-  /** Connected components over an undirected pair list — the final step of
-    * every dedup pipeline: near-dup PAIRS (from MinHash/SimHash/embedding
-    * candidates) become duplicate CLUSTERS, keeping one representative per
-    * cluster (the minimum id).
-    *
-    * Algorithm: iterative min-label propagation — each round every node
-    * takes the min label over itself and its neighbors; converges in
-    * O(component diameter) rounds, and duplicate clusters are
-    * near-cliques (diameter ≤ ~2-3), so 2-4 rounds in practice. Each round
-    * is one shuffle-by-node-id; labels are localCheckpointed so lineage
-    * stays flat. For HIGH-DIAMETER graphs (paths, lattices, road
-    * networks) use [[connectedComponentsStar]] — O(log²) rounds instead
-    * of O(diameter), same output contract.
-    *
-    * nodes: one `doc_id` column; edges: (doc_a, doc_b).
-    * Returns (doc_id, cluster_id) for every node, singletons included.
-    */
   /** Path-compressed union-find over an edge list — the driver-side small-
     * graph fast path of [[connectedComponents]]. Returns id → min-id-root
     * for every id appearing in an edge.
@@ -833,6 +816,23 @@ object Dedup {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
+  /** Connected components over an undirected pair list — the final step of
+    * every dedup pipeline: near-dup PAIRS (from MinHash/SimHash/embedding
+    * candidates) become duplicate CLUSTERS, keeping one representative per
+    * cluster (the minimum id).
+    *
+    * Algorithm: iterative min-label propagation — each round every node
+    * takes the min label over itself and its neighbors; converges in
+    * O(component diameter) rounds, and duplicate clusters are
+    * near-cliques (diameter ≤ ~2-3), so 2-4 rounds in practice. Each round
+    * is one shuffle-by-node-id; labels are localCheckpointed so lineage
+    * stays flat. For HIGH-DIAMETER graphs (paths, lattices, road
+    * networks) use [[connectedComponentsStar]] — O(log²) rounds instead
+    * of O(diameter), same output contract.
+    *
+    * nodes: one `doc_id` column; edges: (doc_a, doc_b).
+    * Returns (doc_id, cluster_id) for every node, singletons included.
+    */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           smallEdgeLimit: Long = 2000000L): DataFrame = {
     // cost-based path choice (the analog of the reference's fused-path

@@ -101,11 +101,10 @@ object Lexical {
           (col("tf") * (k1 + 1.0)) /
           (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("len") / col("avg_len"))))
           .as("c"))
-    Similarity.explodeHits(
+    Similarity.rankTopK(
       contrib.groupBy(col("qid"), col("label"))
-        .agg(floor(sum(col("c")) * lit(1e6) + lit(0.5)).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = false).as("hits")))
+        .agg(floor(sum(col("c")) * lit(1e6) + lit(0.5)).as("score")),
+      k, ascending = false)
   }
 
   /** TF-IDF cosine "more-like-this" — the vector-space-model baseline
@@ -149,19 +148,18 @@ object Lexical {
       .filter(col("doc_id") =!= col("qid"))
       .groupBy(col("qid"), col("doc_id"))
       .agg(sum(col("qw") * col("w")).as("dot"))
-    Similarity.explodeHits(
+    Similarity.rankTopK(
       dots.join(norms, "doc_id").join(broadcast(qnorms), "qid")
         .select(col("qid"), col("doc_id").as("label"),
           floor(col("dot") / (col("nrm") * col("qnrm")) * lit(1e6)
-            + lit(0.5)).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = false).as("hits")))
+            + lit(0.5)).as("score")),
+      k, ascending = false)
   }
 
   /** Reciprocal-rank fusion (Cormack & Clarke 2009): each input list
     * contributes 1/(c+rank) per (qid, label); fused score DESC, ties to
     * the smaller label. Inputs are (qid, rank, label, ...) frames — the
-    * [[Similarity.explodeHits]] shape both the dense and lexical rankers
+    * [[Similarity.rankTopK]] shape both the dense and lexical rankers
     * emit. Rank-only fusion needs no score calibration between lists,
     * which is why it is the default hybrid combiner in production search.
     */
@@ -170,11 +168,10 @@ object Lexical {
     val votes = lists.map(_.select(col("qid"), col("label"),
         (lit(1.0) / (lit(c.toDouble) + col("rank"))).as("v")))
       .reduce(_ unionByName _)
-    Similarity.explodeHits(
+    Similarity.rankTopK(
       votes.groupBy(col("qid"), col("label"))
-        .agg(floor(sum(col("v")) * lit(1e6) + lit(0.5)).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = false).as("hits")))
+        .agg(floor(sum(col("v")) * lit(1e6) + lit(0.5)).as("score")),
+      k, ascending = false)
   }
 
   /** Exact phrase search via positional postings — the inverted-index

@@ -136,7 +136,7 @@ object Nsw {
 
   /** Sharded NSW top-k. `vectors`: (id: Long, vec: array<float>);
     * `queries`: (qid: Long, qv: array<float>). Output: (qid, rank, label,
-    * score) — the shared kNN shape (`Similarity.explodeHits`).
+    * score) — the shared kNN shape (`Similarity.rankTopK`).
     *
     * `numShards` bounds per-shard memory (graph + vectors must fit one
     * task); `m`/`efConstruction` set graph quality, `efSearch ≥ k` sets
@@ -181,9 +181,6 @@ object Nsw {
       }
       .toDF("qid", "label", "score")
 
-    Similarity.explodeHits(
-      candidates.groupBy(col("qid"))
-        .agg(graft.functions.topK(col("score"), col("label"), k,
-          ascending = true).as("hits")))
+    Similarity.rankTopK(candidates, k, ascending = true)
   }
 }

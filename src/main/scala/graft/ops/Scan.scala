@@ -55,25 +55,14 @@ object Scan {
                 numParts: Int = 0, maxDriverEntries: Int = 1 << 20): DataFrame = {
     require(orderCols.nonEmpty, "prefixSum needs at least one order column")
     val spark = df.sparkSession
-    // r19 (opt): default width from INPUT SIZE (1 MiB of plan-stats bytes
-    // per range partition), core-capped — not a flat defaultParallelism.
-    // The two RDD passes pay a per-task Row-conversion + closure-deser
-    // fixed cost (~100 ms/task measured at local[32]), so 32 near-empty
-    // range partitions of an MB-scale frame cost more than they buy;
-    // corpus-scale frames still get full parallelism (bytes/1MiB >> cores,
-    // min() caps). Unknown/overflowed stats fall back to full parallelism.
-    // Partition count does not change results (the offsets pass makes the
-    // cumsum boundary-independent), only task sizing.
-    val p =
-      if (numParts > 0) numParts
-      else {
-        val max = spark.sparkContext.defaultParallelism.toLong
-        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        val justified =
-          if (bytes <= 0 || bytes > BigInt(Long.MaxValue) / 2) max
-          else math.max(1L, (bytes / (1L << 20)).toLong)
-        math.min(max, justified).toInt
-      }
+    // r19 (opt): default width from INPUT SIZE (1 MiB per range
+    // partition), not a flat defaultParallelism. The two RDD passes pay a
+    // per-task Row-conversion + closure-deser fixed cost (~100 ms/task
+    // measured at local[32]), so 32 near-empty range partitions of an
+    // MB-scale frame cost more than they buy. Partition count does not
+    // change results (the offsets pass makes the cumsum
+    // boundary-independent), only task sizing.
+    val p = if (numParts > 0) numParts else Dedup.sizedWidth(df, 1L << 20)
     val keyCols = (groupCols ++ orderCols).map(col)
     // one shuffle; eager checkpoint pins partition boundaries for BOTH passes
     val sorted = df.repartitionByRange(p, keyCols: _*)

@@ -33,12 +33,17 @@ object Similarity {
          c === Double.NegativeInfinity, c)
       .otherwise(floor(c * lit(1e6) + lit(0.5)) / lit(1e6))
 
-  /** Unpack a grouped `hits` top-k array into (qid, rank[1-based], label,
-    * score) rows — the ONE place this shape is defined, because every kNN
-    * formulation must unpack identically for the shared oracle to match.
+  /** The rank stage of every kNN formulation: a k-bounded `topK` of each
+    * query's (score, `label`) rows, unpacked into (qid, rank[1-based],
+    * label, score) rows — the ONE place this shape is defined, because
+    * every kNN formulation must unpack identically for the shared oracle
+    * to match.
     */
-  def explodeHits(grouped: DataFrame): DataFrame =
-    grouped.select(col("qid"), posexplode(col("hits")))
+  private[graft] def rankTopK(scored: DataFrame, k: Int, ascending: Boolean,
+                              label: String = "label"): DataFrame =
+    scored.groupBy(col("qid"))
+      .agg(topK(col("score"), col(label), k, ascending = ascending).as("hits"))
+      .select(col("qid"), posexplode(col("hits")))
       .select(col("qid"), (col("pos") + 1).cast(LongType).as("rank"),
         col("col.label").as("label"), col("col.score").as("score"))
 
@@ -76,8 +81,7 @@ object Similarity {
     val (_, asc, code) = metricOf(metric)
     fusedPartials(vectors, queries, k, asc, code, round6) match {
       case Some(partials) =>
-        explodeHits(partials.groupBy(col("qid"))
-            .agg(topK(col("score"), col("id"), k, ascending = asc).as("hits")))
+        rankTopK(partials, k, asc, label = "id")
           .withColumn("qid", col("qid").cast(queries.schema("qid").dataType))
       case None => crossJoinTopK(vectors, queries, k, metric, round6)
     }
@@ -94,10 +98,7 @@ object Similarity {
     val scored = Dedup.spread(vectors).crossJoin(broadcast(queries))
       .select(col("qid"), col("id").as("label"),
         (if (round6) q6(scoreCol) else scoreCol).as("score"))
-    explodeHits(
-      (if (round6) scored.filter(!isnan(col("score"))) else scored)
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = asc).as("hits")))
+    rankTopK(if (round6) scored.filter(!isnan(col("score"))) else scored, k, asc)
   }
 
   /** The fused route of [[exactTopK]]: the kernel's (qid, id, score)
@@ -201,14 +202,11 @@ object Similarity {
     val vt = vectors.withColumn("tile", pmod(hash(col("id")), lit(t)))
     val qt = queries.withColumn("tile",
       explode(sequence(lit(0), lit(t - 1))))
-    explodeHits(
-      // hint pins the shuffle join: without it Catalyst would broadcast
-      // the (replicated) query side, which is exactly the plan this
-      // formulation exists to avoid
-      vt.hint("shuffle_hash").join(qt, "tile")
-        .select(col("qid"), col("id").as("label"), scoreCol.as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = asc).as("hits")))
+    // hint pins the shuffle join: without it Catalyst would broadcast
+    // the (replicated) query side, which is exactly the plan this
+    // formulation exists to avoid
+    rankTopK(vt.hint("shuffle_hash").join(qt, "tile")
+      .select(col("qid"), col("id").as("label"), scoreCol.as("score")), k, asc)
   }
 
   /** IVF-style ANN:
@@ -225,7 +223,13 @@ object Similarity {
     * by `cid` so a probe prunes partitions instead of filtering.
     */
   def ivfTopK(vectors: DataFrame, queries: DataFrame, k: Int,
-              centroidModulo: Int, nProbe: Int): DataFrame = {
+              centroidModulo: Int, nProbe: Int): DataFrame =
+    ivfModuloTopK(vectors, queries, k, centroidModulo, nProbe, "fp32")
+
+  /** [[ivfTopK]] over `payload` storage ([[ivfAssign]]'s payloads). */
+  private def ivfModuloTopK(vectors: DataFrame, queries: DataFrame, k: Int,
+                            centroidModulo: Int, nProbe: Int,
+                            payload: String): DataFrame = {
     // "train": the centroid table is small by definition — collect it once
     // and embed it in a narrow projection (no cross-join, no shuffle for
     // assignment or probe lists)
@@ -236,18 +240,47 @@ object Similarity {
     // assignment per search re-pays n·nClusters·d FLOPs every action,
     // invisible at 20k vectors but ~50× the serve cost at 200k
     // (BASELINE.md round-14 Pareto note).
-    ivfServeTopK(cents,
-      ivfAssign(vectors, cents, materialize = false), queries, k, nProbe)
+    ivfServeTopK(cents, ivfAssign(vectors, cents, payload, materialize = false),
+      queries, k, nProbe, payload)
   }
 
   /** The modulo-sampled centroid table of the [[ivfTopK]] family. */
   def ivfModuloCents(vectors: DataFrame,
                      centroidModulo: Int): Seq[(Long, Array[Float])] =
+    moduloCents(vectors, centroidModulo, "IVF centroid table")
+
+  /** The deterministic centroid/codebook stand-in of every modulo
+    * operator: the (id, vec) rows whose id is a multiple of `modulo`, in
+    * id order. `capped` keeps the first 256 picks (ids 0, modulo, …,
+    * modulo·255), the PQ codebook size ([[pqModuloCodebook]]). `what`
+    * names the table in [[collectSmall]]'s message.
+    */
+  private def moduloCents(vectors: DataFrame, modulo: Int, what: String,
+                          capped: Boolean = false): Seq[(Long, Array[Float])] = {
+    val pick = col("id") % modulo === 0
     collectSmall(
-        vectors.filter(col("id") % centroidModulo === 0).select(col("id"), col("vec")),
-        "IVF centroid table")
+        vectors.filter(if (capped) pick && col("id") < lit(modulo.toLong * 256) else pick)
+          .select(col("id"), col("vec")),
+        what)
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
       .sortBy(_._1)
+  }
+
+  /** Each row's nearest centroid id: argmin by (squared L2, cid). */
+  private def nearestCid(v: Column, cents: Seq[(Long, Array[Float])]): Column =
+    element_at(nearestCentroids(v, cents, 1), 1)
+
+  /** The corpus spread and keyed by each row's nearest centroid (`cid`). */
+  private def assign(vectors: DataFrame, cents: Seq[(Long, Array[Float])]): DataFrame =
+    Dedup.spread(vectors).withColumn("cid", nearestCid(col("vec"), cents))
+
+  /** The IVF probe list: each query (qid, qv) once per one of its
+    * `nProbe` nearest centroids (`cid`).
+    */
+  private def probe(queries: DataFrame, cents: Seq[(Long, Array[Float])],
+                    nProbe: Int): DataFrame =
+    queries.select(col("qid"), col("qv"),
+      explode(nearestCentroids(col("qv"), cents, nProbe)).as("cid"))
 
   /** Index BUILD of the IVF family, split from serve (the r13
     * train/serve accounting, extended to ASSIGNMENT): every vector keys
@@ -271,8 +304,7 @@ object Similarity {
   def ivfAssign(vectors: DataFrame, cents: Seq[(Long, Array[Float])],
                 payload: String = "fp32",
                 materialize: Boolean = true): DataFrame = {
-    val assigned = Dedup.spread(vectors)
-      .withColumn("cid", element_at(nearestCentroids(col("vec"), cents, 1), 1))
+    val assigned = assign(vectors, cents)
     val enc = payload match {
       case "fp32" => assigned.select(col("cid"), col("id"), col("vec"))
       case "sq8"  => assigned.select(col("cid"), col("id"), quantizeInt8(col("vec")).as("q"))
@@ -289,20 +321,14 @@ object Similarity {
   def ivfServeTopK(cents: Seq[(Long, Array[Float])], index: DataFrame,
                    queries: DataFrame, k: Int, nProbe: Int,
                    payload: String = "fp32"): DataFrame = {
-    val probes = queries
-      .select(col("qid"), col("qv"),
-        explode(nearestCentroids(col("qv"), cents, nProbe)).as("cid"))
     val score = payload match {
       case "fp32" => squaredL2(col("vec"), col("qv"))
       case "sq8"  => squaredL2(dequantizeInt8(col("q.codes"), col("q.scale")), col("qv"))
       case "sq4"  => squaredL2(dequantizeInt4(col("q.codes"), col("q.scale"), col("q.n")), col("qv"))
       case other  => throw new IllegalArgumentException(s"unknown IVF payload $other")
     }
-    explodeHits(
-      probes.join(index, "cid")
-        .select(col("qid"), col("id").as("label"), score.as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
+    rankTopK(probe(queries, cents, nProbe).join(index, "cid")
+      .select(col("qid"), col("id").as("label"), score.as("score")), k, ascending = true)
   }
 
   /** [[ivfTopK]] with a metadata predicate on the corpus rows — FAISS's
@@ -318,25 +344,11 @@ object Similarity {
   def ivfFilteredTopK(vectors: DataFrame, queries: DataFrame, k: Int,
                       centroidModulo: Int, nProbe: Int,
                       pred: Column): DataFrame = {
-    val cents = collectSmall(
-        vectors.filter(col("id") % centroidModulo === 0).select(col("id"), col("vec")),
-        "IVF centroid table")
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      .sortBy(_._1)
+    val cents = ivfModuloCents(vectors, centroidModulo)
     // assignment runs over the FULL corpus (the index is built once);
-    // the predicate prunes at SEARCH time, inside the probed scan
-    val assigned = Dedup.spread(vectors)
-      .withColumn("cid", element_at(nearestCentroids(col("vec"), cents, 1), 1))
-      .filter(pred)
-    val probes = queries
-      .select(col("qid"), col("qv"),
-        explode(nearestCentroids(col("qv"), cents, nProbe)).as("cid"))
-    explodeHits(
-      probes.join(assigned, "cid")
-        .select(col("qid"), col("id").as("label"),
-          squaredL2(col("vec"), col("qv")).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
+    // the predicate prunes at SEARCH time, inside the probed scan. It may
+    // name any corpus column, so it filters before any projection.
+    ivfServeTopK(cents, assign(vectors, cents).filter(pred), queries, k, nProbe)
   }
 
   /** IVF over SQ8 (int8) storage — the `IVF…,SQ8` FAISS factory composite
@@ -355,15 +367,10 @@ object Similarity {
     * hash-exact rather than by recall bound.
     */
   def ivfSq8TopK(vectors: DataFrame, queries: DataFrame, k: Int,
-                 centroidModulo: Int, nProbe: Int): DataFrame = {
+                 centroidModulo: Int, nProbe: Int): DataFrame =
     // ingest: assign raw, store int8 — the index a 100 TB deployment
     // would persist partitioned by cid with the (codes, scale) payload
-    // (one-shot lazy composition; serve-many deployments materialize
-    // [[ivfAssign]] — see [[ivfTopK]])
-    val cents = ivfModuloCents(vectors, centroidModulo)
-    ivfServeTopK(cents, ivfAssign(vectors, cents, "sq8", materialize = false),
-      queries, k, nProbe, "sq8")
-  }
+    ivfModuloTopK(vectors, queries, k, centroidModulo, nProbe, "sq8")
 
   /** IVF over SQ4 (int4) storage — one rung further down the ladder than
     * [[ivfSq8TopK]]: probed records carry nibble-packed codes (⌈d/2⌉
@@ -374,11 +381,8 @@ object Similarity {
     * so this composite hash-oracles too.
     */
   def ivfSq4TopK(vectors: DataFrame, queries: DataFrame, k: Int,
-                 centroidModulo: Int, nProbe: Int): DataFrame = {
-    val cents = ivfModuloCents(vectors, centroidModulo)
-    ivfServeTopK(cents, ivfAssign(vectors, cents, "sq4", materialize = false),
-      queries, k, nProbe, "sq4")
-  }
+                 centroidModulo: Int, nProbe: Int): DataFrame =
+    ivfModuloTopK(vectors, queries, k, centroidModulo, nProbe, "sq4")
 
   /** Radius (range) search: ALL neighbors within squared-L2 `radius`, not
     * a fixed k — FAISS CPU's `range_search` surface, which the reference
@@ -405,38 +409,13 @@ object Similarity {
   def ivfRadiusSearch(vectors: DataFrame, queries: DataFrame,
                       radius: Double, centroidModulo: Int,
                       nProbe: Int): DataFrame = {
-    val cents = collectSmall(
-        vectors.filter(col("id") % centroidModulo === 0).select(col("id"), col("vec")),
-        "IVF centroid table")
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      .sortBy(_._1)
-    val assigned = Dedup.spread(vectors)
-      .withColumn("cid", element_at(nearestCentroids(col("vec"), cents, 1), 1))
-    val probes = queries
-      .select(col("qid"), col("qv"),
-        explode(nearestCentroids(col("qv"), cents, nProbe)).as("cid"))
-    probes.join(assigned, "cid")
+    val cents = ivfModuloCents(vectors, centroidModulo)
+    probe(queries, cents, nProbe).join(assign(vectors, cents), "cid")
       .select(col("qid"), col("id").as("label"),
         squaredL2(col("vec"), col("qv")).as("score"))
       .filter(col("score") <= radius)
   }
 
-  /** GEMM-batched exact kNN — the direct Spark analog of the reference's
-    * tiled simdgroup GEMM path (`shaders/simdgroup_gemm.metal:26-138`,
-    * host gate `src/MetalDistance.mm:121-127`): instead of evaluating the
-    * distance expression one (query, vector) pair at a time, each
-    * partition packs its vectors into row blocks and computes the whole
-    * (block × nq) dot-product matrix with one netlib `dgemm` call per
-    * block (`D = ‖v‖² + ‖q‖² − 2·V·Qᵀ`, the decomposition of
-    * `src/MetalDistance.h:21`), feeding per-query BOUNDED top-k buffers —
-    * so, like the fused kernel, a partition emits only nq·k rows however
-    * many vectors it scanned.
-    *
-    * fp64 accumulation (dgemm over widened floats) keeps parity with the
-    * expression path's double math; per-buffer eviction uses the same
-    * (score, label) total order as TopKAgg, and the final per-query merge
-    * IS TopKAgg — the block_select partial/merge/final shape again.
-    */
   /** Guarded driver collect for centroid/codebook tables: these embed in
     * expressions and broadcast inside closures, so they must stay small.
     * The limit-probe costs no more than the collect itself and fails fast
@@ -461,13 +440,28 @@ object Similarity {
     spark.emptyDataset[(Long, Long, Long, Double)].toDF("qid", "rank", "label", "score")
   }
 
-  /** [[gemmTopK]] with the query side guarded: the GEMM path must
-    * `collect()` the queries to pack the Qᵀ matrix, so an unbounded query
-    * set would OOM the DRIVER (not an executor). `maxQueries` bounds the
-    * collect — larger sets are transparently routed through
-    * [[batchedTopK]] (count once, split into ceil(n·1.25/max) hash
-    * batches; the 1.25 headroom absorbs hash imbalance so a batch
-    * virtually never re-splits).
+  /** GEMM-batched exact kNN — the direct Spark analog of the reference's
+    * tiled simdgroup GEMM path (`shaders/simdgroup_gemm.metal:26-138`,
+    * host gate `src/MetalDistance.mm:121-127`): instead of evaluating the
+    * distance expression one (query, vector) pair at a time, each
+    * partition packs its vectors into row blocks and computes the whole
+    * (block × nq) dot-product matrix with one netlib `dgemm` call per
+    * block (`D = ‖v‖² + ‖q‖² − 2·V·Qᵀ`, the decomposition of
+    * `src/MetalDistance.h:21`), feeding per-query BOUNDED top-k buffers —
+    * so, like the fused kernel, a partition emits only nq·k rows however
+    * many vectors it scanned.
+    *
+    * fp64 accumulation (dgemm over widened floats) keeps parity with the
+    * expression path's double math; per-buffer eviction uses the same
+    * (score, label) total order as TopKAgg, and the final per-query merge
+    * IS TopKAgg — the block_select partial/merge/final shape again.
+    *
+    * The query side is guarded: the GEMM path must `collect()` the
+    * queries to pack the Qᵀ matrix, so an unbounded query set would OOM
+    * the DRIVER (not an executor). `maxQueries` bounds the collect —
+    * larger sets are transparently routed through [[batchedTopK]] (count
+    * once, split into ceil(n·1.25/max) hash batches; the 1.25 headroom
+    * absorbs hash imbalance so a batch virtually never re-splits).
     */
   def gemmTopK(vectors: DataFrame, queries: DataFrame, k: Int,
                blockRows: Int = 1024, maxQueries: Int = 65536,
@@ -643,9 +637,7 @@ object Similarity {
           })
         }
     }).toDF("qid", "label", "score")
-    explodeHits(
-      partials.groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = mCode == 0).as("hits")))
+    rankTopK(partials, k, ascending = mCode == 0)
   }
 
   /** Bulk kNN for query sets too large to broadcast at once: the query
@@ -745,10 +737,44 @@ object Similarity {
     * the fp32 bytes; quantizing per search re-reads the full fp32 bytes
     * and defeats the bandwidth play.
     */
-  def f16Assign(vectors: DataFrame, materialize: Boolean = true): DataFrame = {
-    val enc = Dedup.spread(vectors)
-      .select(col("id"), quantizeF16(col("vec")).as("cvec"))
+  def f16Assign(vectors: DataFrame, materialize: Boolean = true): DataFrame =
+    coarseAssign(vectors, quantizeF16(col("vec")), materialize)
+
+  /** Index BUILD of a coarse-column two-stage tier: the `coarse` encoding
+    * of each spread corpus row as `cvec`, next to its id;
+    * `materialize = true` (the serve-many shape) localCheckpoints it.
+    */
+  private def coarseAssign(vectors: DataFrame, coarse: Column,
+                           materialize: Boolean): DataFrame = {
+    val enc = Dedup.spread(vectors).select(col("id"), coarse.as("cvec"))
     if (materialize) enc.localCheckpoint(true) else enc
+  }
+
+  /** Query SERVE of a coarse-column two-stage tier: GEMM top-(k·expand)
+    * of the coarse queries `coarseQ` (qid, qv) over the stored `cvec`
+    * column, then [[exactRerank]] of that shortlist.
+    */
+  private def coarseServeTopK(index: DataFrame, vectors: DataFrame,
+                              queries: DataFrame, coarseQ: DataFrame, k: Int,
+                              expand: Int, storage: String = "fp32"): DataFrame =
+    exactRerank(gemmTopK(index.select(col("id"), col("cvec").as("vec")),
+        coarseQ, k * expand, storage = storage),
+      vectors, queries, k)
+
+  /** Exact fp32 re-rank of a shortlist (qid, label, …): the shortlist and
+    * the queries broadcast, each candidate's vector fetched by an inner
+    * join on its id, scored by squared L2 ([[q6]]-rounded under `round6`)
+    * and ranked. nq·k·expand rows, independent of corpus size.
+    */
+  private def exactRerank(shortlist: DataFrame, vectors: DataFrame,
+                          queries: DataFrame, k: Int,
+                          round6: Boolean = false): DataFrame = {
+    val cands = shortlist.select(col("qid"), col("label"))
+    val score = squaredL2(col("vec"), col("qv"))
+    rankTopK(broadcast(cands).join(vectors, cands("label") === vectors("id"))
+      .join(broadcast(queries), "qid")
+      .select(col("qid"), col("label"), (if (round6) q6(score) else score).as("score")),
+      k, ascending = true)
   }
 
   /** Query SERVE over a built f16 index ([[f16Assign]]): the coarse scan
@@ -758,17 +784,8 @@ object Similarity {
     * shortlist is unchanged), then exact fp32 rerank.
     */
   def f16ServeTopK(index: DataFrame, vectors: DataFrame,
-                   queries: DataFrame, k: Int, expand: Int): DataFrame = {
-    val shortlist = gemmTopK(index.select(col("id"), col("cvec").as("vec")),
-        queries, k * expand, storage = "f16")
-      .select(col("qid"), col("label"))
-    explodeHits(
-      broadcast(shortlist).join(vectors, shortlist("label") === vectors("id"))
-        .join(broadcast(queries), "qid")
-        .select(col("qid"), col("label"), squaredL2(col("vec"), col("qv")).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
-  }
+                   queries: DataFrame, k: Int, expand: Int): DataFrame =
+    coarseServeTopK(index, vectors, queries, queries, k, expand, storage = "f16")
 
   /** Adaptive (Matryoshka-style) two-stage retrieval: coarse shortlist on
     * the first `prefixDims` dimensions, then an exact full-dimension
@@ -795,11 +812,8 @@ object Similarity {
     * column per search.
     */
   def prefixAssign(vectors: DataFrame, prefixDims: Int,
-                   materialize: Boolean = true): DataFrame = {
-    val enc = Dedup.spread(vectors)
-      .select(col("id"), slice(col("vec"), 1, prefixDims).as("cvec"))
-    if (materialize) enc.localCheckpoint(true) else enc
-  }
+                   materialize: Boolean = true): DataFrame =
+    coarseAssign(vectors, slice(col("vec"), 1, prefixDims), materialize)
 
   /** Query SERVE over a built prefix index ([[prefixAssign]]): slice the
     * nq queries (cheap), GEMM top-(k·expand) over the STORED coarse
@@ -807,18 +821,9 @@ object Similarity {
     */
   def prefixServeTopK(index: DataFrame, vectors: DataFrame,
                       queries: DataFrame, k: Int, prefixDims: Int,
-                      expand: Int): DataFrame = {
-    val qPre = queries.select(col("qid"), slice(col("qv"), 1, prefixDims).as("qv"))
-    val shortlist = gemmTopK(index.select(col("id"), col("cvec").as("vec")),
-        qPre, k * expand)
-      .select(col("qid"), col("label"))
-    explodeHits(
-      broadcast(shortlist).join(vectors, shortlist("label") === vectors("id"))
-        .join(broadcast(queries), "qid")
-        .select(col("qid"), col("label"), squaredL2(col("vec"), col("qv")).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
-  }
+                      expand: Int): DataFrame =
+    coarseServeTopK(index, vectors, queries,
+      queries.select(col("qid"), slice(col("qv"), 1, prefixDims).as("qv")), k, expand)
 
   /** ColBERT-style late-interaction retrieval (MaxSim — Khattab &
     * Zaharia 2020, SIGIR): a query is a SET of token vectors, a document
@@ -866,25 +871,6 @@ object Similarity {
   case class PcaModel(mean: Array[Double], components: Array[Array[Double]],
                       explained: Array[Double], totalVar: Double)
 
-  /** Train a PCA basis on a bounded deterministic sample — FAISS's
-    * PCAMatrix::train model (faiss/VectorTransform.h): the transform is
-    * always fit on a capped in-process sample regardless of index size,
-    * so training cost is corpus-independent at 100 TB. The collected
-    * sample is sorted lexicographically before any fp accumulation, making
-    * mean/covariance (and therefore the basis) a pure function of the
-    * sample SET — invariant to partitioning and core count, the same
-    * determinism contract as [[trainPqCodebook]].
-    *
-    * Eigendecomposition is a driver-side cyclic Jacobi sweep over the
-    * d×d covariance (d is an embedding width — 64 here, ≤ a few thousand
-    * anywhere — so O(d³) is microseconds-to-ms and needs no LAPACK
-    * dependency); Jacobi on a symmetric matrix is unconditionally
-    * convergent and, with the fixed (p,q) sweep order used here, fully
-    * deterministic. Each kept component's sign is normalized so its
-    * largest-|entry| coordinate (first index on ties) is positive —
-    * eigenvectors are sign-ambiguous, and an unpinned sign would make the
-    * projected space (and every downstream hash) run-dependent.
-    */
   /** In-place cyclic Jacobi eigensolve on a symmetric d×d matrix: `a`'s
     * diagonal converges to the eigenvalues; returns the accumulated
     * rotation whose COLUMNS are the eigenvectors. Fixed (p,q) sweep order
@@ -943,26 +929,33 @@ object Similarity {
     vecs
   }
 
+  /** Train a PCA basis on a bounded deterministic sample — FAISS's
+    * PCAMatrix::train model (faiss/VectorTransform.h): the transform is
+    * always fit on a capped in-process sample regardless of index size,
+    * so training cost is corpus-independent at 100 TB. The collected
+    * sample is sorted lexicographically before any fp accumulation, making
+    * mean/covariance (and therefore the basis) a pure function of the
+    * sample SET — invariant to partitioning and core count, the same
+    * determinism contract as [[trainPqCodebook]].
+    *
+    * Eigendecomposition is a driver-side cyclic Jacobi sweep over the
+    * d×d covariance (d is an embedding width — 64 here, ≤ a few thousand
+    * anywhere — so O(d³) is microseconds-to-ms and needs no LAPACK
+    * dependency); Jacobi on a symmetric matrix is unconditionally
+    * convergent and, with the fixed (p,q) sweep order used here, fully
+    * deterministic. Each kept component's sign is normalized so its
+    * largest-|entry| coordinate (first index on ties) is positive —
+    * eigenvectors are sign-ambiguous, and an unpinned sign would make the
+    * projected space (and every downstream hash) run-dependent.
+    */
   def trainPca(vectors: DataFrame, dOut: Int,
                knownCount: Long = -1L): PcaModel = {
-    val sample: Array[Array[Float]] = collectSmall(
-        trainSample(vectors, knownCount = knownCount).select(col("vec").as("v")),
-        "PCA training sample")
-      .map(_.getSeq[Float](0).toArray)
+    val sample = sortedSample(
+      trainSampleOf(vectors, knownCount = knownCount).select(col("vec").as("v")),
+      "PCA training sample")
     require(sample.nonEmpty, "PCA training needs a non-empty sample")
     val d = sample(0).length
     require(dOut >= 1 && dOut <= d, s"dOut must be in [1, $d], got $dOut")
-    java.util.Arrays.sort(sample, new java.util.Comparator[Array[Float]] {
-      def compare(a: Array[Float], b: Array[Float]): Int = {
-        var i = 0
-        while (i < a.length && i < b.length) {
-          val c = java.lang.Float.compare(a(i), b(i))
-          if (c != 0) return c
-          i += 1
-        }
-        java.lang.Integer.compare(a.length, b.length)
-      }
-    })
     val n = sample.length
     val mean = new Array[Double](d)
     sample.foreach { v =>
@@ -1055,12 +1048,8 @@ object Similarity {
     * localCheckpoints it.
     */
   def pcaAssign(vectors: DataFrame, model: PcaModel,
-                materialize: Boolean = true): DataFrame = {
-    val enc = Dedup.spread(vectors)
-      .select(col("id"),
-        pcaProject(col("vec"), model.mean, model.components).as("cvec"))
-    if (materialize) enc.localCheckpoint(true) else enc
-  }
+                materialize: Boolean = true): DataFrame =
+    coarseAssign(vectors, pcaProject(col("vec"), model.mean, model.components), materialize)
 
   /** Query SERVE over a built projection index ([[pcaAssign]]): rotate
     * the nq queries (nq·d·dOut FLOPs — corpus-independent), GEMM
@@ -1068,19 +1057,10 @@ object Similarity {
     * rerank of the shortlist against the fp32 `vectors`.
     */
   def pcaServeTopK(model: PcaModel, index: DataFrame, vectors: DataFrame,
-                   queries: DataFrame, k: Int, expand: Int): DataFrame = {
-    val qP = queries.select(col("qid"),
-      pcaProject(col("qv"), model.mean, model.components).as("qv"))
-    val shortlist = gemmTopK(index.select(col("id"), col("cvec").as("vec")),
-        qP, k * expand)
-      .select(col("qid"), col("label"))
-    explodeHits(
-      broadcast(shortlist).join(vectors, shortlist("label") === vectors("id"))
-        .join(broadcast(queries), "qid")
-        .select(col("qid"), col("label"), squaredL2(col("vec"), col("qv")).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
-  }
+                   queries: DataFrame, k: Int, expand: Int): DataFrame =
+    coarseServeTopK(index, vectors, queries,
+      queries.select(col("qid"), pcaProject(col("qv"), model.mean, model.components).as("qv")),
+      k, expand)
 
   /** Deterministic Johnson-Lindenstrauss sparse sign matrix (Achlioptas
     * 2003): entries {+1, 0, −1} at p = (43/256, 170/256, 43/256), the
@@ -1124,6 +1104,40 @@ object Similarity {
       PcaModel(Array.fill(dIn)(0.0), jlMatrix(dIn, dOut),
         explained = Array.empty, totalVar = 0.0), expand)
 
+  /** The capped deterministic modulo codebook [[pqTopK]]/[[ivfPqTopK]]
+    * use: the first 256 modulo picks (ids 0, mod, …, mod·255) — fixed
+    * size is the real PQ design (2⁸ centroids per subspace, one code
+    * byte) and keeps the assignment oracle linear in n. ci = id/mod
+    * still equals the positional index on both engines.
+    */
+  def pqModuloCodebook(vectors: DataFrame, centroidModulo: Int): Seq[Array[Float]] =
+    moduloCents(vectors, centroidModulo, "PQ codebook", capped = true).map(_._2)
+
+  /** Corpus quantization distortion of a PQ codebook: ONE row
+    * `(sse)` = Σ_v e6⌊‖v − decode(encode(v))‖²⌉ as DECIMAL(38,0) —
+    * the ADC distance of a vector against its OWN codes is exactly the
+    * per-vector squared reconstruction error, so this is one narrow
+    * compiled pass over the corpus (encode + self-ADC per row, an
+    * integer witness per row, a decimal SUM): the 100 TB cost shape of
+    * any full-scan aggregate, no joins, no shuffle beyond the final
+    * combine. This is the quantity k-means training MINIMIZES — the
+    * right cross-codebook invariant at every corpus shape, where a
+    * recall-on-k-pinned-queries comparison can flip on corpora whose
+    * query shell accidentally matches one codebook's sampling bias
+    * (r18: the 100× replica's scale-shell structure did exactly that).
+    */
+  def pqCorpusSse(vectors: DataFrame, cents: Seq[Array[Float]], m: Int): DataFrame =
+    selfAdcSse(Dedup.spread(vectors), col("vec"), cents, m)
+
+  /** Σ over `rows` of e6⌊self-ADC of `v`⌉ as DECIMAL(38,0): the one-row
+    * distortion of [[pqCorpusSse]] and [[ivfPqResidualCorpusSse]].
+    */
+  private def selfAdcSse(rows: DataFrame, v: Column, cents: Seq[Array[Float]],
+                         m: Int): DataFrame =
+    rows.select(intWitness(pqAdcScore(pqEncode(v, cents, m), v, cents, m), 1000000L)
+        .cast(DecimalType(38, 0)).as("e"))
+      .agg(sum(col("e")).as("sse"))
+
   /** Product-quantization ANN (PQ codes + ADC scan) — the memory-
     * compression scale path: vectors are encoded ONCE into `m` sub-
     * centroid indices (for d=64/m=8, a 32× reduction of the bytes a scan
@@ -1145,56 +1159,24 @@ object Similarity {
     * in different orders, and the round makes the (score, label) total
     * order engine-independent.
     */
-  /** The capped deterministic modulo codebook [[pqTopK]]/[[ivfPqTopK]]
-    * use: the first 256 modulo picks (ids 0, mod, …, mod·255) — fixed
-    * size is the real PQ design (2⁸ centroids per subspace, one code
-    * byte) and keeps the assignment oracle linear in n. ci = id/mod
-    * still equals the positional index on both engines.
-    */
-  def pqModuloCodebook(vectors: DataFrame, centroidModulo: Int): Seq[Array[Float]] =
-    collectSmall(
-        vectors.filter(col("id") % centroidModulo === 0 &&
-          col("id") < lit(centroidModulo.toLong * 256))
-          .select(col("id"), col("vec")),
-        "PQ codebook")
-      .sortBy(_.getLong(0))
-      .map(_.getSeq[Float](1).toArray).toSeq
-
-  /** Corpus quantization distortion of a PQ codebook: ONE row
-    * `(sse)` = Σ_v e6⌊‖v − decode(encode(v))‖²⌉ as DECIMAL(38,0) —
-    * the ADC distance of a vector against its OWN codes is exactly the
-    * per-vector squared reconstruction error, so this is one narrow
-    * compiled pass over the corpus (encode + self-ADC per row, an
-    * integer witness per row, a decimal SUM): the 100 TB cost shape of
-    * any full-scan aggregate, no joins, no shuffle beyond the final
-    * combine. This is the quantity k-means training MINIMIZES — the
-    * right cross-codebook invariant at every corpus shape, where a
-    * recall-on-k-pinned-queries comparison can flip on corpora whose
-    * query shell accidentally matches one codebook's sampling bias
-    * (r18: the 100× replica's scale-shell structure did exactly that).
-    */
-  def pqCorpusSse(vectors: DataFrame, cents: Seq[Array[Float]], m: Int): DataFrame =
-    Dedup.spread(vectors)
-      .select(graft.functions.intWitness(
-        pqAdcScore(pqEncode(col("vec"), cents, m), col("vec"), cents, m),
-        1000000L).cast(DecimalType(38, 0)).as("e"))
-      .agg(sum(col("e")).as("sse"))
-
   def pqTopK(vectors: DataFrame, queries: DataFrame, k: Int,
-             centroidModulo: Int, m: Int = 8): DataFrame = {
+             centroidModulo: Int, m: Int = 8): DataFrame =
     // capped codebook (r17): see [[pqModuloCodebook]] — an unbounded
     // modulo codebook was a gate artifact that ALSO made the assignment
     // oracle quadratic in n (the 100× pq-family wall)
-    val cents = pqModuloCodebook(vectors, centroidModulo)
-    val codes = Dedup.spread(vectors)
+    pqAdcTopK(vectors, queries, k, pqModuloCodebook(vectors, centroidModulo), m)
+
+  /** The flat PQ scan of [[pqTopK]], [[pqKmeansTopK]] and [[opqTopK]]:
+    * each spread corpus row encoded with `cents`, every query broadcast
+    * and [[q6]]-rounded ADC-scored against every code row, top-k.
+    */
+  private def pqAdcTopK(vectors: DataFrame, queries: DataFrame, k: Int,
+                        cents: Seq[Array[Float]], m: Int): DataFrame =
+    rankTopK(Dedup.spread(vectors)
       .select(col("id"), pqEncode(col("vec"), cents, m).as("codes"))
-    explodeHits(
-      codes.crossJoin(broadcast(queries))
-        .select(col("qid"), col("id").as("label"),
-          q6(pqAdcScore(col("codes"), col("qv"), cents, m)).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
-  }
+      .crossJoin(broadcast(queries))
+      .select(col("qid"), col("id").as("label"),
+        q6(pqAdcScore(col("codes"), col("qv"), cents, m)).as("score")), k, ascending = true)
 
   /** Binary (1-bit) kNN: vectors and queries collapse to packed sign bits
     * (1 bit/dimension — 32× fewer scanned bytes than fp32, the extreme
@@ -1207,12 +1189,10 @@ object Similarity {
   def hammingTopK(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val v = Dedup.spread(vectors).select(col("id"), signBits(col("vec")).as("bits"))
     val q = queries.select(col("qid"), signBits(col("qv")).as("qbits"))
-    explodeHits(
-      v.crossJoin(broadcast(q))
-        .select(col("qid"), col("id").as("label"),
-          hammingDistance(col("bits"), col("qbits")).cast(DoubleType).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
+    rankTopK(v.crossJoin(broadcast(q))
+      .select(col("qid"), col("id").as("label"),
+        hammingDistance(col("bits"), col("qbits")).cast(DoubleType).as("score")),
+      k, ascending = true)
   }
 
   /** Binary-coarse rerank: a Hamming shortlist of k·expand candidates per
@@ -1225,16 +1205,8 @@ object Similarity {
     * column needed.
     */
   def hammingRerankTopK(vectors: DataFrame, queries: DataFrame, k: Int,
-                        expand: Int = 4): DataFrame = {
-    val shortlist = hammingTopK(vectors, queries, k * expand)
-      .select(col("qid"), col("label"))
-    explodeHits(
-      broadcast(shortlist).join(vectors, shortlist("label") === vectors("id"))
-        .join(broadcast(queries), "qid")
-        .select(col("qid"), col("label"), squaredL2(col("vec"), col("qv")).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
-  }
+                        expand: Int = 4): DataFrame =
+    exactRerank(hammingTopK(vectors, queries, k * expand), vectors, queries, k)
 
   /** Maximal-marginal-relevance diversity re-ranking (Carbonell &
     * Goldstein, SIGIR 1998): from each query's top-`candN` cosine
@@ -1377,27 +1349,26 @@ object Similarity {
   def ivfPqTopK(vectors: DataFrame, queries: DataFrame, k: Int,
                 ivfModulo: Int, nProbe: Int,
                 pqModulo: Int, m: Int = 8): DataFrame = {
-    val coarse = collectSmall(
-        vectors.filter(col("id") % ivfModulo === 0).select(col("id"), col("vec")),
-        "IVFPQ coarse centroid table")
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      .sortBy(_._1)
+    val coarse = moduloCents(vectors, ivfModulo, "IVFPQ coarse centroid table")
     // 256-capped codebook (see [[pqModuloCodebook]]) — fixed size is the
     // real PQ design and keeps the assignment oracle linear in n
-    val pqCents = pqModuloCodebook(vectors, pqModulo)
-    // one narrow pass builds the "index row": coarse cluster id + codes
+    ivfAdcTopK(vectors, queries, k, coarse, nProbe, pqModuloCodebook(vectors, pqModulo), m)
+  }
+
+  /** The probed PQ scan of [[ivfPqTopK]] and [[ivfOpqTopK]]: one narrow
+    * pass builds each spread corpus row's "index row" (nearest coarse
+    * cluster id + codes), each query's [[probe]] list joins it on `cid`,
+    * and the [[q6]]-rounded ADC scores rank.
+    */
+  private def ivfAdcTopK(vectors: DataFrame, queries: DataFrame, k: Int,
+                         coarse: Seq[(Long, Array[Float])], nProbe: Int,
+                         cents: Seq[Array[Float]], m: Int): DataFrame = {
     val indexed = Dedup.spread(vectors).select(
-      col("id"),
-      element_at(nearestCentroids(col("vec"), coarse, 1), 1).as("cid"),
-      pqEncode(col("vec"), pqCents, m).as("codes"))
-    val probes = queries.select(col("qid"), col("qv"),
-      explode(nearestCentroids(col("qv"), coarse, nProbe)).as("cid"))
-    explodeHits(
-      probes.join(indexed, "cid")
-        .select(col("qid"), col("id").as("label"),
-          q6(pqAdcScore(col("codes"), col("qv"), pqCents, m)).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
+      col("id"), nearestCid(col("vec"), coarse).as("cid"),
+      pqEncode(col("vec"), cents, m).as("codes"))
+    rankTopK(probe(queries, coarse, nProbe).join(indexed, "cid")
+      .select(col("qid"), col("id").as("label"),
+        q6(pqAdcScore(col("codes"), col("qv"), cents, m)).as("score")), k, ascending = true)
   }
 
   /** Per-subspace k-means PQ codebook training (the production form of
@@ -1415,7 +1386,46 @@ object Similarity {
     * core-count-invariant (the sample is sorted before init).
     */
   def trainPqCodebook(vecs: DataFrame, m: Int, ncent: Int,
-                      seed: Long = 42L): Seq[Array[Float]] = trainPqCodebookImpl(vecs, m, ncent, seed)
+                      seed: Long = 42L): Seq[Array[Float]] = {
+    // Codebook training is ALWAYS on a bounded sample at scale (FAISS
+    // trains in-process on ≤ ~100k vectors regardless of index size), so
+    // collect the limit-probed sample and run seeded Lloyd on the driver:
+    // m×iters scheduler round-trips become pure compute, and sorting the
+    // sample lexicographically first makes the codebook a function of the
+    // sample SET alone — invariant to partitioning and core count (an
+    // MLlib fit's random init samples by partition and is not). The
+    // dimension comes from the collected sample itself — no separate
+    // probe job.
+    val sample = sortedSample(vecs.select(col("v")), "PQ training sample")
+    require(sample.nonEmpty, "PQ codebook training needs a non-empty sample")
+    val d = sample(0).length
+    require(d % m == 0, s"dim $d not divisible into $m subspaces")
+    val ds = d / m
+    val points = sample.map(_.map(_.toDouble))
+    stackCodebook((0 until m).map { j =>
+      lloyd(subspace(points, j, ds), ncent, iters = 10, seed = seed + j)
+    }, ds)
+  }
+
+  /** Coordinates j·ds until (j+1)·ds of every point: PQ subspace `j`. */
+  private def subspace(points: Array[Array[Double]], j: Int,
+                       ds: Int): Array[Array[Double]] =
+    points.map(java.util.Arrays.copyOfRange(_, j * ds, (j + 1) * ds))
+
+  /** Per-subspace centers stacked into full-dim float codebook entries:
+    * entry ci holds every subspace's center ci. A subspace can yield FEWER
+    * centers than asked when it has fewer distinct points, so the codebook
+    * is clamped to the smallest subspace's count and every stacked entry
+    * is fully populated (codes index entries uniformly).
+    */
+  private def stackCodebook(centers: Seq[Array[Array[Double]]],
+                            ds: Int): Seq[Array[Float]] =
+    (0 until centers.map(_.length).min).map { ci =>
+      val full = new Array[Float](centers.length * ds)
+      for (j <- centers.indices; t <- 0 until ds)
+        full(j * ds + t) = centers(j)(ci)(t).toFloat
+      full
+    }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     * the embedding space, then drop any vector whose cosine similarity to
@@ -1433,14 +1443,9 @@ object Similarity {
     */
   def semanticDedup(embeddings: DataFrame, centroidModulo: Int,
                     tau: Double): DataFrame = {
-    val cents = collectSmall(
-        embeddings.filter(col("id") % centroidModulo === 0)
-          .select(col("id"), col("vec")),
-        "semantic-dedup centroid table")
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
+    val cents = moduloCents(embeddings, centroidModulo, "semantic-dedup centroid table")
     val assigned = Dedup.spread(embeddings)
-      .select(col("id"), col("vec"),
-        element_at(nearestCentroids(col("vec"), cents, 1), 1).as("cid"))
+      .select(col("id"), col("vec"), nearestCid(col("vec"), cents).as("cid"))
     // in-cluster (i < j) pairs only — the join key IS the cluster id.
     // NaN cosines (zero-norm vectors) are filtered BEFORE the tau
     // predicate: Spark SQL's NaN-total-order would rank NaN above any
@@ -1469,46 +1474,30 @@ object Similarity {
     */
   def hardNegatives(vectors: DataFrame, queries: DataFrame, k: Int,
                     centroidModulo: Int): DataFrame = {
-    val cents = collectSmall(
-        vectors.filter(col("id") % centroidModulo === 0)
-          .select(col("id"), col("vec")),
-        "hard-negative centroid table")
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
+    val cents = moduloCents(vectors, centroidModulo, "hard-negative centroid table")
     val assigned = Dedup.spread(vectors)
-      .select(col("id"), col("vec"),
-        element_at(nearestCentroids(col("vec"), cents, 1), 1).as("cid"))
-    val probes = queries.select(col("qid"), col("qv"),
-      element_at(nearestCentroids(col("qv"), cents, 1), 1).as("qcid"))
+      .select(col("id"), col("vec"), nearestCid(col("vec"), cents).as("cid"))
+    val probes = queries.select(col("qid"), col("qv"), nearestCid(col("qv"), cents).as("qcid"))
     // NaN scores (zero-norm vectors) filtered before ranking, and the
     // cutoff ranks on the ROUNDED score (the mmrTopK rule) so a <1e-6
     // cross-engine tie can't pick a different top-k set than the oracle
-    explodeHits(
-      assigned.crossJoin(broadcast(probes))
-        .filter(col("cid") =!= col("qcid"))
-        .select(col("qid"), col("id").as("label"),
-          q6(cosineSimilarity(col("vec"), col("qv"))).as("score"))
-        .filter(!isnan(col("score")))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = false).as("hits")))
+    rankTopK(assigned.crossJoin(broadcast(probes))
+      .filter(col("cid") =!= col("qcid"))
+      .select(col("qid"), col("id").as("label"),
+        q6(cosineSimilarity(col("vec"), col("qv"))).as("score"))
+      .filter(!isnan(col("score"))), k, ascending = false)
   }
 
   /** Deterministic driver-side Lloyd's k-means over an already-sorted
     * point set: seeded k-means++ init (D²-weighted, `java.util.Random`
     * over the sorted sample → byte-identical for the same point multiset
-    * on every run and partitioning), argmin assignment with
-    * (dist, center-index) tie order, empty clusters re-seeded from the
-    * globally farthest point. Returns only non-empty centers (≤ k).
+    * on every run and partitioning), then [[lloydIterate]]'s rounds.
+    * Returns only non-empty centers (≤ k).
     */
   private def lloyd(points: Array[Array[Double]], k: Int,
                     iters: Int, seed: Long): Array[Array[Double]] = {
     val n = points.length
     require(n > 0, "k-means needs a non-empty training sample")
-    val ds = points(0).length
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0; var t = 0
-      while (t < ds) { val d = a(t) - b(t); acc += d * d; t += 1 }
-      acc
-    }
     val kEff = math.min(k, n)
     val rnd = new java.util.Random(seed)
     // k-means++ over the sorted sample: first center uniform, each next
@@ -1542,58 +1531,7 @@ object Similarity {
       }
       ci += 1
     }
-    val assign = new Array[Int](n)
-    var it = 0
-    while (it < iters) {
-      var i = 0
-      while (i < n) {
-        var best = Double.MaxValue; var bc = 0; var c = 0
-        while (c < centers.length) {
-          val d = d2(points(i), centers(c))
-          if (d < best) { best = d; bc = c }
-          c += 1
-        }
-        assign(i) = bc
-        i += 1
-      }
-      val sums = Array.fill(centers.length)(new Array[Double](ds))
-      val counts = new Array[Int](centers.length)
-      i = 0
-      while (i < n) {
-        val c = assign(i); counts(c) += 1
-        var t = 0
-        while (t < ds) { sums(c)(t) += points(i)(t); t += 1 }
-        i += 1
-      }
-      // stolen tracks re-seed picks within THIS iteration: two clusters
-      // empty at once must steal DIFFERENT points, or they collapse into
-      // duplicate centers and one stays empty forever
-      val stolen = new java.util.HashSet[Integer]()
-      var c = 0
-      while (c < centers.length) {
-        if (counts(c) > 0) {
-          var t = 0
-          while (t < ds) { centers(c)(t) = sums(c)(t) / counts(c); t += 1 }
-        } else {
-          // re-seed from the point farthest from its own center (ties →
-          // lowest point index) — deterministic split of the worst cluster
-          var far = -1; var farD = -1.0; var p = 0
-          while (p < n) {
-            if (!stolen.contains(p)) {
-              val d = d2(points(p), centers(assign(p)))
-              if (d > farD) { farD = d; far = p }
-            }
-            p += 1
-          }
-          if (far >= 0) {
-            stolen.add(far)
-            centers(c) = points(far).clone()
-          }
-        }
-        c += 1
-      }
-      it += 1
-    }
+    lloydIterate(points, centers, iters)
     // final assignment decides which centers survive (a center can end
     // empty when distinct points < k)
     val used = new Array[Boolean](centers.length)
@@ -1619,20 +1557,13 @@ object Similarity {
     * keeps the sample ~maxRows even when the id space is sparse or
     * offset: a modulo filter over ids {10⁹..10⁹+n} with a large modulo
     * can be empty. Below the cap this is the identity, so gate-scale
-    * results are unchanged by the bound existing.
-    */
-  /** Public face of the bounded hash-sampled training set — the exact
-    * sample [[pqKmeansTopK]]/[[trainOpq]] train on, for callers that
-    * need to train the same codebook themselves (the distortion
+    * results are unchanged by the bound existing. It is the exact sample
+    * [[trainPca]], [[pqKmeansTopK]] and [[trainOpq]] train on, for callers
+    * that need to train the same codebook themselves (the distortion
     * invariants).
     */
   def trainSampleOf(vectors: DataFrame, maxRows: Long = 1L << 15,
-                    knownCount: Long = -1L): DataFrame =
-    trainSample(vectors, maxRows, knownCount)
-
-  private def trainSample(vectors: DataFrame,
-                          maxRows: Long = 1L << 15,
-                          knownCount: Long = -1L): DataFrame = {
+                    knownCount: Long = -1L): DataFrame = {
     val n = if (knownCount >= 0) knownCount else vectors.count()
     if (n <= maxRows) vectors
     else {
@@ -1641,25 +1572,15 @@ object Similarity {
     }
   }
 
-  private def trainPqCodebookImpl(vecs: DataFrame, m: Int, ncent: Int,
-                                  seed: Long): Seq[Array[Float]] = {
-    // Codebook training is ALWAYS on a bounded sample at scale (FAISS
-    // trains in-process on ≤ ~100k vectors regardless of index size), so
-    // collect the limit-probed sample and run seeded Lloyd on the driver:
-    // m×iters scheduler round-trips become pure compute, and sorting the
-    // sample lexicographically first makes the codebook a function of the
-    // sample SET alone — invariant to partitioning and core count (an
-    // MLlib fit's random init samples by partition and is not). The
-    // dimension comes from the collected sample itself — no separate
-    // probe job.
-    val sample: Array[Array[Float]] = collectSmall(
-        vecs.select(col("v")), "PQ training sample")
-      .map(_.getSeq[Float](0).toArray)
-    require(sample.nonEmpty, "PQ codebook training needs a non-empty sample")
-    val d = sample(0).length
-    require(d % m == 0, s"dim $d not divisible into $m subspaces")
-    val ds = d / m
-    java.util.Arrays.sort(sample, new java.util.Comparator[Array[Float]] {
+  /** A collected one-column training sample, sorted lexicographically
+    * (`Float.compare` per element, the shorter array first on a common
+    * prefix) before any fp accumulation, so what is fit on it is a
+    * function of the sample SET alone. `what` names it in
+    * [[collectSmall]]'s message.
+    */
+  private def sortedSample(sample: DataFrame, what: String): Array[Array[Float]] = {
+    val rows = collectSmall(sample, what).map(_.getSeq[Float](0).toArray)
+    java.util.Arrays.sort(rows, new java.util.Comparator[Array[Float]] {
       def compare(a: Array[Float], b: Array[Float]): Int = {
         val n = math.min(a.length, b.length)
         var i = 0
@@ -1671,29 +1592,7 @@ object Similarity {
         Integer.compare(a.length, b.length)
       }
     })
-    val subCents: Seq[Array[Array[Float]]] = (0 until m).map { j =>
-      val pts = sample.map { v =>
-        val s = new Array[Double](ds)
-        var t = 0
-        while (t < ds) { s(t) = v(j * ds + t).toDouble; t += 1 }
-        s
-      }
-      lloyd(pts, ncent, iters = 10, seed = seed + j).map(_.map(_.toFloat))
-    }
-    // a subspace can yield FEWER than ncent centers when it has fewer
-    // distinct points — clamp the codebook to the smallest subspace's
-    // count so the stacked entries are fully populated (codes index
-    // entries uniformly)
-    val effNcent = subCents.map(_.length).min
-    (0 until effNcent).map { ci =>
-      val full = new Array[Float](d)
-      var j = 0
-      while (j < m) {
-        System.arraycopy(subCents(j)(ci), 0, full, j * ds, ds)
-        j += 1
-      }
-      full
-    }
+    rows
   }
 
   /** PQ ANN with k-means-trained sub-codebooks — [[pqTopK]] mechanics
@@ -1707,16 +1606,9 @@ object Similarity {
                    ncent: Int, m: Int = 8, seed: Long = 42L,
                    knownCount: Long = -1L): DataFrame = {
     val cents = trainPqCodebook(
-      trainSample(vectors, knownCount = knownCount).select(col("vec").as("v")),
+      trainSampleOf(vectors, knownCount = knownCount).select(col("vec").as("v")),
       m, ncent, seed)
-    val encoded = Dedup.spread(vectors)
-      .select(col("id"), pqEncode(col("vec"), cents, m).as("codes"))
-    explodeHits(
-      encoded.crossJoin(broadcast(queries))
-        .select(col("qid"), col("id").as("label"),
-          q6(pqAdcScore(col("codes"), col("qv"), cents, m)).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
+    pqAdcTopK(vectors, queries, k, cents, m)
   }
 
   /** Trained OPQ model: mean + orthonormal rotation (rows = output
@@ -1762,27 +1654,14 @@ object Similarity {
     */
   def trainOpq(vectors: DataFrame, m: Int, ncent: Int, iters: Int = 20,
                seed: Long = 42L, knownCount: Long = -1L): OpqModel = {
-    val sample: Array[Array[Float]] = collectSmall(
-        trainSample(vectors, knownCount = knownCount).select(col("vec").as("v")),
-        "OPQ training sample")
-      .map(_.getSeq[Float](0).toArray)
+    val sample = sortedSample(
+      trainSampleOf(vectors, knownCount = knownCount).select(col("vec").as("v")),
+      "OPQ training sample")
     require(sample.nonEmpty, "OPQ training needs a non-empty sample")
     val d = sample(0).length
     require(d % m == 0, s"dim $d not divisible into $m subspaces")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val ds = d / m
-    java.util.Arrays.sort(sample, new java.util.Comparator[Array[Float]] {
-      def compare(a: Array[Float], b: Array[Float]): Int = {
-        val n = math.min(a.length, b.length)
-        var i = 0
-        while (i < n) {
-          val c = java.lang.Float.compare(a(i), b(i))
-          if (c != 0) return c
-          i += 1
-        }
-        Integer.compare(a.length, b.length)
-      }
-    })
     // init: full-rank PCA (trains on the same deterministic sample set) —
     // iteration 0's codebook+error IS the PCA+PQ baseline
     val pca = trainPca(vectors, d, knownCount = knownCount)
@@ -1803,23 +1682,16 @@ object Similarity {
         }
         y
       }
-    def sub(y: Array[Array[Double]], j: Int): Array[Array[Double]] =
-      y.map { v =>
-        val s = new Array[Double](ds)
-        var t = 0
-        while (t < ds) { s(t) = v(j * ds + t); t += 1 }
-        s
-      }
     var centers: Array[Array[Array[Double]]] = null
     val errs = scala.collection.mutable.ArrayBuffer.empty[Double]
     var it = 0
     while (it < iters) {
       val y = rotate(rot)
       if (centers == null)
-        centers = Array.tabulate(m)(j => lloyd(sub(y, j), ncent, iters = 10, seed = seed + j))
+        centers = Array.tabulate(m)(j => lloyd(subspace(y, j, ds), ncent, iters = 10, seed = seed + j))
       else {
         var j = 0
-        while (j < m) { lloydIterate(sub(y, j), centers(j), 2); j += 1 }
+        while (j < m) { lloydIterate(subspace(y, j, ds), centers(j), 2); j += 1 }
       }
       // encode: nearest sub-center (ties → lowest index, the pqEncode
       // order) → reconstruction x̂ and this iteration's objective value
@@ -1877,18 +1749,7 @@ object Similarity {
       }
       it += 1
     }
-    val effNcent = centers.map(_.length).min
-    val codebook = (0 until effNcent).map { ci =>
-      val full = new Array[Float](d)
-      var j = 0
-      while (j < m) {
-        var t = 0
-        while (t < ds) { full(j * ds + t) = centers(j)(ci)(t).toFloat; t += 1 }
-        j += 1
-      }
-      full
-    }
-    OpqModel(mean, rot, codebook, m, errs.toArray)
+    OpqModel(mean, rot, stackCodebook(centers.toSeq, ds), m, errs.toArray)
   }
 
   /** Unitary polar factor of a square matrix by the Newton iteration
@@ -1985,17 +1846,9 @@ object Similarity {
     * shortlist join — independent of corpus size.
     */
   def opqRerankTopK(vectors: DataFrame, queries: DataFrame, k: Int,
-                    model: OpqModel, expand: Int = 4): DataFrame = {
-    val shortlist = opqTopK(vectors, queries, k * expand, model)
-      .select(col("qid"), col("label"))
-    explodeHits(
-      vectors.join(broadcast(shortlist.withColumnRenamed("label", "id")), "id")
-        .join(broadcast(queries), "qid")
-        .select(col("qid"), col("id").as("label"),
-          q6(squaredL2(col("vec"), col("qv"))).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
-  }
+                    model: OpqModel, expand: Int = 4): DataFrame =
+    exactRerank(opqTopK(vectors, queries, k * expand, model), vectors, queries, k,
+      round6 = true)
 
   /** Persist a trained [[OpqModel]] as parquet (one row: mean, rotation
     * rows, stacked codebook entries, m, errTrace) — train once on the
@@ -2025,23 +1878,27 @@ object Similarity {
       r.getSeq[Double](4).toArray)
   }
 
-  /** One warm-started Lloyd pass block: `iters` assignment/update rounds
-    * on an EXISTING center array (mutated in place; empty clusters
-    * re-seed deterministically from the farthest point, same rule as
-    * [[lloyd]]). Used by [[trainOpq]] to carry codebooks across rotation
-    * updates — re-initializing k-means++ each OPQ iteration would break
-    * the monotone-objective property the spec pins.
+  /** Squared L2 between two points of one k-means sample. */
+  private def d2(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0; var t = 0
+    while (t < a.length) { val d = a(t) - b(t); acc += d * d; t += 1 }
+    acc
+  }
+
+  /** The Lloyd rounds: `iters` assignment/update rounds on an EXISTING
+    * center array (mutated in place) — argmin assignment with
+    * (dist, center-index) tie order, empty clusters re-seeded
+    * deterministically from the farthest point. [[lloyd]] runs them after
+    * its k-means++ init; [[trainOpq]] runs them warm-started to carry
+    * codebooks across rotation updates — re-initializing k-means++ each
+    * OPQ iteration would break the monotone-objective property the spec
+    * pins.
     */
   private def lloydIterate(points: Array[Array[Double]],
                            centers: Array[Array[Double]], iters: Int): Unit = {
     val n = points.length
     if (n == 0 || centers.length == 0) return
     val ds = points(0).length
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0; var t = 0
-      while (t < ds) { val d = a(t) - b(t); acc += d * d; t += 1 }
-      acc
-    }
     val assign = new Array[Int](n)
     var it = 0
     while (it < iters) {
@@ -2100,19 +1957,15 @@ object Similarity {
     */
   def opqTopK(vectors: DataFrame, queries: DataFrame, k: Int,
               model: OpqModel): DataFrame = {
-    val rotV = vectors.select(col("id"),
-      graft.functions.pcaProject(col("vec"), model.mean, model.rotation).as("vec"))
-    val rotQ = queries.select(col("qid"),
-      graft.functions.pcaProject(col("qv"), model.mean, model.rotation).as("qv"))
-    val encoded = Dedup.spread(rotV)
-      .select(col("id"), pqEncode(col("vec"), model.codebook, model.m).as("codes"))
-    explodeHits(
-      encoded.crossJoin(broadcast(rotQ))
-        .select(col("qid"), col("id").as("label"),
-          q6(pqAdcScore(col("codes"), col("qv"), model.codebook, model.m)).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
+    val (rotV, rotQ) = opqRotate(vectors, queries, model)
+    pqAdcTopK(rotV, rotQ, k, model.codebook, model.m)
   }
+
+  /** The corpus (id, vec) and the queries (qid, qv) in the OPQ-rotated space. */
+  private def opqRotate(vectors: DataFrame, queries: DataFrame,
+                        model: OpqModel): (DataFrame, DataFrame) =
+    (vectors.select(col("id"), pcaProject(col("vec"), model.mean, model.rotation).as("vec")),
+      queries.select(col("qid"), pcaProject(col("qv"), model.mean, model.rotation).as("qv")))
 
   /** OPQ × IVF × PQ — the full production factory string
     * (`"OPQ8,IVF…,PQ8"`): the trained OPQ rotation in front of the IVFPQ
@@ -2127,48 +1980,12 @@ object Similarity {
     */
   def ivfOpqTopK(vectors: DataFrame, queries: DataFrame, k: Int,
                  ivfModulo: Int, nProbe: Int, model: OpqModel): DataFrame = {
-    val rotV = vectors.select(col("id"),
-      graft.functions.pcaProject(col("vec"), model.mean, model.rotation).as("vec"))
-    val rotQ = queries.select(col("qid"),
-      graft.functions.pcaProject(col("qv"), model.mean, model.rotation).as("qv"))
-    val coarse = collectSmall(
-        rotV.filter(col("id") % ivfModulo === 0).select(col("id"), col("vec")),
-        "OPQ-IVFPQ coarse centroid table")
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      .sortBy(_._1)
-    val indexed = Dedup.spread(rotV).select(
-      col("id"),
-      element_at(nearestCentroids(col("vec"), coarse, 1), 1).as("cid"),
-      pqEncode(col("vec"), model.codebook, model.m).as("codes"))
-    val probes = rotQ.select(col("qid"), col("qv"),
-      explode(nearestCentroids(col("qv"), coarse, nProbe)).as("cid"))
-    explodeHits(
-      probes.join(indexed, "cid")
-        .select(col("qid"), col("id").as("label"),
-          q6(pqAdcScore(col("codes"), col("qv"), model.codebook, model.m)).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
+    val (rotV, rotQ) = opqRotate(vectors, queries, model)
+    ivfAdcTopK(rotV, rotQ, k,
+      moduloCents(rotV, ivfModulo, "OPQ-IVFPQ coarse centroid table"), nProbe,
+      model.codebook, model.m)
   }
 
-  /** Residual-encoded IVFPQ — the FAISS IVFPQ formulation proper: PQ
-    * codes the RESIDUAL v − centroid(cid), not the raw vector. Residual
-    * energy is a fraction of vector energy (the coarse step already
-    * explained most of it), so the same m-byte code budget quantizes much
-    * finer → higher recall at identical storage. Search mirrors encode:
-    * each probe ADC-scores against the query's residual to THAT probed
-    * centroid — ‖(q−c) − reconstruct(codes)‖² ≈ ‖q−v‖² since both sides
-    * subtract the same c.
-    *
-    * Training stays deterministic (codebook = residuals of every
-    * pqModulo-th vector w.r.t. its own coarse centroid, computed on the
-    * driver with the same (L2², cid) argmin as [[NearestCentroids]]), so
-    * recall is reproducible run-to-run — but the operator is gated by a
-    * recall VERDICT vs exact kNN (the `ann_ivf_kmeans` pattern) rather
-    * than a score hash: residual scores have no closed SQL form a DuckDB
-    * oracle could cheaply reproduce. Plan shape is identical to
-    * [[ivfPqTopK]]: narrow encode projection, probe join on `cid`
-    * (partition-prunable at scale), k-bounded agg.
-    */
   /** Shared coarse-table + residual-codebook construction for the
     * residual-IVFPQ family ([[ivfPqResidualTopK]],
     * [[ivfPqResidualCorpusSse]]) — one definition so the search path and
@@ -2178,11 +1995,7 @@ object Similarity {
                                  pqModulo: Int, m: Int, trainedNcent: Int,
                                  seed: Long, knownCount: Long)
       : (Seq[(Long, Array[Float])], Seq[Array[Float]]) = {
-    val coarse = collectSmall(
-        vectors.filter(col("id") % ivfModulo === 0).select(col("id"), col("vec")),
-        "IVFPQ coarse centroid table")
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      .sortBy(_._1)
+    val coarse = moduloCents(vectors, ivfModulo, "IVFPQ coarse centroid table")
     // driver-side nearest-coarse with the exact (L2², cid) order the
     // NearestCentroids expression uses — codebook and index agree on ties
     def nearestCoarse(v: Array[Float]): Array[Float] = {
@@ -2204,25 +2017,17 @@ object Similarity {
         // the codebook (and the recall verdict) is invariant to partitioning
         // and local parallelism by construction
         trainPqCodebook(
-          trainSample(vectors, knownCount = knownCount).select(
-            centroidResidual(col("vec"),
-              element_at(nearestCentroids(col("vec"), coarse, 1), 1),
-              coarse).as("v")),
+          trainSampleOf(vectors, knownCount = knownCount).select(
+            centroidResidual(col("vec"), nearestCid(col("vec"), coarse), coarse).as("v")),
           m, trainedNcent, seed)
-      else collectSmall(
-          // 256-capped like [[pqModuloCodebook]] (r18): fixed codebook
-          // size is the PQ design; the uncapped pick was the last
-          // corpus-proportional codebook in the family
-          vectors.filter(col("id") % pqModulo === 0 &&
-            col("id") < lit(pqModulo.toLong * 256))
-            .select(col("id"), col("vec")),
-          "IVFPQ residual codebook sample")
-        .sortBy(_.getLong(0))
-        .map { r =>
-          val v = r.getSeq[Float](1).toArray
+      // 256-capped like [[pqModuloCodebook]] (r18): fixed codebook size is
+      // the PQ design; the uncapped pick was the last corpus-proportional
+      // codebook in the family
+      else moduloCents(vectors, pqModulo, "IVFPQ residual codebook sample", capped = true)
+        .map { case (_, v) =>
           val c = nearestCoarse(v)
           Array.tabulate(v.length)(j => v(j) - (if (j < c.length) c(j) else 0f))
-        }.toSeq
+        }
     (coarse, residCents)
   }
 
@@ -2237,15 +2042,30 @@ object Similarity {
                              seed: Long = 42L, knownCount: Long = -1L): DataFrame = {
     val (coarse, residCents) = ivfPqResidualSetup(
       vectors, ivfModulo, pqModulo, m, trainedNcent, seed, knownCount)
-    Dedup.spread(vectors)
-      .select(centroidResidual(col("vec"),
-        element_at(nearestCentroids(col("vec"), coarse, 1), 1), coarse).as("r"))
-      .select(intWitness(
-        pqAdcScore(pqEncode(col("r"), residCents, m), col("r"), residCents, m),
-        1000000L).cast(DecimalType(38, 0)).as("e"))
-      .agg(sum(col("e")).as("sse"))
+    selfAdcSse(Dedup.spread(vectors)
+        .select(centroidResidual(col("vec"), nearestCid(col("vec"), coarse), coarse).as("r")),
+      col("r"), residCents, m)
   }
 
+  /** Residual-encoded IVFPQ — the FAISS IVFPQ formulation proper: PQ
+    * codes the RESIDUAL v − centroid(cid), not the raw vector. Residual
+    * energy is a fraction of vector energy (the coarse step already
+    * explained most of it), so the same m-byte code budget quantizes much
+    * finer → higher recall at identical storage. Search mirrors encode:
+    * each probe ADC-scores against the query's residual to THAT probed
+    * centroid — ‖(q−c) − reconstruct(codes)‖² ≈ ‖q−v‖² since both sides
+    * subtract the same c.
+    *
+    * Training stays deterministic (codebook = residuals of every
+    * pqModulo-th vector w.r.t. its own coarse centroid, computed on the
+    * driver with the same (L2², cid) argmin as [[NearestCentroids]]), so
+    * recall is reproducible run-to-run — but the operator is gated by a
+    * recall VERDICT vs exact kNN (the `ann_ivf_kmeans` pattern) rather
+    * than a score hash: residual scores have no closed SQL form a DuckDB
+    * oracle could cheaply reproduce. Plan shape is identical to
+    * [[ivfPqTopK]]: narrow encode projection, probe join on `cid`
+    * (partition-prunable at scale), k-bounded agg.
+    */
   def ivfPqResidualTopK(vectors: DataFrame, queries: DataFrame, k: Int,
                         ivfModulo: Int, nProbe: Int,
                         pqModulo: Int, m: Int = 8,
@@ -2254,21 +2074,15 @@ object Similarity {
     val (coarse, residCents) = ivfPqResidualSetup(
       vectors, ivfModulo, pqModulo, m, trainedNcent, seed, knownCount)
     val indexed = Dedup.spread(vectors)
-      .select(col("id"), col("vec"),
-        element_at(nearestCentroids(col("vec"), coarse, 1), 1).as("cid"))
+      .select(col("id"), col("vec"), nearestCid(col("vec"), coarse).as("cid"))
       .select(col("id"), col("cid"),
         pqEncode(centroidResidual(col("vec"), col("cid"), coarse), residCents, m)
           .as("codes"))
-    val probes = queries.select(col("qid"), col("qv"),
-      explode(nearestCentroids(col("qv"), coarse, nProbe)).as("cid"))
-    explodeHits(
-      probes.join(indexed, "cid")
-        .select(col("qid"), col("id").as("label"),
-          q6(pqAdcScore(col("codes"),
-            centroidResidual(col("qv"), col("cid"), coarse), residCents, m))
-            .as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
+    rankTopK(probe(queries, coarse, nProbe).join(indexed, "cid")
+      .select(col("qid"), col("id").as("label"),
+        q6(pqAdcScore(col("codes"),
+          centroidResidual(col("qv"), col("cid"), coarse), residCents, m)).as("score")),
+      k, ascending = true)
   }
 
   /** Residual-IVFPQ shortlist + exact fp32 rerank — the production ANN
@@ -2284,18 +2098,10 @@ object Similarity {
                               ivfModulo: Int, nProbe: Int, pqModulo: Int,
                               m: Int = 8, trainedNcent: Int = 0,
                               expand: Int = 5,
-                              knownCount: Long = -1L): DataFrame = {
-    val shortlist = ivfPqResidualTopK(vectors, queries, k * expand,
-        ivfModulo, nProbe, pqModulo, m, trainedNcent, knownCount = knownCount)
-      .select(col("qid"), col("label"))
-    explodeHits(
-      vectors.join(broadcast(shortlist.withColumnRenamed("label", "id")), "id")
-        .join(broadcast(queries), "qid")
-        .select(col("qid"), col("id").as("label"),
-          q6(squaredL2(col("vec"), col("qv"))).as("score"))
-        .groupBy(col("qid"))
-        .agg(topK(col("score"), col("label"), k, ascending = true).as("hits")))
-  }
+                              knownCount: Long = -1L): DataFrame =
+    exactRerank(ivfPqResidualTopK(vectors, queries, k * expand,
+        ivfModulo, nProbe, pqModulo, m, trainedNcent, knownCount = knownCount),
+      vectors, queries, k, round6 = true)
 
   /** IVF with REAL k-means training (MLlib, seeded): the production
     * version of [[ivfTopK]]'s modulo-centroid stand-in. Same probe

@@ -90,10 +90,6 @@ object TextAnalysis {
           col("n_tokens").cast(DoubleType))
   }
 
-  /** Canonical content fingerprint: md5 of the sorted distinct token set —
-    * invariant to word order and repetition (catches shuffled near-dups
-    * that exact hashing misses).
-    */
   /** CCNet-style unigram language-model quality score: the corpus's own
     * unigram MLE distribution scores each document's mean token log-prob
     * (and its exp, the per-token perplexity). Rare-token-heavy documents
@@ -501,6 +497,10 @@ object TextAnalysis {
         (round(col("h2") - col("h1"), 6) + lit(0.0)).as("h_cond"))
   }
 
+  /** Canonical content fingerprint: md5 of the sorted distinct token set —
+    * invariant to word order and repetition (catches shuffled near-dups
+    * that exact hashing misses).
+    */
   def fingerprint(text: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(toks(text)))))
 

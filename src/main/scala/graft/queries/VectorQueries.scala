@@ -67,13 +67,12 @@ private[graft] object VectorQueries {
       val queries = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"),
           vectorNormSq(col("embedding")).as("qnorm"))
-      Similarity.explodeHits(
+      Similarity.rankTopK(
         vectors.crossJoin(broadcast(queries))
           .select(col("qid"), col("id").as("label"),
             (col("vnorm") + col("qnorm") - lit(2.0) * dotProduct(col("vec"), col("qv")))
-              .as("score"))
-          .groupBy(col("qid"))
-          .agg(topK(col("score"), col("label"), 10, ascending = true).as("hits")))
+              .as("score")),
+        10, ascending = true)
         .select(col("qid"), col("rank"), col("label"),
           e4Witness(col("score")).as("dist_e4"))
         .orderBy("qid", "rank")
@@ -243,12 +242,11 @@ private[graft] object VectorQueries {
         .setInputCol("features").setOutputCol("hashes")
       val model = lsh.fit(feat)
       val q = feat.filter(col("vec_id") < 8)
-      val ann = Similarity.explodeHits(
+      val ann = Similarity.rankTopK(
         model.approxSimilarityJoin(q, feat, 20.0, "dist")
           .select(col("datasetA.vec_id").as("qid"), col("datasetB.vec_id").as("label"),
-            (col("dist") * col("dist")).as("score")) // squared L2, ref semantics
-          .groupBy(col("qid"))
-          .agg(topK(col("score"), col("label"), 10, ascending = true).as("hits")))
+            (col("dist") * col("dist")).as("score")), // squared L2, ref semantics
+        10, ascending = true)
         .select(col("qid"), col("label"))
       val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
       val queries = e.filter(col("vec_id") < 8)

@@ -186,4 +186,47 @@ class OpqSpec extends AnyFunSuite {
       s"OPQ overlap $opqHits not above raw-PQ overlap $rawHits")
     assert(opqHits >= 60, s"OPQ recall too low: $opqHits/300")
   }
+
+  /** md5 of the raw IEEE bits of a model's numbers, in order. */
+  private def bitsMd5(doubles: Iterable[Double], floats: Iterable[Float]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    doubles.foreach { x =>
+      buf.clear(); buf.putLong(java.lang.Double.doubleToRawLongBits(x)); md.update(buf.array(), 0, 8)
+    }
+    floats.foreach { x =>
+      buf.clear(); buf.putInt(java.lang.Float.floatToRawIntBits(x)); md.update(buf.array(), 0, 4)
+    }
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("driver-side training is pinned bit for bit: PCA basis, k-means PQ codebook, OPQ rotation and codebook, residual-IVFPQ distortion") {
+    val spark2 = spark
+    import spark2.implicits._
+    // every property spec above would pass on a codebook that moved by an
+    // ulp; these pins fail on any change to the sample order, the Lloyd
+    // rounds, the Jacobi sweep or the Procrustes step
+    val vecs = anisotropic(400, 16, seed = 47L)
+    val vdf = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq.toDF("id", "vec")
+    val pca = Similarity.trainPca(vdf, 6)
+    val pq = Similarity.trainPqCodebook(vdf.select(col("vec").as("v")), m = 4, ncent = 8)
+    val opq = Similarity.trainOpq(vdf, m = 4, ncent = 8, iters = 4)
+    val got = Seq(
+      "pca.components" -> bitsMd5(pca.components.flatten, Nil),
+      "trainPqCodebook" -> bitsMd5(Nil, pq.flatten),
+      "opq.rotation" -> bitsMd5(opq.rotation.flatten, Nil),
+      "opq.codebook" -> bitsMd5(Nil, opq.codebook.flatten),
+      "residual sse, modulo codebook" -> Similarity.ivfPqResidualCorpusSse(
+        vdf, ivfModulo = 20, pqModulo = 3, m = 4).head.get(0).toString,
+      "residual sse, trained codebook" -> Similarity.ivfPqResidualCorpusSse(
+        vdf, ivfModulo = 20, pqModulo = 3, m = 4, trainedNcent = 8).head.get(0).toString)
+    val want = Seq(
+      "pca.components" -> "a018ec4df0c84ece71d4df1e5907caaa",
+      "trainPqCodebook" -> "48d8d1fdcd1f6ced9768066a8f6cfdce",
+      "opq.rotation" -> "8c2942a53fe3ac036a1c7b45c8c1f2c0",
+      "opq.codebook" -> "2d3ca4962b10acf028e9eda256dd9d2d",
+      "residual sse, modulo codebook" -> "520615284",
+      "residual sse, trained codebook" -> "2211566850")
+    assert(got === want)
+  }
 }

@@ -140,7 +140,7 @@ class StorageLayoutSpec extends AnyFunSuite {
     // no tolerance is needed)
     val dir = Files.createTempDirectory("graft_pq").toString
     import spark.implicits._
-    import graft.functions.{pqAdcScore, pqEncode, topK}
+    import graft.functions.{pqAdcScore, pqEncode}
     val m = 4
     val vecs = Oracle.genVectors(800, 16)
     val vdf = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
@@ -151,12 +151,11 @@ class StorageLayoutSpec extends AnyFunSuite {
     vdf.select(col("id"), pqEncode(col("vec"), cents, m).as("codes"))
       .write.mode("overwrite").parquet(dir)
     def search(codes: org.apache.spark.sql.DataFrame) =
-      graft.ops.Similarity.explodeHits(
+      graft.ops.Similarity.rankTopK(
         codes.crossJoin(broadcast(qdf))
           .select(col("qid"), col("id").as("label"),
-            round(pqAdcScore(col("codes"), col("qv"), cents, m), 6).as("score"))
-          .groupBy(col("qid"))
-          .agg(topK(col("score"), col("label"), 10, ascending = true).as("hits")))
+            round(pqAdcScore(col("codes"), col("qv"), cents, m), 6).as("score")),
+        10, ascending = true)
         .orderBy("qid", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val mem = search(vdf.select(col("id"), pqEncode(col("vec"), cents, m).as("codes")))
